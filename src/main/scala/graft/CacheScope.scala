@@ -29,41 +29,38 @@ import scala.util.control.NonFatal
   * skip the registry and manage `unpersist()` on their own references.
   *
   * ==Checkpoint-backed frames are NOT recomputable==
-  * Frames tracked via [[registerRddIds]] (`localCheckpoint` blocks from
-  * iterative operators such as `Dedup.connectedComponents`) have their
-  * lineage TRUNCATED at the checkpoint: after `release()`, any Dataset
-  * derived from them fails hard (`CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND`)
-  * instead of recomputing. Call `release()` only once nothing downstream
-  * of the operator call will run again (see
-  * `examples/CurationPipeline.scala` for the end-of-pipeline placement).
+  * Iterative operators (such as `Dedup.connectedComponents`) return frames
+  * that read [[Lineage.Cut]]s; they register those handles here, and
+  * [[release]] frees each handle's own checkpoint blocks (and only those).
+  * Lineage is TRUNCATED at a cut: after `release()`, any Dataset derived
+  * from one fails hard (`CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND`) instead of
+  * recomputing. Call `release()` only once nothing downstream of the
+  * operator call will run again (see `examples/CurationPipeline.scala` for
+  * the end-of-pipeline placement).
   */
 object CacheScope {
   private val frames = ArrayBuffer.empty[Dataset[_]]
-  private val rddIds = ArrayBuffer.empty[(org.apache.spark.SparkContext, Int)]
+  private val cuts = ArrayBuffer.empty[Lineage.Cut]
 
   /** Track a persisted frame; returns it unchanged. */
   def register[T](ds: Dataset[T]): Dataset[T] = synchronized { frames += ds; ds }
 
-  /** Track RDD-level cache blocks by id (`localCheckpoint` blocks live below
-    * the CacheManager, so `Dataset.unpersist` cannot release them — only
-    * `RDD.unpersist` can). Used by iterative operators whose returned frame
-    * is backed by checkpoint blocks that must outlive the call. */
-  def registerRddIds(sc: org.apache.spark.SparkContext, ids: Iterable[Int]): Unit =
-    synchronized { ids.foreach(id => rddIds += ((sc, id))) }
+  /** Track lineage cuts whose blocks back an operator's returned frame and
+    * so must outlive the call. */
+  def register(cs: Lineage.Cut*): Unit = synchronized { cuts ++= cs }
 
-  /** Unpersist every tracked frame / RDD block and clear the registry. */
+  /** Unpersist every tracked frame / cut and clear the registry. */
   def release(blocking: Boolean = false): Unit = synchronized {
     frames.foreach { f =>
       try f.unpersist(blocking) catch { case NonFatal(_) => () }
     }
     frames.clear()
-    rddIds.foreach { case (sc, id) =>
-      try sc.getPersistentRDDs.get(id).foreach(_.unpersist(blocking))
-      catch { case NonFatal(_) => () }
+    cuts.foreach { c =>
+      try c.release(blocking) catch { case NonFatal(_) => () }
     }
-    rddIds.clear()
+    cuts.clear()
   }
 
   /** Number of currently tracked entries (for specs). */
-  def size: Int = synchronized(frames.size + rddIds.size)
+  def size: Int = synchronized(frames.size + cuts.size)
 }

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.CacheScope
+import graft.{CacheScope, Lineage}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -423,8 +423,9 @@ object Dedup {
     * `min(id)` per component). Iterative min-label propagation: each round
     * every vertex adopts the minimum label among itself and its neighbors,
     * converging in O(diameter) rounds. Near-dup graphs have tiny diameters,
-    * so a handful of joins; `localCheckpoint` truncates the growing lineage
-    * each round (the classic iterative-DataFrame trap). The driver-side
+    * so a handful of joins; a [[graft.Lineage]] cut truncates the growing
+    * lineage each round (the classic iterative-DataFrame trap) and releases
+    * only its own blocks once superseded. The driver-side
     * loop only checks a converged count per round — data never leaves the
     * executors.
     *
@@ -436,20 +437,6 @@ object Dedup {
     * Returns (id, component) where component = min id reachable. */
   def connectedComponents(pairs: DataFrame, aCol: String = "id_a",
                           bCol: String = "id_b", maxIter: Int = 25): DataFrame = {
-    val sc = pairs.sparkSession.sparkContext
-    // localCheckpoint blocks live below the CacheManager: Dataset.unpersist
-    // can't release them, so each round's blocks are tracked by RDD id (the
-    // diff around the eager checkpoint) and dropped as soon as the next
-    // round's checkpoint supersedes them — waiting for the ContextCleaner
-    // instead leaks O(rounds) block sets into later queries' memory budget.
-    def checkpointed(df: DataFrame): (DataFrame, Set[Int]) = {
-      val before = sc.getPersistentRDDs.keySet.toSet
-      val out = df.localCheckpoint() // eager — blocks exist when this returns
-      (out, sc.getPersistentRDDs.keySet.toSet -- before)
-    }
-    def drop(ids: Set[Int]): Unit = ids.foreach { id =>
-      sc.getPersistentRDDs.get(id).foreach(_.unpersist(blocking = false))
-    }
     // the union reads `pairs` TWICE (one scan per direction): without this
     // persist an expensive upstream pipeline (e.g. the whole minhash
     // near-dup chain) recomputes per scan. Scoped: dropped as soon as the
@@ -463,38 +450,42 @@ object Dedup {
     // round's plan to LogicalRDD leaves; the persist ON TOP of the cut
     // keeps accurate cache stats so the per-round label join stays
     // estimate-driven (broadcast while labels are small, SMJ at scale).
-    val (edgesCut, edgeBlocks) = checkpointed(
+    val edgesCut = Lineage.cut(
       pairsP.select(col(aCol).as("src"), col(bCol).as("dst"))
         .union(pairsP.select(col(bCol).as("src"), col(aCol).as("dst")))
         .distinct())
-    val edges = edgesCut
+    val edges = edgesCut.frame
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     pairsP.unpersist(blocking = false) // edges checkpoint is materialized
-    var (labels, labelBlocks) = checkpointed(
+    // each round's cut is released as soon as the next round's supersedes
+    // it — waiting for the ContextCleaner instead leaks O(rounds) block sets
+    // into later queries' memory budget
+    var labelCut = Lineage.cut(
       edges.select(col("src").as("id")).distinct()
         .withColumn("component", col("id")))
+    var labels = labelCut.frame
     var converged = false
     var i = 0
     while (!converged && i < maxIter) {
       val nbrMin = edges.join(labels, edges("dst") === labels("id"))
         .groupBy(col("src")).agg(min(col("component")).as("nbr_min"))
-      val (updated, updatedBlocks) = checkpointed(
+      val updated = Lineage.cut(
         labels.join(nbrMin, labels("id") === nbrMin("src"), "left")
           .select(col("id"),
             least(col("component"), coalesce(col("nbr_min"), col("component"))).as("next"),
             col("component")))
-      converged = updated.filter(col("next") < col("component")).isEmpty
-      drop(labelBlocks) // previous round is superseded once `updated` exists
-      labelBlocks = updatedBlocks
-      labels = updated.select(col("id"), col("next").as("component"))
+      converged = updated.frame.filter(col("next") < col("component")).isEmpty
+      labelCut.release() // previous round is superseded once `updated` exists
+      labelCut = updated
+      labels = updated.frame.select(col("id"), col("next").as("component"))
       i += 1
     }
     // labels is localCheckpoint-ed (no lineage on edges), so the edge cache
     // and its checkpoint blocks can drop now.
     edges.unpersist()
-    drop(edgeBlocks)
+    edgesCut.release()
     if (!converged) {
-      drop(labelBlocks)
+      labelCut.release()
       throw new IllegalStateException(
         s"connectedComponents did not converge in $maxIter rounds — the pair " +
           "graph has a longer diameter; raise maxIter (partially-merged labels " +
@@ -503,7 +494,7 @@ object Dedup {
     // the returned frame is backed by the final round's checkpoint blocks —
     // they must outlive this call; CacheScope gives harnesses/callers the
     // scoped release point (Bench/Verify sweep after each query's action)
-    CacheScope.registerRddIds(sc, labelBlocks)
+    CacheScope.register(labelCut)
     labels
   }
 

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.CacheScope
+import graft.{CacheScope, Lineage}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -15,10 +15,9 @@ import org.apache.spark.sql.functions._
   * map-side-combinable contribution sum on `dst`; the rank frame is
   * |nodes| rows. Small fixed iteration counts stay ONE lazy DAG (no
   * per-round action or barrier — at local scale the per-round jobs were
-  * the dominant cost); every 4th round cuts lineage with
-  * `localCheckpoint`, superseded blocks dropped eagerly (the
-  * [[Dedup.connectedComponents]] block-scoping discipline), so long runs
-  * cannot build an unbounded plan.
+  * the dominant cost); every 4th round cuts lineage with a
+  * [[graft.Lineage]] cut, each superseded cut released eagerly, so long
+  * runs cannot build an unbounded plan.
   *
   * Determinism: the per-node contribution sum is a parallel double sum
   * (order-dependent in the last ulp), so every iteration rounds ranks to
@@ -56,15 +55,6 @@ object Graph {
     require(damping > 0.0 && damping < 1.0,
       s"damping must be in (0, 1), got $damping")
     require(tol >= 0.0, s"tol must be >= 0, got $tol")
-    val sc = edges.sparkSession.sparkContext
-    def checkpointed(df: DataFrame): (DataFrame, Set[Int]) = {
-      val before = sc.getPersistentRDDs.keySet.toSet
-      val out = df.localCheckpoint()
-      (out, sc.getPersistentRDDs.keySet.toSet -- before)
-    }
-    def drop(ids: Set[Int]): Unit = ids.foreach { id =>
-      sc.getPersistentRDDs.get(id).foreach(_.unpersist(blocking = false))
-    }
     val e = edges
       .select(col(srcCol).cast("long").as("src"), col(dstCol).cast("long").as("dst"))
     // EAGER localCheckpoint of the normalized edge frame (not persist): a
@@ -79,14 +69,15 @@ object Graph {
     // instead of re-running the caller's edge subtree twice (the gate's
     // orders⋈lineitem+distinct scan ran 2x per materialization before —
     // ~0.9 s each at sf0.1).
-    val (eCut, eBlocks) = checkpointed(e)
+    val eCut = Lineage.cut(e)
     // fold out-degrees INTO the edge frame once — one (src, dst, deg) cut
     // replaces a per-round degree join
-    val (ew, ewBlocks) = checkpointed(eCut.join(
-        eCut.groupBy(col("src")).agg(count(lit(1)).cast("double").as("__deg")),
+    val ewCut = Lineage.cut(eCut.frame.join(
+        eCut.frame.groupBy(col("src")).agg(count(lit(1)).cast("double").as("__deg")),
         "src"))
+    val ew = ewCut.frame
     // e's blocks back nothing after ew is cut — release them eagerly
-    drop(eBlocks)
+    eCut.release()
     // nodes feeds the init and every round's spine — checkpointed off the
     // cut edge frame (no second scan of the raw edges), and ALSO persisted:
     // the materialized cache stats (|nodes| rows, a few hundred KB here)
@@ -96,17 +87,17 @@ object Graph {
     // exchange subtrees of the SMJ rounds collapse into ONE ReusedExchange
     // per action. Estimate-driven at scale: a billion-node rank frame
     // reports GBs and falls back to SMJ on its own; no forced hint.
-    val (nodesCut, nodeBlocks) = checkpointed(
+    val nodesCut = Lineage.cut(
       ew.select(col("src").as("node"))
         .union(ew.select(col("dst").as("node"))).distinct())
-    val nodes = CacheScope.register(nodesCut
+    val nodes = CacheScope.register(nodesCut.frame
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
     // one scalar driver action (the connectedComponents convergence-probe
     // precedent) — N as a literal kills a per-round broadcast crossJoin
     val n = nodes.count().toDouble
     val teleport = (1.0 - damping) / n // same IEEE division the oracle runs
     var ranks = nodes.select(col("node"), round(lit(1.0 / n), 10).as("pr"))
-    var rankBlocks = Set.empty[Int]
+    var rankCut: Option[Lineage.Cut] = None
     var i = 1
     var converged = false
     while (i <= iters && !converged) {
@@ -121,14 +112,14 @@ object Graph {
       if (tol > 0.0) {
         // eager cut FIRST so the probe below is the round's only compute,
         // then one scalar max|Δ| against the previous (already-cut) ranks
-        val (cut, cutBlocks) = checkpointed(next)
-        val delta = cut
+        val cut = Lineage.cut(next)
+        val delta = cut.frame
           .join(ranks.select(col("node"), col("pr").as("__prev")), "node")
           .agg(max(abs(col("pr") - col("__prev"))).as("__d"))
           .head.getDouble(0)
-        drop(rankBlocks)
-        rankBlocks = cutBlocks
-        ranks = cut
+        rankCut.foreach(_.release())
+        rankCut = Some(cut)
+        ranks = cut.frame
         converged = delta < tol
       } else {
         ranks = next
@@ -137,10 +128,10 @@ object Graph {
         // eager materialization) every 4th round so long runs can't build
         // an unbounded plan
         if (i % 4 == 0 && i < iters) {
-          val (cut, cutBlocks) = checkpointed(ranks)
-          drop(rankBlocks)
-          rankBlocks = cutBlocks
-          ranks = cut
+          val cut = Lineage.cut(ranks)
+          rankCut.foreach(_.release())
+          rankCut = Some(cut)
+          ranks = cut.frame
         }
       }
       i += 1
@@ -148,7 +139,7 @@ object Graph {
     // ew/nodes checkpoint blocks back the returned lazy plan — CacheScope
     // owns their release (the harness sweeps after each query's action),
     // like the final CC checkpoint blocks
-    CacheScope.registerRddIds(sc, ewBlocks ++ nodeBlocks ++ rankBlocks)
+    CacheScope.register(Seq(ewCut, nodesCut) ++ rankCut: _*)
     ranks
   }
 
@@ -163,8 +154,8 @@ object Graph {
     * Scale shape ([[graft.operators.Dedup.connectedComponents]]
     * discipline): per round one degree aggregation (map-side
     * combinable) + one broadcast anti-join of the (small, shrinking)
-    * sub-`k` node set against the edge frame; `localCheckpoint` cuts
-    * lineage each round with superseded blocks dropped eagerly; the
+    * sub-`k` node set against the edge frame; a [[graft.Lineage]] cut
+    * each round, the superseded cut released eagerly; the
     * per-round convergence check is a count on the WEAK frame, not the
     * graph. Fails loudly if `maxIters` rounds don't converge — a
     * silently-partial core is a wrong answer. */
@@ -172,43 +163,33 @@ object Graph {
             maxIters: Int = 30): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
     require(maxIters >= 1, s"maxIters must be >= 1, got $maxIters")
-    val sc = edges.sparkSession.sparkContext
-    def checkpointed(df: DataFrame): (DataFrame, Set[Int]) = {
-      val before = sc.getPersistentRDDs.keySet.toSet
-      val out = df.localCheckpoint()
-      (out, sc.getPersistentRDDs.keySet.toSet -- before)
-    }
-    def drop(ids: Set[Int]): Unit = ids.foreach { id =>
-      sc.getPersistentRDDs.get(id).foreach(_.unpersist(blocking = false))
-    }
-    var (e, eBlocks) = checkpointed(edges
+    var e = Lineage.cut(edges
       .select(least(col(srcCol), col(dstCol)).cast("long").as("u"),
         greatest(col(srcCol), col(dstCol)).cast("long").as("v"))
       .filter(col("u") =!= col("v")).distinct())
     var converged = false
     var i = 0
     while (!converged && i < maxIters) {
-      val deg = e.select(explode(array(col("u"), col("v"))).as("node"))
+      val deg = e.frame.select(explode(array(col("u"), col("v"))).as("node"))
         .groupBy(col("node")).agg(count(lit(1)).as("d"))
       val weak = deg.filter(col("d") < k).select(col("node"))
       converged = weak.isEmpty
       if (!converged) {
-        val (next, nextBlocks) = checkpointed(e
+        val next = Lineage.cut(e.frame
           .join(broadcast(weak.select(col("node").as("u"))), Seq("u"), "left_anti")
           .join(broadcast(weak.select(col("node").as("v"))), Seq("v"), "left_anti"))
-        drop(eBlocks)
-        eBlocks = nextBlocks
+        e.release()
         e = next
         i += 1
       }
     }
     if (!converged) {
-      drop(eBlocks)
+      e.release()
       throw new IllegalStateException(
         s"kCore did not converge in $maxIters rounds — raise maxIters")
     }
-    CacheScope.registerRddIds(sc, eBlocks)
-    e.select(explode(array(col("u"), col("v"))).as("node"))
+    CacheScope.register(e)
+    e.frame.select(explode(array(col("u"), col("v"))).as("node"))
       .groupBy(col("node")).agg(count(lit(1)).as("degree"))
   }
 
@@ -227,42 +208,33 @@ object Graph {
     * Scale shape: per round, one equi-join of the edge list against the
     * label table and two key aggregates — all map-side combinable; the
     * label table is node-cardinality-sized. Lineage is cut per round
-    * with `localCheckpoint` (the [[pageRank]]/[[kCore]] discipline).
+    * with [[graft.Lineage.cut]] (the [[pageRank]]/[[kCore]] discipline).
     * Emits (`node`, `community`). */
   def labelPropagation(edges: DataFrame, srcCol: String, dstCol: String,
                        iters: Int = 3): DataFrame = {
     require(iters >= 1, s"iters must be >= 1, got $iters")
-    val sc = edges.sparkSession.sparkContext
-    def checkpointed(df: DataFrame): (DataFrame, Set[Int]) = {
-      val before = sc.getPersistentRDDs.keySet.toSet
-      val out = df.localCheckpoint()
-      (out, sc.getPersistentRDDs.keySet.toSet -- before)
-    }
-    def drop(ids: Set[Int]): Unit = ids.foreach { id =>
-      sc.getPersistentRDDs.get(id).foreach(_.unpersist(blocking = false))
-    }
     val half = edges
       .select(col(srcCol).cast("long").as("a"), col(dstCol).cast("long").as("b"))
       .filter(col("a") =!= col("b"))
-    val (und, undBlocks) = checkpointed(
+    val undCut = Lineage.cut(
       half.union(half.select(col("b").as("a"), col("a").as("b"))).distinct())
-    var (labels, labelBlocks) = checkpointed(
+    val und = undCut.frame
+    var labels = Lineage.cut(
       und.select(col("a").as("node")).distinct()
         .withColumn("label", col("node")))
     for (_ <- 1 to iters) {
       val votes = und
-        .join(labels.select(col("node").as("b"), col("label")), Seq("b"))
+        .join(labels.frame.select(col("node").as("b"), col("label")), Seq("b"))
         .groupBy(col("a"), col("label")).agg(count(lit(1)).as("cnt"))
-      val (next, nextBlocks) = checkpointed(votes
+      val next = Lineage.cut(votes
         .groupBy(col("a"))
         .agg(max(struct(col("cnt"), negate(col("label")).as("nl"))).as("m"))
         .select(col("a").as("node"), negate(col("m.nl")).as("label")))
-      drop(labelBlocks)
-      labelBlocks = nextBlocks
+      labels.release()
       labels = next
     }
-    CacheScope.registerRddIds(sc, undBlocks ++ labelBlocks)
-    labels.select(col("node"), col("label").as("community"))
+    CacheScope.register(undCut, labels)
+    labels.frame.select(col("node"), col("label").as("community"))
   }
 
   /** Degree assortativity coefficient (Newman 2002, public formula):
@@ -477,15 +449,6 @@ object Graph {
   def hits(edges: DataFrame, srcCol: String, dstCol: String,
            iters: Int): DataFrame = {
     require(iters >= 1 && iters <= 64, s"iters must be in [1, 64], got $iters")
-    val sc = edges.sparkSession.sparkContext
-    def checkpointed(df: DataFrame): (DataFrame, Set[Int]) = {
-      val before = sc.getPersistentRDDs.keySet.toSet
-      val out = df.localCheckpoint()
-      (out, sc.getPersistentRDDs.keySet.toSet -- before)
-    }
-    def drop(ids: Set[Int]): Unit = ids.foreach { id =>
-      sc.getPersistentRDDs.get(id).foreach(_.unpersist(blocking = false))
-    }
     // EAGER localCheckpoint of the edge frame (the pageRank rationale: a
     // persisted frame keeps its full lineage, so all 2*iters per-half-step
     // cut plans re-embedded and re-analyzed the graph-construction subtree
@@ -500,24 +463,25 @@ object Graph {
     // truncated lineage AND accurate stats — and stays estimate-driven at
     // scale (a billion-node score frame falls back to SMJ on its own,
     // no forced broadcast hint).
-    val (eCut, eBlocks) = checkpointed(edges
+    val eCut = Lineage.cut(edges
       .select(col(srcCol).cast("long").as("src"),
         col(dstCol).cast("long").as("dst"))
       .filter(col("src") =!= col("dst")).distinct())
-    val e = CacheScope.register(eCut
+    val e = CacheScope.register(eCut.frame
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    val (nodes, nodeBlocks) = checkpointed(
+    val nodesCut = Lineage.cut(
       e.select(col("src").as("node"))
         .union(e.select(col("dst").as("node")))
         .distinct())
-    CacheScope.registerRddIds(sc, nodeBlocks)
-    var live: List[Set[Int]] = Nil
+    CacheScope.register(nodesCut)
+    val nodes = nodesCut.frame
+    var live: List[Lineage.Cut] = Nil
     def cut(df: DataFrame): DataFrame = {
-      val (c, bs) = checkpointed(df) // eager — see scaladoc
-      live = bs :: live
-      live.drop(2).foreach(drop) // older cuts are lineage-unreachable now
+      val c = Lineage.cut(df) // eager — see scaladoc
+      live = c :: live
+      live.drop(2).foreach(_.release()) // older cuts are lineage-unreachable now
       live = live.take(2)
-      c
+      c.frame
     }
     def maxNormalized(rawCut: DataFrame, scoreCol: String): DataFrame = {
       // both references read the checkpointed blocks — no recompute
@@ -544,10 +508,10 @@ object Graph {
     // nodes + the last two cuts, so its blocks are released eagerly here
     // rather than held until the harness sweep (the cache is registered
     // with CacheScope and released by the harness)
-    drop(eBlocks)
+    eCut.release()
     e.unpersist(blocking = false)
     // the returned frame reads the LAST two cuts (auth's and hub's raws)
-    live.foreach(bs => CacheScope.registerRddIds(sc, bs))
+    CacheScope.register(live: _*)
     nodes
       .join(hub.select(col("node"), col("hub")), Seq("node"), "left")
       .join(auth.select(col("node"), col("auth")), Seq("node"), "left")

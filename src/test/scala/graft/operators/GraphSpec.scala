@@ -103,6 +103,31 @@ class GraphSpec extends AnyFunSuite {
       s"leaked blocks: ${sc.getPersistentRDDs.keys}")
   }
 
+  test("iterative operators: no persisted blocks leak past CacheScope.release") {
+    val sc = spark.sparkContext
+    // a 2-cycle feeding a path: several rounds in every operator below
+    val edges = Seq((1L, 2L), (2L, 1L), (2L, 3L), (3L, 4L), (4L, 5L))
+      .toDF("src", "dst")
+    val ops: Seq[(String, () => org.apache.spark.sql.DataFrame)] = Seq(
+      // iters = 5 crosses the every-4th-round rank cut
+      "pageRank" -> (() => Graph.pageRank(edges, "src", "dst", iters = 5)),
+      "pageRank(tol)" ->
+        (() => Graph.pageRank(edges, "src", "dst", iters = 6, tol = 1e-12)),
+      "hits" -> (() => Graph.hits(edges, "src", "dst", iters = 3)),
+      "kCore" -> (() => Graph.kCore(edges, "src", "dst", k = 2)),
+      "labelPropagation" ->
+        (() => Graph.labelPropagation(edges, "src", "dst", iters = 3)),
+      "connectedComponents" ->
+        (() => Dedup.connectedComponents(edges, "src", "dst")))
+    for ((name, op) <- ops) {
+      val before = sc.getPersistentRDDs.keySet.toSet
+      op().collect()
+      graft.CacheScope.release()
+      val leaked = sc.getPersistentRDDs.keySet.toSet -- before
+      assert(leaked.isEmpty, s"$name leaked blocks: $leaked")
+    }
+  }
+
   private def tri(edges: Seq[(Long, Long)]): (Long, Long) = {
     val r = Graph.triangleCount(edges.toDF("src", "dst"), "src", "dst")
       .collect().head

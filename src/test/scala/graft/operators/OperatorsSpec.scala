@@ -470,10 +470,57 @@ class OperatorsSpec extends AnyFunSuite {
     // converge, and silently returning the halfway labels would split a
     // single dedup group in two
     val chain = Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L), (5L, 6L)).toDF("id_a", "id_b")
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet.toSet
     val e = intercept[IllegalStateException] {
       Dedup.connectedComponents(chain, maxIter = 2).collect()
     }
     assert(e.getMessage.contains("did not converge"))
+    // the throw path releases every cut and cache it made — no
+    // CacheScope.release needed
+    val left = sc.getPersistentRDDs.keySet.toSet -- before
+    assert(left.isEmpty, s"blocks left after the throw: $left")
+  }
+
+  test("connectedComponents keeps its edges cache for every round: nothing " +
+      "released inside the call is read by a later job of the call") {
+    import org.apache.spark.scheduler._
+    val sc = spark.sparkContext
+    // a 6-chain converges only after 5+ min-label rounds
+    val chain = (1L to 5L).map(i => (i, i + 1)).toDF("id_a", "id_b")
+    val released = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val readAfterRelease = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val markerSeen = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onUnpersistRDD(u: SparkListenerUnpersistRDD): Unit =
+        released.add(u.rddId)
+      override def onStageSubmitted(s: SparkListenerStageSubmitted): Unit =
+        s.stageInfo.rddInfos.map(_.id).filter(released.contains)
+          .foreach(readAfterRelease.add)
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        if (Option(j.properties).exists(_.getProperty("spark.job.description") == "cc-marker"))
+          markerSeen.countDown()
+    }
+    sc.addSparkListener(listener)
+    val comp = try {
+      val out = Dedup.connectedComponents(chain)
+      // listener events arrive in posting order: once the marker job's
+      // start is seen, every event of the call above has been delivered
+      sc.setJobDescription("cc-marker")
+      try spark.range(1).count() finally sc.setJobDescription(null)
+      assert(markerSeen.await(60, java.util.concurrent.TimeUnit.SECONDS))
+      out.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    } finally {
+      sc.removeSparkListener(listener)
+      graft.CacheScope.release()
+    }
+    assert(comp === (1L to 6L).map(_ -> 1L).toMap)
+    assert(released.size >= 3, s"superseded label cuts must be released: $released")
+    // the defect this pins: a cut that released every block its job
+    // materialized also dropped the lazily persisted edge cache after
+    // round 1, so every later round re-read it uncached
+    assert(readAfterRelease.isEmpty,
+      s"RDDs released mid-call and then read again: $readAfterRelease")
   }
 
   test("operator-internal persists register in CacheScope and release cleanly") {
