@@ -4935,8 +4935,8 @@ object SparkEntry {
        |)""".stripMargin
   }
 
-  /** The value-identical DuckDB twin of
-    * [[operators.Dedup.winnowGramHash]] at noise=21: the first 10 hex
+  /** The value-identical DuckDB twin of the winnow kernel's gram hash
+    * ([[graft.functions.WinnowKernel]]) at noise=21: the first 10 hex
     * chars of md5(gram) as a BIGINT — the same '0x'-cast md5 derivation
     * the minhash oracles use. Evaluates over the same `text`/`pos`
     * columns the selection CTE exposes. */

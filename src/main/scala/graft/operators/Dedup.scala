@@ -40,19 +40,19 @@ object Dedup {
       r.nextInt(MinhashP.toInt).toLong))
   }
 
-  /** MinHash signatures, wide form (`mh0..mh{k-1}` per doc): ONE md5 per
-    * shingle reduced mod P, then k affine universal hashes derived
-    * arithmetically — k map-side-combinable `min` aggregates in a single
-    * shuffle, instead of exploding every shingle k× and hashing each copy
-    * (k× the md5 cost and a k×-wider shuffle at 100 TB). */
-  def minhashSignatures(sh: DataFrame, idCol: String, k: Int): DataFrame = {
-    val hm = conv(substring(md5(col("shingle")), 1, 15), 16, 10).cast("long") % MinhashP
-    val mins = minhashCoeffs(k).zipWithIndex.map { case ((a, b), i) =>
-      min((lit(a) * col("__hm") + lit(b)) % MinhashP).as(s"mh$i")
-    }
-    sh.withColumn("__hm", hm)
-      .groupBy(col(idCol))
-      .agg(mins.head, mins.tail: _*)
+  /** MinHash signatures, wide form (`mh0..mh{k-1}` per doc) from the
+    * shingle-set frame (`idCol`, `shingles`, as [[TextOps.shingleSets]]
+    * builds it): ONE md5 per shingle reduced mod P, then k affine universal
+    * hashes derived arithmetically, all k minima folded inside the
+    * document's row by one kernel pass ([[graft.functions.MinhashSignature]])
+    * — a map over the set frame, with no shingle explode and no shuffle. A
+    * document with no shingles has no signature and is absent. One row per
+    * input row: `idCol` is unique per row in the set frame. */
+  def minhashSignatures(sets: DataFrame, idCol: String, k: Int): DataFrame = {
+    val sig = sets.where(size(col("shingles")) > 0)
+      .select(col(idCol), graft.functions.DedupKernels.minhash(
+        col("shingles"), minhashCoeffs(k), MinhashP).as("__mh"))
+    sig.select(col(idCol) +: (0 until k).map(i => col("__mh")(i).as(s"mh$i")): _*)
   }
 
   /** LSH band signatures from the wide minhash frame: each band's
@@ -117,24 +117,21 @@ object Dedup {
     val sets = graft.CacheScope.register(
       TextOps.shingleSets(df, idCol, textCol, 3)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    val sh = sets.select(col(idCol), explode(col("shingles")).as("shingle"))
-    // budget ON (the default): the band frame gains a THIRD consumer (the
-    // budget's bucket-size aggregate next to the two candidate join
-    // sides), and ReusedExchange does NOT dedup the signature aggregation
-    // across them (the budget subtree's inferred filters make it
-    // canonically unequal) — r14 abprobe.json measured the unpersisted
-    // variant at ×3.06 the unbounded plan (4.04 vs 1.32 s at sf0.1), i.e.
-    // one full extra shingle→signature recompute. Persisting the k-row-
-    // per-doc band frame collapses all three consumers onto one compute.
-    // Budget OFF keeps the r13 finding: with exactly two consumers in one
-    // plan, ReusedExchange already dedups and a persist only adds churn.
-    val bands0 = lshBands(minhashSignatures(sh, idCol, k), idCol, rowsPerBand)
-    val bands = if (maxPairs > 0L)
+    // the band frame is a map over the cached sets. Budget ON: the guard's
+    // bucket-size aggregate sits INSIDE the persist, so it runs once while
+    // the cache builds and both candidate-join sides read the guarded
+    // bands. Guarded after the persist instead, each side got its own copy
+    // of the aggregate: the inferred filters make the two subtrees
+    // canonically unequal, so ReusedExchange cannot dedup them. Budget OFF
+    // keeps the r13 finding: the two join sides recompute a cheap map and
+    // a persist only adds churn.
+    val bands0 = lshBands(minhashSignatures(sets, idCol, k), idCol, rowsPerBand)
+    val guarded = if (maxPairs > 0L)
       graft.CacheScope.register(
-        bands0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+        Guards.pairBudget(bands0, Seq("band", "sig"), maxPairs,
+          "Dedup.minhashNearDups")
+          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
     else bands0
-    val guarded = Guards.pairBudget(bands, Seq("band", "sig"), maxPairs,
-      "Dedup.minhashNearDups")
     val cands = lshCandidates(guarded, idCol)
     jaccard(sets, idCol, cands).filter(col("jaccard") >= threshold)
   }
@@ -165,12 +162,9 @@ object Dedup {
     val sets = graft.CacheScope.register(
       TextOps.shingleSets(df, idCol, textCol, 3)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    val sh = sets.select(col(idCol), explode(col("shingles")).as("shingle"))
-    // NOT persisted: the rep aggregate and the star-candidate join share
-    // the band frame within ONE plan, so ReusedExchange already dedups the
-    // signature aggregation (measured: persisting left shuffle bytes
-    // identical at 2.0 MB and only added cache churn)
-    val bands = lshBands(minhashSignatures(sh, idCol, k), idCol, rowsPerBand)
+    // NOT persisted: the band frame is a map over the cached sets, shared
+    // by the rep aggregate and the star-candidate join
+    val bands = lshBands(minhashSignatures(sets, idCol, k), idCol, rowsPerBand)
     // rep per bucket: a map-side-combinable min — the flood's giant bucket
     // collapses to one row per map task, never a bucket-sized join side
     val reps = bands.groupBy(col("band"), col("sig"))
@@ -631,10 +625,7 @@ object Dedup {
 
   private def refBandsFrom(sets: DataFrame, idCol: String,
                            k: Int, rowsPerBand: Int): DataFrame =
-    lshBands(
-      minhashSignatures(
-        sets.select(col(idCol), explode(col("shingles")).as("shingle")), idCol, k),
-      idCol, rowsPerBand)
+    lshBands(minhashSignatures(sets, idCol, k), idCol, rowsPerBand)
 
   /** [[incrementalDedup]] against a precomputed [[RefIndex]]: identical
     * results, but the reference corpus' text column is never read — only
@@ -938,7 +929,7 @@ object Dedup {
     * "Winnowing: Local Algorithms for Document Fingerprinting", SIGMOD
     * 2003 — the MOSS algorithm): every `noise`-char gram of the document
     * is a candidate; in each window of `w = minLen − noise + 1`
-    * consecutive gram positions the lexicographically minimal gram is
+    * consecutive gram positions the gram with the minimal hash is
     * selected, ties broken by the leftmost position. Selection is a pure
     * function of window CONTENT, which buys the guarantee stride sampling
     * cannot give (`substringfloor.json`: stride 10 catches 17.4% of
@@ -953,210 +944,55 @@ object Dedup {
     * density 1 under any positional tie-break — and its grams are
     * corpus-wide duplicates anyway).
     *
-    * Scale design: the stride-1 gram explode never leaves its document's
-    * partition — selection is one per-doc window (`min` over a bounded
-    * w-row following frame, O(w)/row) over ONE packed 8-byte key per
-    * position: `gramHash(41 bits) ∥ pos(21 bits) ∥ validStart(1 bit)`.
-    * `gramHash` is the first 40 bits of md5(gram). Min-by-hash is
-    * standard winnowing (MOSS hashes its k-grams); the any-alignment
-    * guarantee is preserved because selection is still a pure function
-    * of window content, with the absolute-position bits
-    * breaking hash ties deterministically. The low flag bit marks
-    * valid window STARTS (pos ≤ len − minLen + 1) and cannot disturb the
-    * (hash, pos) order — pos is unique per doc, so keys never tie above
-    * it. r13 shipped a 31-char `gram ∥ zero-padded pos` text key instead;
-    * SCALE.md measured ~150 MB/task of sort data at 30× from exactly that
-    * width, and the packed key cuts the per-row sort payload 3×
-    * (72 → 24 bytes). The winning position is recovered from the window
-    * min itself; gram TEXT is recovered after selection by joining the
-    * ~2n/(w+1) winners back to `docs` on `idCol` (the winners side reuses
-    * the window's hash partitioning — only the doc frame shuffles, O(corpus)
-    * bytes once vs O(31·positions) through the sort before). Only selected
-    * fingerprints reach the corpus-wide gram shuffle — cross-partition
-    * volume matches stride ≈ (w+1)/2 sampling while the detection
-    * guarantee holds at any phase. The gram hash is PORTABLE (the first
-    * 40 bits of md5 — the same engine-portable derivation as every other
-    * dedup hash here) so the DuckDB oracle twins replay the identical
-    * selection. Returns `(idCol, pos, gram)`, gram length = `noise`. */
+    * Scale design: selection never leaves the document's row. One kernel
+    * pass ([[graft.functions.WinnowSelect]]) walks the codepoint offsets
+    * once, hashes every gram as the first 40 bits of md5 over its UTF-8
+    * bytes, and keeps each full window's argmin with a monotone deque —
+    * O(len) per document, so an outlier-length document costs its length,
+    * not its length squared. Min-by-hash is standard winnowing (MOSS hashes
+    * its k-grams); the any-alignment guarantee is preserved because
+    * selection is still a pure function of window content, with the
+    * absolute position breaking hash ties deterministically. The document
+    * never explodes into one row per character: only the selected ~2n/(w+1)
+    * fingerprints leave the kernel, as rows of this frame, and only they
+    * reach the corpus-wide gram shuffle — cross-partition volume matches
+    * stride ≈ (w+1)/2 sampling while the detection guarantee holds at any
+    * phase. The gram hash is PORTABLE (the first 40 bits of md5 — the same
+    * engine-portable derivation as every other dedup hash here) so the
+    * DuckDB oracle twins replay the identical selection with a packed
+    * `hash(40b) ∥ pos(21b) ∥ validStart(1b)` window key; documents longer
+    * than those 21 position bits fail loudly, naming the id. Returns
+    * `(idCol, pos, gram)`, gram length = `noise`; rows sharing an id each
+    * contribute their own fingerprints. */
   def winnowFingerprints(docs: DataFrame, idCol: String, textCol: String,
-                         minLen: Int = 30, noise: Int = 21): DataFrame = {
-    require(noise > 0, "noise must be positive")
-    require(minLen >= noise, s"minLen ($minLen) must be >= noise ($noise)")
-    // Length-split hybrid (r16): per-position gram extraction via
-    // substr(text, pos, noise) walks O(pos) characters (UTF8String counts
-    // codepoints from byte 0), i.e. O(len²) per document — a planted
-    // 1M-char outlier measured 39+ minutes of CPU in ONE task
-    // (SkewProbe, thread-dump-verified in UTF8String.substring). Chunked
-    // extraction (documents cut into 2^12-char chunks + noise−1 overlap,
-    // grams pulled from their chunk) is O(len·C) — the same outlier
-    // finishes in seconds — but measured ~15-30% SLOWER on the gates'
-    // ~300-char corpus (two extra Generate/Project layers per position).
-    // So each document takes the path its length wants: ≤ C chars the
-    // direct pipeline (bit-identical to pre-r16), > C the chunked one.
-    // Each doc is wholly in one branch, selection is per-doc, and the
-    // branches emit identical (id, pos, gram) schemas, so the union is
-    // exactly the unsplit result; on an all-short corpus the long branch's
-    // first stage materializes zero rows and AQE collapses it (cost: one
-    // extra scan of the tiny docs frame).
-    val isLong = length(col(textCol)) > lit(WinnowChunkChars)
-    winnowFingerprintsBranch(docs.where(!isLong), idCol, textCol,
-        minLen, noise, chunked = false)
-      .unionByName(winnowFingerprintsBranch(docs.where(isLong), idCol,
-        textCol, minLen, noise, chunked = true))
-  }
+                         minLen: Int = 30, noise: Int = 21): DataFrame =
+    docs.select(col(idCol),
+        explode(winnowSelected(idCol, textCol, minLen, noise)).as("__fp"))
+      .select(col(idCol), col("__fp.pos").as("pos"), col("__fp.gram").as("gram"))
 
-  private def winnowFingerprintsBranch(docs: DataFrame, idCol: String,
-      textCol: String, minLen: Int, noise: Int,
-      chunked: Boolean): DataFrame = {
-    val w = minLen - noise + 1
+  /** The winnow kernel over `textCol`, behind the loud length guard. */
+  private def winnowSelected(idCol: String, textCol: String, minLen: Int,
+                             noise: Int): Column = {
     val posMask = (1L << WinnowPosBits) - 1
-    import org.apache.spark.sql.expressions.Window
-    // documents longer than the 21 position bits would silently alias
-    // packed keys — fail loudly per offending document instead
-    val len = when(length(col(textCol)) > lit(posMask),
+    // the oracle twins' packed key holds 21 position bits and would
+    // silently alias longer documents — fail loudly per offending document
+    val text = when(length(col(textCol)) > lit(posMask),
         raise_error(concat(
           lit(s"Dedup.winnowFingerprints: document longer than $posMask " +
             "chars (id "), col(idCol).cast("string"),
           lit(") — the packed selection key holds 21 position bits; " +
-            "split the document first"))).cast("int"))
-      .otherwise(length(col(textCol)))
-    val occBase = docs
-      .where(length(col(textCol)) >= minLen)
-      // r15 (guide §2.3 "shuffle keys and metadata instead of payloads",
-      // inverted: shuffle the PAYLOAD once instead of its explosion): the
-      // selection window below requires per-doc clustering either way, and
-      // without this repartition EnsureRequirements plants the exchange
-      // ABOVE the explode+md5 projection — the shuffle then carries one
-      // 24-byte packed-key row PER CHARACTER (~20× the corpus bytes) and
-      // the explode+hash work runs in the scan stage (one task per input
-      // split — a single task on a one-row-group file). Repartitioning the
-      // raw docs by id moves the one unavoidable exchange BELOW the
-      // explode: whole documents cross the wire once (O(corpus) bytes),
-      // and the per-position md5 work parallelizes across the shuffle
-      // partitions. The partition count is pinned to
-      // spark.sql.shuffle.partitions (the deployment's scale knob) rather
-      // than left to AQE coalescing: AQE sizes partitions by SHUFFLE bytes
-      // read, but each shuffled document byte fans out into ~24 bytes of
-      // packed-key rows plus an md5 digest per position downstream, so
-      // byte-based coalescing under-parallelizes the expensive stage ~20×
-      // (measured: the ingest gates lost 0.4–2.2 s to a coalesced 1–2
-      // partition explode). Same rows, same selection.
-      .repartition(docs.sparkSession.sessionState.conf.numShufflePartitions,
-        col(idCol))
-    // Gram extraction per the hybrid contract (see winnowFingerprints):
-    // the DIRECT path materializes each gram with one substr(text, pos,
-    // noise) — one O(pos) character walk, the right trade at ≤ C chars
-    // (measured alternatives at sf0.1: a 21-term codepoint polynomial via
-    // substr(text, pos+i, 1) re-walks the full string per term — 33 s;
-    // a per-doc codepoint array — 63 s; substr(gram, i, 1) — 8 s; direct
-    // md5 — ~2 s). The CHUNKED path explodes the document into C = 2^12
-    // char chunks (+ noise−1 overlap so every gram is whole) and pulls
-    // each gram from its chunk — O(len·C + len²/C) total instead of the
-    // O(len²) that made a 1M-char outlier a 39-minute single-task
-    // straggler. Global pos = base + local, so positions and grams are
-    // bit-identical across the two paths.
-    val grams =
-      if (!chunked) occBase
-        .select(col(idCol),
-          (len - (minLen - 1)).as("__last"),
-          explode(sequence(lit(1), len - (noise - 1), lit(1))).as("pos"),
-          col(textCol))
-        .select(col(idCol), col("__last"), col("pos"),
-          col(textCol).substr(col("pos"), lit(noise)).as("__gram"))
-      else occBase
-        .select(col(idCol),
-          (len - (minLen - 1)).as("__last"),
-          (len - (noise - 1)).as("__npos"),
-          explode(sequence(lit(0),
-            shiftright(len - (noise - 1) - 1, WinnowChunkShift), lit(1)))
-            .as("__ck"),
-          col(textCol))
-        .select(col(idCol), col("__last"),
-          (col("__ck") * lit(WinnowChunkChars)).as("__base"),
-          col(textCol).substr(col("__ck") * lit(WinnowChunkChars) + lit(1),
-            lit(WinnowChunkChars + noise - 1)).as("__ctext"),
-          least(lit(WinnowChunkChars),
-            col("__npos") - col("__ck") * lit(WinnowChunkChars)).as("__n"))
-        .select(col(idCol), col("__last"), col("__base"), col("__ctext"),
-          explode(sequence(lit(1), col("__n"), lit(1))).as("__lp"))
-        .select(col(idCol), col("__last"),
-          (col("__base") + col("__lp")).as("pos"),
-          col("__ctext").substr(col("__lp"), lit(noise)).as("__gram"))
-    val occ = grams
-      .select(col(idCol),
-        ((winnowGramHash(col("__gram"))
-            * lit(1L << (WinnowPosBits + 1)))
-          + (col("pos").cast("long") * lit(2L))
-          + when(col("pos") <= col("__last"), lit(1L)).otherwise(lit(0L)))
-          .as("__key"))
-    val frame = Window.partitionBy(col(idCol))
-      .orderBy(shiftright(col("__key"), 1).bitwiseAND(lit(posMask)))
-      .rowsBetween(Window.currentRow, w - 1)
-    val winners = occ
-      .withColumn("__win", min(col("__key")).over(frame))
-      // full windows only: starts past __last = len − minLen + 1 are
-      // truncated at the doc tail and select nothing (flag bit = 0)
-      .where(col("__key").bitwiseAND(lit(1L)) === lit(1L))
-      .select(col(idCol),
-        shiftright(col("__win"), 1).bitwiseAND(lit(posMask))
-          .cast("int").as("pos"))
-      .dropDuplicates(idCol, "pos")
-    if (!chunked)
-      winners.join(docs.select(col(idCol), col(textCol)), Seq(idCol))
-        .select(col(idCol), col("pos"),
-          col(textCol).substr(col("pos"), lit(noise)).as("gram"))
-    else {
-      // chunked gram recovery: the direct substr(text, pos, noise) walk is
-      // O(pos) per winner (quadratic again on an outlier-length doc, just
-      // at ~2/(w+1) the density); winners join the per-doc CHUNK frame on
-      // (id, chunk) and pull their gram from the chunk — the same bytes
-      // shuffle (chunk texts ≈ corpus + overlap), the walks amortize.
-      val docChunks = docs
-        .where(length(col(textCol)) >= minLen)
-        .select(col(idCol),
-          explode(sequence(lit(0),
-            shiftright(length(col(textCol)) - (noise - 1) - 1,
-              WinnowChunkShift), lit(1))).as("__ck"),
-          col(textCol))
-        .select(col(idCol), col("__ck"),
-          col(textCol).substr(col("__ck") * lit(WinnowChunkChars) + lit(1),
-            lit(WinnowChunkChars + noise - 1)).as("__ctext"))
-      winners
-        .withColumn("__ck", shiftright(col("pos") - 1, WinnowChunkShift))
-        .join(docChunks, Seq(idCol, "__ck"))
-        .select(col(idCol), col("pos"),
-          col("__ctext").substr(
-            col("pos") - col("__ck") * lit(WinnowChunkChars), lit(noise))
-            .as("gram"))
-    }
+            "split the document first"))).cast("string"))
+      .otherwise(col(textCol))
+    graft.functions.DedupKernels.winnow(text, minLen, noise)
   }
 
-  /** Constants of the packed winnow selection key (see
-    * [[winnowFingerprints]]): a 40-bit md5-prefix gram hash (10 hex
+  /** Constants of the packed winnow selection key the DuckDB twins replay
+    * (see [[winnowFingerprints]]): a 40-bit md5-prefix gram hash (10 hex
     * chars), 21 position bits, 1 valid-start flag bit = 62 bits — a
     * non-negative BIGINT in both Spark and DuckDB (whose checked
     * arithmetic would error on overflow rather than wrap). */
   private[graft] val WinnowHashHexChars = 10 // 40 bits
   private[graft] val WinnowPosBits = 21
-
-  /** Gram-extraction chunk width (see [[winnowFingerprints]]): documents
-    * are cut into 2^12-char chunks (plus a noise−1 overlap) before the
-    * position explode so each O(start) UTF8 substring walk is amortized
-    * over a chunk, not paid per position — O(len·C) total instead of the
-    * O(len²) that made a single 1M-char outlier document a 39-minute
-    * straggler task. Corpus-typical documents (≲4K chars) are one chunk,
-    * i.e. exactly the pre-chunking plan. */
-  private[graft] val WinnowChunkShift = 12
-  private[graft] val WinnowChunkChars = 1 << WinnowChunkShift
-
-  /** The portable gram hash as a column expression: the first 10 hex
-    * chars of md5(gram) as a BIGINT — the same engine-portable md5
-    * derivation every other dedup hash in this file uses (DuckDB twin:
-    * `CAST('0x' || substring(md5(gram), 1, 10) AS BIGINT)`, Spark:
-    * conv/cast). One digest of the `noise`-byte gram per position; both
-    * engines hash the identical UTF-8 bytes. */
-  private[graft] def winnowGramHash(gram: Column): Column =
-    conv(substring(md5(gram), 1, WinnowHashHexChars), 16, 10).cast("long")
 
   /** [[substringSpans]] with winnowing selection instead of stride
     * sampling: dup-marked occurrence rows `(idCol, pos, len = noise,
@@ -1300,34 +1136,50 @@ object Dedup {
     * via `noise`. Returns `(id_a, id_b, shared, overlap)` for pairs with
     * `shared >= minShared`.
     *
-    * Scale design: fingerprint SETS (distinct grams per doc, not raw
-    * occurrences) bucket by gram; the equi-join emits one row per
-    * (pair, shared gram) — Σ_gram C(m,2) total, so the default
-    * [[Guards.pairBudget]] gates the gram buckets exactly like the other
-    * pair miners (a boilerplate fingerprint floods its bucket). The
-    * per-pair `count` is map-side combinable; the fingerprint frame is
-    * persisted once (CacheScope) and consumed by the budget aggregate,
-    * both join sides, and the per-doc set-size aggregate. */
+    * Scale design: one row per document until the posting join. The
+    * kernel's selected grams are merged per id and deduplicated in the row
+    * (`array_distinct`, rows sharing an id form one document), and the set
+    * size rides on every posting row as `__n` — no global `distinct`, no
+    * per-doc count aggregate, no join back of the set sizes. The merge
+    * reuses the one exchange that spreads the kernel over all shuffle
+    * partitions: whole documents cross it once, keyed by id. The postings
+    * bucket by gram; the equi-join emits one row per (pair, shared gram) —
+    * Σ_gram C(m,2) total, so the default [[Guards.pairBudget]] gates the
+    * gram buckets exactly like the other pair miners (a boilerplate
+    * fingerprint floods its bucket). The budget sits inside the persisted
+    * posting frame (CacheScope), so its aggregate runs once while the
+    * cache builds and both join sides read it; the per-pair `count` is
+    * map-side combinable. */
   def winnowOverlapPairs(docs: DataFrame, idCol: String, textCol: String,
                          minLen: Int = 30, noise: Int = 21,
                          minShared: Int = 2,
                          maxPairs: Long = Guards.DefaultMaxCandidatePairs): DataFrame = {
     require(minShared >= 1, "minShared must be >= 1")
+    val grams = winnowSelected(idCol, textCol, minLen, noise).getField("gram")
+    // pinned partition count, not left to AQE coalescing: each shuffled
+    // document byte fans out into one md5 per position in the kernel, so
+    // byte-based coalescing would serialize the expensive stage
+    val sets = docs.select(col(idCol), col(textCol))
+      .repartition(docs.sparkSession.sessionState.conf.numShufflePartitions,
+        col(idCol))
+      .groupBy(col(idCol))
+      .agg(array_distinct(flatten(collect_list(grams))).as("__grams"))
+      .select(col(idCol), col("__grams"), size(col("__grams")).as("__n"))
+    // `__n` is bound BEFORE the explode: a column the generator's select
+    // still reads is copied into every output row, O(set²) per document
+    val postings = sets.select(col(idCol), col("__n"),
+      explode(col("__grams")).as("gram"))
     val fp = graft.CacheScope.register(
-      winnowFingerprints(docs, idCol, textCol, minLen, noise)
-        .select(col(idCol), col("gram")).distinct()
+      Guards.pairBudget(postings, Seq("gram"), maxPairs,
+        "Dedup.winnowOverlapPairs")
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    val nfp = fp.groupBy(col(idCol)).agg(count(lit(1)).as("__n"))
-    val guarded = Guards.pairBudget(fp, Seq("gram"), maxPairs,
-      "Dedup.winnowOverlapPairs")
-    val a = guarded.select(col(idCol).as("id_a"), col("gram"))
-    val b = guarded.select(col(idCol).as("id_b"), col("gram"))
+    val a = fp.select(col(idCol).as("id_a"), col("gram"), col("__n").as("__na"))
+    val b = fp.select(col(idCol).as("id_b"), col("gram"), col("__n").as("__nb"))
     a.join(b, Seq("gram")).filter(col("id_a") < col("id_b"))
       .groupBy(col("id_a"), col("id_b"))
-      .agg(count(lit(1)).as("shared"))
+      .agg(count(lit(1)).as("shared"), first(col("__na")).as("__na"),
+        first(col("__nb")).as("__nb"))
       .filter(col("shared") >= minShared)
-      .join(nfp.select(col(idCol).as("id_a"), col("__n").as("__na")), Seq("id_a"))
-      .join(nfp.select(col(idCol).as("id_b"), col("__n").as("__nb")), Seq("id_b"))
       .withColumn("overlap",
         col("shared").cast("double") / least(col("__na"), col("__nb")).cast("double"))
       .select(col("id_a"), col("id_b"), col("shared"), col("overlap"))

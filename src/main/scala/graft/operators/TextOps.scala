@@ -267,21 +267,30 @@ object TextOps {
     *    per term (ln is monotone), spec-tested (cross-engine libm `ln` may
     *    differ in the last ulp, so it is not oracle-gated).
     *
-    * Scale design: tf is one map-side-combinable count on (doc, term); df
-    * reuses the SAME aggregate output (no second corpus scan) via a
-    * per-term count over the tf frame; the (small) per-term df/idf frame
-    * broadcasts back onto the tf rows. The corpus is scanned once.
+    * Scale design: the documents hash-partition by id once, so the tf
+    * count on (doc, term) needs no further exchange and its rows stay
+    * partitioned by document for per-document consumers
+    * ([[tfidfCosinePairs]]' norm fold); df reuses the SAME aggregate
+    * output (no second corpus scan) via a per-term count over the tf
+    * frame; the (small) per-term df/idf frame broadcasts back onto the tf
+    * rows. The corpus is scanned once.
     * Emits (id, term, tf, df, tfidf). */
   def tfidf(df: DataFrame, idCol: String, textCol: String,
             logIdf: Boolean = false, nDocs: Option[Long] = None): DataFrame = {
-    val toks = df.select(col(idCol),
-      explode(tokens(col(textCol))).as("term"))
+    val toks = df.select(col(idCol), col(textCol)).repartition(col(idCol))
+      .select(col(idCol), explode(tokens(col(textCol))).as("term"))
     val tf = toks.groupBy(col(idCol), col("term"))
       .agg(count(lit(1)).as("tf"))
     // corpus size: metadata-only on a parquet scan; callers holding a
     // computed frame pass nDocs to skip the extra job
     val n = nDocs.getOrElse(df.count())
-    val dfreq = tf.groupBy(col("term")).agg(count(lit(1)).as("df"))
+    // df counts the (doc, term) groups: sum(least(tf, 1)) equals count(1)
+    // since tf >= 1, but it reads `tf`, so column pruning leaves this
+    // branch on the SAME aggregate as `tf` and its exchange is reused —
+    // with count(1) the pruned branch re-ran the tokenize and the (doc,
+    // term) shuffle
+    val dfreq = tf.groupBy(col("term"))
+      .agg(sum(least(col("tf"), lit(1L))).as("df"))
     val rawIdf = (lit(n + 1.0)) / (col("df") + lit(1.0))
     val idf = if (logIdf) log(rawIdf) + lit(1.0) else rawIdf
     tf.join(broadcast(dfreq.withColumn("idf", idf)), "term")
@@ -310,44 +319,49 @@ object TextOps {
                        maxPairs: Long = Guards.DefaultMaxCandidatePairs): DataFrame = {
     require(threshold >= 0.0, s"threshold must be >= 0, got $threshold")
     require(maxDf >= 1, s"maxDf must be >= 1, got $maxDf")
-    // persisted: consumed by the norm aggregate, BOTH posting-join sides,
-    // and (r13) the pair budget's posting-size aggregate — four scans of
-    // the tokenize+tfidf chain without it. The budget backstops maxDf:
-    // with the default maxDf = ∞ a stopword posting is pair-quadratic,
-    // and even a tuned maxDf can flood on replica corpora.
-    val weights = Guards.pairBudget(
-      graft.CacheScope.register(
-        tfidf(df, idCol, textCol, logIdf = false, nDocs = nDocs)
-          .filter(col("df") <= maxDf)
-          .select(col(idCol), col("term"), col("tfidf").as("__w"))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)),
-      Seq("term"), maxPairs, "TextOps.tfidfCosinePairs")
     def foldSq(lst: Column): Column =
       aggregate(transform(lst, t => t.getField("__w") * t.getField("__w")),
         lit(0.0), (acc, x) => acc + x)
-    val norms = weights.groupBy(col(idCol))
-      .agg(sort_array(collect_list(struct(col("term"), col("__w"))))
+    // one row per document until the posting join: its term-ordered weight
+    // list gives the norm once, and the postings explode back out of that
+    // row carrying `__norm`, so no norm aggregate is joined back per pair.
+    // The norm is bound BEFORE the explode: in the generator's own select
+    // it would fold, and copy the list, once per output row
+    val postings = tfidf(df, idCol, textCol, logIdf = false, nDocs = nDocs)
+      .filter(col("df") <= maxDf)
+      .groupBy(col(idCol))
+      .agg(sort_array(collect_list(struct(col("term"), col("tfidf").as("__w"))))
         .as("__ts"))
-      .select(col(idCol), sqrt(foldSq(col("__ts"))).as("__norm"))
+      .select(col(idCol), col("__ts"), sqrt(foldSq(col("__ts"))).as("__norm"))
+      .select(col(idCol), col("__norm"), explode(col("__ts")).as("__t"))
+      .select(col(idCol), col("__t.term").as("term"), col("__t.__w").as("__w"),
+        col("__norm"))
+    // persisted: consumed by BOTH posting-join sides. The pair budget sits
+    // inside the persist, so its posting-size aggregate runs once while the
+    // cache builds. The budget backstops maxDf: with the default maxDf = ∞
+    // a stopword posting is pair-quadratic, and even a tuned maxDf can
+    // flood on replica corpora.
+    val weights = graft.CacheScope.register(
+      Guards.pairBudget(postings, Seq("term"), maxPairs,
+        "TextOps.tfidfCosinePairs")
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
     val a = weights.select(col(idCol).as("id_a"), col("term"),
-      col("__w").as("__wa"))
+      col("__w").as("__wa"), col("__norm").as("__na"))
     val b = weights.select(col(idCol).as("id_b"), col("term"),
-      col("__w").as("__wb"))
-    val dots = a.join(b, "term").filter(col("id_a") < col("id_b"))
+      col("__w").as("__wb"), col("__norm").as("__nb"))
+    // the dot fold is an aggregate output, so the threshold filter reads
+    // it instead of re-running the fold where it is pushed down
+    a.join(b, "term").filter(col("id_a") < col("id_b"))
       .groupBy(col("id_a"), col("id_b"))
       .agg(count(lit(1)).as("n_shared"),
-        sort_array(collect_list(struct(col("term"), col("__wa"),
-          col("__wb")))).as("__ts"))
-      .select(col("id_a"), col("id_b"), col("n_shared"),
-        aggregate(transform(col("__ts"),
+        aggregate(transform(
+            sort_array(collect_list(struct(col("term"), col("__wa"), col("__wb")))),
             t => t.getField("__wa") * t.getField("__wb")),
-          lit(0.0), (acc, x) => acc + x).as("__dot"))
-    dots
-      .join(norms.select(col(idCol).as("id_a"), col("__norm").as("__na")), "id_a")
-      .join(norms.select(col(idCol).as("id_b"), col("__norm").as("__nb")), "id_b")
-      .withColumn("cosine", col("__dot") / (col("__na") * col("__nb")))
+          lit(0.0), (acc, x) => acc + x).as("__dot"),
+        first(col("__na")).as("__na"), first(col("__nb")).as("__nb"))
+      .select(col("id_a"), col("id_b"), col("n_shared"),
+        (col("__dot") / (col("__na") * col("__nb"))).as("cosine"))
       .filter(col("cosine") >= threshold)
-      .select(col("id_a"), col("id_b"), col("n_shared"), col("cosine"))
   }
 
   /** Okapi BM25 term scoring (Robertson et al., TREC-3 — the standard

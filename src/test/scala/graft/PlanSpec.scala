@@ -72,10 +72,7 @@ class PlanSpec extends AnyFunSuite {
   test("minhash signature aggregation reuses the shingleSets partitioning") {
     val docs = spark.read.parquet(s"$sf/documents.parquet")
     val sets = operators.TextOps.shingleSets(docs, "doc_id", "text", 3)
-    val sh = sets.select(org.apache.spark.sql.functions.col("doc_id"),
-      org.apache.spark.sql.functions.explode(
-        org.apache.spark.sql.functions.col("shingles")).as("shingle"))
-    val sigs = operators.Dedup.minhashSignatures(sh, "doc_id", 8)
+    val sigs = operators.Dedup.minhashSignatures(sets, "doc_id", 8)
     val p = sigs.queryExecution.executedPlan.toString
     // the only exchange is the explicit repartition(doc_id); groupBy(doc_id)
     // is satisfied by it, so no second shuffle appears

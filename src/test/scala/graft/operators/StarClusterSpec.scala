@@ -65,8 +65,7 @@ class StarClusterSpec extends AnyFunSuite {
       * is mins.slice(4b, 4b+4).mkString("|") exactly as lshBands builds it. */
     def minsOf(df: org.apache.spark.sql.DataFrame): Map[Long, Seq[Long]] = {
       val sets = TextOps.shingleSets(df, "doc_id", "text", 3)
-      val sh = sets.select(col("doc_id"), explode(col("shingles")).as("shingle"))
-      Dedup.minhashSignatures(sh, "doc_id", k).collect()
+      Dedup.minhashSignatures(sets, "doc_id", k).collect()
         .map(r => r.getLong(0) -> (1 to k).map(r.getLong(_)))
         .toMap
     }

@@ -20,9 +20,7 @@ object DedupProbe {
     }
     val sets = TextOps.shingleSets(docs, "doc_id", "text", 3)
     time("sets")(sets.count())
-    val sh = sets.select(col("doc_id"), explode(col("shingles")).as("shingle"))
-    time("sh")(sh.count())
-    val sigs = Dedup.minhashSignatures(sh, "doc_id", 16)
+    val sigs = Dedup.minhashSignatures(sets, "doc_id", 16)
     time("sigs")(sigs.count())
     val cands = Dedup.lshCandidates(Dedup.lshBands(sigs, "doc_id", 4), "doc_id")
     time("cands")(cands.count())
