@@ -37,11 +37,24 @@ trait IndicatorWindowFunction extends AggregateWindowFunction {
       // surface bad window sizes at analysis time, not as executor task failures
       try {
         children.drop(1).foreach(requireWindowSize)
+        validateArgs()
         TypeCheckResult.TypeCheckSuccess
       } catch {
         case e: IllegalArgumentException => TypeCheckResult.TypeCheckFailure(e.getMessage)
       }
     }
+  }
+
+  /** Range checks beyond `window_size >= 1`, run at analysis time: throw
+    * `IllegalArgumentException` to fail the type check with its message. */
+  protected def validateArgs(): Unit = ()
+
+  /** A smoothing factor as a permille literal in [1, 1000]. */
+  protected def requirePermille(e: Expression): Int = {
+    val v = requireWindowSize(e)
+    if (v > 1000) throw new IllegalArgumentException(
+      s"$prettyName smoothing permille must be in [1, 1000], got $v")
+    v
   }
 
   /** value as Double; the SQL builder wraps a Cast already, but keep safe. */
@@ -383,15 +396,9 @@ case class Holt(value: Expression, alphaPm: Expression, betaPm: Expression)
   private lazy val alpha = requirePermille(alphaPm) / 1000.0
   private lazy val beta = requirePermille(betaPm) / 1000.0
 
-  private def requirePermille(e: Expression): Int = {
-    val v = requireWindowSize(e)
-    if (v > 1000) throw new IllegalArgumentException(
-      s"$prettyName smoothing permille must be in [1, 1000], got $v")
-    v
-  }
-
   override def children: Seq[Expression] = Seq(value, alphaPm, betaPm)
   override def prettyName: String = "holt"
+  override protected def validateArgs(): Unit = { alpha; beta }
 
   private lazy val lvl = AttributeReference("hLvl", DoubleType, nullable = true)()
   private lazy val trd = AttributeReference("hTrd", DoubleType, nullable = true)()
@@ -470,26 +477,10 @@ case class HoltWinters(value: Expression, periodE: Expression,
   private lazy val beta = requirePermille(betaPm) / 1000.0
   private lazy val gamma = requirePermille(gammaPm) / 1000.0
 
-  private def requirePermille(e: Expression): Int = {
-    val v = requireWindowSize(e)
-    if (v > 1000) throw new IllegalArgumentException(
-      s"$prettyName smoothing permille must be in [1, 1000], got $v")
-    v
-  }
-
   override def children: Seq[Expression] =
     Seq(value, periodE, alphaPm, betaPm, gammaPm)
   override def prettyName: String = "holt_winters"
-
-  override def checkInputDataTypes(): TypeCheckResult = {
-    val base = super.checkInputDataTypes()
-    if (base.isFailure) base
-    else try { p; alpha; beta; gamma; TypeCheckResult.TypeCheckSuccess }
-    catch {
-      case e: IllegalArgumentException =>
-        TypeCheckResult.TypeCheckFailure(e.getMessage)
-    }
-  }
+  override protected def validateArgs(): Unit = { p; alpha; beta; gamma }
 
   private lazy val lvl = AttributeReference("hwLvl", DoubleType, nullable = true)()
   private lazy val trd = AttributeReference("hwTrd", DoubleType, nullable = true)()
@@ -547,10 +538,8 @@ case class HoltWinters(value: Expression, periodE: Expression,
 
 case class Kalman(value: Expression, qPm: Expression, rPm: Expression)
     extends IndicatorWindowFunction {
-  private lazy val q = requirePermilleArg(qPm) / 1000.0
-  private lazy val r = requirePermilleArg(rPm) / 1000.0
-
-  private def requirePermilleArg(e: Expression): Int = requireWindowSize(e)
+  private lazy val q = requireWindowSize(qPm) / 1000.0
+  private lazy val r = requireWindowSize(rPm) / 1000.0
 
   override def children: Seq[Expression] = Seq(value, qPm, rPm)
   override def prettyName: String = "kalman"
@@ -603,14 +592,10 @@ case class Garch(value: Expression, omegaPpm: Expression,
   private lazy val alpha = requireWindowSize(alphaPm) / 1000.0
   private lazy val beta = requireWindowSize(betaPm) / 1000.0
 
-  override def checkInputDataTypes(): TypeCheckResult = {
-    val base = super.checkInputDataTypes()
-    if (base.isFailure) base
-    else if (requireWindowSize(alphaPm) + requireWindowSize(betaPm) >= 1000) {
-      TypeCheckResult.TypeCheckFailure(
-        s"$prettyName requires alpha_pm + beta_pm < 1000 (stationarity), got " +
-          s"${requireWindowSize(alphaPm)} + ${requireWindowSize(betaPm)}")
-    } else base
+  override protected def validateArgs(): Unit = {
+    val (a, b) = (requireWindowSize(alphaPm), requireWindowSize(betaPm))
+    if (a + b >= 1000) throw new IllegalArgumentException(
+      s"$prettyName requires alpha_pm + beta_pm < 1000 (stationarity), got $a + $b")
   }
 
   override def children: Seq[Expression] = Seq(value, omegaPpm, alphaPm, betaPm)

@@ -1,8 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Dataset, Encoders => SparkEncoders}
-import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TimeMode,
-  TTLConfig, TimerValues, ValueState}
+import graft.functions.Garch
+import org.apache.spark.sql.Dataset
+import org.apache.spark.sql.catalyst.expressions.Literal
 
 /** Per-key RETURN observation (the native `garch` window's input is a
   * return series, not prices — difference upstream); `ret = None`
@@ -11,28 +11,21 @@ import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TimeMode,
 final case class GarchEvent(key: String, ts: java.sql.Timestamp,
                             ret: Option[Double], seq: Long = 0L)
 
-/** GARCH(1,1) recursion state: previous return and conditional
-  * variance, each with its batch null-buffer seed flag. */
-final case class GarchState(hasPrevR: Boolean, prevR: Double,
-                            hasSig2: Boolean, sig2: Double)
-
 /** One scored point: `vol` = √σ²_t (None while frozen/unseeded). */
 final case class GarchPoint(key: String, ts: java.sql.Timestamp,
                             ret: Option[Double], vol: Option[Double])
 
 /** Streaming twin of the native `garch(ret, ω_ppm, α_pm, β_pm)` window
-  * recurrence ([[graft.functions.WindowIndicators.Garch]]): the
-  * conditional-volatility monitor at ingestion time — live σ_t per key
-  * for position sizing or circuit breakers, without waiting for the
-  * batch window pass.
-  *
-  * State is TWO DOUBLES + seed flags per key; the fold mirrors the
-  * Catalyst update trees op-for-op (seed σ² = ω/(1−α−β) on the first
-  * non-null return, step `σ²' = ω + (α·r² + β·σ²)` on the PREVIOUS
-  * return, NULL input freezes the state and emits None), so replaying a
-  * key's returns through the batch window yields BIT-IDENTICAL values —
-  * spec-asserted; `q_stream_garch` oracle-replays the machine.
-  * Order contract as in [[StreamingKalman]]. */
+  * recurrence ([[graft.functions.Garch]]): the conditional-volatility
+  * monitor at ingestion time — live σ_t per key for position sizing or
+  * circuit breakers. Both entry points run the function's own update
+  * trees (seed σ² = ω/(1−α−β) on the first non-null return, step
+  * `σ²' = ω + (α·r² + β·σ²)` on the PREVIOUS return, NULL input freezes
+  * the state and emits None) through [[WindowFold]] (order contract
+  * there), so they equal the batch window by construction;
+  * `q_stream_garch` oracle-replays the recurrence. State per key: the
+  * function's buffer row (previous return, σ², NULL flag), named
+  * `"garch"`. */
 object StreamingGarch {
 
   /** Score every return with its key's running conditional volatility
@@ -40,71 +33,17 @@ object StreamingGarch {
     * permille — the batch literal convention (2/100/850 ≡
     * 2e-6/0.1/0.85). */
   def garch(events: Dataset[GarchEvent], omegaPpm: Int = 2,
-            alphaPm: Int = 100, betaPm: Int = 850): Dataset[GarchPoint] = {
-    val (w, a, b) = params(omegaPpm, alphaPm, betaPm)
-    import events.sparkSession.implicits._
-    events.groupByKey(_.key)
-      .transformWithState(new GarchProcessor(w, a, b),
-        TimeMode.None(), OutputMode.Append())
-  }
+            alphaPm: Int = 100, betaPm: Int = 850): Dataset[GarchPoint] =
+    fold(omegaPpm, alphaPm, betaPm).stream(events)
 
-  /** Batch replay through the IDENTICAL per-key fold — the oracle
-    * gate's entry point. */
+  /** Batch replay through the same fold — the oracle gate's entry point. */
   def garchBatch(events: Dataset[GarchEvent], omegaPpm: Int = 2,
-                 alphaPm: Int = 100, betaPm: Int = 850): Dataset[GarchPoint] = {
-    val (w, a, b) = params(omegaPpm, alphaPm, betaPm)
-    import events.sparkSession.implicits._
-    events.groupByKey(_.key).flatMapGroups { (key, rows) =>
-      scorePath(key, rows, w, a, b,
-        GarchState(hasPrevR = false, 0.0, hasSig2 = false, 0.0))._2.iterator
-    }
-  }
+                 alphaPm: Int = 100, betaPm: Int = 850): Dataset[GarchPoint] =
+    fold(omegaPpm, alphaPm, betaPm).batch(events)
 
-  private def params(omegaPpm: Int, alphaPm: Int, betaPm: Int) = {
-    require(omegaPpm >= 1, s"omega ppm must be >= 1, got $omegaPpm")
-    require(alphaPm >= 1 && betaPm >= 1, "alpha/beta permille must be >= 1")
-    require(alphaPm + betaPm < 1000,
-      s"alpha_pm + beta_pm < 1000 (stationarity), got $alphaPm + $betaPm")
-    (omegaPpm / 1e6, alphaPm / 1000.0, betaPm / 1000.0)
-  }
-
-  /** The shared fold, node-for-node with the Catalyst update trees. */
-  private def scorePath(key: String, rows: Iterator[GarchEvent], w: Double,
-                        a: Double, b: Double,
-                        st0: GarchState): (GarchState, Seq[GarchPoint]) = {
-    val uncond = w / (1.0 - a - b)
-    var st = st0
-    val out = rows.toSeq.sortBy(e => (e.ts.getTime, e.ts.getNanos, e.seq))
-      .map { e =>
-        e.ret match {
-          case None =>
-            GarchPoint(key, e.ts, None, None) // frozen state, NULL out
-          case Some(x) =>
-            val sig2 =
-              if (!st.hasSig2) uncond
-              else w + ((a * (st.prevR * st.prevR)) + (b * st.sig2))
-            st = GarchState(hasPrevR = true, x, hasSig2 = true, sig2)
-            GarchPoint(key, e.ts, Some(x), Some(math.sqrt(sig2)))
-        }
-      }
-    (st, out)
-  }
-
-  private[streaming] class GarchProcessor(w: Double, a: Double, b: Double)
-      extends StatefulProcessor[String, GarchEvent, GarchPoint] {
-    @transient private var state: ValueState[GarchState] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      state = getHandle.getValueState[GarchState](
-        "garch", SparkEncoders.product[GarchState], TTLConfig.NONE)
-
-    override def handleInputRows(key: String, rows: Iterator[GarchEvent],
-                                 timerValues: TimerValues): Iterator[GarchPoint] = {
-      val st0 = if (state.exists()) state.get()
-        else GarchState(hasPrevR = false, 0.0, hasSig2 = false, 0.0)
-      val (st, out) = scorePath(key, rows, w, a, b, st0)
-      state.update(st)
-      out.iterator
-    }
-  }
+  private def fold(omegaPpm: Int, alphaPm: Int, betaPm: Int) =
+    WindowFold[GarchEvent, GarchPoint]("garch",
+      in => Garch(in("ret"), Literal(omegaPpm), Literal(alphaPm),
+        Literal(betaPm)))(
+      (e, vol) => GarchPoint(e.key, e.ts, e.ret, vol))
 }

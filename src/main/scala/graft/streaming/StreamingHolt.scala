@@ -1,8 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Dataset, Encoders => SparkEncoders}
-import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TimeMode,
-  TTLConfig, TimerValues, ValueState}
+import graft.functions.Holt
+import org.apache.spark.sql.Dataset
+import org.apache.spark.sql.catalyst.expressions.Literal
 
 /** Per-key observation for the streaming Holt forecaster; `seq` is the
   * caller's unique per-key tie-break, mirroring the batch `orderCols`
@@ -10,95 +10,34 @@ import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TimeMode,
 final case class HoltEvent(key: String, ts: java.sql.Timestamp,
                            value: Double, seq: Long = 0L)
 
-/** Level/trend state; `hasLvl`/`hasTrd` mirror the batch expression's
-  * null-buffer seeding (row 1 sets the level, row 2 the trend). */
-final case class HoltState(hasLvl: Boolean, hasTrd: Boolean,
-                           lvl: Double, trd: Double)
-
 /** One forecast point: `holt` = level + trend (None until both seed). */
 final case class HoltPoint(key: String, ts: java.sql.Timestamp,
                            value: Double, holt: Option[Double])
 
 /** Streaming twin of the native `holt(value, α_pm, β_pm)` window
-  * recurrence ([[graft.functions.WindowIndicators.Holt]]): double
-  * exponential smoothing (level + trend) run at ingestion time — the
-  * live one-step-ahead forecast for capacity/run-rate monitors.
-  *
-  * State is TWO DOUBLES + two seed flags per key; the fold mirrors the
-  * Catalyst update trees op-for-op (`ℓ' = α·x + (1−α)(ℓ+b)`,
-  * `b' = β(ℓ'−ℓ) + (1−β)b`, seeds ℓ₁ = x₁, b₂ = x₂ − ℓ₁), so replaying
-  * a key's events through the batch window yields BIT-IDENTICAL values
-  * — spec-asserted; `q_stream_holt` oracle-replays the machine over the
-  * events table. Order contract as in [[StreamingKalman]]. */
+  * recurrence ([[graft.functions.Holt]]): double exponential smoothing
+  * (level + trend) at ingestion time — the live one-step-ahead forecast
+  * for capacity/run-rate monitors. Both entry points run the function's
+  * own update trees through [[WindowFold]] (order contract there), so
+  * they equal the batch window by construction; `q_stream_holt`
+  * oracle-replays the recurrence over the events table. State per key:
+  * the function's buffer row (level, trend, NULL flag), named `"holt"`. */
 object StreamingHolt {
-
-  private def pm(v: Int, what: String): Double = {
-    require(v >= 1 && v <= 1000, s"$what permille must be in [1,1000], got $v")
-    v / 1000.0
-  }
 
   /** Score every event with its key's running Holt forecast (streaming;
     * `transformWithState`, RocksDB-backed). α/β as permille ints (the
     * batch convention: 300/200 ≡ 0.3/0.2). */
   def holt(events: Dataset[HoltEvent], alphaPm: Int = 300,
-           betaPm: Int = 200): Dataset[HoltPoint] = {
-    val (a, b) = (pm(alphaPm, "alpha"), pm(betaPm, "beta"))
-    import events.sparkSession.implicits._
-    events.groupByKey(_.key)
-      .transformWithState(new HoltProcessor(a, b),
-        TimeMode.None(), OutputMode.Append())
-  }
+           betaPm: Int = 200): Dataset[HoltPoint] =
+    fold(alphaPm, betaPm).stream(events)
 
-  /** Batch replay through the IDENTICAL per-key fold — the oracle
-    * gate's entry point. */
+  /** Batch replay through the same fold — the oracle gate's entry point. */
   def holtBatch(events: Dataset[HoltEvent], alphaPm: Int = 300,
-                betaPm: Int = 200): Dataset[HoltPoint] = {
-    val (a, b) = (pm(alphaPm, "alpha"), pm(betaPm, "beta"))
-    import events.sparkSession.implicits._
-    events.groupByKey(_.key).flatMapGroups { (key, rows) =>
-      scorePath(key, rows, a, b,
-        HoltState(hasLvl = false, hasTrd = false, 0.0, 0.0))._2.iterator
-    }
-  }
+                betaPm: Int = 200): Dataset[HoltPoint] =
+    fold(alphaPm, betaPm).batch(events)
 
-  /** The shared fold, node-for-node with the Catalyst update trees. */
-  private def scorePath(key: String, rows: Iterator[HoltEvent], a: Double,
-                        b: Double,
-                        st0: HoltState): (HoltState, Seq[HoltPoint]) = {
-    var st = st0
-    val out = rows.toSeq.sortBy(e => (e.ts.getTime, e.ts.getNanos, e.seq))
-      .map { e =>
-        val x = e.value
-        st =
-          if (!st.hasLvl) HoltState(hasLvl = true, hasTrd = false, x, 0.0)
-          else if (!st.hasTrd)
-            HoltState(hasLvl = true, hasTrd = true, x, x - st.lvl)
-          else {
-            val newLvl = a * x + (1.0 - a) * (st.lvl + st.trd)
-            HoltState(hasLvl = true, hasTrd = true, newLvl,
-              b * (newLvl - st.lvl) + (1.0 - b) * st.trd)
-          }
-        HoltPoint(key, e.ts, x,
-          if (st.hasTrd) Some(st.lvl + st.trd) else None)
-      }
-    (st, out)
-  }
-
-  private[streaming] class HoltProcessor(a: Double, b: Double)
-      extends StatefulProcessor[String, HoltEvent, HoltPoint] {
-    @transient private var state: ValueState[HoltState] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      state = getHandle.getValueState[HoltState](
-        "holt", SparkEncoders.product[HoltState], TTLConfig.NONE)
-
-    override def handleInputRows(key: String, rows: Iterator[HoltEvent],
-                                 timerValues: TimerValues): Iterator[HoltPoint] = {
-      val st0 = if (state.exists()) state.get()
-        else HoltState(hasLvl = false, hasTrd = false, 0.0, 0.0)
-      val (st, out) = scorePath(key, rows, a, b, st0)
-      state.update(st)
-      out.iterator
-    }
-  }
+  private def fold(alphaPm: Int, betaPm: Int) =
+    WindowFold[HoltEvent, HoltPoint]("holt",
+      in => Holt(in("value"), Literal(alphaPm), Literal(betaPm)))(
+      (e, f) => HoltPoint(e.key, e.ts, e.value, f))
 }

@@ -1,122 +1,46 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Dataset, Encoders => SparkEncoders}
-import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TimeMode,
-  TTLConfig, TimerValues, ValueState}
+import graft.functions.HoltWinters
+import org.apache.spark.sql.Dataset
+import org.apache.spark.sql.catalyst.expressions.Literal
 
 /** Per-key observation for the streaming Holt–Winters forecaster; `seq`
   * is the caller's unique per-key tie-break — see [[VolEvent]]. */
 final case class HwEvent(key: String, ts: java.sql.Timestamp,
                          value: Double, seq: Long = 0L)
 
-/** Level/trend + the p-slot seasonal ring and the observed-row counter
-  * (the phase clock) — the exact state of the native expression's agg
-  * buffer. */
-final case class HwState(hasLvl: Boolean, hasTrd: Boolean,
-                         lvl: Double, trd: Double,
-                         seasonal: Seq[Double], cnt: Long)
-
 /** One fitted point: `hw` = ℓ + b + s_φ (None until trend seeds). */
 final case class HwPoint(key: String, ts: java.sql.Timestamp,
                          value: Double, hw: Option[Double])
 
 /** Streaming twin of the native `holt_winters(value, p, α, β, γ)` window
-  * recurrence ([[graft.functions.WindowIndicators.HoltWinters]]): the
-  * seasonal forecaster at ingestion time — the live fitted level for
-  * run-rate monitors with a known cycle.
-  *
-  * State is p + 2 doubles + a counter per key; the fold mirrors the
-  * Catalyst update trees op-for-op (cold-start zero seasonal, the
-  * two-row level/trend seeding, the `(#observed) mod p` phase clock,
-  * NULL-free event values — a missing observation simply doesn't
-  * arrive and doesn't advance the phase, matching the batch frozen
-  * contract), so replaying a key's events through the batch window
-  * yields BIT-IDENTICAL values — spec-asserted; `q_stream_hw`
-  * oracle-replays the machine. Order contract as in
-  * [[StreamingKalman]]. */
+  * recurrence ([[graft.functions.HoltWinters]]): the seasonal forecaster
+  * at ingestion time — the live fitted level for run-rate monitors with a
+  * known cycle. Both entry points run the function's own update trees
+  * through [[WindowFold]] (order contract there), so they equal the batch
+  * window by construction: cold-start zero seasonal, two-row level/trend
+  * seeding, the `(#observed) mod p` phase clock (a missing observation
+  * doesn't arrive and doesn't advance the phase). `q_stream_hw`
+  * oracle-replays the recurrence. State per key: the function's buffer
+  * row (level, trend, p-slot seasonal array, phase counter, NULL flag),
+  * named `"hw"`. */
 object StreamingHoltWinters {
-
-  private def pm(v: Int, what: String): Double = {
-    require(v >= 1 && v <= 1000, s"$what permille must be in [1,1000], got $v")
-    v / 1000.0
-  }
 
   /** Score every event with its key's running fitted ℓ+b+s (streaming;
     * `transformWithState`, RocksDB-backed). */
   def holtWinters(events: Dataset[HwEvent], period: Int, alphaPm: Int = 300,
-                  betaPm: Int = 200, gammaPm: Int = 300): Dataset[HwPoint] = {
-    require(period >= 2, s"period must be >= 2, got $period")
-    val (a, b, g) = (pm(alphaPm, "alpha"), pm(betaPm, "beta"),
-      pm(gammaPm, "gamma"))
-    import events.sparkSession.implicits._
-    events.groupByKey(_.key)
-      .transformWithState(new HwProcessor(period, a, b, g),
-        TimeMode.None(), OutputMode.Append())
-  }
+                  betaPm: Int = 200, gammaPm: Int = 300): Dataset[HwPoint] =
+    fold(period, alphaPm, betaPm, gammaPm).stream(events)
 
-  /** Batch replay through the IDENTICAL per-key fold — the oracle
-    * gate's entry point. */
+  /** Batch replay through the same fold — the oracle gate's entry point. */
   def holtWintersBatch(events: Dataset[HwEvent], period: Int,
                        alphaPm: Int = 300, betaPm: Int = 200,
-                       gammaPm: Int = 300): Dataset[HwPoint] = {
-    require(period >= 2, s"period must be >= 2, got $period")
-    val (a, b, g) = (pm(alphaPm, "alpha"), pm(betaPm, "beta"),
-      pm(gammaPm, "gamma"))
-    import events.sparkSession.implicits._
-    events.groupByKey(_.key).flatMapGroups { (key, rows) =>
-      scorePath(key, rows, period, a, b, g, empty(period))._2.iterator
-    }
-  }
+                       gammaPm: Int = 300): Dataset[HwPoint] =
+    fold(period, alphaPm, betaPm, gammaPm).batch(events)
 
-  private def empty(p: Int) =
-    HwState(hasLvl = false, hasTrd = false, 0.0, 0.0,
-      Seq.fill(p)(0.0), 0L)
-
-  /** The shared fold, node-for-node with the Catalyst update trees. */
-  private def scorePath(key: String, rows: Iterator[HwEvent], p: Int,
-                        a: Double, b: Double, g: Double,
-                        st0: HwState): (HwState, Seq[HwPoint]) = {
-    var st = st0
-    val out = rows.toSeq.sortBy(e => (e.ts.getTime, e.ts.getNanos, e.seq))
-      .map { e =>
-        val x = e.value
-        val phi = (st.cnt % p).toInt
-        val sPrev = st.seasonal(phi)
-        st =
-          if (!st.hasLvl)
-            st.copy(hasLvl = true, lvl = x - sPrev, cnt = st.cnt + 1)
-          else if (!st.hasTrd)
-            st.copy(hasTrd = true, lvl = x - sPrev,
-              trd = (x - sPrev) - st.lvl, cnt = st.cnt + 1)
-          else {
-            val newLvl = a * (x - sPrev) + (1.0 - a) * (st.lvl + st.trd)
-            st.copy(
-              lvl = newLvl,
-              trd = b * (newLvl - st.lvl) + (1.0 - b) * st.trd,
-              seasonal = st.seasonal.updated(phi,
-                g * (x - (st.lvl + st.trd)) + (1.0 - g) * sPrev),
-              cnt = st.cnt + 1)
-          }
-        HwPoint(key, e.ts, x,
-          if (st.hasTrd) Some((st.lvl + st.trd) + st.seasonal(phi)) else None)
-      }
-    (st, out)
-  }
-
-  private[streaming] class HwProcessor(p: Int, a: Double, b: Double, g: Double)
-      extends StatefulProcessor[String, HwEvent, HwPoint] {
-    @transient private var state: ValueState[HwState] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      state = getHandle.getValueState[HwState](
-        "hw", SparkEncoders.product[HwState], TTLConfig.NONE)
-
-    override def handleInputRows(key: String, rows: Iterator[HwEvent],
-                                 timerValues: TimerValues): Iterator[HwPoint] = {
-      val st0 = if (state.exists()) state.get() else empty(p)
-      val (st, out) = scorePath(key, rows, p, a, b, g, st0)
-      state.update(st)
-      out.iterator
-    }
-  }
+  private def fold(period: Int, alphaPm: Int, betaPm: Int, gammaPm: Int) =
+    WindowFold[HwEvent, HwPoint]("hw",
+      in => HoltWinters(in("value"), Literal(period), Literal(alphaPm),
+        Literal(betaPm), Literal(gammaPm)))(
+      (e, f) => HwPoint(e.key, e.ts, e.value, f))
 }

@@ -1,8 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Dataset, Encoders => SparkEncoders}
-import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TimeMode,
-  TTLConfig, TimerValues, ValueState}
+import graft.functions.Kalman
+import org.apache.spark.sql.Dataset
+import org.apache.spark.sql.catalyst.expressions.Literal
 
 /** Per-key observation for the streaming Kalman level; `seq` is the
   * caller's unique per-key tie-break (ingest offset, event id…),
@@ -10,102 +10,38 @@ import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TimeMode,
 final case class KalmanEvent(key: String, ts: java.sql.Timestamp,
                              value: Double, seq: Long = 0L)
 
-/** The two-scalar local-level filter state. `hasM` is the seed flag
-  * (first observation becomes the level, variance starts at r — the
-  * batch expression's `If(IsNull(m), …)` branches). */
-final case class KalmanState(hasM: Boolean, m: Double, p: Double)
-
 /** One filtered point: `kalman` is the posterior level estimate. */
 final case class KalmanPoint(key: String, ts: java.sql.Timestamp,
                              value: Double, kalman: Double)
 
 /** Streaming twin of the native `kalman(value, q_pm, r_pm)` window
-  * recurrence ([[graft.functions.WindowIndicators.Kalman]]): the
-  * local-level (random-walk + observation noise) filter run at ingestion
-  * time — the live de-noised level behind a drift monitor or a
-  * fair-value stream, available the moment each tick lands instead of at
-  * the next batch window pass.
-  *
-  * State is TWO DOUBLES per key (posterior level m and variance p) —
-  * millions of keys are trivial. The fold arithmetic is the batch update
-  * tree op-for-op (`p⁻ = p + q`, `k = p⁻/(p⁻ + r)`,
-  * `m' = m + k·(x − m)`, `p' = (1 − k)·p⁻`, seed `m = x, p = r`), so
-  * replaying a key's events through the batch window function yields
-  * BIT-IDENTICAL values — the spec asserts it and the `q_stream_kalman`
-  * gate oracle-replays the same machine over the events table.
-  *
-  * Rows inside one micro-batch sort by `(ts, seq)`; cross-batch order is
-  * the stream's order, as with every keyed streaming recurrence here. */
+  * recurrence ([[graft.functions.Kalman]]): the local-level (random-walk
+  * + observation noise) filter at ingestion time — the live de-noised
+  * level behind a drift monitor or a fair-value stream, available the
+  * moment each tick lands. Both entry points run the function's own
+  * update trees (`p⁻ = p + q`, `k = p⁻/(p⁻ + r)`, `m' = m + k·(x − m)`,
+  * `p' = (1 − k)·p⁻`, seed `m = x, p = r`) through [[WindowFold]] (order
+  * contract there), so they equal the batch window by construction;
+  * `q_stream_kalman` oracle-replays the recurrence over the events table.
+  * State per key: the function's buffer row (level m, variance p, NULL
+  * flag), named `"kalman"` — millions of keys are trivial. */
 object StreamingKalman {
-
-  private def pm(v: Int, what: String): Double = {
-    require(v >= 1, s"$what permille must be >= 1, got $v")
-    v / 1000.0
-  }
 
   /** Score every event with its key's running filtered level
     * (streaming; `transformWithState`, RocksDB-backed). q/r are
     * permille ints, the batch literal convention (10/1000 ≡ 0.01/1.0). */
   def kalman(events: Dataset[KalmanEvent], qPm: Int = 10,
-             rPm: Int = 1000): Dataset[KalmanPoint] = {
-    val (q, r) = (pm(qPm, "q"), pm(rPm, "r"))
-    import events.sparkSession.implicits._
-    events.groupByKey(_.key)
-      .transformWithState(new KalmanProcessor(q, r),
-        TimeMode.None(), OutputMode.Append())
-  }
+             rPm: Int = 1000): Dataset[KalmanPoint] =
+    fold(qPm, rPm).stream(events)
 
-  /** Batch replay through the IDENTICAL per-key fold (shared
-    * [[scorePath]]) via `flatMapGroups` — the oracle gate's entry point,
-    * runnable in a plain batch session. */
+  /** Batch replay through the same fold via `flatMapGroups` — the oracle
+    * gate's entry point, runnable in a plain batch session. */
   def kalmanBatch(events: Dataset[KalmanEvent], qPm: Int = 10,
-                  rPm: Int = 1000): Dataset[KalmanPoint] = {
-    val (q, r) = (pm(qPm, "q"), pm(rPm, "r"))
-    import events.sparkSession.implicits._
-    events.groupByKey(_.key).flatMapGroups { (key, rows) =>
-      scorePath(key, rows, q, r, KalmanState(hasM = false, 0.0, 0.0))
-        ._2.iterator
-    }
-  }
+                  rPm: Int = 1000): Dataset[KalmanPoint] =
+    fold(qPm, rPm).batch(events)
 
-  /** The one shared fold: score `rows` (sorted by the (ts, seq)
-    * contract) from `st0`, mirroring the Catalyst update expressions
-    * node-for-node so batch and streaming agree to the last bit. */
-  private def scorePath(key: String, rows: Iterator[KalmanEvent], q: Double,
-                        r: Double,
-                        st0: KalmanState): (KalmanState, Seq[KalmanPoint]) = {
-    var st = st0
-    val out = rows.toSeq.sortBy(e => (e.ts.getTime, e.ts.getNanos, e.seq))
-      .map { e =>
-        st =
-          if (!st.hasM) KalmanState(hasM = true, e.value, r)
-          else {
-            val pPred = st.p + q
-            val k = pPred / (pPred + r)
-            KalmanState(hasM = true,
-              st.m + (k * (e.value - st.m)),
-              (1.0 - k) * pPred)
-          }
-        KalmanPoint(key, e.ts, e.value, st.m)
-      }
-    (st, out)
-  }
-
-  private[streaming] class KalmanProcessor(q: Double, r: Double)
-      extends StatefulProcessor[String, KalmanEvent, KalmanPoint] {
-    @transient private var state: ValueState[KalmanState] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      state = getHandle.getValueState[KalmanState](
-        "kalman", SparkEncoders.product[KalmanState], TTLConfig.NONE)
-
-    override def handleInputRows(key: String, rows: Iterator[KalmanEvent],
-                                 timerValues: TimerValues): Iterator[KalmanPoint] = {
-      val st0 = if (state.exists()) state.get()
-        else KalmanState(hasM = false, 0.0, 0.0)
-      val (st, out) = scorePath(key, rows, q, r, st0)
-      state.update(st)
-      out.iterator
-    }
-  }
+  private def fold(qPm: Int, rPm: Int) =
+    WindowFold[KalmanEvent, KalmanPoint]("kalman",
+      in => Kalman(in("value"), Literal(qPm), Literal(rPm)))(
+      (e, m) => KalmanPoint(e.key, e.ts, e.value, m.get))
 }

@@ -41,6 +41,18 @@ object StreamingLive {
     root
   }
 
+  /** Replay `ticks` through [[StreamingPipeline.indicatorsTws]] in
+    * ascending event-time chunks split at `chunkBoundaries`, one
+    * micro-batch per non-empty chunk, and return the memory sink's rows.
+    *
+    * Timer requirement: the replay runs with no-data micro-batches off,
+    * so an expired TTL timer fires only inside a later DATA batch. The
+    * watermark a chunk advances takes effect in the next batch; a timer
+    * that the final watermark advance should fire therefore needs one
+    * more chunk after it (the gates end with a dedicated boundary chunk
+    * of surviving symbols). Whatever expires only after the last chunk's
+    * own advance is never evicted before the query stops, so its
+    * eviction output is lost. */
   def indicatorsMicroBatch(ticks: Dataset[MarketTick], windowSize: Int,
                            chunkBoundaries: Seq[Timestamp],
                            idleMs: Long = StreamingPipeline.DefaultIdleMs): DataFrame = {
@@ -83,14 +95,11 @@ object StreamingLive {
     // every addData chunk runs a SECOND empty batch (watermark/timer
     // bookkeeping only) that pays the full per-batch fixed cost — a
     // RocksDB instance open+commit per state partition plus incremental
-    // re-planning — and contributes zero output rows here. Timer semantics
-    // are unchanged BECAUSE of the gates' chunk design: expiry is driven
-    // by the watermark a PREVIOUS data chunk advanced, and the dedicated
-    // boundary chunk (only surviving symbols) fires handleExpiredTimer
-    // inside a DATA batch either way; rows are emitted per input row
-    // (not watermark-gated), so empty batches never carried output.
-    // The TTL gate's oracle replay is the regression proof that eviction
-    // still fires.
+    // re-planning — and contributes zero output rows here. Rows are
+    // emitted per input row (not watermark-gated), so empty batches never
+    // carried output; timers keep firing only under the chunk requirement
+    // in this method's scaladoc. The TTL gate's oracle replay is the
+    // regression proof that eviction still fires.
     val noDataKey = "spark.sql.streaming.noDataMicroBatches.enabled"
     val prevNoData = spark.conf.getOption(noDataKey)
     spark.conf.set(noDataKey, "false")

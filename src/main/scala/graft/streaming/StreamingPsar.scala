@@ -1,8 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Dataset, Encoders => SparkEncoders}
-import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TimeMode,
-  TTLConfig, TimerValues, ValueState}
+import graft.functions.Psar
+import org.apache.spark.sql.Dataset
+import org.apache.spark.sql.catalyst.expressions.Literal
 
 /** Per-key bar for the streaming SAR; `seq` is the caller's unique
   * per-key tie-break (ingest offset, event id…), mirroring the batch
@@ -10,127 +10,37 @@ import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TimeMode,
 final case class PsarEvent(key: String, ts: java.sql.Timestamp,
                            high: Double, low: Double, seq: Long = 0L)
 
-/** The eight-scalar Wilder SAR state plus the two seeding flags. */
-final case class PsarState(hasPrev: Boolean, seeded: Boolean,
-                           sar: Double, ep: Double, af: Double, up: Boolean,
-                           ph: Double, pl: Double, p2h: Double, p2l: Double)
-
 /** One scored bar: `psar` is None on each key's first bar. */
 final case class PsarPoint(key: String, ts: java.sql.Timestamp,
                            high: Double, low: Double, psar: Option[Double])
 
 /** Streaming twin of the native `psar(high, low, …)` window recurrence
-  * ([[graft.functions.WindowIndicators.Psar]]): the trailing
-  * stop-and-reverse run at ingestion time — the live trailing-stop /
-  * trend-flip monitor. State is the same eight scalars the batch
-  * expression keeps, one tiny record per key; the fold arithmetic is the
-  * batch update tree op-for-op (candidate parabola, two-prior-bar clamp,
-  * pierce reversal, capped acceleration), so replaying a key's bars
-  * through the batch window function yields BIT-IDENTICAL values — the
-  * spec asserts it and the `q_stream_psar` gate oracle-replays the same
-  * machine over the events table.
-  *
-  * Rows inside one micro-batch sort by `(ts, seq)`; cross-batch order is
-  * the stream's order, as with every keyed streaming recurrence here. */
+  * ([[graft.functions.Psar]]): the trailing stop-and-reverse at ingestion
+  * time — the live trailing-stop / trend-flip monitor. Both entry points
+  * run the function's own update trees (candidate parabola, two-prior-bar
+  * clamp, pierce reversal, capped acceleration) through [[WindowFold]]
+  * (order contract there), so they equal the batch window by
+  * construction; `q_stream_psar` oracle-replays the recurrence over the
+  * events table. State per key: the function's buffer row (the eight SAR
+  * scalars, NULL flag), named `"psar"`. */
 object StreamingPsar {
-
-  private def pm(v: Int, what: String): Double = {
-    require(v >= 1, s"$what permille must be >= 1, got $v")
-    v / 1000.0
-  }
 
   /** Score every bar with its key's running SAR (streaming;
     * `transformWithState`, RocksDB-backed). Factors are permille ints,
     * the batch literal convention (20/20/200 ≡ 0.02/0.02/0.2). */
   def psar(events: Dataset[PsarEvent], af0Pm: Int = 20, stepPm: Int = 20,
-           maxPm: Int = 200): Dataset[PsarPoint] = {
-    val (a, s, m) = (pm(af0Pm, "af0"), pm(stepPm, "step"), pm(maxPm, "max"))
-    import events.sparkSession.implicits._
-    events.groupByKey(_.key)
-      .transformWithState(new PsarProcessor(a, s, m),
-        TimeMode.None(), OutputMode.Append())
-  }
+           maxPm: Int = 200): Dataset[PsarPoint] =
+    fold(af0Pm, stepPm, maxPm).stream(events)
 
-  /** Batch replay through the IDENTICAL per-key fold (shared
-    * [[scorePath]]) via `flatMapGroups` — the oracle gate's entry point,
-    * runnable in a plain batch session (see [[StreamingVol.ewmVolBatch]]
-    * for why `transformWithState` itself can't be). */
+  /** Batch replay through the same fold via `flatMapGroups` — the oracle
+    * gate's entry point, runnable in a plain batch session. */
   def psarBatch(events: Dataset[PsarEvent], af0Pm: Int = 20,
-                stepPm: Int = 20, maxPm: Int = 200): Dataset[PsarPoint] = {
-    val (a, s, m) = (pm(af0Pm, "af0"), pm(stepPm, "step"), pm(maxPm, "max"))
-    import events.sparkSession.implicits._
-    events.groupByKey(_.key).flatMapGroups { (key, rows) =>
-      scorePath(key, rows, a, s, m, emptyState)._2.iterator
-    }
-  }
+                stepPm: Int = 20, maxPm: Int = 200): Dataset[PsarPoint] =
+    fold(af0Pm, stepPm, maxPm).batch(events)
 
-  private val emptyState =
-    PsarState(hasPrev = false, seeded = false, 0.0, 0.0, 0.0, up = true,
-      0.0, 0.0, 0.0, 0.0)
-
-  /** The one shared fold: score `rows` (sorted by the (ts, seq)
-    * contract) from `st0`. Arithmetic mirrors the Catalyst update
-    * expressions node-for-node — candidate, clamp, reversal, EP advance,
-    * acceleration — so batch and streaming agree to the last bit. */
-  private def scorePath(key: String, rows: Iterator[PsarEvent], af0: Double,
-                        step: Double, afMax: Double,
-                        st0: PsarState): (PsarState, Seq[PsarPoint]) = {
-    var st = st0
-    val out = rows.toSeq.sortBy(e => (e.ts.getTime, e.ts.getNanos, e.seq))
-      .map { e =>
-        val (h, l) = (e.high, e.low)
-        if (!st.hasPrev) {
-          st = PsarState(hasPrev = true, seeded = false, 0.0, 0.0, af0,
-            up = true, h, l, h, l)
-          PsarPoint(key, e.ts, h, l, None)
-        } else if (!st.seeded) {
-          val up = h >= st.ph
-          val sar = if (up) st.pl else st.ph
-          val ep = if (up) h else l
-          st = PsarState(hasPrev = true, seeded = true, sar, ep, af0, up,
-            h, l, st.ph, st.pl)
-          PsarPoint(key, e.ts, h, l, Some(sar))
-        } else {
-          val cand = st.sar + st.af * (st.ep - st.sar)
-          var (sar, ep, af, up) = (0.0, st.ep, st.af, st.up)
-          if (st.up) {
-            val clamped = math.min(math.min(cand, st.pl), st.p2l)
-            if (l < clamped) { sar = st.ep; up = false; ep = l; af = af0 }
-            else {
-              sar = clamped
-              if (h > st.ep) { ep = h; af = math.min(afMax, st.af + step) }
-            }
-          } else {
-            val clamped = math.max(math.max(cand, st.ph), st.p2h)
-            if (h > clamped) { sar = st.ep; up = true; ep = h; af = af0 }
-            else {
-              sar = clamped
-              if (l < st.ep) { ep = l; af = math.min(afMax, st.af + step) }
-            }
-          }
-          st = PsarState(hasPrev = true, seeded = true, sar, ep, af, up,
-            h, l, st.ph, st.pl)
-          PsarPoint(key, e.ts, h, l, Some(sar))
-        }
-      }
-    (st, out)
-  }
-
-  private[streaming] class PsarProcessor(af0: Double, step: Double,
-                                         afMax: Double)
-      extends StatefulProcessor[String, PsarEvent, PsarPoint] {
-    @transient private var state: ValueState[PsarState] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      state = getHandle.getValueState[PsarState](
-        "psar", SparkEncoders.product[PsarState], TTLConfig.NONE)
-
-    override def handleInputRows(key: String, rows: Iterator[PsarEvent],
-                                 timerValues: TimerValues): Iterator[PsarPoint] = {
-      val st = if (state.exists()) state.get() else emptyState
-      val (st1, out) = scorePath(key, rows, af0, step, afMax, st)
-      state.update(st1)
-      out.iterator
-    }
-  }
+  private def fold(af0Pm: Int, stepPm: Int, maxPm: Int) =
+    WindowFold[PsarEvent, PsarPoint]("psar",
+      in => Psar(in("high"), in("low"), Literal(af0Pm), Literal(stepPm),
+        Literal(maxPm)))(
+      (e, sar) => PsarPoint(e.key, e.ts, e.high, e.low, sar))
 }

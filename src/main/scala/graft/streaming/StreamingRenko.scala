@@ -1,16 +1,13 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Dataset, Encoders => SparkEncoders}
-import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TimeMode,
-  TimerValues, TTLConfig, ValueState}
+import graft.functions.Renko
+import org.apache.spark.sql.Dataset
+import org.apache.spark.sql.catalyst.expressions.Literal
 
 /** Per-key event for the Renko tracker; `seq` is the caller's unique
   * per-key tie-break (see [[VolEvent]]). */
 final case class RenkoEvent(key: String, ts: java.sql.Timestamp,
                             value: Double, seq: Long = 0L)
-
-/** One double of grid state per key. */
-final case class RenkoState(lvl: Double, seeded: Boolean)
 
 /** One scored point: the value and its Renko brick level. */
 final case class RenkoPoint(key: String, ts: java.sql.Timestamp,
@@ -18,73 +15,26 @@ final case class RenkoPoint(key: String, ts: java.sql.Timestamp,
 
 /** Streaming twin of the native `renko(value, brick_centi)` window
   * recurrence ([[graft.functions.Renko]]): the brick level advances only
-  * on full-brick travel, at ingest time — the live chop-vs-move monitor
-  * whose batch replay is bit-identical to the window expression (the
-  * update is the same sign/floor/multiply ladder in the same IEEE
-  * order; asserted in the spec).
-  *
-  * State is ONE DOUBLE per key plus the seed flag. No reference analog
-  * (beyond-reference; the reference's streaming layer is
-  * indicator-only). */
+  * on full-brick travel, at ingest time — the live chop-vs-move monitor.
+  * Both entry points run the function's own update trees through
+  * [[WindowFold]] (order contract there), so they equal the batch window
+  * by construction. State per key: the function's buffer row (level,
+  * NULL flag), named `"renko"`. No reference analog (beyond-reference;
+  * the reference's streaming layer is indicator-only). */
 object StreamingRenko {
 
   /** Score every event with its key's running brick level; `brickCenti`
     * is the brick size in hundredths (the batch literal convention). */
-  def renko(events: Dataset[RenkoEvent], brickCenti: Int): Dataset[RenkoPoint] = {
-    require(brickCenti >= 1, s"brick_centi must be >= 1, got $brickCenti")
-    import events.sparkSession.implicits._
-    events.groupByKey(_.key)
-      .transformWithState(new RenkoProcessor(brickCenti),
-        TimeMode.None(), OutputMode.Append())
-  }
+  def renko(events: Dataset[RenkoEvent], brickCenti: Int): Dataset[RenkoPoint] =
+    fold(brickCenti).stream(events)
 
-  /** Batch replay through the IDENTICAL fold via `flatMapGroups` (the
-    * [[StreamingVol.ewmVolBatch]] pattern — the oracle gate's entry
-    * point). */
-  def renkoBatch(events: Dataset[RenkoEvent], brickCenti: Int): Dataset[RenkoPoint] = {
-    require(brickCenti >= 1, s"brick_centi must be >= 1, got $brickCenti")
-    val brick = brickCenti / 100.0
-    import events.sparkSession.implicits._
-    events.groupByKey(_.key).flatMapGroups { (key, rows) =>
-      scorePath(key, rows, brick, RenkoState(0.0, seeded = false))._2.iterator
-    }
-  }
+  /** Batch replay through the same fold via `flatMapGroups` — the oracle
+    * gate's entry point. */
+  def renkoBatch(events: Dataset[RenkoEvent], brickCenti: Int): Dataset[RenkoPoint] =
+    fold(brickCenti).batch(events)
 
-  /** The one shared fold — the [[graft.functions.Renko]] update tree
-    * op-for-op: `lvl + ((sign(Δ) · ⌊|Δ|/brick⌋) · brick)`. */
-  private def scorePath(key: String, rows: Iterator[RenkoEvent], brick: Double,
-                        st0: RenkoState): (RenkoState, Seq[RenkoPoint]) = {
-    var st = st0
-    val out = rows.toSeq
-      .sortBy(e => (e.ts.getTime, e.ts.getNanos, e.seq, e.value)).map { e =>
-        val lvl =
-          if (!st.seeded) e.value
-          else {
-            val diff = e.value - st.lvl
-            st.lvl + ((math.signum(diff) *
-              math.floor(math.abs(diff) / brick)) * brick)
-          }
-        st = RenkoState(lvl, seeded = true)
-        RenkoPoint(key, e.ts, e.value, lvl)
-      }
-    (st, out)
-  }
-
-  private[streaming] class RenkoProcessor(brickCenti: Int)
-      extends StatefulProcessor[String, RenkoEvent, RenkoPoint] {
-    @transient private var state: ValueState[RenkoState] = _
-    private val brick = brickCenti / 100.0
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      state = getHandle.getValueState[RenkoState](
-        "renko", SparkEncoders.product[RenkoState], TTLConfig.NONE)
-
-    override def handleInputRows(key: String, rows: Iterator[RenkoEvent],
-                                 timerValues: TimerValues): Iterator[RenkoPoint] = {
-      val st = if (state.exists()) state.get() else RenkoState(0.0, seeded = false)
-      val (st1, out) = scorePath(key, rows, brick, st)
-      state.update(st1)
-      out.iterator
-    }
-  }
+  private def fold(brickCenti: Int) =
+    WindowFold[RenkoEvent, RenkoPoint]("renko",
+      in => Renko(in("value"), Literal(brickCenti)))(
+      (e, lvl) => RenkoPoint(e.key, e.ts, e.value, lvl.get))
 }

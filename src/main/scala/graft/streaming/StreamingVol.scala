@@ -1,8 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Dataset, Encoders => SparkEncoders}
-import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TimeMode,
-  TimerValues, TTLConfig, ValueState}
+import graft.functions.EwmCov
+import org.apache.spark.sql.Dataset
+import org.apache.spark.sql.catalyst.expressions.Literal
 
 /** Per-key event carrying the monitored series value; `seq` is the
   * caller's unique per-key tie-break (ingest offset, event id…), the
@@ -10,9 +10,6 @@ import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TimeMode,
   * [[CusumEvent]]. */
 final case class VolEvent(key: String, ts: java.sql.Timestamp,
                           value: Double, seq: Long = 0L)
-
-/** One double of EWMA second-moment state per key. */
-final case class VolState(cov: Double, seeded: Boolean)
 
 /** One scored point: the running EWMA variance and volatility (√). */
 final case class VolPoint(key: String, ts: java.sql.Timestamp, value: Double,
@@ -22,77 +19,29 @@ final case class VolPoint(key: String, ts: java.sql.Timestamp, value: Double,
   * ([[graft.functions.EwmCov]]): the RiskMetrics zero-mean EWMA variance
   * `v_t = λ·v_{t−1} + (1−λ)·x_t²`, seeded by the first value's square —
   * the ingestion-path volatility monitor that flags a hot series the
-  * moment it arrives instead of at the next batch risk report.
-  *
-  * State is ONE DOUBLE per key (plus the seed flag) — no history buffer
-  * at all, so millions of keys cost nothing. The arithmetic is the exact
-  * batch expression tree (`λ·prev + (1−λ)·x·x`, same IEEE order, same
-  * permille-derived λ), so replaying a key's events through the batch
-  * window function yields bit-identical values — asserted in the spec.
-  * Rows inside one micro-batch sort by `(ts, seq)`; cross-batch order is
-  * the stream's order, as with every keyed streaming recurrence.
-  *
-  * No reference analog (the reference's streaming layer is
-  * indicator-only; beyond-reference op for the risk surface). */
+  * moment it arrives instead of at the next batch risk report. Both entry
+  * points run `ewmcov(value, value, λ)`'s own update trees through
+  * [[WindowFold]] (order contract there), so they equal the batch window
+  * by construction. State per key: the function's buffer row (variance,
+  * NULL flag), named `"ewmvol"` — millions of keys cost nothing. No
+  * reference analog (the reference's streaming layer is indicator-only;
+  * beyond-reference op for the risk surface). */
 object StreamingVol {
 
   /** Score every event with its key's running EWMA variance/volatility.
     * `lambdaPm` is the permille λ (940 → RiskMetrics daily 0.94), the
     * same literal convention as the batch `ewmcov`. */
-  def ewmVol(events: Dataset[VolEvent], lambdaPm: Int): Dataset[VolPoint] = {
-    require(lambdaPm >= 1 && lambdaPm < 1000,
-      s"lambda_pm must be in [1, 999], got $lambdaPm")
-    import events.sparkSession.implicits._
-    events.groupByKey(_.key)
-      .transformWithState(new VolProcessor(lambdaPm),
-        TimeMode.None(), OutputMode.Append())
-  }
+  def ewmVol(events: Dataset[VolEvent], lambdaPm: Int): Dataset[VolPoint] =
+    fold(lambdaPm).stream(events)
 
-  /** Batch replay through the IDENTICAL per-key fold ([[scorePath]] is
-    * shared with the streaming processor) via `flatMapGroups` — no state
+  /** Batch replay through the same fold via `flatMapGroups` — no state
     * store needed, so it runs in any plain batch session (the oracle
-    * gate's entry point; `transformWithState`'s batch mode needs the
-    * streaming state-store coordinator a batch session doesn't have). */
-  def ewmVolBatch(events: Dataset[VolEvent], lambdaPm: Int): Dataset[VolPoint] = {
-    require(lambdaPm >= 1 && lambdaPm < 1000,
-      s"lambda_pm must be in [1, 999], got $lambdaPm")
-    val lam = lambdaPm / 1000.0
-    import events.sparkSession.implicits._
-    events.groupByKey(_.key).flatMapGroups { (key, rows) =>
-      scorePath(key, rows, lam, VolState(0.0, seeded = false))._2.iterator
-    }
-  }
+    * gate's entry point). */
+  def ewmVolBatch(events: Dataset[VolEvent], lambdaPm: Int): Dataset[VolPoint] =
+    fold(lambdaPm).batch(events)
 
-  /** The one shared fold: score `rows` (sorted by the (ts, seq) contract)
-    * from `st0`, returning the final state and the scored points. */
-  private def scorePath(key: String, rows: Iterator[VolEvent], lam: Double,
-                        st0: VolState): (VolState, Seq[VolPoint]) = {
-    var st = st0
-    val out = rows.toSeq
-      .sortBy(e => (e.ts.getTime, e.ts.getNanos, e.seq, e.value)).map { e =>
-        val xx = e.value * e.value
-        val cov = if (!st.seeded) xx else lam * st.cov + (1.0 - lam) * xx
-        st = VolState(cov, seeded = true)
-        VolPoint(key, e.ts, e.value, cov, math.sqrt(cov))
-      }
-    (st, out)
-  }
-
-  private[streaming] class VolProcessor(lambdaPm: Int)
-      extends StatefulProcessor[String, VolEvent, VolPoint] {
-    @transient private var state: ValueState[VolState] = _
-    private val lam = lambdaPm / 1000.0
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      state = getHandle.getValueState[VolState](
-        "ewmvol", SparkEncoders.product[VolState], TTLConfig.NONE)
-
-    override def handleInputRows(key: String, rows: Iterator[VolEvent],
-                                 timerValues: TimerValues): Iterator[VolPoint] = {
-      val st = if (state.exists()) state.get() else VolState(0.0, seeded = false)
-      val (st1, out) = scorePath(key, rows, lam, st)
-      state.update(st1)
-      out.iterator
-    }
-  }
+  private def fold(lambdaPm: Int) =
+    WindowFold[VolEvent, VolPoint]("ewmvol",
+      in => EwmCov(in("value"), in("value"), Literal(lambdaPm)))(
+      (e, v) => VolPoint(e.key, e.ts, e.value, v.get, math.sqrt(v.get)))
 }
