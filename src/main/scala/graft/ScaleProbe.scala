@@ -136,7 +136,7 @@ object ScaleProbe {
     // round-12: the flooded-corpus cluster path — star edges per bucket
     // are O(members) where the all-pairs graph is O(members²), so this
     // should stay near-linear on the replica corpus that pushes
-    // q_dedup_components to 0.64 (see PairMassProbe / pairmass.json)
+    // q_dedup_components to 0.64 (see SCALE.md §Round-12 / pairmass.json)
     "q_dedup_star",
     // round-13: the keep composite now DEFAULTS to star edges — its 30×
     // exponent is the acceptance bar for the new default (verdict #1:

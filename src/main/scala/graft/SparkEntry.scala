@@ -2,13 +2,16 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.functions.FinancialFunctions
+import graft.gates.Gates
 
 /** Driver contract — the correctness surface of the engine.
   *
-  * Every entry in [[queries]] has a DuckDB-oracle twin in [[oracleSql]]
-  * (same column names, same row set, bit-identical values where floating
-  * point is involved — the indicator recurrences replicate the reference's
-  * FP operation order, see [[graft.functions.IndicatorMath]]).
+  * Each gate is one [[gates.Gate]] in its family file under `graft/gates`:
+  * the Spark query and its DuckDB oracle side by side (same column names,
+  * same row set, bit-identical values where floating point is involved —
+  * the indicator recurrences replicate the reference's FP operation order,
+  * see [[graft.functions.IndicatorMath]]). [[queries]] and [[oracleSql]]
+  * are the name-keyed views of [[gates.Gates.all]].
   *
   * Scale notes (the sf0.01 gate runs local; the design targets 100 TB):
   *  - indicator queries shuffle once on the window partition key and sort
@@ -46,14233 +49,19 @@ object SparkEntry {
     spark.conf.set(LoadedDirKey, dir)
   }
 
-  private def q(spark: SparkSession, dir: String, sql: String): DataFrame = {
-    load(spark, dir); spark.sql(sql)
-  }
-
-  /** Daily per-supplier OHLC bars from lineitem ticks, shared by the bar
-    * gates. The tick tie-break packs (l_orderkey, l_linenumber) into ONE
-    * BIGINT (linenumber ∈ [1,7], so ×8 is order-isomorphic) — a single
-    * atomic ordering column keeps the min_by/max_by buffers
-    * hash-aggregable (see `Bars.ohlc`'s SortAggregate note). */
-  private def dailyBars(s: SparkSession): DataFrame = {
-    import org.apache.spark.sql.functions.expr
-    operators.Bars.ohlc(
-      s.table("lineitem").withColumn("l_tick",
-        expr("l_orderkey * 8 + l_linenumber")),
-      "l_quantity", "l_extendedprice", Seq("l_suppkey"), "l_shipdate",
-      Seq("l_tick"), volScale = 2)
-  }
-
-  /** [[dailyBars]] pre-clustered by supplier RANGE for the window-consuming
-    * gates (r15, guide §2.4 "remove shuffles outright"): every one of these
-    * gates windows by `l_suppkey` and ends in a global
-    * `ORDER BY l_suppkey, …`, which used to plan THREE exchanges — the agg
-    * hash exchange, a second hash exchange for the window, and a final
-    * range exchange whose bound-sampling job recomputes the window stage.
-    * `RangePartitioning(l_suppkey)` satisfies BOTH the window's
-    * ClusteredDistribution (equal keys co-locate) and the final sort's
-    * OrderedDistribution (prefix rule), so the window and the global sort
-    * reuse ONE range exchange planned below the window: 3 exchanges → 2,
-    * the bars frame crosses the wire once instead of twice, and the range
-    * sampler now samples the (reusable) agg shuffle output instead of
-    * re-running the window. Same row set, same total output order; the
-    * map-side tick→bar collapse of the agg exchange is untouched, so the
-    * shape is strictly better at any scale (skew bound unchanged — the
-    * window already required per-supplier locality). Gates that re-key
-    * downstream (q_event_study, q_ic, q_rbo, q_corr_matrix, q_theil_sen,
-    * q_kendall) keep plain [[dailyBars]]. */
-  private def dailyBarsW(s: SparkSession): DataFrame = {
-    import org.apache.spark.sql.functions.col
-    dailyBars(s).repartitionByRange(col("l_suppkey"))
-  }
-
-  // Shared window spec: partition by supplier, total order within partition.
-  private val W =
-    "PARTITION BY l_suppkey ORDER BY l_shipdate, l_orderkey, l_linenumber"
-  private val duckW =
-    s"($W ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)"
-
-  /** DuckDB sequential-fold EMA over a prefix list — bit-identical to the
-    * Ema expression's update order. */
-  // NB: literals must be ::DOUBLE — DuckDB otherwise does DECIMAL division,
-  // which is not the IEEE quotient Spark computes.
-  private def duckEma(list: String, n: Int): String =
-    s"list_reduce($list, (acc,x) -> (2.0::DOUBLE/${n + 1}.0::DOUBLE)*x + (1.0::DOUBLE - 2.0::DOUBLE/${n + 1}.0::DOUBLE)*acc)"
-
-  /** Replays Bars.ohlc on lineitem: open/close picked by rank over the
-    * unique tick order (min_by/max_by equivalent — (l_orderkey,
-    * l_linenumber) is unique), scaled-BIGINT volume sum. Shared by the
-    * bars gate and the ATR gate that consumes the bars. */
-  private val duckBarsSql =
-    """SELECT l_suppkey, l_shipdate,
-      |  max(CASE WHEN ra = 1 THEN x END) AS open,
-      |  max(x) AS high, min(x) AS low,
-      |  max(CASE WHEN rd = 1 THEN x END) AS close,
-      |  CAST(sum(vi) AS DOUBLE) / 100.0::DOUBLE AS volume,
-      |  count(*) AS n_ticks
-      |FROM (
-      |  SELECT l_suppkey, l_shipdate, CAST(l_quantity AS DOUBLE) AS x,
-      |    CAST(round(CAST(l_extendedprice AS DOUBLE) * 100.0::DOUBLE) AS BIGINT) AS vi,
-      |    row_number() OVER (PARTITION BY l_suppkey, l_shipdate
-      |      ORDER BY l_orderkey, l_linenumber) AS ra,
-      |    row_number() OVER (PARTITION BY l_suppkey, l_shipdate
-      |      ORDER BY l_orderkey DESC, l_linenumber DESC) AS rd
-      |  FROM lineitem) t
-      |GROUP BY l_suppkey, l_shipdate""".stripMargin
-
-  /** Shared Black–Scholes staged CTE chain (o → n) for the two pricing
-    * oracles — mirrors Pricing.stage column-for-column; √(2π) embedded
-    * as the Scala-folded literal. Callers append their own `h` CTE and
-    * final select (the WITH opens with bars upstream). */
-  private lazy val duckBsPrefix: String = {
-    val s2pi = operators.Pricing.sqrt2PiLiteral
-    s"""), o AS (
-       |  SELECT l_suppkey, l_shipdate, close AS s_px, open AS k_px,
-       |    greatest(0.05::DOUBLE, (high - low) / close) AS sg
-       |  FROM bars
-       |), c AS (
-       |  SELECT l_suppkey, l_shipdate, s_px, k_px, sg,
-       |    (round(ln(s_px / k_px), 10) + 0.0::DOUBLE) AS lnsk,
-       |    (round(exp(-(0.02::DOUBLE * 0.25::DOUBLE)), 10)
-       |      + 0.0::DOUBLE) AS disc
-       |  FROM o
-       |), e AS (
-       |  SELECT *, ((lnsk + ((0.02::DOUBLE + ((sg * sg) / 2.0::DOUBLE))
-       |      * 0.25::DOUBLE)) / (sg * sqrt(0.25::DOUBLE))) AS d1
-       |  FROM c
-       |), f AS (
-       |  SELECT *, (d1 - sg * sqrt(0.25::DOUBLE)) AS d2 FROM e
-       |), t AS (
-       |  SELECT *,
-       |    (1.0::DOUBLE / (1.0::DOUBLE + 0.2316419::DOUBLE * abs(d1)))
-       |      AS t1,
-       |    (round(exp(-(abs(d1) * abs(d1)) / 2.0::DOUBLE), 10)
-       |      + 0.0::DOUBLE) / $s2pi::DOUBLE AS phi1,
-       |    (1.0::DOUBLE / (1.0::DOUBLE + 0.2316419::DOUBLE * abs(d2)))
-       |      AS t2,
-       |    (round(exp(-(abs(d2) * abs(d2)) / 2.0::DOUBLE), 10)
-       |      + 0.0::DOUBLE) / $s2pi::DOUBLE AS phi2
-       |  FROM f
-       |), n AS (
-       |  SELECT *,
-       |    1.0::DOUBLE - phi1 * (((((1.330274429::DOUBLE * t1
-       |      + -1.821255978::DOUBLE) * t1 + 1.781477937::DOUBLE) * t1
-       |      + -0.356563782::DOUBLE) * t1 + 0.319381530::DOUBLE) * t1)
-       |      AS nabs1,
-       |    1.0::DOUBLE - phi2 * (((((1.330274429::DOUBLE * t2
-       |      + -1.821255978::DOUBLE) * t2 + 1.781477937::DOUBLE) * t2
-       |      + -0.356563782::DOUBLE) * t2 + 0.319381530::DOUBLE) * t2)
-       |      AS nabs2
-       |  FROM t""".stripMargin
-  }
-
-  /** The struct accumulator for the prefix list `(p,g,l,c)` — p is the raw
-    * value column wrapped per row. */
-  private def rsiStructList(valueCol: String): String =
-    s"list(struct_pack(p := $valueCol, g := 0.0::DOUBLE, l := 0.0::DOUBLE, c := 0.0::DOUBLE)) OVER w"
-
-  /** DuckDB sequential RSI fold replicating Rsi's update order (seed =
-    * simple mean of first n gains/losses, then Wilder
-    * avg' = avg*(1-1/n) + g*(1/n)). */
-  private def rsiFold(listExpr: String, n: Int): String = {
-    val nd = s"$n.0::DOUBLE"
-    s"""list_reduce($listExpr, (acc, e) -> CASE
-       |      WHEN acc.c + 1.0 < $nd THEN struct_pack(p := e.p, g := acc.g + greatest(e.p - acc.p, 0.0::DOUBLE), l := acc.l + greatest(acc.p - e.p, 0.0::DOUBLE), c := acc.c + 1.0)
-       |      WHEN acc.c + 1.0 = $nd THEN struct_pack(p := e.p, g := (acc.g + greatest(e.p - acc.p, 0.0::DOUBLE))/$nd, l := (acc.l + greatest(acc.p - e.p, 0.0::DOUBLE))/$nd, c := acc.c + 1.0)
-       |      ELSE struct_pack(p := e.p, g := acc.g*(1.0::DOUBLE - 1.0::DOUBLE/$nd) + greatest(e.p - acc.p, 0.0::DOUBLE)*(1.0::DOUBLE/$nd), l := acc.l*(1.0::DOUBLE - 1.0::DOUBLE/$nd) + greatest(acc.p - e.p, 0.0::DOUBLE)*(1.0::DOUBLE/$nd), c := acc.c + 1.0)
-       |    END)""".stripMargin
-  }
-
-  /** DuckDB Wilder-smoothing fold over a prefix list (NULLs filtered —
-    * the frozen≡filtered equivalence): each element struct carries its
-    * own one-element state (`a := x, c := 1`) so the seedless reduce's
-    * first-element seed IS the correct fold start; transitions mirror
-    * the native `Wilder` update expressions op-for-op. Returns the
-    * folded struct (NULL on an empty list). */
-  private def wilderFold(listExpr: String, n: Int): String = {
-    val nd = s"$n.0::DOUBLE"
-    s"""(CASE WHEN len(list_filter($listExpr, v -> v IS NOT NULL)) > 0 THEN
-       |  list_reduce(list_transform(list_filter($listExpr, v -> v IS NOT NULL),
-       |    v -> struct_pack(x := v, a := v, c := 1.0::DOUBLE)),
-       |  (acc, e) -> CASE
-       |    WHEN acc.c + 1.0 < $nd THEN struct_pack(x := e.x, a := acc.a + e.x, c := acc.c + 1.0)
-       |    WHEN acc.c + 1.0 = $nd THEN struct_pack(x := e.x, a := (acc.a + e.x)/$nd, c := acc.c + 1.0)
-       |    ELSE struct_pack(x := e.x, a := acc.a*(1.0::DOUBLE - 1.0::DOUBLE/$nd) + e.x*(1.0::DOUBLE/$nd), c := acc.c + 1.0)
-       |  END) END)""".stripMargin
-  }
-
-  private def wilderEval(s: String, n: Int): String =
-    s"(CASE WHEN $s IS NOT NULL AND $s.c >= $n.0::DOUBLE THEN $s.a END)"
-
-  private def rsiEval(s: String, n: Int): String =
-    s"CASE WHEN $s.c >= $n.0::DOUBLE THEN CASE WHEN $s.l = 0.0 THEN 100.0::DOUBLE ELSE 100.0 - (100.0 / (1.0 + $s.g/$s.l)) END END"
-
-  private def duckRsiSql(table: String, valueCol: String, n: Int,
-                         keyCols: String, extraFirst: String = "",
-                         extraRest: String = ""): String = {
-    s"""WITH base AS (
-       |  SELECT $keyCols$extraFirst,
-       |    ${rsiStructList(valueCol)} AS xs
-       |  FROM $table
-       |  WINDOW w AS $duckW
-       |), red AS (
-       |  SELECT $keyCols$extraRest, ${rsiFold("xs", n)} AS s
-       |  FROM base
-       |)
-       |SELECT $keyCols$extraRest, ${rsiEval("s", n)} AS rsi_$n
-       |FROM red""".stripMargin
-  }
-
-  /** DuckDB sequential-fold SMA over a sliding last-n list — replicates the
-    * Sma expression's left-to-right buffer fold (DuckDB's windowed avg uses
-    * pairwise summation, which differs in the last bits). */
-  private def duckSma(col: String, n: Int, alias: String): String =
-    s"""CASE WHEN count($col) OVER ${alias}_w = $n
-       |  THEN list_reduce(list($col) OVER ${alias}_w, (a,b) -> a + b) / $n.0::DOUBLE END""".stripMargin.replace("\n", " ")
-
-  /** Session-scoped root for q_winnow_ingest_persisted's on-disk index
-    * (ADVICE r14): ONE temp root per JVM, swept by a shutdown hook
-    * (the StreamingLive.ckptRoot pattern), instead of a fresh leaked
-    * directory per invocation — Bench's min-of-2/min-of-3 reruns reuse
-    * the written index so only the cold parquet probe join is timed. */
-  private lazy val winnowIdxRoot: java.nio.file.Path = {
-    val root = java.nio.file.Files.createTempDirectory("graft_winnow_idx")
-    Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      try {
-        import scala.jdk.CollectionConverters._
-        java.nio.file.Files.walk(root).iterator().asScala.toSeq.reverse
-          .foreach(p => java.nio.file.Files.deleteIfExists(p))
-      } catch { case _: Throwable => }
-    }))
-    root
-  }
-
-  /** corpus dir → its written winnow-index parquet path (built once per
-    * session per corpus; the per-invocation measured plan is the probe). */
-  private val winnowIdxDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** Flagship query on sf=0.001; driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame =
     queries("q_indicators_combined")(spark, "/root/testdata/sf0.001")
 
-  /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
-    Map[String, (SparkSession, String) => DataFrame](
-    // ---- A1-A4: the four indicator window functions -----------------------
-    "q_sma" -> ((s, d) => q(s, d,
-      s"""SELECT l_orderkey, l_linenumber, sma(l_quantity, 5) OVER w AS sma_5
-         |FROM lineitem WINDOW w AS ($W)
-         |ORDER BY l_orderkey, l_linenumber""".stripMargin)),
-    "q_rolling_median" -> ((s, d) => {
-      // robust moving average: trailing-9 exact median (odd n — element-
-      // exact, no interpolation), same supplier partitioning as the
-      // indicator gates, NULL until the frame fills
-      load(s, d)
-      import org.apache.spark.sql.functions.col
-      operators.Rolling.median(s.table("lineitem"), "l_quantity",
-          Seq("l_suppkey"), Seq("l_shipdate", "l_orderkey", "l_linenumber"), n = 9)
-        .select(col("l_orderkey"), col("l_linenumber"), col("roll_median"))
-        .orderBy(col("l_orderkey"), col("l_linenumber"))
-    }),
-    "q_bollinger" -> ((s, d) => {
-      // mean ± 2σ envelope; σ as the explicit two-means IEEE tree so the
-      // oracle replays it bit-for-bit on the integer-valued quantity
-      load(s, d)
-      import org.apache.spark.sql.functions.col
-      operators.Rolling.bollinger(s.table("lineitem"), "l_quantity",
-          Seq("l_suppkey"), Seq("l_shipdate", "l_orderkey", "l_linenumber"),
-          n = 20, k = 2.0)
-        .select(col("l_orderkey"), col("l_linenumber"),
-          col("bb_mid"), col("bb_upper"), col("bb_lower"))
-        .orderBy(col("l_orderkey"), col("l_linenumber"))
-    }),
-    "q_obv" -> ((s, d) => {
-      // Granville volume-flow signal: quantity as the price series,
-      // 2-dp extendedprice as the volume; scaled-BIGINT running sum
-      load(s, d)
-      import org.apache.spark.sql.functions.col
-      operators.Rolling.obv(s.table("lineitem"), "l_quantity",
-          "l_extendedprice", Seq("l_suppkey"),
-          Seq("l_shipdate", "l_orderkey", "l_linenumber"), volScale = 2)
-        .select(col("l_orderkey"), col("l_linenumber"), col("obv"))
-        .orderBy(col("l_orderkey"), col("l_linenumber"))
-    }),
-    "q_stochastic" -> ((s, d) => {
-      // Lane momentum oscillator over the same supplier series as the
-      // indicator gates; %D's explicit lag-sum keeps it engine-exact
-      load(s, d)
-      import org.apache.spark.sql.functions.col
-      operators.Rolling.stochastic(s.table("lineitem"), "l_quantity",
-          Seq("l_suppkey"), Seq("l_shipdate", "l_orderkey", "l_linenumber"), n = 14)
-        .select(col("l_orderkey"), col("l_linenumber"), col("pct_k"), col("pct_d"))
-        .orderBy(col("l_orderkey"), col("l_linenumber"))
-    }),
-    "q_json_extract" -> ((s, d) => {
-      // semi-structured relational surface: the event log's JSON props
-      // column parsed BOTH ways Spark offers — path extraction
-      // (get_json_object) and schema'd parsing (from_json) — with a
-      // cross-check that the two parsers agree on every row
-      load(s, d)
-      import org.apache.spark.sql.functions.{col, count, from_json, get_json_object, lit, max => maxf, min => minf, sum, when}
-      val ev = readEventsNanos(s, d)
-      ev.select(col("event_type"),
-          get_json_object(col("props"), "$.k").cast("long").as("k1"),
-          from_json(col("props"), org.apache.spark.sql.types.StructType(Seq(
-            org.apache.spark.sql.types.StructField("k",
-              org.apache.spark.sql.types.LongType)))).getField("k").as("k2"))
-        .groupBy(col("event_type"))
-        .agg(count(lit(1)).as("n"),
-          sum(col("k1")).as("sum_k"),
-          minf(col("k1")).as("min_k"),
-          maxf(col("k1")).as("max_k"),
-          sum(when(col("k1") === col("k2"), 1L).otherwise(0L)).as("n_consistent"))
-        .orderBy(col("event_type"))
-    }),
-    "q_vwap" -> ((s, d) => {
-      // trailing-20 VWAP; decimal-exact sums, one IEEE division — the
-      // composition that pairs price and volume the way the indicator
-      // family pairs price alone
-      load(s, d)
-      import org.apache.spark.sql.functions.col
-      operators.Rolling.vwap(s.table("lineitem"), "l_extendedprice",
-          "l_quantity", Seq("l_suppkey"),
-          Seq("l_shipdate", "l_orderkey", "l_linenumber"), n = 20)
-        .select(col("l_orderkey"), col("l_linenumber"), col("vwap"))
-        .orderBy(col("l_orderkey"), col("l_linenumber"))
-    }),
-    "q_ohlc_bars" -> ((s, d) => {
-      // batch OHLC resample: per-supplier daily bars from tick-level rows;
-      // open/close are exact min_by/max_by selections on the tick order,
-      // volume is the scaled-BIGINT money sum
-      load(s, d)
-      import org.apache.spark.sql.functions.col
-      dailyBars(s).orderBy(col("l_suppkey"), col("l_shipdate"))
-    }),
-    "q_awesome" -> ((s, d) => {
-      // Awesome Oscillator (5/34 midpoint SMAs) — two BIGINT sums of
-      // h+l, two divisions, one subtract
-      load(s, d)
-      import org.apache.spark.sql.functions.col
-      operators.Rolling.awesomeOscillator(dailyBarsW(s), "high", "low",
-          Seq("l_suppkey"), Seq("l_shipdate"))
-        .select(col("l_suppkey"), col("l_shipdate"), col("ao"))
-        .orderBy(col("l_suppkey"), col("l_shipdate"))
-    }),
-    "q_chandelier" -> ((s, d) => {
-      // Chandelier volatility stops (22-bar extremes ∓ 3·ATR₂₂) —
-      // exact selections over the proven ATR tree
-      load(s, d)
-      import org.apache.spark.sql.functions.col
-      operators.Rolling.chandelierExit(dailyBarsW(s), "high", "low",
-          "close", Seq("l_suppkey"), Seq("l_shipdate"))
-        .select(col("l_suppkey"), col("l_shipdate"),
-          col("chandelier_long"), col("chandelier_short"))
-        .orderBy(col("l_suppkey"), col("l_shipdate"))
-    }),
-    "q_mass_index" -> ((s, d) => {
-      // Mass Index (EMA9 range bulge, 25-bar sum) — layered native EMAs,
-      // ordered frame-list fold for the double-valued sum
-      load(s, d)
-      import org.apache.spark.sql.functions.col
-      operators.Rolling.massIndex(dailyBarsW(s), "high", "low",
-          Seq("l_suppkey"), Seq("l_shipdate"))
-        .select(col("l_suppkey"), col("l_shipdate"), col("mass_index"))
-        .orderBy(col("l_suppkey"), col("l_shipdate"))
-    }),
-    "q_kst" -> ((s, d) => {
-      // Know Sure Thing (10/15/20/30 ROCs, 10/10/10/15 SMAs, 1:2:3:4) —
-      // four ROC branches folded in order, one blend tree
-      load(s, d)
-      import org.apache.spark.sql.functions.col
-      operators.Rolling.kst(dailyBarsW(s), "close",
-          Seq("l_suppkey"), Seq("l_shipdate"))
-        .select(col("l_suppkey"), col("l_shipdate"), col("kst"))
-        .orderBy(col("l_suppkey"), col("l_shipdate"))
-    }),
-    "q_coppock" -> ((s, d) => {
-      // Coppock curve (wma10 of roc14 + roc11) — position-weighted
-      // frame-list fold over the ROC sum
-      load(s, d)
-      import org.apache.spark.sql.functions.col
-      operators.Rolling.coppock(dailyBarsW(s), "close",
-          Seq("l_suppkey"), Seq("l_shipdate"))
-        .select(col("l_suppkey"), col("l_shipdate"), col("coppock"))
-        .orderBy(col("l_suppkey"), col("l_shipdate"))
-    }),
-    "q_stream_psar" -> ((s, d) => {
-      // the StreamingPsar processor in BATCH mode (the q_stream_vol
-      // pattern): per-user trailing stop-and-reverse on the event score
-      // (degenerate high = low = value bars) — a driver-graded
-      // batch/streaming parity proof for the SAR machine
-      load(s, d)
-      import s.implicits._
-      import org.apache.spark.sql.functions.{col, expr, timestamp_micros, unix_micros}
-      val ev = readEventsNanos(s, d).select(
-          col("user_id").cast("string").as("key"),
-          timestamp_micros(expr("ts DIV 1000")).as("ts"),
-          col("value").as("high"), col("value").as("low"),
-          col("event_id").as("seq"))
-        .as[graft.streaming.PsarEvent]
-      graft.streaming.StreamingPsar.psarBatch(ev).toDF()
-        .select(col("key"), unix_micros(col("ts")).as("ts_us"),
-          col("high").as("value"), col("psar"))
-        .orderBy(col("key"), col("ts_us"), col("value"))
-    }),
-    "q_stream_renko" -> ((s, d) => {
-      // the StreamingRenko processor in BATCH mode (the q_stream_vol /
-      // q_stream_psar pattern): per-user live brick level over the event
-      // score — batch/streaming parity proof for the grid machine
-      load(s, d)
-      import s.implicits._
-      import org.apache.spark.sql.functions.{col, expr, timestamp_micros, unix_micros}
-      val ev = readEventsNanos(s, d).select(
-          col("user_id").cast("string").as("key"),
-          timestamp_micros(expr("ts DIV 1000")).as("ts"),
-          col("value"),
-          col("event_id").as("seq"))
-        .as[graft.streaming.RenkoEvent]
-      graft.streaming.StreamingRenko.renkoBatch(ev, brickCenti = 2000).toDF()
-        .select(col("key"), unix_micros(col("ts")).as("ts_us"),
-          col("value"), col("renko"))
-        .orderBy(col("key"), col("ts_us"), col("value"))
-    }),
-    "q_market_beta" -> ((s, d) => {
-      // each supplier's 20-bar rolling beta/correlation vs the equal-
-      // weight market index (per-date BIGINT sum of all closes, broadcast
-      // back) — the cross-sectional risk decomposition
-      load(s, d)
-      import org.apache.spark.sql.functions.col
-      operators.Rolling.marketBeta(dailyBarsW(s), "close",
-          Seq("l_suppkey"), Seq("l_shipdate"), n = 20)
-        .select(col("l_suppkey"), col("l_shipdate"),
-          col("mkt_corr"), col("mkt_beta"))
-        .orderBy(col("l_suppkey"), col("l_shipdate"))
-    }),
-    "q_psar" -> ((s, d) => {
-      // Parabolic SAR (0.02/0.02/0.2) over daily bars — the native
-      // stop-and-reverse recurrence, NULL on each key's first bar
-      load(s, d)
-      import org.apache.spark.sql.functions.col
-      operators.Rolling.parabolicSar(dailyBarsW(s), "high", "low",
-          Seq("l_suppkey"), Seq("l_shipdate"))
-        .select(col("l_suppkey"), col("l_shipdate"), col("psar"))
-        .orderBy(col("l_suppkey"), col("l_shipdate"))
-    }),
-    "q_supertrend" -> ((s, d) => {
-      // SuperTrend (ATR₁₀ bands, ×3): the native ratchet/flip recurrence
-      // over caller-built basic bands — close >= line reads as up-trend
-      load(s, d)
-      import org.apache.spark.sql.functions.col
-      operators.Rolling.superTrend(dailyBarsW(s), "high", "low", "close",
-          Seq("l_suppkey"), Seq("l_shipdate"), n = 10, mult = 3)
-        .select(col("l_suppkey"), col("l_shipdate"), col("supertrend"))
-        .orderBy(col("l_suppkey"), col("l_shipdate"))
-    }),
-    "q_wma" -> ((s, d) => {
-      // linear weighted MA (n=10) over daily closes — the two-running-sum
-      // O(1)/row formulation, BIGINT-exact
-      load(s, d)
-      import org.apache.spark.sql.functions.col
-      operators.Rolling.wma(dailyBarsW(s), "close",
-          Seq("l_suppkey"), Seq("l_shipdate"), n = 10)
-        .select(col("l_suppkey"), col("l_shipdate"), col("wma"))
-        .orderBy(col("l_suppkey"), col("l_shipdate"))
-    }),
-    "q_hull_ma" -> ((s, d) => {
-      // Hull MA (n=16): lag-corrected smooth — exact inner WMAs, ordered
-      // frame-list fold for the tiny outer pass
-      load(s, d)
-      import org.apache.spark.sql.functions.col
-      operators.Rolling.hullMa(dailyBarsW(s), "close",
-          Seq("l_suppkey"), Seq("l_shipdate"), n = 16)
-        .select(col("l_suppkey"), col("l_shipdate"), col("hma"))
-        .orderBy(col("l_suppkey"), col("l_shipdate"))
-    }),
-    "q_heikin_ashi" -> ((s, d) => {
-      // Heikin-Ashi smoothed bars — the ha_open recurrence run as the
-      // native EMA (α=½) over the seeded lagged-ha_close series
-      load(s, d)
-      import org.apache.spark.sql.functions.col
-      operators.Rolling.heikinAshi(dailyBarsW(s), "open", "high", "low",
-          "close", Seq("l_suppkey"), Seq("l_shipdate"))
-        .select(col("l_suppkey"), col("l_shipdate"), col("ha_open"),
-          col("ha_high"), col("ha_low"), col("ha_close"))
-        .orderBy(col("l_suppkey"), col("l_shipdate"))
-    }),
-    "q_ppo" -> ((s, d) => {
-      // percentage price oscillator (12/26) over daily closes — MACD
-      // normalized by the slow EMA, both native recurrences in one pass
-      load(s, d)
-      import org.apache.spark.sql.functions.col
-      operators.Rolling.ppo(dailyBarsW(s), "close",
-          Seq("l_suppkey"), Seq("l_shipdate"))
-        .select(col("l_suppkey"), col("l_shipdate"), col("ppo"))
-        .orderBy(col("l_suppkey"), col("l_shipdate"))
-    }),
-    "q_trix" -> ((s, d) => {
-      // TRIX (n=15): rate of change of the triple-smoothed EMA — three
-      // native-recurrence layers sharing one sort
-      load(s, d)
-      import org.apache.spark.sql.functions.col
-      operators.Rolling.trix(dailyBarsW(s), "close",
-          Seq("l_suppkey"), Seq("l_shipdate"), n = 15)
-        .select(col("l_suppkey"), col("l_shipdate"), col("trix"))
-        .orderBy(col("l_suppkey"), col("l_shipdate"))
-    }),
-    "q_vortex" -> ((s, d) => {
-      // Vortex VI+/VI− over daily bars (n=14): directional movement over
-      // range, scaled-BIGINT sums, one IEEE division per line
-      load(s, d)
-      import org.apache.spark.sql.functions.col
-      operators.Rolling.vortex(dailyBarsW(s), "high", "low", "close",
-          Seq("l_suppkey"), Seq("l_shipdate"), n = 14)
-        .select(col("l_suppkey"), col("l_shipdate"),
-          col("vi_plus"), col("vi_minus"))
-        .orderBy(col("l_suppkey"), col("l_shipdate"))
-    }),
-    "q_cmo" -> ((s, d) => {
-      // Chande momentum oscillator over daily closes (n=14): RSI's
-      // unsmoothed cousin, exact BIGINT up/down sums
-      load(s, d)
-      import org.apache.spark.sql.functions.col
-      operators.Rolling.cmo(dailyBarsW(s), "close",
-          Seq("l_suppkey"), Seq("l_shipdate"), n = 14)
-        .select(col("l_suppkey"), col("l_shipdate"), col("cmo"))
-        .orderBy(col("l_suppkey"), col("l_shipdate"))
-    }),
-    "q_ultimate" -> ((s, d) => {
-      // Ultimate oscillator (7/14/28 blend) over daily bars — three
-      // frames, one exchange, 4:2:1 fixed blend tree
-      load(s, d)
-      import org.apache.spark.sql.functions.col
-      operators.Rolling.ultimateOscillator(dailyBarsW(s), "high", "low",
-          "close", Seq("l_suppkey"), Seq("l_shipdate"))
-        .select(col("l_suppkey"), col("l_shipdate"), col("ultimate"))
-        .orderBy(col("l_suppkey"), col("l_shipdate"))
-    }),
-    "q_dpo" -> ((s, d) => {
-      // Detrended price oscillator (n=20, displacement 11) over daily
-      // closes — cycle isolation via the displaced trailing mean
-      load(s, d)
-      import org.apache.spark.sql.functions.col
-      operators.Rolling.dpo(dailyBarsW(s), "close",
-          Seq("l_suppkey"), Seq("l_shipdate"), n = 20)
-        .select(col("l_suppkey"), col("l_shipdate"), col("dpo"))
-        .orderBy(col("l_suppkey"), col("l_shipdate"))
-    }),
-    "q_pivot_points" -> ((s, d) => {
-      // classic floor-trader pivot ladder from the prior daily bar —
-      // five fixed IEEE trees over three lags, no frames
-      load(s, d)
-      import org.apache.spark.sql.functions.col
-      operators.Rolling.pivotPoints(dailyBarsW(s), "high", "low", "close",
-          Seq("l_suppkey"), Seq("l_shipdate"))
-        .select(col("l_suppkey"), col("l_shipdate"),
-          col("pp"), col("r1"), col("s1"), col("r2"), col("s2"))
-        .orderBy(col("l_suppkey"), col("l_shipdate"))
-    }),
-    "q_atr" -> ((s, d) => {
-      // Wilder's average true range (SMA form) over the daily bars the
-      // resampler produces — the bar-level volatility companion to the
-      // tick-level indicator family
-      load(s, d)
-      import org.apache.spark.sql.functions.col
-      val bars = dailyBarsW(s)
-      operators.Rolling.atr(bars, "high", "low", "close",
-          Seq("l_suppkey"), Seq("l_shipdate"), n = 14)
-        .select(col("l_suppkey"), col("l_shipdate"), col("atr"))
-        .orderBy(col("l_suppkey"), col("l_shipdate"))
-    }),
-    "q_stream_vol" -> ((s, d) => {
-      // the StreamingVol transformWithState processor in BATCH mode
-      // (the q_stream_indicators pattern): per-user EWMA variance of the
-      // event score, oracle-replayed by the pure recurrence — a
-      // driver-graded batch/streaming parity proof
-      load(s, d)
-      import s.implicits._
-      import org.apache.spark.sql.functions.{col, expr, timestamp_micros, unix_micros}
-      val ev = readEventsNanos(s, d).select(
-          col("user_id").cast("string").as("key"),
-          timestamp_micros(expr("ts DIV 1000")).as("ts"),
-          col("value"),
-          col("event_id").as("seq"))
-        .as[graft.streaming.VolEvent]
-      graft.streaming.StreamingVol.ewmVolBatch(ev, lambdaPm = 940).toDF()
-        .select(col("key"), unix_micros(col("ts")).as("ts_us"),
-          col("value"), col("ewmVar").as("ewm_var"))
-        .orderBy(col("key"), col("ts_us"), col("value"))
-    }),
-    "q_elder_ray" -> ((s, d) => {
-      // Elder Ray bull/bear power over the daily bars — the native EMA
-      // recurrence bound once, extremes measured against it
-      load(s, d)
-      import org.apache.spark.sql.functions.col
-      operators.Rolling.elderRay(dailyBarsW(s), "high", "low", "close",
-          Seq("l_suppkey"), Seq("l_shipdate"), n = 13)
-        .select(col("l_suppkey"), col("l_shipdate"),
-          col("bull_power"), col("bear_power"))
-        .orderBy(col("l_suppkey"), col("l_shipdate"))
-    }),
-    "q_force_index" -> ((s, d) => {
-      // Force Index: volume-weighted close change through the native
-      // EMA; the frozen-NULL contract absorbs each key's first row
-      load(s, d)
-      import org.apache.spark.sql.functions.col
-      operators.Rolling.forceIndex(dailyBarsW(s), "close", "volume",
-          Seq("l_suppkey"), Seq("l_shipdate"), n = 13)
-        .select(col("l_suppkey"), col("l_shipdate"), col("force_index"))
-        .orderBy(col("l_suppkey"), col("l_shipdate"))
-    }),
-    "q_cmf" -> ((s, d) => {
-      // Chaikin Money Flow over the daily bars: signed money-flow volume
-      // vs total volume on a trailing 20-bar frame — both sums are
-      // in-order frame-list folds, never a windowed float sum
-      load(s, d)
-      import org.apache.spark.sql.functions.col
-      operators.Rolling.cmf(dailyBarsW(s), "high", "low", "close", "volume",
-          Seq("l_suppkey"), Seq("l_shipdate"), n = 20)
-        .select(col("l_suppkey"), col("l_shipdate"), col("cmf"))
-        .orderBy(col("l_suppkey"), col("l_shipdate"))
-    }),
-    "q_adl" -> ((s, d) => {
-      // Accumulation/Distribution line: BIGINT cumsum of 2-dp-quantized
-      // money-flow volume (the obv discipline) — exact in any engine
-      load(s, d)
-      import org.apache.spark.sql.functions.col
-      operators.Rolling.adl(dailyBarsW(s), "high", "low", "close", "volume",
-          Seq("l_suppkey"), Seq("l_shipdate"))
-        .select(col("l_suppkey"), col("l_shipdate"), col("adl"))
-        .orderBy(col("l_suppkey"), col("l_shipdate"))
-    }),
-    "q_chaikin_osc" -> ((s, d) => {
-      // Chaikin oscillator: native ema(adl,3) − ema(adl,10) over the
-      // exact ADL cumsum — one exchange, shared window spec
-      load(s, d)
-      import org.apache.spark.sql.functions.col
-      operators.Rolling.chaikinOsc(dailyBarsW(s), "high", "low", "close",
-          "volume", Seq("l_suppkey"), Seq("l_shipdate"))
-        .select(col("l_suppkey"), col("l_shipdate"), col("adl"),
-          col("chaikin_osc"))
-        .orderBy(col("l_suppkey"), col("l_shipdate"))
-    }),
-    "q_ulcer" -> ((s, d) => {
-      // Ulcer index: RMS of 14-bar trailing-high drawdowns — window-over-
-      // window with the ordered frame-list fold for the square sum
-      load(s, d)
-      import org.apache.spark.sql.functions.col
-      operators.Rolling.ulcerIndex(dailyBarsW(s), "close",
-          Seq("l_suppkey"), Seq("l_shipdate"), n = 14)
-        .select(col("l_suppkey"), col("l_shipdate"), col("ulcer"))
-        .orderBy(col("l_suppkey"), col("l_shipdate"))
-    }),
-    "q_eom" -> ((s, d) => {
-      // Ease of Movement: midpoint move × range / volume, 14-bar SMA via
-      // the ordered frame-list fold; zero-volume bars NULL by contract
-      load(s, d)
-      import org.apache.spark.sql.functions.col
-      operators.Rolling.easeOfMovement(dailyBarsW(s), "high", "low",
-          "volume", Seq("l_suppkey"), Seq("l_shipdate"), n = 14)
-        .select(col("l_suppkey"), col("l_shipdate"), col("eom"))
-        .orderBy(col("l_suppkey"), col("l_shipdate"))
-    }),
-    "q_bop" -> ((s, d) => {
-      // Balance of Power: (close−open)/(high−low) smoothed 14 bars —
-      // per-bar IEEE tree + ordered frame-list fold
-      load(s, d)
-      import org.apache.spark.sql.functions.col
-      operators.Rolling.balanceOfPower(dailyBarsW(s), "open", "high",
-          "low", "close", Seq("l_suppkey"), Seq("l_shipdate"), n = 14)
-        .select(col("l_suppkey"), col("l_shipdate"), col("bop"))
-        .orderBy(col("l_suppkey"), col("l_shipdate"))
-    }),
-    "q_kama" -> ((s, d) => {
-      // Kaufman adaptive MA: efficiency-ratio α fed to the NATIVE
-      // var_ema recurrence; oracle is a WITH RECURSIVE state replay
-      load(s, d)
-      import org.apache.spark.sql.functions.col
-      operators.Rolling.kama(dailyBarsW(s), "close",
-          Seq("l_suppkey"), Seq("l_shipdate"), n = 10, fast = 2, slow = 30)
-        .select(col("l_suppkey"), col("l_shipdate"), col("kama"))
-        .orderBy(col("l_suppkey"), col("l_shipdate"))
-    }),
-    "q_volume_index" -> ((s, d) => {
-      // NVI/PVI compound-growth lines via the NATIVE runprod recurrence
-      // over conditional return factors; oracle is a WITH RECURSIVE
-      // dual-state product replay
-      load(s, d)
-      import org.apache.spark.sql.functions.col
-      operators.Rolling.volumeIndexes(dailyBarsW(s), "close", "volume",
-          Seq("l_suppkey"), Seq("l_shipdate"))
-        .select(col("l_suppkey"), col("l_shipdate"), col("nvi"), col("pvi"))
-        .orderBy(col("l_suppkey"), col("l_shipdate"))
-    }),
-    "q_equity_curve" -> ((s, d) => {
-      // generalized equity curve under a LONG/SHORT mean-reversion
-      // position (prior close vs prior 10-bar SMA, ±1/0) — the
-      // strategy-agnostic runprod compounding core
-      load(s, d)
-      import org.apache.spark.sql.expressions.Window
-      import org.apache.spark.sql.functions.{col, lag, lit, when}
-      val w = Window.partitionBy(col("l_suppkey")).orderBy(col("l_shipdate"))
-      val withSma = dailyBarsW(s).select(col("*"),
-        functions.FinancialFunctions.sma(col("close"), 10).over(w).as("__s10"))
-      // stage the two lags once (each inlined reference would expand to
-      // its own window expression — 4 copies of each lag in `pos`)
-      val lagged = withSma.select(col("*"),
-        lag(col("close"), 1).over(w).as("__pc"),
-        lag(col("__s10"), 1).over(w).as("__ps"))
-      val (pc, ps) = (col("__pc"), col("__ps"))
-      val pos = when(pc.isNotNull && ps.isNotNull && pc < ps, lit(1.0))
-        .when(pc.isNotNull && ps.isNotNull && pc > ps, lit(-1.0))
-        .otherwise(lit(0.0))
-      val posed = lagged.withColumn("position", pos)
-        .drop("__s10", "__pc", "__ps")
-      operators.Signals.equityCurve(posed, "l_suppkey", Seq("l_shipdate"),
-          "close", "position")
-        .select(col("l_suppkey"), col("l_shipdate"), col("position"),
-          col("equity"))
-        .orderBy(col("l_suppkey"), col("l_shipdate"))
-    }),
-    "q_backtest" -> ((s, d) => {
-      // vectorized 5/10 MA-crossover backtest: lookahead-free position
-      // from the PRIOR bar's SMAs, equity via the native runprod chain —
-      // a million-ticker backtest as one declarative job
-      load(s, d)
-      import org.apache.spark.sql.functions.col
-      operators.Signals.backtestMaCrossover(dailyBarsW(s), "l_suppkey",
-          Seq("l_shipdate"), "close", shortWindow = 5, longWindow = 10)
-        .select(col("l_suppkey"), col("l_shipdate"), col("position"),
-          col("equity"))
-        .orderBy(col("l_suppkey"), col("l_shipdate"))
-    }),
-    "q_drawdown_episodes" -> ((s, d) => {
-      // per-supplier drawdown-episode table (gaps-and-islands on the
-      // exact integer underwater flag): worst-episodes risk report rows
-      load(s, d)
-      import org.apache.spark.sql.functions.col
-      operators.Rolling.drawdownEpisodes(dailyBarsW(s), "close",
-          Seq("l_suppkey"), "l_shipdate")
-        .orderBy(col("l_suppkey"), col("start"))
-    }),
-    "q_renko" -> ((s, d) => {
-      // Renko brick level (brick 5.0) via the native renko recurrence;
-      // oracle is a WITH RECURSIVE grid-walk replay
-      load(s, d)
-      import org.apache.spark.sql.functions.col
-      operators.Rolling.renkoLevel(dailyBarsW(s), "close",
-          Seq("l_suppkey"), Seq("l_shipdate"), brickCenti = 500)
-        .select(col("l_suppkey"), col("l_shipdate"), col("renko"))
-        .orderBy(col("l_suppkey"), col("l_shipdate"))
-    }),
-    "q_fractals" -> ((s, d) => {
-      // Williams fractal swing points: strict ±2-bar extremes — pure
-      // comparisons, one window pass, NULL on plateaus and edges
-      load(s, d)
-      import org.apache.spark.sql.functions.col
-      operators.Rolling.fractals(dailyBarsW(s), "high", "low",
-          Seq("l_suppkey"), Seq("l_shipdate"), wings = 2)
-        .select(col("l_suppkey"), col("l_shipdate"),
-          col("fractal_high"), col("fractal_low"))
-        .orderBy(col("l_suppkey"), col("l_shipdate"))
-    }),
-    "q_event_study" -> ((s, d) => {
-      // event study: mean forward return 1-3 bars after down days vs the
-      // all-bars baseline — exact scaled-BIGINT sums on 10-dp returns
-      load(s, d)
-      import org.apache.spark.sql.functions.col
-      val rets = operators.Rolling.logReturns(dailyBars(s), "close",
-          Seq("l_suppkey"), Seq("l_shipdate"))
-        .withColumn("sig", col("ret_log") < 0.0)
-      operators.Signals.eventStudy(rets, "ret_log", "sig",
-          Seq("l_suppkey"), Seq("l_shipdate"), maxHorizon = 3)
-        .orderBy(col("horizon"))
-    }),
-    "q_holt" -> ((s, d) => {
-      // Holt level+trend one-step-ahead forecast of daily closes
-      // (α=0.3, β=0.2 as permille literals) — the native recurrence.
-      // Oracle-hard since r7: a WITH RECURSIVE level/trend replay
-      // (DuckDB 1.0's list_reduce mis-evaluates the equivalent nested
-      // struct lambda from ~30 elements on — NOTES.md)
-      load(s, d)
-      import org.apache.spark.sql.functions.col
-      import org.apache.spark.sql.expressions.Window
-      val w = Window.partitionBy(col("l_suppkey")).orderBy(col("l_shipdate"))
-      dailyBarsW(s)
-        .select(col("l_suppkey"), col("l_shipdate"),
-          FinancialFunctions.holt(col("close"), 300, 200).over(w)
-            .as("forecast"))
-        .orderBy(col("l_suppkey"), col("l_shipdate"))
-    }),
-    "q_kalman" -> ((s, d) => {
-      // local-level Kalman filtered level of daily closes (q/r = 0.01:
-      // q_pm=10, r_pm=1000) — native recursive window expression
-      // (WindowIndicators.Kalman); oracle is a WITH RECURSIVE (m, p)
-      // state replay, the q_holt precedent.
-      load(s, d)
-      import org.apache.spark.sql.functions.col
-      import org.apache.spark.sql.expressions.Window
-      val w = Window.partitionBy(col("l_suppkey")).orderBy(col("l_shipdate"))
-      dailyBarsW(s)
-        .select(col("l_suppkey"), col("l_shipdate"),
-          FinancialFunctions.kalman(col("close"), 10, 1000).over(w)
-            .as("level"))
-        .orderBy(col("l_suppkey"), col("l_shipdate"))
-    }),
-    "q_garch" -> ((s, d) => {
-      // GARCH(1,1) conditional volatility of daily simple returns
-      // (ω=2e-6, α=0.1, β=0.85 as ppm/permille literals). The first
-      // bar's NULL return exercises the frozen-state NULL contract;
-      // oracle is a WITH RECURSIVE (ret, σ²) replay.
-      load(s, d)
-      import org.apache.spark.sql.functions.{col, lag, lit}
-      import org.apache.spark.sql.expressions.Window
-      val w = Window.partitionBy(col("l_suppkey")).orderBy(col("l_shipdate"))
-      dailyBarsW(s)
-        .select(col("l_suppkey"), col("l_shipdate"),
-          ((col("close") / lag(col("close"), 1).over(w)) - lit(1.0)).as("ret"))
-        .select(col("l_suppkey"), col("l_shipdate"),
-          FinancialFunctions.garch(col("ret"), 2, 100, 850).over(w)
-            .as("cond_vol"))
-        .orderBy(col("l_suppkey"), col("l_shipdate"))
-    }),
-    "q_candles" -> ((s, d) => {
-      // candlestick pattern flags over daily bars — pure per-row/one-lag
-      // comparisons, exact anywhere
-      load(s, d)
-      import org.apache.spark.sql.functions.col
-      operators.Signals.candlePatterns(dailyBarsW(s), "open", "high",
-          "low", "close", Seq("l_suppkey"), Seq("l_shipdate"))
-        .select(col("l_suppkey"), col("l_shipdate"), col("doji"),
-          col("hammer"), col("bullish_engulfing"), col("bearish_engulfing"))
-        .orderBy(col("l_suppkey"), col("l_shipdate"))
-    }),
-    "q_perf_summary" -> ((s, d) => {
-      // per-supplier performance summary over the full log-return
-      // series (annualized by sqrt(252)): the portfolio screen
-      load(s, d)
-      import org.apache.spark.sql.functions.col
-      val rets = operators.Rolling.logReturns(dailyBarsW(s), "close",
-        Seq("l_suppkey"), Seq("l_shipdate"))
-      operators.Rolling.perfSummary(rets, "ret_log",
-          Seq("l_suppkey"), Seq("l_shipdate"),
-          annualize = math.sqrt(252.0))
-        .orderBy(col("l_suppkey"))
-    }),
-    "q_hist_var" -> ((s, d) => {
-      // rolling historical VaR (exact 10% quantile) + discrete-tail ES
-      // (mean of the 2 worst of 20 log returns)
-      load(s, d)
-      import org.apache.spark.sql.functions.col
-      val rets = operators.Rolling.logReturns(dailyBarsW(s), "close",
-        Seq("l_suppkey"), Seq("l_shipdate"))
-      operators.Rolling.historicalVar(rets, "ret_log",
-          Seq("l_suppkey"), Seq("l_shipdate"), n = 20, alpha = 0.1)
-        .select(col("l_suppkey"), col("l_shipdate"),
-          col("var_alpha"), col("es_alpha"))
-        .orderBy(col("l_suppkey"), col("l_shipdate"))
-    }),
-    "q_realized_vol" -> ((s, d) => {
-      // log returns (source-rounded ln) → 20-bar realized volatility,
-      // annualized by sqrt(252) — the risk-metric composition
-      load(s, d)
-      import org.apache.spark.sql.functions.col
-      val rets = operators.Rolling.logReturns(dailyBarsW(s), "close",
-        Seq("l_suppkey"), Seq("l_shipdate"))
-      operators.Rolling.realizedVol(rets, "ret_log",
-          Seq("l_suppkey"), Seq("l_shipdate"), n = 20,
-          annualize = math.sqrt(252.0))
-        .select(col("l_suppkey"), col("l_shipdate"), col("ret_log"),
-          col("rvol"))
-        .orderBy(col("l_suppkey"), col("l_shipdate"))
-    }),
-    "q_aroon" -> ((s, d) => {
-      // Aroon trend-age lines over daily bars (n=25) — pure extreme
-      // POSITIONS, integer arithmetic, most-recent tie convention
-      load(s, d)
-      import org.apache.spark.sql.functions.col
-      operators.Rolling.aroon(dailyBarsW(s), "high", "low",
-          Seq("l_suppkey"), Seq("l_shipdate"), n = 25)
-        .select(col("l_suppkey"), col("l_shipdate"),
-          col("aroon_up"), col("aroon_down"))
-        .orderBy(col("l_suppkey"), col("l_shipdate"))
-    }),
-    "q_mfi" -> ((s, d) => {
-      // Money Flow Index (volume-weighted RSI, n=14 flow-bearing bars)
-      // — signed flows fold in window order, flat bars carry no flow
-      load(s, d)
-      import org.apache.spark.sql.functions.col
-      operators.Rolling.mfi(dailyBarsW(s), "high", "low", "close", "volume",
-          Seq("l_suppkey"), Seq("l_shipdate"), n = 14)
-        .select(col("l_suppkey"), col("l_shipdate"), col("mfi"))
-        .orderBy(col("l_suppkey"), col("l_shipdate"))
-    }),
-    "q_cci" -> ((s, d) => {
-      // Commodity Channel Index over the daily bars (n=20) — fold-exact
-      // frame mean and mean absolute deviation, NULL on flat frames
-      load(s, d)
-      import org.apache.spark.sql.functions.col
-      operators.Rolling.cci(dailyBarsW(s), "high", "low", "close",
-          Seq("l_suppkey"), Seq("l_shipdate"), n = 20)
-        .select(col("l_suppkey"), col("l_shipdate"), col("cci"))
-        .orderBy(col("l_suppkey"), col("l_shipdate"))
-    }),
-    "q_ichimoku" -> ((s, d) => {
-      // Ichimoku base lines over the daily bars (9/26/52) — exact window
-      // extremes + IEEE halvings + shifts; no recurrence anywhere
-      load(s, d)
-      import org.apache.spark.sql.functions.col
-      operators.Rolling.ichimoku(dailyBarsW(s), "high", "low", "close",
-          Seq("l_suppkey"), Seq("l_shipdate"))
-        .select(col("l_suppkey"), col("l_shipdate"), col("tenkan"),
-          col("kijun"), col("senkou_a"), col("senkou_b"), col("chikou"))
-        .orderBy(col("l_suppkey"), col("l_shipdate"))
-    }),
-    "q_adx" -> ((s, d) => {
-      // Wilder's Average Directional Index over the daily bars — three
-      // native wilder() smoothings (TR, ±DM) + DX + a fourth smoothing,
-      // all sharing one (supplier, date) window spec
-      load(s, d)
-      import org.apache.spark.sql.functions.col
-      val bars = dailyBarsW(s)
-      operators.Rolling.adx(bars, "high", "low", "close",
-          Seq("l_suppkey"), Seq("l_shipdate"), n = 14)
-        .select(col("l_suppkey"), col("l_shipdate"),
-          col("di_plus"), col("di_minus"), col("adx"))
-        .orderBy(col("l_suppkey"), col("l_shipdate"))
-    }),
-    "q_roc" -> ((s, d) => {
-      // 12-back rate of change (momentum) over the supplier series
-      load(s, d)
-      import org.apache.spark.sql.functions.col
-      operators.Rolling.roc(s.table("lineitem"), "l_quantity",
-          Seq("l_suppkey"), Seq("l_shipdate", "l_orderkey", "l_linenumber"),
-          n = 12)
-        .select(col("l_orderkey"), col("l_linenumber"), col("roc"))
-        .orderBy(col("l_orderkey"), col("l_linenumber"))
-    }),
-    "q_donchian" -> ((s, d) => {
-      // trailing-20 Donchian breakout channel
-      load(s, d)
-      import org.apache.spark.sql.functions.col
-      operators.Rolling.donchian(s.table("lineitem"), "l_quantity",
-          Seq("l_suppkey"), Seq("l_shipdate", "l_orderkey", "l_linenumber"),
-          n = 20)
-        .select(col("l_orderkey"), col("l_linenumber"),
-          col("dc_upper"), col("dc_lower"), col("dc_mid"))
-        .orderBy(col("l_orderkey"), col("l_linenumber"))
-    }),
-    "q_williams_r" -> ((s, d) => {
-      // Williams %R over the same frame the stochastic gate uses — the
-      // mirrored oscillator, scaled to [-100, 0]
-      load(s, d)
-      import org.apache.spark.sql.functions.col
-      operators.Rolling.williamsR(s.table("lineitem"), "l_quantity",
-          Seq("l_suppkey"), Seq("l_shipdate", "l_orderkey", "l_linenumber"),
-          n = 14)
-        .select(col("l_orderkey"), col("l_linenumber"), col("will_r"))
-        .orderBy(col("l_orderkey"), col("l_linenumber"))
-    }),
-    "q_drawdown" -> ((s, d) => {
-      // running peak + peak-to-trough drawdown per supplier series
-      load(s, d)
-      import org.apache.spark.sql.functions.col
-      operators.Rolling.drawdown(s.table("lineitem"), "l_quantity",
-          Seq("l_suppkey"), Seq("l_shipdate", "l_orderkey", "l_linenumber"))
-        .select(col("l_orderkey"), col("l_linenumber"),
-          col("peak"), col("drawdown"))
-        .orderBy(col("l_orderkey"), col("l_linenumber"))
-    }),
-    "q_rolling_corr" -> ((s, d) => {
-      // trailing-20 Pearson corr + OLS beta between quantity and price —
-      // all five window sums are exact scaled BIGINTs, one IEEE tree
-      load(s, d)
-      import org.apache.spark.sql.functions.col
-      operators.Rolling.corrBeta(s.table("lineitem"), "l_quantity",
-          "l_extendedprice", Seq("l_suppkey"),
-          Seq("l_shipdate", "l_orderkey", "l_linenumber"), n = 20,
-          xScale = 0, yScale = 2)
-        .select(col("l_orderkey"), col("l_linenumber"),
-          col("roll_corr"), col("roll_beta"))
-        .orderBy(col("l_orderkey"), col("l_linenumber"))
-    }),
-    "q_weighted_median" -> ((s, d) => {
-      // exact quantity-weighted median price per supplier — integer
-      // cumulative weights, one keyed window pass, crossing-row pick
-      load(s, d)
-      import org.apache.spark.sql.functions.col
-      operators.Stats.weightedMedian(s.table("lineitem"), Seq("l_suppkey"),
-          "l_extendedprice", "l_quantity")
-        .orderBy(col("l_suppkey"))
-    }),
-    "q_dd_duration" -> ((s, d) => {
-      // time under water per supplier price series — integer rows since
-      // the running high-water mark, the recovery companion to q_drawdown
-      load(s, d)
-      import org.apache.spark.sql.functions.col
-      operators.Rolling.drawdownDuration(s.table("lineitem"),
-          "l_extendedprice", Seq("l_suppkey"),
-          Seq("l_shipdate", "l_orderkey", "l_linenumber"))
-        .select(col("l_orderkey"), col("l_linenumber"), col("dd_duration"))
-        .orderBy(col("l_orderkey"), col("l_linenumber"))
-    }),
-    "q_twap" -> ((s, d) => {
-      // per-(user, day) time-weighted average of the event score — each
-      // tick's value weighted by its exact nanosecond holding time until
-      // the next tick (last tick holds to the day boundary)
-      load(s, d)
-      import org.apache.spark.sql.functions.col
-      operators.Bars.twap(readEventsNanos(s, d), "value", "ts",
-          Seq("user_id"), Seq("ts", "event_id"),
-          bucketNanos = 86400000000000L, priceScale = 2)
-        .orderBy(col("user_id"), col("bucket"))
-    }),
-    "q_lexical_diversity" -> ((s, d) => {
-      // per-document type-token ratio + hapax share — the vocabulary-
-      // richness screen; exact integer counts, two divisions
-      load(s, d)
-      import org.apache.spark.sql.functions.col
-      operators.TextOps.lexicalDiversity(s.table("documents"), "doc_id",
-          "text")
-        .orderBy(col("doc_id"))
-    }),
-    "q_spearman" -> ((s, d) => {
-      // per-supplier Spearman rank correlation of quantity vs price —
-      // the monotone-dependence complement to q_corr_regress; doubled
-      // average ranks keep the whole rank layer exact integers
-      load(s, d)
-      import org.apache.spark.sql.functions.col
-      operators.Stats.spearman(s.table("lineitem"), Seq("l_suppkey"),
-          "l_quantity", "l_extendedprice", scale = 2)
-        .orderBy(col("l_suppkey"))
-    }),
-    "q_brier" -> ((s, d) => {
-      // per-day Brier score of the squashed event score (1/(1+value) —
-      // identical double op in both engines before the operator's own
-      // quantization) predicting the purchase label
-      load(s, d)
-      import org.apache.spark.sql.functions.{col, expr, lit, when}
-      val ev = readEventsNanos(s, d).select(
-        expr("ts DIV 86400000000000").as("day"),
-        (lit(1.0) / (lit(1.0) + col("value"))).as("score"),
-        when(col("event_type") === "purchase", lit(1)).otherwise(lit(0))
-          .as("label"))
-      operators.Eval.brierScore(ev, "score", "label", Seq("day"))
-        .orderBy(col("day"))
-    }),
-    "q_lift_table" -> ((s, d) => {
-      // decile lift/gains of the event score predicting the purchase
-      // label — equal-frequency bins off exact percentile boundaries
-      // (tie-deterministic, no global sort), cumulative gains from the
-      // top bucket down
-      load(s, d)
-      import org.apache.spark.sql.functions.{col, lit, when}
-      val ev = readEventsNanos(s, d).select(col("value"),
-        when(col("event_type") === "purchase", lit(1)).otherwise(lit(0))
-          .as("label"))
-      operators.Eval.liftTable(ev, "value", "label", nBuckets = 10)
-        .orderBy(col("bucket"))
-    }),
-    "q_gini" -> ((s, d) => {
-      // per-language Gini concentration of document length — the corpus
-      // diversity screen; exact BIGINT rank/value sums, one double tree
-      load(s, d)
-      import org.apache.spark.sql.functions.col
-      operators.Divergence.gini(s.table("documents"), Seq("lang"),
-          "n_chars", scale = 0)
-        .orderBy(col("lang"))
-    }),
-    "q_skew_report" -> ((s, d) => {
-      // key-skew diagnostic: top-20 suppliers by row count with corpus
-      // share and uniform-spread skew ratio — the report that decides
-      // whether the salting mitigations are warranted
-      load(s, d)
-      import org.apache.spark.sql.functions.col
-      operators.Skew.keyReport(s.table("lineitem"), Seq("l_suppkey"),
-          topK = 20, heavyFactor = 4.0)
-        .orderBy(col("rank"))
-    }),
-    "q_ewma_corr" -> ((s, d) => q(s, d,
-      // RiskMetrics EWMA covariance/variance/correlation (λ = 0.94) —
-      // three independent ewmcov recurrences share ONE window spec (one
-      // Window pass); the correlation closed form runs on the outputs
-      s"""WITH e AS (
-         |  SELECT l_orderkey, l_linenumber,
-         |    ewmcov(xq, yp, 940) OVER w AS cov_xy,
-         |    ewmcov(xq, xq, 940) OVER w AS var_x,
-         |    ewmcov(yp, yp, 940) OVER w AS var_y
-         |  FROM (SELECT l_orderkey, l_linenumber, l_suppkey, l_shipdate,
-         |          CAST(l_quantity AS DOUBLE) AS xq,
-         |          CAST(l_extendedprice AS DOUBLE) AS yp
-         |        FROM lineitem)
-         |  WINDOW w AS ($W)
-         |)
-         |SELECT l_orderkey, l_linenumber, cov_xy, var_x, var_y,
-         |  CASE WHEN var_x > 0 AND var_y > 0
-         |       THEN cov_xy / (sqrt(var_x) * sqrt(var_y)) END AS ewm_corr
-         |FROM e ORDER BY l_orderkey, l_linenumber""".stripMargin)),
-    "q_autocorr" -> ((s, d) => {
-      // trailing-20 lag-4 autocorrelation of quantity per supplier — the
-      // rolling mean-reversion diagnostic; the lagged twin shares the
-      // keyed sort, then the exact corrBeta sum machinery runs the frame
-      load(s, d)
-      import org.apache.spark.sql.functions.col
-      operators.Rolling.autocorr(s.table("lineitem"), "l_quantity",
-          Seq("l_suppkey"), Seq("l_shipdate", "l_orderkey", "l_linenumber"),
-          n = 20, lagK = 4, scale = 0)
-        .select(col("l_orderkey"), col("l_linenumber"), col("roll_autocorr"))
-        .orderBy(col("l_orderkey"), col("l_linenumber"))
-    }),
-    "q_ffill" -> ((s, d) => {
-      // forward fill over the planted-null series the §7.1 null gate uses
-      load(s, d)
-      import org.apache.spark.sql.functions.{col, expr}
-      val withNulls = s.table("lineitem")
-        .withColumn("xn", expr("nullif(CAST(l_quantity AS DOUBLE), 17.0D)"))
-      operators.Rolling.ffill(withNulls, "xn", Seq("l_suppkey"),
-          Seq("l_shipdate", "l_orderkey", "l_linenumber"))
-        .select(col("l_orderkey"), col("l_linenumber"),
-          col("xn"), col("xn_filled"))
-        .orderBy(col("l_orderkey"), col("l_linenumber"))
-    }),
-    "q_split" -> ((s, d) => {
-      // deterministic train/val/test membership by row key, fingerprinted
-      // per split (count + id-sum make membership drift visible)
-      load(s, d)
-      import org.apache.spark.sql.functions.{col, count, lit, sum}
-      operators.Split.assign(s.table("documents"), "doc_id",
-          Seq("train" -> 0.8, "val" -> 0.1, "test" -> 0.1))
-        .groupBy(col("split"))
-        .agg(count(lit(1)).as("n"), sum(col("doc_id")).as("sum_id"))
-        .orderBy(col("split"))
-    }),
-    "q_split_group" -> ((s, d) => {
-      // leakage-safe variant: hash the GROUP key (language) so correlated
-      // rows move between splits together; n_langs exposes the cohesion
-      load(s, d)
-      import org.apache.spark.sql.functions.{col, count, countDistinct, lit, sum}
-      operators.Split.assign(s.table("documents"), "lang",
-          Seq("train" -> 0.6, "val" -> 0.2, "test" -> 0.2))
-        .groupBy(col("split"))
-        .agg(count(lit(1)).as("n"), countDistinct(col("lang")).as("n_langs"),
-          sum(col("doc_id")).as("sum_id"))
-        .orderBy(col("split"))
-    }),
-    "q_kfold" -> ((s, d) => {
-      // deterministic 5-fold assignment (hash mod k), fingerprinted per fold
-      load(s, d)
-      import org.apache.spark.sql.functions.{col, count, lit, sum}
-      operators.Split.kfold(s.table("documents"), "doc_id", k = 5)
-        .groupBy(col("fold"))
-        .agg(count(lit(1)).as("n"), sum(col("doc_id")).as("sum_id"))
-        .orderBy(col("fold"))
-    }),
-    "q_split_cluster" -> ((s, d) => {
-      // near-dup-cluster-safe train/test split: the group key is each
-      // document's star-cluster representative (own id when unclustered),
-      // so no near-duplicate pair straddles the held-out set — the
-      // contamination defense q_split_group gestures at, with the key
-      // DERIVED by the scale-safe cluster path instead of assumed.
-      // Membership fingerprinted per split; SplitSpec asserts the
-      // zero-straddle property directly on a planted near-dup fixture.
-      load(s, d)
-      import org.apache.spark.sql.functions.{col, count, lit, sum}
-      operators.Split.clusterSafeAssign(s.table("documents"), "doc_id",
-          "text", Seq("train" -> 0.8, "test" -> 0.2))
-        .groupBy(col("split"))
-        .agg(count(lit(1)).as("n"), sum(col("doc_id")).as("sum_id"))
-        .orderBy(col("split"))
-    }),
-    "q_purged_folds" -> ((s, d) => {
-      // purged time-series 5-fold CV with a 1-day embargo over the event
-      // log (exact integer boundary arithmetic on nano epochs); the
-      // per-(fold, role) count + id-sum fingerprints the full n×k
-      // assignment without dumping it
-      load(s, d)
-      import org.apache.spark.sql.functions.{col, count, lit, sum}
-      val ev = readEventsNanos(s, d).select(col("event_id"), col("ts"))
-      operators.Split.purgedTimeFolds(ev, "ts", k = 5,
-          embargo = 86400000000000L)
-        .groupBy(col("fold"), col("role"))
-        .agg(count(lit(1)).as("n"), sum(col("event_id")).as("sum_id"))
-        .orderBy(col("fold"), col("role"))
-    }),
-    "q_winsorize" -> ((s, d) => {
-      // per-group tail clipping at the exact [p05, p95] band — percentile
-      // interpolation parity with the oracle is proven by q_quantiles
-      load(s, d)
-      import org.apache.spark.sql.functions.col
-      operators.Feature.winsorize(s.table("lineitem"), "l_extendedprice",
-          Seq("l_returnflag"), pLow = 0.05, pHigh = 0.95)
-        .select(col("l_orderkey"), col("l_linenumber"),
-          col("l_extendedprice_winsor"))
-        .orderBy(col("l_orderkey"), col("l_linenumber"))
-    }),
-    "q_normalize" -> ((s, d) => {
-      // per-group min-max scaling to [0, 1]
-      load(s, d)
-      import org.apache.spark.sql.functions.col
-      operators.Feature.minMaxScale(s.table("lineitem"), "l_quantity",
-          Seq("l_returnflag"))
-        .select(col("l_orderkey"), col("l_linenumber"),
-          col("l_quantity_scaled"))
-        .orderBy(col("l_orderkey"), col("l_linenumber"))
-    }),
-    "q_fk_orphans" -> ((s, d) => {
-      // referential-integrity gate: planted bad supplier keys (every
-      // 97th order shifted by +1000) surface as orphan keys with their
-      // fact-row blast radius
-      load(s, d)
-      import org.apache.spark.sql.functions.{col, lit, when}
-      val fact = s.table("lineitem").select(
-        when(col("l_orderkey") % 97 === 0, col("l_suppkey") + lit(1000L))
-          .otherwise(col("l_suppkey")).as("fk_supp"))
-      operators.Validation.fkOrphans(fact, s.table("supplier"),
-          "fk_supp", "s_suppkey")
-        .orderBy(col("fk_supp"))
-    }),
-    "q_pareto" -> ((s, d) => {
-      // Pareto concentration of shipment quantity by supplier (80/20
-      // head flag) — exact integer sums, reduced-frame ranking window
-      load(s, d)
-      import org.apache.spark.sql.functions.col
-      operators.Validation.paretoContribution(s.table("lineitem"),
-          "l_suppkey", "l_quantity", headShare = 0.8)
-        .orderBy(col("l_suppkey"))
-    }),
-    "q_dow_profile" -> ((s, d) => {
-      // day-of-week seasonal profile of shipment quantities per supplier
-      // — exact integer sums, additive residuals
-      load(s, d)
-      import org.apache.spark.sql.functions.col
-      operators.Resample.dowProfile(
-          s.table("lineitem").select("l_orderkey", "l_linenumber",
-            "l_suppkey", "l_shipdate", "l_quantity"),
-          "l_quantity", "l_shipdate", Seq("l_suppkey"))
-        .select(col("l_orderkey"), col("l_linenumber"), col("l_suppkey"),
-          col("dow"), col("dow_mean"), col("l_quantity_deseason"))
-        .orderBy(col("l_orderkey"), col("l_linenumber"))
-    }),
-    "q_densify" -> ((s, d) => {
-      // calendar densification of the daily bars: every supplier gets a row
-      // per day between its first and last bar; the gate fingerprints the
-      // injected gap days per supplier
-      load(s, d)
-      import org.apache.spark.sql.functions.{col, count, lit, sum, when}
-      val bars = dailyBars(s)
-      operators.Resample.densify(bars, Seq("l_suppkey"), "l_shipdate")
-        .groupBy(col("l_suppkey"))
-        .agg(count(lit(1)).as("n_days"),
-          sum(when(col("n_ticks").isNull, 1L).otherwise(0L)).as("n_gap_days"))
-        .orderBy(col("l_suppkey"))
-    }),
-    "q_ntile" -> ((s, d) => q(s, d,
-      s"""SELECT l_orderkey, l_linenumber, ntile(4) OVER ($W) AS quartile
-         |FROM lineitem
-         |ORDER BY l_orderkey, l_linenumber""".stripMargin)),
-    "q_percent_rank" -> ((s, d) => q(s, d,
-      // distribution window functions over the supplier series — exact
-      // integer-ratio trees, identical across engines on a unique order
-      s"""SELECT l_orderkey, l_linenumber,
-         |  percent_rank() OVER ($W) AS pr,
-         |  cume_dist() OVER ($W) AS cd
-         |FROM lineitem
-         |ORDER BY l_orderkey, l_linenumber""".stripMargin)),
-    "q_filter_agg" -> ((s, d) => q(s, d,
-      // SQL:2003 FILTER clause — per-condition aggregation in one pass
-      """SELECT l_returnflag,
-        |  count(*) FILTER (WHERE l_quantity > 25) AS n_big,
-        |  sum(l_quantity) FILTER (WHERE l_discount > 0.05) AS qty_disc,
-        |  max(l_extendedprice) FILTER (WHERE l_linestatus = 'F') AS max_f
-        |FROM lineitem GROUP BY l_returnflag
-        |ORDER BY l_returnflag""".stripMargin)),
-    "q_keltner" -> ((s, d) => {
-      // Keltner channel over the daily bars: native EMA mid, ATR bands —
-      // the composition pairing the recurrence indicator with the bar ops
-      load(s, d)
-      import org.apache.spark.sql.functions.col
-      val bars = dailyBarsW(s)
-      operators.Rolling.keltner(bars, "high", "low", "close",
-          Seq("l_suppkey"), Seq("l_shipdate"), emaN = 20, atrN = 14, k = 2.0)
-        .select(col("l_suppkey"), col("l_shipdate"),
-          col("kc_mid"), col("kc_upper"), col("kc_lower"))
-        .orderBy(col("l_suppkey"), col("l_shipdate"))
-    }),
-    "q_incremental_agg" -> ((s, d) => {
-      // incremental aggregate maintenance: the stored summary (history) +
-      // the new batch's partials merge into EXACTLY the full-corpus
-      // aggregate — the oracle aggregates the corpus directly, so the
-      // gate proves merge-equals-recompute bit-for-bit
-      load(s, d)
-      import org.apache.spark.sql.functions.col
-      val li = s.table("lineitem")
-      val history = operators.IncrementalAgg.partials(
-        li.filter(col("l_shipdate") < "1997-01-01"), Seq("l_returnflag"), "l_quantity")
-      val batch = operators.IncrementalAgg.partials(
-        li.filter(col("l_shipdate") >= "1997-01-01"), Seq("l_returnflag"), "l_quantity")
-      operators.IncrementalAgg.withDerived(
-          operators.IncrementalAgg.merge(Seq(history, batch), Seq("l_returnflag")))
-        .orderBy(col("l_returnflag"))
-    }),
-    "q_class_weights" -> ((s, d) => {
-      // balanced class weights over the order-priority label
-      load(s, d)
-      import org.apache.spark.sql.functions.col
-      operators.Feature.classWeights(s.table("orders"), "o_orderpriority")
-        .orderBy(col("o_orderpriority"))
-    }),
-    "q_robust_scale" -> ((s, d) => {
-      // RobustScaler: (x − median) / IQR per group — order statistics
-      // resist the tails that drag a mean/σ standardization
-      load(s, d)
-      import org.apache.spark.sql.functions.col
-      operators.Feature.robustScale(s.table("lineitem"), "l_quantity",
-          Seq("l_returnflag"))
-        .select(col("l_orderkey"), col("l_linenumber"),
-          col("l_quantity_robust"))
-        .orderBy(col("l_orderkey"), col("l_linenumber"))
-    }),
-    "q_label_index" -> ((s, d) => {
-      // StringIndexer contract: dense 0-based ids, most frequent first,
-      // alphabetical tie-break — a pure function of the corpus
-      load(s, d)
-      import org.apache.spark.sql.functions.col
-      operators.Feature.labelIndex(s.table("orders"), "o_orderpriority")
-        .orderBy(col("label_index"))
-    }),
-    "q_target_encode" -> ((s, d) => {
-      // m-estimate target encoding: category mean shrunk toward the
-      // global prior by m pseudo-observations
-      load(s, d)
-      import org.apache.spark.sql.functions.col
-      operators.Feature.targetEncode(s.table("lineitem"), "l_returnflag",
-          "l_quantity", m = 10.0)
-        .orderBy(col("l_returnflag"))
-    }),
-    "q_shuffle_shards" -> ((s, d) => {
-      // reproducible training-order shuffle: 8 shards, hash-ordered within
-      load(s, d)
-      import org.apache.spark.sql.functions.col
-      operators.Split.shuffleShards(s.table("documents"), "doc_id", numShards = 8)
-        .select(col("doc_id"), col("shard"), col("shuffle_rank"))
-        .orderBy(col("shard"), col("shuffle_rank"))
-    }),
-    "q_source_entropy" -> ((s, d) => {
-      // corpus-mixture drift monitor: per-source token entropy and
-      // KL(source || corpus) over the global top-30 vocabulary — the
-      // double sums fold in token order, replayable in any engine
-      load(s, d)
-      import org.apache.spark.sql.functions.col
-      operators.Divergence.tokenEntropy(s.table("documents"), "source",
-          "text", topK = 30)
-        .orderBy(col("source"))
-    }),
-    "q_ema" -> ((s, d) => q(s, d,
-      s"""SELECT l_orderkey, l_linenumber, ema(l_quantity, 12) OVER w AS ema_12
-         |FROM lineitem WINDOW w AS ($W)
-         |ORDER BY l_orderkey, l_linenumber""".stripMargin)),
-    "q_rsi" -> ((s, d) => q(s, d,
-      s"""SELECT l_orderkey, l_linenumber, rsi(l_quantity, 14) OVER w AS rsi_14
-         |FROM lineitem WINDOW w AS ($W)
-         |ORDER BY l_orderkey, l_linenumber""".stripMargin)),
-    "q_macd" -> ((s, d) => q(s, d,
-      s"""SELECT l_orderkey, l_linenumber, macd(l_quantity) OVER w AS macd
-         |FROM lineitem WINDOW w AS ($W)
-         |ORDER BY l_orderkey, l_linenumber""".stripMargin)),
-    "q_macd_full" -> ((s, d) => q(s, d,
-      // beyond-reference MACD completion: signal line (EMA9 of the line,
-      // seeded by the first line value) and histogram, same recurrence
-      // family and frozen-state NULL contract as macd itself
-      s"""SELECT l_orderkey, l_linenumber,
-         |  macd(l_quantity)        OVER w AS macd,
-         |  macd_signal(l_quantity) OVER w AS macd_sig,
-         |  macd_hist(l_quantity)   OVER w AS macd_hist
-         |FROM lineitem WINDOW w AS ($W)
-         |ORDER BY l_orderkey, l_linenumber""".stripMargin)),
-    "q_indicators_combined" -> ((s, d) => q(s, d,
-      s"""SELECT l_orderkey, l_linenumber, l_quantity,
-         |  sma(l_quantity, 5)  OVER w AS sma_5,
-         |  ema(l_quantity, 12) OVER w AS ema_12,
-         |  rsi(l_quantity, 14) OVER w AS rsi_14,
-         |  macd(l_quantity)    OVER w AS macd
-         |FROM lineitem WINDOW w AS ($W)
-         |ORDER BY l_orderkey, l_linenumber""".stripMargin)),
+  /** Gate name → Spark query; registers the session's tables and
+    * functions ([[load]]) before running the gate. */
+  lazy val queries: Map[String, (SparkSession, String) => DataFrame] =
+    Gates.all.map { g =>
+      g.name -> { (s: SparkSession, d: String) => load(s, d); g.run(s, d) }
+    }.toMap
 
-    // ---- A9: batch RSI signal scan (signals.rs:32-93) ---------------------
-    "q_indicators_nulls" -> ((s, d) => q(s, d,
-      // the null contract (SURVEY par-7.1): NULL input emits NULL and leaves
-      // state frozen; SMA averages the last n NON-NULL values; EMA/MACD seed
-      // on the first non-null. nullif plants deterministic nulls.
-      s"""SELECT l_orderkey, l_linenumber,
-         |  sma(xn, 4) OVER w AS sma_n,
-         |  ema(xn, 5) OVER w AS ema_n,
-         |  rsi(xn, 5) OVER w AS rsi_n,
-         |  macd(xn)   OVER w AS macd_n
-         |FROM (SELECT *, nullif(l_quantity, 17.0) AS xn FROM lineitem)
-         |WINDOW w AS ($W)
-         |ORDER BY l_orderkey, l_linenumber""".stripMargin)),
-    "q_rsi_signals" -> ((s, d) => q(s, d,
-      s"""WITH r AS (
-         |  SELECT l_suppkey, l_orderkey, l_linenumber, l_extendedprice AS price,
-         |    rsi(l_extendedprice, 5) OVER w AS rsi_5
-         |  FROM lineitem WINDOW w AS ($W)
-         |)
-         |SELECT l_suppkey, l_orderkey, l_linenumber, price,
-         |  CASE WHEN rsi_5 < 30.0 THEN 'BUY' ELSE 'SELL' END AS signal_type,
-         |  CASE WHEN rsi_5 < 30.0 THEN (30.0 - rsi_5) / 30.0
-         |       ELSE (rsi_5 - 70.0) / 30.0 END AS confidence
-         |FROM r
-         |WHERE rsi_5 IS NOT NULL AND (rsi_5 < 30.0 OR rsi_5 > 70.0)
-         |ORDER BY l_suppkey, l_orderkey, l_linenumber""".stripMargin)),
-
-    // ---- A10: MA-crossover scan (signals.rs:96-169) -----------------------
-    "q_ma_crossover" -> ((s, d) => q(s, d,
-      s"""WITH ma AS (
-         |  SELECT l_suppkey, l_orderkey, l_linenumber, l_shipdate,
-         |    l_extendedprice AS price,
-         |    sma(l_extendedprice, 20) OVER w AS sma_20,
-         |    sma(l_extendedprice, 50) OVER w AS sma_50
-         |  FROM lineitem WINDOW w AS ($W)
-         |), lagged AS (
-         |  SELECT *,
-         |    LAG(sma_20, 1) OVER w2 AS prev_sma_20,
-         |    LAG(sma_50, 1) OVER w2 AS prev_sma_50
-         |  FROM ma WINDOW w2 AS ($W)
-         |)
-         |SELECT l_suppkey, l_orderkey, l_linenumber, price, sma_20, sma_50,
-         |  CASE WHEN sma_20 > sma_50 THEN 'BUY' ELSE 'SELL' END AS signal_type,
-         |  least(abs(sma_20 - sma_50) / price, 1.0) AS confidence
-         |FROM lagged
-         |WHERE sma_20 IS NOT NULL AND sma_50 IS NOT NULL
-         |  AND prev_sma_20 IS NOT NULL AND prev_sma_50 IS NOT NULL
-         |  AND ((prev_sma_20 <= prev_sma_50 AND sma_20 > sma_50)
-         |    OR (prev_sma_20 >= prev_sma_50 AND sma_20 < sma_50))
-         |ORDER BY l_suppkey, l_orderkey, l_linenumber""".stripMargin)),
-
-    // ---- A11/A18: validation checks (validator.rs:63-163) -----------------
-    "q_validate_values" -> ((s, d) => q(s, d,
-      """SELECT count(*) AS total_rows,
-        |  count(CASE WHEN l_quantity <= 0 THEN 1 END) AS nonpositive_quantity,
-        |  count(CASE WHEN l_extendedprice <= 0 THEN 1 END) AS nonpositive_price,
-        |  count(CASE WHEN l_discount < 0 OR l_discount > 1 THEN 1 END) AS bad_discount,
-        |  count(CASE WHEN l_tax < 0 THEN 1 END) AS negative_tax
-        |FROM lineitem""".stripMargin)),
-    "q_validate_gaps" -> ((s, d) => q(s, d,
-      // A global LAG (no PARTITION BY) would be a 1-partition sort over the
-      // whole fact table — the scale-killer. Instead: the LAG is partitioned
-      // by calendar month (gaps between consecutive rows within a month),
-      // and month-boundary pairs are recovered from a tiny per-month
-      // (first, last) aggregate — the only global window runs over ~one row
-      // per month. datediff on DATEs is timezone-independent (a >86400s gap
-      // between DATEs ≡ >1 day).
-      """WITH o AS (
-        |  SELECT o_orderdate, o_orderkey, trunc(o_orderdate, 'month') AS mth
-        |  FROM orders
-        |), within AS (
-        |  SELECT count(*) AS c FROM (
-        |    SELECT o_orderdate,
-        |      LAG(o_orderdate) OVER (PARTITION BY mth ORDER BY o_orderdate, o_orderkey) AS prev_date
-        |    FROM o
-        |  )
-        |  WHERE prev_date IS NOT NULL AND datediff(o_orderdate, prev_date) > 1
-        |), bounds AS (
-        |  SELECT mth, min(o_orderdate) AS first_date, max(o_orderdate) AS last_date
-        |  FROM o GROUP BY mth
-        |), boundary AS (
-        |  SELECT count(*) AS c FROM (
-        |    SELECT first_date, LAG(last_date) OVER (ORDER BY mth) AS prev_last
-        |    FROM bounds
-        |  )
-        |  WHERE prev_last IS NOT NULL AND datediff(first_date, prev_last) > 1
-        |)
-        |SELECT w.c + b.c AS gap_count FROM within w CROSS JOIN boundary b""".stripMargin)),
-    // ---- A12: day-aggs weekend check (validator.rs:165-208) ---------------
-    "q_validate_weekend" -> ((s, d) => q(s, d,
-      // Spark: 1=Sunday..7=Saturday (constants translated per SURVEY A12)
-      """SELECT count(*) AS weekend_rows
-        |FROM orders WHERE dayofweek(o_orderdate) IN (1, 7)""".stripMargin)),
-
-    // ---- 2.B relational surface ------------------------------------------
-    "q1_agg" -> ((s, d) => q(s, d,
-      """SELECT l_returnflag, sum(l_quantity) AS sum_qty
-        |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin)),
-    "q_pricing_summary" -> ((s, d) => q(s, d,
-      """SELECT l_returnflag, l_linestatus,
-        |  sum(l_quantity) AS sum_qty,
-        |  round(sum(l_extendedprice), 2) AS sum_base_price,
-        |  round(sum(l_extendedprice * (1.0 - l_discount)), 2) AS sum_disc_price,
-        |  round(avg(l_quantity), 6) AS avg_qty,
-        |  round(avg(l_extendedprice), 6) AS avg_price,
-        |  count(*) AS count_order
-        |FROM lineitem
-        |GROUP BY l_returnflag, l_linestatus
-        |ORDER BY l_returnflag, l_linestatus""".stripMargin)),
-    "q_topk_orders" -> ((s, d) => q(s, d,
-      """SELECT l_orderkey, sum(l_quantity) AS total_qty
-        |FROM lineitem GROUP BY l_orderkey
-        |ORDER BY total_qty DESC, l_orderkey LIMIT 10""".stripMargin)),
-    // per-group top-k: the rank filter is pushed INTO the window sort by
-    // Spark's WindowGroupLimit rule — each partition keeps a k-row heap
-    // instead of fully sorting, the decisive optimization at 100 TB
-    // (asserted in PlanSpec)
-    "q_topk_per_group" -> ((s, d) => q(s, d,
-      """SELECT o_orderstatus, o_orderkey, o_totalprice, rn FROM (
-        |  SELECT o_orderstatus, o_orderkey, o_totalprice,
-        |    row_number() OVER (PARTITION BY o_orderstatus
-        |                       ORDER BY o_totalprice DESC, o_orderkey) AS rn
-        |  FROM orders) t
-        |WHERE rn <= 3 ORDER BY o_orderstatus, rn""".stripMargin)),
-    // RANGE frame over a derived day number — trailing 30-day running
-    // stats per customer. Day arithmetic is integer (UTC-pinned), and the
-    // windowed sum runs over exact BIGINT cents, so any evaluation order
-    // matches the oracle. One keyed exchange + one in-partition sort.
-    "q_window_range" -> ((s, d) => q(s, d,
-      """SELECT o_custkey, o_orderkey,
-        |  count(*) OVER w AS cnt_30d,
-        |  sum(CAST(round(o_totalprice * 100) AS BIGINT)) OVER w AS spend_30d_cents
-        |FROM orders
-        |WINDOW w AS (PARTITION BY o_custkey
-        |             ORDER BY unix_date(CAST(o_orderdate AS DATE))
-        |             RANGE BETWEEN 30 PRECEDING AND CURRENT ROW)
-        |ORDER BY o_custkey, o_orderkey""".stripMargin)),
-    // full-outer join over two pre-aggregated key sets — the missing join
-    // type in the surface; both sides shrink to per-key counts before the
-    // join, so the exchange moves group rows, not base rows
-    "q_full_outer" -> ((s, d) => q(s, d,
-      """SELECT coalesce(b.custkey, u.custkey) AS custkey,
-        |       b.n_building, u.n_urgent
-        |FROM (SELECT c_custkey AS custkey, count(*) AS n_building
-        |      FROM customer WHERE c_mktsegment = 'BUILDING' GROUP BY c_custkey) b
-        |FULL OUTER JOIN
-        |     (SELECT o_custkey AS custkey, count(*) AS n_urgent
-        |      FROM orders WHERE o_orderpriority = '1-URGENT' GROUP BY o_custkey) u
-        |ON b.custkey = u.custkey
-        |ORDER BY custkey""".stripMargin)),
-    // ranking-window family over one keyed sort (all six share a single
-    // window spec -> one Window operator, one exchange)
-    "q_window_rank" -> ((s, d) => q(s, d,
-      """SELECT o_custkey, o_orderkey,
-        |  row_number() OVER w AS rn,
-        |  rank() OVER w AS rnk,
-        |  dense_rank() OVER w AS drnk,
-        |  percent_rank() OVER w AS prnk,
-        |  cume_dist() OVER w AS cdist,
-        |  ntile(4) OVER w AS quartile
-        |FROM orders
-        |WHERE o_custkey < 100
-        |WINDOW w AS (PARTITION BY o_custkey ORDER BY o_totalprice, o_orderkey)
-        |ORDER BY o_custkey, rn""".stripMargin)),
-    // ROLLUP lattice with grouping() marker — multi-level aggregation in
-    // one pass (Expand + single exchange, not one job per level).
-    // grouping() cast to INT (Spark: TINYINT, DuckDB: BIGINT); ORDER BY
-    // coalesces the rolled-up NULLs (Spark sorts NULLS FIRST, DuckDB LAST)
-    "q_rollup" -> ((s, d) => q(s, d,
-      """SELECT l_returnflag, l_linestatus,
-        |  CAST(grouping(l_returnflag) AS INT) AS g_flag,
-        |  CAST(grouping(l_linestatus) AS INT) AS g_status,
-        |  count(*) AS n, sum(l_quantity) AS sum_qty
-        |FROM lineitem
-        |GROUP BY ROLLUP(l_returnflag, l_linestatus)
-        |ORDER BY g_flag, g_status, coalesce(l_returnflag, ''), coalesce(l_linestatus, '')""".stripMargin)),
-    // GROUPING SETS lattice beyond ROLLUP's prefix chain: explicit set list
-    // incl. the cross-dimension (priority-only) cut — one Expand pass,
-    // single exchange, same plan family as q_rollup
-    "q_grouping_sets" -> ((s, d) => q(s, d,
-      """SELECT o_orderstatus, o_orderpriority,
-        |  CAST(grouping(o_orderstatus) AS INT) AS g_status,
-        |  CAST(grouping(o_orderpriority) AS INT) AS g_prio,
-        |  count(*) AS n, round(sum(o_totalprice), 2) AS total
-        |FROM orders
-        |GROUP BY GROUPING SETS ((o_orderstatus, o_orderpriority),
-        |  (o_orderstatus), (o_orderpriority), ())
-        |ORDER BY g_status, g_prio,
-        |  coalesce(o_orderstatus, ''), coalesce(o_orderpriority, '')""".stripMargin)),
-    // pivot (conditional-aggregation rotation): one pass, map-side
-    // combinable — the values list is declared, so no extra distinct scan
-    "q_pivot" -> ((s, d) => {
-      load(s, d)
-      import org.apache.spark.sql.functions.{coalesce, count, lit}
-      val priorities =
-        Seq("1-URGENT", "2-HIGH", "3-MEDIUM", "4-NOT SPECIFIED", "5-LOW")
-      val pivoted = s.table("orders")
-        .groupBy("o_orderstatus")
-        .pivot("o_orderpriority", priorities)
-        .agg(count(lit(1)))
-      pivoted.select(
-        pivoted("o_orderstatus") +:
-          priorities.map(p => coalesce(pivoted(p), lit(0L)).as(p)): _*)
-        .orderBy("o_orderstatus")
-    }),
-    // set operations (INTERSECT / EXCEPT are distinct-semantics hash
-    // aggregations; both sides shuffle on the compared columns)
-    "q_setops" -> ((s, d) => q(s, d,
-      """SELECT 'both' AS tag, custkey FROM (
-        |  SELECT c_custkey AS custkey FROM customer WHERE c_mktsegment = 'BUILDING'
-        |  INTERSECT
-        |  SELECT o_custkey FROM orders WHERE o_orderpriority = '1-URGENT') t1
-        |UNION ALL
-        |SELECT 'cust_only' AS tag, custkey FROM (
-        |  SELECT c_custkey AS custkey FROM customer WHERE c_mktsegment = 'BUILDING'
-        |  EXCEPT
-        |  SELECT o_custkey FROM orders WHERE o_orderpriority = '1-URGENT') t2
-        |ORDER BY tag, custkey""".stripMargin)),
-    // exact grouped quantiles (linear interpolation — matches DuckDB
-    // quantile_cont). At 100 TB the same query shape runs with
-    // approx_percentile (t-digest, map-side combinable) — the exact variant
-    // is the small-group / validation path.
-    "q_quantiles" -> ((s, d) => q(s, d,
-      """SELECT l_returnflag,
-        |  percentile(l_quantity, 0.25) AS q25,
-        |  percentile(l_quantity, 0.5) AS q50,
-        |  percentile(l_quantity, 0.75) AS q75,
-        |  percentile(l_extendedprice, 0.5) AS price_median
-        |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin)),
-    "q_revenue_by_nation" -> ((s, d) => {
-      load(s, d)
-      // broadcast-join shape: orders (fact) joined to small dims
-      import org.apache.spark.sql.functions._
-      val orders = s.table("orders")
-      val customer = s.table("customer")
-      val nation = s.table("nation")
-      orders
-        .join(broadcast(customer), col("o_custkey") === col("c_custkey"))
-        .join(broadcast(nation), col("c_nationkey") === col("n_nationkey"))
-        .groupBy(col("n_name"))
-        .agg(round(sum(col("o_totalprice")), 2).as("revenue"),
-          count(lit(1)).as("order_count"))
-        .orderBy(col("n_name"))
-    }),
-    "q_customers_without_orders" -> ((s, d) => q(s, d,
-      """SELECT c_mktsegment, count(*) AS n_customers
-        |FROM customer
-        |WHERE c_custkey NOT IN (SELECT o_custkey FROM orders WHERE o_orderpriority = '1-URGENT')
-        |GROUP BY c_mktsegment ORDER BY c_mktsegment""".stripMargin)),
-    "q_window_builtin" -> ((s, d) => q(s, d,
-      s"""SELECT l_orderkey, l_linenumber,
-         |  CAST(row_number() OVER w AS BIGINT) AS rn,
-         |  LAG(l_quantity) OVER w AS prev_qty,
-         |  sum(l_quantity) OVER (${W} ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS running_qty
-         |FROM lineitem WINDOW w AS ($W)
-         |ORDER BY l_orderkey, l_linenumber""".stripMargin)),
-    "q_distinct_agg" -> ((s, d) => q(s, d,
-      """SELECT l_returnflag,
-        |  count(DISTINCT l_partkey) AS distinct_parts,
-        |  count(DISTINCT l_suppkey) AS distinct_suppliers
-        |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin)),
-    // Bloom-prefiltered EXACT semi/anti joins (operators/BloomJoin): the
-    // decontamination-at-scale shape — the filter built from the small key
-    // side is evaluated inside the fact scan, so only true matches (+ ~fpp
-    // false positives) ever reach the join; one-sided error + exact join
-    // keeps the result bit-identical to the plain semi/anti join.
-    "q_bloom_semijoin" -> ((s, d) => {
-      load(s, d)
-      import org.apache.spark.sql.functions.col
-      val cust = s.table("customer").filter(col("c_nationkey") === 5)
-        .select(col("c_custkey"))
-      operators.BloomJoin.semiJoin(s.table("orders"), "o_custkey",
-          cust, "c_custkey", expectedItems = 4096, fpp = 0.03)
-        .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"))
-        .orderBy(col("o_orderkey"))
-    }),
-    "q_bloom_anti" -> ((s, d) => {
-      load(s, d)
-      import org.apache.spark.sql.functions.col
-      val cust = s.table("customer").filter(col("c_nationkey") === 5)
-        .select(col("c_custkey"))
-      operators.BloomJoin.antiJoin(s.table("orders"), "o_custkey",
-          cust, "c_custkey", expectedItems = 4096, fpp = 0.03)
-        .select(col("o_orderkey"), col("o_custkey"))
-        .orderBy(col("o_orderkey"))
-    })
-  ) ++ llmQueries
-
-  // ---- LLM-training-data pipeline operators ------------------------------
-  import org.apache.spark.sql.functions.{col, broadcast}
-
-  /** Per-row oracle-precondition guard: passes `text` through unchanged, or
-    * raises at runtime if a document violates a contract the DuckDB replica
-    * depends on. The precondition is thereby checked against WHATEVER corpus
-    * Verify/Bench actually runs on (the specs only sample sf0.001), so a
-    * violating document at another scale factor fails loudly here instead of
-    * surfacing as an opaque gate hash mismatch. Codegen'd per-row predicate —
-    * no extra pass, no plan change. */
-  private def textChecked(text: org.apache.spark.sql.Column,
-                          violation: org.apache.spark.sql.Column,
-                          msg: String): org.apache.spark.sql.Column = {
-    import org.apache.spark.sql.functions.{when, raise_error, lit}
-    when(violation, raise_error(lit(msg))).otherwise(text)
-  }
-
-  /** Deterministic replica flood of the documents table for the
-    * pair-budget family gates (q_*_flood): every 25th document × 4 copies,
-    * copy r > 0 tagged with a 2-token suffix so replicas are NEAR-dups
-    * (tag shingles are a tiny fraction of a document's set), ids shifted
-    * by r·1e6 (doc_id stays far below 1e6 at every test SF). The DuckDB
-    * twin is [[duckFloodDocs]]. */
-  private def floodDocs(s: SparkSession): DataFrame = {
-    import org.apache.spark.sql.functions.{concat, explode, lit, sequence, when}
-    s.table("documents").filter(col("doc_id") % 25 === 0)
-      .select(col("doc_id"), col("text"),
-        explode(sequence(lit(0), lit(3))).as("r"))
-      .select((col("doc_id") + col("r") * lit(1000000L)).as("doc_id"),
-        when(col("r") === 0, col("text"))
-          .otherwise(concat(col("text"), lit(" flood f"),
-            col("r").cast("string"))).as("text"))
-  }
-
-  /** events table with `ts` as NANOSECOND Longs — delegates to
-    * [[sources.Events.readNanos]], which reads the raw INT64 through an
-    * explicit LongType schema and normalizes whatever unit the parquet
-    * footer declares (the generator has shipped both ns and µs files). */
-  private def readEventsNanos(s: SparkSession, d: String): DataFrame =
-    sources.Events.readNanos(s, d)
-
-  /** Synthetic PII corpus for the q_pii_* gates: email/SSN/phone/IP derived
-    * deterministically from doc_id and appended to the real text (the word
-    * soup itself contains no digits or '@'); every 5th doc stays clean so
-    * the has_pii flag exercises both values. The oracle rebuilds the same
-    * strings with DuckDB's `||`/lpad/CASE — what the gates compare is the
-    * REGEX behavior of the two engines over identical inputs. */
-  private def piiTestText: org.apache.spark.sql.Column = {
-    import org.apache.spark.sql.functions.{concat, lit, lpad, when}
-    val id = col("doc_id")
-    def part(m: Int, len: Int) = lpad((id % m).cast("string"), len, "0")
-    val phone = when(id % 2 === 0,
-      concat(lit("(555) "), part(1000, 3), lit("-"), part(10000, 4)))
-      .otherwise(concat(lit("555-"), part(1000, 3), lit("-"), part(10000, 4)))
-    val inj = concat(
-      lit(" mail user"), id.cast("string"), lit("@example.com"),
-      lit(" ssn "), part(1000, 3), lit("-"), part(100, 2), lit("-"), part(10000, 4),
-      lit(" call "), phone,
-      lit(" from 10."), (id % 256).cast("string"), lit(".0."),
-      ((id * 7) % 256).cast("string"))
-    when(id % 5 === 0, col("text")).otherwise(concat(col("text"), inj))
-  }
-
-  private def llmQueries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_cross_corr" -> ((s, d) => {
-      // per-supplier volume→close cross-correlation at lags −2..2 — the
-      // lead–lag screen; all shifts on one keyed sort, one explode, one
-      // map-side-combinable (key, lag) aggregate with the corrBeta trees
-      load(s, d)
-      operators.Rolling.crossCorr(dailyBarsW(s), "volume", "close",
-          Seq("l_suppkey"), Seq("l_shipdate"), Seq(-2, -1, 0, 1, 2),
-          xScale = 2, yScale = 2)
-        .orderBy(col("l_suppkey"), col("lag"))
-    }),
-    "q_forecast_errors" -> ((s, d) => {
-      // per-supplier MAE/RMSE/MASE of the 1-step naive close forecast
-      // against the weekly (m=7) seasonal-naive benchmark — exact scaled
-      // error sums, fixed metric trees
-      load(s, d)
-      import org.apache.spark.sql.expressions.Window
-      import org.apache.spark.sql.functions.lag
-      val w = Window.partitionBy(col("l_suppkey")).orderBy(col("l_shipdate"))
-      val withF = dailyBarsW(s)
-        .withColumn("fcst", lag(col("close"), 1).over(w))
-      operators.Eval.forecastErrors(withF, "close", "fcst",
-          Seq("l_suppkey"), Seq("l_shipdate"), m = 7, scale = 2)
-        .orderBy(col("l_suppkey"))
-    }),
-    "q_ic" -> ((s, d) => {
-      // daily cross-sectional information coefficient: Spearman rank
-      // correlation of 5-day close momentum vs next-day forward move
-      // across suppliers, per date — the factor-evaluation readout;
-      // both signals are exact 2-dp close differences, so the rank
-      // layer is engine-identical
-      load(s, d)
-      import org.apache.spark.sql.expressions.Window
-      import org.apache.spark.sql.functions.{lag, lead}
-      val w = Window.partitionBy(col("l_suppkey")).orderBy(col("l_shipdate"))
-      val sig = dailyBars(s).select(col("l_suppkey"), col("l_shipdate"),
-        (col("close") - lag(col("close"), 5).over(w)).as("mom"),
-        (lead(col("close"), 1).over(w) - col("close")).as("fwd"))
-      operators.Stats.spearman(sig, Seq("l_shipdate"), "mom", "fwd",
-          scale = 2)
-        .orderBy(col("l_shipdate"))
-    }),
-    "q_croston" -> ((s, d) => {
-      // per-supplier Croston forecast over the sparse demand days (bars
-      // exist only on traded days — genuinely intermittent): two native
-      // var_ema recurrences on one keyed sort
-      load(s, d)
-      operators.Rolling.croston(dailyBarsW(s), "volume", "l_shipdate",
-          Seq("l_suppkey"), Seq("l_shipdate"), alphaPm = 100)
-        .select(col("l_suppkey"), col("l_shipdate"), col("croston_z"),
-          col("croston_p"), col("croston"))
-        .orderBy(col("l_suppkey"), col("l_shipdate"))
-    }),
-    "q_mann_kendall" -> ((s, d) => {
-      // per-supplier Mann-Kendall trend test on the close over a
-      // BOUNDED 100-supplier panel (the within-key O(n²) contract) —
-      // the distribution-free trend answer beside q_dickey_fuller
-      load(s, d)
-      operators.Stats.mannKendall(
-          dailyBars(s).filter(col("l_suppkey") < 100),
-          "close", Seq("l_suppkey"), Seq("l_shipdate"), scale = 2)
-        .orderBy(col("l_suppkey"))
-    }),
-    "q_runs_test" -> ((s, d) => {
-      // per-supplier Wald-Wolfowitz runs test on the close — the
-      // distribution-free randomness screen beside q_ljung_box
-      load(s, d)
-      operators.Stats.runsTest(dailyBarsW(s), "close", Seq("l_suppkey"),
-          Seq("l_shipdate"), scale = 2)
-        .orderBy(col("l_suppkey"))
-    }),
-    "q_rolling_sharpe" -> ((s, d) => {
-      // 21-day rolling Sharpe of the per-supplier log returns,
-      // annualized by sqrt(252) — the regime monitor beside the
-      // whole-series q_perf_summary; exact integer frame sums
-      load(s, d)
-      val rets = operators.Rolling.logReturns(dailyBarsW(s), "close",
-        Seq("l_suppkey"), Seq("l_shipdate"))
-      operators.Rolling.rollingSharpe(rets, "ret_log",
-          Seq("l_suppkey"), Seq("l_shipdate"), n = 21,
-          annualize = math.sqrt(252.0))
-        .select(col("l_suppkey"), col("l_shipdate"), col("roll_sharpe"))
-        .orderBy(col("l_suppkey"), col("l_shipdate"))
-    }),
-    "q_seasonal_anomaly" -> ((s, d) => {
-      // the composition flagship: seasonal decomposition (p=7) feeds a
-      // per-supplier MAD outlier screen on the RESIDUALS — anomalies
-      // after the weekly cycle is explained away, not before; residuals
-      // quantize to 6 dp so both engines interpolate medians on
-      // integer-valued doubles (exact). The decomposed frame is STAGED
-      // (persist + CacheScope) before the screen: MAD is two grouped
-      // percentile passes by construction, and without staging each pass
-      // re-derives the whole bars+window decompose (the subtree appeared
-      // 6× in one plan). The cache is bars-sized — |suppliers|×|days|,
-      // ~1000× smaller than the raw corpus — so the same staging holds
-      // at 100 TB (CacheScope scaladoc's caller-side protocol).
-      load(s, d)
-      import org.apache.spark.sql.functions.{lit, round}
-      val dec = CacheScope.register(
-        operators.Resample.seasonalDecompose(dailyBarsW(s)
-            .select(col("l_suppkey"), col("l_shipdate"), col("close")),
-            "close", Seq("l_suppkey"), Seq("l_shipdate"), period = 7,
-            scale = 2)
-          .filter(col("resid").isNotNull)
-          .withColumn("resid_q", round(col("resid") * lit(1e6)))
-          .select(col("l_suppkey"), col("l_shipdate"), col("resid_q"))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-      operators.Anomaly.madOutliers(
-          dec,
-          "resid_q", Seq("l_suppkey"), threshold = 3.5)
-        .select(col("l_suppkey"), col("l_shipdate"),
-          (col("resid_q") / lit(1e6)).as("resid"), col("robust_z"),
-          col("is_outlier"))
-        .orderBy(col("l_suppkey"), col("l_shipdate"))
-    }),
-    "q_holt_winters" -> ((s, d) => {
-      // NATIVE additive Holt-Winters (level + trend + 7-slot seasonal
-      // state as an array agg buffer) over the daily closes — the
-      // seasonal upgrade of q_holt; oracle is a WITH RECURSIVE machine
-      // with the seasonal array unrolled into seven columns
-      load(s, d)
-      import org.apache.spark.sql.expressions.Window
-      val w = Window.partitionBy(col("l_suppkey")).orderBy(col("l_shipdate"))
-      dailyBarsW(s)
-        .select(col("l_suppkey"), col("l_shipdate"),
-          FinancialFunctions.holtWinters(col("close"), 7, 300, 200, 300)
-            .over(w).as("hw"))
-        .orderBy(col("l_suppkey"), col("l_shipdate"))
-    }),
-    "q_stream_hw" -> ((s, d) => {
-      // the StreamingHoltWinters processor in BATCH mode: per-user
-      // seasonal fitted level of the event score (p = 7) —
-      // batch/streaming parity proof for the seasonal machine
-      load(s, d)
-      import s.implicits._
-      import org.apache.spark.sql.functions.{expr, timestamp_micros, unix_micros}
-      val ev = readEventsNanos(s, d).select(
-          col("user_id").cast("string").as("key"),
-          timestamp_micros(expr("ts DIV 1000")).as("ts"),
-          col("value"),
-          col("event_id").as("seq"))
-        .as[graft.streaming.HwEvent]
-      graft.streaming.StreamingHoltWinters.holtWintersBatch(ev, period = 7)
-        .toDF()
-        .select(col("key"), unix_micros(col("ts")).as("ts_us"),
-          col("value"), col("hw"))
-        .orderBy(col("key"), col("ts_us"), col("value"))
-    }),
-    "q_stream_garch" -> ((s, d) => {
-      // the StreamingGarch processor in BATCH mode: per-user GARCH(1,1)
-      // conditional vol of the event-score CHANGES (first change NULL —
-      // the frozen-state face) — batch/streaming parity proof
-      load(s, d)
-      import s.implicits._
-      import org.apache.spark.sql.expressions.Window
-      import org.apache.spark.sql.functions.{expr, lag, timestamp_micros, unix_micros}
-      val w = Window.partitionBy(col("user_id"))
-        .orderBy(col("ts"), col("event_id"))
-      val ev = readEventsNanos(s, d)
-        .withColumn("ret", col("value") - lag(col("value"), 1).over(w))
-        .select(
-          col("user_id").cast("string").as("key"),
-          timestamp_micros(expr("ts DIV 1000")).as("ts"),
-          col("ret"),
-          col("event_id").as("seq"))
-        .as[graft.streaming.GarchEvent]
-      graft.streaming.StreamingGarch.garchBatch(ev).toDF()
-        .select(col("key"), unix_micros(col("ts")).as("ts_us"),
-          col("ret"), col("vol"))
-        .orderBy(col("key"), col("ts_us"), col("ret"))
-    }),
-    "q_stream_holt" -> ((s, d) => {
-      // the StreamingHolt processor in BATCH mode: per-user double-
-      // exponential forecast of the event score — batch/streaming
-      // parity proof for the level/trend machine
-      load(s, d)
-      import s.implicits._
-      import org.apache.spark.sql.functions.{expr, timestamp_micros, unix_micros}
-      val ev = readEventsNanos(s, d).select(
-          col("user_id").cast("string").as("key"),
-          timestamp_micros(expr("ts DIV 1000")).as("ts"),
-          col("value"),
-          col("event_id").as("seq"))
-        .as[graft.streaming.HoltEvent]
-      graft.streaming.StreamingHolt.holtBatch(ev).toDF()
-        .select(col("key"), unix_micros(col("ts")).as("ts_us"),
-          col("value"), col("holt"))
-        .orderBy(col("key"), col("ts_us"), col("value"))
-    }),
-    "q_stream_ewma" -> ((s, d) => {
-      // the StreamingEwma SPC monitor in BATCH mode: per-user chart of
-      // the event score against fixed phase-I targets — the
-      // batch/streaming parity proof for the chart fold
-      load(s, d)
-      import s.implicits._
-      import org.apache.spark.sql.functions.{expr, timestamp_micros, unix_micros}
-      val ev = readEventsNanos(s, d).select(
-          col("user_id").cast("string").as("key"),
-          timestamp_micros(expr("ts DIV 1000")).as("ts"),
-          col("value"),
-          col("event_id").as("seq"))
-        .as[graft.streaming.EwmaEvent]
-      graft.streaming.StreamingEwma
-        .ewmaChartBatch(ev, lambdaPm = 200, l = 3.0, mu0 = 50.0,
-          sigma = 25.0)
-        .toDF()
-        .select(col("key"), unix_micros(col("ts")).as("ts_us"),
-          col("value"), col("ewma"), col("ucl"), col("lcl"), col("ooc"))
-        .orderBy(col("key"), col("ts_us"), col("value"))
-    }),
-    "q_stream_kalman" -> ((s, d) => {
-      // the StreamingKalman processor in BATCH mode (the q_stream_psar
-      // pattern): per-user filtered level of the event score — a
-      // driver-graded batch/streaming parity proof for the filter
-      load(s, d)
-      import s.implicits._
-      import org.apache.spark.sql.functions.{expr, timestamp_micros, unix_micros}
-      val ev = readEventsNanos(s, d).select(
-          col("user_id").cast("string").as("key"),
-          timestamp_micros(expr("ts DIV 1000")).as("ts"),
-          col("value"),
-          col("event_id").as("seq"))
-        .as[graft.streaming.KalmanEvent]
-      graft.streaming.StreamingKalman.kalmanBatch(ev).toDF()
-        .select(col("key"), unix_micros(col("ts")).as("ts_us"),
-          col("value"), col("kalman"))
-        .orderBy(col("key"), col("ts_us"), col("value"))
-    }),
-    "q_granger" -> ((s, d) => {
-      // does volume Granger-cause the close, per supplier — the
-      // hypothesis-test companion to q_cross_corr's lead-lag screen;
-      // exact n-multiplied normal equations, VARCHAR-bridged oracle
-      load(s, d)
-      operators.Stats.grangerLag1(dailyBarsW(s), "close", "volume",
-          Seq("l_suppkey"), Seq("l_shipdate"), yScale = 2, xScale = 2)
-        .orderBy(col("l_suppkey"))
-    }),
-    "q_dickey_fuller" -> ((s, d) => {
-      // per-supplier unit-root test on the close — exact (lag, diff)
-      // sufficient statistics, the fixed beta/t trees
-      load(s, d)
-      operators.Stats.dickeyFuller(dailyBarsW(s), "close", Seq("l_suppkey"),
-          Seq("l_shipdate"), scale = 2)
-        .orderBy(col("l_suppkey"))
-    }),
-    "q_bs_greeks" -> ((s, d) => {
-      // call-side greeks over the same synthetic chain — closed forms
-      // off the shared staged intermediates, still a pure projection
-      load(s, d)
-      import org.apache.spark.sql.functions.{greatest, lit}
-      val opt = dailyBars(s).select(col("l_suppkey"), col("l_shipdate"),
-        col("close").as("s_px"), col("open").as("k_px"),
-        lit(0.25).as("tau"), lit(0.02).as("rf"),
-        greatest(lit(0.05),
-          (col("high") - col("low")) / col("close")).as("sigma"))
-      operators.Pricing.blackScholesGreeks(opt, "s_px", "k_px", "tau",
-          "rf", "sigma")
-        .select(col("l_suppkey"), col("l_shipdate"), col("bs_delta"),
-          col("bs_gamma"), col("bs_vega"), col("bs_theta"), col("bs_rho"))
-        .orderBy(col("l_suppkey"), col("l_shipdate"))
-    }),
-    "q_black_scholes" -> ((s, d) => {
-      // synthetic option chain off the bars: S = close, K = open,
-      // T = 3 months, sigma from the day's range — priced as one pure
-      // codegen projection, zero shuffle
-      load(s, d)
-      import org.apache.spark.sql.functions.{greatest, lit}
-      val opt = dailyBars(s).select(col("l_suppkey"), col("l_shipdate"),
-        col("close").as("s_px"), col("open").as("k_px"),
-        lit(0.25).as("tau"), lit(0.02).as("rf"),
-        greatest(lit(0.05),
-          (col("high") - col("low")) / col("close")).as("sigma"))
-      operators.Pricing.blackScholes(opt, "s_px", "k_px", "tau", "rf",
-          "sigma")
-        .select(col("l_suppkey"), col("l_shipdate"), col("bs_call"),
-          col("bs_put"))
-        .orderBy(col("l_suppkey"), col("l_shipdate"))
-    }),
-    "q_page_trend" -> ((s, d) => {
-      // per-returnflag Page ordered-trend test: does shipped quantity
-      // trend monotonically across the week, block = supplier
-      load(s, d)
-      import org.apache.spark.sql.functions.dayofweek
-      val li = s.table("lineitem").select(col("l_returnflag"),
-        col("l_suppkey"), dayofweek(col("l_shipdate")).as("dow"),
-        col("l_quantity"))
-      operators.Stats.pageTrend(li, "l_quantity", "l_suppkey", "dow",
-          k = 7, Seq("l_returnflag"), scale = 2)
-        .orderBy(col("l_returnflag"))
-    }),
-    "q_roll_spread" -> ((s, d) => {
-      // per-supplier Roll effective spread from close-change
-      // autocovariance — microstructure beside q_amihud's price impact
-      load(s, d)
-      operators.Stats.rollSpread(dailyBarsW(s), "close", Seq("l_suppkey"),
-          Seq("l_shipdate"), scale = 2)
-        .orderBy(col("l_suppkey"))
-    }),
-    "q_christoffersen" -> ((s, d) => {
-      // per-supplier Christoffersen independence test on the same VaR
-      // line as q_kupiec — do violations cluster; Markov transition
-      // counts off one keyed sort, rounded-ln LR
-      load(s, d)
-      import org.apache.spark.sql.expressions.Window
-      import org.apache.spark.sql.functions.{lag, lit}
-      val w = Window.partitionBy(col("l_suppkey")).orderBy(col("l_shipdate"))
-      val withV = dailyBarsW(s).withColumn("var_line",
-        lag(col("close"), 1).over(w) * lit(0.98))
-      operators.Eval.christoffersenInd(withV, "close", "var_line",
-          Seq("l_suppkey"), Seq("l_shipdate"))
-        .orderBy(col("l_suppkey"))
-    }),
-    "q_kupiec" -> ((s, d) => {
-      // per-supplier Kupiec POF backtest of a 2%-below-yesterday VaR
-      // line at claimed p = 5% — raw IEEE violation compare, exact
-      // counts, rounded-ln LR tree
-      load(s, d)
-      import org.apache.spark.sql.expressions.Window
-      import org.apache.spark.sql.functions.{lag, lit}
-      val w = Window.partitionBy(col("l_suppkey")).orderBy(col("l_shipdate"))
-      val withV = dailyBarsW(s).withColumn("var_line",
-        lag(col("close"), 1).over(w) * lit(0.98))
-      operators.Eval.kupiecPof(withV, "close", "var_line",
-          Seq("l_suppkey"), pPm = 50)
-        .orderBy(col("l_suppkey"))
-    }),
-    "q_cvm" -> ((s, d) => {
-      // per-day Cramér–von Mises distance between purchase and view
-      // values — the whole-distribution drift readout beside q_ks's
-      // worst-gap and q_mann_whitney's location shift
-      load(s, d)
-      import org.apache.spark.sql.functions.expr
-      val ev = readEventsNanos(s, d)
-        .filter(col("event_type").isin("purchase", "view"))
-        .select(expr("ts DIV 86400000000000").as("day"),
-          col("event_type"), col("value"))
-      operators.Stats.cramerVonMises(ev, "value", "event_type",
-          "purchase", "view", Seq("day"), scale = 2)
-        .orderBy(col("day"))
-    }),
-    "q_pinball" -> ((s, d) => {
-      // per-supplier pinball loss of the naive close forecast at the
-      // 0.9 quantile — exact per-mille integer losses, one aggregate
-      load(s, d)
-      import org.apache.spark.sql.expressions.Window
-      import org.apache.spark.sql.functions.lag
-      val w = Window.partitionBy(col("l_suppkey")).orderBy(col("l_shipdate"))
-      val withF = dailyBarsW(s)
-        .withColumn("fcst", lag(col("close"), 1).over(w))
-      operators.Eval.pinballLoss(withF, "close", "fcst", Seq("l_suppkey"),
-          tauPm = 900, scale = 2)
-        .orderBy(col("l_suppkey"))
-    }),
-    "q_theil_u2" -> ((s, d) => {
-      // per-supplier Theil U2 of the 2-day-average forecast vs the
-      // naive last-value baseline — does smoothing beat persistence
-      load(s, d)
-      import org.apache.spark.sql.expressions.Window
-      import org.apache.spark.sql.functions.{lag, lit}
-      val w = Window.partitionBy(col("l_suppkey")).orderBy(col("l_shipdate"))
-      val withF = dailyBarsW(s).withColumn("fcst",
-        (lag(col("close"), 1).over(w) + lag(col("close"), 2).over(w)) /
-          lit(2.0))
-      operators.Eval.theilU2(withF, "close", "fcst", Seq("l_suppkey"),
-          Seq("l_shipdate"), scale = 2)
-        .orderBy(col("l_suppkey"))
-    }),
-    "q_grubbs" -> ((s, d) => {
-      // per-supplier Grubbs max-outlier statistic on the close — one
-      // map-side aggregate, integer-exact deviation via n·max − Σx
-      load(s, d)
-      operators.Anomaly.grubbs(dailyBars(s), "close", Seq("l_suppkey"),
-          scale = 2)
-        .orderBy(col("l_suppkey"))
-    }),
-    "q_trimmed_mean" -> ((s, d) => {
-      // per-supplier 5%-per-side trimmed mean of the close — positional
-      // trim on one keyed sort, exact kept sum
-      load(s, d)
-      operators.Stats.trimmedMean(dailyBarsW(s), "close", Seq("l_suppkey"),
-          trimPm = 50, scale = 2)
-        .orderBy(col("l_suppkey"))
-    }),
-    "q_hill" -> ((s, d) => {
-      // per-supplier Hill tail index over the top-50 volumes — how heavy
-      // is the upper volume tail; k-bounded rank list, rounded-ln fold
-      load(s, d)
-      operators.Stats.hillTail(dailyBarsW(s), "volume", Seq("l_suppkey"),
-          k = 50, scale = 2)
-        .orderBy(col("l_suppkey"))
-    }),
-    "q_friedman" -> ((s, d) => {
-      // per-returnflag Friedman: across supplier blocks, do the seven
-      // weekdays rank consistently differently in shipped quantity —
-      // integer-exact doubled ranks, one final division
-      load(s, d)
-      import org.apache.spark.sql.functions.dayofweek
-      val li = s.table("lineitem").select(col("l_returnflag"),
-        col("l_suppkey"), dayofweek(col("l_shipdate")).as("dow"),
-        col("l_quantity"))
-      operators.Stats.friedman(li, "l_quantity", "l_suppkey", "dow",
-          k = 7, Seq("l_returnflag"), scale = 2)
-        .orderBy(col("l_returnflag"))
-    }),
-    "q_ewma_chart" -> ((s, d) => {
-      // per-supplier EWMA control chart on the close — the mean-seeded
-      // SPC monitor with exact time-varying limits; two native
-      // recurrences (var_ema + runprod) on one keyed sort
-      load(s, d)
-      operators.Rolling.ewmaChart(dailyBarsW(s), "close", Seq("l_suppkey"),
-          Seq("l_shipdate"), lambdaPm = 200, l = 3.0, scale = 2)
-        .select(col("l_suppkey"), col("l_shipdate"), col("ewma"),
-          col("ewma_ucl"), col("ewma_lcl"), col("ewma_ooc"))
-        .orderBy(col("l_suppkey"), col("l_shipdate"))
-    }),
-    "q_blocklist" -> ((s, d) => {
-      // banned-term screen over the corpus — token-boundary matches
-      // against a literal blocklist, zero-shuffle per-row map
-      load(s, d)
-      operators.TextOps.blocklistScreen(s.table("documents"), "doc_id",
-          "text", Seq("slow", "hash", "vector", "stream", "nosuchterm"),
-          maxHitTerms = 2)
-        .orderBy(col("doc_id"))
-    }),
-    "q_wilcoxon" -> ((s, d) => {
-      // per-supplier Wilcoxon signed-rank on the (close, open) daily
-      // pairs — is the median intraday move zero; doubled-rank exact
-      // integers, one keyed sort
-      load(s, d)
-      operators.Stats.wilcoxonSignedRank(dailyBarsW(s), "close", "open",
-          Seq("l_suppkey"), scale = 2)
-        .orderBy(col("l_suppkey"))
-    }),
-    "q_brown_forsythe" -> ((s, d) => {
-      // per-day Brown–Forsythe across the five event types — are the
-      // arms' spreads equal (the anovaF precondition screen); exact
-      // doubled medians, deviations through the anovaF fold
-      load(s, d)
-      import org.apache.spark.sql.functions.expr
-      val ev = readEventsNanos(s, d)
-        .select(expr("ts DIV 86400000000000").as("day"),
-          col("event_type"), col("value"))
-      operators.Stats.brownForsythe(ev, "value", "event_type", Seq("day"),
-          scale = 2)
-        .orderBy(col("day"))
-    }),
-    "q_arch_lm" -> ((s, d) => {
-      // per-supplier Engle ARCH-LM on the intraday pseudo-return
-      // (close−open)/open — is there volatility clustering worth a
-      // GARCH fit; exact squared-residual pair sums
-      load(s, d)
-      operators.Stats.archLm(
-          dailyBarsW(s).withColumn("ret",
-            (col("close") - col("open")) / col("open")),
-          "ret", Seq("l_suppkey"), Seq("l_shipdate"), scale = 6)
-        .orderBy(col("l_suppkey"))
-    }),
-    "q_chow" -> ((s, d) => {
-      // per-supplier Chow break test on the close trend at the corpus
-      // midpoint — do pre/post-1995H1 need different trend lines;
-      // segment sums fused into ONE conditional aggregate
-      load(s, d)
-      operators.Stats.chowTest(dailyBars(s), "close", "l_shipdate",
-          Seq("l_suppkey"), breakDate = "1995-06-17", scale = 2)
-        .orderBy(col("l_suppkey"))
-    }),
-    "q_media_dhash" -> ((s, d) => {
-      // perceptual dHash through the REAL codec chain: text → PNG encode
-      // → decode → 9×8 nearest-neighbor sample → 63-bit gradient hash;
-      // the oracle regenerates the hash from the pixel function alone
-      load(s, d)
-      import org.apache.spark.sql.functions.{length, octet_length}
-      val docs = s.table("documents").withColumn("text",
-        textChecked(col("text"),
-          length(col("text")) =!= octet_length(col("text").cast("binary")),
-          "q_media_dhash oracle precondition violated: non-ASCII document"))
-      val media = operators.Multimodal.withMediaPng(s, docs, "doc_id", "text")
-      operators.Multimodal.imageDHash(s, media, "doc_id")
-        .orderBy(col("doc_id"))
-    }),
-    "q_media_dhash_pairs" -> ((s, d) => {
-      // image near-dup pairs on the dHash via the 16-bit chunk-banding
-      // pigeonhole — candidates scale with true near-dups (the planted
-      // duplicate documents), never n²; the oracle brute-forces the
-      // small corpus
-      load(s, d)
-      import org.apache.spark.sql.functions.{length, octet_length}
-      val docs = s.table("documents").withColumn("text",
-        textChecked(col("text"),
-          length(col("text")) =!= octet_length(col("text").cast("binary")),
-          "q_media_dhash_pairs oracle precondition violated: non-ASCII document"))
-      val media = operators.Multimodal.withMediaPng(s, docs, "doc_id", "text")
-      val hashes = operators.Multimodal.imageDHash(s, media, "doc_id")
-      operators.Multimodal.dhashPairs(hashes, "doc_id", maxHamming = 3)
-        .orderBy(col("id_a"), col("id_b"))
-    }),
-    "q_effect_sizes" -> ((s, d) => {
-      // per-day Cohen's d / Hedges' g / Cliff's delta between purchase
-      // and view values — the how-big companion to q_welch_t on the
-      // same frame; exact decimal moment sums, doubled-midrank delta
-      load(s, d)
-      import org.apache.spark.sql.functions.expr
-      val ev = readEventsNanos(s, d)
-        .filter(col("event_type").isin("purchase", "view"))
-        .select(expr("ts DIV 86400000000000").as("day"),
-          col("event_type"), col("value"))
-      operators.Stats.effectSizes(ev, "value", "event_type",
-          "purchase", "view", Seq("day"), scale = 2)
-        .orderBy(col("day"))
-    }),
-    "q_cramers_v" -> ((s, d) => {
-      // order-status × order-priority association per order year — the
-      // cross-table-comparable effect size over exact contingency
-      // marginals; zero cells charged via the o²/e identity
-      load(s, d)
-      import org.apache.spark.sql.functions.year
-      operators.Stats.cramersV(
-          s.table("orders").withColumn("o_year",
-            year(col("o_orderdate")).cast("long")),
-          "o_orderstatus", "o_orderpriority", Seq("o_year"))
-        .orderBy(col("o_year"))
-    }),
-    "q_kaplan_meier" -> ((s, d) => {
-      // time-to-first-purchase survival per user-cohort: purchasers are
-      // events, never-purchasers censor at their last observed event —
-      // exact at-risk counts, native runprod survival chain
-      load(s, d)
-      import org.apache.spark.sql.functions.{expr, min, max, when, lit}
-      val perUser = readEventsNanos(s, d)
-        .groupBy(col("user_id"))
-        .agg(min(col("ts")).as("t0"),
-          min(when(col("event_type") === "purchase", col("ts"))).as("tp"),
-          max(col("ts")).as("tl"))
-        .select(expr("user_id % 4").as("cohort"),
-          expr("(coalesce(tp, tl) - t0) DIV 86400000000000").as("dur"),
-          when(col("tp").isNotNull, lit(1L)).otherwise(lit(0L)).as("ev"))
-      operators.Eval.kaplanMeier(perUser, "dur", "ev", Seq("cohort"))
-        .orderBy(col("cohort"), col("t"))
-    }),
-    "q_seasonal_strength" -> ((s, d) => {
-      // Hyndman F_s/F_t per supplier off the period-7 decomposition —
-      // one number each for "how seasonal / how trended"
-      load(s, d)
-      val dec = operators.Resample.seasonalDecompose(dailyBarsW(s)
-          .select(col("l_suppkey"), col("l_shipdate"), col("close")),
-        "close", Seq("l_suppkey"), Seq("l_shipdate"), period = 7,
-        scale = 2)
-      operators.Resample.seasonalStrength(dec, Seq("l_suppkey"), scale = 4)
-        .orderBy(col("l_suppkey"))
-    }),
-    "q_kendall_w" -> ((s, d) => {
-      // per-returnflag concordance: how strongly supplier blocks agree
-      // on the weekday quantity ranking — friedman's Q scaled to [0,1]
-      load(s, d)
-      import org.apache.spark.sql.functions.dayofweek
-      val li = s.table("lineitem").select(col("l_returnflag"),
-        col("l_suppkey"), dayofweek(col("l_shipdate")).as("dow"),
-        col("l_quantity"))
-      operators.Stats.kendallW(li, "l_quantity", "l_suppkey", "dow",
-          k = 7, Seq("l_returnflag"), scale = 2)
-        .orderBy(col("l_returnflag"))
-    }),
-    "q_durbin_watson" -> ((s, d) => {
-      // per-supplier Durbin-Watson on the demeaned close — residual
-      // autocorrelation in the form regressions quote; exact
-      // n-multiplied demeaning, one ratio
-      load(s, d)
-      operators.Stats.durbinWatson(dailyBarsW(s), "close", Seq("l_suppkey"),
-          Seq("l_shipdate"), scale = 2)
-        .orderBy(col("l_suppkey"))
-    }),
-    "q_cochran_armitage" -> ((s, d) => {
-      // does the purchase share of events trend across the week, per
-      // user band — ordered-dose proportions, exact weighted sums
-      load(s, d)
-      import org.apache.spark.sql.functions.{dayofweek, expr, lit, when, to_timestamp}
-      val ev = readEventsNanos(s, d)
-        .select(expr("user_id % 4").as("band"),
-          dayofweek(expr("timestamp_micros(ts DIV 1000)")).as("dow"),
-          when(col("event_type") === "purchase", lit(1L)).otherwise(lit(0L))
-            .as("hit"))
-      operators.Stats.cochranArmitage(ev, "hit", "dow", Seq("band"))
-        .orderBy(col("band"))
-    }),
-    "q_ks_uniform" -> ((s, d) => {
-      // split-fairness gate: is the golden-ratio Weyl score of doc_id
-      // uniform within each lang slice — one-sample KS vs U[0,1]
-      load(s, d)
-      import org.apache.spark.sql.functions.lit
-      val docs = s.table("documents").select(col("lang"),
-        ((col("doc_id").cast("double") * lit(0.6180339887498949)) %
-          lit(1.0)).as("u"))
-      operators.Divergence.ksUniform(docs, "u", Seq("lang"))
-        .orderBy(col("lang"))
-    }),
-    "q_bland_altman" -> ((s, d) => {
-      // per-supplier Bland-Altman: does the open agree with the close
-      // as a price measurement — bias and 95% limits of agreement
-      load(s, d)
-      operators.Stats.blandAltman(dailyBars(s), "close", "open",
-          Seq("l_suppkey"), scale = 2)
-        .orderBy(col("l_suppkey"))
-    }),
-    "q_cpk" -> ((s, d) => {
-      // per-supplier process capability of the close against the
-      // [1, 55] quantity spec band — the SPC acceptance numbers
-      load(s, d)
-      operators.Stats.processCapability(dailyBars(s), "close",
-          Seq("l_suppkey"), lsl = 1.0, usl = 55.0, scale = 2)
-        .orderBy(col("l_suppkey"))
-    }),
-    "q_odds_ratio" -> ((s, d) => {
-      // per-day odds/risk ratio of clearing 100 for purchases vs views
-      // — the effect-size companion to q_prop_z on the same 2x2
-      load(s, d)
-      import org.apache.spark.sql.functions.{expr, lit, when}
-      val ev = readEventsNanos(s, d)
-        .filter(col("event_type").isin("purchase", "view"))
-        .select(expr("ts DIV 86400000000000").as("day"),
-          col("event_type"),
-          when(col("value") > lit(100.0), lit(1L)).otherwise(lit(0L))
-            .as("hit"))
-      operators.Stats.oddsRiskRatio(ev, "hit", "event_type",
-          "purchase", "view", Seq("day"))
-        .orderBy(col("day"))
-    }),
-    "q_prop_z" -> ((s, d) => {
-      // per-day two-proportion z: do purchase events clear the 100 mark
-      // at a different rate than view events — THE conversion A/B tree
-      load(s, d)
-      import org.apache.spark.sql.functions.{expr, lit, when}
-      val ev = readEventsNanos(s, d)
-        .filter(col("event_type").isin("purchase", "view"))
-        .select(expr("ts DIV 86400000000000").as("day"),
-          col("event_type"),
-          when(col("value") > lit(100.0), lit(1L)).otherwise(lit(0L))
-            .as("hit"))
-      operators.Stats.twoProportionZ(ev, "hit", "event_type",
-          "purchase", "view", Seq("day"))
-        .orderBy(col("day"))
-    }),
-    "q_rbo" -> ((s, d) => {
-      // monthly top-10 supplier rankings by volume vs by tick count,
-      // compared with rank-biased overlap — plan-folded geometric
-      // weights, deterministic tie-broken ranks
-      load(s, d)
-      import org.apache.spark.sql.expressions.Window
-      import org.apache.spark.sql.functions.{date_format, lit, round => rnd, row_number, sum => fsum}
-      val mb = dailyBars(s)
-        .withColumn("month", date_format(col("l_shipdate"), "yyyy-MM"))
-        .groupBy(col("month"), col("l_suppkey"))
-        .agg(fsum(rnd(col("volume") * lit(100.0)).cast("long")).as("vol"),
-          fsum(col("n_ticks")).as("ticks"))
-      val ranked = mb
-        .withColumn("ra", row_number().over(Window.partitionBy(col("month"))
-          .orderBy(col("vol").desc, col("l_suppkey"))))
-        .withColumn("rb", row_number().over(Window.partitionBy(col("month"))
-          .orderBy(col("ticks").desc, col("l_suppkey"))))
-      operators.Eval.rankBiasedOverlap(ranked, Seq("month"), "ra", "rb",
-          k = 10, pPm = 900)
-        .orderBy(col("month"))
-    }),
-    "q_rmst" -> ((s, d) => {
-      // restricted mean time-to-first-purchase (tau = 20 days) per
-      // cohort — the area under q_kaplan_meier's curve as one number
-      load(s, d)
-      import org.apache.spark.sql.functions.{expr, min, max, when, lit}
-      val perUser = readEventsNanos(s, d)
-        .groupBy(col("user_id"))
-        .agg(min(col("ts")).as("t0"),
-          min(when(col("event_type") === "purchase", col("ts"))).as("tp"),
-          max(col("ts")).as("tl"))
-        .select(expr("user_id % 4").as("cohort"),
-          expr("(coalesce(tp, tl) - t0) DIV 86400000000000").as("dur"),
-          when(col("tp").isNotNull, lit(1L)).otherwise(lit(0L)).as("ev"))
-      operators.Eval.rmst(perUser, "dur", "ev", Seq("cohort"), tau = 20L)
-        .orderBy(col("cohort"))
-    }),
-    "q_ece" -> ((s, d) => {
-      // per-day expected calibration error of the scaled event score —
-      // the magnitude sibling of q_hosmer_lemeshow over the same deciles
-      load(s, d)
-      import org.apache.spark.sql.functions.{expr, lit, when}
-      val ev = readEventsNanos(s, d)
-        .select(expr("ts DIV 86400000000000").as("day"),
-          (col("value") / lit(1000.0)).as("p"),
-          when(col("event_type") === "purchase", lit(1L)).otherwise(lit(0L))
-            .as("label"),
-          col("event_id"))
-      operators.Eval.expectedCalibrationError(ev, "p", "label", "event_id",
-          Seq("day"), bins = 10, scale = 6)
-        .orderBy(col("day"))
-    }),
-    "q_best_f1" -> ((s, d) => {
-      // per-day best-F1 operating point of the event score predicting
-      // purchases — integer TP/FP ladder, struct-argmax threshold pick
-      load(s, d)
-      import org.apache.spark.sql.functions.{expr, lit, when}
-      val ev = readEventsNanos(s, d)
-        .select(expr("ts DIV 86400000000000").as("day"), col("value"),
-          when(col("event_type") === "purchase", lit(1)).otherwise(lit(0))
-            .as("label"))
-      operators.Eval.bestF1Threshold(ev, "value", "label", Seq("day"))
-        .orderBy(col("day"))
-    }),
-    "q_hhi" -> ((s, d) => {
-      // supplier-revenue concentration per nation (HHI) — exact member
-      // totals through a broadcast dim join, one double division
-      load(s, d)
-      val li = s.table("lineitem")
-        .join(s.table("supplier"), col("l_suppkey") === col("s_suppkey"))
-        .select(col("s_nationkey"), col("l_suppkey"),
-          col("l_extendedprice"))
-      operators.Stats.hhi(li, "l_extendedprice", "l_suppkey",
-          Seq("s_nationkey"), scale = 2)
-        .orderBy(col("s_nationkey"))
-    }),
-    "q_attribution" -> ((s, d) => {
-      // multi-touch attribution over the event log: touches credit the
-      // next purchase (linear/first/last in one pass); µs-truncated
-      // ordering for cross-engine tie parity
-      load(s, d)
-      import org.apache.spark.sql.functions.expr
-      val ev = readEventsNanos(s, d)
-        .select(col("user_id"), expr("ts DIV 1000").as("ts_us"),
-          col("event_id"), col("event_type"))
-      operators.EventAnalytics.attribution(ev, "user_id", "event_type",
-          "purchase", Seq("ts_us", "event_id"))
-        .orderBy(col("user_id"), col("ts_us"), col("event_id"))
-    }),
-    "q_mcnemar" -> ((s, d) => {
-      // per-day McNemar: does the >50 threshold classifier beat the
-      // >100 one at predicting purchases — exact discordant counts
-      load(s, d)
-      import org.apache.spark.sql.functions.{expr, lit, when}
-      val ev = readEventsNanos(s, d)
-        .select(expr("ts DIV 86400000000000").as("day"),
-          (col("value") > lit(50.0)).as("pred_a"),
-          (col("value") > lit(100.0)).as("pred_b"),
-          when(col("event_type") === "purchase", lit(1L)).otherwise(lit(0L))
-            .as("label"))
-      operators.Eval.mcnemar(ev, "pred_a", "pred_b", "label", Seq("day"))
-        .orderBy(col("day"))
-    }),
-    "q_hosmer_lemeshow" -> ((s, d) => {
-      // per-day calibration test of the scaled event score as a
-      // purchase probability — deterministic deciles via the
-      // (probability, event_id) total order, exact decile E sums
-      load(s, d)
-      import org.apache.spark.sql.functions.{expr, lit, when}
-      val ev = readEventsNanos(s, d)
-        .select(expr("ts DIV 86400000000000").as("day"),
-          (col("value") / lit(1000.0)).as("p"),
-          when(col("event_type") === "purchase", lit(1L)).otherwise(lit(0L))
-            .as("label"),
-          col("event_id"))
-      operators.Eval.hosmerLemeshow(ev, "p", "label", "event_id",
-          Seq("day"), bins = 10, scale = 6)
-        .orderBy(col("day"))
-    }),
-    "q_logrank" -> ((s, d) => {
-      // even vs odd users' time-to-first-purchase within each user band
-      // — are the two survival curves the same; ordered hypergeometric
-      // U/V folds, one keyed sort
-      load(s, d)
-      import org.apache.spark.sql.functions.{expr, min, max, when, lit}
-      val perUser = readEventsNanos(s, d)
-        .groupBy(col("user_id"))
-        .agg(min(col("ts")).as("t0"),
-          min(when(col("event_type") === "purchase", col("ts"))).as("tp"),
-          max(col("ts")).as("tl"))
-        .select(expr("user_id % 3").as("band"),
-          expr("CASE WHEN user_id % 2 = 0 THEN 'even' ELSE 'odd' END")
-            .as("arm"),
-          expr("(coalesce(tp, tl) - t0) DIV 86400000000000").as("dur"),
-          when(col("tp").isNotNull, lit(1L)).otherwise(lit(0L)).as("ev"))
-      operators.Eval.logRank(perUser, "dur", "ev", "arm", "even", "odd",
-          Seq("band"))
-        .orderBy(col("band"))
-    }),
-    "q_nelson_aalen" -> ((s, d) => {
-      // cumulative hazard twin of q_kaplan_meier over the same
-      // time-to-first-purchase frame — additive risk, recursive-walk
-      // oracle parity for the running fold
-      load(s, d)
-      import org.apache.spark.sql.functions.{expr, min, max, when, lit}
-      val perUser = readEventsNanos(s, d)
-        .groupBy(col("user_id"))
-        .agg(min(col("ts")).as("t0"),
-          min(when(col("event_type") === "purchase", col("ts"))).as("tp"),
-          max(col("ts")).as("tl"))
-        .select(expr("user_id % 4").as("cohort"),
-          expr("(coalesce(tp, tl) - t0) DIV 86400000000000").as("dur"),
-          when(col("tp").isNotNull, lit(1L)).otherwise(lit(0L)).as("ev"))
-      operators.Eval.nelsonAalen(perUser, "dur", "ev", Seq("cohort"))
-        .orderBy(col("cohort"), col("t"))
-    }),
-    "q_pacf" -> ((s, d) => {
-      // per-supplier partial autocorrelation at lags 1-3 — the exact
-      // integer rho ratios through the unrolled Durbin-Levinson trees
-      load(s, d)
-      operators.Stats.pacf(dailyBarsW(s), "close", Seq("l_suppkey"),
-          Seq("l_shipdate"), scale = 2)
-        .orderBy(col("l_suppkey"))
-    }),
-    "q_theil_sen" -> ((s, d) => {
-      // daily cross-sectional Theil-Sen fit of next-day move on 5-day
-      // momentum over the bounded 100-supplier panel — the robust twin
-      // of q_corr_regress on the q_kendall signal frame
-      load(s, d)
-      import org.apache.spark.sql.expressions.Window
-      import org.apache.spark.sql.functions.{lag, lead}
-      val w = Window.partitionBy(col("l_suppkey")).orderBy(col("l_shipdate"))
-      val sig = dailyBars(s).filter(col("l_suppkey") < 100)
-        .select(col("l_suppkey"), col("l_shipdate"),
-          (col("close") - lag(col("close"), 5).over(w)).as("mom"),
-          (lead(col("close"), 1).over(w) - col("close")).as("fwd"))
-      operators.Stats.theilSen(sig, Seq("l_shipdate"), "mom", "fwd",
-          scale = 2)
-        .orderBy(col("l_shipdate"))
-    }),
-    "q_agreement" -> ((s, d) => {
-      // per-day Cohen's kappa + MCC at the q_classification operating
-      // point — chance-corrected agreement beside the raw rates; exact
-      // integer numerators, one division each
-      load(s, d)
-      import org.apache.spark.sql.functions.{expr, lit, when}
-      val ev = readEventsNanos(s, d)
-        .select(expr("ts DIV 86400000000000").as("day"), col("value"),
-          when(col("event_type") === "purchase", lit(1)).otherwise(lit(0))
-            .as("label"))
-      operators.Eval.agreement(ev, "value", "label", 35.0, Seq("day"))
-        .orderBy(col("day"))
-    }),
-    "q_log_loss" -> ((s, d) => {
-      // per-day cross-entropy of the value-derived probability against
-      // the purchase label — 10-dp quantized terms, order-free exact
-      // mean (no pinned fold needed)
-      load(s, d)
-      import org.apache.spark.sql.functions.{expr, lit, when}
-      val ev = readEventsNanos(s, d)
-        .select(expr("ts DIV 86400000000000").as("day"),
-          (col("value") / lit(100.0)).as("p"),
-          when(col("event_type") === "purchase", lit(1)).otherwise(lit(0))
-            .as("label"))
-      operators.Eval.logLoss(ev, "p", "label", Seq("day"))
-        .orderBy(col("day"))
-    }),
-    "q_roc_curve" -> ((s, d) => {
-      // per-event-type ROC sweep of value against the user-parity label
-      // — one row per distinct score, cumulative exact rates
-      load(s, d)
-      import org.apache.spark.sql.functions.expr
-      val ev = readEventsNanos(s, d)
-        .select(col("event_type"), col("value"),
-          expr("user_id % 2").as("label"))
-      operators.Eval.rocCurve(ev, "value", "label", Seq("event_type"))
-        .orderBy(col("event_type"), col("threshold"))
-    }),
-    "q_hurst" -> ((s, d) => {
-      // per-supplier Hurst exponent of the close series over the
-      // 8/16/32/64 block ladder — integer R/S blocks, quantized block
-      // terms, baked-abscissa regression
-      load(s, d)
-      operators.Rolling.hurst(dailyBarsW(s), "close", Seq("l_suppkey"),
-          Seq("l_shipdate"), blockSizes = Seq(8, 16, 32, 64), scale = 2)
-        .orderBy(col("l_suppkey"))
-    }),
-    "q_ljung_box" -> ((s, d) => {
-      // per-supplier Ljung-Box Q at m=5 on the close series — the
-      // residual-whiteness screen; all five lag shifts on one keyed
-      // sort, exact integer rho numerators, fixed k-fold for Q
-      load(s, d)
-      operators.Stats.ljungBox(dailyBarsW(s), "close", Seq("l_suppkey"),
-          Seq("l_shipdate"), m = 5, scale = 2)
-        .orderBy(col("l_suppkey"))
-    }),
-    "q_kendall" -> ((s, d) => {
-      // daily cross-sectional Kendall tau-b of 5-day momentum vs
-      // next-day move over a BOUNDED 100-supplier panel (the operator's
-      // within-group O(n^2) contract) — the concordance twin of q_ic
-      load(s, d)
-      import org.apache.spark.sql.expressions.Window
-      import org.apache.spark.sql.functions.{lag, lead}
-      val w = Window.partitionBy(col("l_suppkey")).orderBy(col("l_shipdate"))
-      val sig = dailyBars(s).filter(col("l_suppkey") < 100)
-        .select(col("l_suppkey"), col("l_shipdate"),
-          (col("close") - lag(col("close"), 5).over(w)).as("mom"),
-          (lead(col("close"), 1).over(w) - col("close")).as("fwd"))
-      operators.Stats.kendallTau(sig, Seq("l_shipdate"), "mom", "fwd",
-          scale = 2)
-        .orderBy(col("l_shipdate"))
-    }),
-    "q_bh_adjust" -> ((s, d) => {
-      // Benjamini-Hochberg over a per-type battery: each event's p is
-      // its exact fractional rank of value within the type (a
-      // deterministic rational), then the step-up suffix-min adjustment
-      load(s, d)
-      import org.apache.spark.sql.expressions.Window
-      import org.apache.spark.sql.functions.{count, lit, row_number}
-      val fw = Window.partitionBy(col("event_type"))
-      val ow = fw.orderBy(col("value"), col("event_id"))
-      val p = (row_number().over(ow) - lit(1)).cast("double") /
-        (count(lit(1)).over(fw) - lit(1)).cast("double")
-      val base = readEventsNanos(s, d)
-        .select(col("event_type"), col("event_id"), p.as("p"))
-      operators.Stats.bhAdjust(base, Seq("event_type"), "p", "event_id",
-          alpha = 0.05)
-        .select(col("event_type"), col("event_id"), col("p"),
-          col("p_rank").cast("long").as("p_rank"), col("p_adj"),
-          col("significant"))
-        .orderBy(col("event_type"), col("event_id"))
-    }),
-    "q_harmonic" -> ((s, d) => {
-      // per-supplier periodogram power at periods 5/7/21 with baked
-      // 12-dp integer twiddle factors — exact decimal quadrature sums,
-      // mean removal multiplied through by n
-      load(s, d)
-      operators.Rolling.harmonicPower(dailyBarsW(s), "close",
-          Seq("l_suppkey"), Seq("l_shipdate"), Seq(5, 7, 21), scale = 2)
-        .orderBy(col("l_suppkey"), col("period"))
-    }),
-    "q_amihud" -> ((s, d) => {
-      // per-supplier Amihud illiquidity over the daily bars — exact
-      // quantized terms, pinned-order whole-series fold
-      load(s, d)
-      operators.Rolling.amihud(dailyBarsW(s), "close", "volume",
-          Seq("l_suppkey"), Seq("l_shipdate"), scale = 2)
-        .orderBy(col("l_suppkey"))
-    }),
-    "q_ohlc_vol" -> ((s, d) => {
-      // per-supplier Parkinson / Garman–Klass / Rogers–Satchell range
-      // volatilities over the daily bars — the intrabar (H/L/O/C)
-      // information close-only q_realized_vol throws away
-      load(s, d)
-      operators.Rolling.ohlcVolatility(dailyBars(s), "open", "high",
-          "low", "close", Seq("l_suppkey"), Seq("l_shipdate"))
-        .orderBy(col("l_suppkey"))
-    }),
-    "q_cs_spread" -> ((s, d) => {
-      // Corwin–Schultz high–low effective-spread estimate per supplier —
-      // the quote-free spread readout beside q_roll_spread's serial
-      // covariance form
-      load(s, d)
-      operators.Rolling.corwinSchultz(dailyBarsW(s), "high", "low",
-          Seq("l_suppkey"), Seq("l_shipdate"))
-        .orderBy(col("l_suppkey"))
-    }),
-    "q_kyle_lambda" -> ((s, d) => {
-      // Kyle's lambda per supplier: through-origin slope of price change
-      // on tick-rule signed volume — exact integer product sums, one
-      // division; the price-impact companion to q_amihud
-      load(s, d)
-      operators.Rolling.kyleLambda(dailyBarsW(s), "close", "volume",
-          Seq("l_suppkey"), Seq("l_shipdate"), scale = 2)
-        .orderBy(col("l_suppkey"))
-    }),
-    "q_variance_ratio" -> ((s, d) => {
-      // Lo–MacKinlay VR(5) per supplier: q-period vs 1-period return
-      // variance with the homoskedastic z — the random-walk test beside
-      // q_dickey_fuller, integer-exact up to one pinned double tree
-      load(s, d)
-      operators.Rolling.varianceRatio(dailyBarsW(s), "close",
-          Seq("l_suppkey"), Seq("l_shipdate"), q = 5)
-        .orderBy(col("l_suppkey"))
-    }),
-    "q_seasonal" -> ((s, d) => {
-      // classical additive decomposition of the close at period 7 —
-      // integer 2x-MA trend numerators, decimal phase means, pinned
-      // phase-fold centering
-      load(s, d)
-      operators.Resample.seasonalDecompose(dailyBarsW(s)
-          .select(col("l_suppkey"), col("l_shipdate"), col("close")),
-          "close", Seq("l_suppkey"), Seq("l_shipdate"), period = 7,
-          scale = 2)
-        .orderBy(col("l_suppkey"), col("l_shipdate"))
-    }),
-    "q_anova" -> ((s, d) => {
-      // per-day one-way ANOVA F across all five event types — the k-arm
-      // mean-shift readout beside q_welch_t; exact per-variant integer
-      // sums in one pass, variant-ordered fold for the one double
-      // reduction (B = sum s_g^2/n_g)
-      load(s, d)
-      import org.apache.spark.sql.functions.expr
-      val ev = readEventsNanos(s, d)
-        .select(expr("ts DIV 86400000000000").as("day"),
-          col("event_type"), col("value"))
-      operators.Stats.anovaF(ev, "value", "event_type", Seq("day"), scale = 2)
-        .orderBy(col("day"))
-    }),
-    "q_kruskal" -> ((s, d) => {
-      // per-day Kruskal–Wallis H across the five event types — the
-      // nonparametric k-arm companion (doubled average ranks, per-row
-      // tie correction, variant-ordered fold)
-      load(s, d)
-      import org.apache.spark.sql.functions.expr
-      val ev = readEventsNanos(s, d)
-        .select(expr("ts DIV 86400000000000").as("day"),
-          col("event_type"), col("value"))
-      operators.Stats.kruskalWallis(ev, "value", "event_type", Seq("day"),
-          scale = 2)
-        .orderBy(col("day"))
-    }),
-    "q_wasserstein" -> ((s, d) => {
-      // 1-Wasserstein (earth-mover) distance between purchase and view
-      // event-value distributions — the how-far-did-mass-move drift
-      // metric beside q_ks's largest-gap; integer step terms summed as
-      // DECIMAL, one final division chain
-      load(s, d)
-      val ev = readEventsNanos(s, d)
-      operators.Divergence.wasserstein1(
-        ev.filter(col("event_type") === "purchase").select("value"),
-        ev.filter(col("event_type") === "view").select("value"),
-        "value", scale = 2)
-    }),
-    "q_classification" -> ((s, d) => {
-      // per-day thresholded classification report (value >= 35 predicts
-      // purchase) — the deployment-facing confusion-matrix readout
-      // beside the threshold-free q_auc; exact counts, one division per
-      // rate, F1 in the one-division form
-      load(s, d)
-      import org.apache.spark.sql.functions.{expr, lit, when}
-      val ev = readEventsNanos(s, d)
-        .select(expr("ts DIV 86400000000000").as("day"), col("value"),
-          when(col("event_type") === "purchase", lit(1)).otherwise(lit(0))
-            .as("label"))
-      operators.Eval.classificationReport(ev, "value", "label", 35.0,
-          Seq("day"))
-        .orderBy(col("day"))
-    }),
-    "q_interpolate" -> ((s, d) => {
-      // per-supplier linear time interpolation of planted close-price
-      // gaps (every day % 5 == 2 nulled) over the daily-bar date axis —
-      // interior repair only, edges stay NULL; one keyed exchange, two
-      // frame passes carrying (t, v) anchor structs
-      load(s, d)
-      import org.apache.spark.sql.functions.{expr, lit, when}
-      val bars = dailyBarsW(s)
-        .withColumn("day", expr("CAST(unix_date(CAST(l_shipdate AS DATE)) AS BIGINT)"))
-        .withColumn("c",
-          when(col("day") % 5 === 2, lit(null)).otherwise(col("close")))
-      operators.Resample.interpolate(bars, Seq("l_suppkey"), "day", "c")
-        .select(col("l_suppkey"), col("day"), col("c"), col("c_interp"))
-        .orderBy(col("l_suppkey"), col("day"))
-    }),
-    "q_text_stats" -> ((s, d) => {
-      load(s, d)
-      operators.TextOps.textStats(s.table("documents"), "doc_id", "text")
-        .orderBy(col("doc_id"))
-    }),
-    "q_oov_rate" -> ((s, d) => {
-      // per-doc out-of-vocabulary rate vs the corpus's own top-1000
-      // vocabulary — the no-external-wordlist gibberish screen
-      load(s, d)
-      operators.TextOps.oovRate(s.table("documents"), "doc_id", "text",
-          vocabSize = 1000)
-        .orderBy(col("doc_id"))
-    }),
-    "q_ngram_diversity" -> ((s, d) => {
-      // corpus distinct-n-gram ratios per source (n = 1..3) — the
-      // generation-diversity / phrase-level-repetition readout; exact
-      // integer counts, one (source, n, gram) shuffle
-      load(s, d)
-      operators.TextOps.ngramDiversity(s.table("documents"), "text",
-          Seq("source"), maxN = 3)
-        .orderBy(col("source"), col("n"))
-    }),
-    "q_curation" -> ((s, d) => {
-      // end-to-end curation: quality/language filter -> exact dedup -> kept
-      // docs with their stats. The composite a training-data pipeline runs.
-      load(s, d)
-      import org.apache.spark.sql.functions.{md5 => md5f, min => minf}
-      val docs = s.table("documents")
-      val stats = operators.TextOps.textStats(docs, "doc_id", "text")
-      val filtered = docs.join(stats, "doc_id")
-        .filter(col("lang_pred") === "en" &&
-          col("quality_score") >= 0.2 && col("n_tokens") >= 10)
-      val kept = filtered.groupBy(md5f(col("text")).as("text_md5"))
-        .agg(minf(col("doc_id")).as("keep_id"))
-      kept.join(
-          stats.select(col("doc_id").as("keep_id"), col("n_tokens"), col("quality_score")),
-          "keep_id")
-        .select("keep_id", "text_md5", "n_tokens", "quality_score")
-        .orderBy("keep_id")
-    }),
-    "q_token_count" -> ((s, d) => {
-      load(s, d)
-      s.table("documents").select(
-        col("doc_id"),
-        operators.TextOps.tokenCount(col("text")).as("ws_tokens"),
-        operators.TextOps.bpeTokenCount(col("text")).as("bpe_tokens"))
-        .orderBy(col("doc_id"))
-    }),
-    "q_media_features" -> ((s, d) => {
-      // PLUMBING-ONLY gate — the decoder here is the clearly-marked
-      // byte-histogram stand-in (fakeDecode), NOT a codec; what this gate
-      // proves is the mapPartitions plug-point end-to-end (binary payload
-      // → per-partition iterator → fixed-width feature vector), hash-exact.
-      // The REAL codec gates are q_media_decode (PNG), q_media_audio
-      // (WAV), and q_media_video (AVI demux + per-frame decode).
-      load(s, d)
-      // oracle precondition: the DuckDB replica of the byte-histogram counts
-      // CHARACTERS per bucket, equal to the Scala per-BYTE histogram only
-      // for single-byte (ASCII) text — asserted per row on the gated corpus
-      import org.apache.spark.sql.functions.{length, octet_length}
-      val docs = s.table("documents").withColumn("text",
-        textChecked(col("text"),
-          length(col("text")) =!= octet_length(col("text").cast("binary")),
-          "q_media_features oracle precondition violated: non-ASCII document"))
-      val m = operators.Multimodal.withMedia(docs, "doc_id", "text")
-      val feats = operators.Multimodal.decodeFeatures(s, m, "doc_id")
-      // project the vector to scalar columns: float-array columns defeat the
-      // gate's row-sort + hash compare, scalars don't
-      import org.apache.spark.sql.functions.element_at
-      feats.select(col("doc_id") +:
-          (0 until 16).map(i => element_at(col("features"), i + 1).as(f"f$i%02d")): _*)
-        .orderBy(col("doc_id"))
-    }),
-    "q_media_decode" -> ((s, d) => {
-      // REAL codec round-trip at the same plug-point: text → javax.imageio
-      // PNG ENCODE (per-partition) → binary media column → javax.imageio
-      // DECODE → grayscale pixel histogram. Grayscale PNG is lossless, so
-      // the oracle replays the pixel function (byte at i mod len, 256
-      // pixels) from the text alone — the gate proves a genuine image
-      // codec ran, not the byte-histogram stand-in.
-      load(s, d)
-      // same ASCII precondition as q_media_features: the oracle's ascii()
-      // indexes characters, the PNG pixels index bytes
-      import org.apache.spark.sql.functions.{length, octet_length}
-      val docs = s.table("documents").withColumn("text",
-        textChecked(col("text"),
-          length(col("text")) =!= octet_length(col("text").cast("binary")),
-          "q_media_decode oracle precondition violated: non-ASCII document"))
-      val media = operators.Multimodal.withMediaPng(s, docs, "doc_id", "text")
-      val feats = operators.Multimodal.decodeImageFeatures(s, media, "doc_id")
-      import org.apache.spark.sql.functions.element_at
-      feats.select(col("doc_id") +:
-          (0 until 16).map(i => element_at(col("features"), i + 1).as(f"f$i%02d")): _*)
-        .orderBy(col("doc_id"))
-    }),
-    "q_media_resize" -> ((s, d) => {
-      // REAL resize in the codec chain: text → PNG encode (16×16) →
-      // javax.imageio decode → integer nearest-neighbor resample to 8×8
-      // → PNG re-encode → decode → histogram over the 64 kept pixels.
-      // NN keeps pixel VALUES intact, so the oracle replays the sampled
-      // grid (src index 2dy·16 + 2dx, byte mod len) from the text alone
-      // — proving decode, geometry arithmetic, and re-encode all ran.
-      load(s, d)
-      import org.apache.spark.sql.functions.{length, octet_length, element_at}
-      val docs = s.table("documents").withColumn("text",
-        textChecked(col("text"),
-          length(col("text")) =!= octet_length(col("text").cast("binary")),
-          "q_media_resize oracle precondition violated: non-ASCII document"))
-      val media = operators.Multimodal.withMediaPng(s, docs, "doc_id", "text")
-      val small = operators.Multimodal.resizeImages(s, media, "doc_id",
-        outW = 8, outH = 8)
-      val feats = operators.Multimodal.decodeImageFeatures(s, small, "doc_id")
-      feats.select(col("doc_id") +:
-          (0 until 16).map(i => element_at(col("features"), i + 1).as(f"f$i%02d")): _*)
-        .orderBy(col("doc_id"))
-    }),
-    "q_media_video" -> ((s, d) => {
-      // REAL video round-trip: text → per-frame PNG encode → our RIFF/AVI
-      // muxer (fourcc MPNG, the lossless motion-PNG MJPEG variant) →
-      // container walk + per-frame javax.imageio decode → pooled pixel
-      // histogram + container metadata. Lossless frames let the oracle
-      // replay frame f's pixel i = byte (i+f) mod len from the text alone
-      // — the gate proves a genuine demux-and-decode ran end-to-end.
-      load(s, d)
-      import org.apache.spark.sql.functions.{length, octet_length}
-      val docs = s.table("documents").withColumn("text",
-        textChecked(col("text"),
-          length(col("text")) =!= octet_length(col("text").cast("binary")),
-          "q_media_video oracle precondition violated: non-ASCII document"))
-      val media = operators.Multimodal.withMediaAvi(s, docs, "doc_id", "text")
-      val feats = operators.Multimodal.decodeVideoFeatures(s, media, "doc_id")
-      import org.apache.spark.sql.functions.element_at
-      feats.select(Seq(col("doc_id"), col("n_frames"), col("width"),
-          col("height")) ++
-          (0 until 16).map(i => element_at(col("features"), i + 1).as(f"f$i%02d")): _*)
-        .orderBy(col("doc_id"))
-    }),
-    "q_media_video_mjpeg" -> ((s, d) => {
-      // REAL lossy video codec end-to-end: text → per-frame javax.imageio
-      // JPEG encode (explicit quality 1.0) → RIFF/AVI mux (fourcc MJPG —
-      // true motion-JPEG, the codec a real MJPEG pipeline carries) →
-      // container walk + fccHandler-dispatched per-frame JPEG decode →
-      // per-pixel comparison against the generator contract. JPEG is
-      // lossy, so exact pixels are not SQL-replayable the way the
-      // motion-PNG gate's are; the oracle instead pins the DISCRETIZED
-      // fidelity band floor(mae/8) = 0 (measured mae ≲ 2 at quality 1.0,
-      // an order of magnitude inside the band edge) plus the exact
-      // container geometry — a broken demux, the wrong frame codec, or
-      // garbage pixels all land bands away from 0, and the lossless MPNG
-      // path stays separately pixel-exact under q_media_video.
-      load(s, d)
-      import org.apache.spark.sql.functions.{length, octet_length}
-      val docs = s.table("documents").withColumn("text",
-        textChecked(col("text"),
-          length(col("text")) =!= octet_length(col("text").cast("binary")),
-          "q_media_video_mjpeg oracle precondition violated: non-ASCII document"))
-      val media = operators.Multimodal.withMediaAviMjpeg(s, docs, "doc_id", "text")
-      operators.Multimodal.decodeVideoFidelity(s, media, "doc_id", "text")
-        .orderBy(col("doc_id"))
-    }),
-    "q_media_video_raw" -> ((s, d) => {
-      // the third real-world AVI variant: UNCOMPRESSED bottom-up BGR24
-      // DIB frames (strh fccHandler 'DIB ', strf biCompression BI_RGB) —
-      // the classic capture-tool format, no codec at all. Lossless, so
-      // the pooled-histogram oracle is the SAME pixel-exact DuckDB twin
-      // as the motion-PNG gate; the bottom-up row order and stride walk
-      // are position-verified by the fidelity spec (histograms alone are
-      // row-order-invariant, mae is not).
-      load(s, d)
-      import org.apache.spark.sql.functions.{length, octet_length}
-      val docs = s.table("documents").withColumn("text",
-        textChecked(col("text"),
-          length(col("text")) =!= octet_length(col("text").cast("binary")),
-          "q_media_video_raw oracle precondition violated: non-ASCII document"))
-      val media = operators.Multimodal.withMediaAviRaw(s, docs, "doc_id", "text")
-      val feats = operators.Multimodal.decodeVideoFeatures(s, media, "doc_id")
-      import org.apache.spark.sql.functions.element_at
-      feats.select(Seq(col("doc_id"), col("n_frames"), col("width"),
-          col("height")) ++
-          (0 until 16).map(i => element_at(col("features"), i + 1).as(f"f$i%02d")): _*)
-        .orderBy(col("doc_id"))
-    }),
-    "q_compress_ratio" -> ((s, d) => {
-      // compression-ratio quality screen (DEFLATE, JDK zlib). DEFLATE
-      // itself is not SQL-expressible, so the oracle joins a committed
-      // golden fixture of deflate byte counts keyed by md5(text) — valid
-      // at every SF corpus (generated by PYTHON zlib over all three SF
-      // corpora — an independent driver of the same codec, verified
-      // bit-equal to the JDK Deflater) and recomputes everything else
-      // (byte lengths, the ratio division) in DuckDB
-      load(s, d)
-      import org.apache.spark.sql.functions.col
-      operators.TextOps.compressionRatio(s, s.table("documents"),
-          "doc_id", "text")
-        .orderBy(col("doc_id"))
-    }),
-    "q_auc" -> ((s, d) => {
-      // grouped ROC AUC (Mann–Whitney midranks) of the event value score
-      // predicting the purchase label, one group per epoch day — the
-      // quality-classifier eval metric, run as aggregations + one window
-      // over the distinct-score frame
-      load(s, d)
-      import org.apache.spark.sql.functions.{expr, lit, when}
-      val ev = readEventsNanos(s, d)
-        .select(expr("ts DIV 86400000000000").as("day"), col("value"),
-          when(col("event_type") === "purchase", lit(1)).otherwise(lit(0))
-            .as("label"))
-      operators.Eval.binaryAuc(ev, "value", "label", Seq("day"))
-        .orderBy(col("day"))
-    }),
-    "q_rrf_fusion" -> ((s, d) => {
-      // reciprocal-rank fusion of two deterministic per-user rankers
-      // (value-top-10 and recency-top-10): the training-free multi-
-      // retriever merge; system-ordered term folds, total tie-break
-      load(s, d)
-      import org.apache.spark.sql.expressions.Window
-      import org.apache.spark.sql.functions.{lit, row_number}
-      val ev = readEventsNanos(s, d)
-      def ranker(ord: Seq[org.apache.spark.sql.Column], name: String) =
-        ev.select(col("user_id"), col("event_id"),
-            row_number().over(Window.partitionBy(col("user_id"))
-              .orderBy(ord: _*)).as("rnk"))
-          .filter(col("rnk") <= 10).withColumn("sys", lit(name))
-      val both = ranker(Seq(col("value").desc, col("event_id")), "value")
-        .unionByName(ranker(Seq(col("ts").desc, col("event_id")), "recency"))
-      operators.Eval.rrfFusion(both, "user_id", "event_id", "rnk", "sys")
-        .orderBy(col("user_id"), col("fused_rank"))
-    }),
-    "q_retrieval_eval" -> ((s, d) => {
-      // per-user retrieval grade of the value-ranked event list against
-      // the purchase set — recall/MRR/NDCG@10 with the log₂ discount
-      // ladder baked as driver-side literal doubles (no engine libm in
-      // the data path); the ranker here is a deterministic
-      // (value DESC, event_id) row_number
-      load(s, d)
-      import org.apache.spark.sql.expressions.Window
-      import org.apache.spark.sql.functions.row_number
-      val ev = readEventsNanos(s, d)
-      val ranked = ev.select(col("user_id"), col("event_id"),
-        row_number().over(Window.partitionBy(col("user_id"))
-          .orderBy(col("value").desc, col("event_id"))).as("rnk"))
-      val rel = ev.filter(col("event_type") === "purchase")
-        .select(col("user_id"), col("event_id"))
-      operators.Eval.rankingMetrics(ranked, rel, "user_id", "event_id",
-          "rnk", k = 10)
-        .orderBy(col("user_id"))
-    }),
-    "q_mutual_info" -> ((s, d) => {
-      // binned mutual information between shipment quantity and extended
-      // price (10×10 grid) — numeric-pair dependence screen; one row per
-      // occupied cell, callers sum mi_term for the scalar
-      load(s, d)
-      operators.Stats.mutualInfoBins(s.table("lineitem"),
-          "l_quantity", "l_extendedprice",
-          nBinsX = 10, loX = 0.0, hiX = 50.0,
-          nBinsY = 10, loY = 0.0, hiY = 110000.0)
-        .orderBy(col("bin_x"), col("bin_y"))
-    }),
-    "q_welch_t" -> ((s, d) => {
-      // per-day Welch's t between purchase and view event values — the
-      // A/B metric readout; scale=2 makes the sufficient statistics
-      // exact scaled-BIGINT sums (events carry 2-dp values), so t and
-      // the Welch–Satterthwaite df replay bit-for-bit
-      load(s, d)
-      import org.apache.spark.sql.functions.expr
-      val ev = readEventsNanos(s, d)
-        .filter(col("event_type").isin("purchase", "view"))
-        .select(expr("ts DIV 86400000000000").as("day"),
-          col("event_type"), col("value"))
-      operators.Stats.welchT(ev, "value", "event_type",
-          "purchase", "view", Seq("day"), scale = 2)
-        .orderBy(col("day"))
-    }),
-    "q_connors_rsi" -> ((s, d) => {
-      // Connors RSI (3/2/100) over daily closes — native RSIs over the
-      // close and the gaps-and-islands streak, plus the exact prior-100
-      // return percent rank
-      load(s, d)
-      import org.apache.spark.sql.functions.col
-      operators.Rolling.connorsRsi(dailyBarsW(s), "close",
-          Seq("l_suppkey"), Seq("l_shipdate"))
-        .select(col("l_suppkey"), col("l_shipdate"),
-          col("streak"), col("pct_rank"), col("crsi"))
-        .orderBy(col("l_suppkey"), col("l_shipdate"))
-    }),
-    "q_stoch_rsi" -> ((s, d) => {
-      // stochastic RSI (14/14) over daily closes — the stochastic layer
-      // as exact selections over the native RSI recurrence
-      load(s, d)
-      import org.apache.spark.sql.functions.col
-      operators.Rolling.stochRsi(dailyBarsW(s), "close",
-          Seq("l_suppkey"), Seq("l_shipdate"))
-        .select(col("l_suppkey"), col("l_shipdate"), col("stoch_rsi"))
-        .orderBy(col("l_suppkey"), col("l_shipdate"))
-    }),
-    "q_tsi" -> ((s, d) => {
-      // True Strength Index (25/13) over daily closes — four native EMA
-      // layers on one sort, frozen-NULL first row
-      load(s, d)
-      import org.apache.spark.sql.functions.col
-      operators.Rolling.tsi(dailyBarsW(s), "close",
-          Seq("l_suppkey"), Seq("l_shipdate"))
-        .select(col("l_suppkey"), col("l_shipdate"), col("tsi"))
-        .orderBy(col("l_suppkey"), col("l_shipdate"))
-    }),
-    "q_risk_ratios" -> ((s, d) => {
-      // per-supplier Sortino/Omega/Calmar over the log-return series —
-      // the downside companions to q_perf_summary's Sharpe; annualized
-      // by sqrt(252) like the vol gates
-      load(s, d)
-      import org.apache.spark.sql.functions.col
-      val rets = operators.Rolling.logReturns(dailyBarsW(s), "close",
-        Seq("l_suppkey"), Seq("l_shipdate"))
-      operators.Rolling.riskRatios(rets, "ret_log",
-          Seq("l_suppkey"), Seq("l_shipdate"),
-          annualize = math.sqrt(252.0))
-        .orderBy(col("l_suppkey"))
-    }),
-    "q_corr_matrix" -> ((s, d) => {
-      // pairwise close-correlation matrix over a BOUNDED universe — the
-      // top-100 suppliers by total traded volume (deterministic suppkey
-      // tie-break), the documented mitigation for the K²-by-construction
-      // pair growth (an unbounded K would quadruple pairs per corpus
-      // doubling; the 10× scale probe OOM-proved it). ONE date-co-located
-      // self-join, five BIGINT sums per pair, the corrBeta clamp tree.
-      load(s, d)
-      import org.apache.spark.sql.functions.{broadcast, col, round, sum}
-      val bars = dailyBars(s)
-      val universe = bars.groupBy(col("l_suppkey"))
-        .agg(sum(round(col("volume") * 100).cast("long")).as("__vol"))
-        .orderBy(col("__vol").desc, col("l_suppkey"))
-        .limit(100).select("l_suppkey")
-      operators.Stats.pairwiseCorr(bars.join(broadcast(universe), "l_suppkey"),
-          "l_suppkey", "l_shipdate", "close", minOverlap = 30)
-        .orderBy(col("key_a"), col("key_b"))
-    }),
-    "q_mann_whitney" -> ((s, d) => {
-      // per-day Mann–Whitney U between purchase and view values — the
-      // nonparametric A/B readout beside q_welch_t; doubled average
-      // ranks keep the whole rank layer exact integers
-      load(s, d)
-      import org.apache.spark.sql.functions.expr
-      val ev = readEventsNanos(s, d)
-        .filter(col("event_type").isin("purchase", "view"))
-        .select(expr("ts DIV 86400000000000").as("day"),
-          col("event_type"), col("value"))
-      operators.Stats.mannWhitney(ev, "value", "event_type",
-          "purchase", "view", Seq("day"), scale = 2)
-        .orderBy(col("day"))
-    }),
-    "q_moments" -> ((s, d) => {
-      // per-supplier skewness / excess kurtosis / Jarque–Bera from four
-      // exact DECIMAL power sums — one map-side-combinable pass
-      load(s, d)
-      operators.Stats.moments(s.table("lineitem"), "l_quantity",
-          Seq("l_suppkey"))
-        .orderBy(col("l_suppkey"))
-    }),
-    "q_transitions" -> ((s, d) => {
-      // first-order Markov transition matrix of per-user event streams
-      // (counts, row-conditional p, mean inter-event gap in MICROS —
-      // DuckDB truncates nano timestamps to µs, so the gate compares at
-      // the shared precision); event_id breaks ties layout-exactly
-      load(s, d)
-      import org.apache.spark.sql.functions.expr
-      val ev = readEventsNanos(s, d)
-        .select(col("user_id"), col("event_id"),
-          expr("ts DIV 1000").as("ts_us"), col("event_type"))
-      operators.EventAnalytics.transitions(ev,
-          "user_id", "ts_us", "event_type", "event_id")
-        .orderBy(col("from_type"), col("to_type"))
-    }),
-    "q_transition_entropy" -> ((s, d) => {
-      // per-user transition entropy (behavioral regularity / bot score)
-      // at µs precision with event_id tie-break
-      load(s, d)
-      import org.apache.spark.sql.functions.expr
-      val ev = readEventsNanos(s, d)
-        .select(col("user_id"), col("event_id"),
-          expr("ts DIV 1000").as("ts_us"), col("event_type"))
-      operators.EventAnalytics.transitionEntropy(ev,
-          "user_id", "ts_us", "event_type", "event_id")
-        .orderBy(col("user_id"))
-    }),
-    "q_avg_precision" -> ((s, d) => {
-      // grouped average precision (step-wise PR-AUC) of the event value
-      // score predicting the purchase label, one group per epoch day —
-      // the class-imbalance-robust companion to q_auc; descending
-      // threshold fold makes the summation order engine-replayable
-      load(s, d)
-      import org.apache.spark.sql.functions.{expr, lit, when}
-      val ev = readEventsNanos(s, d)
-        .select(expr("ts DIV 86400000000000").as("day"), col("value"),
-          when(col("event_type") === "purchase", lit(1)).otherwise(lit(0))
-            .as("label"))
-      operators.Eval.averagePrecision(ev, "value", "label", Seq("day"))
-        .orderBy(col("day"))
-    }),
-    "q_calibration" -> ((s, d) => {
-      // fixed-width reliability bins over the same score/label pair:
-      // empirical positive rate per score decile band
-      load(s, d)
-      import org.apache.spark.sql.functions.{lit, when}
-      val ev = readEventsNanos(s, d)
-        .select(col("value"),
-          when(col("event_type") === "purchase", lit(1)).otherwise(lit(0))
-            .as("label"))
-      operators.Eval.calibrationBins(ev, "value", "label",
-          nBins = 10, lo = 0.0, hi = 500.0)
-        .orderBy(col("bin"))
-    }),
-    "q_jsd" -> ((s, d) => {
-      // symmetric corpus divergence: JSD between English and non-English
-      // documents over the combined top-100 vocabulary
-      load(s, d)
-      val docs = s.table("documents")
-      operators.Divergence.jsDivergence(
-          docs.filter(col("lang") === "en"),
-          docs.filter(col("lang") =!= "en"),
-          "text", topK = 100)
-    }),
-    "q_negative_pairs" -> ((s, d) => {
-      // deterministic contrastive negatives: hash-ring neighbors, k=2,
-      // 16 buckets — same pairs on any layout/engine/retry
-      load(s, d)
-      operators.Sampling.negativePairs(
-          s.table("documents").select("doc_id"), "doc_id", k = 2,
-          nBuckets = 16)
-        .orderBy(col("anchor"), col("j"))
-    }),
-    "q_temperature_rates" -> ((s, d) => {
-      // temperature-scaled mixture rates (τ=0.5, 300-row target) over the
-      // document sources — ordered pow-fold + 10-dp rounding
-      load(s, d)
-      operators.Sampling.temperatureRates(s.table("documents"), "source",
-          tau = 0.5, targetRows = 300L)
-        .orderBy(col("source"))
-    }),
-    "q_temperature_sample" -> ((s, d) => {
-      // the realized mixture: per-source membership fingerprints; the
-      // oracle recomputes the rates AND the hash thresholds in SQL
-      load(s, d)
-      import org.apache.spark.sql.functions.{count, lit, sum}
-      operators.Sampling.temperatureSample(s.table("documents"), "doc_id",
-          "source", tau = 0.5, targetRows = 300L)
-        .groupBy(col("source"))
-        .agg(count(lit(1)).as("n"), sum(col("doc_id")).as("sum_id"))
-        .orderBy(col("source"))
-    }),
-    "q_psi" -> ((s, d) => {
-      // population-stability-index drift screen: pre- vs post-1995
-      // shipment quantity distributions, 10 fixed bins over [0, 50),
-      // add-one smoothing, one row per bin (drift dashboards plot bins;
-      // callers sum psi_term for the scalar)
-      load(s, d)
-      val li = s.table("lineitem")
-      operators.Divergence.psi(
-          li.filter(col("l_shipdate") < "1995-01-01"),
-          li.filter(col("l_shipdate") >= "1995-01-01"),
-          "l_quantity", nBins = 10, lo = 0.0, hi = 50.0)
-        .orderBy(col("bin"))
-    }),
-    "q_kcore" -> ((s, d) => {
-      // 5-core of the sparse (quantity ≥ 48) co-supplier graph — two
-      // peel rounds at sf0.01; the oracle unrolls four (extra rounds
-      // are no-ops past the fixpoint)
-      load(s, d)
-      val li = s.table("lineitem")
-        .filter(col("l_quantity") >= 48.0)
-        .select(col("l_orderkey").as("ok"), col("l_suppkey"))
-      val edges = li.select(col("ok"), col("l_suppkey").as("s1"))
-        .join(li.select(col("ok"), col("l_suppkey").as("s2")), "ok")
-        .filter(col("s1") < col("s2"))
-        .select("s1", "s2").distinct()
-      operators.Graph.kCore(edges, "s1", "s2", k = 5)
-        .orderBy(col("node"))
-    }),
-    "q_assortativity" -> ((s, d) => {
-      // degree assortativity of the co-supplier graph — one-row
-      // structure fingerprint, DECIMAL five-sums + the clamp tree
-      load(s, d)
-      val li = s.table("lineitem")
-        .filter(col("l_quantity") >= 48.0)
-        .select(col("l_orderkey").as("ok"), col("l_suppkey"))
-      val edges = li.select(col("ok"), col("l_suppkey").as("s1"))
-        .join(li.select(col("ok"), col("l_suppkey").as("s2")), "ok")
-        .filter(col("s1") < col("s2"))
-        .select("s1", "s2").distinct()
-      operators.Graph.assortativity(edges, "s1", "s2")
-    }),
-    "q_link_predict" -> ((s, d) => {
-      // link-prediction candidates over the sparse co-supplier graph:
-      // common neighbors, Jaccard, and order-pinned Adamic–Adar for
-      // every non-adjacent pair with ≥ 2 shared neighbors
-      load(s, d)
-      val li = s.table("lineitem")
-        .filter(col("l_quantity") >= 48.0)
-        .select(col("l_orderkey").as("ok"), col("l_suppkey"))
-      val edges = li.select(col("ok"), col("l_suppkey").as("s1"))
-        .join(li.select(col("ok"), col("l_suppkey").as("s2")), "ok")
-        .filter(col("s1") < col("s2"))
-        .select("s1", "s2").distinct()
-      operators.Graph.linkPrediction(edges, "s1", "s2", minCommon = 2)
-        .orderBy(col("node_a"), col("node_b"))
-    }),
-    "q_label_prop" -> ((s, d) => {
-      // deterministic 3-round label propagation over the sparse
-      // co-supplier graph — synchronous rounds, (count desc, label asc)
-      // tie order, unrollable oracle
-      load(s, d)
-      val li = s.table("lineitem")
-        .filter(col("l_quantity") >= 48.0)
-        .select(col("l_orderkey").as("ok"), col("l_suppkey"))
-      val edges = li.select(col("ok"), col("l_suppkey").as("s1"))
-        .join(li.select(col("ok"), col("l_suppkey").as("s2")), "ok")
-        .filter(col("s1") < col("s2"))
-        .select("s1", "s2").distinct()
-      operators.Graph.labelPropagation(edges, "s1", "s2", iters = 3)
-        .orderBy(col("node"))
-    }),
-    "q_assoc_rules" -> ((s, d) => {
-      // pairwise association rules over order baskets × part items
-      // (minSupport=3): Apriori item pruning before the pair join;
-      // confidence/lift are single-division IEEE trees, no rounding
-      load(s, d)
-      operators.Freq.associationRules(s.table("lineitem"),
-          "l_orderkey", "l_partkey", minSupport = 3L)
-        .orderBy(col("antecedent"), col("consequent"))
-    }),
-    "q_triangles" -> ((s, d) => {
-      // exact triangle count of the co-supplier graph (suppliers sharing
-      // a high-quantity order) — degree-ordered compact-forward plan;
-      // the oracle counts u<v<w closed triples naively, same total
-      load(s, d)
-      val li = s.table("lineitem")
-        .filter(col("l_quantity") >= 40.0)
-        .select(col("l_orderkey").as("ok"), col("l_suppkey"))
-      val edges = li.select(col("ok"), col("l_suppkey").as("s1"))
-        .join(li.select(col("ok"), col("l_suppkey").as("s2")), "ok")
-        .filter(col("s1") < col("s2"))
-        .select("s1", "s2").distinct()
-      operators.Graph.triangleCount(edges, "s1", "s2")
-    }),
-    "q_local_clustering" -> ((s, d) => {
-      // per-supplier local clustering coefficient over the q_triangles
-      // co-supplier graph — compact-forward kernel, one triangle-corner
-      // explode, exact integers until the final division
-      load(s, d)
-      val li = s.table("lineitem")
-        .filter(col("l_quantity") >= 40.0)
-        .select(col("l_orderkey").as("ok"), col("l_suppkey"))
-      val edges = li.select(col("ok"), col("l_suppkey").as("s1"))
-        .join(li.select(col("ok"), col("l_suppkey").as("s2")), "ok")
-        .filter(col("s1") < col("s2"))
-        .select("s1", "s2").distinct()
-      operators.Graph.localClustering(edges, "s1", "s2")
-        .orderBy(col("node"))
-    }),
-    "q_hits" -> ((s, d) => {
-      // 3-round HITS over the directed customer→supplier trade graph
-      // (hubs = customers, authorities = suppliers): per-half-step 10-dp
-      // rounding + MAX normalization (exact in any order) make each
-      // round oracle-replayable
-      load(s, d)
-      import org.apache.spark.sql.functions.lit
-      val cs = s.table("orders").select(col("o_orderkey"), col("o_custkey"))
-        .join(s.table("lineitem").select(col("l_orderkey"), col("l_suppkey")),
-          col("o_orderkey") === col("l_orderkey"))
-        .select(col("o_custkey").as("src"),
-          (col("l_suppkey") + lit(1000000L)).as("dst"))
-        .distinct()
-      operators.Graph.hits(cs, "src", "dst", iters = 3)
-        .orderBy(col("node"))
-    }),
-    "q_scd2" -> ((s, d) => {
-      // SCD Type-2 history: bootstrap a customer dimension at version 100
-      // (every 13th key missing), then fold in a version-200 snapshot that
-      // re-adds them, bumps every 7th key's balance, and deletes every
-      // 11th key — exercising unchanged/changed/deleted/inserted in one
-      // chained application
-      load(s, d)
-      import org.apache.spark.sql.functions.{lit, when}
-      val cust = s.table("customer").select("c_custkey", "c_name", "c_acctbal")
-      val snap1 = cust.filter(col("c_custkey") % 13 =!= 0)
-      val snap2 = cust.filter(col("c_custkey") % 11 =!= 0)
-        .withColumn("c_acctbal",
-          when(col("c_custkey") % 7 === 0, col("c_acctbal") + lit(100.0))
-            .otherwise(col("c_acctbal")))
-      val h0 = snap1.limit(0)
-        .withColumn("valid_from", lit(0L)).withColumn("valid_to", lit(0L))
-      val h1 = operators.ChangeCapture.scd2Apply(h0, snap1,
-        Seq("c_custkey"), lit(100L))
-      operators.ChangeCapture.scd2Apply(h1, snap2, Seq("c_custkey"), lit(200L))
-        .orderBy(col("c_custkey"), col("valid_from"))
-    }),
-    "q_ks" -> ((s, d) => {
-      // two-sample Kolmogorov–Smirnov drift statistic between purchase
-      // and view event-value distributions — integer ECDF steps, exact
-      // divisions, order-independent max: bit-exact with no rounding
-      load(s, d)
-      val ev = readEventsNanos(s, d)
-      operators.Divergence.ksTest(
-          ev.filter(col("event_type") === "purchase").select("value"),
-          ev.filter(col("event_type") === "view").select("value"),
-          "value")
-    }),
-    "q_bigram_pmi" -> ((s, d) => {
-      // top-50 adjacent-bigram PMI collocations over the document corpus
-      // — linear zip, never a quadratic token window; single rounded ln
-      load(s, d)
-      operators.TextOps.bigramPmi(s.table("documents"), "text", topK = 50)
-        .orderBy(col("w1"), col("w2"))
-    }),
-    "q_surprisal" -> ((s, d) => {
-      // unigram-LM surprisal (self-trained top-1000 vocab) — the
-      // perplexity-style quality screen; token-ordered fold + 10-dp
-      // rounding per the Divergence determinism discipline
-      load(s, d)
-      operators.TextOps.unigramSurprisal(s.table("documents"),
-          "doc_id", "text", vocabK = 1000)
-        .orderBy(col("doc_id"))
-    }),
-    "q_tfidf_pairs" -> ((s, d) => {
-      // weighted lexical cosine near-dup pairs (doc_id < 300 slab,
-      // threshold .85) — posting-list join, term-ordered folds, no ln
-      load(s, d)
-      operators.TextOps.tfidfCosinePairs(
-          s.table("documents").filter(col("doc_id") < 300)
-            .select("doc_id", "text"),
-          "doc_id", "text", threshold = 0.85)
-        .orderBy(col("id_a"), col("id_b"))
-    }),
-    "q_zipf" -> ((s, d) => {
-      // Zipf rank-frequency OLS over the top-1000 vocabulary — the
-      // one-row corpus-health fingerprint (natural text ≈ slope −1);
-      // pre-rounded ln values make the rank-ordered folds bit-identical
-      load(s, d)
-      operators.TextOps.zipfFit(s.table("documents"), "text", topK = 1000)
-    }),
-    "q_cooc_pmi" -> ((s, d) => {
-      // top-50 windowed (±3) co-occurrence PMI pairs — the GloVe-style
-      // topical-association statistic; pair volume is window·tokens,
-      // flattened shifted zips, single rounded ln
-      load(s, d)
-      operators.TextOps.cooccurrencePmi(s.table("documents"), "text",
-          window = 3, topK = 50)
-        .orderBy(col("w1"), col("w2"))
-    }),
-    "q_bigram_surprisal" -> ((s, d) => {
-      // bigram-LM surprisal (add-0.1-smoothed conditionals over the
-      // self-trained top-500 vocab) — the word-order-aware quality
-      // screen; pair-ordered fold + 10-dp rounding per the Divergence
-      // determinism discipline
-      load(s, d)
-      operators.TextOps.bigramSurprisal(s.table("documents"),
-          "doc_id", "text", vocabK = 500, alpha = 0.1)
-        .orderBy(col("doc_id"))
-    }),
-    "q_session_window" -> ((s, d) => {
-      // Spark's NATIVE session_window operator, gated through the batch
-      // execution of the STREAMING operator (watermark is a no-op in
-      // batch — the q_stream_indicators precedent) over second-truncated
-      // event times, 12h gap; the oracle pins the merge-iff-gap<=window
-      // boundary contract
-      load(s, d)
-      import org.apache.spark.sql.functions.{expr, unix_timestamp}
-      val ev = readEventsNanos(s, d)
-        .select(col("user_id"),
-          expr("timestamp_seconds(ts DIV 1000000000)").as("ts"))
-      operators.Sessionize.streamingSessionStats(ev, "user_id", "ts",
-          gap = "12 hours", watermarkDelay = "1 minute")
-        .select(col("user_id"),
-          unix_timestamp(col("session_start")).as("start_sec"),
-          unix_timestamp(col("session_end")).as("end_sec"),
-          col("n_events"))
-        .orderBy(col("user_id"), col("start_sec"))
-    }),
-    "q_pagerank" -> ((s, d) => {
-      // 3-iteration PageRank over the bidirectional customer↔supplier
-      // trade graph (suppliers offset by 1e6 into a disjoint id space);
-      // per-iteration 10-dp rounding makes the parallel contribution sums
-      // layout-independent and oracle-replayable
-      load(s, d)
-      import org.apache.spark.sql.functions.{col, lit}
-      val cs = s.table("orders").select(col("o_orderkey"), col("o_custkey"))
-        .join(s.table("lineitem").select(col("l_orderkey"), col("l_suppkey")),
-          col("o_orderkey") === col("l_orderkey"))
-        .select(col("o_custkey").as("cust"),
-          (col("l_suppkey") + lit(1000000L)).as("supp"))
-        .distinct()
-      val edges = cs.select(col("cust").as("src"), col("supp").as("dst"))
-        .unionByName(cs.select(col("supp").as("src"), col("cust").as("dst")))
-      operators.Graph.pageRank(edges, "src", "dst", iters = 3)
-        .orderBy(col("node"))
-    }),
-    "q_fuzzy_pairs" -> ((s, d) => {
-      // edit-distance pair finding over the distinct part-name vocabulary
-      // (length-band blocking + levenshtein verify); the oracle is the
-      // brute-force cross join, so blocking completeness is what's gated
-      load(s, d)
-      import org.apache.spark.sql.functions.{col, min}
-      val names = s.table("part").groupBy(col("p_name"))
-        .agg(min(col("p_partkey")).as("name_id"))
-      operators.FuzzyJoin.editDistancePairs(names, "name_id", "p_name",
-          maxDist = 2)
-        .orderBy(col("id_a"), col("id_b"))
-    }),
-    "q_fuzzy_match" -> ((s, d) => {
-      // best non-self match per name: smallest distance, ties to the
-      // smallest id, via the packed-long hash-aggregate argmin
-      load(s, d)
-      import org.apache.spark.sql.functions.{col, min}
-      val names = s.table("part").groupBy(col("p_name"))
-        .agg(min(col("p_partkey")).as("name_id"))
-      operators.FuzzyJoin.bestMatch(names, names, "name_id", "p_name",
-          maxDist = 3, excludeSelf = true)
-        .orderBy(col("id"))
-    }),
-    "q_media_audio" -> ((s, d) => {
-      // REAL audio-container round-trip: text → javax.sound.sampled WAV
-      // ENCODE (PCM16 mono, sample i = (byte_{i mod len} − 128)·256) →
-      // binary media column → RIFF/WAVE PARSE → amplitude histogram. PCM
-      // is lossless and the amplitude buckets collapse to byte // 16, so
-      // the IMAGE decode oracle replays this gate too — one oracle, two
-      // genuine codecs.
-      load(s, d)
-      import org.apache.spark.sql.functions.{length, octet_length}
-      val docs = s.table("documents").withColumn("text",
-        textChecked(col("text"),
-          length(col("text")) =!= octet_length(col("text").cast("binary")),
-          "q_media_audio oracle precondition violated: non-ASCII document"))
-      val media = operators.Multimodal.withMediaWav(s, docs, "doc_id", "text")
-      val feats = operators.Multimodal.decodeAudioFeatures(s, media, "doc_id")
-      import org.apache.spark.sql.functions.element_at
-      feats.select(col("doc_id") +:
-          (0 until 16).map(i => element_at(col("features"), i + 1).as(f"f$i%02d")): _*)
-        .orderBy(col("doc_id"))
-    }),
-    "q_bpe_tokens" -> ((s, d) => {
-      // real merge-table BPE (vs q_token_count's fast pre-tokenizer count):
-      // a native codegen'd expression applying Bpe.DefaultMerges per row
-      load(s, d)
-      // oracle precondition: the DuckDB replica frames BPE symbols with
-      // chr(31), so the gate is hash-exact only while no document contains
-      // that byte — asserted per row against the verified corpus itself
-      val guarded = textChecked(col("text"), col("text").contains("\u001f"),
-        "q_bpe_tokens oracle precondition violated: document contains chr(31)")
-      s.table("documents").select(
-        col("doc_id"),
-        functions.BpeFunctions.bpeCount(guarded).as("bpe_tokens"))
-        .orderBy(col("doc_id"))
-    }),
-    "q_doc_fingerprint" -> ((s, d) => {
-      load(s, d)
-      operators.TextOps.fingerprints(s.table("documents"), "doc_id", "text")
-        .orderBy(col("doc_id"))
-    }),
-    "q_tfidf" -> ((s, d) => {
-      // df/idf from the WHOLE corpus; output filtered to the first 20 docs
-      load(s, d)
-      operators.TextOps.tfidf(s.table("documents"), "doc_id", "text")
-        .filter(col("doc_id") < 20)
-        .orderBy(col("doc_id"), col("term"))
-    }),
-    "q_bm25" -> ((s, d) => {
-      // Okapi BM25 term scoring (rational-idf gated variant); corpus stats
-      // from the whole table, output filtered to the first 20 docs
-      load(s, d)
-      operators.TextOps.bm25(s.table("documents"), "doc_id", "text")
-        .filter(col("doc_id") < 20)
-        .orderBy(col("doc_id"), col("term"))
-    }),
-    "q_inverted_index" -> ((s, d) => {
-      // term → df + "doc:tf" postings, hapax tail pruned at df >= 5
-      load(s, d)
-      operators.Freq.invertedIndex(s.table("documents"), "doc_id", "text",
-          minDf = 5L)
-        .orderBy(col("term"))
-    }),
-    "q_repetition" -> ((s, d) => {
-      // Gopher-style repeated-n-gram quality signal; pure per-row
-      load(s, d)
-      operators.TextOps.repetitionStats(s.table("documents"), "doc_id", "text", n = 3)
-        .orderBy(col("doc_id"))
-    }),
-    "q_quality_rules" -> ((s, d) => {
-      // Gopher-style rule-based quality filter: per-document rule metrics
-      // plus the conjunctive keep flag; pure per-row, no shuffle
-      load(s, d)
-      operators.TextOps.qualityRules(s.table("documents"), "doc_id", "text")
-        .orderBy(col("doc_id"))
-    }),
-    "q_clean_text" -> ((s, d) => {
-      // corpus cleaning pass: tag strip, URL/email redaction, control-char
-      // removal, whitespace collapse — the standard pre-dedup normalizer
-      load(s, d)
-      s.table("documents").select(
-        col("doc_id"),
-        operators.TextOps.cleanText(col("text")).as("clean_text"))
-        .orderBy(col("doc_id"))
-    }),
-    "q_pii_stats" -> ((s, d) => {
-      // PII scrubbing pass, detection side: deterministic synthetic PII
-      // (email/SSN/phone/IP derived from doc_id) spliced into real text —
-      // the oracle replays the same construction, so the regex semantics
-      // themselves are what's compared. Every 5th doc stays clean.
-      load(s, d)
-      operators.Pii.piiStats(
-          s.table("documents").select(col("doc_id"), piiTestText.as("text")),
-          "doc_id", "text")
-        .orderBy(col("doc_id"))
-    }),
-    "q_pii_redact" -> ((s, d) => {
-      // PII scrubbing pass, redaction side: same synthetic corpus, full
-      // placeholder-replacement chain
-      load(s, d)
-      s.table("documents").select(
-          col("doc_id"),
-          operators.Pii.redact(piiTestText).as("redacted"))
-        .orderBy(col("doc_id"))
-    }),
-    "q_k_anonymity" -> ((s, d) => {
-      // k-anonymity screen (Pii.kAnonymity) on documents: quasi-
-      // identifiers (lang, source, 500-char length bucket); class sizes
-      // + below-k flag at k=5. One hash-agg + key-reusing join — no
-      // window over the fact table.
-      load(s, d)
-      import org.apache.spark.sql.functions.{col, floor}
-      operators.Pii.kAnonymity(
-          s.table("documents").select(col("doc_id"), col("lang"),
-            col("source"),
-            floor(col("n_chars").cast("double") / 500.0).cast("bigint")
-              .as("len_bucket")),
-          Seq("lang", "source", "len_bucket"), k = 5)
-        .select("doc_id", "lang", "source", "len_bucket", "anon_set",
-          "below_k")
-        .orderBy("doc_id")
-    }),
-    "q_l_diversity" -> ((s, d) => {
-      // l-diversity companion: distinct sources per (lang, length-bucket)
-      // class; below-l flag at l=2
-      load(s, d)
-      import org.apache.spark.sql.functions.{col, floor}
-      operators.Pii.lDiversity(
-          s.table("documents").select(col("doc_id"), col("lang"),
-            col("source"),
-            floor(col("n_chars").cast("double") / 500.0).cast("bigint")
-              .as("len_bucket")),
-          Seq("lang", "len_bucket"), "source", l = 2)
-        .select("doc_id", "lang", "len_bucket", "distinct_sensitive",
-          "below_l")
-        .orderBy("doc_id")
-    }),
-    "q_record_linkage" -> ((s, d) => {
-      // Fellegi–Sunter scoring over SORTED-NEIGHBORHOOD candidates —
-      // the bounded generator (candidates ∝ n·window, never block²)
-      // feeding source/length/prefix agreements, plan-folded log2
-      // weights, threshold classes: linkage as candidates → score
-      load(s, d)
-      import org.apache.spark.sql.functions.{expr, substring}
-      val docs = s.table("documents")
-      val pairs = operators.Dedup.sortedNeighborhoodPairs(docs, "doc_id",
-          "text", substring(col("text"), 1, 8), col("text"),
-          window = 4, n = 3, threshold = 0.3)
-        .select("id_a", "id_b")
-      val a = docs.select(col("doc_id").as("id_a"),
-        col("source").as("src_a"), col("n_chars").as("nc_a"),
-        substring(col("text"), 1, 16).as("p_a"))
-      val b = docs.select(col("doc_id").as("id_b"),
-        col("source").as("src_b"), col("n_chars").as("nc_b"),
-        substring(col("text"), 1, 16).as("p_b"))
-      val feat = pairs.join(a, "id_a").join(b, "id_b")
-        .select(col("id_a"), col("id_b"),
-          (col("src_a") === col("src_b")).as("agree_src"),
-          (expr("nc_a DIV 50") === expr("nc_b DIV 50")).as("agree_len"),
-          (col("p_a") === col("p_b")).as("agree_prefix"))
-      operators.FuzzyJoin.fellegiSunter(feat,
-          Seq("agree_src", "agree_len", "agree_prefix"),
-          Seq((0.9, 0.3), (0.8, 0.2), (0.7, 0.05)),
-          upper = 2.0, lower = -1.0)
-        .orderBy(col("id_a"), col("id_b"))
-    }),
-    "q_sorted_neighborhood" -> ((s, d) => {
-      // sorted-neighborhood near-dup pairs: block on the first 8 chars,
-      // sort by full text within block, rank distance <= 4, exact 3-gram
-      // Jaccard >= 0.3 verify — the skew-immune candidate generator
-      load(s, d)
-      import org.apache.spark.sql.functions.{col, substring}
-      operators.Dedup.sortedNeighborhoodPairs(s.table("documents"),
-          "doc_id", "text", substring(col("text"), 1, 8), col("text"),
-          window = 4, n = 3, threshold = 0.3)
-        .orderBy("id_a", "id_b")
-    }),
-    "q_embed_project" -> ((s, d) => {
-      // Johnson–Lindenstrauss ±1 random projection 64→16 over the
-      // embeddings, exploded to (vec_id, dim_idx, v) scalar rows; the
-      // deterministic sign matrix (Similarity.signMatrix) bakes into
-      // both engines, so the fold arithmetic is what's gated.
-      load(s, d)
-      import org.apache.spark.sql.functions.{col, posexplode}
-      operators.Similarity.randomProjection(
-          s.table("embeddings"), "embedding", inDim = 64, outDim = 16)
-        .select(col("vec_id"), posexplode(col("proj")))
-        .withColumnRenamed("pos", "dim_idx").withColumnRenamed("col", "v")
-        .orderBy("vec_id", "dim_idx")
-    }),
-    "q_pack" -> ((s, d) => {
-      // concat-and-chunk sequence packing: 8 shards, 512-token packs,
-      // whitespace token counts as the length measure
-      load(s, d)
-      val withLen = s.table("documents").select(
-        col("doc_id"),
-        (col("doc_id") % 8).cast("int").as("shard"),
-        operators.TextOps.tokenCount(col("text")).as("n_tokens"))
-      operators.Packing.packAssignments(withLen, "doc_id", "n_tokens", "shard", 512L)
-        .orderBy(col("doc_id"))
-    }),
-    "q_contamination" -> ((s, d) => {
-      // decontamination pass: 8-gram overlap against a probe "benchmark"
-      // set (every 20th doc stands in for the eval corpus)
-      load(s, d)
-      val docs = s.table("documents")
-      val probes = docs.filter(col("doc_id") % 20 === 0)
-      operators.TextOps.contamination(docs, "doc_id", "text", probes, "text", n = 8)
-        .orderBy(col("doc_id"))
-    }),
-    "q_chunk" -> ((s, d) => {
-      // context-window prep: 32-token chunks with 8-token overlap
-      load(s, d)
-      operators.TextOps.chunks(s.table("documents"), "doc_id", "text",
-          chunkSize = 32, overlap = 8)
-        .orderBy(col("doc_id"), col("chunk_id"))
-    }),
-    "q_span_dedup" -> ((s, d) => {
-      // C4-style repeated-span removal at 8-token granularity
-      load(s, d)
-      operators.Dedup.spanDedup(s.table("documents"), "doc_id", "text", n = 8)
-        .orderBy(col("doc_id"))
-    }),
-    "q_substring_dedup" -> ((s, d) => {
-      // Lee et al.-style exact duplicated-substring mass: 30-char grams at
-      // stride 10, per-doc duplicate-occurrence counts
-      load(s, d)
-      operators.Dedup.substringDedup(s.table("documents"), "doc_id", "text",
-          minLen = 30, stride = 10)
-        .orderBy(col("doc_id"))
-    }),
-    "q_substring_cut" -> ((s, d) => {
-      // the cut pass: duplicate-marked 30-char grams removed (canonical
-      // first occurrence kept), merged-interval splice per document
-      load(s, d)
-      operators.Dedup.substringCut(s.table("documents"), "doc_id", "text",
-          minLen = 30, stride = 10)
-        .orderBy(col("doc_id"))
-    }),
-    "q_winnow_dedup" -> ((s, d) => {
-      // phase-robust duplicated-substring mass via winnowing (Schleimer
-      // et al. 2003): 21-char fingerprints, guarantee threshold 30 —
-      // every shared >=30-char substring is caught at ANY alignment
-      load(s, d)
-      operators.Dedup.winnowedDedup(s.table("documents"), "doc_id", "text",
-          minLen = 30, noise = 21)
-        .orderBy(col("doc_id"))
-    }),
-    "q_winnow_cut" -> ((s, d) => {
-      // the cut pass over winnowed fingerprints: duplicate-marked 21-char
-      // spans removed, canonical first occurrence kept corpus-wide
-      load(s, d)
-      operators.Dedup.winnowedCut(s.table("documents"), "doc_id", "text",
-          minLen = 30, noise = 21)
-        .orderBy(col("doc_id"))
-    }),
-    "q_winnow_cut_padded" -> ((s, d) => {
-      // edgePad = w−1 = 9: complete coverage of every guaranteed
-      // (≥minLen) duplicated region — adversarial caught char mass
-      // 0.80 → 1.00 — at a measured 19–24% over-cut
-      // (substringfloor.json pad rows); the recall-first cut dial
-      load(s, d)
-      operators.Dedup.winnowedCut(s.table("documents"), "doc_id", "text",
-          minLen = 30, noise = 21, edgePad = 9)
-        .orderBy(col("doc_id"))
-    }),
-    "q_winnow_pairs" -> ((s, d) => {
-      // MOSS-style overlap pairs: documents sharing >= 2 distinct winnow
-      // fingerprints, scored by containment-normalized shared count
-      load(s, d)
-      operators.Dedup.winnowOverlapPairs(s.table("documents"), "doc_id",
-          "text", minLen = 30, noise = 21, minShared = 2)
-        .orderBy(col("id_a"), col("id_b"))
-    }),
-    "q_winnow_ingest" -> ((s, d) => {
-      // incremental ingestion vs a winnow fingerprint INDEX of the
-      // reference corpus (even doc_ids): per new (odd) document, the
-      // fingerprint count and how many collide with the reference —
-      // substring-level cross-corpus detection, no pair emission
-      load(s, d)
-      val docs = s.table("documents")
-      val index = operators.Dedup.buildWinnowIndex(
-        docs.filter(col("doc_id") % 2 === 0), "doc_id", "text",
-        minLen = 30, noise = 21)
-      operators.Dedup.winnowIncrementalDedup(
-          docs.filter(col("doc_id") % 2 === 1), index, "doc_id", "text",
-          minLen = 30, noise = 21)
-        .orderBy(col("doc_id"))
-    }),
-    "q_winnow_ingest_cut" -> ((s, d) => {
-      // the cut pass: reference-duplicated fingerprint spans spliced out
-      // of each new document
-      load(s, d)
-      val docs = s.table("documents")
-      val index = operators.Dedup.buildWinnowIndex(
-        docs.filter(col("doc_id") % 2 === 0), "doc_id", "text",
-        minLen = 30, noise = 21)
-      operators.Dedup.winnowIncrementalCut(
-          docs.filter(col("doc_id") % 2 === 1), index, "doc_id", "text",
-          minLen = 30, noise = 21)
-        .orderBy(col("doc_id"))
-    }),
-    "q_winnow_ingest_persisted" -> ((s, d) => {
-      // the PERSISTED index flow buildWinnowIndex's contract promises
-      // ("write the frame out once; probe every ingestion batch"): the
-      // reference index round-trips through parquet on disk and the probe
-      // reads it back cold — proving schema/content round-trip stability,
-      // not just the in-plan path q_winnow_ingest covers. The write is
-      // eager but happens ONCE per (session, corpus) under the
-      // shutdown-swept winnowIdxRoot (ADVICE r14) — repeat invocations
-      // (Bench min-of-N) time ONLY the probe join, matching the
-      // steady-state ingestion flow where the index pre-exists.
-      load(s, d)
-      val docs = s.table("documents")
-      val idxDir = winnowIdxDirs.computeIfAbsent(d, dir => {
-        val out = winnowIdxRoot.resolve(
-          "idx_" + java.lang.Integer.toHexString(dir.hashCode)).toString
-        operators.Dedup.buildWinnowIndex(
-            docs.filter(col("doc_id") % 2 === 0), "doc_id", "text",
-            minLen = 30, noise = 21)
-          .write.mode("overwrite").parquet(out)
-        out
-      })
-      operators.Dedup.winnowIncrementalDedup(
-          docs.filter(col("doc_id") % 2 === 1), s.read.parquet(idxDir),
-          "doc_id", "text", minLen = 30, noise = 21)
-        .orderBy(col("doc_id"))
-    }),
-    "q_decontaminate" -> ((s, d) => {
-      // span-level benchmark decontamination: src0 documents are the
-      // "benchmark"; any 20-char substring of a training doc (src1..19)
-      // that appears anywhere in src0 is cut (training side sampled at
-      // stride 5 — detection floor 24 shared chars)
-      load(s, d)
-      val docs = s.table("documents")
-      operators.Dedup.decontaminationCut(
-          docs.filter(col("source") =!= "src0"), "doc_id", "text",
-          docs.filter(col("source") === "src0"), "text",
-          minLen = 20, stride = 5)
-        .orderBy(col("doc_id"))
-    }),
-    "q_incremental_dedup" -> ((s, d) => {
-      // incremental ingestion: odd doc_ids are the new batch, even the
-      // existing reference corpus; survivors duplicate nothing in the ref
-      load(s, d)
-      val docs = s.table("documents")
-      val ref = docs.filter(col("doc_id") % 2 === 0)
-      val fresh = docs.filter(col("doc_id") % 2 === 1)
-      operators.Dedup.incrementalDedup(fresh, ref, "doc_id", "text")
-        .select(col("doc_id"), col("lang"), col("n_chars"))
-        .orderBy(col("doc_id"))
-    }),
-    "q_dedup_exact" -> ((s, d) => {
-      load(s, d)
-      operators.Dedup.exact(s.table("documents"), "doc_id", "text")
-        .orderBy(col("keep_id"))
-    }),
-    "q_dedup_minhash" -> ((s, d) => {
-      load(s, d)
-      operators.Dedup.minhashNearDups(s.table("documents"), "doc_id", "text",
-          k = 16, rowsPerBand = 4, threshold = 0.5)
-        .orderBy(col("id_a"), col("id_b"))
-    }),
-    "q_dedup_components" -> ((s, d) => {
-      load(s, d)
-      val pairs = operators.Dedup.minhashNearDups(s.table("documents"), "doc_id", "text")
-      operators.Dedup.connectedComponents(pairs).orderBy(col("id"))
-    }),
-    "q_dedup_star" -> ((s, d) => {
-      // flooded-corpus scale path: per-bucket star edges to the bucket rep
-      // (verified) instead of all-pairs — O(members) per LSH bucket
-      load(s, d)
-      operators.Dedup.starNearDupClusters(s.table("documents"), "doc_id", "text")
-        .orderBy(col("id"))
-    }),
-    "q_dedup_keep" -> ((s, d) => {
-      // the full dedup composite a pipeline actually runs, through the
-      // r13 DEFAULT cluster path: star-verified edges per LSH bucket
-      // (O(members), flood exponent 0.36) → components → drop everything
-      // but each cluster's min-id representative. AllPairsEdges is the
-      // explicit opt-in for maximal recall (q_dedup_components gates it).
-      load(s, d)
-      operators.Dedup.nearDupKeep(s.table("documents"), "doc_id", "text")
-        .select(col("doc_id"), col("lang"), col("n_chars"))
-        .orderBy(col("doc_id"))
-    }),
-    "q_dedup_keep_best" -> ((s, d) => {
-      // quality-aware variant on the same star-default cluster path: each
-      // near-dup cluster keeps its LONGEST member (n_chars as the quality
-      // stand-in), ties to the lower id
-      load(s, d)
-      operators.Dedup.nearDupKeepBest(s.table("documents"), "doc_id", "text",
-          "n_chars")
-        .select(col("doc_id"), col("lang"), col("n_chars"))
-        .orderBy(col("doc_id"))
-    }),
-    "q_dedup_simhash" -> ((s, d) => {
-      load(s, d)
-      operators.Dedup.simhash(s.table("documents"), "doc_id", "text")
-        .orderBy(col("doc_id"))
-    }),
-    "q_simhash_pairs" -> ((s, d) => {
-      load(s, d)
-      // cache: the pair search self-joins the fingerprint frame — without
-      // the cache both join branches recompute every md5. Registered so the
-      // harness releases it after the consuming action.
-      val fps = graft.CacheScope.register(
-        operators.Dedup.simhash(s.table("documents"), "doc_id", "text").cache())
-      operators.Dedup.simhashPairs(fps, "doc_id", maxHamming = 3)
-        .orderBy(col("id_a"), col("id_b"))
-    }),
-    "q_ngram_jaccard" -> ((s, d) => {
-      load(s, d)
-      operators.Dedup.ngramJaccardPairs(s.table("documents"), "doc_id", "text",
-          n = 3, threshold = 0.5)
-        .orderBy(col("id_a"), col("id_b"))
-    }),
-    // Flood-fixture gates for the pair-budget families (r13): each runs its
-    // pair operator over a deterministic REPLICA FLOOD of the documents
-    // table (every 25th doc × 4 tagged near-identical copies) with the
-    // default budget ENGAGED (the prediction runs, stays under the 1e9
-    // default, and the results still match the oracle — the guard changes
-    // failure mode, never results). The over-budget loud failure is
-    // spec-asserted in PairBudgetSpec on the same flood shape.
-    "q_ngram_flood" -> ((s, d) => {
-      load(s, d)
-      operators.Dedup.ngramJaccardPairs(floodDocs(s), "doc_id", "text",
-          n = 3, threshold = 0.5)
-        .orderBy(col("id_a"), col("id_b"))
-    }),
-    "q_containment_flood" -> ((s, d) => {
-      // first oracle gate for containmentPairs (excerpt detection): the
-      // flood's tagged copies are mutual near-containments of the original
-      load(s, d)
-      operators.Dedup.containmentPairs(floodDocs(s), "doc_id", "text",
-          n = 3, threshold = 0.8)
-        .orderBy(col("inner_id"), col("outer_id"))
-    }),
-    "q_simhash_flood" -> ((s, d) => {
-      load(s, d)
-      val fps = graft.CacheScope.register(
-        operators.Dedup.simhash(floodDocs(s), "doc_id", "text").cache())
-      operators.Dedup.simhashPairs(fps, "doc_id", maxHamming = 3)
-        .orderBy(col("id_a"), col("id_b"))
-    }),
-    "q_fuzzy_flood" -> ((s, d) => {
-      // length-band flood: every part name appears in 3 light edit variants
-      // (same length band by construction), exercising the bipartite budget
-      load(s, d)
-      import org.apache.spark.sql.functions.{concat, explode, lit, min,
-        sequence, substring, when}
-      val names = s.table("part").groupBy(col("p_name"))
-        .agg(min(col("p_partkey")).as("name_id"))
-      // variant 1 substitutes the 2nd char ('x'); variant 2 additionally
-      // appends 'y' — distances ≤ 2 from the original, same length band
-      val mutated = concat(substring(col("p_name"), 1, 1), lit("x"),
-        substring(col("p_name"), 3, 1000000))
-      val flood = names.select(col("p_name"), col("name_id"),
-          explode(sequence(lit(0), lit(2))).as("r"))
-        .select((col("name_id") + col("r") * lit(1000000L)).as("name_id"),
-          when(col("r") === 0, col("p_name"))
-            .when(col("r") === 1, mutated)
-            .otherwise(concat(mutated, lit("y"))).as("p_name"))
-      operators.FuzzyJoin.editDistancePairs(flood, "name_id", "p_name",
-          maxDist = 2)
-        .orderBy(col("id_a"), col("id_b"))
-    }),
-    "q_embed_knn" -> ((s, d) => {
-      load(s, d)
-      val emb = s.table("embeddings")
-      operators.Similarity.bruteForceKnn(emb, emb.filter(col("vec_id") < 10), k = 5)
-        .orderBy(col("query_id"), col("rank"))
-    }),
-    "q_hard_negatives" -> ((s, d) => {
-      // hard-negative mining: top-5 most similar DIFFERENT-label vectors
-      // per query — the boundary-hugging negatives metric training needs
-      load(s, d)
-      val emb = s.table("embeddings")
-      operators.Similarity.hardNegatives(emb,
-          emb.filter(col("vec_id") < 10), k = 5)
-        .orderBy(col("query_id"), col("rank"))
-    }),
-    "q_embed_ivf_knn" -> ((s, d) => {
-      load(s, d)
-      val emb = s.table("embeddings")
-      operators.Similarity.ivfKnn(emb, emb.filter(col("vec_id") < 10), k = 5)
-        .orderBy(col("query_id"), col("rank"))
-    }),
-    "q_knn_label_consistency" -> ((s, d) => {
-      // embedding-quality probe: per-label fraction of each query's 5
-      // nearest neighbors sharing the query's label, over a 200-query
-      // panel — exact integer sums, one final division
-      load(s, d)
-      val emb = s.table("embeddings")
-      operators.Similarity.knnLabelConsistency(emb,
-          emb.filter(col("vec_id") < 200), k = 5)
-        .orderBy(col("label"))
-    }),
-    "q_embed_ivf_learned" -> ((s, d) => {
-      // IVF with LEARNED centroids: 2 deterministic k-means rounds replace
-      // the label column; the oracle replays the identical iterations.
-      load(s, d)
-      val emb = s.table("embeddings")
-      operators.Similarity.ivfKnnLearned(emb, emb.filter(col("vec_id") < 10),
-          k = 5, nlist = 8, iters = 2)
-        .orderBy(col("query_id"), col("rank"))
-    }),
-    "q_semantic_dedup" -> ((s, d) => {
-      // SemDeDup ON ITS DEFAULTS: deterministic k-means clusters (the
-      // same replayable iterations as q_embed_ivf_learned), same-cluster
-      // cosine >= 0.3 pairs drop their higher id. The DEFAULT now carries
-      // the maxClusterSize=10000 pair-space guard — the oracle replays
-      // both guard stages verbatim (they no-op at gate scale, but the
-      // gate pins the default PATH, not just the default answer)
-      load(s, d)
-      operators.Similarity.semanticDedup(s.table("embeddings"),
-          threshold = 0.3, nlist = 8, iters = 2)
-        .select(col("vec_id"), col("label"))
-        .orderBy(col("vec_id"))
-    }),
-    "q_semantic_dedup_unguarded" -> ((s, d) => {
-      // the explicit opt-OUT (maxClusterSize = Unbounded): the exact
-      // unguarded same-cluster pair space — full recall, quadratic under
-      // cluster skew; kept as the old default's semantics gate
-      load(s, d)
-      operators.Similarity.semanticDedup(s.table("embeddings"),
-          threshold = 0.3, nlist = 8, iters = 2,
-          maxClusterSize = operators.Similarity.Unbounded)
-        .select(col("vec_id"), col("label"))
-        .orderBy(col("vec_id"))
-    }),
-    "q_semantic_dedup_guarded" -> ((s, d) => {
-      // SemDeDup with the maxClusterSize=50 pair-space guard: clusters
-      // over the cap sub-split by sign-bit LSH, still-oversized
-      // sub-buckets salt by the replayable Lehmer id hash — the oracle
-      // replays both stages, so the guard path itself is hash-checked
-      load(s, d)
-      operators.Similarity.semanticDedup(s.table("embeddings"),
-          threshold = 0.3, nlist = 8, iters = 2, maxClusterSize = 50L)
-        .select(col("vec_id"), col("label"))
-        .orderBy(col("vec_id"))
-    }),
-    "q_embed_neardup" -> ((s, d) => {
-      load(s, d)
-      // signBits=8: sign-pattern LSH blocking (~2^8 buckets) — the scale
-      // path; the oracle mirrors the identical bucketing.
-      operators.Similarity.embeddingNearDupPairs(s.table("embeddings"), 0.4, signBits = 8)
-        .orderBy(col("id_a"), col("id_b"))
-    }),
-    "q_embed_neardup_mp" -> ((s, d) => {
-      load(s, d)
-      // multi-probe: candidates are sign patterns differing in <= 1 bit —
-      // catches near-dups that straddle one hyperplane; oracle pairs by
-      // hamming(bucket_a, bucket_b) <= 1
-      operators.Similarity.embeddingNearDupPairsMultiProbe(
-          s.table("embeddings"), 0.4, signBits = 8)
-        .orderBy(col("id_a"), col("id_b"))
-    }),
-    "q_stream_indicators" -> ((s, d) => {
-      // A6 streaming indicator engine, exercised through the SAME
-      // flatMapGroupsWithState operator in batch mode (Spark runs stateful
-      // ops over bounded inputs identically: one state pass per key).
-      load(s, d)
-      import s.implicits._
-      import org.apache.spark.sql.functions.{expr, lit, timestamp_micros, unix_micros}
-      // ts normalized to nanosecond Longs whatever unit the parquet
-      // declares (readEventsNanos); the data is micro-aligned, so the
-      // integer DIV to micros is lossless (nanos % 1000 == 0).
-      val ev = readEventsNanos(s, d)
-      val ticks = ev.select(
-        col("event_type").as("symbol"),
-        timestamp_micros(expr("ts DIV 1000")).as("timestamp"),
-        col("value").as("price"),
-        col("user_id").as("volume"),
-        lit(null).cast("double").as("bid"),
-        lit(null).cast("double").as("ask")).as[graft.streaming.MarketTick]
-      graft.streaming.StreamingPipeline.indicators(ticks, windowSize = 5).toDF()
-        .select(col("symbol"), unix_micros(col("timestamp")).as("ts_us"),
-          col("price"), col("volume"), col("sma"), col("ema"), col("rsi"),
-          col("volumeSma").as("volume_sma"), col("volumeRatio").as("volume_ratio"))
-        .orderBy(col("symbol"), col("ts_us"))
-    }),
-    "q_stream_live" -> ((s, d) => {
-      // the SAME indicator fold as q_stream_indicators, but executed
-      // through the REAL micro-batch streaming runtime (r13): MemoryStream
-      // → indicatorsTws DEFAULT path (RocksDB store, event-time watermark,
-      // 7-day TTL timers) → memory sink, replayed in three ascending
-      // event-time chunks (so checkpointed state, watermark advancement
-      // and timer re-arming genuinely cross micro-batches). Every symbol
-      // ticks daily in the 30-day corpus, so no TTL eviction fires and the
-      // streaming output must equal the batch fold — one DuckDB oracle
-      // covers both execution paths.
-      load(s, d)
-      import s.implicits._
-      import org.apache.spark.sql.functions.{expr, lit, timestamp_micros, unix_micros}
-      val ev = readEventsNanos(s, d)
-      val ticks = ev.select(
-        col("event_type").as("symbol"),
-        timestamp_micros(expr("ts DIV 1000")).as("timestamp"),
-        col("value").as("price"),
-        col("user_id").as("volume"),
-        lit(null).cast("double").as("bid"),
-        lit(null).cast("double").as("ask")).as[graft.streaming.MarketTick]
-      // 2024-01-11 / 2024-01-21 00:00 UTC as epoch millis (tz-independent)
-      val bounds = Seq(1704931200000L, 1705795200000L)
-        .map(new java.sql.Timestamp(_))
-      graft.streaming.StreamingLive.indicatorsMicroBatch(ticks,
-          windowSize = 5, chunkBoundaries = bounds)
-        .select(col("symbol"), unix_micros(col("timestamp")).as("ts_us"),
-          col("price"), col("volume"), col("sma"), col("ema"), col("rsi"),
-          col("volumeSma").as("volume_sma"), col("volumeRatio").as("volume_ratio"))
-        .orderBy(col("symbol"), col("ts_us"))
-    }),
-    "q_stream_live_ttl" -> ((s, d) => {
-      // REAL micro-batch streaming with TTL eviction actually FIRING
-      // (q_stream_live's TTL timers never fire — every symbol ticks
-      // daily): three symbols go silent for 10 days (events dropped in
-      // [Jan 11, Jan 21)), idleMs = 3 days, and the chunking guarantees
-      // the timer semantics land deterministically — batch [Jan 20,
-      // Jan 21) carries only the surviving symbols, so it runs with the
-      // watermark advanced past the silent keys' expiry (last tick + 3 d)
-      // by the [Jan 12, Jan 20) batch and handleExpiredTimer clears their
-      // state BEFORE the silent symbols' first post-gap rows arrive in
-      // the final batch (input rows are processed before timers within a
-      // batch, so the extra boundary is load-bearing). The revived keys
-      // re-warm from empty: the oracle folds per (symbol, epoch) where an
-      // epoch breaks on any >3-day event-time gap — exact for this corpus
-      // because the max natural gap is 24 h (measured at every sf).
-      load(s, d)
-      import s.implicits._
-      import org.apache.spark.sql.functions.{expr, lit, timestamp_micros, unix_micros}
-      val gapSyms = Seq("click", "purchase", "view")
-      val gapNs0 = 1704931200000L * 1000000L // 2024-01-11 00:00 UTC, nanos
-      val gapNs1 = 1705795200000L * 1000000L // 2024-01-21 00:00 UTC
-      val ev = readEventsNanos(s, d)
-        .filter(!(col("event_type").isin(gapSyms: _*) &&
-          col("ts") >= lit(gapNs0) && col("ts") < lit(gapNs1)))
-      val ticks = ev.select(
-        col("event_type").as("symbol"),
-        timestamp_micros(expr("ts DIV 1000")).as("timestamp"),
-        col("value").as("price"),
-        col("user_id").as("volume"),
-        lit(null).cast("double").as("bid"),
-        lit(null).cast("double").as("ask")).as[graft.streaming.MarketTick]
-      // Jan 12 / Jan 20 / Jan 21 00:00 UTC epoch millis
-      val bounds = Seq(1705017600000L, 1705708800000L, 1705795200000L)
-        .map(new java.sql.Timestamp(_))
-      graft.streaming.StreamingLive.indicatorsMicroBatch(ticks,
-          windowSize = 5, chunkBoundaries = bounds,
-          idleMs = 3L * 24 * 60 * 60 * 1000)
-        .select(col("symbol"), unix_micros(col("timestamp")).as("ts_us"),
-          col("price"), col("volume"), col("sma"), col("ema"), col("rsi"),
-          col("volumeSma").as("volume_sma"), col("volumeRatio").as("volume_ratio"))
-        .orderBy(col("symbol"), col("ts_us"))
-    }),
-    "q_range_join" -> ((s, d) => {
-      // point-in-interval range join per supplier: how many same-supplier
-      // shipments were "in flight" ([ship_day, ship_day + quantity] days)
-      // when each item shipped
-      load(s, d)
-      import org.apache.spark.sql.functions.{count => countf, expr, lit => litf}
-      // unix_date over a calendar cast: days since epoch, timezone-free.
-      // l_shipdate is TIMESTAMP_NTZ (no zone), so NTZ→DATE is pure calendar
-      // truncation; unix_timestamp would shift with the session timezone.
-      val li = s.table("lineitem").select(col("l_suppkey"),
-        col("l_orderkey"), col("l_linenumber"),
-        expr("unix_date(cast(l_shipdate AS date))").as("ship_day"),
-        col("l_quantity").cast("long").as("qty"))
-      val points = li.select(col("l_suppkey").as("p_supp"), col("l_orderkey"),
-        col("l_linenumber"), col("ship_day").as("p_day"))
-      val intervals = li.select(col("l_suppkey").as("i_supp"),
-        col("ship_day").as("i_start"), (col("ship_day") + col("qty")).as("i_end"))
-      // sweep form: one keyed window pass, no pair materialization —
-      // (l_orderkey, l_linenumber) is not unique, so per-point counts sum
-      import org.apache.spark.sql.functions.{sum => sumf}
-      operators.RangeJoin.overlapCounts(points, intervals,
-          "p_supp", "i_supp", "p_day", "i_start", "i_end")
-        .groupBy(col("l_orderkey"), col("l_linenumber"))
-        .agg(sumf(col("n_overlapping")).as("n_overlapping"))
-        .orderBy(col("l_orderkey"), col("l_linenumber"))
-    }),
-    "q_range_join_pairs" -> ((s, d) => {
-      // the pair-materializing bucketized variant, gate-covered on a
-      // supplier slice (the full pair set is the sweep query's job to count)
-      load(s, d)
-      import org.apache.spark.sql.functions.expr
-      val li = s.table("lineitem").filter(col("l_suppkey") < 50)
-        .select(col("l_suppkey"),
-          col("l_orderkey"), col("l_linenumber"),
-          expr("unix_date(cast(l_shipdate AS date))").as("ship_day"),
-          col("l_quantity").cast("long").as("qty"))
-      val points = li.select(col("l_suppkey").as("p_supp"), col("l_orderkey"),
-        col("l_linenumber"), col("ship_day").as("p_day"))
-      val intervals = li.select(col("l_suppkey").as("i_supp"),
-        col("ship_day").as("i_start"), (col("ship_day") + col("qty")).as("i_end"))
-      // bucketWidth ~ typical interval length (avg span 25 days): measured
-      // best at 16-32; wider buckets inflate candidate pairs per bucket
-      operators.RangeJoin.rangeJoin(points, intervals,
-          "p_supp", "i_supp", "p_day", "i_start", "i_end", bucketWidth = 32)
-        .select(col("l_orderkey"), col("l_linenumber"), col("p_day"),
-          col("i_start"), col("i_end"))
-        .orderBy(col("l_orderkey"), col("l_linenumber"), col("i_start"), col("i_end"))
-    }),
-    "q_asof_join" -> ((s, d) => {
-      // as-of join: each event matched to its user's most recent order at
-      // or before the event time (the kdb-style primitive Spark lacks)
-      load(s, d)
-      import org.apache.spark.sql.functions.{expr, max => maxf, max_by, timestamp_micros, unix_micros}
-      val ev = readEventsNanos(s, d).select(
-        col("event_id"),
-        timestamp_micros(expr("ts DIV 1000")).as("ets"),
-        col("user_id"))
-      // right side unique per (key, time): latest order per (custkey, date)
-      val ord = s.table("orders")
-        .groupBy(col("o_custkey"), col("o_orderdate").cast("timestamp").as("odate"))
-        .agg(maxf(col("o_orderkey")).as("o_orderkey"),
-          max_by(col("o_totalprice"), col("o_orderkey")).as("o_totalprice"))
-      operators.AsofJoin.asofJoin(ev, ord, "user_id", "o_custkey", "ets", "odate")
-        .select(col("event_id"), unix_micros(col("ets")).as("ts_us"), col("user_id"),
-          col("o_orderkey"), col("o_totalprice"))
-        .orderBy(col("event_id"))
-    }),
-    "q_asof_tolerance" -> ((s, d) => {
-      // as-of with a 30-day match-age bound (merge_asof tolerance): stale
-      // matches null out instead of carrying arbitrarily far forward
-      load(s, d)
-      import org.apache.spark.sql.functions.{expr, max => maxf, max_by, timestamp_micros, unix_micros}
-      val ev = readEventsNanos(s, d).select(
-        col("event_id"),
-        timestamp_micros(expr("ts DIV 1000")).as("ets"),
-        col("user_id"))
-      val ord = s.table("orders")
-        .groupBy(col("o_custkey"), col("o_orderdate").cast("timestamp").as("odate"))
-        .agg(maxf(col("o_orderkey")).as("o_orderkey"),
-          max_by(col("o_totalprice"), col("o_orderkey")).as("o_totalprice"))
-      operators.AsofJoin.asofJoin(ev, ord, "user_id", "o_custkey", "ets", "odate",
-          tolerance = Some(30L * 86400 * 1000000L))
-        .select(col("event_id"), unix_micros(col("ets")).as("ts_us"), col("user_id"),
-          col("o_orderkey"), col("o_totalprice"))
-        .orderBy(col("event_id"))
-    }),
-    "q_stream_bars" -> ((s, d) => {
-      // event-time OHLCV bars (same operator the stream runs) in batch mode
-      load(s, d)
-      import s.implicits._
-      import org.apache.spark.sql.functions.{expr, lit, round => roundf, timestamp_micros, unix_micros}
-      val ev = readEventsNanos(s, d)
-      val ticks = ev.select(
-        col("event_type").as("symbol"),
-        timestamp_micros(expr("ts DIV 1000")).as("timestamp"),
-        col("value").as("price"),
-        col("user_id").as("volume"),
-        lit(null).cast("double").as("bid"),
-        lit(null).cast("double").as("ask")).as[graft.streaming.MarketTick]
-      graft.streaming.StreamingPipeline.ohlcBars(ticks, "1 minute")
-        .select(col("ticker"), unix_micros(col("window_start")).as("ws_us"),
-          col("open"), col("high"), col("low"), col("close"), col("volume"),
-          roundf(col("vwap"), 6).as("vwap_r"), col("transactions"))
-        .orderBy(col("ticker"), col("ws_us"))
-    }),
-    "q_stream_distinct" -> ((s, d) => {
-      // the streaming HLL cardinality monitor (StreamingPipeline
-      // .windowedDistinct) in batch mode: per-(event_type, day window)
-      // distinct-user registers — 256 B of state per open cell on the
-      // stream where exact distinct state is unbounded. Estimate via the
-      // shared SQL fragment; exact countDistinct rides along from a
-      // SEPARATE aggregation (same planner note as q_kmv_distinct).
-      load(s, d)
-      import org.apache.spark.sql.functions.{countDistinct, expr, unix_micros, window => winf}
-      // parquet ts is TIMESTAMP_NTZ; session tz is pinned UTC, so the cast
-      // to instant-typed TIMESTAMP is identity on the epoch values
-      val ev = s.read.parquet(s"$d/events.parquet")
-        .select(col("event_type"), col("ts").cast("timestamp").as("ts"),
-          col("user_id"))
-      val sk = graft.streaming.StreamingPipeline.windowedDistinct(
-        ev, "ts", "event_type", "user_id", "1 day")
-      val exact = ev
-        .groupBy(col("event_type"), winf(col("ts"), "1 day").as("win"))
-        .agg(countDistinct(col("user_id")).as("exact_users"))
-        .select(col("event_type"), col("win.start").as("window_start"),
-          col("exact_users"))
-      sk.join(exact, Seq("event_type", "window_start"))
-        .select(col("event_type"),
-          unix_micros(col("window_start")).as("ws_us"),
-          expr(functions.Hll.estimateSql("sum_scaled", "zeros", 8))
-            .as("est_users"),
-          col("exact_users"))
-        .orderBy(col("event_type"), col("ws_us"))
-    }),
-    "q_media_frames" -> ((s, d) => {
-      load(s, d)
-      import org.apache.spark.sql.functions.array_join
-      val m = operators.Multimodal.withMedia(s.table("documents"), "doc_id", "text")
-      operators.Multimodal.frameSamples(m)
-        .select(col("doc_id"), col("media_meta.n_bytes").as("n_bytes"),
-          col("media_meta.content_md5").as("content_md5"),
-          array_join(col("frames"), ",").as("frames_joined"))
-        .orderBy(col("doc_id"))
-    }),
-    // KMV distinct-count sketch (functions/Sketch.scala): bounded k-longs
-    // state per group, map-side combinable — COUNT(DISTINCT) accuracy check
-    // rides along in the same query. The md5-derived hash keeps the whole
-    // estimate engine-independent (bit-exact DuckDB twin).
-    // NB: the sketch and the exact count live in SEPARATE aggregations — a
-    // mixed distinct/imperative agg makes the planner key the sketch by
-    // (flag, partkey), allocating one buffer per distinct key and defeating
-    // the bounded-state design (measured 2.4s → 1.1s at sf0.1)
-    "q_kmv_distinct" -> ((s, d) => q(s, d,
-      """WITH est AS (
-        |  SELECT l_returnflag,
-        |    kmv_distinct(cast(conv(substring(md5(cast(l_partkey AS string)), 1, 15), 16, 10) AS bigint), 256) AS est_parts
-        |  FROM lineitem GROUP BY l_returnflag
-        |), ex AS (
-        |  SELECT l_returnflag, count(DISTINCT l_partkey) AS exact_parts
-        |  FROM lineitem GROUP BY l_returnflag
-        |)
-        |SELECT est.l_returnflag, est.est_parts, ex.exact_parts
-        |FROM est JOIN ex ON est.l_returnflag = ex.l_returnflag
-        |ORDER BY l_returnflag""".stripMargin)),
-    // HyperLogLog distinct sketch (functions/Sketch.scala HllSketch): m
-    // BYTES of register state per group vs KMV's k longs at the same
-    // accuracy — the per-group state that survives profiling thousands of
-    // column×group cells at 100 TB. The aggregate emits only exact-integer
-    // sufficient statistics (sum_scaled, zeros); the estimate — including
-    // the ln() of the small-range linear-counting branch — evaluates in
-    // SQL on BOTH engines via the shared Hll.estimateSql fragment, so no
-    // JVM float rounding ever needs a DuckDB twin.
-    // The sketch-warehouse rollup (functions/Sketch.scala HllRegisters /
-    // HllMerge): per-source register BLOBS, then a union over the stored
-    // blobs — distinct-over-any-slice without re-scanning raw data (exact
-    // distinct counts cannot roll up; register vectors max-merge). The
-    // gate pins the rollup identity cross-engine: est_merged must equal
-    // est_direct bit-for-bit.
-    "q_hll_union" -> ((s, d) => q(s, d,
-      s"""WITH toks AS (
-         |  SELECT source, explode(filter(split(lower(text), '[^a-z0-9]+'), x -> x != '')) AS token
-         |  FROM documents
-         |), hashed AS (
-         |  SELECT source, cast(conv(substring(md5(token), 1, 15), 16, 10) AS bigint) AS hv
-         |  FROM toks
-         |), per_src AS (
-         |  SELECT source, hll_registers(hv, 8) AS regs FROM hashed GROUP BY source
-         |), merged AS (
-         |  SELECT hll_merge(regs, 8) AS hsk, count(*) AS n_sources FROM per_src
-         |), direct AS (
-         |  SELECT hll_sketch(hv, 8) AS hsk FROM hashed
-         |), ex AS (
-         |  SELECT count(DISTINCT token) AS exact_tokens FROM toks
-         |)
-         |SELECT
-         |  ${functions.Hll.estimateSql("merged.hsk.sum_scaled", "merged.hsk.zeros", 8)} AS est_merged,
-         |  ${functions.Hll.estimateSql("direct.hsk.sum_scaled", "direct.hsk.zeros", 8)} AS est_direct,
-         |  merged.n_sources, ex.exact_tokens
-         |FROM merged CROSS JOIN direct CROSS JOIN ex""".stripMargin)),
-    "q_hll_distinct" -> ((s, d) => q(s, d,
-      s"""WITH sk AS (
-         |  SELECT l_returnflag,
-         |    hll_sketch(cast(conv(substring(md5(cast(l_partkey AS string)), 1, 15), 16, 10) AS bigint), 8) AS hsk,
-         |    hll_sketch(cast(conv(substring(md5(cast(l_linenumber AS string)), 1, 15), 16, 10) AS bigint), 8) AS lsk
-         |  FROM lineitem GROUP BY l_returnflag
-         |), ex AS (
-         |  SELECT l_returnflag, count(DISTINCT l_partkey) AS exact_parts
-         |  FROM lineitem GROUP BY l_returnflag
-         |)
-         |SELECT sk.l_returnflag,
-         |  ${functions.Hll.estimateSql("hsk.sum_scaled", "hsk.zeros", 8)} AS est_parts,
-         |  ${functions.Hll.estimateSql("lsk.sum_scaled", "lsk.zeros", 8)} AS est_lines,
-         |  ex.exact_parts
-         |FROM sk JOIN ex ON sk.l_returnflag = ex.l_returnflag
-         |ORDER BY l_returnflag""".stripMargin)),
-    // Skew mitigation (operators/Skew.scala), oracle-gated for result
-    // equality with the unsalted plans. Sums are over integer-valued
-    // doubles (exact under any fold order), so the salted re-association
-    // cannot drift from the oracle. l_returnflag has only 3 values — at
-    // 100 TB each would be one straggler reducer without the salt stage.
-    "q_skew_agg" -> ((s, d) => {
-      load(s, d)
-      operators.Skew.twoStageAgg(s.table("lineitem"), Seq("l_returnflag"),
-          saltSource = "l_orderkey",
-          aggs = Seq(("l_quantity", "sum"), ("l_quantity", "count"),
-            ("l_extendedprice", "min"), ("l_extendedprice", "max")))
-        .orderBy(col("l_returnflag"))
-    }),
-    "q_skew_join" -> ((s, d) => {
-      load(s, d)
-      import org.apache.spark.sql.functions.{count, lit, sum}
-      val probe = s.table("lineitem")
-        .select(col("l_orderkey").as("okey"), col("l_quantity"))
-      val build = s.table("orders")
-        .select(col("o_orderkey").as("okey"), col("o_orderpriority"))
-      operators.Skew.saltedJoin(probe, build, Seq("okey"), saltSource = "okey")
-        .groupBy(col("o_orderpriority"))
-        .agg(count(lit(1)).as("cnt"), sum(col("l_quantity")).as("sum_qty"))
-        .orderBy(col("o_orderpriority"))
-    }),
-    // Bucketed-table co-located join (sources/Bucketed.scala): both sides
-    // pay their shuffle at WRITE time; the readback join plans no Exchange
-    // (asserted in BucketedSpec) — the layout strategy for repeated
-    // fact-to-fact joins at 100 TB. The gate checks result equality.
-    "q_bucketed_join" -> ((s, d) => {
-      load(s, d)
-      import org.apache.spark.sql.functions.{count, lit, min => minf, max => maxf}
-      val orders = s.table("orders")
-        .select(col("o_custkey").as("custkey"), col("o_totalprice"))
-      val customer = s.table("customer")
-        .select(col("c_custkey").as("custkey"), col("c_mktsegment"))
-      sources.Bucketed.writeBucketed(orders, "g_orders_bkt", "custkey", 8,
-        "/tmp/graft_bucketed_gate/orders")
-      sources.Bucketed.writeBucketed(customer, "g_customer_bkt", "custkey", 8,
-        "/tmp/graft_bucketed_gate/customer")
-      sources.Bucketed.cobucketedJoin(s, "g_orders_bkt", "g_customer_bkt", "custkey")
-        .groupBy(col("c_mktsegment"))
-        .agg(count(lit(1)).as("cnt"),
-          minf(col("o_totalprice")).as("min_price"),
-          maxf(col("o_totalprice")).as("max_price"))
-        .orderBy(col("c_mktsegment"))
-    }),
-    // Sessionization (operators/Sessionize.scala): gap-based session ids —
-    // one hash exchange on user_id, then a single window pass (lag → flag →
-    // running sum). 12h gap ≈ the corpus' median inter-event gap × 1.6.
-    "q_sessionize" -> ((s, d) => {
-      import org.apache.spark.sql.functions.expr
-      val ev = readEventsNanos(s, d)
-        .select(col("user_id"), col("event_id"),
-          expr("ts DIV 1000000000").as("ts_sec"))
-      operators.Sessionize.assignSessions(ev, "user_id", "ts_sec",
-          gapSeconds = 43200, tieCols = Seq("event_id"))
-        .orderBy(col("user_id"), col("ts_sec"), col("event_id"))
-    }),
-    "q_session_stats" -> ((s, d) => {
-      import org.apache.spark.sql.functions.expr
-      val ev = readEventsNanos(s, d)
-        .select(col("user_id"), col("event_id"),
-          expr("ts DIV 1000000000").as("ts_sec"))
-      val sess = operators.Sessionize.assignSessions(ev, "user_id", "ts_sec",
-        gapSeconds = 43200, tieCols = Seq("event_id"))
-      operators.Sessionize.sessionStats(sess, "user_id", "ts_sec")
-        .orderBy(col("user_id"), col("session_id"))
-    }),
-    // Deterministic hash-threshold sampling (operators/Sampling.scala):
-    // partitioning-independent, engine-independent — the oracle replays the
-    // exact inclusion decisions.
-    "q_sample_strata" -> ((s, d) => {
-      load(s, d)
-      operators.Sampling.stratifiedSample(s.table("documents"), "doc_id",
-          "lang", Map("en" -> 0.5, "de" -> 1.0, "zh" -> 0.2),
-          defaultRate = 0.25)
-        .select(col("doc_id"), col("lang"))
-        .orderBy(col("doc_id"))
-    }),
-    "q_anomaly" -> ((s, d) => {
-      // grouped z-score outlier screen; l_quantity is integer-valued, so
-      // the (n, Σx, Σx²) sums are exact doubles in any aggregation order
-      // and the whole z computation is a fixed IEEE tree → bit-exact oracle
-      load(s, d)
-      operators.Anomaly.zscoreOutliers(
-          s.table("lineitem").select("l_orderkey", "l_linenumber",
-            "l_returnflag", "l_quantity"),
-          "l_quantity", Seq("l_returnflag"), threshold = 1.6)
-        .orderBy(col("l_orderkey"), col("l_linenumber"))
-    }),
-    // generator surface: posexplode with stable position semantics (the
-    // LATERAL-VIEW shape; DuckDB replays via generate_subscripts − 1)
-    "q_posexplode" -> ((s, d) => q(s, d,
-      """SELECT doc_id, pos, token FROM (
-        |  SELECT doc_id, posexplode(filter(split(lower(text), '[^a-z0-9]+'),
-        |    w -> w != '')) AS (pos, token)
-        |  FROM documents WHERE doc_id < 20) t
-        |ORDER BY doc_id, pos""".stripMargin)),
-    // scalar string-function battery over one projection (concat_ws,
-    // pad/trim, translate, levenshtein, substring arithmetic)
-    "q_string_funcs" -> ((s, d) => q(s, d,
-      """SELECT c_custkey,
-        |  concat_ws('|', c_mktsegment, c_name) AS tagged,
-        |  lpad(CAST(c_custkey AS STRING), 8, '0') AS padded,
-        |  translate(c_mktsegment, 'AEIOU', 'aeiou') AS xlat,
-        |  levenshtein(c_mktsegment, 'BUILDING') AS lev,
-        |  substring(c_name, 1, 8) AS prefix8,
-        |  length(c_name) AS name_len
-        |FROM customer WHERE c_custkey <= 200
-        |ORDER BY c_custkey""".stripMargin)),
-    "q_token_budget" -> ((s, d) => {
-      // "best 2000 tokens per language": rank docs by length (proxy
-      // score), keep each language's prefix within the token budget; the
-      // crossing doc is kept (partial fill). Token count binds in its own
-      // projection (HOF rule)
-      load(s, d)
-      val toks = s.table("documents").select(
-        col("doc_id"), col("lang"), col("n_chars"),
-        operators.TextOps.tokenCount(col("text")).cast("long").as("n_tokens"))
-      operators.Batching.tokenBudgetSelect(toks, Seq("lang"),
-          "n_tokens", "n_chars", "doc_id", budget = 2000L)
-        .select(col("doc_id"), col("lang"), col("n_tokens"), col("cum_tokens"))
-        .orderBy(col("doc_id"))
-    }),
-    "q_eqfreq_bins" -> ((s, d) => {
-      // quantile discretizer: per-language quartile bins over doc length,
-      // reported as per-bin counts and ranges (integer-exact end to end)
-      load(s, d)
-      import org.apache.spark.sql.functions.{count, lit, max, min}
-      operators.Profile.equalFrequencyBins(
-          s.table("documents").select("doc_id", "lang", "n_chars"),
-          "n_chars", Seq("lang"), nBins = 4)
-        .groupBy(col("lang"), col("bin"))
-        .agg(count(lit(1)).as("n_docs"),
-          min("n_chars").as("lo_chars"), max("n_chars").as("hi_chars"))
-        .orderBy(col("lang"), col("bin"))
-    }),
-    "q_cube" -> ((s, d) => q(s, d,
-      """SELECT l_returnflag, l_linestatus,
-        |  CAST(grouping(l_returnflag) AS INT) AS g_flag,
-        |  CAST(grouping(l_linestatus) AS INT) AS g_status,
-        |  count(*) AS n, sum(l_quantity) AS sum_qty
-        |FROM lineitem
-        |GROUP BY CUBE(l_returnflag, l_linestatus)
-        |ORDER BY g_flag, g_status,
-        |  coalesce(l_returnflag, ''), coalesce(l_linestatus, '')""".stripMargin)),
-    "q_embed_pq" -> ((s, d) => {
-      // product-quantized ANN: 4 subspaces × 4 centroids, 2 k-means
-      // iterations, ADC top-5 — codes are 4 small ids per vector (the
-      // 100 TB compression path); oracle replays training bit-for-bit
-      load(s, d)
-      val emb = s.table("embeddings")
-      operators.Pq.adcKnn(emb, emb.filter(col("vec_id") < 10), topK = 5,
-          dim = 64, m = 4, k = 4, iters = 2)
-        .orderBy(col("query_id"), col("rank"))
-    }),
-    "q_embed_ivf_pq" -> ((s, d) => {
-      // FAISS-style IVF-ADC: coarse k-means routing (the q_embed_ivf_learned
-      // protocol) + PQ reconstructions (the q_embed_pq protocol), ADC over
-      // the probed cluster only — the full compressed-ANN composition
-      load(s, d)
-      val emb = s.table("embeddings")
-      operators.Pq.ivfAdcKnn(emb, emb.filter(col("vec_id") < 10), topK = 5,
-          dim = 64, m = 4, k = 4, iters = 2, nlist = 8, nprobe = 1, coarseIters = 2)
-        .orderBy(col("query_id"), col("rank"))
-    }),
-    "q_embed_pq_index" -> ((s, d) => {
-      // the "build once, search many" path: identical ADC results to
-      // q_embed_pq, but through the persistable PqIndex handle — search
-      // touches codes + codebooks only (same oracle as q_embed_pq)
-      load(s, d)
-      val emb = s.table("embeddings")
-      val index = operators.Pq.buildIndex(emb, dim = 64, m = 4, k = 4, iters = 2)
-      operators.Pq.adcSearch(index, emb.filter(col("vec_id") < 10), topK = 5)
-        .orderBy(col("query_id"), col("rank"))
-    }),
-    "q_embed_sq8" -> ((s, d) => {
-      // scalar-quantized (SQ8) ANN: per-dimension 8-bit codes against
-      // corpus bounds, asymmetric squared-L2 against the reconstruction —
-      // the training-free 4× compression sibling of PQ
-      load(s, d)
-      val emb = s.table("embeddings")
-      operators.Sq.sq8Knn(emb, emb.filter(col("vec_id") < 10), topK = 5,
-          dim = 64)
-        .orderBy(col("query_id"), col("rank"))
-    }),
-    "q_cohort" -> ((s, d) => {
-      // cohort retention triangle on the event log; day number is pure
-      // integer nanos arithmetic (events ts reads as nano longs)
-      load(s, d)
-      import org.apache.spark.sql.functions.expr
-      val ev = readEventsNanos(s, d)
-        .select(col("user_id"), expr("ts DIV 86400000000000").as("day"))
-      operators.EventAnalytics.cohortRetention(ev, "user_id", "day")
-        .orderBy(col("cohort_day"), col("day_offset"))
-    }),
-    "q_cohort_kmv" -> ((s, d) => {
-      // the named huge-cohort swap, executable and gated: the KMV sketch's
-      // md5 hashing is deterministic, so even the ESTIMATE replays
-      // bit-for-bit in DuckDB; k=32 < the ~112-user median cell, so the
-      // estimator path (not the exact-below-k path) is what's being gated
-      load(s, d)
-      import org.apache.spark.sql.functions.expr
-      val ev = readEventsNanos(s, d)
-        .select(col("user_id"), expr("ts DIV 86400000000000").as("day"))
-      operators.EventAnalytics.cohortRetention(ev, "user_id", "day",
-          approxDistinct = true, sketchK = 32)
-        .withColumnRenamed("n_users", "n_users_est")
-        .orderBy(col("cohort_day"), col("day_offset"))
-    }),
-    "q_funnel" -> ((s, d) => {
-      // ordered view→click→purchase funnel over first-occurrence times
-      load(s, d)
-      val ev = readEventsNanos(s, d)
-      operators.EventAnalytics.funnel(ev, "user_id", "event_type", "ts",
-          Seq("view", "click", "purchase"))
-        .orderBy(col("step_index"))
-    }),
-    "q_snapshot_diff" -> ((s, d) => {
-      // version diff: the new snapshot drops keys ≡7 (mod 1000), bumps the
-      // price on keys ≡3, and gains shifted copies of keys ≡5 — the diff
-      // must classify exactly those as removed/changed/added
-      load(s, d)
-      import org.apache.spark.sql.functions.{lit, when}
-      val ord = s.table("orders")
-      val newDf = ord.filter(col("o_orderkey") % 1000 =!= 7)
-        .withColumn("o_totalprice",
-          when(col("o_orderkey") % 1000 === 3, col("o_totalprice") + 1.0)
-            .otherwise(col("o_totalprice")))
-        .unionByName(ord.filter(col("o_orderkey") % 1000 === 5)
-          .withColumn("o_orderkey", col("o_orderkey") + 2000000000L))
-      operators.ChangeCapture.snapshotDiff(ord, newDf, Seq("o_orderkey"))
-        .orderBy(col("o_orderkey"), col("change_type"))
-    }),
-    "q_upsert" -> ((s, d) => {
-      // CDC merge: whole-row updates on keys ≡11 (mod 100), inserts with
-      // shifted keys for ≡22 — unmatched base rows pass through untouched
-      load(s, d)
-      import org.apache.spark.sql.functions.lit
-      val ord = s.table("orders")
-      val mods = ord.filter(col("o_orderkey") % 100 === 11)
-        .withColumn("o_orderpriority", lit("UPSERTED"))
-      val ins = ord.filter(col("o_orderkey") % 100 === 22)
-        .withColumn("o_orderkey", col("o_orderkey") + 3000000000L)
-        .withColumn("o_orderstatus", lit("N"))
-      operators.ChangeCapture.applyUpserts(ord, mods.unionByName(ins),
-          Seq("o_orderkey"))
-        .orderBy(col("o_orderkey"))
-    }),
-    "q_corr_regress" -> ((s, d) => {
-      // exact grouped Pearson + OLS from (n,Σx,Σy,Σxy,Σx²,Σy²): discount
-      // scaled to integer cents and quantity are both integer-valued, so
-      // every sufficient statistic is exact in any aggregation order
-      load(s, d)
-      import org.apache.spark.sql.functions.{round => roundf}
-      val li = s.table("lineitem").select(
-        col("l_returnflag"),
-        roundf(col("l_discount") * 100).cast("long").as("disc_pct"),
-        col("l_quantity"))
-      operators.Stats.corrRegression(li, "disc_pct", "l_quantity",
-          Seq("l_returnflag"))
-        .orderBy(col("l_returnflag"))
-    }),
-    "q_chisq" -> ((s, d) => {
-      // lang × source independence screen: per-cell χ² contributions,
-      // margins from the tiny cells frame, no cross-cell FP reduction
-      load(s, d)
-      operators.Stats.chiSquareCells(s.table("documents"), "lang", "source")
-        .orderBy(col("lang"), col("source"))
-    }),
-    "q_iqr_outliers" -> ((s, d) => {
-      // robust Tukey-fence screen on per-language doc lengths; n_chars is
-      // integer-valued so the interpolated quartiles are exact binary
-      // fractions and the fence arithmetic is a fixed IEEE tree
-      load(s, d)
-      operators.Anomaly.iqrOutliers(
-          s.table("documents").select("doc_id", "lang", "n_chars"),
-          "n_chars", Seq("lang"), k = 1.5)
-        .orderBy(col("doc_id"))
-    }),
-    "q_quantile_norm" -> ((s, d) => {
-      // quantile-normalize per-language doc lengths onto the pooled
-      // distribution — cross-source calibration; ranks on the distinct
-      // frame, pooled positions via the bucketed prefix kernel, lookups
-      // as bucketized range joins
-      load(s, d)
-      operators.Feature.quantileNormalize(
-          s.table("documents").select("doc_id", "lang", "n_chars"),
-          "n_chars", Seq("lang"))
-        .orderBy(col("doc_id"))
-    }),
-    "q_benford" -> ((s, d) => {
-      // Benford first-digit screen over order totals (scale 2) — digit
-      // from the scaled BIGINT's string form (integer rendering is
-      // engine-identical; float log10 extraction is ulp-fragile)
-      load(s, d)
-      operators.Anomaly.benford(
-          s.table("orders").select("o_totalprice"), "o_totalprice", scale = 2)
-        .orderBy(col("digit"))
-    }),
-    "q_cusum" -> ((s, d) => {
-      // two-sided CUSUM drift screen per supplier over time-ordered
-      // shipment quantities (target 25.5, slack 2, h 40, scale 1) — the
-      // max-0 recurrence run declaratively as cumsum − running-min
-      load(s, d)
-      operators.Anomaly.cusum(
-          s.table("lineitem").select("l_suppkey", "l_shipdate",
-            "l_orderkey", "l_linenumber", "l_quantity"),
-          "l_quantity", Seq("l_suppkey"),
-          Seq("l_shipdate", "l_orderkey", "l_linenumber"),
-          target = 25.5, slack = 2.0, threshold = 40.0, scale = 1)
-        .orderBy(col("l_suppkey"), col("l_shipdate"), col("l_orderkey"),
-          col("l_linenumber"))
-    }),
-    "q_mad_outliers" -> ((s, d) => {
-      // median/MAD modified-z screen on per-language doc lengths — the
-      // 50%-breakdown robust sibling of q_anomaly/q_iqr_outliers;
-      // integer-valued n_chars keeps both interpolated medians exact
-      load(s, d)
-      operators.Anomaly.madOutliers(
-          s.table("documents").select("doc_id", "lang", "n_chars"),
-          "n_chars", Seq("lang"), threshold = 3.5)
-        .orderBy(col("doc_id"))
-    }),
-    "q_length_buckets" -> ((s, d) => {
-      // padding-efficiency ladder over whitespace token counts; the token
-      // count binds in its own projection so the bucket CASE/least/greatest
-      // reuse one computed value (HOF-binding rule, NOTES.md)
-      load(s, d)
-      val toks = s.table("documents").select(col("doc_id"),
-        operators.TextOps.tokenCount(col("text")).cast("long").as("n_tokens"))
-      operators.Batching.bucketStats(toks, "n_tokens", Seq(16L, 32L, 64L, 128L))
-        .orderBy(col("seq_bucket"))
-    }),
-    "q_histogram" -> ((s, d) => {
-      // 24 × 25000-wide bins over order totals; clamped edge bins
-      load(s, d)
-      operators.Profile.histogram(s.table("orders"), "o_totalprice",
-          lo = 0.0, hi = 600000.0, nBins = 24)
-        .orderBy(col("bin"))
-    }),
-    "q_profile" -> ((s, d) => {
-      // per-column completeness/range report (string-rendered min/max)
-      load(s, d)
-      operators.Profile.columnProfile(s.table("orders"),
-          Seq("o_orderkey", "o_orderstatus", "o_orderpriority"))
-        .orderBy(col("col_name"))
-    }),
-    "q_profile_kmv" -> ((s, d) => {
-      // profile-everything at 100 TB: KMV sketch distincts (no Expand, k
-      // longs of state); o_orderkey exceeds k=256 so the ESTIMATOR path is
-      // gated, the low-cardinality columns take the exact-below-k path
-      load(s, d)
-      operators.Profile.columnProfile(s.table("orders"),
-          Seq("o_orderkey", "o_orderstatus", "o_orderpriority"),
-          approxDistinct = true, sketchK = 256)
-        .orderBy(col("col_name"))
-    }),
-    "q_profile_hll" -> ((s, d) => {
-      // the smallest-state profile path: HLL registers (2^8 BYTES per
-      // column) replace the KMV longs; same report shape, estimate via
-      // the shared SQL fragment. o_orderkey exercises the raw branch,
-      // the low-cardinality columns the linear-counting branch.
-      load(s, d)
-      operators.Profile.columnProfileHll(s.table("orders"),
-          Seq("o_orderkey", "o_orderstatus", "o_orderpriority"), p = 8)
-        .orderBy(col("col_name"))
-    }),
-    "q_zorder" -> ((s, d) => {
-      // write-layout clustering key: 12-bit Z-order interleave of
-      // (l_partkey, l_suppkey) — the key ORDER is the gate (rows sort by
-      // it), so min-max pruning behavior is pinned, not just the values
-      load(s, d)
-      import org.apache.spark.sql.functions.{lit, pmod}
-      s.table("lineitem").select(col("l_orderkey"), col("l_linenumber"),
-          operators.Layout.zOrderKey(Seq(
-            pmod(col("l_partkey"), lit(4096L)),
-            pmod(col("l_suppkey"), lit(4096L))), bits = 12).as("zkey"))
-        .orderBy(col("zkey"), col("l_orderkey"), col("l_linenumber"))
-    }),
-    "q_unpivot" -> ((s, d) => q(s, d,
-      """SELECT l_orderkey, l_linenumber, metric, value FROM (
-        |  SELECT l_orderkey, l_linenumber,
-        |    stack(3, 'quantity', l_quantity,
-        |             'extendedprice', l_extendedprice,
-        |             'discount', l_discount) AS (metric, value)
-        |  FROM lineitem WHERE l_orderkey < 1000) t
-        |ORDER BY l_orderkey, l_linenumber, metric""".stripMargin)),
-    "q_exists" -> ((s, d) => q(s, d,
-      """SELECT c_mktsegment, count(*) AS n
-        |FROM customer c
-        |WHERE EXISTS (SELECT 1 FROM orders o
-        |              WHERE o.o_custkey = c.c_custkey
-        |                AND o.o_totalprice > 300000)
-        |GROUP BY c_mktsegment ORDER BY c_mktsegment""".stripMargin)),
-    "q_sample_weighted" -> ((s, d) => {
-      // Efraimidis–Spirakis weighted top-64 by n_chars (longer docs more
-      // likely); hash-derived priorities, so the draw is reproducible
-      load(s, d)
-      operators.Sampling.weightedSample(s.table("documents"), "doc_id",
-          "n_chars", k = 64)
-        .select(col("doc_id"), col("n_chars"))
-        .orderBy(col("doc_id"))
-    }),
-    "q_sample_per_group" -> ((s, d) => {
-      // deterministic ≤20-docs-per-source cap via the bounded-heap topk_by
-      // aggregate (48-bit hash ranking, ties to the lower doc_id)
-      load(s, d)
-      operators.Sampling.samplePerGroup(s.table("documents"), "doc_id",
-          "source", n = 20)
-        .orderBy(col("source"), col("rank"))
-    }),
-    "q_corpus_mix" -> ((s, d) => {
-      load(s, d)
-      val docs = s.table("documents")
-      operators.Sampling.mixCorpora(Seq(
-          (docs.filter(col("source") === "src0"), 1.0),
-          (docs.filter(col("source") === "src1"), 0.5),
-          (docs.filter(col("source") === "src2"), 0.2)), "doc_id")
-        .select(col("doc_id"), col("source"))
-        .orderBy(col("doc_id"))
-    }),
-    // Vocabulary + count-min sketch (operators/Freq.scala)
-    "q_vocab_topk" -> ((s, d) => {
-      load(s, d)
-      operators.Freq.vocabulary(s.table("documents"), "text", 100)
-    }),
-    "q_cms_estimate" -> ((s, d) => {
-      load(s, d)
-      import org.apache.spark.sql.functions.{count => countf, desc, explode, lit => litf}
-      val docs = s.table("documents")
-      // one tokenization shared by the sketch build AND the top-20 item
-      // pick (vocabulary() would re-tokenize); registered for harness release
-      val toks = graft.CacheScope.register(docs.select(
-        explode(operators.TextOps.tokens(col("text"))).as("token")).cache())
-      val sketch = operators.Freq.countMinSketch(toks, "token",
-        depth = 4, width = 512)
-      val items = toks.groupBy(col("token"))
-        .agg(countf(litf(1)).as("c"))
-        .orderBy(desc("c"), col("token").asc).limit(20).select("token")
-      operators.Freq.cmsEstimate(sketch, items, "token", depth = 4, width = 512)
-        .orderBy(col("token"))
-    })
-  )
-
-  // ---- DuckDB oracle fragments for the LLM ops ---------------------------
-
-  /** Tokenized (doc_id, w, pos) and distinct (doc_id, shingle) CTE bodies —
-    * mirror TextOps.tokens / TextOps.shingles. */
-  /** DuckDB replica of [[piiTestText]] — a `pii(doc_id, text)` CTE body.
-    * Concatenation operators sit at line ENDS: this snippet is interpolated
-    * into oracles that re-run `.stripMargin`, which would eat one pipe off
-    * a line-leading `||`. */
-  private val duckPii =
-    """pii AS (
-      |  SELECT doc_id,
-      |    CASE WHEN doc_id % 5 = 0 THEN text ELSE
-      |      text || ' mail user' || doc_id::VARCHAR || '@example.com' ||
-      |      ' ssn ' || lpad((doc_id % 1000)::VARCHAR, 3, '0') ||
-      |      '-' || lpad((doc_id % 100)::VARCHAR, 2, '0') ||
-      |      '-' || lpad((doc_id % 10000)::VARCHAR, 4, '0') ||
-      |      ' call ' || CASE WHEN doc_id % 2 = 0
-      |          THEN '(555) ' || lpad((doc_id % 1000)::VARCHAR, 3, '0') ||
-      |               '-' || lpad((doc_id % 10000)::VARCHAR, 4, '0')
-      |          ELSE '555-' || lpad((doc_id % 1000)::VARCHAR, 3, '0') ||
-      |               '-' || lpad((doc_id % 10000)::VARCHAR, 4, '0') END ||
-      |      ' from 10.' || (doc_id % 256)::VARCHAR ||
-      |      '.0.' || ((doc_id * 7) % 256)::VARCHAR
-      |    END AS text
-      |  FROM documents)""".stripMargin
-
-  private val duckToks =
-    """toks0 AS (
-      |  SELECT doc_id, unnest(string_split_regex(lower(text), '[^a-z0-9]+')) AS w,
-      |         generate_subscripts(string_split_regex(lower(text), '[^a-z0-9]+'), 1) AS pos
-      |  FROM documents
-      |), toks AS (SELECT doc_id, w, pos FROM toks0 WHERE w <> '')""".stripMargin
-
-  /** Word-3-gram CTEs under the canonical `sh0`/`sh` names most oracles
-    * reference — the single source is [[duckShinglesN]]. */
-  private lazy val duckShingles = duckShinglesN(3, "sh")
-
-  /** DuckDB twin of [[floodDocs]] for the q_*_flood oracles: a CTE named
-    * `documents` SHADOWS the base view for every downstream CTE (duckToks,
-    * duckShingles, duckSimhashSql all read `FROM documents` unchanged);
-    * the base view is reached through the explicit `main` schema. */
-  private val duckFloodDocs: String =
-    """documents AS (
-      |  SELECT doc_id + r*1000000 AS doc_id,
-      |    CASE WHEN r = 0 THEN text
-      |         ELSE text || ' flood f' || r::VARCHAR END AS text
-      |  FROM (SELECT doc_id, text FROM main.documents WHERE doc_id % 25 = 0) fd,
-      |       range(4) t(r))""".stripMargin
-
-  private def duckJaccardTail(threshold: Double = 0.5): String =
-    s"""sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
-      |inter AS (
-      |  SELECT c.id_a, c.id_b, count(*) AS inter
-      |  FROM cand c
-      |  JOIN sh sa ON sa.doc_id = c.id_a
-      |  JOIN sh sb ON sb.doc_id = c.id_b AND sb.shingle = sa.shingle
-      |  GROUP BY c.id_a, c.id_b
-      |)
-      |SELECT i.id_a, i.id_b,
-      |  CAST(i.inter AS DOUBLE) / CAST(na.n + nb.n - i.inter AS DOUBLE) AS jaccard
-      |FROM inter i
-      |JOIN sizes na ON na.doc_id = i.id_a
-      |JOIN sizes nb ON nb.doc_id = i.id_b
-      |WHERE CAST(i.inter AS DOUBLE) / CAST(na.n + nb.n - i.inter AS DOUBLE) >= $threshold
-      |ORDER BY i.id_a, i.id_b""".stripMargin
-
-  /** Word-n-gram CTEs (`<cte>0` with duplicates, `<cte>` distinct) —
-    * mirrors TextOps.shingles for any n. */
-  private def duckShinglesN(n: Int, cte: String = "shn"): String = {
-    val concat = ("w" +: (1 until n).map(k => s"lead(w,$k) OVER win")).mkString(" || ' ' || ")
-    s"""$duckToks, ${cte}0 AS (
-       |  SELECT doc_id, $concat AS shingle
-       |  FROM toks WINDOW win AS (PARTITION BY doc_id ORDER BY pos)
-       |  QUALIFY lead(w,${n - 1}) OVER win IS NOT NULL
-       |), $cte AS (SELECT DISTINCT doc_id, shingle FROM ${cte}0)""".stripMargin
-  }
-
-  /** The minhash CTE chain through candidate pairs (shared by the near-dup,
-    * connected-components, and incremental-dedup oracles). `candCond`
-    * restricts which band collisions become candidates (default: each
-    * unordered pair once). */
-  private def duckMinhashCtes(candCond: String = "a.doc_id < b.doc_id"): String = {
-    val coeffs = operators.Dedup.minhashCoeffs(16).zipWithIndex
-      .map { case ((a, b), i) => s"($i, ${a}::BIGINT, ${b}::BIGINT)" }
-      .mkString(", ")
-    s"""$duckShingles,
-       |hm AS (
-       |  SELECT doc_id,
-       |    (CAST('0x' || substr(md5(shingle), 1, 15) AS BIGINT) % ${operators.Dedup.MinhashP}) AS hm
-       |  FROM sh
-       |),
-       |coeffs(i, a, b) AS (VALUES $coeffs),
-       |mh AS (
-       |  SELECT doc_id, i, min((a * hm + b) % ${operators.Dedup.MinhashP}) AS mh
-       |  FROM hm CROSS JOIN coeffs
-       |  GROUP BY doc_id, i
-       |),
-       |bands AS (
-       |  SELECT doc_id, i // 4 AS band, string_agg(CAST(mh AS VARCHAR), '|' ORDER BY i) AS sig
-       |  FROM mh GROUP BY doc_id, i // 4
-       |),
-       |cand AS (
-       |  SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-       |  FROM bands a JOIN bands b
-       |    ON a.band = b.band AND a.sig = b.sig AND $candCond
-       |)""".stripMargin
-  }
-
-  /** The value-identical DuckDB twin of the winnow kernel's gram hash
-    * ([[graft.functions.WinnowKernel]]) at noise=21: the first 10 hex
-    * chars of md5(gram) as a BIGINT — the same '0x'-cast md5 derivation
-    * the minhash oracles use. Evaluates over the same `text`/`pos`
-    * columns the selection CTE exposes. */
-  private val duckWinnowHash: String =
-    s"CAST('0x' || substring(md5(substring(text, pos, 21)), 1, " +
-      s"${operators.Dedup.WinnowHashHexChars}) AS BIGINT)"
-
-  /** Shared selection CTEs replaying [[operators.Dedup.winnowFingerprints]]
-    * at minLen=30, noise=21 (w=10) over `documents`: the same packed
-    * `hash(40b) ∥ pos(21b) ∥ validStart(1b)` BIGINT key (62 bits total —
-    * WinnowHashHexChars = 10 hex chars = 40 hash bits, matching the
-    * Dedup.scala constants doc), per-doc window
-    * min ordered by the position bits, flag-filtered winners, gram TEXT
-    * recovered by joining the winners back to the documents — ends with
-    * `sel(doc_id, pos, gram)`. */
-  private val duckWinnowSelCtes: String =
-    s"""p AS (
-       |  SELECT doc_id, length(text) - 29 AS last_start,
-       |    unnest(generate_series(1, length(text) - 20)) AS pos, text
-       |  FROM documents WHERE length(text) >= 30
-       |),
-       |occ AS (
-       |  SELECT doc_id,
-       |    ($duckWinnowHash * 4194304) + (pos * 2)
-       |      + (CASE WHEN pos <= last_start THEN 1 ELSE 0 END) AS key
-       |  FROM p
-       |),
-       |winm AS (
-       |  SELECT doc_id, key,
-       |    min(key) OVER (PARTITION BY doc_id ORDER BY ((key >> 1) & 2097151)
-       |      ROWS BETWEEN CURRENT ROW AND 9 FOLLOWING) AS winkey
-       |  FROM occ
-       |),
-       |selp AS (
-       |  SELECT DISTINCT doc_id,
-       |    CAST(((winkey >> 1) & 2097151) AS INTEGER) AS pos
-       |  FROM winm WHERE (key & 1) = 1
-       |),
-       |sel AS (
-       |  SELECT s.doc_id, s.pos, substring(d.text, s.pos, 21) AS gram
-       |  FROM selp s JOIN documents d ON d.doc_id = s.doc_id
-       |)""".stripMargin
-
-  /** Replays Dedup.winnowedCut per-CHARACTER (the q_substring_cut
-    * anti-join formulation over the winnowed selection): a char survives
-    * iff no duplicate-marked fingerprint span covers it, each span
-    * stretched `pad` chars both ways (edgePad). */
-  private def duckWinnowCutSql(pad: Int): String =
-    s"""WITH $duckWinnowSelCtes,
-       |marked AS (
-       |  SELECT doc_id, pos,
-       |    count(*) OVER (PARTITION BY gram) AS cnt,
-       |    row_number() OVER (PARTITION BY gram ORDER BY doc_id, pos) AS rn
-       |  FROM sel
-       |),
-       |dup AS (
-       |  SELECT doc_id, pos - $pad AS s, pos + 20 + $pad AS e FROM marked
-       |  WHERE cnt >= 2 AND rn > 1
-       |),
-       |chars AS (
-       |  SELECT d.doc_id, t.i AS cpos, substring(d.text, t.i, 1) AS ch
-       |  FROM documents d, unnest(generate_series(1, length(d.text))) AS t(i)
-       |),
-       |kept AS (
-       |  SELECT c.doc_id, c.cpos, c.ch
-       |  FROM chars c LEFT JOIN dup u
-       |    ON u.doc_id = c.doc_id AND c.cpos BETWEEN u.s AND u.e
-       |  GROUP BY c.doc_id, c.cpos, c.ch
-       |  HAVING count(u.doc_id) = 0
-       |),
-       |agg AS (
-       |  SELECT doc_id, string_agg(ch, '' ORDER BY cpos) AS cleaned_text
-       |  FROM kept GROUP BY doc_id
-       |)
-       |SELECT d.doc_id, coalesce(a.cleaned_text, '') AS cleaned_text,
-       |  length(d.text) - length(coalesce(a.cleaned_text, '')) AS removed_chars
-       |FROM documents d LEFT JOIN agg a ON a.doc_id = d.doc_id
-       |ORDER BY d.doc_id""".stripMargin
-
-  /** Replays Dedup.winnowIncrementalDedup over the even(ref)/odd(new)
-    * doc_id split — shared verbatim by q_winnow_ingest and
-    * q_winnow_ingest_persisted (the parquet round-trip of the index must
-    * not change a single row). */
-  private val duckWinnowIngestSql: String =
-    s"""WITH $duckWinnowSelCtes,
-       |refidx AS (
-       |  SELECT DISTINCT gram FROM sel WHERE doc_id % 2 = 0
-       |),
-       |agg AS (
-       |  SELECT s.doc_id, count(*) AS n_fp,
-       |    count(r.gram) AS n_dup
-       |  FROM sel s LEFT JOIN refidx r ON r.gram = s.gram
-       |  WHERE s.doc_id % 2 = 1
-       |  GROUP BY s.doc_id
-       |)
-       |SELECT d.doc_id, coalesce(a.n_fp, 0) AS n_fp,
-       |  coalesce(a.n_dup, 0) AS n_dup
-       |FROM documents d LEFT JOIN agg a ON a.doc_id = d.doc_id
-       |WHERE d.doc_id % 2 = 1
-       |ORDER BY d.doc_id""".stripMargin
-
-  private val duckStopwordsEn = "['the','and','of','to','in','is','a']"
-
-  private def duckStopCount(words: String): String =
-    s"len(list_filter(string_split_regex(lower(text), '[^a-z0-9]+'), w -> list_contains($words, w)))"
-
-  private val duckCos =
-    "list_reduce(list_transform(list_zip({A}, {B}), t -> CAST(t[1] AS DOUBLE)*CAST(t[2] AS DOUBLE)), (a,b) -> a + b)"
-
-  private def cosSql(a: String, b: String): String =
-    duckCos.replace("{A}", a).replace("{B}", b)
-
-  /** The q_embed_project sign matrix as DuckDB VALUES rows — the exact
-    * [[operators.Similarity.signMatrix]](64, 16) entries (±1.0), one
-    * `(dim_idx, DOUBLE[64])` row per output dimension, so both engines
-    * fold the IDENTICAL signs in the identical order. */
-  private lazy val duckSignRows: String =
-    operators.Similarity.signMatrix(64, 16).zipWithIndex.map { case (row, j) =>
-      row.map(v => if (v > 0) "1.0" else "-1.0")
-        .mkString(s"  ($j, [", ", ", s"])")
-    }.mkString(",\n")
-
-  /** Replays Pq.adcKnn: per-subspace L2 k-means (same init/rounding/tie
-    * protocol as the IVF oracle), encode, reconstruct by list concat, ADC
-    * = squared L2 to the reconstruction as the same a·a − 2·a·b + b·b
-    * tree over the sequential-fold dot product. */
-  /** Squared L2 as the same `a·a − 2·a·b + b·b` tree over the
-    * sequential-fold dot product that [[operators.Pq.sqDist]] evaluates. */
-  private def sqdSql(a: String, b: String): String =
-    s"(${cosSql(a, a)} - 2.0::DOUBLE * ${cosSql(a, b)} + ${cosSql(b, b)})"
-
-  /** PQ training/encode/reconstruct CTE chain (per-subspace k-means with
-    * the shared init/rounding/tie protocol, ending in
-    * `recon(vec_id, recon)`), shared by the plain-ADC and IVF-ADC
-    * oracles. CTE names (s0…, i0…, m0_1…, f0…, r0…) are disjoint from
-    * [[duckKmeansCtes]]'s, so the two chains compose in one WITH. */
-  private def duckPqReconCtes(m: Int, k: Int, iters: Int, width: Int): String = {
-    def assignCte(name: String, src: String, cents: String) =
-      s"""$name AS (
-         |  SELECT vec_id, sl, cid FROM (
-         |    SELECT s.vec_id, s.sl, c.cid,
-         |      row_number() OVER (PARTITION BY s.vec_id
-         |        ORDER BY ${sqdSql("s.sl", "c.centroid")}, c.cid) AS r
-         |    FROM $src s CROSS JOIN $cents c) WHERE r = 1)""".stripMargin
-    val subs = (0 until m).map { j =>
-      val (lo, hi) = (j * width + 1, (j + 1) * width)
-      val rounds = (1 to iters).map { i =>
-        assignCte(s"m${j}_$i", s"s$j", if (i == 1) s"i$j" else s"c${j}_${i - 1}") +
-        s""",
-           |d${j}_$i AS (
-           |  SELECT cid, unnest(sl) AS v, generate_subscripts(sl, 1) AS pos
-           |  FROM m${j}_$i),
-           |cd${j}_$i AS (
-           |  SELECT cid, pos, round(avg(CAST(v AS DOUBLE)), 6) AS cv
-           |  FROM d${j}_$i GROUP BY cid, pos),
-           |c${j}_$i AS (
-           |  SELECT cid, list(cv ORDER BY pos) AS centroid
-           |  FROM cd${j}_$i GROUP BY cid)""".stripMargin
-      }.mkString(",\n")
-      s"""s$j AS (SELECT vec_id, embedding[$lo:$hi] AS sl FROM embeddings),
-         |i$j AS (
-         |  SELECT CAST(row_number() OVER (ORDER BY vec_id) - 1 AS INT) AS cid,
-         |    list_transform(sl, x -> CAST(x AS DOUBLE)) AS centroid
-         |  FROM (SELECT vec_id, sl FROM s$j ORDER BY vec_id LIMIT $k)),
-         |$rounds,
-         |${assignCte(s"f$j", s"s$j", s"c${j}_$iters")},
-         |r$j AS (SELECT f.vec_id, c.centroid FROM f$j f JOIN c${j}_$iters c USING (cid))""".stripMargin
-    }.mkString(",\n")
-    val concat = (0 until m).map(j => s"r$j.centroid").mkString(" || ")
-    val joins = (1 until m).map(j => s"JOIN r$j USING (vec_id)").mkString(" ")
-    s"""$subs,
-       |recon AS (
-       |  SELECT r0.vec_id, $concat AS recon
-       |  FROM r0 $joins)""".stripMargin
-  }
-
-  private def duckPqSql: String =
-    s"""WITH ${duckPqReconCtes(m = 4, k = 4, iters = 2, width = 16)},
-       |q AS (SELECT vec_id AS query_id, embedding AS q_emb
-       |      FROM embeddings WHERE vec_id < 10),
-       |sc AS (
-       |  SELECT q.query_id, r.vec_id AS neighbor_id,
-       |    ${sqdSql("q.q_emb", "r.recon")} AS adc_dist
-       |  FROM recon r CROSS JOIN q WHERE q.query_id <> r.vec_id),
-       |rk AS (
-       |  SELECT query_id, neighbor_id, adc_dist,
-       |    CAST(row_number() OVER (PARTITION BY query_id
-       |      ORDER BY adc_dist, neighbor_id) AS BIGINT) AS rank
-       |  FROM sc)
-       |SELECT query_id, neighbor_id, adc_dist, rank FROM rk
-       |WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin
-
-  /** Replays [[operators.Pq.ivfAdcKnn]]: the shared coarse-k-means chain
-    * (`mf`) routes each query to its best cluster, the shared PQ chain
-    * (`recon`) supplies reconstructions, ADC ranks only the probed
-    * cluster's members. */
-  private def duckIvfPqSql: String =
-    s"""WITH ${duckKmeansCtes(nlist = 8, iters = 2)},
-       |${duckPqReconCtes(m = 4, k = 4, iters = 2, width = 16)},
-       |q AS (SELECT vec_id AS query_id, embedding AS q_emb
-       |      FROM embeddings WHERE vec_id < 10),
-       |qc AS (
-       |  SELECT q.query_id, q.q_emb, c.cl,
-       |    ${cosSql("q.q_emb", "c.centroid")} AS ccos
-       |  FROM q CROSS JOIN c2 c
-       |),
-       |assigned AS (
-       |  SELECT query_id, q_emb, cl FROM (
-       |    SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY ccos DESC, cl) AS r FROM qc
-       |  ) WHERE r <= 1
-       |),
-       |sc AS (
-       |  SELECT a.query_id, a.cl, r.vec_id AS neighbor_id,
-       |    ${sqdSql("a.q_emb", "r.recon")} AS adc_dist
-       |  FROM recon r
-       |  JOIN mf m ON m.vec_id = r.vec_id
-       |  JOIN assigned a ON m.cl = a.cl
-       |  WHERE a.query_id <> r.vec_id),
-       |rk AS (
-       |  SELECT query_id, cl, neighbor_id, adc_dist,
-       |    CAST(row_number() OVER (PARTITION BY query_id
-       |      ORDER BY adc_dist, neighbor_id) AS BIGINT) AS rank
-       |  FROM sc)
-       |SELECT query_id, CAST(cl AS INT) AS probed_cluster, neighbor_id,
-       |  adc_dist, rank
-       |FROM rk WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin
-
-  /** The text-stats SELECT body (no ORDER BY) — shared by q_text_stats and
-    * the curation-pipeline oracle. */
-  private def duckTextStatsSql: String = {
-    val nTok = "CAST(len(list_filter(string_split_regex(lower(text), '[^a-z0-9]+'), w -> w <> '')) AS INT)"
-    val punct = "CAST(length(regexp_replace(lower(text), '[a-z0-9 ]', '', 'g')) AS INT)"
-    val stopEn = s"CAST(${duckStopCount(duckStopwordsEn)} AS INT)"
-    val langScores = TextOps_LangProfilesSql
-    s"""SELECT doc_id,
-       |  CAST(length(text) AS INT) AS n_chars,
-       |  $nTok AS n_tokens,
-       |  $punct AS n_punct,
-       |  $stopEn AS n_stopwords,
-       |  least(1.0::DOUBLE, CAST($nTok AS DOUBLE) / 100.0::DOUBLE)
-       |    * (1.0::DOUBLE - CASE WHEN CAST(length(text) AS DOUBLE) > 0.0 THEN CAST($punct AS DOUBLE) / CAST(length(text) AS DOUBLE) ELSE 0.0::DOUBLE END)
-       |    * (0.5::DOUBLE + 0.5::DOUBLE * CASE WHEN CAST($nTok AS DOUBLE) > 0.0 THEN CAST($stopEn AS DOUBLE) / CAST($nTok AS DOUBLE) ELSE 0.0::DOUBLE END) AS quality_score,
-       |  $langScores AS lang_pred
-       |FROM documents""".stripMargin
-  }
-
-  /** DuckDB replica of merge-table BPE, generated from the SAME
-    * [[functions.Bpe.DefaultMerges]] the Spark expression applies — single
-    * source of truth for the table. Each segment is rendered with every
-    * symbol framed by chr(31) (absent from the corpus, asserted in BpeSpec),
-    * so one plain `replace` per merge rewrites exactly the full-symbol
-    * adjacent pairs, left-to-right non-overlapping — the same semantics as
-    * `Bpe.mergePass`. Token count = framing-separator count / 2. */
-  private def duckBpeSql: String = {
-    val sep = "chr(31)"
-    def s(x: String) = "'" + x.replace("'", "''") + "'"
-    val merged = functions.Bpe.DefaultMerges.foldLeft("s") { case (acc, (a, b)) =>
-      s"replace($acc, $sep||${s(a)}||$sep||$sep||${s(b)}||$sep, $sep||${s(a + b)}||$sep)"
-    }
-    s"""WITH segs AS (
-       |  SELECT doc_id, unnest(regexp_extract_all(text, '${operators.TextOps.BpeSplitRe}')) AS seg
-       |  FROM documents
-       |), sym AS (
-       |  SELECT doc_id, regexp_replace(seg, '([\\s\\S])', $sep || '\\1' || $sep, 'g') AS s
-       |  FROM segs
-       |), merged AS (
-       |  SELECT doc_id, $merged AS m FROM sym
-       |), counted AS (
-       |  SELECT doc_id,
-       |    CAST(sum((length(m) - length(replace(m, $sep, ''))) // 2) AS INT) AS c
-       |  FROM merged GROUP BY doc_id
-       |)
-       |SELECT d.doc_id, coalesce(c.c, 0) AS bpe_tokens
-       |FROM documents d LEFT JOIN counted c ON d.doc_id = c.doc_id
-       |ORDER BY d.doc_id""".stripMargin
-  }
-
-  /** DuckDB replica of [[operators.Multimodal.fakeDecode]]'s normalized
-    * 16-bucket byte histogram. The payload is the UTF-8 bytes of `text`; the
-    * corpus is ASCII (asserted in OperatorsSpec), so per-BYTE bucket counts
-    * equal per-CHARACTER counts and each bucket is one `[\\x..-\\x..]` regex
-    * deletion count. count/total division is exact-int-over-exact-int in
-    * IEEE doubles on both engines — hash-exact. */
-  private def duckMediaFeaturesSql: String = {
-    val buckets = (0 until 16).map { b =>
-      val lo = f"${b * 16}%02x"
-      val hi = f"${b * 16 + 15}%02x"
-      s"CAST(length(text) - length(regexp_replace(text, '[\\x$lo-\\x$hi]', '', 'g')) AS DOUBLE)" +
-        f" / greatest(CAST(1 AS DOUBLE), CAST(length(text) AS DOUBLE)) AS f$b%02d"
-    }
-    s"""SELECT doc_id, ${buckets.mkString(",\n  ")}
-       |FROM documents ORDER BY doc_id""".stripMargin
-  }
-
-  /** DuckDB replay of the REAL PNG round-trip ([[operators.Multimodal
-    * .withMediaPng]] → [[operators.Multimodal.decodeImageFeatures]]):
-    * grayscale PNG is lossless, so decoded pixel i equals the text byte at
-    * `i mod len` — the oracle regenerates the 256 pixels per document with
-    * `generate_series` and buckets them exactly like the decoder
-    * (`g*16/256`, count/256 — both divisions exact in IEEE doubles). The
-    * corpus is ASCII (asserted in the query), so `ascii()` on a character
-    * equals the UTF-8 byte. */
-  private def duckMediaDecodeSql: String = {
-    val buckets = (0 until 16).map { b =>
-      s"CAST(sum(CASE WHEN g // 16 = $b THEN 1 ELSE 0 END) AS DOUBLE) / 256.0" +
-        f" AS f$b%02d"
-    }
-    s"""WITH px AS (
-       |  SELECT d.doc_id,
-       |    CASE WHEN length(d.text) = 0 THEN 0
-       |         ELSE ascii(substr(d.text, CAST(t.i % length(d.text) AS INT) + 1, 1))
-       |    END AS g
-       |  FROM documents d CROSS JOIN generate_series(0, 255) AS t(i)
-       |)
-       |SELECT doc_id, ${buckets.mkString(",\n  ")}
-       |FROM px GROUP BY doc_id ORDER BY doc_id""".stripMargin
-  }
-
-  /** DuckDB replay of the resize chain ([[operators.Multimodal
-    * .resizeImages]] 16×16 → 8×8 nearest-neighbor): kept pixel (dx, dy)
-    * is source index `2·dy·16 + 2·dx`, whose value is the text byte at
-    * that index mod len — the 64-pixel histogram regenerates from the
-    * text with the same `g·16/256` bucketing, count / 64. */
-  private def duckMediaResizeSql: String = {
-    val buckets = (0 until 16).map { b =>
-      s"CAST(sum(CASE WHEN g // 16 = $b THEN 1 ELSE 0 END) AS DOUBLE) / 64.0" +
-        f" AS f$b%02d"
-    }
-    s"""WITH px AS (
-       |  SELECT d.doc_id,
-       |    CASE WHEN length(d.text) = 0 THEN 0
-       |         ELSE ascii(substr(d.text,
-       |           CAST((2 * ty.dy * 16 + 2 * tx.dx) % length(d.text) AS INT) + 1, 1))
-       |    END AS g
-       |  FROM documents d
-       |  CROSS JOIN generate_series(0, 7) AS tx(dx)
-       |  CROSS JOIN generate_series(0, 7) AS ty(dy)
-       |)
-       |SELECT doc_id, ${buckets.mkString(",\n  ")}
-       |FROM px GROUP BY doc_id ORDER BY doc_id""".stripMargin
-  }
-
-  /** DuckDB replay of the REAL AVI round-trip ([[operators.Multimodal
-    * .withMediaAvi]] → [[operators.Multimodal.decodeVideoFeatures]]):
-    * losslessly-compressed frames mean decoded frame `f` pixel `i` equals
-    * the text byte at `(i+f) mod len` — regenerated with a frames ×
-    * pixels double `generate_series` and bucketed exactly like the
-    * decoder (`g*16/256`, count/1024; both divisions exact in IEEE
-    * doubles). Container metadata (frame count, geometry) replays as the
-    * muxer's constants. ASCII corpus asserted in the Spark query. */
-  private def duckMediaVideoSql: String = {
-    val nf = operators.Multimodal.AviFrames
-    val side = operators.Multimodal.PngSide
-    val px = side * side
-    val totalPx = nf * px
-    val buckets = (0 until 16).map { b =>
-      s"CAST(sum(CASE WHEN g // 16 = $b THEN 1 ELSE 0 END) AS DOUBLE) / $totalPx.0" +
-        f" AS f$b%02d"
-    }
-    s"""WITH px AS (
-       |  SELECT d.doc_id,
-       |    CASE WHEN length(d.text) = 0 THEN 0
-       |         ELSE ascii(substr(d.text,
-       |           CAST((t.i + fr.f) % length(d.text) AS INT) + 1, 1))
-       |    END AS g
-       |  FROM documents d
-       |    CROSS JOIN generate_series(0, ${nf - 1}) AS fr(f)
-       |    CROSS JOIN generate_series(0, ${px - 1}) AS t(i)
-       |)
-       |SELECT doc_id, CAST($nf AS INT) AS n_frames,
-       |  CAST($side AS INT) AS width, CAST($side AS INT) AS height,
-       |  ${buckets.mkString(",\n  ")}
-       |FROM px GROUP BY doc_id ORDER BY doc_id""".stripMargin
-  }
-
-  /** DuckDB replay of [[operators.Similarity.ivfKnnLearned]]: the same
-    * deterministic k-means (init = 8 lowest-id vectors, 2 assignment/update
-    * rounds, means rounded to 6 decimals) unrolled as generated CTEs, then
-    * the same nprobe=1 probe. Iteration count is a compile-time constant on
-    * both sides, so the SQL is finite by construction. */
-  /** Deterministic-k-means CTE chain shared by the learned-IVF and
-    * semantic-dedup oracles: init → `iters` assignment/update rounds →
-    * final member assignment `mf(vec_id, embedding, cl)`. */
-  private def duckKmeansCtes(nlist: Int, iters: Int): String = {
-    def assignCtes(i: String, centCte: String) =
-      s"""a$i AS (
-         |  SELECT e.vec_id, e.embedding, c.cl,
-         |    row_number() OVER (PARTITION BY e.vec_id
-         |      ORDER BY ${cosSql("e.embedding", "c.centroid")} DESC, c.cl) AS r
-         |  FROM embeddings e CROSS JOIN $centCte c
-         |),
-         |m$i AS (SELECT vec_id, embedding, cl FROM a$i WHERE r = 1)""".stripMargin
-    def centCtes(i: Int) =
-      s"""d$i AS (
-         |  SELECT cl, unnest(embedding) AS v, generate_subscripts(embedding, 1) AS pos
-         |  FROM m$i
-         |),
-         |cd$i AS (SELECT cl, pos, round(avg(CAST(v AS DOUBLE)), 6) AS cv FROM d$i GROUP BY cl, pos),
-         |c$i AS (SELECT cl, list(cv ORDER BY pos) AS centroid FROM cd$i GROUP BY cl)""".stripMargin
-    val rounds = (1 to iters).map { i =>
-      assignCtes(i.toString, if (i == 1) "init" else s"c${i - 1}") + ",\n" + centCtes(i)
-    }.mkString(",\n")
-    s"""init AS (
-       |  SELECT CAST(row_number() OVER (ORDER BY vec_id) - 1 AS INT) AS cl,
-       |         list_transform(embedding, x -> CAST(x AS DOUBLE)) AS centroid
-       |  FROM embeddings ORDER BY vec_id LIMIT $nlist
-       |),
-       |$rounds,
-       |${assignCtes("f", s"c$iters")}""".stripMargin
-  }
-
-  private def duckIvfLearnedSql: String = {
-    s"""WITH ${duckKmeansCtes(nlist = 8, iters = 2)},
-       |q AS (SELECT vec_id AS query_id, embedding AS q_emb FROM embeddings WHERE vec_id < 10),
-       |qc AS (
-       |  SELECT q.query_id, q.q_emb, c.cl,
-       |    ${cosSql("q.q_emb", "c.centroid")} AS ccos
-       |  FROM q CROSS JOIN c2 c
-       |),
-       |assigned AS (
-       |  SELECT query_id, q_emb, cl FROM (
-       |    SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY ccos DESC, cl) AS r FROM qc
-       |  ) WHERE r = 1
-       |),
-       |scored AS (
-       |  SELECT a.query_id, a.cl, m.vec_id AS neighbor_id,
-       |    ${cosSql("a.q_emb", "m.embedding")} AS cos
-       |  FROM mf m JOIN assigned a ON m.cl = a.cl
-       |  WHERE m.vec_id <> a.query_id
-       |),
-       |ranked AS (
-       |  SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, neighbor_id) AS rank
-       |  FROM scored
-       |)
-       |SELECT query_id, CAST(cl AS INT) AS probed_cluster, neighbor_id,
-       |  cos AS cosine, rank
-       |FROM ranked WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin
-  }
-
-  /** Replays [[operators.Similarity.semanticDedup]]: the shared k-means
-    * chain clusters the corpus, same-cluster pairs above the cosine
-    * threshold mark their higher id as a drop, survivors anti-join. */
-  private def duckSemanticDedupSql: String =
-    s"""WITH ${duckKmeansCtes(nlist = 8, iters = 2)},
-       |drops AS (
-       |  SELECT DISTINCT b.vec_id AS drop_id
-       |  FROM mf a JOIN mf b ON a.cl = b.cl AND a.vec_id < b.vec_id
-       |  WHERE ${cosSql("a.embedding", "b.embedding")} >= 0.3::DOUBLE
-       |)
-       |SELECT e.vec_id, e.label FROM embeddings e
-       |LEFT JOIN drops d ON d.drop_id = e.vec_id
-       |WHERE d.drop_id IS NULL ORDER BY e.vec_id""".stripMargin
-
-  /** Replays the maxClusterSize-guarded [[operators.Similarity
-    * .semanticDedup]]: the same k-means chain, then BOTH guard stages —
-    * the sign-bit LSH sub-split (mask = 2^ceil(log2(csz/cap))−1, ≤16
-    * bits, over the 16 leading dims) and the Lehmer id-hash salt for
-    * sub-buckets still over the cap — before the same-block pair
-    * compare. The mask is the SAME pure-integer threshold ladder the
-    * Spark side folds (csz vs cap·2^b literals baked here, saturated
-    * driver-side) — no engine log2/pow whose rounding could straddle an
-    * integer at exact power-of-two ratios — and every `%` is wrapped to
-    * mirror Spark's `pmod` (non-negative residues even for negative
-    * ids), so both stages are engine-portable by construction. */
-  private def duckSemanticDedupGuardedSql(cap: Long): String = {
-    def capAt(b: Int): Long =
-      if (cap > (Long.MaxValue >> b)) Long.MaxValue else cap << b
-    val maskLadder = (0 to 15).map(b =>
-        s"WHEN s.csz <= ${capAt(b)} THEN CAST(${(1L << b) - 1L} AS BIGINT)")
-      .mkString("\n       ") + "\n       ELSE CAST(65535 AS BIGINT)"
-    s"""WITH ${duckKmeansCtes(nlist = 8, iters = 2)},
-       |csizes AS (SELECT cl, count(*) AS csz FROM mf GROUP BY cl),
-       |sub1 AS (
-       |  SELECT m.vec_id, m.embedding, m.cl,
-       |    CASE WHEN s.csz <= $cap THEN CAST(0 AS BIGINT)
-       |    ELSE list_reduce(list_transform(generate_series(1, 16),
-       |        j -> CASE WHEN m.embedding[j] > 0
-       |             THEN CAST(1 AS BIGINT) << (j - 1) ELSE CAST(0 AS BIGINT) END),
-       |      (a, b) -> a + b)
-       |      & (CASE $maskLadder END)
-       |    END AS sub
-       |  FROM mf m JOIN csizes s USING (cl)
-       |),
-       |ssizes AS (SELECT cl, sub, count(*) AS ssz FROM sub1 GROUP BY cl, sub),
-       |salted AS (
-       |  SELECT t.vec_id, t.embedding, t.cl, t.sub,
-       |    CASE WHEN z.ssz <= $cap THEN CAST(0 AS BIGINT)
-       |    ELSE (((((t.vec_id % 2147483647) + 2147483647) % 2147483647)
-       |            * 48271 % 2147483647) * 48271 % 2147483647)
-       |         % GREATEST(CAST(ceil(CAST(z.ssz AS DOUBLE) / $cap.0::DOUBLE) AS BIGINT),
-       |             CAST(1 AS BIGINT))
-       |    END AS sub2
-       |  FROM sub1 t JOIN ssizes z ON z.cl = t.cl AND z.sub = t.sub
-       |),
-       |drops AS (
-       |  SELECT DISTINCT b.vec_id AS drop_id
-       |  FROM salted a JOIN salted b
-       |    ON a.cl = b.cl AND a.sub = b.sub AND a.sub2 = b.sub2
-       |    AND a.vec_id < b.vec_id
-       |  WHERE ${cosSql("a.embedding", "b.embedding")} >= 0.3::DOUBLE
-       |)
-       |SELECT e.vec_id, e.label FROM embeddings e
-       |LEFT JOIN drops d ON d.drop_id = e.vec_id
-       |WHERE d.drop_id IS NULL ORDER BY e.vec_id""".stripMargin
-  }
-
-  /** Replays the KMV-sketch column profile ([[operators.Profile
-    * .columnProfile]] with `approxDistinct = true`, k = 256): same
-    * per-column branches as q_profile, with the distinct replaced by the
-    * KmvBuffer.estimate arithmetic over the 60-bit md5 hashes. */
-  private def duckProfileKmvSql: String = {
-    val k = 256
-    def kmvEst(c: String) =
-      s"""(SELECT CASE WHEN max(n) IS NULL THEN 0.0::DOUBLE
-         |        WHEN max(n) < $k THEN CAST(max(n) AS DOUBLE)
-         |        ELSE ${k - 1}.0::DOUBLE /
-         |          (CAST(max(CASE WHEN rn = $k THEN h END) AS DOUBLE)
-         |            / 1152921504606846976.0::DOUBLE) END
-         | FROM (SELECT h, row_number() OVER (ORDER BY h) AS rn,
-         |              count(*) OVER () AS n
-         |       FROM (SELECT DISTINCT
-         |               CAST('0x' || substr(md5($c::VARCHAR), 1, 15) AS BIGINT) AS h
-         |             FROM orders WHERE $c IS NOT NULL) hh))""".stripMargin
-    def branch(c: String) =
-      s"""SELECT '$c' AS col_name, count(*) AS n_rows,
-         |  count(CASE WHEN $c IS NULL THEN 1 END) AS n_nulls,
-         |  min($c)::VARCHAR AS min_value, max($c)::VARCHAR AS max_value,
-         |  ${kmvEst(c)} AS n_distinct_est
-         |FROM orders""".stripMargin
-    Seq("o_orderkey", "o_orderstatus", "o_orderpriority")
-      .map(branch).mkString("\nUNION ALL\n") + "\nORDER BY col_name"
-  }
-
-  /** Replays [[operators.Profile.columnProfileHll]] at p=8: the same
-    * register arithmetic as the q_hll_distinct oracle, one scalar
-    * subquery per column; an all-null column coalesces to the empty
-    * register vector (sum over zero rows is NULL in SQL, 256·2^53 in the
-    * aggregate). */
-  private def duckProfileHllSql: String = {
-    def hllEst(c: String) =
-      s"""(SELECT ${functions.Hll.estimateSql("a.sum_scaled", "a.zeros", 8)}
-         | FROM (SELECT coalesce(CAST(sum(1::BIGINT << (53 - mj)) AS BIGINT), 0)
-         |               + (256 - count(*)) * 9007199254740992 AS sum_scaled,
-         |              CAST(256 - count(*) AS INT) AS zeros
-         |       FROM (SELECT j,
-         |               max(CASE WHEN rem = 0 THEN 53 ELSE 53 - length(bin(rem)) END) AS mj
-         |             FROM (SELECT hv // 4503599627370496 AS j,
-         |                          hv % 4503599627370496 AS rem
-         |                   FROM (SELECT DISTINCT
-         |                           CAST('0x' || substr(md5($c::VARCHAR), 1, 15) AS BIGINT) AS hv
-         |                         FROM orders WHERE $c IS NOT NULL) hh) bb
-         |             GROUP BY j) rr) a)""".stripMargin
-    def branch(c: String) =
-      s"""SELECT '$c' AS col_name, count(*) AS n_rows,
-         |  count(CASE WHEN $c IS NULL THEN 1 END) AS n_nulls,
-         |  min($c)::VARCHAR AS min_value, max($c)::VARCHAR AS max_value,
-         |  ${hllEst(c)} AS n_distinct_est
-         |FROM orders""".stripMargin
-    Seq("o_orderkey", "o_orderstatus", "o_orderpriority")
-      .map(branch).mkString("\nUNION ALL\n") + "\nORDER BY col_name"
-  }
-
-  /** Shared CTE chain: minhash near-dup pairs → undirected edges → recursive
-    * reachability (`reach`), from which components are `min(r)` per id.
-    * Used by the q_dedup_components and q_dedup_keep oracles. */
-  private def duckComponentsCtes: String =
-    s"""${duckMinhashCtes()},
-       |sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
-       |inter AS (
-       |  SELECT c.id_a, c.id_b, count(*) AS inter
-       |  FROM cand c
-       |  JOIN sh sa ON sa.doc_id = c.id_a
-       |  JOIN sh sb ON sb.doc_id = c.id_b AND sb.shingle = sa.shingle
-       |  GROUP BY c.id_a, c.id_b
-       |),
-       |pairs AS (
-       |  SELECT i.id_a, i.id_b
-       |  FROM inter i
-       |  JOIN sizes na ON na.doc_id = i.id_a
-       |  JOIN sizes nb ON nb.doc_id = i.id_b
-       |  WHERE CAST(i.inter AS DOUBLE) / CAST(na.n + nb.n - i.inter AS DOUBLE) >= 0.5
-       |),
-       |edges AS MATERIALIZED (
-       |  SELECT id_a AS src, id_b AS dst FROM pairs
-       |  UNION SELECT id_b, id_a FROM pairs
-       |),
-       |verts AS (SELECT DISTINCT src AS id FROM edges),
-       |reach(id, r) AS (
-       |  SELECT id, id FROM verts
-       |  UNION
-       |  SELECT e.src, r.r FROM reach r JOIN edges e ON e.dst = r.id
-       |)""".stripMargin
-
-  /** [[duckComponentsCtes]] with STAR candidates: per-(band, sig) bucket
-    * rep = min(doc_id), edges only rep→member (verified) — replays
-    * `Dedup.starNearDupClusters` for the q_dedup_star oracle. */
-  private def duckStarComponentsCtes: String =
-    s"""${duckMinhashCtes()},
-       |sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
-       |reps AS (SELECT band, sig, min(doc_id) AS rep FROM bands GROUP BY band, sig),
-       |scand AS (
-       |  SELECT DISTINCT r.rep AS id_a, b.doc_id AS id_b
-       |  FROM bands b JOIN reps r ON r.band = b.band AND r.sig = b.sig
-       |  WHERE b.doc_id > r.rep
-       |),
-       |inter AS (
-       |  SELECT c.id_a, c.id_b, count(*) AS inter
-       |  FROM scand c
-       |  JOIN sh sa ON sa.doc_id = c.id_a
-       |  JOIN sh sb ON sb.doc_id = c.id_b AND sb.shingle = sa.shingle
-       |  GROUP BY c.id_a, c.id_b
-       |),
-       |spairs AS (
-       |  SELECT i.id_a, i.id_b
-       |  FROM inter i
-       |  JOIN sizes na ON na.doc_id = i.id_a
-       |  JOIN sizes nb ON nb.doc_id = i.id_b
-       |  WHERE CAST(i.inter AS DOUBLE) / CAST(na.n + nb.n - i.inter AS DOUBLE) >= 0.5
-       |),
-       |edges AS MATERIALIZED (
-       |  SELECT id_a AS src, id_b AS dst FROM spairs
-       |  UNION SELECT id_b, id_a FROM spairs
-       |),
-       |verts AS (SELECT DISTINCT src AS id FROM edges),
-       |reach(id, r) AS (
-       |  SELECT id, id FROM verts
-       |  UNION
-       |  SELECT e.src, r.r FROM reach r JOIN edges e ON e.dst = r.id
-       |)""".stripMargin
-
-  private def llmOracles: Map[String, String] = Map(
-    // Replays Rolling.crossCorr: each lag's shift on the same keyed sort
-    // (one branch per lag, unioned), complete-pair five sums, the
-    // corrBeta clamp tree.
-    "q_cross_corr" ->
-      s"""WITH bars AS (
-         |$duckBarsSql
-         |), s AS (
-         |  SELECT l_suppkey, l_shipdate,
-         |    CAST(round(volume * 100.0::DOUBLE) AS BIGINT) AS x,
-         |    CAST(round(close * 100.0::DOUBLE) AS BIGINT) AS y
-         |  FROM bars),
-         |p AS (
-         |  SELECT l_suppkey, -2 AS lag,
-         |    lead(x, 2) OVER (PARTITION BY l_suppkey ORDER BY l_shipdate) AS xs,
-         |    y FROM s
-         |  UNION ALL
-         |  SELECT l_suppkey, -1,
-         |    lead(x, 1) OVER (PARTITION BY l_suppkey ORDER BY l_shipdate), y FROM s
-         |  UNION ALL
-         |  SELECT l_suppkey, 0, x, y FROM s
-         |  UNION ALL
-         |  SELECT l_suppkey, 1,
-         |    lag(x, 1) OVER (PARTITION BY l_suppkey ORDER BY l_shipdate), y FROM s
-         |  UNION ALL
-         |  SELECT l_suppkey, 2,
-         |    lag(x, 2) OVER (PARTITION BY l_suppkey ORDER BY l_shipdate), y FROM s),
-         |g AS (
-         |  SELECT l_suppkey, lag,
-         |    CAST(count(CASE WHEN xs IS NOT NULL AND y IS NOT NULL THEN 1 END)
-         |      AS BIGINT) AS n_pairs,
-         |    CAST(sum(xs) FILTER (WHERE xs IS NOT NULL AND y IS NOT NULL)
-         |      AS BIGINT) AS sx,
-         |    CAST(sum(y) FILTER (WHERE xs IS NOT NULL AND y IS NOT NULL)
-         |      AS BIGINT) AS sy,
-         |    CAST(sum(xs * xs) FILTER (WHERE xs IS NOT NULL AND y IS NOT NULL)
-         |      AS BIGINT) AS sxx,
-         |    CAST(sum(y * y) FILTER (WHERE xs IS NOT NULL AND y IS NOT NULL)
-         |      AS BIGINT) AS syy,
-         |    CAST(sum(xs * y) FILTER (WHERE xs IS NOT NULL AND y IS NOT NULL)
-         |      AS BIGINT) AS sxy
-         |  FROM p GROUP BY l_suppkey, lag),
-         |h AS (
-         |  SELECT l_suppkey, lag, n_pairs,
-         |    CAST(CAST(n_pairs AS HUGEINT) * sxy
-         |      - CAST(sx AS HUGEINT) * sy AS DOUBLE) AS num,
-         |    CAST(CAST(n_pairs AS HUGEINT) * sxx
-         |      - CAST(sx AS HUGEINT) * sx AS DOUBLE) AS dx,
-         |    CAST(CAST(n_pairs AS HUGEINT) * syy
-         |      - CAST(sy AS HUGEINT) * sy AS DOUBLE) AS dy
-         |  FROM g)
-         |SELECT l_suppkey, lag, n_pairs,
-         |  CASE WHEN n_pairs >= 2 AND dx > 0.0::DOUBLE AND dy > 0.0::DOUBLE
-         |  THEN greatest(-1.0::DOUBLE, least(1.0::DOUBLE,
-         |    num / (sqrt(dx) * sqrt(dy))))
-         |  END AS xcorr
-         |FROM h ORDER BY l_suppkey, lag""".stripMargin,
-    // Replays Eval.forecastErrors with the 1-step naive forecast and the
-    // m=7 seasonal-naive benchmark: exact scaled |e| / e² sums, the
-    // fixed mae/rmse/mase trees (scale cancels in mase).
-    "q_forecast_errors" ->
-      s"""WITH bars AS (
-         |$duckBarsSql
-         |), s AS (
-         |  SELECT l_suppkey,
-         |    CAST(round(close * 100.0::DOUBLE) AS BIGINT) AS a,
-         |    CAST(round(lag(close, 1) OVER ws * 100.0::DOUBLE) AS BIGINT) AS f,
-         |    CAST(round(close * 100.0::DOUBLE) AS BIGINT)
-         |      - lag(CAST(round(close * 100.0::DOUBLE) AS BIGINT), 7) OVER ws AS d
-         |  FROM bars
-         |  WINDOW ws AS (PARTITION BY l_suppkey ORDER BY l_shipdate)),
-         |g AS (
-         |  SELECT l_suppkey,
-         |    CAST(count(CASE WHEN a IS NOT NULL AND f IS NOT NULL THEN 1 END)
-         |      AS BIGINT) AS n,
-         |    CAST(sum(abs(a - f)) AS BIGINT) AS sae,
-         |    CAST(sum((a - f) * (a - f)) AS BIGINT) AS see,
-         |    CAST(count(d) AS BIGINT) AS nm,
-         |    CAST(sum(abs(d)) AS BIGINT) AS snd
-         |  FROM s GROUP BY l_suppkey)
-         |SELECT l_suppkey, n,
-         |  CASE WHEN n >= 1 THEN
-         |    CAST(sae AS DOUBLE) / CAST(n AS DOUBLE) / 100.0::DOUBLE END AS mae,
-         |  CASE WHEN n >= 1 THEN
-         |    sqrt(CAST(see AS DOUBLE) / CAST(n AS DOUBLE)) / 100.0::DOUBLE
-         |  END AS rmse,
-         |  CASE WHEN n >= 1 AND snd > 0 THEN
-         |    (CAST(sae AS DOUBLE) / CAST(n AS DOUBLE))
-         |      / (CAST(snd AS DOUBLE) / CAST(nm AS DOUBLE)) END AS mase
-         |FROM g ORDER BY l_suppkey""".stripMargin,
-    // Replays the q_ic composition: exact 2-dp momentum/forward diffs on
-    // the bars, then the q_spearman doubled-average-rank replay
-    // partitioned by DATE (cross-sectional).
-    "q_ic" ->
-      s"""WITH bars AS (
-         |$duckBarsSql
-         |), sig AS (
-         |  SELECT l_suppkey, l_shipdate,
-         |    close - lag(close, 5) OVER ws AS mom,
-         |    lead(close, 1) OVER ws - close AS fwd
-         |  FROM bars
-         |  WINDOW ws AS (PARTITION BY l_suppkey ORDER BY l_shipdate)),
-         |base AS (
-         |  SELECT l_shipdate,
-         |    CAST(round(mom * 100.0::DOUBLE) AS BIGINT) AS xi,
-         |    CAST(round(fwd * 100.0::DOUBLE) AS BIGINT) AS yi
-         |  FROM sig WHERE mom IS NOT NULL AND fwd IS NOT NULL),
-         |r AS (
-         |  SELECT l_shipdate,
-         |    2 * rank() OVER (PARTITION BY l_shipdate ORDER BY xi)
-         |      + count(*) OVER (PARTITION BY l_shipdate ORDER BY xi
-         |          RANGE BETWEEN CURRENT ROW AND CURRENT ROW) - 1 AS ra,
-         |    2 * rank() OVER (PARTITION BY l_shipdate ORDER BY yi)
-         |      + count(*) OVER (PARTITION BY l_shipdate ORDER BY yi
-         |          RANGE BETWEEN CURRENT ROW AND CURRENT ROW) - 1 AS rb
-         |  FROM base),
-         |g AS (
-         |  SELECT l_shipdate, count(*) AS n,
-         |    sum(ra) AS sa, sum(rb) AS sb, sum(ra*ra) AS saa,
-         |    sum(rb*rb) AS sbb, sum(ra*rb) AS sab
-         |  FROM r GROUP BY l_shipdate)
-         |SELECT l_shipdate, n,
-         |  CASE WHEN (CAST(n AS DOUBLE) * CAST(saa AS DOUBLE) - CAST(sa AS DOUBLE) * CAST(sa AS DOUBLE)) > 0
-         |        AND (CAST(n AS DOUBLE) * CAST(sbb AS DOUBLE) - CAST(sb AS DOUBLE) * CAST(sb AS DOUBLE)) > 0
-         |  THEN greatest(-1.0::DOUBLE, least(1.0::DOUBLE,
-         |    (CAST(n AS DOUBLE) * CAST(sab AS DOUBLE) - CAST(sa AS DOUBLE) * CAST(sb AS DOUBLE))
-         |    / (sqrt(CAST(n AS DOUBLE) * CAST(saa AS DOUBLE) - CAST(sa AS DOUBLE) * CAST(sa AS DOUBLE))
-         |       * sqrt(CAST(n AS DOUBLE) * CAST(sbb AS DOUBLE) - CAST(sb AS DOUBLE) * CAST(sb AS DOUBLE)))))
-         |  END AS spearman
-         |FROM g ORDER BY l_shipdate""".stripMargin,
-    // Replays Rolling.croston as a WITH RECURSIVE (z, p) replay: the two
-    // var_ema recurrences with their seeds (z = first size, p = first
-    // day gap at rn 2), inlined trees matching the Catalyst update
-    // order, day gaps as exact integer date differences.
-    "q_croston" -> {
-      val A = "(100.0::DOUBLE/1000.0::DOUBLE)"
-      s"""WITH RECURSIVE bars AS (
-         |$duckBarsSql
-         |), seq AS MATERIALIZED (
-         |  SELECT l_suppkey, l_shipdate, volume,
-         |    CAST(date_diff('day', lag(l_shipdate, 1) OVER
-         |      (PARTITION BY l_suppkey ORDER BY l_shipdate), l_shipdate)
-         |      AS DOUBLE) AS q,
-         |    row_number() OVER (PARTITION BY l_suppkey
-         |      ORDER BY l_shipdate) AS rn
-         |  FROM bars
-         |), cr AS (
-         |  SELECT l_suppkey, l_shipdate, rn,
-         |    volume AS z, CAST(NULL AS DOUBLE) AS p
-         |  FROM seq WHERE rn = 1
-         |  UNION ALL
-         |  SELECT s.l_suppkey, s.l_shipdate, s.rn,
-         |    ($A * s.volume + (1.0::DOUBLE - $A) * h.z) AS z,
-         |    CASE WHEN h.p IS NULL THEN s.q
-         |         ELSE ($A * s.q + (1.0::DOUBLE - $A) * h.p) END AS p
-         |  FROM cr h JOIN seq s
-         |    ON s.l_suppkey = h.l_suppkey AND s.rn = h.rn + 1
-         |)
-         |SELECT l_suppkey, l_shipdate, z AS croston_z, p AS croston_p,
-         |  z / (CASE WHEN p > 0.0::DOUBLE THEN p END) AS croston
-         |FROM cr ORDER BY l_suppkey, l_shipdate""".stripMargin
-    },
-    // Replays Stats.mannKendall: time-ordered sign pairs, per-value tie
-    // groups, the tie-corrected variance and continuity-corrected z.
-    "q_mann_kendall" ->
-      s"""WITH bars AS (
-         |$duckBarsSql
-         |), base AS (
-         |  SELECT l_suppkey,
-         |    CAST(round(close * 100.0::DOUBLE) AS BIGINT) AS xi,
-         |    row_number() OVER (PARTITION BY l_suppkey
-         |      ORDER BY l_shipdate) AS rn
-         |  FROM bars WHERE l_suppkey < 100),
-         |sp AS (
-         |  SELECT a.l_suppkey,
-         |    CAST(count(CASE WHEN b.xi > a.xi THEN 1 END) AS BIGINT)
-         |      - CAST(count(CASE WHEN b.xi < a.xi THEN 1 END) AS BIGINT)
-         |      AS s_stat
-         |  FROM base a JOIN base b
-         |    ON a.l_suppkey = b.l_suppkey AND a.rn < b.rn
-         |  GROUP BY a.l_suppkey),
-         |tg AS (
-         |  SELECT l_suppkey, xi, CAST(count(*) AS BIGINT) AS t
-         |  FROM base GROUP BY l_suppkey, xi),
-         |ties AS (
-         |  SELECT l_suppkey, CAST(sum(t) AS BIGINT) AS n,
-         |    CAST(sum(CAST(t AS HUGEINT) * (t - 1) * (2 * t + 5))
-         |      AS HUGEINT) AS tcorr
-         |  FROM tg GROUP BY l_suppkey),
-         |v AS (
-         |  SELECT ties.l_suppkey, ties.n,
-         |    coalesce(sp.s_stat, 0) AS s_stat,
-         |    CAST(CAST(ties.n AS HUGEINT) * (CAST(ties.n AS HUGEINT) - 1)
-         |        * (2 * CAST(ties.n AS HUGEINT) + 5) - ties.tcorr AS DOUBLE)
-         |      / 18.0::DOUBLE AS variance
-         |  FROM ties LEFT JOIN sp ON ties.l_suppkey = sp.l_suppkey)
-         |SELECT l_suppkey, n, s_stat,
-         |  CASE WHEN n >= 2 AND variance > 0.0::DOUBLE THEN
-         |    CASE WHEN s_stat > 0 THEN (CAST(s_stat AS DOUBLE) - 1.0::DOUBLE)
-         |           / sqrt(CASE WHEN variance > 0.0::DOUBLE THEN variance END)
-         |         WHEN s_stat < 0 THEN (CAST(s_stat AS DOUBLE) + 1.0::DOUBLE)
-         |           / sqrt(CASE WHEN variance > 0.0::DOUBLE THEN variance END)
-         |         ELSE 0.0::DOUBLE END
-         |  END AS mk_z
-         |FROM v ORDER BY l_suppkey""".stripMargin,
-    // Replays Stats.runsTest: quantized diff signs (zeros dropped),
-    // run starts by lag over the filtered sign sequence, the exact
-    // mu/sigma trees.
-    "q_runs_test" ->
-      s"""WITH bars AS (
-         |$duckBarsSql
-         |), s AS (
-         |  SELECT l_suppkey, l_shipdate,
-         |    CASE WHEN CAST(round(close * 100.0::DOUBLE) AS BIGINT)
-         |            - lag(CAST(round(close * 100.0::DOUBLE) AS BIGINT), 1)
-         |              OVER ws > 0 THEN 1
-         |         WHEN CAST(round(close * 100.0::DOUBLE) AS BIGINT)
-         |            - lag(CAST(round(close * 100.0::DOUBLE) AS BIGINT), 1)
-         |              OVER ws < 0 THEN -1
-         |    END AS sg
-         |  FROM bars
-         |  WINDOW ws AS (PARTITION BY l_suppkey ORDER BY l_shipdate)),
-         |f AS (
-         |  SELECT l_suppkey, l_shipdate, sg,
-         |    CASE WHEN lag(sg, 1) OVER (PARTITION BY l_suppkey
-         |           ORDER BY l_shipdate) IS NULL
-         |          OR lag(sg, 1) OVER (PARTITION BY l_suppkey
-         |           ORDER BY l_shipdate) <> sg THEN 1 ELSE 0 END AS ps
-         |  FROM s WHERE sg IS NOT NULL),
-         |g AS (
-         |  SELECT l_suppkey,
-         |    CAST(count(CASE WHEN sg = 1 THEN 1 END) AS BIGINT) AS n_up,
-         |    CAST(count(CASE WHEN sg = -1 THEN 1 END) AS BIGINT) AS n_down,
-         |    CAST(sum(ps) AS BIGINT) AS runs
-         |  FROM f GROUP BY l_suppkey),
-         |h AS (
-         |  SELECT l_suppkey, n_up, n_down, runs,
-         |    CAST(2 * CAST(n_up AS HUGEINT) * n_down AS DOUBLE)
-         |      / CAST(CAST(n_up AS HUGEINT) + n_down AS DOUBLE)
-         |      + 1.0::DOUBLE AS mu,
-         |    CAST((2 * CAST(n_up AS HUGEINT) * n_down)
-         |        * (2 * CAST(n_up AS HUGEINT) * n_down
-         |           - (CAST(n_up AS HUGEINT) + n_down)) AS DOUBLE)
-         |    / CAST((CAST(n_up AS HUGEINT) + n_down)
-         |        * (CAST(n_up AS HUGEINT) + n_down)
-         |        * ((CAST(n_up AS HUGEINT) + n_down) - 1) AS DOUBLE) AS sig2
-         |  FROM g)
-         |SELECT l_suppkey, n_up, n_down, runs,
-         |  CASE WHEN n_up >= 1 AND n_down >= 1 AND n_up + n_down >= 2 THEN
-         |    (CAST(runs AS DOUBLE) - mu) /
-         |      sqrt(CASE WHEN sig2 > 0.0::DOUBLE THEN sig2 END)
-         |  END AS runs_z
-         |FROM h ORDER BY l_suppkey""".stripMargin,
-    // Replays Rolling.rollingSharpe: the q_risk_ratios 10-dp log-return
-    // quantization, exact 21-row frame sums (squares via HUGEINT), the
-    // same mean/σ ratio tree with sqrt(252) baked as a strtod literal.
-    "q_rolling_sharpe" ->
-      s"""WITH bars AS (
-         |$duckBarsSql
-         |), r AS (
-         |  SELECT l_suppkey, l_shipdate,
-         |    CASE WHEN lag(close) OVER ws IS NOT NULL
-         |          AND lag(close) OVER ws > 0.0::DOUBLE
-         |          AND close > 0.0::DOUBLE
-         |         THEN round(ln(close / lag(close) OVER ws), 10) + 0.0
-         |    END AS ret_log
-         |  FROM bars
-         |  WINDOW ws AS (PARTITION BY l_suppkey ORDER BY l_shipdate)
-         |), b AS (
-         |  SELECT l_suppkey, l_shipdate,
-         |    CAST(round(ret_log * 10000000000.0::DOUBLE) AS BIGINT) AS ri
-         |  FROM r
-         |), f AS (
-         |  SELECT l_suppkey, l_shipdate,
-         |    count(ri) OVER wf AS cnt,
-         |    CAST(sum(ri) OVER wf AS DOUBLE) AS s1,
-         |    -- squares sum passes 2^53: strtod bridge (NOTES round-8)
-         |    CAST(CAST(sum(CAST(ri AS HUGEINT) * ri) OVER wf AS VARCHAR)
-         |      AS DOUBLE) AS s2
-         |  FROM b
-         |  WINDOW wf AS (PARTITION BY l_suppkey ORDER BY l_shipdate
-         |    ROWS BETWEEN 20 PRECEDING AND CURRENT ROW)
-         |)
-         |SELECT l_suppkey, l_shipdate,
-         |  CASE WHEN cnt = 21
-         |        AND (s2 / 21.0::DOUBLE - (s1 / 21.0::DOUBLE) * (s1 / 21.0::DOUBLE)) > 0.0::DOUBLE
-         |  THEN (s1 / 21.0::DOUBLE) /
-         |    sqrt(s2 / 21.0::DOUBLE - (s1 / 21.0::DOUBLE) * (s1 / 21.0::DOUBLE))
-         |    * CAST('${math.sqrt(252.0).toString}' AS DOUBLE)
-         |  END AS roll_sharpe
-         |FROM f ORDER BY l_suppkey, l_shipdate""".stripMargin,
-    // Replays the q_seasonal residual machine, then the q_mad_outliers
-    // screen on the 6-dp-quantized residuals (integer-valued doubles —
-    // both engines' median interpolation is exact there).
-    "q_seasonal_anomaly" ->
-      s"""WITH bars AS (
-         |$duckBarsSql
-         |), base AS (
-         |  SELECT l_suppkey, l_shipdate,
-         |    CAST(round(close * 100.0::DOUBLE) AS BIGINT) AS x,
-         |    CASE WHEN count(*) OVER (ws ROWS BETWEEN 3 PRECEDING AND
-         |        3 FOLLOWING) = 7
-         |      THEN sum(CAST(round(close * 100.0::DOUBLE) AS BIGINT))
-         |        OVER (ws ROWS BETWEEN 3 PRECEDING AND 3 FOLLOWING)
-         |    END AS num,
-         |    CAST((row_number() OVER ws - 1) % 7 AS INTEGER) AS phase
-         |  FROM bars
-         |  WINDOW ws AS (PARTITION BY l_suppkey ORDER BY l_shipdate)),
-         |pm AS (
-         |  SELECT l_suppkey, phase,
-         |    CAST(sum(CAST(7 * x - num AS HUGEINT)) AS DOUBLE) /
-         |      (CAST(count(7 * x - num) AS DOUBLE) * 7.0::DOUBLE) AS sm
-         |  FROM base GROUP BY l_suppkey, phase),
-         |aj AS (
-         |  SELECT l_suppkey,
-         |    list_reduce(list_prepend(0.0::DOUBLE,
-         |      list(sm ORDER BY phase)), (acc, e) -> acc + e) /
-         |      CAST(count(*) AS DOUBLE) AS adj
-         |  FROM pm WHERE sm IS NOT NULL GROUP BY l_suppkey),
-         |res AS (
-         |  SELECT base.l_suppkey, base.l_shipdate,
-         |    round((((CAST(base.x AS DOUBLE) * 7.0::DOUBLE -
-         |      CAST(base.num AS DOUBLE)) / 7.0::DOUBLE -
-         |      (pm.sm - aj.adj)) / 100.0::DOUBLE) * 1000000.0::DOUBLE)
-         |      AS resid_q
-         |  FROM base
-         |  JOIN pm ON base.l_suppkey = pm.l_suppkey AND base.phase = pm.phase
-         |  LEFT JOIN aj ON base.l_suppkey = aj.l_suppkey
-         |  WHERE base.num IS NOT NULL),
-         |m AS (
-         |  SELECT l_suppkey, quantile_cont(resid_q, 0.5) AS med
-         |  FROM res GROUP BY l_suppkey),
-         |dev AS (
-         |  SELECT res.l_suppkey, res.l_shipdate, res.resid_q, m.med,
-         |    abs(res.resid_q - m.med) AS dv
-         |  FROM res JOIN m USING (l_suppkey)),
-         |md AS (
-         |  SELECT l_suppkey, quantile_cont(dv, 0.5) AS mad
-         |  FROM dev GROUP BY l_suppkey)
-         |SELECT dev.l_suppkey, dev.l_shipdate,
-         |  dev.resid_q / 1000000.0::DOUBLE AS resid,
-         |  CASE WHEN md.mad > 0.0 THEN
-         |    (dev.resid_q - dev.med) / (1.4826::DOUBLE * md.mad)
-         |  ELSE 0.0 END AS robust_z,
-         |  CASE WHEN md.mad > 0.0 THEN
-         |    abs((dev.resid_q - dev.med) / (1.4826::DOUBLE * md.mad))
-         |      > 3.5::DOUBLE
-         |  ELSE FALSE END AS is_outlier
-         |FROM dev JOIN md USING (l_suppkey)
-         |ORDER BY dev.l_suppkey, dev.l_shipdate""".stripMargin,
-    // Replays HoltWinters (WindowIndicators.HoltWinters) as a WITH
-    // RECURSIVE machine with the 7-slot seasonal array unrolled into
-    // columns s0..s6. Every compound tree (seed level, new level, the
-    // seasonal step) is INLINED at every use site (the q_holt lateral-
-    // alias lesson) and the op order copies the Catalyst update
-    // expressions node-for-node.
-    "q_holt_winters" -> {
-      val A = "(300.0::DOUBLE/1000.0::DOUBLE)"
-      val B = "(200.0::DOUBLE/1000.0::DOUBLE)"
-      val G = "(300.0::DOUBLE/1000.0::DOUBLE)"
-      val p = 7
-      def sPrev(ref: String) = s"(CASE ((s.rn - 1) % $p)" +
-        (0 until p).map(k => s" WHEN $k THEN $ref.s$k").mkString +
-        " END)"
-      val seedLvl = s"(s.close - ${sPrev("h")})"
-      val newLvl = s"($A * (s.close - ${sPrev("h")})" +
-        s" + (1.0::DOUBLE - $A) * (h.lvl + h.trd))"
-      val sCols0 = (0 until p).map(k => s"0.0::DOUBLE AS s$k").mkString(", ")
-      val sColsStep = (0 until p).map { k =>
-        s"""CASE WHEN h.trd IS NULL THEN h.s$k
-           |         WHEN ((s.rn - 1) % $p) = $k
-           |           THEN ($G * (s.close - (h.lvl + h.trd))
-           |                 + (1.0::DOUBLE - $G) * h.s$k)
-           |         ELSE h.s$k END AS s$k""".stripMargin
-      }.mkString(",\n    ")
-      val sAtPhase = s"(CASE ((rn - 1) % $p)" +
-        (0 until p).map(k => s" WHEN $k THEN s$k").mkString +
-        " END)"
-      s"""WITH RECURSIVE bars AS (
-         |$duckBarsSql
-         |), seq AS MATERIALIZED (
-         |  SELECT l_suppkey, l_shipdate, close,
-         |    row_number() OVER (PARTITION BY l_suppkey ORDER BY l_shipdate) AS rn
-         |  FROM bars
-         |), hw AS (
-         |  SELECT l_suppkey, l_shipdate, rn,
-         |    (close - 0.0::DOUBLE) AS lvl, CAST(NULL AS DOUBLE) AS trd,
-         |    $sCols0
-         |  FROM seq WHERE rn = 1
-         |  UNION ALL
-         |  SELECT s.l_suppkey, s.l_shipdate, s.rn,
-         |    CASE WHEN h.trd IS NULL THEN $seedLvl ELSE $newLvl END AS lvl,
-         |    CASE WHEN h.trd IS NULL THEN ($seedLvl - h.lvl)
-         |         ELSE ($B * ($newLvl - h.lvl)
-         |               + (1.0::DOUBLE - $B) * h.trd) END AS trd,
-         |    $sColsStep
-         |  FROM hw h JOIN seq s
-         |    ON s.l_suppkey = h.l_suppkey AND s.rn = h.rn + 1
-         |)
-         |SELECT l_suppkey, l_shipdate,
-         |  CASE WHEN trd IS NULL THEN CAST(NULL AS DOUBLE)
-         |       ELSE ((lvl + trd) + $sAtPhase) END AS hw
-         |FROM hw ORDER BY l_suppkey, l_shipdate""".stripMargin
-    },
-    // Replays StreamingHoltWinters' batch fold (≡ the native
-    // holt_winters window, spec-asserted) as the q_holt_winters
-    // unrolled-seasonal WITH RECURSIVE machine over the per-user event
-    // stream in (ts, event_id) order.
-    "q_stream_hw" -> {
-      val A = "(300.0::DOUBLE/1000.0::DOUBLE)"
-      val B = "(200.0::DOUBLE/1000.0::DOUBLE)"
-      val G = "(300.0::DOUBLE/1000.0::DOUBLE)"
-      val p = 7
-      def sPrev(ref: String) = s"(CASE ((s.rn - 1) % $p)" +
-        (0 until p).map(k => s" WHEN $k THEN $ref.s$k").mkString +
-        " END)"
-      val seedLvl = s"(s.value - ${sPrev("h")})"
-      val newLvl = s"($A * (s.value - ${sPrev("h")})" +
-        s" + (1.0::DOUBLE - $A) * (h.lvl + h.trd))"
-      val sCols0 = (0 until p).map(k => s"0.0::DOUBLE AS s$k").mkString(", ")
-      val sColsStep = (0 until p).map { k =>
-        s"""CASE WHEN h.trd IS NULL THEN h.s$k
-           |         WHEN ((s.rn - 1) % $p) = $k
-           |           THEN ($G * (s.value - (h.lvl + h.trd))
-           |                 + (1.0::DOUBLE - $G) * h.s$k)
-           |         ELSE h.s$k END AS s$k""".stripMargin
-      }.mkString(",\n    ")
-      val sAtPhase = s"(CASE ((rn - 1) % $p)" +
-        (0 until p).map(k => s" WHEN $k THEN s$k").mkString +
-        " END)"
-      s"""WITH RECURSIVE seq AS MATERIALIZED (
-         |  SELECT CAST(user_id AS VARCHAR) AS key,
-         |    CAST(epoch_us(ts) AS BIGINT) AS ts_us, value,
-         |    row_number() OVER (PARTITION BY user_id
-         |      ORDER BY ts, event_id) AS rn
-         |  FROM events
-         |), hw AS (
-         |  SELECT key, ts_us, value, rn,
-         |    (value - 0.0::DOUBLE) AS lvl, CAST(NULL AS DOUBLE) AS trd,
-         |    $sCols0
-         |  FROM seq WHERE rn = 1
-         |  UNION ALL
-         |  SELECT s.key, s.ts_us, s.value, s.rn,
-         |    CASE WHEN h.trd IS NULL THEN $seedLvl ELSE $newLvl END AS lvl,
-         |    CASE WHEN h.trd IS NULL THEN ($seedLvl - h.lvl)
-         |         ELSE ($B * ($newLvl - h.lvl)
-         |               + (1.0::DOUBLE - $B) * h.trd) END AS trd,
-         |    $sColsStep
-         |  FROM hw h JOIN seq s ON s.key = h.key AND s.rn = h.rn + 1
-         |)
-         |SELECT key, ts_us, value,
-         |  CASE WHEN trd IS NULL THEN CAST(NULL AS DOUBLE)
-         |       ELSE ((lvl + trd) + $sAtPhase) END AS hw
-         |FROM hw ORDER BY key, ts_us, value""".stripMargin
-    },
-    // Replays StreamingGarch's batch fold (≡ the native garch window,
-    // spec-asserted) as the q_garch WITH RECURSIVE machine over per-user
-    // event-score changes; rn=1 carries the NULL change (frozen state).
-    "q_stream_garch" -> {
-      val W0 = "(2.0::DOUBLE/1000000.0::DOUBLE)"
-      val A = "(100.0::DOUBLE/1000.0::DOUBLE)"
-      val B = "(850.0::DOUBLE/1000.0::DOUBLE)"
-      val uncond = s"($W0 / (1.0::DOUBLE - $A - $B))"
-      s"""WITH RECURSIVE seq AS MATERIALIZED (
-         |  SELECT CAST(user_id AS VARCHAR) AS key,
-         |    CAST(epoch_us(ts) AS BIGINT) AS ts_us,
-         |    value - lag(value, 1) OVER (PARTITION BY user_id
-         |      ORDER BY ts, event_id) AS ret,
-         |    row_number() OVER (PARTITION BY user_id
-         |      ORDER BY ts, event_id) AS rn
-         |  FROM events
-         |), g AS (
-         |  SELECT key, ts_us, ret, rn, CAST(NULL AS DOUBLE) AS prev_r,
-         |    CAST(NULL AS DOUBLE) AS sig2
-         |  FROM seq WHERE rn = 1
-         |  UNION ALL
-         |  SELECT s.key, s.ts_us, s.ret, s.rn,
-         |    CASE WHEN s.ret IS NULL THEN h.prev_r ELSE s.ret END AS prev_r,
-         |    CASE WHEN s.ret IS NULL THEN h.sig2
-         |         WHEN h.sig2 IS NULL THEN $uncond
-         |         ELSE ($W0 + (($A * (h.prev_r * h.prev_r)) + ($B * h.sig2)))
-         |    END AS sig2
-         |  FROM g h JOIN seq s ON s.key = h.key AND s.rn = h.rn + 1
-         |)
-         |SELECT key, ts_us, ret,
-         |  CASE WHEN ret IS NULL THEN CAST(NULL AS DOUBLE)
-         |       ELSE sqrt(sig2) END AS vol
-         |FROM g ORDER BY key, ts_us, ret""".stripMargin
-    },
-    // Replays StreamingHolt's batch fold (≡ the native holt window,
-    // spec-asserted) as the q_holt WITH RECURSIVE machine over the
-    // per-user event stream in (ts, event_id) order.
-    "q_stream_holt" -> {
-      val newLvl = "((300.0::DOUBLE/1000.0::DOUBLE)*s.value" +
-        " + (1.0::DOUBLE - 300.0::DOUBLE/1000.0::DOUBLE)*(h.lvl + h.trd))"
-      s"""WITH RECURSIVE seq AS MATERIALIZED (
-         |  SELECT CAST(user_id AS VARCHAR) AS key,
-         |    CAST(epoch_us(ts) AS BIGINT) AS ts_us, value,
-         |    row_number() OVER (PARTITION BY user_id
-         |      ORDER BY ts, event_id) AS rn
-         |  FROM events
-         |), holt AS (
-         |  SELECT key, ts_us, value, rn,
-         |    value AS lvl, CAST(NULL AS DOUBLE) AS trd
-         |  FROM seq WHERE rn = 1
-         |  UNION ALL
-         |  SELECT s.key, s.ts_us, s.value, s.rn,
-         |    CASE WHEN h.trd IS NULL THEN s.value ELSE $newLvl END AS lvl,
-         |    CASE WHEN h.trd IS NULL THEN s.value - h.lvl
-         |         ELSE (200.0::DOUBLE/1000.0::DOUBLE)*($newLvl - h.lvl)
-         |              + (1.0::DOUBLE - 200.0::DOUBLE/1000.0::DOUBLE)*h.trd END AS trd
-         |  FROM holt h JOIN seq s ON s.key = h.key AND s.rn = h.rn + 1
-         |)
-         |SELECT key, ts_us, value, lvl + trd AS holt
-         |FROM holt ORDER BY key, ts_us, value""".stripMargin
-    },
-    // Replays StreamingKalman's batch fold (≡ the native kalman window,
-    // spec-asserted) as the q_kalman WITH RECURSIVE machine over the
-    // per-user event stream in (ts, event_id) order.
-    // Replays StreamingEwma.ewmaChartBatch: the (y, p) recursive walk
-    // (var_ema seed + decay power), the z/hw trees with the fixed
-    // phase-I targets as literals.
-    "q_stream_ewma" -> {
-      val A = "(200.0::DOUBLE/1000.0::DOUBLE)"
-      val OM = s"(1.0::DOUBLE - $A)"
-      val R = s"($A / (2.0::DOUBLE - $A))"
-      s"""WITH RECURSIVE seq AS MATERIALIZED (
-         |  SELECT CAST(user_id AS VARCHAR) AS key,
-         |    CAST(epoch_us(ts) AS BIGINT) AS ts_us, value,
-         |    row_number() OVER (PARTITION BY user_id
-         |      ORDER BY ts, event_id) AS rn
-         |  FROM events
-         |), wk AS (
-         |  SELECT key, ts_us, value, rn, value AS y, $OM AS p,
-         |    value AS x1
-         |  FROM seq WHERE rn = 1
-         |  UNION ALL
-         |  SELECT s.key, s.ts_us, s.value, s.rn,
-         |    ($A * s.value + $OM * h.y) AS y,
-         |    (h.p * $OM) AS p, h.x1
-         |  FROM wk h JOIN seq s ON s.key = h.key AND s.rn = h.rn + 1
-         |), z AS (
-         |  SELECT key, ts_us, value,
-         |    (y + p * (50.0::DOUBLE - x1)) AS ewma,
-         |    ((3.0::DOUBLE * 25.0::DOUBLE)
-         |      * sqrt($R * (1.0::DOUBLE - p * p))) AS hw
-         |  FROM wk)
-         |SELECT key, ts_us, value, ewma,
-         |  50.0::DOUBLE + hw AS ucl, 50.0::DOUBLE - hw AS lcl,
-         |  abs(ewma - 50.0::DOUBLE) > hw AS ooc
-         |FROM z ORDER BY key, ts_us, value""".stripMargin
-    },
-    "q_stream_kalman" -> {
-      val Q = "(10.0::DOUBLE/1000.0::DOUBLE)"
-      val R = "(1000.0::DOUBLE/1000.0::DOUBLE)"
-      val pp = s"(h.p + $Q)"
-      val k = s"($pp / ($pp + $R))"
-      s"""WITH RECURSIVE seq AS MATERIALIZED (
-         |  SELECT CAST(user_id AS VARCHAR) AS key,
-         |    CAST(epoch_us(ts) AS BIGINT) AS ts_us, value,
-         |    row_number() OVER (PARTITION BY user_id
-         |      ORDER BY ts, event_id) AS rn
-         |  FROM events
-         |), kal AS (
-         |  SELECT key, ts_us, value, rn, value AS m, $R AS p
-         |  FROM seq WHERE rn = 1
-         |  UNION ALL
-         |  SELECT s.key, s.ts_us, s.value, s.rn,
-         |    (h.m + ($k * (s.value - h.m))) AS m,
-         |    ((1.0::DOUBLE - $k) * $pp) AS p
-         |  FROM kal h JOIN seq s ON s.key = h.key AND s.rn = h.rn + 1
-         |)
-         |SELECT key, ts_us, value, m AS kalman
-         |FROM kal ORDER BY key, ts_us, value""".stripMargin
-    },
-    // Replays Stats.grangerLag1: HUGEINT centered sums, every
-    // centered→double cast through the VARCHAR strtod bridge (products
-    // reach ~10³², far past exact-double range), the same fixed trees.
-    "q_granger" ->
-      s"""WITH bars AS (
-         |$duckBarsSql
-         |), s AS (
-         |  SELECT l_suppkey,
-         |    CAST(round(close * 100.0::DOUBLE) AS BIGINT) AS y,
-         |    lag(CAST(round(close * 100.0::DOUBLE) AS BIGINT), 1)
-         |      OVER ws AS x,
-         |    lag(CAST(round(volume * 100.0::DOUBLE) AS BIGINT), 1)
-         |      OVER ws AS z
-         |  FROM bars
-         |  WINDOW ws AS (PARTITION BY l_suppkey ORDER BY l_shipdate)),
-         |g AS (
-         |  SELECT l_suppkey, CAST(count(*) AS BIGINT) AS np,
-         |    CAST(sum(y) AS HUGEINT) AS sy, CAST(sum(x) AS HUGEINT) AS sx,
-         |    CAST(sum(z) AS HUGEINT) AS sz,
-         |    sum(CAST(x AS HUGEINT) * x) AS sxx,
-         |    sum(CAST(z AS HUGEINT) * z) AS szz,
-         |    sum(CAST(x AS HUGEINT) * z) AS sxz,
-         |    sum(CAST(x AS HUGEINT) * y) AS sxy,
-         |    sum(CAST(z AS HUGEINT) * y) AS szy,
-         |    sum(CAST(y AS HUGEINT) * y) AS syy
-         |  FROM s WHERE x IS NOT NULL AND z IS NOT NULL GROUP BY l_suppkey),
-         |c AS (
-         |  SELECT l_suppkey, np,
-         |    CAST(np AS HUGEINT) * sxx - sx * sx AS cxx,
-         |    CAST(np AS HUGEINT) * szz - sz * sz AS czz,
-         |    CAST(np AS HUGEINT) * sxz - sx * sz AS cxz,
-         |    CAST(np AS HUGEINT) * sxy - sx * sy AS cxy,
-         |    CAST(np AS HUGEINT) * szy - sz * sy AS czy,
-         |    CAST(np AS HUGEINT) * syy - sy * sy AS cyy
-         |  FROM g),
-         |h AS (
-         |  SELECT l_suppkey, np, CAST(np AS DOUBLE) AS n,
-         |    CASE WHEN CAST(CAST(cxx * czz - cxz * cxz AS VARCHAR) AS DOUBLE)
-         |        > 0.0::DOUBLE
-         |      THEN CAST(CAST(cxx * czz - cxz * cxz AS VARCHAR) AS DOUBLE)
-         |    END AS det,
-         |    CAST(CAST(cxx * czy - cxz * cxy AS VARCHAR) AS DOUBLE) AS gnum,
-         |    CAST(CAST(czz * cxy - cxz * czy AS VARCHAR) AS DOUBLE) AS bnum,
-         |    CAST(CAST(cxx AS VARCHAR) AS DOUBLE) AS cxxd,
-         |    CAST(CAST(cxy AS VARCHAR) AS DOUBLE) AS cxyd,
-         |    CAST(CAST(czy AS VARCHAR) AS DOUBLE) AS czyd,
-         |    CAST(CAST(cyy AS VARCHAR) AS DOUBLE) AS cyyd
-         |  FROM c),
-         |t AS (
-         |  SELECT l_suppkey, np,
-         |    bnum / det AS beta, gnum / det AS gamma,
-         |    cyyd - (bnum / det) * cxyd - (gnum / det) * czyd AS ssr
-         |  FROM h),
-         |u AS (
-         |  SELECT t.l_suppkey, t.np, t.beta, t.gamma,
-         |    t.gamma / sqrt(CASE WHEN
-         |        t.ssr * h.cxxd / ((h.n - 3.0::DOUBLE) * h.det) > 0.0::DOUBLE
-         |      THEN t.ssr * h.cxxd / ((h.n - 3.0::DOUBLE) * h.det) END) AS tt
-         |  FROM t JOIN h ON t.l_suppkey = h.l_suppkey)
-         |SELECT l_suppkey, np AS n_pairs,
-         |  CASE WHEN np >= 4 THEN beta END AS ar_beta,
-         |  CASE WHEN np >= 4 THEN gamma END AS granger_gamma,
-         |  CASE WHEN np >= 4 THEN tt END AS granger_t
-         |FROM u ORDER BY l_suppkey""".stripMargin,
-    // Replays Pricing.blackScholes: the A&S 26.2.17 CDF polynomial with
-    // identical literal constants, each libm output (ln, exp)
-    // round(…,10) before downstream use, √(2π) embedded as the
-    // Scala-folded literal so both engines hold the same double.
-    "q_black_scholes" -> {
-      s"""WITH bars AS (
-         |$duckBarsSql
-         |$duckBsPrefix
-         |), h AS (
-         |  SELECT l_suppkey, l_shipdate, s_px, k_px, disc,
-         |    CASE WHEN d1 >= 0.0::DOUBLE THEN nabs1
-         |      ELSE 1.0::DOUBLE - nabs1 END AS nd1,
-         |    CASE WHEN -d1 >= 0.0::DOUBLE THEN nabs1
-         |      ELSE 1.0::DOUBLE - nabs1 END AS nmd1,
-         |    CASE WHEN d2 >= 0.0::DOUBLE THEN nabs2
-         |      ELSE 1.0::DOUBLE - nabs2 END AS nd2,
-         |    CASE WHEN -d2 >= 0.0::DOUBLE THEN nabs2
-         |      ELSE 1.0::DOUBLE - nabs2 END AS nmd2
-         |  FROM n)
-         |SELECT l_suppkey, l_shipdate,
-         |  round(s_px * nd1 - k_px * disc * nd2, 10) + 0.0::DOUBLE
-         |    AS bs_call,
-         |  round(k_px * disc * nmd2 - s_px * nmd1, 10) + 0.0::DOUBLE
-         |    AS bs_put
-         |FROM h ORDER BY l_suppkey, l_shipdate""".stripMargin
-    },
-    // Replays Pricing.blackScholesGreeks: same staged CTE chain, the
-    // closed-form greek trees off phi1/nd2 with mirrored associativity.
-    "q_bs_greeks" -> {
-      s"""WITH bars AS (
-         |$duckBarsSql
-         |$duckBsPrefix
-         |), h AS (
-         |  SELECT l_suppkey, l_shipdate, s_px, k_px, sg, disc, phi1,
-         |    CASE WHEN d1 >= 0.0::DOUBLE THEN nabs1
-         |      ELSE 1.0::DOUBLE - nabs1 END AS nd1,
-         |    CASE WHEN d2 >= 0.0::DOUBLE THEN nabs2
-         |      ELSE 1.0::DOUBLE - nabs2 END AS nd2
-         |  FROM n)
-         |SELECT l_suppkey, l_shipdate,
-         |  round(nd1, 10) + 0.0::DOUBLE AS bs_delta,
-         |  round(phi1 / ((s_px * sg) * sqrt(0.25::DOUBLE)), 10)
-         |    + 0.0::DOUBLE AS bs_gamma,
-         |  round((s_px * phi1) * sqrt(0.25::DOUBLE), 10) + 0.0::DOUBLE
-         |    AS bs_vega,
-         |  round((-((s_px * phi1) * sg)) / (2.0::DOUBLE
-         |      * sqrt(0.25::DOUBLE))
-         |    - ((0.02::DOUBLE * k_px) * disc) * nd2, 10) + 0.0::DOUBLE
-         |    AS bs_theta,
-         |  round(((k_px * 0.25::DOUBLE) * disc) * nd2, 10) + 0.0::DOUBLE
-         |    AS bs_rho
-         |FROM h ORDER BY l_suppkey, l_shipdate""".stripMargin
-    },
-    // Replays Stats.pageTrend: friedman's cells/ranks verbatim, the
-    // position-weighted L2 sum (DOW order is bijective between the
-    // engines' encodings), the exact L and the no-ties z tree.
-    "q_page_trend" ->
-      """WITH cells AS (
-        |  SELECT l_returnflag, l_suppkey AS b,
-        |    dayofweek(CAST(l_shipdate AS DATE)) AS v,
-        |    CAST(sum(CAST(round(CAST(l_quantity AS DOUBLE)
-        |      * 100.0::DOUBLE) AS BIGINT)) AS BIGINT) AS cell
-        |  FROM lineitem GROUP BY 1, 2, 3),
-        |cc AS (
-        |  SELECT l_returnflag, b, v, cell
-        |  FROM (SELECT *, CAST(count(*) OVER (PARTITION BY l_returnflag, b)
-        |      AS BIGINT) AS nc FROM cells) t
-        |  WHERE nc = 7),
-        |ranked AS (
-        |  SELECT l_returnflag, b, v,
-        |    2 * rank() OVER (PARTITION BY l_returnflag, b ORDER BY cell)
-        |      + CAST(count(*) OVER (PARTITION BY l_returnflag, b, cell)
-        |        AS BIGINT) - 1 AS r2
-        |  FROM cc),
-        |pt AS (
-        |  SELECT l_returnflag, v, CAST(sum(r2) AS BIGINT) AS rj2,
-        |    CAST(count(*) AS BIGINT) AS nj
-        |  FROM ranked GROUP BY 1, 2),
-        |pj AS (
-        |  SELECT l_returnflag, rj2, nj,
-        |    CAST(row_number() OVER (PARTITION BY l_returnflag ORDER BY v)
-        |      AS BIGINT) AS j
-        |  FROM pt),
-        |g AS (
-        |  SELECT l_returnflag, CAST(max(nj) AS BIGINT) AS n_blocks,
-        |    CAST(count(*) AS BIGINT) AS k,
-        |    CAST(sum(j * rj2) AS BIGINT) AS l2
-        |  FROM pj GROUP BY 1)
-        |SELECT l_returnflag, n_blocks, k,
-        |  CASE WHEN n_blocks >= 1 THEN
-        |    CAST(l2 AS DOUBLE) / 2.0::DOUBLE END AS page_l,
-        |  CASE WHEN n_blocks >= 1 AND k = 7 THEN
-        |    (CAST(l2 AS DOUBLE) / 2.0::DOUBLE
-        |      - CAST(n_blocks AS DOUBLE) * 7.0::DOUBLE * 8.0::DOUBLE
-        |        * 8.0::DOUBLE / 4.0::DOUBLE)
-        |    / sqrt(CAST(n_blocks AS DOUBLE) * (7.0::DOUBLE * 7.0::DOUBLE)
-        |        * (8.0::DOUBLE * 8.0::DOUBLE)
-        |        * (7.0::DOUBLE - 1.0::DOUBLE) / 144.0::DOUBLE)
-        |  END AS page_z
-        |FROM g ORDER BY l_returnflag""".stripMargin,
-    // Replays Stats.rollSpread: quantized close changes, lag pairs,
-    // exact covariance numerator, the guarded 2·√(−c/n²) tree.
-    "q_roll_spread" ->
-      s"""WITH bars AS (
-         |$duckBarsSql
-         |), s0 AS (
-         |  SELECT l_suppkey, l_shipdate,
-         |    CAST(round(close * 100.0::DOUBLE) AS BIGINT)
-         |      - lag(CAST(round(close * 100.0::DOUBLE) AS BIGINT), 1)
-         |        OVER (PARTITION BY l_suppkey ORDER BY l_shipdate) AS d
-         |  FROM bars
-         |), s AS (
-         |  SELECT l_suppkey, d,
-         |    lag(d, 1) OVER (PARTITION BY l_suppkey ORDER BY l_shipdate)
-         |      AS ld
-         |  FROM s0
-         |), g AS (
-         |  SELECT l_suppkey, CAST(count(*) AS BIGINT) AS n,
-         |    CAST(sum(d) AS BIGINT) AS sd, CAST(sum(ld) AS BIGINT) AS sl,
-         |    CAST(sum(d * ld) AS BIGINT) AS sdl
-         |  FROM s WHERE d IS NOT NULL AND ld IS NOT NULL
-         |  GROUP BY l_suppkey)
-         |SELECT l_suppkey, n AS n_pairs,
-         |  CASE WHEN n >= 2 THEN
-         |    2.0::DOUBLE * sqrt(CASE WHEN CAST(n * sdl - sd * sl AS DOUBLE)
-         |        < 0.0::DOUBLE
-         |      THEN -(CAST(n * sdl - sd * sl AS DOUBLE)
-         |        / (CAST(n AS DOUBLE) * CAST(n AS DOUBLE))) END)
-         |      / 100.0::DOUBLE
-         |  END AS roll_spread
-         |FROM g ORDER BY l_suppkey""".stripMargin,
-    // Replays Eval.christoffersenInd: violation flags, Markov pair
-    // counts after the null-prev drop, guarded rounded-ln terms.
-    "q_christoffersen" ->
-      s"""WITH bars AS (
-         |$duckBarsSql
-         |), s AS (
-         |  SELECT l_suppkey, l_shipdate, close,
-         |    lag(close, 1) OVER (PARTITION BY l_suppkey
-         |      ORDER BY l_shipdate) * 0.98::DOUBLE AS vl
-         |  FROM bars
-         |), f AS (
-         |  SELECT l_suppkey, l_shipdate,
-         |    CASE WHEN close < vl THEN 1 ELSE 0 END AS viol
-         |  FROM s WHERE close IS NOT NULL AND vl IS NOT NULL
-         |), p AS (
-         |  SELECT l_suppkey, viol,
-         |    lag(viol, 1) OVER (PARTITION BY l_suppkey ORDER BY l_shipdate)
-         |      AS prev
-         |  FROM f
-         |), g AS (
-         |  SELECT l_suppkey,
-         |    CAST(sum(CASE WHEN prev = 0 AND viol = 0 THEN 1 ELSE 0 END)
-         |      AS BIGINT) AS n00,
-         |    CAST(sum(CASE WHEN prev = 0 AND viol = 1 THEN 1 ELSE 0 END)
-         |      AS BIGINT) AS n01,
-         |    CAST(sum(CASE WHEN prev = 1 AND viol = 0 THEN 1 ELSE 0 END)
-         |      AS BIGINT) AS n10,
-         |    CAST(sum(CASE WHEN prev = 1 AND viol = 1 THEN 1 ELSE 0 END)
-         |      AS BIGINT) AS n11
-         |  FROM p WHERE prev IS NOT NULL GROUP BY l_suppkey
-         |), h AS (
-         |  SELECT l_suppkey, n00, n01, n10, n11,
-         |    ((CAST(n00 AS DOUBLE) + CAST(n01 AS DOUBLE))
-         |      + CAST(n10 AS DOUBLE)) + CAST(n11 AS DOUBLE) AS nt,
-         |    (CAST(n01 AS DOUBLE) + CAST(n11 AS DOUBLE))
-         |      / (((CAST(n00 AS DOUBLE) + CAST(n01 AS DOUBLE))
-         |        + CAST(n10 AS DOUBLE)) + CAST(n11 AS DOUBLE)) AS pi,
-         |    CAST(n01 AS DOUBLE)
-         |      / (CAST(n00 AS DOUBLE) + CAST(n01 AS DOUBLE)) AS pi01,
-         |    CAST(n11 AS DOUBLE)
-         |      / (CAST(n10 AS DOUBLE) + CAST(n11 AS DOUBLE)) AS pi11
-         |  FROM g)
-         |SELECT l_suppkey, n00, n01, n10, n11,
-         |  CASE WHEN nt > 0.0::DOUBLE
-         |      AND NOT (n01 + n11 = 0 OR n00 + n10 = 0) THEN
-         |    -2.0::DOUBLE * (
-         |      ((CASE WHEN n00 + n10 > 0 THEN CAST(n00 + n10 AS DOUBLE)
-         |          * (round(ln(1.0::DOUBLE - pi), 10) + 0.0::DOUBLE)
-         |        ELSE 0.0::DOUBLE END)
-         |       + (CASE WHEN n01 + n11 > 0 THEN CAST(n01 + n11 AS DOUBLE)
-         |          * (round(ln(pi), 10) + 0.0::DOUBLE)
-         |        ELSE 0.0::DOUBLE END))
-         |      - ((((CASE WHEN n00 > 0 THEN CAST(n00 AS DOUBLE)
-         |            * (round(ln(1.0::DOUBLE - pi01), 10) + 0.0::DOUBLE)
-         |          ELSE 0.0::DOUBLE END)
-         |        + (CASE WHEN n01 > 0 THEN CAST(n01 AS DOUBLE)
-         |            * (round(ln(pi01), 10) + 0.0::DOUBLE)
-         |          ELSE 0.0::DOUBLE END))
-         |        + (CASE WHEN n10 > 0 THEN CAST(n10 AS DOUBLE)
-         |            * (round(ln(1.0::DOUBLE - pi11), 10) + 0.0::DOUBLE)
-         |          ELSE 0.0::DOUBLE END))
-         |        + (CASE WHEN n11 > 0 THEN CAST(n11 AS DOUBLE)
-         |            * (round(ln(pi11), 10) + 0.0::DOUBLE)
-         |          ELSE 0.0::DOUBLE END)))
-         |  END AS christoffersen_lr
-         |FROM h ORDER BY l_suppkey""".stripMargin,
-    // Replays Eval.kupiecPof: the same violation compare and counts;
-    // constant-ln terms are embedded as the Scala-folded 10-dp decimal
-    // literals (strtod → the identical doubles), data-dependent lns
-    // round(…, 10) in-engine.
-    "q_kupiec" -> {
-      def c10(x: Double): String =
-        BigDecimal(x).setScale(10, BigDecimal.RoundingMode.HALF_UP).toString
-      val c1 = c10(math.log(0.95))
-      val c2 = c10(math.log(0.05))
-      s"""WITH bars AS (
-         |$duckBarsSql
-         |), s AS (
-         |  SELECT l_suppkey, close,
-         |    lag(close, 1) OVER (PARTITION BY l_suppkey
-         |      ORDER BY l_shipdate) * 0.98::DOUBLE AS vl
-         |  FROM bars
-         |), g AS (
-         |  SELECT l_suppkey, CAST(count(*) AS BIGINT) AS n,
-         |    CAST(sum(CASE WHEN close < vl THEN 1 ELSE 0 END) AS BIGINT)
-         |      AS x
-         |  FROM s WHERE close IS NOT NULL AND vl IS NOT NULL
-         |  GROUP BY l_suppkey)
-         |SELECT l_suppkey, n, x AS violations,
-         |  CASE WHEN n >= 1 THEN
-         |    -2.0::DOUBLE * ((CAST(n - x AS DOUBLE) * ($c1::DOUBLE)
-         |        + CAST(x AS DOUBLE) * ($c2::DOUBLE))
-         |      - ((CASE WHEN x < n THEN CAST(n - x AS DOUBLE)
-         |            * (round(ln(1.0::DOUBLE
-         |              - CAST(x AS DOUBLE) / CAST(n AS DOUBLE)), 10)
-         |              + 0.0::DOUBLE)
-         |          ELSE 0.0::DOUBLE END)
-         |        + (CASE WHEN x > 0 THEN CAST(x AS DOUBLE)
-         |            * (round(ln(CAST(x AS DOUBLE) / CAST(n AS DOUBLE)), 10)
-         |              + 0.0::DOUBLE)
-         |          ELSE 0.0::DOUBLE END)))
-         |  END AS kupiec_lr
-         |FROM g ORDER BY l_suppkey""".stripMargin
-    },
-    // Replays FuzzyJoin.fellegiSunter over the same blocked pairs: the
-    // Scala-folded log2 weights ride in as VARCHAR-bridged literals
-    // (the identical doubles), the left-assoc sum and threshold CASEs.
-    "q_record_linkage" -> {
-      val ln2 = math.log(2.0)
-      def w(m: Double, u: Double): (String, String) =
-        (s"CAST('${math.log(m / u) / ln2}' AS DOUBLE)",
-          s"CAST('${math.log((1.0 - m) / (1.0 - u)) / ln2}' AS DOUBLE)")
-      val (wa1, wd1) = w(0.9, 0.3)
-      val (wa2, wd2) = w(0.8, 0.2)
-      val (wa3, wd3) = w(0.7, 0.05)
-      def term(c: String, wa: String, wd: String): String =
-        s"(CASE WHEN $c IS NULL THEN 0.0::DOUBLE WHEN $c THEN $wa ELSE $wd END)"
-      s"""WITH pairs AS (
-         |  WITH $duckShingles,
-         |  ranked AS (
-         |    SELECT doc_id, substr(text, 1, 8) AS snm_block,
-         |      row_number() OVER (PARTITION BY substr(text, 1, 8)
-         |        ORDER BY text, doc_id) AS rn
-         |    FROM documents
-         |  ),
-         |  cand AS (
-         |    SELECT a.doc_id AS id_a, b.doc_id AS id_b
-         |    FROM ranked a JOIN ranked b
-         |      ON a.snm_block = b.snm_block
-         |     AND b.rn > a.rn AND b.rn <= a.rn + 4
-         |  ),
-         |  ${duckJaccardTail(0.3)}
-         |), p AS (
-         |  SELECT pr.id_a, pr.id_b,
-         |    a.source = b.source AS agree_src,
-         |    (a.n_chars // 50) = (b.n_chars // 50) AS agree_len,
-         |    substr(a.text, 1, 16) = substr(b.text, 1, 16) AS agree_prefix
-         |  FROM pairs pr
-         |  JOIN documents a ON a.doc_id = pr.id_a
-         |  JOIN documents b ON b.doc_id = pr.id_b
-         |), s AS (
-         |  SELECT id_a, id_b, agree_src, agree_len, agree_prefix,
-         |    ((${term("agree_src", wa1, wd1)}
-         |      + ${term("agree_len", wa2, wd2)})
-         |      + ${term("agree_prefix", wa3, wd3)}) AS fs_weight
-         |  FROM p)
-         |SELECT id_a, id_b, agree_src, agree_len, agree_prefix, fs_weight,
-         |  CASE WHEN fs_weight >= 2.0::DOUBLE THEN 'match'
-         |       WHEN fs_weight > -1.0::DOUBLE THEN 'possible'
-         |       ELSE 'nonmatch' END AS fs_class
-         |FROM s ORDER BY id_a, id_b""".stripMargin
-    },
-    // Replays Stats.cramerVonMises: pooled doubled midranks minus
-    // doubled within-arm indexes, exact D² sums, the U4/(4nmN) −
-    // (4nm−1)/(6N) tree.
-    "q_cvm" ->
-      """WITH e AS (
-        |  SELECT CAST(CAST(ts AS DATE) - DATE '1970-01-01' AS BIGINT) AS day,
-        |    event_type AS v,
-        |    CAST(round(value * 100.0::DOUBLE) AS BIGINT) AS x
-        |  FROM events WHERE event_type IN ('purchase', 'view')),
-        |r AS (
-        |  SELECT day, v,
-        |    2 * rank() OVER (PARTITION BY day ORDER BY x)
-        |      + CAST(count(*) OVER (PARTITION BY day, x) AS BIGINT) - 1
-        |      - 2 * row_number() OVER (PARTITION BY day, v ORDER BY x)
-        |      AS d
-        |  FROM e),
-        |g AS (
-        |  SELECT day,
-        |    CAST(count(CASE WHEN v = 'purchase' THEN 1 END) AS BIGINT) AS na,
-        |    CAST(count(CASE WHEN v = 'view' THEN 1 END) AS BIGINT) AS nb,
-        |    CAST(sum(CASE WHEN v = 'purchase' THEN d * d ELSE 0 END)
-        |      AS BIGINT) AS da,
-        |    CAST(sum(CASE WHEN v = 'view' THEN d * d ELSE 0 END)
-        |      AS BIGINT) AS db
-        |  FROM r GROUP BY day),
-        |h AS (
-        |  SELECT day, na, nb, CAST(na AS DOUBLE) AS nad,
-        |    CAST(nb AS DOUBLE) AS nbd,
-        |    CAST(na * da + nb * db AS DOUBLE) AS u4
-        |  FROM g)
-        |SELECT day, na AS n_a, nb AS n_b,
-        |  CASE WHEN na >= 1 AND nb >= 1 THEN
-        |    u4 / (((4.0::DOUBLE * nad) * nbd) * (nad + nbd))
-        |      - ((4.0::DOUBLE * nad) * nbd - 1.0::DOUBLE)
-        |        / (6.0::DOUBLE * (nad + nbd))
-        |  END AS cvm_t
-        |FROM h ORDER BY day""".stripMargin,
-    // Replays Eval.pinballLoss: quantized naive-forecast errors, exact
-    // per-mille integer penalties, the one descale tree.
-    "q_pinball" ->
-      s"""WITH bars AS (
-         |$duckBarsSql
-         |), s AS (
-         |  SELECT l_suppkey,
-         |    CAST(round(close * 100.0::DOUBLE) AS BIGINT) AS a,
-         |    CAST(round(lag(close, 1) OVER (PARTITION BY l_suppkey
-         |        ORDER BY l_shipdate) * 100.0::DOUBLE) AS BIGINT) AS f
-         |  FROM bars
-         |), g AS (
-         |  SELECT l_suppkey, CAST(count(*) AS BIGINT) AS n,
-         |    CAST(sum(CASE WHEN a - f >= 0 THEN 900 * (a - f)
-         |      ELSE (900 - 1000) * (a - f) END) AS BIGINT) AS sp
-         |  FROM s WHERE a IS NOT NULL AND f IS NOT NULL
-         |  GROUP BY l_suppkey)
-         |SELECT l_suppkey, n,
-         |  CASE WHEN n >= 1 THEN
-         |    (CAST(sp AS DOUBLE) / (1000.0::DOUBLE * CAST(n AS DOUBLE)))
-         |      / 100.0::DOUBLE
-         |  END AS pinball
-         |FROM g ORDER BY l_suppkey""".stripMargin,
-    // Replays Eval.theilU2: the 2-day-average forecast tree, quantized
-    // error sums, sqrt of the exact ratio.
-    "q_theil_u2" ->
-      s"""WITH bars AS (
-         |$duckBarsSql
-         |), s AS (
-         |  SELECT l_suppkey,
-         |    CAST(round(close * 100.0::DOUBLE) AS BIGINT) AS a,
-         |    CAST(round(((lag(close, 1) OVER ws + lag(close, 2) OVER ws)
-         |        / 2.0::DOUBLE) * 100.0::DOUBLE) AS BIGINT) AS f,
-         |    lag(CAST(round(close * 100.0::DOUBLE) AS BIGINT), 1) OVER ws
-         |      AS nv
-         |  FROM bars
-         |  WINDOW ws AS (PARTITION BY l_suppkey ORDER BY l_shipdate)
-         |), g AS (
-         |  SELECT l_suppkey, CAST(count(*) AS BIGINT) AS n,
-         |    CAST(sum((f - a) * (f - a)) AS BIGINT) AS num,
-         |    CAST(sum((nv - a) * (nv - a)) AS BIGINT) AS den
-         |  FROM s WHERE a IS NOT NULL AND f IS NOT NULL AND nv IS NOT NULL
-         |  GROUP BY l_suppkey)
-         |SELECT l_suppkey, n AS n_pairs,
-         |  CASE WHEN n >= 1 AND den > 0 THEN
-         |    sqrt(CAST(num AS DOUBLE) / CAST(den AS DOUBLE))
-         |  END AS theil_u2
-         |FROM g ORDER BY l_suppkey""".stripMargin,
-    // Replays Anomaly.grubbs: exact integer (n, Σx, Σx², min, max), the
-    // n-multiplied deviation, the one fixed G tree (sums < 2^53 — no
-    // VARCHAR bridge needed).
-    "q_grubbs" ->
-      s"""WITH bars AS (
-         |$duckBarsSql
-         |), q AS (
-         |  SELECT l_suppkey,
-         |    CAST(round(close * 100.0::DOUBLE) AS BIGINT) AS x
-         |  FROM bars
-         |), g AS (
-         |  SELECT l_suppkey, CAST(count(*) AS BIGINT) AS n,
-         |    CAST(sum(x) AS BIGINT) AS sx,
-         |    CAST(sum(CAST(x AS HUGEINT) * x) AS BIGINT) AS sxx,
-         |    CAST(min(x) AS BIGINT) AS mn, CAST(max(x) AS BIGINT) AS mx
-         |  FROM q GROUP BY l_suppkey)
-         |SELECT l_suppkey, n,
-         |  CASE WHEN n >= 3 THEN
-         |    (CAST(greatest(n * mx - sx, sx - n * mn) AS DOUBLE)
-         |        / CAST(n AS DOUBLE))
-         |      / sqrt((CASE WHEN CAST(n * sxx - sx * sx AS DOUBLE)
-         |            > 0.0::DOUBLE
-         |          THEN CAST(n * sxx - sx * sx AS DOUBLE) END)
-         |        / (CAST(n AS DOUBLE) * (CAST(n AS DOUBLE) - 1.0::DOUBLE)))
-         |  END AS grubbs_g,
-         |  CAST(CASE WHEN n * mx - sx >= sx - n * mn THEN mx ELSE mn END
-         |    AS DOUBLE) / 100.0::DOUBLE AS suspect,
-         |  CASE WHEN n * mx - sx >= sx - n * mn THEN 'high' ELSE 'low' END
-         |    AS suspect_side
-         |FROM g ORDER BY l_suppkey""".stripMargin,
-    // Replays Stats.trimmedMean: positional rank trim with the exact
-    // integer per-side count, kept sum as BIGINT, one division tree.
-    "q_trimmed_mean" ->
-      s"""WITH bars AS (
-         |$duckBarsSql
-         |), q AS (
-         |  SELECT l_suppkey,
-         |    CAST(round(close * 100.0::DOUBLE) AS BIGINT) AS x
-         |  FROM bars
-         |), r AS (
-         |  SELECT l_suppkey, x,
-         |    row_number() OVER (PARTITION BY l_suppkey ORDER BY x) AS rn,
-         |    CAST(count(*) OVER (PARTITION BY l_suppkey) AS BIGINT) AS ng
-         |  FROM q
-         |), s AS (
-         |  SELECT l_suppkey, CAST(max(ng) AS BIGINT) AS n,
-         |    CAST(sum(CASE WHEN rn > (ng * 50) // 1000
-         |        AND rn <= ng - (ng * 50) // 1000 THEN 1 ELSE 0 END)
-         |      AS BIGINT) AS n_kept,
-         |    CAST(sum(CASE WHEN rn > (ng * 50) // 1000
-         |        AND rn <= ng - (ng * 50) // 1000 THEN x ELSE 0 END)
-         |      AS BIGINT) AS sk
-         |  FROM r GROUP BY l_suppkey)
-         |SELECT l_suppkey, n, n_kept,
-         |  CASE WHEN n_kept >= 1 THEN
-         |    (CAST(sk AS DOUBLE) / CAST(n_kept AS DOUBLE)) / 100.0::DOUBLE
-         |  END AS trimmed_mean
-         |FROM s ORDER BY l_suppkey""".stripMargin,
-    // Replays Stats.hillTail: descending rank, the k+1-bounded ordered
-    // list, threshold at position k+1, per-term round(ln, 10) fold in
-    // rank order, H and 1/H.
-    "q_hill" ->
-      s"""WITH bars AS (
-         |$duckBarsSql
-         |), q AS (
-         |  SELECT l_suppkey,
-         |    CAST(round(volume * 100.0::DOUBLE) AS BIGINT) AS x
-         |  FROM bars
-         |  WHERE CAST(round(volume * 100.0::DOUBLE) AS BIGINT) > 0
-         |), r AS (
-         |  SELECT l_suppkey, x,
-         |    row_number() OVER (PARTITION BY l_suppkey ORDER BY x DESC)
-         |      AS rn
-         |  FROM q
-         |), g AS (
-         |  SELECT l_suppkey, CAST(count(*) AS BIGINT) AS n_pos,
-         |    list(struct_pack(rn := rn, x := x) ORDER BY rn)
-         |      FILTER (rn <= 51) AS top
-         |  FROM r GROUP BY l_suppkey
-         |), h AS (
-         |  SELECT l_suppkey, n_pos,
-         |    CASE WHEN n_pos >= 51 THEN
-         |      list_reduce(list_transform(top[1:50],
-         |          e -> round(ln(CAST(e.x AS DOUBLE)
-         |            / CAST(top[51].x AS DOUBLE)), 10) + 0.0::DOUBLE),
-         |        (a, b) -> a + b) / 50.0::DOUBLE
-         |    END AS hh
-         |  FROM g)
-         |SELECT l_suppkey, n_pos, hh AS hill_h,
-         |  CASE WHEN hh > 0.0::DOUBLE THEN 1.0::DOUBLE / hh END AS hill_alpha
-         |FROM h ORDER BY l_suppkey""".stripMargin,
-    // Replays Stats.friedman: integer cell sums, within-block doubled
-    // midranks, the all-integer Conover form with ONE final division.
-    // DOW labels differ (DuckDB 0-6 vs Spark 1-7) but only partition
-    // identity matters — the bijection preserves cells and ranks.
-    "q_friedman" ->
-      """WITH cells AS (
-        |  SELECT l_returnflag, l_suppkey AS b,
-        |    dayofweek(CAST(l_shipdate AS DATE)) AS v,
-        |    CAST(sum(CAST(round(CAST(l_quantity AS DOUBLE)
-        |      * 100.0::DOUBLE) AS BIGINT)) AS BIGINT) AS cell
-        |  FROM lineitem GROUP BY 1, 2, 3),
-        |cc AS (
-        |  SELECT l_returnflag, b, v, cell
-        |  FROM (SELECT *, CAST(count(*) OVER (PARTITION BY l_returnflag, b)
-        |      AS BIGINT) AS nc FROM cells) t
-        |  WHERE nc = 7),
-        |ranked AS (
-        |  SELECT l_returnflag, b, v,
-        |    2 * rank() OVER (PARTITION BY l_returnflag, b ORDER BY cell)
-        |      + CAST(count(*) OVER (PARTITION BY l_returnflag, b, cell)
-        |        AS BIGINT) - 1 AS r2
-        |  FROM cc),
-        |pt AS (
-        |  SELECT l_returnflag, v, CAST(sum(r2) AS BIGINT) AS rj2,
-        |    CAST(count(*) AS BIGINT) AS nj,
-        |    CAST(sum(r2 * r2) AS BIGINT) AS a2j
-        |  FROM ranked GROUP BY 1, 2),
-        |g AS (
-        |  SELECT l_returnflag, CAST(max(nj) AS BIGINT) AS n_blocks,
-        |    CAST(count(*) AS BIGINT) AS k,
-        |    CAST(sum(rj2 * rj2) AS BIGINT) AS sr2,
-        |    CAST(sum(a2j) AS BIGINT) AS a2
-        |  FROM pt GROUP BY 1)
-        |SELECT l_returnflag, n_blocks, k,
-        |  CASE WHEN n_blocks >= 1 AND k = 7
-        |      AND CAST(a2 - n_blocks * 448 AS DOUBLE) > 0.0::DOUBLE
-        |    THEN (6.0::DOUBLE
-        |        * CAST(sr2 - n_blocks * n_blocks * 448 AS DOUBLE))
-        |      / CAST(a2 - n_blocks * 448 AS DOUBLE)
-        |  END AS friedman_q
-        |FROM g ORDER BY l_returnflag""".stripMargin,
-    // Replays Rolling.ewmaChart: exact per-key integer stats (mu0,
-    // population sigma), the var_ema and runprod recurrences as one
-    // WITH RECURSIVE walk, then the identical z / limit trees.
-    "q_ewma_chart" -> {
-      val A = "(200.0::DOUBLE / 1000.0::DOUBLE)"
-      val OM = s"(1.0::DOUBLE - $A)"
-      val R = s"($A / (2.0::DOUBLE - $A))"
-      s"""WITH RECURSIVE bars AS (
-         |$duckBarsSql
-         |), seq AS MATERIALIZED (
-         |  SELECT l_suppkey, l_shipdate,
-         |    CAST(CAST(round(close * 100.0::DOUBLE) AS BIGINT) AS DOUBLE)
-         |      AS x,
-         |    row_number() OVER ws AS rn,
-         |    first_value(CAST(CAST(round(close * 100.0::DOUBLE) AS BIGINT)
-         |      AS DOUBLE)) OVER ws AS x1
-         |  FROM bars
-         |  WINDOW ws AS (PARTITION BY l_suppkey ORDER BY l_shipdate)
-         |), st AS MATERIALIZED (
-         |  SELECT l_suppkey,
-         |    CAST(sum(xq) AS DOUBLE) / CAST(count(*) AS DOUBLE) AS mu,
-         |    sqrt(CAST(CAST(count(*) AS HUGEINT) * sum(CAST(xq AS HUGEINT) * xq)
-         |        - CAST(sum(xq) AS HUGEINT) * CAST(sum(xq) AS HUGEINT)
-         |        AS DOUBLE))
-         |      / CAST(count(*) AS DOUBLE) AS sig
-         |  FROM (SELECT l_suppkey,
-         |      CAST(round(close * 100.0::DOUBLE) AS BIGINT) AS xq
-         |    FROM bars) q GROUP BY l_suppkey
-         |), rec AS (
-         |  SELECT l_suppkey, l_shipdate, rn, x1, x AS y, $OM AS p
-         |  FROM seq WHERE rn = 1
-         |  UNION ALL
-         |  SELECT s.l_suppkey, s.l_shipdate, s.rn, s.x1,
-         |    ($A * s.x + (1.0::DOUBLE - $A) * h.y) AS y,
-         |    (h.p * $OM) AS p
-         |  FROM rec h JOIN seq s
-         |    ON s.l_suppkey = h.l_suppkey AND s.rn = h.rn + 1
-         |), fin AS (
-         |  SELECT r.l_suppkey, r.l_shipdate,
-         |    r.y + r.p * (st.mu - r.x1) AS z, st.mu,
-         |    (3.0::DOUBLE * st.sig) * sqrt($R * (1.0::DOUBLE - r.p * r.p))
-         |      AS hw
-         |  FROM rec r JOIN st ON r.l_suppkey = st.l_suppkey)
-         |SELECT l_suppkey, l_shipdate,
-         |  z / 100.0::DOUBLE AS ewma,
-         |  (mu + hw) / 100.0::DOUBLE AS ewma_ucl,
-         |  (mu - hw) / 100.0::DOUBLE AS ewma_lcl,
-         |  abs(z - mu) > hw AS ewma_ooc
-         |FROM fin ORDER BY l_suppkey, l_shipdate""".stripMargin
-    },
-    // Replays TextOps.blocklistScreen: the shared tokenizer, distinct
-    // tokens intersected with the sorted literal blocklist, occurrence
-    // count via the same higher-order filter.
-    "q_blocklist" ->
-      """WITH t AS (
-        |  SELECT doc_id,
-        |    list_filter(string_split_regex(lower(text), '[^a-z0-9]+'),
-        |      w -> w <> '') AS toks
-        |  FROM documents)
-        |SELECT doc_id,
-        |  -- array_to_string([]) is NULL in DuckDB but '' in Spark's
-        |  -- array_join; coalesce only when toks itself is non-NULL
-        |  coalesce(
-        |    array_to_string(list_sort(list_intersect(list_distinct(toks),
-        |      ['hash', 'nosuchterm', 'slow', 'stream', 'vector'])), ','),
-        |    CASE WHEN toks IS NOT NULL THEN '' END) AS hit_terms,
-        |  CAST(len(list_intersect(list_distinct(toks),
-        |    ['hash', 'nosuchterm', 'slow', 'stream', 'vector'])) AS BIGINT)
-        |    AS n_hit_terms,
-        |  CAST(len(list_filter(toks, x -> list_contains(
-        |    ['hash', 'nosuchterm', 'slow', 'stream', 'vector'], x)))
-        |    AS BIGINT) AS n_hit_tokens,
-        |  CAST(len(list_intersect(list_distinct(toks),
-        |    ['hash', 'nosuchterm', 'slow', 'stream', 'vector'])) AS BIGINT)
-        |    > 2 AS blocked
-        |FROM t ORDER BY doc_id""".stripMargin,
-    // Replays Stats.wilcoxonSignedRank: quantized close−open diffs,
-    // zero drop, doubled average ranks of |d| (2·rank + peers − 1),
-    // per-row t²−1 tie term, the fixed W⁺/z trees.
-    "q_wilcoxon" ->
-      s"""WITH bars AS (
-         |$duckBarsSql
-         |), dd AS (
-         |  SELECT l_suppkey,
-         |    CAST(round(close * 100.0::DOUBLE) AS BIGINT)
-         |      - CAST(round(open * 100.0::DOUBLE) AS BIGINT) AS d
-         |  FROM bars
-         |), nz AS (
-         |  SELECT l_suppkey, d, abs(d) AS a FROM dd WHERE d <> 0
-         |), r AS (
-         |  SELECT l_suppkey, d,
-         |    2 * rank() OVER (PARTITION BY l_suppkey ORDER BY a)
-         |      + cnt - 1 AS r2, cnt
-         |  FROM (SELECT l_suppkey, d, a,
-         |      CAST(count(*) OVER (PARTITION BY l_suppkey, a) AS BIGINT)
-         |        AS cnt
-         |    FROM nz) t
-         |), g AS (
-         |  SELECT l_suppkey, CAST(count(*) AS BIGINT) AS n,
-         |    CAST(sum(CASE WHEN d > 0 THEN r2 ELSE 0 END) AS BIGINT) AS s2p,
-         |    CAST(sum(cnt * cnt - 1) AS BIGINT) AS tcorr
-         |  FROM r GROUP BY l_suppkey
-         |), h AS (
-         |  SELECT l_suppkey, n, CAST(n AS DOUBLE) AS nd,
-         |    CAST(s2p AS DOUBLE) / 2.0::DOUBLE AS wp,
-         |    CAST(tcorr AS DOUBLE) AS tc
-         |  FROM g)
-         |SELECT l_suppkey, n AS n_nonzero,
-         |  CASE WHEN n >= 1 THEN wp END AS w_plus,
-         |  CASE WHEN n >= 1 AND
-         |      ((nd * (nd + 1.0::DOUBLE)) * (2.0::DOUBLE * nd + 1.0::DOUBLE))
-         |        / 24.0::DOUBLE - tc / 48.0::DOUBLE > 0.0::DOUBLE
-         |    THEN (wp - (nd * (nd + 1.0::DOUBLE)) / 4.0::DOUBLE)
-         |      / sqrt(((nd * (nd + 1.0::DOUBLE))
-         |          * (2.0::DOUBLE * nd + 1.0::DOUBLE)) / 24.0::DOUBLE
-         |        - tc / 48.0::DOUBLE)
-         |  END AS wsr_z
-         |FROM h ORDER BY l_suppkey""".stripMargin,
-    // Replays Stats.brownForsythe: exact doubled per-variant medians
-    // (lo/hi mid-rank pick), |2x − m2| deviations, then the anovaF
-    // variant-ordered fold verbatim.
-    "q_brown_forsythe" ->
-      """WITH e AS (
-        |  SELECT CAST(CAST(ts AS DATE) - DATE '1970-01-01' AS BIGINT) AS day,
-        |    event_type AS v,
-        |    CAST(round(value * 100.0::DOUBLE) AS BIGINT) AS x
-        |  FROM events),
-        |rk AS (
-        |  SELECT day, v, x,
-        |    row_number() OVER (PARTITION BY day, v ORDER BY x) AS rn,
-        |    CAST(count(*) OVER (PARTITION BY day, v) AS BIGINT) AS ng
-        |  FROM e),
-        |md AS (
-        |  SELECT day, v,
-        |    CAST(sum(CASE WHEN rn = (ng + 1) // 2 THEN x ELSE 0 END)
-        |      + sum(CASE WHEN rn = ng // 2 + 1 THEN x ELSE 0 END)
-        |      AS BIGINT) AS m2
-        |  FROM rk GROUP BY day, v),
-        |z AS (
-        |  SELECT rk.day, rk.v, abs(2 * rk.x - md.m2) AS zx
-        |  FROM rk JOIN md ON rk.day = md.day AND rk.v = md.v),
-        |pv AS (
-        |  SELECT day, v, CAST(count(*) AS BIGINT) AS ng,
-        |    CAST(sum(zx) AS BIGINT) AS sg,
-        |    CAST(sum(zx * zx) AS BIGINT) AS qg
-        |  FROM z GROUP BY day, v),
-        |f AS (
-        |  SELECT day, CAST(count(*) AS BIGINT) AS k,
-        |    CAST(sum(ng) AS BIGINT) AS n,
-        |    CAST(CAST(sum(sg) AS BIGINT) AS DOUBLE) AS sd,
-        |    CAST(sum(qg) AS DOUBLE) AS q,
-        |    list_reduce(list_transform(
-        |        list(struct_pack(v := v, ng := ng, sg := sg) ORDER BY v),
-        |        s -> CAST(s.sg AS DOUBLE) * CAST(s.sg AS DOUBLE)
-        |          / CAST(s.ng AS DOUBLE)),
-        |      (a, b) -> a + b) AS b
-        |  FROM pv GROUP BY day),
-        |g AS (
-        |  SELECT day, k, n, CAST(k AS DOUBLE) AS kd, CAST(n AS DOUBLE) AS nd,
-        |    b - sd * sd / CAST(n AS DOUBLE) AS ssb, q - b AS ssw
-        |  FROM f)
-        |SELECT day, k, n,
-        |  CASE WHEN k >= 2 AND nd > kd AND ssw > 0.0::DOUBLE THEN
-        |    (ssb / (kd - 1.0::DOUBLE)) / (ssw / (nd - kd)) END AS f,
-        |  ssb AS ss_between, ssw AS ss_within
-        |FROM g ORDER BY day""".stripMargin,
-    // Replays Stats.archLm: the (close−open)/open pseudo-return double
-    // tree, scale-6 quantization, squared-residual pair sums as
-    // HUGEINT, centered sums VARCHAR-bridged, beta/LM fixed trees.
-    "q_arch_lm" ->
-      s"""WITH bars AS (
-         |$duckBarsSql
-         |), s AS (
-         |  SELECT l_suppkey,
-         |    u * u AS sq,
-         |    lag(u, 1) OVER (PARTITION BY l_suppkey ORDER BY l_shipdate)
-         |      AS lu
-         |  FROM (SELECT l_suppkey, l_shipdate,
-         |    CAST(round(((close - open) / open) * 1000000.0::DOUBLE)
-         |      AS BIGINT) AS u FROM bars) q
-         |), g AS (
-         |  SELECT l_suppkey, CAST(count(*) AS BIGINT) AS np,
-         |    CAST(sum(sq) AS HUGEINT) AS sy,
-         |    CAST(sum(lu * lu) AS HUGEINT) AS sx,
-         |    sum(CAST(lu * lu AS HUGEINT) * (lu * lu)) AS sxx,
-         |    sum(CAST(lu * lu AS HUGEINT) * sq) AS sxy,
-         |    sum(CAST(sq AS HUGEINT) * sq) AS syy
-         |  FROM s WHERE lu IS NOT NULL GROUP BY l_suppkey
-         |), c AS (
-         |  SELECT l_suppkey, np,
-         |    CAST(CAST(CAST(np AS HUGEINT) * sxx - sx * sx AS VARCHAR)
-         |      AS DOUBLE) AS cxx,
-         |    CAST(CAST(CAST(np AS HUGEINT) * syy - sy * sy AS VARCHAR)
-         |      AS DOUBLE) AS cyy,
-         |    CAST(CAST(CAST(np AS HUGEINT) * sxy - sx * sy AS VARCHAR)
-         |      AS DOUBLE) AS cxy
-         |  FROM g)
-         |SELECT l_suppkey, np AS n_pairs,
-         |  CASE WHEN np >= 3 THEN
-         |    cxy / (CASE WHEN cxx > 0.0::DOUBLE THEN cxx END)
-         |  END AS arch_beta,
-         |  CASE WHEN np >= 3 THEN
-         |    CAST(np AS DOUBLE) * ((cxy * cxy) /
-         |      ((CASE WHEN cxx > 0.0::DOUBLE THEN cxx END)
-         |       * (CASE WHEN cyy > 0.0::DOUBLE THEN cyy END)))
-         |  END AS arch_lm
-         |FROM c ORDER BY l_suppkey""".stripMargin,
-    // Replays Stats.chowTest: epoch-day regressor, per-segment HUGEINT
-    // conditional sums in one pass, the (Cyy − Cty²/Ctt)/n SSR trees and
-    // the guarded F ratio.
-    "q_chow" ->
-      s"""WITH bars AS (
-         |$duckBarsSql
-         |), b AS (
-         |  SELECT l_suppkey,
-         |    CAST(date_diff('day', DATE '1970-01-01',
-         |      CAST(l_shipdate AS DATE)) AS BIGINT) AS t,
-         |    CAST(round(close * 100.0::DOUBLE) AS BIGINT) AS y,
-         |    date_diff('day', DATE '1970-01-01', CAST(l_shipdate AS DATE))
-         |      < date_diff('day', DATE '1970-01-01', DATE '1995-06-17')
-         |      AS pre
-         |  FROM bars
-         |), g AS (
-         |  SELECT l_suppkey,
-         |    CAST(sum(CASE WHEN pre THEN 1 ELSE 0 END) AS BIGINT) AS na,
-         |    CAST(sum(CASE WHEN NOT pre THEN 1 ELSE 0 END) AS BIGINT) AS nb,
-         |    sum(CASE WHEN pre THEN CAST(t AS HUGEINT) ELSE 0 END) AS sta,
-         |    sum(CASE WHEN pre THEN CAST(y AS HUGEINT) ELSE 0 END) AS sya,
-         |    sum(CASE WHEN pre THEN CAST(t AS HUGEINT) * t ELSE 0 END) AS stta,
-         |    sum(CASE WHEN pre THEN CAST(t AS HUGEINT) * y ELSE 0 END) AS stya,
-         |    sum(CASE WHEN pre THEN CAST(y AS HUGEINT) * y ELSE 0 END) AS syya,
-         |    sum(CASE WHEN NOT pre THEN CAST(t AS HUGEINT) ELSE 0 END) AS stb,
-         |    sum(CASE WHEN NOT pre THEN CAST(y AS HUGEINT) ELSE 0 END) AS syb,
-         |    sum(CASE WHEN NOT pre THEN CAST(t AS HUGEINT) * t ELSE 0 END) AS sttb,
-         |    sum(CASE WHEN NOT pre THEN CAST(t AS HUGEINT) * y ELSE 0 END) AS styb,
-         |    sum(CASE WHEN NOT pre THEN CAST(y AS HUGEINT) * y ELSE 0 END) AS syyb
-         |  FROM b GROUP BY l_suppkey
-         |), r AS (
-         |  SELECT l_suppkey, na, nb,
-         |    CASE WHEN na >= 3 THEN
-         |      (CAST(CAST(CAST(na AS HUGEINT) * syya - sya * sya AS VARCHAR) AS DOUBLE)
-         |       - CAST(CAST(CAST(na AS HUGEINT) * stya - sta * sya AS VARCHAR) AS DOUBLE)
-         |         * CAST(CAST(CAST(na AS HUGEINT) * stya - sta * sya AS VARCHAR) AS DOUBLE)
-         |         / (CASE WHEN CAST(CAST(CAST(na AS HUGEINT) * stta - sta * sta AS VARCHAR) AS DOUBLE)
-         |              > 0.0::DOUBLE
-         |            THEN CAST(CAST(CAST(na AS HUGEINT) * stta - sta * sta AS VARCHAR) AS DOUBLE) END))
-         |      / CAST(na AS DOUBLE)
-         |    END AS ssra,
-         |    CASE WHEN nb >= 3 THEN
-         |      (CAST(CAST(CAST(nb AS HUGEINT) * syyb - syb * syb AS VARCHAR) AS DOUBLE)
-         |       - CAST(CAST(CAST(nb AS HUGEINT) * styb - stb * syb AS VARCHAR) AS DOUBLE)
-         |         * CAST(CAST(CAST(nb AS HUGEINT) * styb - stb * syb AS VARCHAR) AS DOUBLE)
-         |         / (CASE WHEN CAST(CAST(CAST(nb AS HUGEINT) * sttb - stb * stb AS VARCHAR) AS DOUBLE)
-         |              > 0.0::DOUBLE
-         |            THEN CAST(CAST(CAST(nb AS HUGEINT) * sttb - stb * stb AS VARCHAR) AS DOUBLE) END))
-         |      / CAST(nb AS DOUBLE)
-         |    END AS ssrb,
-         |    CASE WHEN na + nb >= 3 THEN
-         |      (CAST(CAST(CAST(na + nb AS HUGEINT) * (syya + syyb) - (sya + syb) * (sya + syb) AS VARCHAR) AS DOUBLE)
-         |       - CAST(CAST(CAST(na + nb AS HUGEINT) * (stya + styb) - (sta + stb) * (sya + syb) AS VARCHAR) AS DOUBLE)
-         |         * CAST(CAST(CAST(na + nb AS HUGEINT) * (stya + styb) - (sta + stb) * (sya + syb) AS VARCHAR) AS DOUBLE)
-         |         / (CASE WHEN CAST(CAST(CAST(na + nb AS HUGEINT) * (stta + sttb) - (sta + stb) * (sta + stb) AS VARCHAR) AS DOUBLE)
-         |              > 0.0::DOUBLE
-         |            THEN CAST(CAST(CAST(na + nb AS HUGEINT) * (stta + sttb) - (sta + stb) * (sta + stb) AS VARCHAR) AS DOUBLE) END))
-         |      / CAST(na + nb AS DOUBLE)
-         |    END AS ssrp
-         |  FROM g)
-         |SELECT l_suppkey, na AS n_pre, nb AS n_post,
-         |  ((ssrp - ssra - ssrb) / 2.0::DOUBLE) /
-         |  (CASE WHEN (ssra + ssrb) /
-         |      (CASE WHEN CAST(na + nb - 4 AS DOUBLE) > 0.0::DOUBLE
-         |       THEN CAST(na + nb - 4 AS DOUBLE) END) > 0.0::DOUBLE
-         |    THEN (ssra + ssrb) /
-         |      (CASE WHEN CAST(na + nb - 4 AS DOUBLE) > 0.0::DOUBLE
-         |       THEN CAST(na + nb - 4 AS DOUBLE) END) END) AS chow_f
-         |FROM r ORDER BY l_suppkey""".stripMargin,
-    // Replays Stats.dickeyFuller: (lag, diff) pair sums as HUGEINT, the
-    // same NULL-guarded beta/t trees.
-    "q_dickey_fuller" ->
-      s"""WITH bars AS (
-         |$duckBarsSql
-         |), s AS (
-         |  SELECT l_suppkey,
-         |    lag(CAST(round(close * 100.0::DOUBLE) AS BIGINT), 1)
-         |      OVER ws AS x,
-         |    CAST(round(close * 100.0::DOUBLE) AS BIGINT)
-         |      - lag(CAST(round(close * 100.0::DOUBLE) AS BIGINT), 1)
-         |        OVER ws AS y
-         |  FROM bars
-         |  WINDOW ws AS (PARTITION BY l_suppkey ORDER BY l_shipdate)),
-         |g AS (
-         |  SELECT l_suppkey, CAST(count(*) AS BIGINT) AS n_pairs,
-         |    CAST(sum(x) AS HUGEINT) AS sx, CAST(sum(y) AS HUGEINT) AS sy,
-         |    CAST(sum(x*x) AS HUGEINT) AS sxx,
-         |    CAST(sum(y*y) AS HUGEINT) AS syy,
-         |    CAST(sum(x*y) AS HUGEINT) AS sxy
-         |  FROM s WHERE x IS NOT NULL GROUP BY l_suppkey),
-         |h AS (
-         |  SELECT l_suppkey, n_pairs, CAST(n_pairs AS DOUBLE) AS n,
-         |    CAST(CAST(n_pairs AS HUGEINT) * sxy - sx * sy AS DOUBLE) AS a,
-         |    CASE WHEN CAST(CAST(n_pairs AS HUGEINT) * sxx - sx * sx AS DOUBLE) > 0.0::DOUBLE
-         |      THEN CAST(CAST(n_pairs AS HUGEINT) * sxx - sx * sx AS DOUBLE) END AS b,
-         |    CAST(CAST(n_pairs AS HUGEINT) * syy - sy * sy AS DOUBLE) AS c
-         |  FROM g),
-         |t AS (
-         |  SELECT l_suppkey, n_pairs,
-         |    a / b AS beta,
-         |    (a / b) / sqrt(CASE WHEN (c - a * a / b) / ((n - 2.0::DOUBLE) * b)
-         |        > 0.0::DOUBLE
-         |      THEN (c - a * a / b) / ((n - 2.0::DOUBLE) * b) END) AS tt
-         |  FROM h)
-         |SELECT l_suppkey, n_pairs,
-         |  CASE WHEN n_pairs >= 3 THEN beta END AS df_beta,
-         |  CASE WHEN n_pairs >= 3 THEN tt END AS df_t
-         |FROM t ORDER BY l_suppkey""".stripMargin,
-    // Replays Multimodal.imageDHash from the pixel function: 16×16 PNG
-    // pixel i = text byte at i mod len (lossless grayscale), sample
-    // (dx,dy) → source index 2·dy·16 + ⌊dx·16/9⌋, one gradient bit per
-    // horizontal neighbor pair, the 63-bit shift-sum.
-    "q_media_dhash" ->
-      """WITH g AS (
-        |  SELECT d.doc_id, tx.dx, ty.dy,
-        |    CASE WHEN length(d.text) = 0 THEN 0
-        |      ELSE ascii(substr(d.text,
-        |        CAST((2 * ty.dy * 16 + (tx.dx * 16) // 9) % length(d.text)
-        |          AS INT) + 1, 1))
-        |    END AS g
-        |  FROM documents d
-        |  CROSS JOIN generate_series(0, 8) AS tx(dx)
-        |  CROSS JOIN generate_series(0, 7) AS ty(dy))
-        |SELECT a.doc_id,
-        |  CAST(sum(CASE WHEN b.g > a.g
-        |    THEN (1::BIGINT << CAST(a.dy * 8 + a.dx AS INT)) ELSE 0 END)
-        |    AS BIGINT) AS dhash
-        |FROM g a JOIN g b
-        |  ON a.doc_id = b.doc_id AND a.dy = b.dy AND b.dx = a.dx + 1
-        |WHERE a.dx <= 7 AND NOT (a.dx = 7 AND a.dy = 7)
-        |GROUP BY a.doc_id ORDER BY a.doc_id""".stripMargin,
-    // Replays Multimodal.dhashPairs by brute force on the regenerated
-    // hashes — the banding is a candidate OPTIMIZATION, the pair set is
-    // defined by the hamming budget alone.
-    "q_media_dhash_pairs" ->
-      """WITH g AS (
-        |  SELECT d.doc_id, tx.dx, ty.dy,
-        |    CASE WHEN length(d.text) = 0 THEN 0
-        |      ELSE ascii(substr(d.text,
-        |        CAST((2 * ty.dy * 16 + (tx.dx * 16) // 9) % length(d.text)
-        |          AS INT) + 1, 1))
-        |    END AS g
-        |  FROM documents d
-        |  CROSS JOIN generate_series(0, 8) AS tx(dx)
-        |  CROSS JOIN generate_series(0, 7) AS ty(dy)),
-        |h AS (
-        |  SELECT a.doc_id,
-        |    CAST(sum(CASE WHEN b.g > a.g
-        |      THEN (1::BIGINT << CAST(a.dy * 8 + a.dx AS INT)) ELSE 0 END)
-        |      AS BIGINT) AS dhash
-        |  FROM g a JOIN g b
-        |    ON a.doc_id = b.doc_id AND a.dy = b.dy AND b.dx = a.dx + 1
-        |  WHERE a.dx <= 7 AND NOT (a.dx = 7 AND a.dy = 7)
-        |  GROUP BY a.doc_id)
-        |SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-        |  CAST(bit_count(xor(a.dhash, b.dhash)) AS INT) AS hamming
-        |FROM h a JOIN h b ON a.doc_id < b.doc_id
-        |WHERE bit_count(xor(a.dhash, b.dhash)) <= 3
-        |ORDER BY id_a, id_b""".stripMargin,
-    // Replays Stats.effectSizes on the welch frame: HUGEINT moment sums,
-    // doubled-midrank U, the same fixed d/g/delta trees.
-    "q_effect_sizes" ->
-      """WITH e AS (
-        |  SELECT CAST(CAST(ts AS DATE) - DATE '1970-01-01' AS BIGINT) AS day,
-        |    event_type AS arm,
-        |    CAST(round(value * 100.0::DOUBLE) AS BIGINT) AS xi
-        |  FROM events WHERE event_type IN ('purchase', 'view')),
-        |r AS (
-        |  SELECT day, arm, xi,
-        |    2 * rank() OVER (PARTITION BY day ORDER BY xi)
-        |      + count(*) OVER (PARTITION BY day, xi) - 1 AS r2
-        |  FROM e),
-        |g AS (
-        |  SELECT day,
-        |    CAST(count(CASE WHEN arm = 'purchase' THEN 1 END) AS BIGINT) AS n_a,
-        |    CAST(count(CASE WHEN arm <> 'purchase' THEN 1 END) AS BIGINT) AS n_b,
-        |    CAST(sum(CASE WHEN arm = 'purchase' THEN r2 END) AS BIGINT) AS s2a,
-        |    CAST(sum(CASE WHEN arm = 'purchase' THEN xi ELSE 0 END) AS HUGEINT) AS sa,
-        |    CAST(sum(CASE WHEN arm = 'purchase' THEN xi * xi ELSE 0 END) AS HUGEINT) AS qa,
-        |    CAST(sum(CASE WHEN arm <> 'purchase' THEN xi ELSE 0 END) AS HUGEINT) AS sb,
-        |    CAST(sum(CASE WHEN arm <> 'purchase' THEN xi * xi ELSE 0 END) AS HUGEINT) AS qb
-        |  FROM r GROUP BY day),
-        |h AS (
-        |  SELECT day, n_a, n_b, s2a,
-        |    CAST(n_a AS DOUBLE) AS na, CAST(n_b AS DOUBLE) AS nb,
-        |    CAST(CAST(n_a AS HUGEINT) * qa - sa * sa AS DOUBLE) AS va,
-        |    CAST(CAST(n_b AS HUGEINT) * qb - sb * sb AS DOUBLE) AS vb,
-        |    CAST(sa AS DOUBLE) AS sad, CAST(sb AS DOUBLE) AS sbd
-        |  FROM g),
-        |t AS (
-        |  SELECT day, n_a, n_b, na, nb,
-        |    (sad / na - sbd / nb) /
-        |      sqrt(CASE WHEN (va / na + vb / nb) / (na + nb - 2.0::DOUBLE)
-        |            > 0.0::DOUBLE
-        |        THEN (va / na + vb / nb) / (na + nb - 2.0::DOUBLE) END) AS d,
-        |    (CAST(s2a AS DOUBLE) - na * (na + 1.0::DOUBLE)) / 2.0::DOUBLE AS u
-        |  FROM h)
-        |SELECT day, n_a, n_b,
-        |  CASE WHEN n_a >= 2 AND n_b >= 2 THEN d END AS cohen_d,
-        |  CASE WHEN n_a >= 2 AND n_b >= 2 THEN
-        |    d * (1.0::DOUBLE - 3.0::DOUBLE /
-        |      (4.0::DOUBLE * (na + nb - 2.0::DOUBLE) - 1.0::DOUBLE))
-        |  END AS hedges_g,
-        |  CASE WHEN n_a >= 1 AND n_b >= 1 THEN
-        |    (2.0::DOUBLE * u - na * nb) / (na * nb)
-        |  END AS cliffs_delta
-        |FROM t ORDER BY day""".stripMargin,
-    // Replays Stats.cramersV on lineitem: one (status, flag, mode) cell
-    // aggregate, window marginals, the o²/e − n zero-cell identity, the
-    // ascending-(a,b) pinned fold.
-    "q_cramers_v" ->
-      """WITH cells AS (
-        |  SELECT CAST(year(o_orderdate) AS BIGINT) AS o_year,
-        |    o_orderstatus AS a, o_orderpriority AS b,
-        |    CAST(count(*) AS BIGINT) AS o
-        |  FROM orders
-        |  WHERE o_orderstatus IS NOT NULL AND o_orderpriority IS NOT NULL
-        |  GROUP BY 1, 2, 3),
-        |wt AS (
-        |  SELECT o_year, a, b, o,
-        |    (CAST(o AS DOUBLE) * CAST(o AS DOUBLE)) /
-        |      (CAST(sum(o) OVER (PARTITION BY o_year, a)
-        |          * sum(o) OVER (PARTITION BY o_year, b) AS DOUBLE)
-        |        / CAST(sum(o) OVER (PARTITION BY o_year) AS DOUBLE))
-        |      AS t,
-        |    sum(o) OVER (PARTITION BY o_year) AS tot
-        |  FROM cells),
-        |agg AS (
-        |  SELECT o_year, CAST(max(tot) AS BIGINT) AS n,
-        |    CAST(count(DISTINCT a) AS BIGINT) AS r,
-        |    CAST(count(DISTINCT b) AS BIGINT) AS c,
-        |    list_reduce(list_prepend(0.0::DOUBLE,
-        |      list(t ORDER BY a, b)), (acc, x) -> acc + x)
-        |      - CAST(max(tot) AS DOUBLE) AS chi2
-        |  FROM wt GROUP BY o_year)
-        |SELECT o_year, n, (r - 1) * (c - 1) AS dof, chi2,
-        |  CASE WHEN least(r, c) >= 2 THEN
-        |    sqrt(chi2 / (CAST(n AS DOUBLE) *
-        |      (CAST(least(r, c) AS DOUBLE) - 1.0::DOUBLE)))
-        |  END AS cramers_v
-        |FROM agg ORDER BY o_year""".stripMargin,
-    // Replays Eval.kaplanMeier on the time-to-purchase frame: per-cohort
-    // duration counts, exact at-risk windows, WITH RECURSIVE runprod
-    // (st' = st · fac — the acc-first multiply order).
-    // Replays Resample.seasonalStrength over the q_seasonal decompose:
-    // re-quantized components, VARCHAR-bridged n-multiplied variances,
-    // the guarded max(0, 1 − ratio) trees.
-    "q_seasonal_strength" -> {
-      def cv(c: String): String =
-        s"""CAST(CAST(CAST(count(*) AS HUGEINT)
-           |      * sum(CAST($c AS HUGEINT) * $c)
-           |    - CAST(sum($c) AS HUGEINT) * CAST(sum($c) AS HUGEINT)
-           |    AS VARCHAR) AS DOUBLE)""".stripMargin
-      s"""WITH dec AS (
-         |  WITH bars AS (
-         |$duckBarsSql
-         |  ), base AS (
-         |    SELECT l_suppkey, l_shipdate,
-         |      CAST(round(close * 100.0::DOUBLE) AS BIGINT) AS x,
-         |      CAST((row_number() OVER ws - 1) % 7 AS INTEGER) AS phase,
-         |      CASE WHEN count(*) OVER (ws ROWS BETWEEN 3 PRECEDING AND
-         |          3 FOLLOWING) = 7
-         |        THEN sum(CAST(round(close * 100.0::DOUBLE) AS BIGINT))
-         |          OVER (ws ROWS BETWEEN 3 PRECEDING AND 3 FOLLOWING)
-         |      END AS num
-         |    FROM bars
-         |    WINDOW ws AS (PARTITION BY l_suppkey ORDER BY l_shipdate)),
-         |  pm AS (
-         |    SELECT l_suppkey, phase,
-         |      CAST(sum(CAST(7 * x - num AS HUGEINT)) AS DOUBLE) /
-         |        (CAST(count(7 * x - num) AS DOUBLE) * 7.0::DOUBLE) AS sm
-         |    FROM base GROUP BY l_suppkey, phase),
-         |  aj AS (
-         |    SELECT l_suppkey,
-         |      list_reduce(list_prepend(0.0::DOUBLE,
-         |        list(sm ORDER BY phase)), (acc, e) -> acc + e) /
-         |        CAST(count(*) AS DOUBLE) AS adj
-         |    FROM pm WHERE sm IS NOT NULL GROUP BY l_suppkey)
-         |  SELECT base.l_suppkey,
-         |    CAST(base.num AS DOUBLE) / 7.0::DOUBLE / 100.0::DOUBLE
-         |      AS trend,
-         |    (pm.sm - aj.adj) / 100.0::DOUBLE AS seasonal,
-         |    ((CAST(base.x AS DOUBLE) * 7.0::DOUBLE -
-         |      CAST(base.num AS DOUBLE)) / 7.0::DOUBLE -
-         |      (pm.sm - aj.adj)) / 100.0::DOUBLE AS resid
-         |  FROM base
-         |  JOIN pm ON base.l_suppkey = pm.l_suppkey
-         |    AND base.phase = pm.phase
-         |  LEFT JOIN aj ON base.l_suppkey = aj.l_suppkey
-         |), q AS (
-         |  SELECT l_suppkey,
-         |    CAST(round(resid * 10000.0::DOUBLE) AS BIGINT) AS r,
-         |    CAST(round((seasonal + resid) * 10000.0::DOUBLE) AS BIGINT)
-         |      AS sr,
-         |    CAST(round((trend + resid) * 10000.0::DOUBLE) AS BIGINT)
-         |      AS tr
-         |  FROM dec WHERE trend IS NOT NULL AND resid IS NOT NULL
-         |), g AS (
-         |  SELECT l_suppkey, CAST(count(*) AS BIGINT) AS n,
-         |    ${cv("r")} AS vr, ${cv("sr")} AS vsr, ${cv("tr")} AS vtr
-         |  FROM q GROUP BY l_suppkey)
-         |SELECT l_suppkey, n,
-         |  CASE WHEN vsr > 0.0::DOUBLE THEN
-         |    greatest(0.0::DOUBLE, 1.0::DOUBLE - vr / vsr) END
-         |    AS seasonal_strength,
-         |  CASE WHEN vtr > 0.0::DOUBLE THEN
-         |    greatest(0.0::DOUBLE, 1.0::DOUBLE - vr / vtr) END
-         |    AS trend_strength
-         |FROM g ORDER BY l_suppkey""".stripMargin
-    },
-    // Replays Stats.kendallW: the friedman oracle with the final
-    // Q/(n(k−1)) scaling.
-    "q_kendall_w" ->
-      """WITH cells AS (
-        |  SELECT l_returnflag, l_suppkey AS b,
-        |    dayofweek(CAST(l_shipdate AS DATE)) AS v,
-        |    CAST(sum(CAST(round(CAST(l_quantity AS DOUBLE)
-        |      * 100.0::DOUBLE) AS BIGINT)) AS BIGINT) AS cell
-        |  FROM lineitem GROUP BY 1, 2, 3),
-        |cc AS (
-        |  SELECT l_returnflag, b, v, cell
-        |  FROM (SELECT *, CAST(count(*) OVER (PARTITION BY l_returnflag, b)
-        |      AS BIGINT) AS nc FROM cells) t
-        |  WHERE nc = 7),
-        |ranked AS (
-        |  SELECT l_returnflag, b, v,
-        |    2 * rank() OVER (PARTITION BY l_returnflag, b ORDER BY cell)
-        |      + CAST(count(*) OVER (PARTITION BY l_returnflag, b, cell)
-        |        AS BIGINT) - 1 AS r2
-        |  FROM cc),
-        |pt AS (
-        |  SELECT l_returnflag, v, CAST(sum(r2) AS BIGINT) AS rj2,
-        |    CAST(count(*) AS BIGINT) AS nj,
-        |    CAST(sum(r2 * r2) AS BIGINT) AS a2j
-        |  FROM ranked GROUP BY 1, 2),
-        |g AS (
-        |  SELECT l_returnflag, CAST(max(nj) AS BIGINT) AS n_blocks,
-        |    CAST(count(*) AS BIGINT) AS k,
-        |    CAST(sum(rj2 * rj2) AS BIGINT) AS sr2,
-        |    CAST(sum(a2j) AS BIGINT) AS a2
-        |  FROM pt GROUP BY 1)
-        |SELECT l_returnflag, n_blocks, k,
-        |  (CASE WHEN n_blocks >= 1 AND k = 7
-        |      AND CAST(a2 - n_blocks * 448 AS DOUBLE) > 0.0::DOUBLE
-        |    THEN (6.0::DOUBLE
-        |        * CAST(sr2 - n_blocks * n_blocks * 448 AS DOUBLE))
-        |      / CAST(a2 - n_blocks * 448 AS DOUBLE)
-        |  END) / (CAST(n_blocks AS DOUBLE) * 6.0::DOUBLE) AS kendall_w
-        |FROM g ORDER BY l_returnflag""".stripMargin,
-    // Replays Stats.durbinWatson: quantized diffs and quadratic sums,
-    // the n-multiplied mean-free numerator/denominator, one division.
-    "q_durbin_watson" ->
-      s"""WITH bars AS (
-         |$duckBarsSql
-         |), s AS (
-         |  SELECT l_suppkey,
-         |    CAST(round(close * 100.0::DOUBLE) AS BIGINT) AS x,
-         |    lag(CAST(round(close * 100.0::DOUBLE) AS BIGINT), 1)
-         |      OVER (PARTITION BY l_suppkey ORDER BY l_shipdate) AS lx
-         |  FROM bars
-         |), g AS (
-         |  SELECT l_suppkey, CAST(count(*) AS BIGINT) AS n,
-         |    CAST(sum(x) AS BIGINT) AS sx,
-         |    sum(CAST(x AS HUGEINT) * x) AS sxx,
-         |    sum(CASE WHEN lx IS NOT NULL
-         |      THEN CAST(x - lx AS HUGEINT) * (x - lx)
-         |      ELSE 0 END) AS sdd
-         |  FROM s GROUP BY l_suppkey)
-         |SELECT l_suppkey, n,
-         |  CASE WHEN n >= 2
-         |      AND CAST(CAST(n AS HUGEINT) * sxx
-         |        - CAST(sx AS HUGEINT) * sx AS DOUBLE) > 0.0::DOUBLE THEN
-         |    CAST(CAST(n AS HUGEINT) * sdd AS DOUBLE)
-         |      / CAST(CAST(n AS HUGEINT) * sxx
-         |        - CAST(sx AS HUGEINT) * sx AS DOUBLE)
-         |  END AS dw
-         |FROM g ORDER BY l_suppkey""".stripMargin,
-    // Replays Stats.cochranArmitage: exact weighted dose sums, the
-    // n-multiplied numerator tree. DOW encodings differ by a constant
-    // shift (DuckDB 0-6 vs Spark 1-7) — the CA statistic is invariant
-    // to affine weight shifts, so the z values agree exactly.
-    "q_cochran_armitage" ->
-      """WITH e AS (
-        |  SELECT user_id % 4 AS band,
-        |    CAST(dayofweek(CAST(ts AS DATE)) AS BIGINT) AS w,
-        |    CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END AS y
-        |  FROM events),
-        |g AS (
-        |  SELECT band, CAST(count(*) AS BIGINT) AS n,
-        |    CAST(count(DISTINCT w) AS BIGINT) AS k_doses,
-        |    CAST(sum(y) AS BIGINT) AS s,
-        |    CAST(sum(w * y) AS BIGINT) AS ws,
-        |    CAST(sum(w) AS BIGINT) AS wn,
-        |    CAST(sum(w * w) AS BIGINT) AS wwn
-        |  FROM e GROUP BY band),
-        |h AS (
-        |  SELECT band, n, k_doses,
-        |    CAST(n * ws - wn * s AS DOUBLE) AS num,
-        |    CAST(n * wwn - wn * wn AS DOUBLE) AS cw,
-        |    CAST(s AS DOUBLE) / CAST(n AS DOUBLE) AS pbar,
-        |    CAST(n AS DOUBLE) AS nd
-        |  FROM g)
-        |SELECT band, n, k_doses,
-        |  CASE WHEN n >= 1
-        |      AND pbar * (1.0::DOUBLE - pbar) * cw * nd > 0.0::DOUBLE THEN
-        |    num / sqrt(pbar * (1.0::DOUBLE - pbar) * cw * nd)
-        |  END AS ca_z
-        |FROM h ORDER BY band""".stripMargin,
-    // Replays Divergence.ksUniform: the same Weyl score (double fmod),
-    // rank-ladder terms, order-independent max, √n scaling.
-    "q_ks_uniform" ->
-      """WITH d AS (
-        |  SELECT lang,
-        |    (CAST(doc_id AS DOUBLE) * 0.6180339887498949::DOUBLE)
-        |      % 1.0::DOUBLE AS u
-        |  FROM documents),
-        |r AS (
-        |  SELECT lang, u,
-        |    CAST(row_number() OVER (PARTITION BY lang ORDER BY u)
-        |      AS BIGINT) AS i,
-        |    CAST(count(*) OVER (PARTITION BY lang) AS BIGINT) AS n
-        |  FROM d),
-        |g AS (
-        |  SELECT lang, n,
-        |    max(greatest(
-        |      CAST(i AS DOUBLE) / CAST(n AS DOUBLE) - u,
-        |      u - CAST(i - 1 AS DOUBLE) / CAST(n AS DOUBLE))) AS ks_d
-        |  FROM r GROUP BY lang, n)
-        |SELECT lang, n, ks_d,
-        |  sqrt(CAST(n AS DOUBLE)) * ks_d AS ks_stat
-        |FROM g ORDER BY lang""".stripMargin,
-    // Replays Stats.blandAltman: quantized differences, exact sums,
-    // the bias/sd/limit trees with the 1.96 literal.
-    "q_bland_altman" ->
-      s"""WITH bars AS (
-         |$duckBarsSql
-         |), s AS (
-         |  SELECT l_suppkey,
-         |    CAST(round(close * 100.0::DOUBLE) AS BIGINT)
-         |      - CAST(round(open * 100.0::DOUBLE) AS BIGINT) AS d
-         |  FROM bars
-         |), g AS (
-         |  SELECT l_suppkey, CAST(count(*) AS BIGINT) AS n,
-         |    CAST(sum(d) AS BIGINT) AS sd1,
-         |    CAST(sum(CAST(d AS HUGEINT) * d) AS BIGINT) AS sdd
-         |  FROM s GROUP BY l_suppkey
-         |), h AS (
-         |  SELECT l_suppkey, n,
-         |    (CAST(sd1 AS DOUBLE) / CAST(n AS DOUBLE)) / 100.0::DOUBLE
-         |      AS bias,
-         |    sqrt((CASE WHEN CAST(n * sdd - sd1 * sd1 AS DOUBLE)
-         |          > 0.0::DOUBLE
-         |        THEN CAST(n * sdd - sd1 * sd1 AS DOUBLE) END)
-         |      / (CAST(n AS DOUBLE) * (CAST(n AS DOUBLE) - 1.0::DOUBLE)))
-         |      / 100.0::DOUBLE AS sdv
-         |  FROM g)
-         |SELECT l_suppkey, n,
-         |  CASE WHEN n >= 1 THEN bias END AS ba_bias,
-         |  CASE WHEN n >= 2 THEN sdv END AS ba_sd,
-         |  CASE WHEN n >= 2 THEN bias - 1.96::DOUBLE * sdv END AS ba_lower,
-         |  CASE WHEN n >= 2 THEN bias + 1.96::DOUBLE * sdv END AS ba_upper
-         |FROM h ORDER BY l_suppkey""".stripMargin,
-    // Replays Stats.processCapability: quantized sums, the mu/sigma
-    // trees, literal spec limits on the same grid.
-    "q_cpk" ->
-      s"""WITH bars AS (
-         |$duckBarsSql
-         |), s AS (
-         |  SELECT l_suppkey,
-         |    CAST(round(close * 100.0::DOUBLE) AS BIGINT) AS x
-         |  FROM bars
-         |), g AS (
-         |  SELECT l_suppkey, CAST(count(*) AS BIGINT) AS n,
-         |    CAST(sum(x) AS BIGINT) AS sx,
-         |    CAST(sum(CAST(x AS HUGEINT) * x) AS BIGINT) AS sxx
-         |  FROM s GROUP BY l_suppkey
-         |), h AS (
-         |  SELECT l_suppkey, n,
-         |    CAST(sx AS DOUBLE) / CAST(n AS DOUBLE) AS mu,
-         |    sqrt((CASE WHEN CAST(n * sxx - sx * sx AS DOUBLE)
-         |          > 0.0::DOUBLE
-         |        THEN CAST(n * sxx - sx * sx AS DOUBLE) END)
-         |      / (CAST(n AS DOUBLE) * (CAST(n AS DOUBLE) - 1.0::DOUBLE)))
-         |      AS sigma
-         |  FROM g)
-         |SELECT l_suppkey, n,
-         |  CASE WHEN n >= 2 THEN
-         |    (5500.0::DOUBLE - 100.0::DOUBLE) / (6.0::DOUBLE * sigma)
-         |  END AS cp,
-         |  CASE WHEN n >= 2 THEN
-         |    least(5500.0::DOUBLE - mu, mu - 100.0::DOUBLE)
-         |      / (3.0::DOUBLE * sigma)
-         |  END AS cpk
-         |FROM h ORDER BY l_suppkey""".stripMargin,
-    // Replays Stats.oddsRiskRatio: exact 2x2 cells, single-ratio OR/RR
-    // trees, rounded ln, the Woolf se tree.
-    "q_odds_ratio" ->
-      """WITH e AS (
-        |  SELECT CAST(CAST(ts AS DATE) - DATE '1970-01-01' AS BIGINT) AS day,
-        |    event_type AS arm,
-        |    CASE WHEN value > 100.0 THEN 1 ELSE 0 END AS y
-        |  FROM events WHERE event_type IN ('purchase', 'view')),
-        |g AS (
-        |  SELECT day,
-        |    CAST(sum(CASE WHEN arm = 'purchase' THEN y ELSE 0 END)
-        |      AS BIGINT) AS s_a,
-        |    CAST(sum(CASE WHEN arm = 'purchase' THEN 1 - y ELSE 0 END)
-        |      AS BIGINT) AS f_a,
-        |    CAST(sum(CASE WHEN arm <> 'purchase' THEN y ELSE 0 END)
-        |      AS BIGINT) AS s_b,
-        |    CAST(sum(CASE WHEN arm <> 'purchase' THEN 1 - y ELSE 0 END)
-        |      AS BIGINT) AS f_b
-        |  FROM e GROUP BY day)
-        |SELECT day, s_a, f_a, s_b, f_b,
-        |  CASE WHEN s_a > 0 AND f_a > 0 AND s_b > 0 AND f_b > 0 THEN
-        |    (CAST(s_a AS DOUBLE) * CAST(f_b AS DOUBLE))
-        |      / (CAST(f_a AS DOUBLE) * CAST(s_b AS DOUBLE)) END
-        |    AS odds_ratio,
-        |  CASE WHEN s_a > 0 AND f_a > 0 AND s_b > 0 AND f_b > 0 THEN
-        |    round(ln((CAST(s_a AS DOUBLE) * CAST(f_b AS DOUBLE))
-        |      / (CAST(f_a AS DOUBLE) * CAST(s_b AS DOUBLE))), 10)
-        |      + 0.0::DOUBLE END AS log_or,
-        |  CASE WHEN s_a > 0 AND f_a > 0 AND s_b > 0 AND f_b > 0 THEN
-        |    sqrt(1.0::DOUBLE / CAST(s_a AS DOUBLE)
-        |      + 1.0::DOUBLE / CAST(f_a AS DOUBLE)
-        |      + 1.0::DOUBLE / CAST(s_b AS DOUBLE)
-        |      + 1.0::DOUBLE / CAST(f_b AS DOUBLE)) END AS se_log_or,
-        |  CASE WHEN s_a + f_a > 0 AND s_b + f_b > 0 AND s_b > 0 THEN
-        |    (CAST(s_a AS DOUBLE)
-        |        / (CAST(s_a AS DOUBLE) + CAST(f_a AS DOUBLE)))
-        |      / (CAST(s_b AS DOUBLE)
-        |        / (CAST(s_b AS DOUBLE) + CAST(f_b AS DOUBLE))) END
-        |    AS risk_ratio
-        |FROM g ORDER BY day""".stripMargin,
-    // Replays Stats.twoProportionZ: exact success/total counts, the
-    // pooled-rate z tree.
-    "q_prop_z" ->
-      """WITH e AS (
-        |  SELECT CAST(CAST(ts AS DATE) - DATE '1970-01-01' AS BIGINT) AS day,
-        |    event_type AS arm,
-        |    CASE WHEN value > 100.0 THEN 1 ELSE 0 END AS y
-        |  FROM events WHERE event_type IN ('purchase', 'view')),
-        |g AS (
-        |  SELECT day,
-        |    CAST(count(CASE WHEN arm = 'purchase' THEN 1 END) AS BIGINT)
-        |      AS na,
-        |    CAST(count(CASE WHEN arm <> 'purchase' THEN 1 END) AS BIGINT)
-        |      AS nb,
-        |    CAST(sum(CASE WHEN arm = 'purchase' THEN y ELSE 0 END)
-        |      AS BIGINT) AS sa,
-        |    CAST(sum(CASE WHEN arm <> 'purchase' THEN y ELSE 0 END)
-        |      AS BIGINT) AS sb
-        |  FROM e GROUP BY day),
-        |h AS (
-        |  SELECT day, na, nb,
-        |    CAST(sa AS DOUBLE) / CAST(na AS DOUBLE) AS pa,
-        |    CAST(sb AS DOUBLE) / CAST(nb AS DOUBLE) AS pb,
-        |    CAST(sa + sb AS DOUBLE)
-        |      / (CAST(na AS DOUBLE) + CAST(nb AS DOUBLE)) AS pooled
-        |  FROM g)
-        |SELECT day, na AS n_a, nb AS n_b,
-        |  CASE WHEN na >= 1 THEN pa END AS rate_a,
-        |  CASE WHEN nb >= 1 THEN pb END AS rate_b,
-        |  CASE WHEN na >= 1 AND nb >= 1
-        |      AND pooled * (1.0::DOUBLE - pooled)
-        |        * (1.0::DOUBLE / CAST(na AS DOUBLE)
-        |          + 1.0::DOUBLE / CAST(nb AS DOUBLE)) > 0.0::DOUBLE THEN
-        |    (pa - pb) / sqrt(pooled * (1.0::DOUBLE - pooled)
-        |      * (1.0::DOUBLE / CAST(na AS DOUBLE)
-        |        + 1.0::DOUBLE / CAST(nb AS DOUBLE)))
-        |  END AS prop_z
-        |FROM h ORDER BY day""".stripMargin,
-    // Replays Eval.rankBiasedOverlap: the same monthly rankings, shared
-    // items at m = max(ra, rb), running overlap steps, the Scala-folded
-    // geometric weights as VARCHAR-bridged literals, the depth fold.
-    "q_rbo" -> {
-      val p = 0.9
-      val weights: IndexedSeq[Double] = {
-        var pw = 1.0
-        (1 to 10).map { _ => val w = (1.0 - p) * pw; pw = pw * p; w }
-      }
-      val wlist = weights.zipWithIndex.map { case (w, i) =>
-        s"struct_pack(d := ${i + 1}, w := CAST('$w' AS DOUBLE))"
-      }.mkString("[", ", ", "]")
-      s"""WITH bars AS (
-         |$duckBarsSql
-         |), mb AS (
-         |  SELECT strftime(l_shipdate, '%Y-%m') AS month, l_suppkey,
-         |    CAST(sum(CAST(round(volume * 100.0::DOUBLE) AS BIGINT))
-         |      AS BIGINT) AS vol,
-         |    CAST(sum(n_ticks) AS BIGINT) AS ticks
-         |  FROM bars GROUP BY month, l_suppkey
-         |), rk AS (
-         |  SELECT month,
-         |    row_number() OVER (PARTITION BY month
-         |      ORDER BY vol DESC, l_suppkey) AS ra,
-         |    row_number() OVER (PARTITION BY month
-         |      ORDER BY ticks DESC, l_suppkey) AS rb
-         |  FROM mb
-         |), sh AS (
-         |  SELECT month, greatest(ra, rb) AS m
-         |  FROM rk WHERE ra <= 10 AND rb <= 10
-         |), cm AS (
-         |  SELECT month, m, CAST(count(*) AS BIGINT) AS c
-         |  FROM sh GROUP BY month, m
-         |), ov AS (
-         |  SELECT month, m, c,
-         |    CAST(sum(c) OVER (PARTITION BY month ORDER BY m
-         |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-         |      AS BIGINT) AS ovm
-         |  FROM cm
-         |), pk AS (
-         |  SELECT month, CAST(sum(c) AS BIGINT) AS n_shared,
-         |    list(struct_pack(m := m, ov := ovm) ORDER BY m) AS steps
-         |  FROM ov GROUP BY month)
-         |SELECT month, n_shared,
-         |  list_reduce(list_transform($wlist,
-         |      e -> e.w * (CAST(coalesce(
-         |          list_filter(steps, t -> t.m <= e.d)[-1].ov, 0)
-         |        AS DOUBLE) / CAST(e.d AS DOUBLE))),
-         |    (a, b) -> a + b) AS rbo
-         |FROM pk ORDER BY month""".stripMargin
-    },
-    // Replays Eval.rmst: the KM walk extended with the rectangle
-    // accumulator — st = st·fac, area += st·width, width from exact
-    // integer tau clamps, plus the head segment at S = 1.
-    "q_rmst" ->
-      """WITH RECURSIVE u AS (
-        |  SELECT user_id,
-        |    min(epoch_us(ts) * 1000) AS t0,
-        |    min(CASE WHEN event_type = 'purchase'
-        |      THEN epoch_us(ts) * 1000 END) AS tp,
-        |    max(epoch_us(ts) * 1000) AS tl
-        |  FROM events GROUP BY user_id),
-        |d AS (
-        |  SELECT user_id % 4 AS cohort,
-        |    (coalesce(tp, tl) - t0) // 86400000000000 AS dur,
-        |    CASE WHEN tp IS NOT NULL THEN 1 ELSE 0 END AS ev
-        |  FROM u),
-        |pt AS (
-        |  SELECT cohort, dur AS t, CAST(sum(ev) AS BIGINT) AS de,
-        |    CAST(sum(1 - ev) AS BIGINT) AS ce
-        |  FROM d GROUP BY cohort, dur),
-        |r AS (
-        |  SELECT cohort, t, de, ce,
-        |    sum(de + ce) OVER (PARTITION BY cohort) AS ntot,
-        |    sum(de + ce) OVER (PARTITION BY cohort)
-        |      - coalesce(sum(de + ce) OVER (PARTITION BY cohort ORDER BY t
-        |          ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-        |      AS n_risk,
-        |    row_number() OVER (PARTITION BY cohort ORDER BY t) AS rn,
-        |    count(*) OVER (PARTITION BY cohort) AS cnt,
-        |    CAST(least(min(t) OVER (PARTITION BY cohort), 20) AS DOUBLE)
-        |      AS head,
-        |    greatest(0, least(coalesce(lead(t, 1) OVER (PARTITION BY
-        |        cohort ORDER BY t), 20), 20) - least(t, 20)) AS width
-        |  FROM pt),
-        |f AS MATERIALIZED (
-        |  SELECT cohort, t, rn, cnt, ntot, head, width,
-        |    CAST(n_risk - de AS DOUBLE) / CAST(n_risk AS DOUBLE) AS fac
-        |  FROM r),
-        |wk AS (
-        |  SELECT cohort, t, rn, cnt, ntot, head,
-        |    fac AS st, fac * CAST(width AS DOUBLE) AS area
-        |  FROM f WHERE rn = 1
-        |  UNION ALL
-        |  SELECT s.cohort, s.t, s.rn, s.cnt, s.ntot, s.head,
-        |    (p.st * s.fac) AS st,
-        |    (p.area + (p.st * s.fac) * CAST(s.width AS DOUBLE)) AS area
-        |  FROM wk p JOIN f s ON s.cohort = p.cohort AND s.rn = p.rn + 1
-        |)
-        |SELECT cohort, CAST(ntot AS BIGINT) AS n,
-        |  CAST(20 AS BIGINT) AS tau, (head + area) AS rmst
-        |FROM wk WHERE rn = cnt ORDER BY cohort""".stripMargin,
-    // Replays Eval.expectedCalibrationError: the hosmer_lemeshow decile
-    // frame with the ng·|acc − conf| terms, one final division by n.
-    "q_ece" ->
-      """WITH e AS (
-        |  SELECT CAST(CAST(ts AS DATE) - DATE '1970-01-01' AS BIGINT) AS day,
-        |    CAST(round((value / 1000.0::DOUBLE) * 1000000.0::DOUBLE)
-        |      AS BIGINT) AS pi,
-        |    CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END AS y,
-        |    event_id
-        |  FROM events),
-        |b AS (
-        |  SELECT day, pi, y,
-        |    ntile(10) OVER (PARTITION BY day ORDER BY pi, event_id) AS bin
-        |  FROM e),
-        |pb AS (
-        |  SELECT day, bin, CAST(count(*) AS BIGINT) AS ng,
-        |    CAST(sum(y) AS BIGINT) AS og, CAST(sum(pi) AS BIGINT) AS sg
-        |  FROM b GROUP BY day, bin),
-        |t AS (
-        |  SELECT day, bin, ng,
-        |    CAST(ng AS DOUBLE) * abs(
-        |      CAST(og AS DOUBLE) / CAST(ng AS DOUBLE)
-        |      - (CAST(sg AS DOUBLE) / 1000000.0::DOUBLE)
-        |        / CAST(ng AS DOUBLE)) AS term
-        |  FROM pb),
-        |g AS (
-        |  SELECT day, CAST(sum(ng) AS BIGINT) AS n,
-        |    CAST(count(*) AS BIGINT) AS k_bins,
-        |    list_reduce(list_transform(
-        |        list(struct_pack(bin := bin, w := term) ORDER BY bin),
-        |        s -> s.w), (a, b) -> a + b) AS fold
-        |  FROM t GROUP BY day)
-        |SELECT day, n, k_bins,
-        |  CASE WHEN k_bins = 10 THEN fold / CAST(n AS DOUBLE) END AS ece
-        |FROM g ORDER BY day""".stripMargin,
-    // Replays Eval.bestF1Threshold: the rocCurve descending ladder, the
-    // integer-ratio F1 trees, argmax = (f1 DESC NULLS LAST, threshold
-    // DESC) — the struct-max ordering.
-    "q_best_f1" ->
-      """WITH e AS (
-        |  SELECT CAST(CAST(ts AS DATE) - DATE '1970-01-01' AS BIGINT) AS day,
-        |    value AS score,
-        |    CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END AS y
-        |  FROM events),
-        |ps AS (
-        |  SELECT day, score AS threshold, CAST(sum(y) AS BIGINT) AS pos,
-        |    CAST(sum(1 - y) AS BIGINT) AS neg
-        |  FROM e GROUP BY day, score),
-        |r AS (
-        |  SELECT day, threshold,
-        |    CAST(sum(pos) OVER wd AS BIGINT) AS tp,
-        |    CAST(sum(neg) OVER wd AS BIGINT) AS fp,
-        |    CAST(sum(pos) OVER (PARTITION BY day) AS BIGINT) AS tot
-        |  FROM ps
-        |  WINDOW wd AS (PARTITION BY day ORDER BY threshold DESC
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)),
-        |c AS (
-        |  SELECT day, threshold,
-        |    CASE WHEN tot > 0 THEN
-        |      (2.0::DOUBLE * CAST(tp AS DOUBLE))
-        |      / (2.0::DOUBLE * CAST(tp AS DOUBLE) + CAST(fp AS DOUBLE)
-        |        + CAST(tot - tp AS DOUBLE)) END AS f1,
-        |    CASE WHEN tp + fp > 0 THEN
-        |      CAST(tp AS DOUBLE) / CAST(tp + fp AS DOUBLE) END AS p,
-        |    CASE WHEN tot > 0 THEN
-        |      CAST(tp AS DOUBLE) / CAST(tot AS DOUBLE) END AS r
-        |  FROM r),
-        |k AS (
-        |  SELECT day, threshold, f1, p, r,
-        |    row_number() OVER (PARTITION BY day
-        |      ORDER BY f1 DESC NULLS LAST, threshold DESC) AS rn
-        |  FROM c)
-        |SELECT day, threshold, f1, p AS "precision", r AS recall
-        |FROM k WHERE rn = 1 ORDER BY day""".stripMargin,
-    // Replays Stats.hhi: exact member revenue totals, HUGEINT squares
-    // VARCHAR-bridged past 2^53, one division.
-    "q_hhi" ->
-      """WITH j AS (
-        |  SELECT s.s_nationkey, l.l_suppkey,
-        |    CAST(round(CAST(l.l_extendedprice AS DOUBLE) * 100.0::DOUBLE)
-        |      AS BIGINT) AS x
-        |  FROM lineitem l JOIN supplier s ON l.l_suppkey = s.s_suppkey),
-        |pm AS (
-        |  SELECT s_nationkey, l_suppkey, CAST(sum(x) AS BIGINT) AS vm
-        |  FROM j GROUP BY s_nationkey, l_suppkey),
-        |g AS (
-        |  SELECT s_nationkey, CAST(count(*) AS BIGINT) AS n_members,
-        |    CAST(sum(vm) AS BIGINT) AS tot,
-        |    sum(CAST(vm AS HUGEINT) * vm) AS sq
-        |  FROM pm GROUP BY s_nationkey)
-        |SELECT s_nationkey, n_members,
-        |  CAST(tot AS DOUBLE) / 100.0::DOUBLE AS total,
-        |  CASE WHEN tot > 0 THEN
-        |    CAST(CAST(sq AS VARCHAR) AS DOUBLE)
-        |      / CAST(CAST(CAST(tot AS HUGEINT) * tot AS VARCHAR) AS DOUBLE)
-        |  END AS hhi
-        |FROM g ORDER BY s_nationkey""".stripMargin,
-    // Replays EventAnalytics.attribution: running conversion index off
-    // the (ts_us, event_id) order, next-conversion assignment, per-conv
-    // touch counts and rank flags, the 1/k linear credit.
-    "q_attribution" ->
-      """WITH e AS (
-        |  SELECT user_id, CAST(epoch_us(ts) AS BIGINT) AS ts_us,
-        |    event_id, event_type,
-        |    CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END AS ic
-        |  FROM events),
-        |i AS (
-        |  SELECT *,
-        |    sum(ic) OVER (PARTITION BY user_id ORDER BY ts_us, event_id
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) - ic + 1
-        |      AS conv_idx
-        |  FROM e),
-        |nc AS (
-        |  SELECT user_id, CAST(sum(ic) AS BIGINT) AS nconv
-        |  FROM e GROUP BY user_id),
-        |t AS (
-        |  SELECT i.user_id, i.conv_idx, i.ts_us, i.event_id, i.event_type
-        |  FROM i JOIN nc ON i.user_id = nc.user_id
-        |  WHERE i.ic = 0 AND i.conv_idx <= nc.nconv),
-        |r AS (
-        |  SELECT user_id, CAST(conv_idx AS BIGINT) AS conv_idx, ts_us,
-        |    event_id, event_type,
-        |    CAST(count(*) OVER (PARTITION BY user_id, conv_idx) AS BIGINT)
-        |      AS n_touches,
-        |    row_number() OVER (PARTITION BY user_id, conv_idx
-        |      ORDER BY ts_us, event_id) AS tr
-        |  FROM t)
-        |SELECT user_id, conv_idx, ts_us, event_id, event_type, n_touches,
-        |  1.0::DOUBLE / CAST(n_touches AS DOUBLE) AS credit_linear,
-        |  tr = 1 AS is_first_touch,
-        |  tr = n_touches AS is_last_touch
-        |FROM r ORDER BY user_id, ts_us, event_id""".stripMargin,
-    // Replays Eval.mcnemar: the same threshold classifiers and
-    // correctness flags, exact discordant counts, one-division trees.
-    "q_mcnemar" ->
-      """WITH e AS (
-        |  SELECT CAST(CAST(ts AS DATE) - DATE '1970-01-01' AS BIGINT) AS day,
-        |    (value > 50.0) = (event_type = 'purchase') AS oka,
-        |    (value > 100.0) = (event_type = 'purchase') AS okb
-        |  FROM events),
-        |g AS (
-        |  SELECT day, CAST(count(*) AS BIGINT) AS n,
-        |    CAST(sum(CASE WHEN oka AND NOT okb THEN 1 ELSE 0 END)
-        |      AS BIGINT) AS a_only,
-        |    CAST(sum(CASE WHEN NOT oka AND okb THEN 1 ELSE 0 END)
-        |      AS BIGINT) AS b_only
-        |  FROM e GROUP BY day)
-        |SELECT day, n, a_only, b_only,
-        |  CASE WHEN a_only + b_only > 0 THEN
-        |    (CAST(a_only - b_only AS DOUBLE)
-        |      * CAST(a_only - b_only AS DOUBLE))
-        |    / CAST(a_only + b_only AS DOUBLE) END AS mcnemar_chi2,
-        |  CASE WHEN a_only + b_only > 0 THEN
-        |    (CAST(abs(a_only - b_only) - 1 AS DOUBLE)
-        |      * CAST(abs(a_only - b_only) - 1 AS DOUBLE))
-        |    / CAST(a_only + b_only AS DOUBLE) END AS mcnemar_chi2_cc
-        |FROM g ORDER BY day""".stripMargin,
-    // Replays Eval.hosmerLemeshow: identical quantization, ntile over
-    // the same total order, exact decile sums, NaN-poisoned degenerate
-    // bins, the bin-ordered fold.
-    "q_hosmer_lemeshow" ->
-      """WITH e AS (
-        |  SELECT CAST(CAST(ts AS DATE) - DATE '1970-01-01' AS BIGINT) AS day,
-        |    CAST(round((value / 1000.0::DOUBLE) * 1000000.0::DOUBLE)
-        |      AS BIGINT) AS pi,
-        |    CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END AS y,
-        |    event_id
-        |  FROM events),
-        |b AS (
-        |  SELECT day, pi, y,
-        |    ntile(10) OVER (PARTITION BY day ORDER BY pi, event_id) AS bin
-        |  FROM e),
-        |pb AS (
-        |  SELECT day, bin, CAST(count(*) AS BIGINT) AS ng,
-        |    CAST(sum(y) AS BIGINT) AS og, CAST(sum(pi) AS BIGINT) AS sg
-        |  FROM b GROUP BY day, bin),
-        |t AS (
-        |  SELECT day, bin, ng, og,
-        |    coalesce(
-        |      CASE WHEN CAST(sg AS DOUBLE) / 1000000.0::DOUBLE
-        |            > 0.0::DOUBLE
-        |          AND CAST(sg AS DOUBLE) / 1000000.0::DOUBLE
-        |            < CAST(ng AS DOUBLE) THEN
-        |        ((CAST(og AS DOUBLE) - CAST(sg AS DOUBLE)
-        |            / 1000000.0::DOUBLE)
-        |          * (CAST(og AS DOUBLE) - CAST(sg AS DOUBLE)
-        |            / 1000000.0::DOUBLE))
-        |        / ((CAST(sg AS DOUBLE) / 1000000.0::DOUBLE)
-        |          * (1.0::DOUBLE - (CAST(sg AS DOUBLE)
-        |            / 1000000.0::DOUBLE) / CAST(ng AS DOUBLE)))
-        |      END, CAST('NaN' AS DOUBLE)) AS term
-        |  FROM pb),
-        |g AS (
-        |  SELECT day, CAST(sum(ng) AS BIGINT) AS n,
-        |    CAST(count(*) AS BIGINT) AS k_bins,
-        |    list_reduce(list_transform(
-        |        list(struct_pack(bin := bin, t := term) ORDER BY bin),
-        |        s -> s.t), (a, b) -> a + b) AS chi2
-        |  FROM t GROUP BY day)
-        |SELECT day, n, k_bins,
-        |  CASE WHEN k_bins = 10 AND NOT isnan(chi2) THEN chi2 END
-        |    AS hl_chi2
-        |FROM g ORDER BY day""".stripMargin,
-    // Replays Eval.logRank: per-time two-arm counts, before-window
-    // at-risk sizes, the hypergeometric (u, v) terms as fixed trees,
-    // and the t-ordered double accumulators as a recursive walk.
-    "q_logrank" ->
-      """WITH RECURSIVE u0 AS (
-        |  SELECT user_id,
-        |    min(epoch_us(ts) * 1000) AS t0,
-        |    min(CASE WHEN event_type = 'purchase'
-        |      THEN epoch_us(ts) * 1000 END) AS tp,
-        |    max(epoch_us(ts) * 1000) AS tl
-        |  FROM events GROUP BY user_id),
-        |d0 AS (
-        |  SELECT user_id % 3 AS band,
-        |    CASE WHEN user_id % 2 = 0 THEN 'even' ELSE 'odd' END AS arm,
-        |    (coalesce(tp, tl) - t0) // 86400000000000 AS dur,
-        |    CASE WHEN tp IS NOT NULL THEN 1 ELSE 0 END AS ev
-        |  FROM u0),
-        |pt AS (
-        |  SELECT band, dur AS t,
-        |    CAST(sum(CASE WHEN arm = 'even' THEN ev ELSE 0 END) AS BIGINT)
-        |      AS da,
-        |    CAST(sum(CASE WHEN arm <> 'even' THEN ev ELSE 0 END) AS BIGINT)
-        |      AS db,
-        |    CAST(sum(CASE WHEN arm = 'even' THEN 1 - ev ELSE 0 END)
-        |      AS BIGINT) AS ca,
-        |    CAST(sum(CASE WHEN arm <> 'even' THEN 1 - ev ELSE 0 END)
-        |      AS BIGINT) AS cb
-        |  FROM d0 GROUP BY band, dur),
-        |r AS (
-        |  SELECT band, t, da, db,
-        |    sum(da + ca) OVER (PARTITION BY band) AS ta,
-        |    sum(db + cb) OVER (PARTITION BY band) AS tb,
-        |    sum(da + ca) OVER (PARTITION BY band)
-        |      - coalesce(sum(da + ca) OVER (PARTITION BY band ORDER BY t
-        |          ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-        |      AS na,
-        |    sum(db + cb) OVER (PARTITION BY band)
-        |      - coalesce(sum(db + cb) OVER (PARTITION BY band ORDER BY t
-        |          ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-        |      AS nb,
-        |    row_number() OVER (PARTITION BY band ORDER BY t) AS rn,
-        |    count(*) OVER (PARTITION BY band) AS cnt
-        |  FROM pt),
-        |terms AS MATERIALIZED (
-        |  SELECT band, t, rn, cnt, ta, tb,
-        |    CAST(da AS DOUBLE) - CAST(da + db AS DOUBLE)
-        |      * (CAST(na AS DOUBLE) / CAST(na + nb AS DOUBLE)) AS ut,
-        |    CASE WHEN na + nb > 1 THEN
-        |      ((CAST(da + db AS DOUBLE)
-        |          * (CAST(na AS DOUBLE) / CAST(na + nb AS DOUBLE)))
-        |        * (1.0::DOUBLE
-        |          - CAST(na AS DOUBLE) / CAST(na + nb AS DOUBLE)))
-        |      * (CAST((na + nb) - (da + db) AS DOUBLE)
-        |          / CAST((na + nb) - 1 AS DOUBLE))
-        |    ELSE 0.0::DOUBLE END AS vt
-        |  FROM r),
-        |wk AS (
-        |  SELECT band, t, rn, cnt, ta, tb, ut AS u, vt AS v
-        |  FROM terms WHERE rn = 1
-        |  UNION ALL
-        |  SELECT s.band, s.t, s.rn, s.cnt, s.ta, s.tb,
-        |    (p.u + s.ut) AS u, (p.v + s.vt) AS v
-        |  FROM wk p JOIN terms s
-        |    ON s.band = p.band AND s.rn = p.rn + 1
-        |)
-        |SELECT band, CAST(ta AS BIGINT) AS n_a, CAST(tb AS BIGINT) AS n_b,
-        |  CASE WHEN ta >= 1 AND tb >= 1 THEN
-        |    u / sqrt(CASE WHEN v > 0.0::DOUBLE THEN v END) END AS logrank_z,
-        |  CASE WHEN ta >= 1 AND tb >= 1 THEN
-        |    (u / sqrt(CASE WHEN v > 0.0::DOUBLE THEN v END))
-        |    * (u / sqrt(CASE WHEN v > 0.0::DOUBLE THEN v END)) END
-        |    AS logrank_chi2
-        |FROM wk WHERE rn = cnt ORDER BY band""".stripMargin,
-    // Replays Eval.nelsonAalen: the q_kaplan_meier frame with the
-    // additive hazard walk — h = h_prev + d/n, one IEEE add per step in
-    // t-order (the recursive mirror of Spark's growing-frame fold).
-    "q_nelson_aalen" ->
-      """WITH RECURSIVE u AS (
-        |  SELECT user_id,
-        |    min(epoch_us(ts) * 1000) AS t0,
-        |    min(CASE WHEN event_type = 'purchase'
-        |      THEN epoch_us(ts) * 1000 END) AS tp,
-        |    max(epoch_us(ts) * 1000) AS tl
-        |  FROM events GROUP BY user_id),
-        |d AS (
-        |  SELECT user_id % 4 AS cohort,
-        |    (coalesce(tp, tl) - t0) // 86400000000000 AS dur,
-        |    CASE WHEN tp IS NOT NULL THEN 1 ELSE 0 END AS ev
-        |  FROM u),
-        |pt AS (
-        |  SELECT cohort, dur AS t, CAST(sum(ev) AS BIGINT) AS de,
-        |    CAST(sum(1 - ev) AS BIGINT) AS ce
-        |  FROM d GROUP BY cohort, dur),
-        |r AS MATERIALIZED (
-        |  SELECT cohort, t, de, ce,
-        |    CAST(sum(de + ce) OVER (PARTITION BY cohort)
-        |      - coalesce(sum(de + ce) OVER (PARTITION BY cohort ORDER BY t
-        |          ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-        |      AS BIGINT) AS n_risk,
-        |    row_number() OVER (PARTITION BY cohort ORDER BY t) AS rn
-        |  FROM pt),
-        |na AS (
-        |  SELECT cohort, t, de, ce, n_risk, rn,
-        |    CAST(de AS DOUBLE) / CAST(n_risk AS DOUBLE) AS h
-        |  FROM r WHERE rn = 1
-        |  UNION ALL
-        |  SELECT s.cohort, s.t, s.de, s.ce, s.n_risk, s.rn,
-        |    (p.h + CAST(s.de AS DOUBLE) / CAST(s.n_risk AS DOUBLE)) AS h
-        |  FROM na p JOIN r s
-        |    ON s.cohort = p.cohort AND s.rn = p.rn + 1
-        |)
-        |SELECT cohort, t, n_risk, de AS events, ce AS censored,
-        |  h AS hazard
-        |FROM na ORDER BY cohort, t""".stripMargin,
-    "q_kaplan_meier" ->
-      """WITH RECURSIVE u AS (
-        |  SELECT user_id,
-        |    min(epoch_us(ts) * 1000) AS t0,
-        |    min(CASE WHEN event_type = 'purchase'
-        |      THEN epoch_us(ts) * 1000 END) AS tp,
-        |    max(epoch_us(ts) * 1000) AS tl
-        |  FROM events GROUP BY user_id),
-        |d AS (
-        |  SELECT user_id % 4 AS cohort,
-        |    (coalesce(tp, tl) - t0) // 86400000000000 AS dur,
-        |    CASE WHEN tp IS NOT NULL THEN 1 ELSE 0 END AS ev
-        |  FROM u),
-        |pt AS (
-        |  SELECT cohort, dur AS t, CAST(sum(ev) AS BIGINT) AS de,
-        |    CAST(sum(1 - ev) AS BIGINT) AS ce
-        |  FROM d GROUP BY cohort, dur),
-        |r AS (
-        |  SELECT cohort, t, de, ce,
-        |    CAST(sum(de + ce) OVER (PARTITION BY cohort)
-        |      - coalesce(sum(de + ce) OVER (PARTITION BY cohort ORDER BY t
-        |          ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-        |      AS BIGINT) AS n_risk,
-        |    row_number() OVER (PARTITION BY cohort ORDER BY t) AS rn
-        |  FROM pt),
-        |f AS MATERIALIZED (
-        |  SELECT cohort, t, de, ce, n_risk, rn,
-        |    CAST(n_risk - de AS DOUBLE) / CAST(n_risk AS DOUBLE) AS fac
-        |  FROM r),
-        |km AS (
-        |  SELECT cohort, t, de, ce, n_risk, rn, fac AS st
-        |  FROM f WHERE rn = 1
-        |  UNION ALL
-        |  SELECT s.cohort, s.t, s.de, s.ce, s.n_risk, s.rn,
-        |    (h.st * s.fac) AS st
-        |  FROM km h JOIN f s ON s.cohort = h.cohort AND s.rn = h.rn + 1)
-        |SELECT cohort, t, n_risk, de AS events, ce AS censored,
-        |  st AS survival
-        |FROM km ORDER BY cohort, t""".stripMargin,
-    // Replays Stats.pacf: the ljungBox integer rho machinery for k=1..3,
-    // then the unrolled Durbin-Levinson trees with the same NULL-guarded
-    // denominators.
-    "q_pacf" ->
-      s"""WITH bars AS (
-         |$duckBarsSql
-         |), s AS (
-         |  SELECT l_suppkey,
-         |    CAST(round(close * 100.0::DOUBLE) AS BIGINT) AS x,
-         |${(1 to 3).map(k =>
-           s"    lag(CAST(round(close * 100.0::DOUBLE) AS BIGINT), $k) " +
-             s"OVER ws AS l$k").mkString(",\n")}
-         |  FROM bars
-         |  WINDOW ws AS (PARTITION BY l_suppkey ORDER BY l_shipdate)),
-         |g AS (
-         |  SELECT l_suppkey, CAST(count(*) AS BIGINT) AS n,
-         |    CAST(sum(x) AS HUGEINT) AS sx, CAST(sum(x*x) AS HUGEINT) AS s2,
-         |${(1 to 3).map(k =>
-           s"    CAST(sum(CASE WHEN l$k IS NOT NULL THEN x*l$k ELSE 0 END) AS HUGEINT) AS c$k,\n" +
-           s"    CAST(sum(CASE WHEN l$k IS NOT NULL THEN x+l$k ELSE 0 END) AS HUGEINT) AS p$k")
-           .mkString(",\n")}
-         |  FROM s GROUP BY l_suppkey),
-         |h AS (
-         |  SELECT l_suppkey, n,
-         |    CASE WHEN CAST(CAST(n AS HUGEINT) * (CAST(n AS HUGEINT) * s2 - sx * sx) AS DOUBLE) > 0.0::DOUBLE
-         |      THEN CAST(CAST(n AS HUGEINT) * (CAST(n AS HUGEINT) * s2 - sx * sx) AS DOUBLE) END AS bden,
-         |${(1 to 3).map(k =>
-           s"    CAST(CAST(n AS HUGEINT)*CAST(n AS HUGEINT)*c$k - CAST(n AS HUGEINT)*sx*p$k + (CAST(n AS HUGEINT) - $k)*sx*sx AS DOUBLE) AS a$k")
-           .mkString(",\n")}
-         |  FROM g),
-         |rho AS (
-         |  SELECT l_suppkey, n,
-         |    a1 / bden AS r1, a2 / bden AS r2, a3 / bden AS r3
-         |  FROM h),
-         |dl AS (
-         |  SELECT l_suppkey, n, r1, r3,
-         |    (r2 - r1 * r1) /
-         |      (CASE WHEN (1.0::DOUBLE - r1 * r1) <> 0.0::DOUBLE
-         |        THEN 1.0::DOUBLE - r1 * r1 END) AS phi22,
-         |    r2
-         |  FROM rho),
-         |dl2 AS (
-         |  SELECT l_suppkey, n, r1, r2, r3, phi22,
-         |    r1 - phi22 * r1 AS phi21
-         |  FROM dl)
-         |SELECT l_suppkey, n,
-         |  CASE WHEN n > 1 THEN r1 END AS pacf_1,
-         |  CASE WHEN n > 2 THEN phi22 END AS pacf_2,
-         |  CASE WHEN n > 3 THEN
-         |    (r3 - phi21 * r2 - phi22 * r1) /
-         |      (CASE WHEN (1.0::DOUBLE - phi21 * r1 - phi22 * r2) <> 0.0::DOUBLE
-         |        THEN 1.0::DOUBLE - phi21 * r1 - phi22 * r2 END)
-         |  END AS pacf_3
-         |FROM dl2 ORDER BY l_suppkey""".stripMargin,
-    // Replays Stats.theilSen on the bounded panel: rank-ordered pair
-    // slopes, the ⌊(m+1)/2⌋ / ⌊m/2⌋+1 middle selection, the residual
-    // median for the intercept.
-    "q_theil_sen" ->
-      s"""WITH bars AS (
-         |$duckBarsSql
-         |), sig AS (
-         |  SELECT l_suppkey, l_shipdate,
-         |    close - lag(close, 5) OVER ws AS mom,
-         |    lead(close, 1) OVER ws - close AS fwd
-         |  FROM bars WHERE l_suppkey < 100
-         |  WINDOW ws AS (PARTITION BY l_suppkey ORDER BY l_shipdate)),
-         |base AS (
-         |  SELECT l_shipdate,
-         |    CAST(round(mom * 100.0::DOUBLE) AS BIGINT) AS xi,
-         |    CAST(round(fwd * 100.0::DOUBLE) AS BIGINT) AS yi,
-         |    row_number() OVER (PARTITION BY l_shipdate ORDER BY
-         |      CAST(round(mom * 100.0::DOUBLE) AS BIGINT),
-         |      CAST(round(fwd * 100.0::DOUBLE) AS BIGINT)) AS rn
-         |  FROM sig WHERE mom IS NOT NULL AND fwd IS NOT NULL),
-         |slopes AS (
-         |  SELECT a.l_shipdate,
-         |    CAST(b.yi - a.yi AS DOUBLE) / CAST(b.xi - a.xi AS DOUBLE) AS sl,
-         |    a.rn AS ri, b.rn AS rj
-         |  FROM base a JOIN base b
-         |    ON a.l_shipdate = b.l_shipdate AND a.rn < b.rn
-         |  WHERE b.xi <> a.xi),
-         |ranked AS (
-         |  SELECT l_shipdate, sl,
-         |    row_number() OVER (PARTITION BY l_shipdate
-         |      ORDER BY sl, ri, rj) AS r,
-         |    count(*) OVER (PARTITION BY l_shipdate) AS m
-         |  FROM slopes),
-         |med AS (
-         |  SELECT l_shipdate, CAST(max(m) AS BIGINT) AS n_slopes,
-         |    sum(sl) / CAST(count(*) AS DOUBLE) AS ts_slope
-         |  FROM ranked
-         |  WHERE r = (m + 1 - (m + 1) % 2) // 2 OR r = (m - m % 2) // 2 + 1
-         |  GROUP BY l_shipdate),
-         |withs AS (
-         |  SELECT base.l_shipdate, base.rn,
-         |    CAST(base.yi AS DOUBLE) / 100.0::DOUBLE
-         |      - med.ts_slope * (CAST(base.xi AS DOUBLE) / 100.0::DOUBLE)
-         |      AS res,
-         |    med.n_slopes, med.ts_slope
-         |  FROM base LEFT JOIN med ON base.l_shipdate = med.l_shipdate),
-         |rres AS (
-         |  SELECT l_shipdate, res, n_slopes, ts_slope,
-         |    row_number() OVER (PARTITION BY l_shipdate ORDER BY res, rn)
-         |      AS r,
-         |    count(*) OVER (PARTITION BY l_shipdate) AS m
-         |  FROM withs)
-         |SELECT l_shipdate, CAST(max(m) AS BIGINT) AS n,
-         |  coalesce(max(n_slopes), 0) AS n_slopes,
-         |  max(ts_slope) AS ts_slope,
-         |  sum(res) / CAST(count(*) AS DOUBLE) AS ts_intercept
-         |FROM rres
-         |WHERE r = (m + 1 - (m + 1) % 2) // 2 OR r = (m - m % 2) // 2 + 1
-         |GROUP BY l_shipdate ORDER BY l_shipdate""".stripMargin,
-    // Replays Eval.agreement: the q_classification confusion counts, the
-    // n²-multiplied integer kappa form, the DECIMAL marginal product for
-    // MCC.
-    "q_agreement" ->
-      """WITH e AS (
-        |  SELECT CAST(CAST(ts AS DATE) - DATE '1970-01-01' AS BIGINT) AS day,
-        |    value AS s,
-        |    CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END AS y
-        |  FROM events),
-        |c AS (
-        |  SELECT day, CAST(count(*) AS BIGINT) AS n,
-        |    CAST(count(CASE WHEN s >= 35.0::DOUBLE AND y = 1 THEN 1 END) AS BIGINT) AS tp,
-        |    CAST(count(CASE WHEN s >= 35.0::DOUBLE AND y = 0 THEN 1 END) AS BIGINT) AS fp,
-        |    CAST(count(CASE WHEN s < 35.0::DOUBLE AND y = 1 THEN 1 END) AS BIGINT) AS fn,
-        |    CAST(count(CASE WHEN s < 35.0::DOUBLE AND y = 0 THEN 1 END) AS BIGINT) AS tn
-        |  FROM e GROUP BY day),
-        |k AS (
-        |  SELECT day, n, tp, fp, fn, tn,
-        |    CAST(tp + fp AS HUGEINT) * CAST(tp + fn AS HUGEINT)
-        |      + CAST(fn + tn AS HUGEINT) * CAST(fp + tn AS HUGEINT) AS e
-        |  FROM c)
-        |SELECT day, n,
-        |  CASE WHEN CAST(CAST(n AS HUGEINT) * CAST(n AS HUGEINT) - e AS DOUBLE) > 0.0::DOUBLE
-        |  THEN CAST(CAST(n AS HUGEINT) * CAST(tp + tn AS HUGEINT) - e AS DOUBLE)
-        |    / CAST(CAST(n AS HUGEINT) * CAST(n AS HUGEINT) - e AS DOUBLE)
-        |  END AS kappa,
-        |  CASE WHEN CAST(CAST(tp + fp AS HUGEINT) * CAST(tp + fn AS HUGEINT)
-        |      * CAST(tn + fp AS HUGEINT) * CAST(tn + fn AS HUGEINT) AS DOUBLE) > 0.0::DOUBLE
-        |  THEN CAST(CAST(tp AS HUGEINT) * CAST(tn AS HUGEINT)
-        |      - CAST(fp AS HUGEINT) * CAST(fn AS HUGEINT) AS DOUBLE)
-        |    / sqrt(CAST(CAST(tp + fp AS HUGEINT) * CAST(tp + fn AS HUGEINT)
-        |      * CAST(tn + fp AS HUGEINT) * CAST(tn + fn AS HUGEINT) AS DOUBLE))
-        |  END AS mcc
-        |FROM k ORDER BY day""".stripMargin,
-    // Replays Eval.logLoss: clamp literals baked via the strtod string
-    // path, ln-term trees quantized to 10 dp, exact BIGINT term sums.
-    "q_log_loss" ->
-      s"""WITH e AS (
-         |  SELECT CAST(CAST(ts AS DATE) - DATE '1970-01-01' AS BIGINT) AS day,
-         |    greatest(CAST('${1e-15.toString}' AS DOUBLE),
-         |      least(CAST('${(1.0 - 1e-15).toString}' AS DOUBLE),
-         |        value / 100.0::DOUBLE)) AS p,
-         |    CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END AS y
-         |  FROM events),
-         |t AS (
-         |  SELECT day,
-         |    CAST(round(-(CAST(y AS DOUBLE) * ln(p)
-         |      + (1.0::DOUBLE - CAST(y AS DOUBLE)) * ln(1.0::DOUBLE - p))
-         |      * 10000000000.0::DOUBLE) AS BIGINT) AS q
-         |  FROM e)
-         |SELECT day, CAST(count(*) AS BIGINT) AS n,
-         |  CAST(sum(q) AS DOUBLE) / CAST(count(*) AS DOUBLE)
-         |    / 10000000000.0::DOUBLE AS log_loss
-         |FROM t GROUP BY day ORDER BY day""".stripMargin,
-    // Replays Eval.rocCurve: per-score exact counts, descending
-    // cumulative sweep, single divisions.
-    "q_roc_curve" ->
-      """WITH e AS (
-        |  SELECT event_type, value AS threshold, user_id % 2 AS y
-        |  FROM events),
-        |ps AS (
-        |  SELECT event_type, threshold, CAST(count(*) AS BIGINT) AS n_at,
-        |    CAST(sum(y) AS BIGINT) AS pos,
-        |    CAST(sum(1 - y) AS BIGINT) AS neg
-        |  FROM e GROUP BY event_type, threshold),
-        |c AS (
-        |  SELECT event_type, threshold, n_at,
-        |    sum(pos) OVER (PARTITION BY event_type ORDER BY threshold DESC
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cpos,
-        |    sum(neg) OVER (PARTITION BY event_type ORDER BY threshold DESC
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cneg,
-        |    sum(pos) OVER (PARTITION BY event_type) AS tpos,
-        |    sum(neg) OVER (PARTITION BY event_type) AS tneg
-        |  FROM ps)
-        |SELECT event_type, threshold, n_at,
-        |  CASE WHEN tpos > 0 THEN CAST(cpos AS DOUBLE) / CAST(tpos AS DOUBLE)
-        |  END AS tpr,
-        |  CASE WHEN tneg > 0 THEN CAST(cneg AS DOUBLE) / CAST(tneg AS DOUBLE)
-        |  END AS fpr
-        |FROM c ORDER BY event_type, threshold""".stripMargin,
-    // Replays Rolling.hurst: integer R/S blocks on the 8/16/32/64
-    // ladder, 10-dp quantized block terms, the 4-point regression with
-    // the IDENTICAL baked ln(b) abscissas (strtod literals).
-    "q_hurst" -> {
-      val sizes = Seq(8, 16, 32, 64)
-      val us = sizes.map(b => math.log(b.toDouble))
-      val su = us.reduceLeft(_ + _)
-      val suu = us.map(u => u * u).reduceLeft(_ + _)
-      val denomLit = 4.0 * suu - su * su
-      def dl(x: Double) = s"CAST('${x.toString}' AS DOUBLE)"
-      val suv = sizes.zip(us)
-        .map { case (b, u) => s"${dl(u)} * round(ln(rs_$b), 10)" }
-        .mkString(" + ")
-      val sv = sizes.map(b => s"round(ln(rs_$b), 10)").mkString(" + ")
-      val okCond = sizes
-        .map(b => s"rs_$b IS NOT NULL AND rs_$b > 0.0::DOUBLE")
-        .mkString(" AND ")
-      s"""WITH bars AS (
-         |$duckBarsSql
-         |), s AS (
-         |  SELECT l_suppkey,
-         |    CAST(round(close * 100.0::DOUBLE) AS BIGINT) AS x,
-         |    row_number() OVER (PARTITION BY l_suppkey
-         |      ORDER BY l_shipdate) - 1 AS t
-         |  FROM bars),
-         |terms AS (
-         |  SELECT s.l_suppkey, bs.b, s.t // bs.b AS blk,
-         |    s.t % bs.b + 1 AS i, s.x
-         |  FROM s CROSS JOIN (VALUES (8), (16), (32), (64)) bs(b)),
-         |cum AS (
-         |  SELECT l_suppkey, b, blk, x,
-         |    CAST(b AS HUGEINT) * sum(x) OVER (PARTITION BY l_suppkey, b, blk
-         |      ORDER BY i ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-         |    - CAST(i AS HUGEINT) * sum(x) OVER (PARTITION BY l_suppkey, b, blk)
-         |      AS d
-         |  FROM terms),
-         |blocks AS (
-         |  SELECT l_suppkey, b, blk, CAST(count(*) AS BIGINT) AS cnt,
-         |    CAST(sum(x) AS HUGEINT) AS sb,
-         |    CAST(sum(x * x) AS HUGEINT) AS s2,
-         |    max(d) AS maxd, min(d) AS mind
-         |  FROM cum GROUP BY l_suppkey, b, blk),
-         |rs AS (
-         |  SELECT l_suppkey, b,
-         |    CAST(round(CAST(maxd - mind AS DOUBLE) /
-         |      sqrt(CAST(CAST(b AS HUGEINT) * s2 - sb * sb AS DOUBLE))
-         |      * 10000000000.0::DOUBLE) AS BIGINT) AS q
-         |  FROM blocks
-         |  WHERE cnt = b
-         |    AND CAST(CAST(b AS HUGEINT) * s2 - sb * sb AS DOUBLE) > 0.0::DOUBLE),
-         |persize AS (
-         |  SELECT l_suppkey, b,
-         |    CAST(sum(q) AS DOUBLE) / CAST(count(*) AS DOUBLE)
-         |      / 10000000000.0::DOUBLE AS rsv
-         |  FROM rs GROUP BY l_suppkey, b),
-         |wide AS (
-         |  SELECT l_suppkey,
-         |${sizes.map(b =>
-             s"    max(CASE WHEN b = $b THEN rsv END) AS rs_$b")
-             .mkString(",\n")}
-         |  FROM persize GROUP BY l_suppkey),
-         |ns AS (
-         |  SELECT l_suppkey, CAST(count(*) AS BIGINT) AS n
-         |  FROM s GROUP BY l_suppkey)
-         |SELECT ns.l_suppkey, ns.n,
-         |${sizes.map(b => s"  wide.rs_$b,").mkString("\n")}
-         |  CASE WHEN $okCond THEN
-         |    (4.0::DOUBLE * ($suv) - ${dl(su)} * ($sv)) / ${dl(denomLit)}
-         |  END AS hurst
-         |FROM ns LEFT JOIN wide ON ns.l_suppkey = wide.l_suppkey
-         |ORDER BY ns.l_suppkey""".stripMargin
-    },
-    // Replays Stats.ljungBox: five lag shifts on the keyed sort, exact
-    // HUGEINT rho numerators A_k = n²C_k − nSP_k + (n−k)S², B = n(nΣx²−S²),
-    // the same left-to-right k-fold for Q.
-    "q_ljung_box" ->
-      s"""WITH bars AS (
-         |$duckBarsSql
-         |), s AS (
-         |  SELECT l_suppkey,
-         |    CAST(round(close * 100.0::DOUBLE) AS BIGINT) AS x,
-         |${(1 to 5).map(k =>
-           s"    lag(CAST(round(close * 100.0::DOUBLE) AS BIGINT), $k) " +
-             s"OVER ws AS l$k").mkString(",\n")}
-         |  FROM bars
-         |  WINDOW ws AS (PARTITION BY l_suppkey ORDER BY l_shipdate)),
-         |g AS (
-         |  SELECT l_suppkey, CAST(count(*) AS BIGINT) AS n,
-         |    CAST(sum(x) AS HUGEINT) AS s, CAST(sum(x*x) AS HUGEINT) AS s2,
-         |${(1 to 5).map(k =>
-           s"    CAST(sum(CASE WHEN l$k IS NOT NULL THEN x*l$k ELSE 0 END) AS HUGEINT) AS c$k,\n" +
-           s"    CAST(sum(CASE WHEN l$k IS NOT NULL THEN x+l$k ELSE 0 END) AS HUGEINT) AS p$k")
-           .mkString(",\n")}
-         |  FROM s GROUP BY l_suppkey),
-         |h AS (
-         |  SELECT l_suppkey, n,
-         |    CAST(CAST(n AS HUGEINT) * (CAST(n AS HUGEINT) * s2 - s * s) AS DOUBLE) AS bden,
-         |${(1 to 5).map(k =>
-           s"    CAST(CAST(n AS HUGEINT)*CAST(n AS HUGEINT)*c$k - CAST(n AS HUGEINT)*s*p$k + (CAST(n AS HUGEINT) - $k)*s*s AS DOUBLE) AS a$k")
-           .mkString(",\n")}
-         |  FROM g)
-         |SELECT l_suppkey, n,
-         |  CASE WHEN n > 5 AND bden > 0.0::DOUBLE THEN
-         |    CAST(n AS DOUBLE) * (CAST(n AS DOUBLE) + 2.0::DOUBLE) *
-         |    (${(1 to 5).map(k =>
-              s"(a$k/bden)*(a$k/bden)/CAST(n - $k AS DOUBLE)")
-              .mkString(" + ")})
-         |  END AS q_stat
-         |FROM h ORDER BY l_suppkey""".stripMargin,
-    // Replays Stats.kendallTau on the bounded panel: quantized signals,
-    // rank-ordered self-join (rn_i < rn_j), exact pair-class counts, the
-    // tau-b tree.
-    "q_kendall" ->
-      s"""WITH bars AS (
-         |$duckBarsSql
-         |), sig AS (
-         |  SELECT l_suppkey, l_shipdate,
-         |    close - lag(close, 5) OVER ws AS mom,
-         |    lead(close, 1) OVER ws - close AS fwd
-         |  FROM bars WHERE l_suppkey < 100
-         |  WINDOW ws AS (PARTITION BY l_suppkey ORDER BY l_shipdate)),
-         |base AS (
-         |  SELECT l_shipdate,
-         |    CAST(round(mom * 100.0::DOUBLE) AS BIGINT) AS xi,
-         |    CAST(round(fwd * 100.0::DOUBLE) AS BIGINT) AS yi,
-         |    row_number() OVER (PARTITION BY l_shipdate ORDER BY
-         |      CAST(round(mom * 100.0::DOUBLE) AS BIGINT),
-         |      CAST(round(fwd * 100.0::DOUBLE) AS BIGINT)) AS rn
-         |  FROM sig WHERE mom IS NOT NULL AND fwd IS NOT NULL),
-         |pairs AS (
-         |  SELECT a.l_shipdate, a.xi - b.xi AS dx, a.yi - b.yi AS dy
-         |  FROM base a JOIN base b
-         |    ON a.l_shipdate = b.l_shipdate AND a.rn < b.rn),
-         |counts AS (
-         |  SELECT l_shipdate, CAST(count(*) AS BIGINT) AS n_pairs,
-         |    CAST(count(CASE WHEN dx <> 0 AND dy <> 0
-         |      AND (dx > 0) = (dy > 0) THEN 1 END) AS BIGINT) AS c,
-         |    CAST(count(CASE WHEN dx <> 0 AND dy <> 0
-         |      AND (dx > 0) <> (dy > 0) THEN 1 END) AS BIGINT) AS d,
-         |    CAST(count(CASE WHEN dx = 0 AND dy <> 0 THEN 1 END) AS BIGINT) AS tx,
-         |    CAST(count(CASE WHEN dx <> 0 AND dy = 0 THEN 1 END) AS BIGINT) AS ty
-         |  FROM pairs GROUP BY l_shipdate),
-         |ns AS (
-         |  SELECT l_shipdate, CAST(count(*) AS BIGINT) AS n
-         |  FROM base GROUP BY l_shipdate)
-         |SELECT ns.l_shipdate, ns.n,
-         |  coalesce(counts.n_pairs, 0) AS n_pairs,
-         |  CASE WHEN CAST(c + d + tx AS DOUBLE) > 0.0::DOUBLE
-         |        AND CAST(c + d + ty AS DOUBLE) > 0.0::DOUBLE
-         |  THEN CAST(c - d AS DOUBLE) /
-         |    sqrt(CAST(c + d + tx AS DOUBLE) * CAST(c + d + ty AS DOUBLE))
-         |  END AS tau
-         |FROM ns LEFT JOIN counts ON ns.l_shipdate = counts.l_shipdate
-         |ORDER BY ns.l_shipdate""".stripMargin,
-    // Replays the q_bh_adjust composition: the exact fractional-rank p,
-    // then BH's (p·m)/rank candidates and the suffix-min window.
-    "q_bh_adjust" ->
-      """WITH base AS (
-        |  SELECT event_type, event_id,
-        |    CAST(row_number() OVER (PARTITION BY event_type
-        |        ORDER BY value, event_id) - 1 AS DOUBLE) /
-        |      CAST(count(*) OVER (PARTITION BY event_type) - 1 AS DOUBLE)
-        |      AS p
-        |  FROM events),
-        |r AS (
-        |  SELECT event_type, event_id, p,
-        |    CAST(count(p) OVER (PARTITION BY event_type) AS DOUBLE) AS m,
-        |    CAST(row_number() OVER (PARTITION BY event_type
-        |      ORDER BY p, event_id) AS BIGINT) AS p_rank
-        |  FROM base),
-        |c AS (
-        |  SELECT event_type, event_id, p, p_rank,
-        |    least(1.0::DOUBLE, min((p * m) / CAST(p_rank AS DOUBLE)) OVER
-        |      (PARTITION BY event_type ORDER BY p, event_id
-        |       ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING)) AS p_adj
-        |  FROM r)
-        |SELECT event_type, event_id, p, p_rank, p_adj,
-        |  p_adj <= 0.05::DOUBLE AS significant
-        |FROM c ORDER BY event_type, event_id""".stripMargin,
-    // Replays Rolling.harmonicPower: the IDENTICAL baked 12-dp integer
-    // twiddle factors as a VALUES table joined on (period, t mod p),
-    // HUGEINT quadrature sums, the same centered power tree.
-    "q_harmonic" ->
-      s"""WITH bars AS (
-         |$duckBarsSql
-         |), tw(period, phase, ci, si) AS (VALUES
-         |${operators.Rolling.harmonicTwiddles(Seq(5, 7, 21))
-           .map(t => s"  (${t._1}, ${t._2}, ${t._3}::HUGEINT, ${t._4}::HUGEINT)")
-           .mkString(",\n")}),
-         |s AS (
-         |  SELECT l_suppkey,
-         |    CAST(round(close * 100.0::DOUBLE) AS BIGINT) AS x,
-         |    row_number() OVER (PARTITION BY l_suppkey
-         |      ORDER BY l_shipdate) - 1 AS t
-         |  FROM bars),
-         |terms AS (
-         |  SELECT s.l_suppkey, tw.period, s.x, tw.ci, tw.si
-         |  FROM s JOIN tw ON (s.t % tw.period) = tw.phase),
-         |g AS (
-         |  SELECT l_suppkey, period, CAST(count(*) AS BIGINT) AS n,
-         |    CAST(sum(x) AS HUGEINT) AS sx,
-         |    sum(CAST(x AS HUGEINT) * ci) AS sc,
-         |    sum(CAST(x AS HUGEINT) * si) AS ss,
-         |    sum(ci) AS tc, sum(si) AS ts
-         |  FROM terms GROUP BY l_suppkey, period),
-         |h AS (
-         |  -- VARCHAR bridge: DuckDB's HUGEINT→DOUBLE is a two-step
-         |  -- upper·2^64 + lower (rounds twice, off by ulps at ~2e19);
-         |  -- strtod is correctly rounded and matches Spark's
-         |  -- BigDecimal.doubleValue exactly (the NOTES.md literal rule)
-         |  SELECT l_suppkey, period, n,
-         |    CAST(CAST(CAST(n AS HUGEINT) * sc - sx * tc AS VARCHAR) AS DOUBLE) /
-         |      (CAST(n AS DOUBLE) * 100000000000000.0::DOUBLE) AS ca,
-         |    CAST(CAST(CAST(n AS HUGEINT) * ss - sx * ts AS VARCHAR) AS DOUBLE) /
-         |      (CAST(n AS DOUBLE) * 100000000000000.0::DOUBLE) AS cb
-         |  FROM g)
-         |SELECT l_suppkey, period, n,
-         |  CASE WHEN n >= 1 THEN (ca * ca + cb * cb) / CAST(n AS DOUBLE)
-         |  END AS power
-         |FROM h ORDER BY l_suppkey, period""".stripMargin,
-    // Replays Rolling.amihud: quantized close/volume, the per-bar
-    // two-division term tree, list_reduce over the date-ordered term
-    // list (the pinned-order fold).
-    "q_amihud" ->
-      s"""WITH bars AS (
-         |$duckBarsSql
-         |), s AS (
-         |  SELECT l_suppkey, l_shipdate,
-         |    CAST(round(close * 100.0::DOUBLE) AS BIGINT) AS c,
-         |    CAST(round(volume * 100.0::DOUBLE) AS BIGINT) AS v,
-         |    lag(CAST(round(close * 100.0::DOUBLE) AS BIGINT), 1)
-         |      OVER (PARTITION BY l_suppkey ORDER BY l_shipdate) AS pc
-         |  FROM bars),
-         |t AS (
-         |  SELECT l_suppkey, l_shipdate,
-         |    CASE WHEN pc IS NOT NULL AND pc > 0 AND c > 0 AND v > 0 THEN
-         |      CAST(abs(c - pc) AS DOUBLE) / CAST(pc AS DOUBLE) /
-         |        (CAST(CAST(c AS HUGEINT) * v AS DOUBLE) / 10000.0::DOUBLE)
-         |    END AS term
-         |  FROM s),
-         |g AS (
-         |  SELECT l_suppkey,
-         |    CAST(count(term) AS BIGINT) AS n_terms,
-         |    list(term ORDER BY l_shipdate) FILTER (WHERE term IS NOT NULL)
-         |      AS terms
-         |  FROM t GROUP BY l_suppkey)
-         |SELECT l_suppkey, n_terms,
-         |  CASE WHEN n_terms >= 1 THEN
-         |    list_reduce(list_prepend(0.0::DOUBLE, terms),
-         |      (acc, e) -> acc + e) / CAST(n_terms AS DOUBLE)
-         |  END AS illiq
-         |FROM g ORDER BY l_suppkey""".stripMargin,
-    // Replays Rolling.ohlcVolatility: per-bar rounded-ln terms, bar-order
-    // list folds for the three means, the Scala-folded 1/(4 ln 2) and
-    // 2 ln 2 − 1 literals shared verbatim, one rounded sqrt at the end.
-    "q_ohlc_vol" -> {
-      val park = operators.Rolling.parkinsonCoefLiteral
-      val gk = operators.Rolling.gkCoefLiteral
-      s"""WITH bars AS (
-         |$duckBarsSql
-         |), t AS (
-         |  SELECT l_suppkey, l_shipdate,
-         |    CASE WHEN open > 0 AND low > 0 AND close > 0 AND high >= low
-         |      THEN 1 END AS ok,
-         |    round(ln(high / low), 10) + 0.0::DOUBLE AS hl,
-         |    round(ln(close / open), 10) + 0.0::DOUBLE AS co,
-         |    round(ln(high / close), 10) + 0.0::DOUBLE AS hc,
-         |    round(ln(high / open), 10) + 0.0::DOUBLE AS ho,
-         |    round(ln(low / close), 10) + 0.0::DOUBLE AS lc,
-         |    round(ln(low / open), 10) + 0.0::DOUBLE AS lo
-         |  FROM bars),
-         |m AS (
-         |  SELECT l_suppkey, l_shipdate,
-         |    CASE WHEN ok = 1 THEN hl * hl END AS pk,
-         |    CASE WHEN ok = 1 THEN
-         |      0.5::DOUBLE * hl * hl - $gk::DOUBLE * co * co END AS gkt,
-         |    CASE WHEN ok = 1 THEN hc * ho + lc * lo END AS rs
-         |  FROM t),
-         |g AS (
-         |  SELECT l_suppkey, CAST(count(pk) AS BIGINT) AS n_bars,
-         |    list(pk ORDER BY l_shipdate) FILTER (WHERE pk IS NOT NULL)
-         |      AS pks,
-         |    list(gkt ORDER BY l_shipdate) FILTER (WHERE gkt IS NOT NULL)
-         |      AS gks,
-         |    list(rs ORDER BY l_shipdate) FILTER (WHERE rs IS NOT NULL)
-         |      AS rss
-         |  FROM m GROUP BY l_suppkey),
-         |v AS (
-         |  SELECT l_suppkey, n_bars,
-         |    $park::DOUBLE * (list_reduce(list_prepend(0.0::DOUBLE, pks),
-         |      (a, b) -> a + b) / CAST(n_bars AS DOUBLE)) AS mpk,
-         |    list_reduce(list_prepend(0.0::DOUBLE, gks), (a, b) -> a + b)
-         |      / CAST(n_bars AS DOUBLE) AS mgk,
-         |    list_reduce(list_prepend(0.0::DOUBLE, rss), (a, b) -> a + b)
-         |      / CAST(n_bars AS DOUBLE) AS mrs
-         |  FROM g)
-         |SELECT l_suppkey, n_bars,
-         |  CASE WHEN n_bars >= 1 AND mpk >= 0 THEN
-         |    round(sqrt(mpk), 10) + 0.0::DOUBLE END AS park_vol,
-         |  CASE WHEN n_bars >= 1 AND mgk >= 0 THEN
-         |    round(sqrt(mgk), 10) + 0.0::DOUBLE END AS gk_vol,
-         |  CASE WHEN n_bars >= 1 AND mrs >= 0 THEN
-         |    round(sqrt(mrs), 10) + 0.0::DOUBLE END AS rs_vol
-         |FROM v ORDER BY l_suppkey""".stripMargin
-    },
-    // Replays Rolling.corwinSchultz: lagged two-bar spans, every libm
-    // output rounded to 10 dp, the Scala-folded 3 − 2√2 literal, per-key
-    // span-order fold of the clamped spreads.
-    "q_cs_spread" -> {
-      val den = operators.Rolling.csDenLiteral
-      s"""WITH bars AS (
-         |$duckBarsSql
-         |), s AS (
-         |  SELECT l_suppkey, l_shipdate, high AS h, low AS lo,
-         |    lag(high, 1) OVER w AS ph, lag(low, 1) OVER w AS pl
-         |  FROM bars
-         |  WINDOW w AS (PARTITION BY l_suppkey ORDER BY l_shipdate)),
-         |a AS (
-         |  SELECT l_suppkey, l_shipdate,
-         |    CASE WHEN ph IS NOT NULL AND pl IS NOT NULL AND pl > 0
-         |      AND lo > 0 AND ph >= pl AND h >= lo THEN 1 END AS ok,
-         |    round(ln(ph / pl), 10) + 0.0::DOUBLE AS hl0,
-         |    round(ln(h / lo), 10) + 0.0::DOUBLE AS hl1,
-         |    round(ln(greatest(h, ph) / least(lo, pl)), 10)
-         |      + 0.0::DOUBLE AS gog
-         |  FROM s),
-         |b AS (
-         |  SELECT l_suppkey, l_shipdate, ok,
-         |    hl0 * hl0 + hl1 * hl1 AS beta, gog * gog AS gamma
-         |  FROM a),
-         |c AS (
-         |  SELECT l_suppkey, l_shipdate, ok,
-         |    ((round(sqrt(2.0::DOUBLE * beta), 10) + 0.0::DOUBLE)
-         |      - (round(sqrt(beta), 10) + 0.0::DOUBLE)) / $den::DOUBLE
-         |      - (round(sqrt(gamma / $den::DOUBLE), 10) + 0.0::DOUBLE)
-         |      AS alpha
-         |  FROM b),
-         |e AS (
-         |  SELECT l_suppkey, l_shipdate,
-         |    CASE WHEN ok = 1 THEN greatest(
-         |      2.0::DOUBLE * (ea - 1.0::DOUBLE) / (1.0::DOUBLE + ea),
-         |      0.0::DOUBLE) END AS spread
-         |  FROM (SELECT *, round(exp(alpha), 10) + 0.0::DOUBLE AS ea
-         |        FROM c) d),
-         |g AS (
-         |  SELECT l_suppkey, CAST(count(spread) AS BIGINT) AS n_spans,
-         |    list(spread ORDER BY l_shipdate)
-         |      FILTER (WHERE spread IS NOT NULL) AS ss
-         |  FROM e GROUP BY l_suppkey)
-         |SELECT l_suppkey, n_spans,
-         |  CASE WHEN n_spans >= 1 THEN
-         |    list_reduce(list_prepend(0.0::DOUBLE, ss), (a, b) -> a + b)
-         |      / CAST(n_spans AS DOUBLE) END AS cs_spread
-         |FROM g ORDER BY l_suppkey""".stripMargin
-    },
-    // Replays Rolling.kyleLambda at scale 2: exact scaled-BIGINT price
-    // deltas and tick-signed volumes, HUGEINT product sums, one division.
-    "q_kyle_lambda" ->
-      s"""WITH bars AS (
-         |$duckBarsSql
-         |), s AS (
-         |  SELECT l_suppkey,
-         |    CAST(round(close * 100.0::DOUBLE) AS BIGINT) AS c,
-         |    CAST(round(volume * 100.0::DOUBLE) AS BIGINT) AS v,
-         |    lag(CAST(round(close * 100.0::DOUBLE) AS BIGINT), 1)
-         |      OVER (PARTITION BY l_suppkey ORDER BY l_shipdate) AS pc
-         |  FROM bars),
-         |t AS (
-         |  SELECT l_suppkey,
-         |    CASE WHEN pc IS NOT NULL AND v >= 0 THEN c - pc END AS dp,
-         |    CASE WHEN pc IS NOT NULL AND v >= 0 THEN
-         |      CAST(sign(c - pc) AS BIGINT) * v END AS sv
-         |  FROM s),
-         |g AS (
-         |  SELECT l_suppkey, CAST(count(dp) AS BIGINT) AS n_terms,
-         |    sum(CAST(dp AS HUGEINT) * sv) AS num,
-         |    sum(CAST(sv AS HUGEINT) * sv) AS den
-         |  FROM t GROUP BY l_suppkey)
-         |SELECT l_suppkey, n_terms,
-         |  CASE WHEN n_terms >= 1 AND den > 0 THEN
-         |    CAST(num AS DOUBLE) / CAST(den AS DOUBLE) END AS kyle_lambda
-         |FROM g ORDER BY l_suppkey""".stripMargin,
-    // Replays Rolling.varianceRatio at q=5: 1e10-quantized log returns,
-    // exact HUGEINT demeaned sums multiplied through by n², the same
-    // pinned double trees for VR and z.
-    "q_variance_ratio" ->
-      s"""WITH bars AS (
-         |$duckBarsSql
-         |), r0 AS (
-         |  SELECT l_suppkey, l_shipdate, close,
-         |    lag(close, 1) OVER (PARTITION BY l_suppkey
-         |      ORDER BY l_shipdate) AS pc
-         |  FROM bars),
-         |r AS (
-         |  SELECT l_suppkey, l_shipdate,
-         |    CAST(round(ln(close / pc) * 10000000000.0::DOUBLE) AS BIGINT)
-         |      AS r
-         |  FROM r0 WHERE pc IS NOT NULL AND pc > 0 AND close > 0),
-         |s AS (
-         |  SELECT l_suppkey, r,
-         |    CASE WHEN row_number() OVER w >= 5 THEN
-         |      sum(r) OVER (w ROWS BETWEEN 4 PRECEDING AND CURRENT ROW)
-         |    END AS c
-         |  FROM r
-         |  WINDOW w AS (PARTITION BY l_suppkey ORDER BY l_shipdate)),
-         |g AS (
-         |  SELECT l_suppkey, CAST(count(r) AS BIGINT) AS n_rets,
-         |    sum(CAST(r AS HUGEINT)) AS sr,
-         |    sum(CAST(r AS HUGEINT) * r) AS q2,
-         |    sum(CAST(c AS HUGEINT)) AS sc,
-         |    sum(CAST(c AS HUGEINT) * c) AS sc2
-         |  FROM s GROUP BY l_suppkey),
-         |f AS (
-         |  SELECT l_suppkey, n_rets,
-         |    CAST(n_rets AS HUGEINT) * n_rets * q2
-         |      - CAST(n_rets AS HUGEINT) * sr * sr AS a,
-         |    CAST(n_rets AS HUGEINT) * n_rets * sc2
-         |      - 10::HUGEINT * n_rets * sr * sc
-         |      + CAST(n_rets - 4 AS HUGEINT) * 25 * sr * sr AS b
-         |  FROM g),
-         |v AS (
-         |  SELECT l_suppkey, n_rets,
-         |    CASE WHEN n_rets > 5 AND a > 0 THEN
-         |      CAST(b AS DOUBLE) * CAST(n_rets AS DOUBLE)
-         |        * (CAST(n_rets AS DOUBLE) - 1.0::DOUBLE)
-         |      / (CAST(a AS DOUBLE) * 5.0::DOUBLE
-         |        * (CAST(n_rets AS DOUBLE) - 4.0::DOUBLE)
-         |        * (CAST(n_rets AS DOUBLE) - 5.0::DOUBLE))
-         |    END AS vr
-         |  FROM f)
-         |SELECT l_suppkey, n_rets, vr,
-         |  (vr - 1.0::DOUBLE) /
-         |    (round(sqrt(72.0::DOUBLE /
-         |      (15.0::DOUBLE * CAST(n_rets AS DOUBLE))), 10) + 0.0::DOUBLE)
-         |    AS z_vr
-         |FROM v ORDER BY l_suppkey""".stripMargin,
-    // Replays Resample.seasonalDecompose at period 7 (odd: plain 7-row
-    // centered MA, D = 7): integer trend numerators, HUGEINT phase-mean
-    // sums, the ascending-phase list_reduce centering, the same final
-    // trees.
-    "q_seasonal" ->
-      s"""WITH bars AS (
-         |$duckBarsSql
-         |), base AS (
-         |  SELECT l_suppkey, l_shipdate,
-         |    CAST(round(close * 100.0::DOUBLE) AS BIGINT) AS x,
-         |    CAST((row_number() OVER ws - 1) % 7 AS INTEGER) AS phase,
-         |    CASE WHEN count(*) OVER (ws ROWS BETWEEN 3 PRECEDING AND
-         |        3 FOLLOWING) = 7
-         |      THEN sum(CAST(round(close * 100.0::DOUBLE) AS BIGINT))
-         |        OVER (ws ROWS BETWEEN 3 PRECEDING AND 3 FOLLOWING)
-         |    END AS num
-         |  FROM bars
-         |  WINDOW ws AS (PARTITION BY l_suppkey ORDER BY l_shipdate)),
-         |pm AS (
-         |  SELECT l_suppkey, phase,
-         |    CAST(sum(CAST(7 * x - num AS HUGEINT)) AS DOUBLE) /
-         |      (CAST(count(7 * x - num) AS DOUBLE) * 7.0::DOUBLE) AS sm
-         |  FROM base GROUP BY l_suppkey, phase),
-         |aj AS (
-         |  SELECT l_suppkey,
-         |    list_reduce(list_prepend(0.0::DOUBLE,
-         |      list(sm ORDER BY phase)), (acc, e) -> acc + e) /
-         |      CAST(count(*) AS DOUBLE) AS adj
-         |  FROM pm WHERE sm IS NOT NULL GROUP BY l_suppkey)
-         |SELECT base.l_suppkey, base.l_shipdate, base.phase,
-         |  CAST(base.x AS DOUBLE) / 100.0::DOUBLE AS value,
-         |  CAST(base.num AS DOUBLE) / 7.0::DOUBLE / 100.0::DOUBLE AS trend,
-         |  (pm.sm - aj.adj) / 100.0::DOUBLE AS seasonal,
-         |  ((CAST(base.x AS DOUBLE) * 7.0::DOUBLE -
-         |    CAST(base.num AS DOUBLE)) / 7.0::DOUBLE -
-         |    (pm.sm - aj.adj)) / 100.0::DOUBLE AS resid
-         |FROM base
-         |JOIN pm ON base.l_suppkey = pm.l_suppkey AND base.phase = pm.phase
-         |LEFT JOIN aj ON base.l_suppkey = aj.l_suppkey
-         |ORDER BY base.l_suppkey, base.l_shipdate""".stripMargin,
-    // Replays Stats.anovaF: per-(day, variant) exact scaled-BIGINT sums,
-    // variant-ordered term fold for B, the same fixed SSB/SSW/F trees.
-    "q_anova" ->
-      """WITH e AS (
-        |  SELECT CAST(CAST(ts AS DATE) - DATE '1970-01-01' AS BIGINT) AS day,
-        |    event_type AS v,
-        |    CAST(round(value * 100.0::DOUBLE) AS BIGINT) AS x
-        |  FROM events),
-        |pv AS (
-        |  SELECT day, v, CAST(count(*) AS BIGINT) AS ng,
-        |    CAST(sum(x) AS BIGINT) AS sg,
-        |    CAST(sum(x * x) AS BIGINT) AS qg
-        |  FROM e GROUP BY day, v),
-        |f AS (
-        |  SELECT day, CAST(count(*) AS BIGINT) AS k,
-        |    CAST(sum(ng) AS BIGINT) AS n,
-        |    CAST(CAST(sum(sg) AS BIGINT) AS DOUBLE) AS sd,
-        |    CAST(sum(qg) AS DOUBLE) AS q,
-        |    list_reduce(list_transform(
-        |        list(struct_pack(v := v, ng := ng, sg := sg) ORDER BY v),
-        |        s -> CAST(s.sg AS DOUBLE) * CAST(s.sg AS DOUBLE)
-        |          / CAST(s.ng AS DOUBLE)),
-        |      (a, b) -> a + b) AS b
-        |  FROM pv GROUP BY day),
-        |g AS (
-        |  SELECT day, k, n, CAST(k AS DOUBLE) AS kd, CAST(n AS DOUBLE) AS nd,
-        |    b - sd * sd / CAST(n AS DOUBLE) AS ssb, q - b AS ssw
-        |  FROM f)
-        |SELECT day, k, n,
-        |  CASE WHEN k >= 2 AND nd > kd AND ssw > 0.0::DOUBLE THEN
-        |    (ssb / (kd - 1.0::DOUBLE)) / (ssw / (nd - kd)) END AS f,
-        |  ssb AS ss_between, ssw AS ss_within
-        |FROM g ORDER BY day""".stripMargin,
-    // Replays Stats.kruskalWallis: pooled doubled average ranks (exact
-    // integers under ties), per-row t^2-1 tie term, variant-ordered
-    // fold of rg^2/ng, H = 3*fold/(N(N+1)) - 3(N+1), tie-corrected.
-    "q_kruskal" ->
-      """WITH e AS (
-        |  SELECT CAST(CAST(ts AS DATE) - DATE '1970-01-01' AS BIGINT) AS day,
-        |    event_type AS v,
-        |    CAST(round(value * 100.0::DOUBLE) AS BIGINT) AS x
-        |  FROM events),
-        |r AS (
-        |  SELECT day, v,
-        |    CAST(count(*) OVER (PARTITION BY day, x) AS BIGINT) AS t,
-        |    2 * CAST(rank() OVER (PARTITION BY day ORDER BY x) AS BIGINT)
-        |      + CAST(count(*) OVER (PARTITION BY day, x) AS BIGINT) - 1 AS r2
-        |  FROM e),
-        |pv AS (
-        |  SELECT day, v, CAST(count(*) AS BIGINT) AS ng,
-        |    CAST(sum(r2) AS BIGINT) AS rg,
-        |    CAST(sum(t * t - 1) AS BIGINT) AS tc
-        |  FROM r GROUP BY day, v),
-        |f AS (
-        |  SELECT day, CAST(count(*) AS BIGINT) AS k,
-        |    CAST(sum(ng) AS BIGINT) AS n,
-        |    CAST(CAST(sum(tc) AS BIGINT) AS DOUBLE) AS tcd,
-        |    list_reduce(list_transform(
-        |        list(struct_pack(v := v, ng := ng, rg := rg) ORDER BY v),
-        |        s -> CAST(s.rg AS DOUBLE) * CAST(s.rg AS DOUBLE)
-        |          / CAST(s.ng AS DOUBLE)),
-        |      (a, b) -> a + b) AS fold
-        |  FROM pv GROUP BY day),
-        |g AS (
-        |  SELECT day, k, n, CAST(n AS DOUBLE) AS nd, fold, tcd FROM f),
-        |h AS (
-        |  SELECT day, k, n,
-        |    3.0::DOUBLE * fold / (nd * (nd + 1.0::DOUBLE))
-        |      - 3.0::DOUBLE * (nd + 1.0::DOUBLE) AS hraw,
-        |    1.0::DOUBLE - tcd / (nd * nd * nd - nd) AS corr
-        |  FROM g)
-        |SELECT day, k, n,
-        |  CASE WHEN k >= 2 AND corr > 0.0::DOUBLE THEN hraw / corr END AS h
-        |FROM h ORDER BY day""".stripMargin,
-    // Replays Divergence.wasserstein1: per-side scaled-value counts,
-    // merged ECDF cumulatives, |cumA*n_b - cumB*n_a| * (next v - v)
-    // summed exactly, ONE division chain / (n_a*n_b) / 10^scale.
-    "q_wasserstein" ->
-      """WITH ca AS (
-        |  SELECT CAST(round(value * 100.0::DOUBLE) AS BIGINT) AS v,
-        |    count(*) AS na
-        |  FROM events WHERE event_type = 'purchase' GROUP BY 1),
-        |cb AS (
-        |  SELECT CAST(round(value * 100.0::DOUBLE) AS BIGINT) AS v,
-        |    count(*) AS nb
-        |  FROM events WHERE event_type = 'view' GROUP BY 1),
-        |comb AS (SELECT coalesce(ca.v, cb.v) AS v,
-        |           CAST(coalesce(na, 0) AS BIGINT) AS na,
-        |           CAST(coalesce(nb, 0) AS BIGINT) AS nb
-        |         FROM ca FULL OUTER JOIN cb ON ca.v = cb.v),
-        |cum AS (SELECT v,
-        |          CAST(sum(na) OVER wc AS HUGEINT) AS cna,
-        |          CAST(sum(nb) OVER wc AS HUGEINT) AS cnb,
-        |          lead(v) OVER (ORDER BY v) AS nxt
-        |        FROM comb
-        |        WINDOW wc AS (ORDER BY v
-        |          ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)),
-        |tot AS (SELECT CAST(sum(na) AS BIGINT) AS n_a,
-        |          CAST(sum(nb) AS BIGINT) AS n_b FROM comb)
-        |SELECT n_a, n_b,
-        |  CAST(sum(abs(cna * n_b - cnb * n_a) * (nxt - v)) AS DOUBLE)
-        |    / (CAST(n_a AS DOUBLE) * CAST(n_b AS DOUBLE)) / 100.0::DOUBLE AS w1
-        |FROM cum, tot WHERE nxt IS NOT NULL GROUP BY n_a, n_b""".stripMargin,
-    // Replays Eval.classificationReport at threshold 35 (boundary
-    // inclusive): exact confusion counts, one division per rate, F1 as
-    // 2tp/(2tp+fp+fn).
-    "q_classification" ->
-      """WITH e AS (
-        |  SELECT CAST(CAST(ts AS DATE) - DATE '1970-01-01' AS BIGINT) AS day,
-        |    value AS s,
-        |    CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END AS y
-        |  FROM events),
-        |c AS (
-        |  SELECT day, CAST(count(*) AS BIGINT) AS n,
-        |    count(CASE WHEN s >= 35.0::DOUBLE AND y = 1 THEN 1 END) AS tp,
-        |    count(CASE WHEN s >= 35.0::DOUBLE AND y = 0 THEN 1 END) AS fp,
-        |    count(CASE WHEN s < 35.0::DOUBLE AND y = 1 THEN 1 END) AS fn,
-        |    count(CASE WHEN s < 35.0::DOUBLE AND y = 0 THEN 1 END) AS tn
-        |  FROM e GROUP BY day)
-        |SELECT day, n, tp, fp, fn, tn,
-        |  CASE WHEN tp + fp > 0 THEN
-        |    CAST(tp AS DOUBLE) / (CAST(tp AS DOUBLE) + CAST(fp AS DOUBLE))
-        |  END AS precision,
-        |  CASE WHEN tp + fn > 0 THEN
-        |    CAST(tp AS DOUBLE) / (CAST(tp AS DOUBLE) + CAST(fn AS DOUBLE))
-        |  END AS recall,
-        |  CASE WHEN tp + fp + fn > 0 THEN
-        |    2.0::DOUBLE * CAST(tp AS DOUBLE) /
-        |      (2.0::DOUBLE * CAST(tp AS DOUBLE)
-        |        + CAST(fp AS DOUBLE) + CAST(fn AS DOUBLE))
-        |  END AS f1,
-        |  CAST(tp + tn AS DOUBLE) / CAST(n AS DOUBLE) AS accuracy
-        |FROM c ORDER BY day""".stripMargin,
-    // Replays Resample.interpolate over the daily bars: same planted
-    // nulls, backward/forward IGNORE NULLS anchors from the SAME rows,
-    // one fixed interpolation tree per gap row.
-    "q_interpolate" ->
-      s"""WITH bars AS (
-         |$duckBarsSql
-         |), src AS (
-         |  SELECT l_suppkey,
-         |    CAST(CAST(l_shipdate AS DATE) - DATE '1970-01-01' AS BIGINT) AS day,
-         |    CASE WHEN CAST(CAST(l_shipdate AS DATE) - DATE '1970-01-01' AS BIGINT) % 5 = 2
-         |      THEN NULL ELSE close END AS c
-         |  FROM bars),
-         |anch AS (
-         |  SELECT l_suppkey, day, c,
-         |    last_value(CASE WHEN c IS NOT NULL THEN day END IGNORE NULLS)
-         |      OVER wb AS pt,
-         |    last_value(c IGNORE NULLS) OVER wb AS pv,
-         |    first_value(CASE WHEN c IS NOT NULL THEN day END IGNORE NULLS)
-         |      OVER wf AS nt,
-         |    first_value(c IGNORE NULLS) OVER wf AS nv
-         |  FROM src
-         |  WINDOW wb AS (PARTITION BY l_suppkey ORDER BY day
-         |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING),
-         |    wf AS (PARTITION BY l_suppkey ORDER BY day
-         |      ROWS BETWEEN 1 FOLLOWING AND UNBOUNDED FOLLOWING))
-         |SELECT l_suppkey, day, c,
-         |  CASE WHEN c IS NOT NULL THEN c
-         |       WHEN pt IS NOT NULL AND nt IS NOT NULL THEN
-         |         pv + (nv - pv) *
-         |           (CAST(day - pt AS DOUBLE) / CAST(nt - pt AS DOUBLE))
-         |  END AS c_interp
-         |FROM anch ORDER BY l_suppkey, day""".stripMargin,
-    "q_text_stats" -> (duckTextStatsSql + "\nORDER BY doc_id"),
-    // Replays oovRate: same tokenizer, (count desc, token asc) top-K
-    // vocabulary, integer in/out counts, one final division.
-    "q_oov_rate" ->
-      """WITH tk AS (
-        |  SELECT doc_id,
-        |    unnest(list_filter(string_split_regex(lower(text), '[^a-z0-9]+'),
-        |      w -> w <> '')) AS tok
-        |  FROM documents),
-        |vc AS (SELECT tok FROM tk GROUP BY tok
-        |       ORDER BY count(*) DESC, tok ASC LIMIT 1000),
-        |per AS (
-        |  SELECT t.doc_id,
-        |    CAST(count(*) AS BIGINT) AS n_tokens,
-        |    CAST(sum(CASE WHEN v.tok IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_oov
-        |  FROM tk t LEFT JOIN vc v ON v.tok = t.tok
-        |  GROUP BY t.doc_id)
-        |SELECT d.doc_id,
-        |  COALESCE(p.n_tokens, 0) AS n_tokens,
-        |  COALESCE(p.n_oov, 0) AS n_oov,
-        |  CASE WHEN p.n_tokens > 0
-        |    THEN CAST(p.n_oov AS DOUBLE) / CAST(p.n_tokens AS DOUBLE)
-        |  END AS oov_rate
-        |FROM (SELECT DISTINCT doc_id FROM documents) d
-        |LEFT JOIN per p ON p.doc_id = d.doc_id
-        |ORDER BY d.doc_id""".stripMargin,
-    // Replays ngramDiversity: same tokenizer regex, 1-based inclusive
-    // list slices joined with ' ' (= concat_ws), exact count rollup.
-    "q_ngram_diversity" ->
-      """WITH tk AS (
-        |  SELECT source,
-        |    list_filter(string_split_regex(lower(text), '[^a-z0-9]+'),
-        |      w -> w <> '') AS ts
-        |  FROM documents),
-        |g AS (
-        |  SELECT source, nn.n,
-        |    unnest(list_transform(generate_series(1, len(ts) - nn.n + 1),
-        |      i -> array_to_string(ts[i:i+nn.n-1], ' '))) AS gram
-        |  FROM tk CROSS JOIN (VALUES (1), (2), (3)) nn(n)
-        |  WHERE len(ts) >= nn.n),
-        |pc AS (SELECT source, n, gram, count(*) AS c
-        |       FROM g GROUP BY source, n, gram)
-        |SELECT source, n,
-        |  CAST(sum(c) AS BIGINT) AS total_ngrams,
-        |  CAST(count(*) AS BIGINT) AS distinct_ngrams,
-        |  CAST(count(*) AS DOUBLE) / CAST(sum(c) AS DOUBLE) AS diversity
-        |FROM pc GROUP BY source, n ORDER BY source, n""".stripMargin,
-    "q_curation" ->
-      s"""WITH stats AS (
-         |$duckTextStatsSql
-         |),
-         |filtered AS (
-         |  SELECT d.doc_id, d.text
-         |  FROM documents d JOIN stats s ON s.doc_id = d.doc_id
-         |  WHERE s.lang_pred = 'en' AND s.quality_score >= 0.2 AND s.n_tokens >= 10
-         |),
-         |kept AS (
-         |  SELECT md5(text) AS text_md5, min(doc_id) AS keep_id
-         |  FROM filtered GROUP BY md5(text)
-         |)
-         |SELECT k.keep_id, k.text_md5, s.n_tokens, s.quality_score
-         |FROM kept k JOIN stats s ON s.doc_id = k.keep_id
-         |ORDER BY k.keep_id""".stripMargin,
-    "q_token_count" ->
-      s"""SELECT doc_id,
-         |  CAST(len(list_filter(string_split_regex(lower(text), '[^a-z0-9]+'), w -> w <> '')) AS INT) AS ws_tokens,
-         |  CAST(len(regexp_extract_all(text, '${operators.TextOps.BpeSplitRe}')) AS INT) AS bpe_tokens
-         |FROM documents ORDER BY doc_id""".stripMargin,
-    "q_media_features" -> duckMediaFeaturesSql,
-    "q_media_decode" -> duckMediaDecodeSql,
-    "q_media_resize" -> duckMediaResizeSql,
-    "q_media_video" -> duckMediaVideoSql,
-    // uncompressed DIB frames are lossless like motion-PNG, so the raw
-    // gate shares the pixel-exact histogram twin verbatim
-    "q_media_video_raw" -> duckMediaVideoSql,
-    // JPEG is lossy: the twin replays the deterministic CONTRACT of the
-    // fidelity decode (container geometry + the discretized error band,
-    // 0 for every document at quality 1.0) rather than exact pixels —
-    // see the gate comment; the Spark side computes the band from real
-    // decoded JPEG pixels.
-    "q_media_video_mjpeg" ->
-      s"""SELECT doc_id,
-         |  CAST(${operators.Multimodal.AviFrames} AS INT) AS n_frames,
-         |  CAST(${operators.Multimodal.PngSide} AS INT) AS width,
-         |  CAST(${operators.Multimodal.PngSide} AS INT) AS height,
-         |  CAST(0 AS INT) AS mae_band
-         |FROM documents ORDER BY doc_id""".stripMargin,
-    // The WAV gate's amplitude buckets reduce to the same byte // 16
-    // histogram (sample = (b−128)·256 → (s+32768)·16/65536 = b·16/256),
-    // so the image-decode oracle replays the audio round-trip verbatim.
-    "q_media_audio" -> duckMediaDecodeSql,
-    "q_bpe_tokens" -> duckBpeSql,
-    "q_doc_fingerprint" ->
-      s"""WITH $duckShingles,
-         |fp AS (SELECT doc_id, min(md5(shingle)) AS fingerprint FROM sh GROUP BY doc_id)
-         |SELECT d.doc_id, coalesce(fp.fingerprint, md5(lower(d.text))) AS fingerprint
-         |FROM documents d LEFT JOIN fp ON d.doc_id = fp.doc_id
-         |ORDER BY d.doc_id""".stripMargin,
-    "q_tfidf" ->
-      s"""WITH $duckToks,
-         |tf AS (SELECT doc_id, w AS term, count(*) AS tf FROM toks GROUP BY doc_id, w),
-         |dfq AS (SELECT term, count(*) AS df FROM tf GROUP BY term),
-         |n AS (SELECT count(*) AS n FROM documents)
-         |SELECT t.doc_id, t.term, t.tf, d.df,
-         |  CAST(t.tf AS DOUBLE) *
-         |    ((CAST(n.n AS DOUBLE) + 1.0::DOUBLE) / (CAST(d.df AS DOUBLE) + 1.0::DOUBLE)) AS tfidf
-         |FROM tf t JOIN dfq d USING (term) CROSS JOIN n
-         |WHERE t.doc_id < 20
-         |ORDER BY t.doc_id, t.term""".stripMargin,
-    // Replays TextOps.bm25's rational-idf arithmetic with the exact same
-    // IEEE operation order (every literal ::DOUBLE, parens mirroring the
-    // Column expression tree); n counts all docs, sum_dl all token rows.
-    "q_bm25" ->
-      s"""WITH $duckToks,
-         |tf AS (SELECT doc_id, w AS term, count(*) AS tf FROM toks GROUP BY doc_id, w),
-         |dl AS (SELECT doc_id, count(*) AS dl FROM toks GROUP BY doc_id),
-         |dfq AS (SELECT term, count(*) AS df FROM tf GROUP BY term),
-         |c AS (SELECT (SELECT count(*) FROM documents) AS n,
-         |             (SELECT count(*) FROM toks) AS sum_dl)
-         |SELECT t.doc_id, t.term, t.tf, l.dl, d.df,
-         |  ((CAST(c.n AS DOUBLE) - CAST(d.df AS DOUBLE) + 0.5::DOUBLE)
-         |     / (CAST(d.df AS DOUBLE) + 0.5::DOUBLE) + 1.0::DOUBLE)
-         |  * (CAST(t.tf AS DOUBLE) * (1.2::DOUBLE + 1.0::DOUBLE))
-         |  / (CAST(t.tf AS DOUBLE) + 1.2::DOUBLE * (1.0::DOUBLE - 0.75::DOUBLE
-         |       + 0.75::DOUBLE * (CAST(l.dl AS DOUBLE)
-         |           / (CAST(c.sum_dl AS DOUBLE) / CAST(c.n AS DOUBLE))))) AS bm25
-         |FROM tf t JOIN dl l USING (doc_id) JOIN dfq d USING (term) CROSS JOIN c
-         |WHERE t.doc_id < 20
-         |ORDER BY t.doc_id, t.term""".stripMargin,
-    "q_inverted_index" ->
-      s"""WITH $duckToks,
-         |tf AS (SELECT w AS term, doc_id, count(*) AS tf FROM toks GROUP BY w, doc_id)
-         |SELECT term, count(*) AS df,
-         |  string_agg(doc_id::VARCHAR || ':' || tf::VARCHAR, ' ' ORDER BY doc_id) AS postings
-         |FROM tf GROUP BY term HAVING count(*) >= 5
-         |ORDER BY term""".stripMargin,
-    "q_repetition" ->
-      s"""WITH $duckShingles,
-         |tot AS (SELECT doc_id, count(*) AS n FROM sh0 GROUP BY doc_id),
-         |dis AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id)
-         |SELECT d.doc_id,
-         |  CAST(coalesce(t.n, 0) AS INT) AS n_ngrams,
-         |  CAST(coalesce(di.n, 0) AS INT) AS n_distinct,
-         |  CASE WHEN coalesce(t.n, 0) > 0
-         |       THEN 1.0::DOUBLE - CAST(di.n AS DOUBLE) / CAST(t.n AS DOUBLE)
-         |       ELSE 0.0::DOUBLE END AS rep_ratio
-         |FROM documents d
-         |LEFT JOIN tot t ON t.doc_id = d.doc_id
-         |LEFT JOIN dis di ON di.doc_id = d.doc_id
-         |ORDER BY d.doc_id""".stripMargin,
-    // Replays TextOps.qualityRules: same whitespace class (spelled out — no
-    // \s, whose membership differs between Java regex and RE2), same rule
-    // thresholds, same guarded IEEE divisions.
-    "q_quality_rules" ->
-      s"""WITH pre AS (
-         |  SELECT doc_id, text,
-         |    list_filter(string_split_regex(text, '[ \\t\\n\\r\\f]+'), w -> w <> '') AS words,
-         |    string_split(text, chr(10)) AS lines,
-         |    list_filter(string_split_regex(lower(text), '[^a-z0-9]+'), w -> w <> '') AS toks
-         |  FROM documents
-         |), m AS (
-         |  SELECT doc_id,
-         |    CAST(len(words) AS INT) AS n_words,
-         |    CAST(len(lines) AS INT) AS n_lines,
-         |    CAST(length(regexp_replace(text, '[ \\t\\n\\r\\f]', '', 'g')) AS INT) AS sum_lens,
-         |    CAST(len(regexp_extract_all(text, '#|\\.\\.\\.')) AS INT) AS n_sym,
-         |    CAST(len(list_filter(lines, l -> regexp_matches(l, '^[ \\t]*[-*\u2022]'))) AS INT) AS n_bullet,
-         |    CAST(len(list_filter(lines, l -> regexp_matches(l, '\\.\\.\\.[ \\t]*$$'))) AS INT) AS n_ellipsis,
-         |    CAST(len(list_filter(words, w -> regexp_matches(w, '[A-Za-z]'))) AS INT) AS n_alpha,
-         |    CAST(len(list_filter(toks, w -> list_contains($duckStopwordsEn, w))) AS INT) AS stop_hits
-         |  FROM pre
-         |), v AS (
-         |  SELECT doc_id, n_words,
-         |    CASE WHEN n_words > 0 THEN CAST(sum_lens AS DOUBLE)/CAST(n_words AS DOUBLE) ELSE 0.0::DOUBLE END AS mean_word_len,
-         |    CASE WHEN n_words > 0 THEN CAST(n_sym AS DOUBLE)/CAST(n_words AS DOUBLE) ELSE 0.0::DOUBLE END AS symbol_ratio,
-         |    CAST(n_bullet AS DOUBLE)/CAST(n_lines AS DOUBLE) AS bullet_frac,
-         |    CAST(n_ellipsis AS DOUBLE)/CAST(n_lines AS DOUBLE) AS ellipsis_frac,
-         |    CASE WHEN n_words > 0 THEN CAST(n_alpha AS DOUBLE)/CAST(n_words AS DOUBLE) ELSE 0.0::DOUBLE END AS alpha_frac,
-         |    stop_hits
-         |  FROM m
-         |)
-         |SELECT doc_id, n_words, mean_word_len, symbol_ratio, bullet_frac,
-         |  ellipsis_frac, alpha_frac, stop_hits,
-         |  (n_words BETWEEN 50 AND 100000
-         |    AND mean_word_len BETWEEN 3.0::DOUBLE AND 10.0::DOUBLE
-         |    AND symbol_ratio < 0.1::DOUBLE
-         |    AND bullet_frac < 0.9::DOUBLE
-         |    AND ellipsis_frac < 0.3::DOUBLE
-         |    AND alpha_frac > 0.8::DOUBLE
-         |    AND stop_hits >= 2) AS keep
-         |FROM v ORDER BY doc_id""".stripMargin,
-    // Replays TextOps.cleanText verbatim — every pattern uses only
-    // constructs with identical Java-regex/RE2 semantics.
-    "q_clean_text" ->
-      """SELECT doc_id,
-        |  trim(regexp_replace(regexp_replace(regexp_replace(regexp_replace(regexp_replace(text,
-        |    '<[^>]*>', ' ', 'g'),
-        |    'https?://[^ \t\n\r\f]+', '<URL>', 'g'),
-        |    '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}', '<EMAIL>', 'g'),
-        |    '[\x00-\x08\x0b\x0e-\x1f\x7f]', '', 'g'),
-        |    '[ \t\n\r\f]+', ' ', 'g')) AS clean_text
-        |FROM documents ORDER BY doc_id""".stripMargin,
-    // Replays Pii.piiStats over the synthetic-PII corpus: identical
-    // construction (duckPii ≡ piiTestText), identical patterns — all
-    // constructs with the same Java-regex/RE2 semantics.
-    "q_pii_stats" ->
-      s"""WITH $duckPii
-         |SELECT doc_id,
-         |  CAST(len(regexp_extract_all(text, '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\\.[A-Za-z]{2,}')) AS INT) AS n_emails,
-         |  CAST(len(regexp_extract_all(text, '\\b[0-9]{3}-[0-9]{2}-[0-9]{4}\\b')) AS INT) AS n_ssns,
-         |  CAST(len(regexp_extract_all(text, '(\\([0-9]{3}\\) |\\b[0-9]{3}-)[0-9]{3}-[0-9]{4}\\b')) AS INT) AS n_phones,
-         |  CAST(len(regexp_extract_all(text, '\\b[0-9]{1,3}\\.[0-9]{1,3}\\.[0-9]{1,3}\\.[0-9]{1,3}\\b')) AS INT) AS n_ips,
-         |  (len(regexp_extract_all(text, '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\\.[A-Za-z]{2,}'))
-         |   + len(regexp_extract_all(text, '\\b[0-9]{3}-[0-9]{2}-[0-9]{4}\\b'))
-         |   + len(regexp_extract_all(text, '(\\([0-9]{3}\\) |\\b[0-9]{3}-)[0-9]{3}-[0-9]{4}\\b'))
-         |   + len(regexp_extract_all(text, '\\b[0-9]{1,3}\\.[0-9]{1,3}\\.[0-9]{1,3}\\.[0-9]{1,3}\\b')) > 0) AS has_pii
-         |FROM pii ORDER BY doc_id""".stripMargin,
-    "q_pii_redact" ->
-      s"""WITH $duckPii
-         |SELECT doc_id,
-         |  regexp_replace(regexp_replace(regexp_replace(regexp_replace(text,
-         |    '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\\.[A-Za-z]{2,}', '<EMAIL>', 'g'),
-         |    '\\b[0-9]{3}-[0-9]{2}-[0-9]{4}\\b', '<SSN>', 'g'),
-         |    '(\\([0-9]{3}\\) |\\b[0-9]{3}-)[0-9]{3}-[0-9]{4}\\b', '<PHONE>', 'g'),
-         |    '\\b[0-9]{1,3}\\.[0-9]{1,3}\\.[0-9]{1,3}\\.[0-9]{1,3}\\b', '<IP>', 'g') AS redacted
-         |FROM pii ORDER BY doc_id""".stripMargin,
-    // Replays Pii.kAnonymity on the (lang, source, 500-char bucket) QI:
-    // class sizes via GROUP BY, joined back null-safely (IS NOT DISTINCT
-    // FROM) so a NULL QI forms its own class — mirroring the <=> join.
-    "q_k_anonymity" ->
-      """WITH base AS (
-        |  SELECT doc_id, lang, source,
-        |    CAST(floor(CAST(n_chars AS DOUBLE) / 500.0) AS BIGINT) AS len_bucket
-        |  FROM documents
-        |), sizes AS (
-        |  SELECT lang, source, len_bucket, count(*) AS anon_set
-        |  FROM base GROUP BY lang, source, len_bucket
-        |)
-        |SELECT b.doc_id, b.lang, b.source, b.len_bucket, s.anon_set,
-        |  s.anon_set < 5 AS below_k
-        |FROM base b JOIN sizes s
-        |  ON b.lang IS NOT DISTINCT FROM s.lang
-        | AND b.source IS NOT DISTINCT FROM s.source
-        | AND b.len_bucket IS NOT DISTINCT FROM s.len_bucket
-        |ORDER BY doc_id""".stripMargin,
-    "q_l_diversity" ->
-      """WITH base AS (
-        |  SELECT doc_id, lang, source,
-        |    CAST(floor(CAST(n_chars AS DOUBLE) / 500.0) AS BIGINT) AS len_bucket
-        |  FROM documents
-        |), div AS (
-        |  SELECT lang, len_bucket, count(DISTINCT source) AS distinct_sensitive
-        |  FROM base GROUP BY lang, len_bucket
-        |)
-        |SELECT b.doc_id, b.lang, b.len_bucket, d.distinct_sensitive,
-        |  d.distinct_sensitive < 2 AS below_l
-        |FROM base b JOIN div d
-        |  ON b.lang IS NOT DISTINCT FROM d.lang
-        | AND b.len_bucket IS NOT DISTINCT FROM d.len_bucket
-        |ORDER BY doc_id""".stripMargin,
-    // Replays Dedup.sortedNeighborhoodPairs: block on the first 8 chars,
-    // rank by (text, doc_id) within block, pair at rank distance <= 4,
-    // verify with exact word-3-gram Jaccard >= 0.3 off the shared shingle
-    // CTEs. id_a is the lower-RANK row (not lower id), as in the operator.
-    "q_sorted_neighborhood" ->
-      s"""WITH $duckShingles,
-         |ranked AS (
-         |  SELECT doc_id, substr(text, 1, 8) AS snm_block,
-         |    row_number() OVER (PARTITION BY substr(text, 1, 8)
-         |      ORDER BY text, doc_id) AS rn
-         |  FROM documents
-         |),
-         |cand AS (
-         |  SELECT a.doc_id AS id_a, b.doc_id AS id_b
-         |  FROM ranked a JOIN ranked b
-         |    ON a.snm_block = b.snm_block
-         |   AND b.rn > a.rn AND b.rn <= a.rn + 4
-         |),
-         |${duckJaccardTail(0.3)}""".stripMargin,
-    // Replays Similarity.randomProjection 64→16: the IDENTICAL
-    // deterministic ±1 matrix (Similarity.signMatrix, baked in below as
-    // literals) dotted against each embedding with the same left-to-right
-    // fold, scaled by 1/√16 = 0.25 (exact in binary — order-insensitive).
-    "q_embed_project" ->
-      s"""WITH signs(dim_idx, s) AS (VALUES
-         |$duckSignRows
-         |)
-         |SELECT e.vec_id, g.dim_idx,
-         |  0.25 * ${cosSql("e.embedding", "g.s")} AS v
-         |FROM embeddings e CROSS JOIN signs g
-         |ORDER BY vec_id, dim_idx""".stripMargin,
-    // The DEFLATE byte count comes from a committed golden fixture
-    // (Python-zlib-generated, bit-equal to the JDK Deflater — see the
-    // query comment); DuckDB recomputes the UTF-8 byte length and the
-    // ratio division, so only the codec output itself is pinned.
-    "q_compress_ratio" ->
-      // fixture keyed by md5(text), not doc_id: the sf0.001/sf0.01 corpora
-      // share doc_id ranges with DIFFERENT text, so a doc_id-keyed fixture
-      // was only valid at the SF it was generated from (r15 finding); the
-      // md5 key makes one committed fixture valid at every SF, bit-equal
-      // to the old fixture's sf0.01 values (cross-checked at regeneration)
-      """SELECT d.doc_id,
-        |  CAST(coalesce(strlen(d.text), 0) AS BIGINT) AS n_bytes,
-        |  CASE WHEN coalesce(strlen(d.text), 0) = 0 THEN 1.0::DOUBLE
-        |       ELSE CAST(g.n_deflate AS DOUBLE) / CAST(strlen(d.text) AS DOUBLE)
-        |  END AS compress_ratio
-        |FROM documents d
-        |JOIN '/root/repo/src/test/resources/golden/deflate_sizes_by_md5.parquet' g
-        |  ON md5(coalesce(d.text, '')) = g.text_md5
-        |ORDER BY d.doc_id""".stripMargin,
-    "q_pack" ->
-      // CAST around the window sum: DuckDB sum(INTEGER) returns HUGEINT
-      """WITH base AS (
-        |  SELECT doc_id,
-        |    CAST(doc_id % 8 AS INT) AS shard,
-        |    CAST(len(list_filter(string_split_regex(lower(text), '[^a-z0-9]+'), w -> w <> '')) AS INT) AS n_tokens
-        |  FROM documents
-        |), cum AS (
-        |  SELECT doc_id, shard, n_tokens,
-        |    CAST(sum(n_tokens) OVER (PARTITION BY shard ORDER BY doc_id
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT)
-        |      - CAST(n_tokens AS BIGINT) AS token_start
-        |  FROM base
-        |)
-        |SELECT doc_id, shard, n_tokens, token_start,
-        |  token_start // 512 AS pack_id,
-        |  token_start % 512 AS offset_in_pack
-        |FROM cum ORDER BY doc_id""".stripMargin,
-    "q_contamination" ->
-      s"""WITH ${duckShinglesN(8)},
-         |probe AS (SELECT DISTINCT shingle FROM shn WHERE doc_id % 20 = 0),
-         |hits AS (
-         |  SELECT s.doc_id, count(*) AS n_contaminated
-         |  FROM shn s JOIN probe p ON p.shingle = s.shingle
-         |  GROUP BY s.doc_id
-         |)
-         |SELECT d.doc_id, coalesce(h.n_contaminated, 0) AS n_contaminated
-         |FROM documents d LEFT JOIN hits h ON h.doc_id = d.doc_id
-         |ORDER BY d.doc_id""".stripMargin,
-    // Replays TextOps.chunks at (32, 8): contiguous token rank via
-    // row_number (duckToks' pos has gaps where empties were filtered),
-    // chunk starts from an integer range, slices re-joined in rank order.
-    "q_chunk" ->
-      s"""WITH $duckToks,
-         |tr AS (SELECT doc_id, w, row_number() OVER (PARTITION BY doc_id ORDER BY pos) AS rpos FROM toks),
-         |nt AS (SELECT doc_id, count(*) AS n FROM tr GROUP BY doc_id),
-         |starts AS (
-         |  SELECT doc_id, n, unnest(range(0, greatest(n - 8 - 1, 0) + 1, 24)) AS s
-         |  FROM nt
-         |)
-         |SELECT t.doc_id, CAST(s.s // 24 AS INT) AS chunk_id,
-         |  CAST(least(32, s.n - s.s) AS INT) AS n_tokens,
-         |  string_agg(t.w, ' ' ORDER BY t.rpos) AS chunk_text
-         |FROM starts s JOIN tr t
-         |  ON t.doc_id = s.doc_id AND t.rpos BETWEEN s.s + 1 AND s.s + 32
-         |GROUP BY t.doc_id, s.s, s.n
-         |ORDER BY t.doc_id, chunk_id""".stripMargin,
-    // Replays Dedup.spanDedup at n=8. The winner aggregation is expressed as
-    // row_number here (first occurrence by (doc_id, chunk_id)) — identical
-    // result to Spark's min(struct) winner.
-    "q_span_dedup" ->
-      s"""WITH $duckToks,
-         |tr AS (SELECT doc_id, w, row_number() OVER (PARTITION BY doc_id ORDER BY pos) AS rpos FROM toks),
-         |spans AS (
-         |  SELECT doc_id, CAST((rpos - 1) // 8 AS INT) AS chunk_id,
-         |    string_agg(w, ' ' ORDER BY rpos) AS chunk_text
-         |  FROM tr GROUP BY doc_id, (rpos - 1) // 8
-         |),
-         |marked AS (
-         |  SELECT doc_id, chunk_id, chunk_text,
-         |    row_number() OVER (PARTITION BY chunk_text ORDER BY doc_id, chunk_id) = 1 AS keep
-         |  FROM spans
-         |),
-         |agg AS (
-         |  SELECT doc_id, count(*) AS n_spans,
-         |    count(CASE WHEN keep THEN 1 END) AS n_kept,
-         |    coalesce(string_agg(CASE WHEN keep THEN chunk_text END, ' ' ORDER BY chunk_id), '') AS text_dedup
-         |  FROM marked GROUP BY doc_id
-         |)
-         |SELECT d.doc_id, coalesce(a.n_spans, 0) AS n_spans,
-         |  coalesce(a.n_kept, 0) AS n_kept, coalesce(a.text_dedup, '') AS text_dedup
-         |FROM documents d LEFT JOIN agg a ON a.doc_id = d.doc_id
-         |ORDER BY d.doc_id""".stripMargin,
-    // Replays Dedup.substringDedup at minLen=30, stride=10. Spark's winner
-    // is min(struct(doc_id, pos)); the oracle expresses the same canonical
-    // first occurrence as row_number() = 1 over (doc_id, pos) order.
-    "q_substring_dedup" ->
-      """WITH p AS (
-        |  SELECT doc_id, unnest(generate_series(1, length(text) - 29, 10)) AS pos, text
-        |  FROM documents WHERE length(text) >= 30
-        |),
-        |occ AS (
-        |  SELECT doc_id, pos, substring(text, pos, 30) AS gram FROM p
-        |),
-        |marked AS (
-        |  SELECT doc_id, pos,
-        |    count(*) OVER (PARTITION BY gram) AS cnt,
-        |    row_number() OVER (PARTITION BY gram ORDER BY doc_id, pos) AS rn
-        |  FROM occ
-        |),
-        |agg AS (
-        |  SELECT doc_id, count(*) AS n_grams,
-        |    count(CASE WHEN cnt >= 2 AND rn > 1 THEN 1 END) AS n_dup
-        |  FROM marked GROUP BY doc_id
-        |)
-        |SELECT d.doc_id, coalesce(a.n_grams, 0) AS n_grams,
-        |  coalesce(a.n_dup, 0) AS n_dup
-        |FROM documents d LEFT JOIN agg a ON a.doc_id = d.doc_id
-        |ORDER BY d.doc_id""".stripMargin,
-    // Replays Dedup.substringCut per-CHARACTER: a char survives iff no
-    // duplicate-marked span covers it — the anti-join formulation needs no
-    // interval merge and is independent of the Spark side's sweep+splice,
-    // so it cross-checks the merge logic rather than re-deriving it. Only
-    // viable at test scale (one row per character).
-    "q_substring_cut" ->
-      """WITH p AS (
-        |  SELECT doc_id, unnest(generate_series(1, length(text) - 29, 10)) AS pos, text
-        |  FROM documents WHERE length(text) >= 30
-        |),
-        |occ AS (
-        |  SELECT doc_id, pos, substring(text, pos, 30) AS gram FROM p
-        |),
-        |marked AS (
-        |  SELECT doc_id, pos,
-        |    count(*) OVER (PARTITION BY gram) AS cnt,
-        |    row_number() OVER (PARTITION BY gram ORDER BY doc_id, pos) AS rn
-        |  FROM occ
-        |),
-        |dup AS (
-        |  SELECT doc_id, pos AS s, pos + 29 AS e FROM marked
-        |  WHERE cnt >= 2 AND rn > 1
-        |),
-        |chars AS (
-        |  SELECT d.doc_id, t.i AS cpos, substring(d.text, t.i, 1) AS ch
-        |  FROM documents d, unnest(generate_series(1, length(d.text))) AS t(i)
-        |),
-        |kept AS (
-        |  SELECT c.doc_id, c.cpos, c.ch
-        |  FROM chars c LEFT JOIN dup u
-        |    ON u.doc_id = c.doc_id AND c.cpos BETWEEN u.s AND u.e
-        |  GROUP BY c.doc_id, c.cpos, c.ch
-        |  HAVING count(u.doc_id) = 0
-        |),
-        |agg AS (
-        |  SELECT doc_id, string_agg(ch, '' ORDER BY cpos) AS cleaned_text
-        |  FROM kept GROUP BY doc_id
-        |)
-        |SELECT d.doc_id, coalesce(a.cleaned_text, '') AS cleaned_text,
-        |  length(d.text) - length(coalesce(a.cleaned_text, '')) AS removed_chars
-        |FROM documents d LEFT JOIN agg a ON a.doc_id = d.doc_id
-        |ORDER BY d.doc_id""".stripMargin,
-    // Replays Dedup.winnowedDedup at minLen=30, noise=21 (w=10): the
-    // winnowing selection is the window min over the same packed
-    // hash∥pos∥flag BIGINT key the Spark side uses (duckWinnowSelCtes),
-    // full windows only; dup marking mirrors q_substring_dedup's
-    // row_number shape.
-    "q_winnow_dedup" ->
-      s"""WITH $duckWinnowSelCtes,
-        |marked AS (
-        |  SELECT doc_id, pos,
-        |    count(*) OVER (PARTITION BY gram) AS cnt,
-        |    row_number() OVER (PARTITION BY gram ORDER BY doc_id, pos) AS rn
-        |  FROM sel
-        |),
-        |agg AS (
-        |  SELECT doc_id, count(*) AS n_fp,
-        |    count(CASE WHEN cnt >= 2 AND rn > 1 THEN 1 END) AS n_dup
-        |  FROM marked GROUP BY doc_id
-        |)
-        |SELECT d.doc_id, coalesce(a.n_fp, 0) AS n_fp,
-        |  coalesce(a.n_dup, 0) AS n_dup
-        |FROM documents d LEFT JOIN agg a ON a.doc_id = d.doc_id
-        |ORDER BY d.doc_id""".stripMargin,
-    "q_winnow_cut" -> duckWinnowCutSql(0),
-    // the edgePad = w−1 variant: every dup span stretched 9 chars both
-    // ways before the per-char anti-join — same independent oracle shape
-    "q_winnow_cut_padded" -> duckWinnowCutSql(9),
-    // Replays Dedup.winnowOverlapPairs: the q_winnow_dedup selection CTEs,
-    // then distinct fingerprint sets per doc, per-gram self-join with
-    // id_a < id_b, shared counts, containment normalization by the smaller
-    // set size.
-    "q_winnow_pairs" ->
-      s"""WITH $duckWinnowSelCtes,
-        |fpset AS (
-        |  SELECT DISTINCT doc_id, gram FROM sel
-        |),
-        |nfp AS (
-        |  SELECT doc_id, count(*) AS n FROM fpset GROUP BY doc_id
-        |),
-        |pairs AS (
-        |  SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS shared
-        |  FROM fpset a JOIN fpset b ON a.gram = b.gram AND a.doc_id < b.doc_id
-        |  GROUP BY 1, 2
-        |)
-        |SELECT pr.id_a, pr.id_b, pr.shared,
-        |  CAST(pr.shared AS DOUBLE) / CAST(least(na.n, nb.n) AS DOUBLE) AS overlap
-        |FROM pairs pr
-        |JOIN nfp na ON na.doc_id = pr.id_a
-        |JOIN nfp nb ON nb.doc_id = pr.id_b
-        |WHERE pr.shared >= 2
-        |ORDER BY pr.id_a, pr.id_b""".stripMargin,
-    // Replays Dedup.winnowIncrementalDedup: the winnow selection CTEs run
-    // over BOTH corpus halves (even doc_ids = reference, odd = new); the
-    // reference's distinct fingerprint grams are the index, and each new
-    // document's fingerprints are counted and flagged by index membership.
-    "q_winnow_ingest" -> duckWinnowIngestSql,
-    // The persisted-index gate's SEMANTICS are identical — the parquet
-    // round-trip must be invisible to the result, which is exactly what
-    // sharing the oracle asserts.
-    "q_winnow_ingest_persisted" -> duckWinnowIngestSql,
-    // Replays Dedup.winnowIncrementalCut per-CHARACTER (the established
-    // anti-join cut oracle): a new-doc char survives iff no
-    // index-matched fingerprint span covers it.
-    "q_winnow_ingest_cut" ->
-      s"""WITH $duckWinnowSelCtes,
-        |refidx AS (
-        |  SELECT DISTINCT gram FROM sel WHERE doc_id % 2 = 0
-        |),
-        |dup AS (
-        |  SELECT s.doc_id, s.pos AS st, s.pos + 20 AS e
-        |  FROM sel s JOIN refidx r ON r.gram = s.gram
-        |  WHERE s.doc_id % 2 = 1
-        |),
-        |chars AS (
-        |  SELECT d.doc_id, t.i AS cpos, substring(d.text, t.i, 1) AS ch
-        |  FROM documents d, unnest(generate_series(1, length(d.text))) AS t(i)
-        |  WHERE d.doc_id % 2 = 1
-        |),
-        |kept AS (
-        |  SELECT c.doc_id, c.cpos, c.ch
-        |  FROM chars c LEFT JOIN dup u
-        |    ON u.doc_id = c.doc_id AND c.cpos BETWEEN u.st AND u.e
-        |  GROUP BY c.doc_id, c.cpos, c.ch
-        |  HAVING count(u.doc_id) = 0
-        |),
-        |agg AS (
-        |  SELECT doc_id, string_agg(ch, '' ORDER BY cpos) AS cleaned_text
-        |  FROM kept GROUP BY doc_id
-        |)
-        |SELECT d.doc_id, coalesce(a.cleaned_text, '') AS cleaned_text,
-        |  length(d.text) - length(coalesce(a.cleaned_text, '')) AS removed_chars
-        |FROM documents d LEFT JOIN agg a ON a.doc_id = d.doc_id
-        |WHERE d.doc_id % 2 = 1
-        |ORDER BY d.doc_id""".stripMargin,
-    // Replays Dedup.decontaminationCut per-CHARACTER (same independent
-    // anti-join formulation as q_substring_cut's oracle): a training-doc
-    // char survives iff no probe-matched span covers it. Probe grams are
-    // exhaustive (stride 1), training grams sampled at stride 5.
-    "q_decontaminate" ->
-      """WITH probe AS (
-        |  SELECT DISTINCT substring(text, p.i, 20) AS gram
-        |  FROM documents d, unnest(generate_series(1, length(d.text) - 19, 1)) AS p(i)
-        |  WHERE d.source = 'src0' AND length(d.text) >= 20
-        |),
-        |occ AS (
-        |  SELECT doc_id, t.i AS pos, substring(text, t.i, 20) AS gram
-        |  FROM documents d, unnest(generate_series(1, length(d.text) - 19, 5)) AS t(i)
-        |  WHERE d.source <> 'src0' AND length(d.text) >= 20
-        |),
-        |dup AS (
-        |  SELECT doc_id, pos AS s, pos + 19 AS e FROM occ JOIN probe USING (gram)
-        |),
-        |chars AS (
-        |  SELECT d.doc_id, t.i AS cpos, substring(d.text, t.i, 1) AS ch
-        |  FROM documents d, unnest(generate_series(1, length(d.text))) AS t(i)
-        |  WHERE d.source <> 'src0'
-        |),
-        |kept AS (
-        |  SELECT c.doc_id, c.cpos, c.ch
-        |  FROM chars c LEFT JOIN dup u
-        |    ON u.doc_id = c.doc_id AND c.cpos BETWEEN u.s AND u.e
-        |  GROUP BY c.doc_id, c.cpos, c.ch
-        |  HAVING count(u.doc_id) = 0
-        |),
-        |agg AS (
-        |  SELECT doc_id, string_agg(ch, '' ORDER BY cpos) AS cleaned_text
-        |  FROM kept GROUP BY doc_id
-        |)
-        |SELECT d.doc_id, coalesce(a.cleaned_text, '') AS cleaned_text,
-        |  length(d.text) - length(coalesce(a.cleaned_text, '')) AS removed_chars
-        |FROM documents d LEFT JOIN agg a ON a.doc_id = d.doc_id
-        |WHERE d.source <> 'src0'
-        |ORDER BY d.doc_id""".stripMargin,
-    // Replays Dedup.incrementalDedup over the odd(new)/even(ref) split. The
-    // oracle computes near-dups over ALL odd docs while Spark restricts to
-    // exact-survivors — equivalent: new docs never pair with each other, so
-    // dropping a new doc cannot change any other new doc's outcome, and the
-    // difference (exact ∩ near) is removed by both predicates.
-    "q_incremental_dedup" ->
-      s"""WITH ${duckMinhashCtes("a.doc_id % 2 = 1 AND b.doc_id % 2 = 0")},
-         |sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
-         |inter AS (
-         |  SELECT c.id_a, c.id_b, count(*) AS inter
-         |  FROM cand c
-         |  JOIN sh sa ON sa.doc_id = c.id_a
-         |  JOIN sh sb ON sb.doc_id = c.id_b AND sb.shingle = sa.shingle
-         |  GROUP BY c.id_a, c.id_b
-         |),
-         |neardup AS (
-         |  SELECT DISTINCT i.id_a FROM inter i
-         |  JOIN sizes na ON na.doc_id = i.id_a
-         |  JOIN sizes nb ON nb.doc_id = i.id_b
-         |  WHERE CAST(i.inter AS DOUBLE) / CAST(na.n + nb.n - i.inter AS DOUBLE) >= 0.5
-         |),
-         |exact_dup AS (
-         |  SELECT DISTINCT n.doc_id FROM documents n JOIN documents r
-         |  ON md5(n.text) = md5(r.text) AND n.doc_id % 2 = 1 AND r.doc_id % 2 = 0
-         |)
-         |SELECT d.doc_id, d.lang, d.n_chars FROM documents d
-         |WHERE d.doc_id % 2 = 1
-         |  AND d.doc_id NOT IN (SELECT doc_id FROM exact_dup)
-         |  AND d.doc_id NOT IN (SELECT id_a FROM neardup)
-         |ORDER BY d.doc_id""".stripMargin,
-    "q_dedup_exact" ->
-      """SELECT md5(text) AS text_md5, min(doc_id) AS keep_id, count(*) AS n_copies
-        |FROM documents GROUP BY md5(text) ORDER BY keep_id""".stripMargin,
-    "q_dedup_minhash" -> s"WITH ${duckMinhashCtes()},\n${duckJaccardTail()}",
-    "q_dedup_components" ->
-      // components of the minhash near-dup graph: min reachable id via a
-      // recursive closure (exact; graph is small after LSH+verify)
-      s"""WITH RECURSIVE $duckComponentsCtes
-         |SELECT id, min(r) AS component FROM reach GROUP BY id ORDER BY id""".stripMargin,
-    "q_dedup_star" ->
-      // star-verified clusters: same reachability closure, edges restricted
-      // to verified rep->member stars per LSH bucket
-      s"""WITH RECURSIVE $duckStarComponentsCtes
-         |SELECT id, min(r) AS component FROM reach GROUP BY id ORDER BY id""".stripMargin,
-    "q_dedup_keep" ->
-      // end-to-end dedup through the r13 STAR default: star-verified
-      // rep->member edges per bucket (duckStarComponentsCtes), then keep
-      // one representative (min id) per component; docs in no component
-      // survive untouched
-      s"""WITH RECURSIVE $duckStarComponentsCtes,
-         |comp AS (SELECT id, min(r) AS component FROM reach GROUP BY id),
-         |drop_ids AS (SELECT id FROM comp WHERE id <> component)
-         |SELECT d.doc_id, d.lang, d.n_chars
-         |FROM documents d LEFT JOIN drop_ids x ON x.id = d.doc_id
-         |WHERE x.id IS NULL
-         |ORDER BY d.doc_id""".stripMargin,
-    // Replays keepBestRepresentatives over the same recursive STAR
-    // components: per-cluster winner = max (n_chars, −id) ≡
-    // argmin(−score, ties low id).
-    "q_dedup_keep_best" ->
-      s"""WITH RECURSIVE $duckStarComponentsCtes,
-         |comp AS (SELECT id, min(r) AS component FROM reach GROUP BY id),
-         |scored AS (SELECT c.id, c.component, d.n_chars
-         |           FROM comp c JOIN documents d ON d.doc_id = c.id),
-         |win AS (SELECT component,
-         |          max(struct_pack(s := CAST(n_chars AS DOUBLE), i := -id)) AS w
-         |        FROM scored GROUP BY component),
-         |keep AS (SELECT -(w.i) AS id FROM win)
-         |SELECT d.doc_id, d.lang, d.n_chars
-         |FROM documents d
-         |WHERE d.doc_id NOT IN (SELECT id FROM comp)
-         |   OR d.doc_id IN (SELECT id FROM keep)
-         |ORDER BY d.doc_id""".stripMargin,
-    "q_dedup_simhash" -> (duckSimhashSql + "\nSELECT doc_id, simhash FROM fps ORDER BY doc_id"),
-    "q_simhash_pairs" ->
-      (duckSimhashSql +
-        s""",
-           |chunked AS (
-           |  SELECT doc_id, simhash, c, (simhash >> (c*8)) & 255 AS chunk_val
-           |  FROM fps CROSS JOIN generate_series(0, 3) t(c)
-           |),
-           |cand AS (
-           |  SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b,
-           |    a.simhash AS fp_a, b.simhash AS fp_b
-           |  FROM chunked a JOIN chunked b
-           |    ON a.c = b.c AND a.chunk_val = b.chunk_val AND a.doc_id < b.doc_id
-           |)
-           |SELECT id_a, id_b, CAST(bit_count(xor(fp_a, fp_b)) AS INT) AS hamming
-           |FROM cand WHERE bit_count(xor(fp_a, fp_b)) <= 3
-           |ORDER BY id_a, id_b""".stripMargin),
-    "q_ngram_jaccard" ->
-      s"""WITH $duckShingles,
-         |cand AS (
-         |  SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-         |  FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-         |),
-         |${duckJaccardTail()}""".stripMargin,
-    // The q_*_flood oracles replay the SAME operator SQL over the
-    // duckFloodDocs replica flood (the budget guard changes only the
-    // failure mode, never results — identical tails).
-    "q_ngram_flood" ->
-      s"""WITH $duckFloodDocs,
-         |$duckShingles,
-         |cand AS (
-         |  SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-         |  FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-         |),
-         |${duckJaccardTail()}""".stripMargin,
-    // Replays containmentPairs: shared-shingle intersection counts, inner =
-    // the smaller-set side (ties to the lower id — id_a by construction),
-    // containment = inter / n_inner.
-    "q_containment_flood" ->
-      s"""WITH $duckFloodDocs,
-         |$duckShingles,
-         |sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
-         |inter AS (
-         |  SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS inter
-         |  FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-         |  GROUP BY a.doc_id, b.doc_id
-         |),
-         |sized AS (
-         |  SELECT i.id_a, i.id_b, i.inter, na.n AS n_a, nb.n AS n_b
-         |  FROM inter i
-         |  JOIN sizes na ON na.doc_id = i.id_a
-         |  JOIN sizes nb ON nb.doc_id = i.id_b
-         |)
-         |SELECT
-         |  CASE WHEN n_a < n_b OR (n_a = n_b) THEN id_a ELSE id_b END AS inner_id,
-         |  CASE WHEN n_a < n_b OR (n_a = n_b) THEN id_b ELSE id_a END AS outer_id,
-         |  CAST(least(n_a, n_b) AS INT) AS n_inner,
-         |  CAST(greatest(n_a, n_b) AS INT) AS n_outer,
-         |  CAST(inter AS DOUBLE) / CAST(least(n_a, n_b) AS DOUBLE) AS containment
-         |FROM sized
-         |WHERE CAST(inter AS DOUBLE) / CAST(least(n_a, n_b) AS DOUBLE) >= 0.8
-         |ORDER BY inner_id, outer_id""".stripMargin,
-    "q_simhash_flood" ->
-      s"""WITH $duckFloodDocs,
-         |${duckSimhashSql.stripPrefix("WITH ")},
-         |chunked AS (
-         |  SELECT doc_id, simhash, c, (simhash >> (c*8)) & 255 AS chunk_val
-         |  FROM fps CROSS JOIN generate_series(0, 3) t2(c)
-         |),
-         |cand AS (
-         |  SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b,
-         |    a.simhash AS fp_a, b.simhash AS fp_b
-         |  FROM chunked a JOIN chunked b
-         |    ON a.c = b.c AND a.chunk_val = b.chunk_val AND a.doc_id < b.doc_id
-         |)
-         |SELECT id_a, id_b, CAST(bit_count(xor(fp_a, fp_b)) AS INT) AS hamming
-         |FROM cand WHERE bit_count(xor(fp_a, fp_b)) <= 3
-         |ORDER BY id_a, id_b""".stripMargin,
-    // Brute-force oracle over the mutated name flood (variant 1 = 2nd char
-    // -> 'x'; variant 2 additionally appends 'y'), like q_fuzzy_pairs.
-    "q_fuzzy_flood" ->
-      """WITH n0 AS (SELECT p_name AS name, CAST(min(p_partkey) AS BIGINT) AS id
-        |            FROM part GROUP BY p_name),
-        |n AS (
-        |  SELECT id + r*1000000 AS id,
-        |    CASE WHEN r = 0 THEN name
-        |         WHEN r = 1 THEN substr(name, 1, 1) || 'x' || substr(name, 3)
-        |         ELSE substr(name, 1, 1) || 'x' || substr(name, 3) || 'y' END AS name
-        |  FROM n0, range(3) t(r))
-        |SELECT a.id AS id_a, b.id AS id_b,
-        |  CAST(levenshtein(a.name, b.name) AS INT) AS dist
-        |FROM n a, n b
-        |WHERE a.id < b.id AND levenshtein(a.name, b.name) <= 2
-        |ORDER BY id_a, id_b""".stripMargin,
-    "q_embed_knn" ->
-      s"""WITH q AS (SELECT vec_id AS query_id, embedding AS q_emb FROM embeddings WHERE vec_id < 10),
-         |scored AS (
-         |  SELECT q.query_id, e.vec_id AS neighbor_id,
-         |    ${cosSql("q.q_emb", "e.embedding")} AS cosine
-         |  FROM embeddings e CROSS JOIN q
-         |  WHERE e.vec_id <> q.query_id
-         |),
-         |ranked AS (
-         |  SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY cosine DESC, neighbor_id) AS rank
-         |  FROM scored
-         |)
-         |SELECT query_id, neighbor_id, cosine, rank FROM ranked
-         |WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin,
-    // Replays Similarity.hardNegatives: the kNN oracle with the label
-    // inequality in the candidate filter; tag channel surfaces the label.
-    "q_hard_negatives" ->
-      s"""WITH q AS (SELECT vec_id AS query_id, embedding AS q_emb, label AS ql
-         |           FROM embeddings WHERE vec_id < 10),
-         |scored AS (
-         |  SELECT q.query_id, e.vec_id AS neighbor_id, e.label AS neg_label,
-         |    ${cosSql("q.q_emb", "e.embedding")} AS cosine
-         |  FROM embeddings e CROSS JOIN q
-         |  WHERE e.vec_id <> q.query_id AND e.label <> q.ql
-         |),
-         |ranked AS (
-         |  SELECT *, row_number() OVER (PARTITION BY query_id
-         |    ORDER BY cosine DESC, neighbor_id) AS rank
-         |  FROM scored
-         |)
-         |SELECT query_id, neighbor_id, neg_label, cosine, rank FROM ranked
-         |WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin,
-    // Replays knnLabelConsistency: the kNN oracle's ranked frame joined
-    // back to both labels, exact integer hit/scored sums per label.
-    "q_knn_label_consistency" ->
-      s"""WITH q AS (SELECT vec_id AS query_id, embedding AS q_emb,
-         |                  CAST(label AS BIGINT) AS ql
-         |           FROM embeddings WHERE vec_id < 200),
-         |scored AS (
-         |  SELECT q.query_id, q.ql, CAST(e.label AS BIGINT) AS nl,
-         |    ${cosSql("q.q_emb", "e.embedding")} AS cosine,
-         |    e.vec_id AS neighbor_id
-         |  FROM embeddings e CROSS JOIN q
-         |  WHERE e.vec_id <> q.query_id
-         |),
-         |ranked AS (
-         |  SELECT *, row_number() OVER (PARTITION BY query_id
-         |    ORDER BY cosine DESC, neighbor_id) AS rank
-         |  FROM scored
-         |),
-         |perq AS (
-         |  SELECT query_id, ql,
-         |    CAST(count(*) AS BIGINT) AS n,
-         |    CAST(sum(CASE WHEN nl = ql THEN 1 ELSE 0 END) AS BIGINT) AS h
-         |  FROM ranked WHERE rank <= 5 GROUP BY query_id, ql
-         |)
-         |SELECT ql AS label,
-         |  CAST(count(*) AS BIGINT) AS n_queries,
-         |  CAST(sum(h) AS BIGINT) AS hits,
-         |  CAST(sum(n) AS BIGINT) AS n_scored,
-         |  CAST(sum(h) AS DOUBLE) / CAST(sum(n) AS DOUBLE) AS consistency
-         |FROM perq GROUP BY ql ORDER BY ql""".stripMargin,
-    "q_embed_ivf_knn" ->
-      s"""WITH dims AS (
-         |  SELECT vec_id, label AS cl, unnest(embedding) AS v,
-         |         generate_subscripts(embedding, 1) AS pos
-         |  FROM embeddings
-         |),
-         |cd AS (SELECT cl, pos, round(avg(CAST(v AS DOUBLE)), 6) AS cv FROM dims GROUP BY cl, pos),
-         |centroids AS (SELECT cl, list(cv ORDER BY pos) AS centroid FROM cd GROUP BY cl),
-         |q AS (SELECT vec_id AS query_id, embedding AS q_emb FROM embeddings WHERE vec_id < 10),
-         |qc AS (
-         |  SELECT q.query_id, q.q_emb, c.cl,
-         |    ${cosSql("q.q_emb", "c.centroid")} AS ccos
-         |  FROM q CROSS JOIN centroids c
-         |),
-         |assigned AS (
-         |  SELECT query_id, q_emb, cl FROM (
-         |    SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY ccos DESC, cl) AS r FROM qc
-         |  ) WHERE r = 1
-         |),
-         |scored AS (
-         |  SELECT a.query_id, a.cl, e.vec_id AS neighbor_id,
-         |    ${cosSql("a.q_emb", "e.embedding")} AS cos
-         |  FROM embeddings e JOIN assigned a ON e.label = a.cl
-         |  WHERE e.vec_id <> a.query_id
-         |),
-         |ranked AS (
-         |  SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, neighbor_id) AS rank
-         |  FROM scored
-         |)
-         |SELECT query_id, CAST(cl AS INT) AS probed_cluster, neighbor_id,
-         |  cos AS cosine, rank
-         |FROM ranked WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin,
-    "q_embed_ivf_learned" -> duckIvfLearnedSql,
-    "q_semantic_dedup" ->
-      duckSemanticDedupGuardedSql(cap = operators.Similarity.DefaultMaxClusterSize),
-    "q_semantic_dedup_unguarded" -> duckSemanticDedupSql,
-    "q_semantic_dedup_guarded" -> duckSemanticDedupGuardedSql(cap = 50L),
-    "q_embed_pq" -> duckPqSql,
-    "q_embed_ivf_pq" -> duckIvfPqSql,
-    "q_embed_pq_index" -> duckPqSql,
-    // Replays Sq.sq8Knn: exact per-dim bounds, the same quantize→
-    // reconstruct IEEE tree (round() is an exact integer ≤ 255, so the
-    // int-code round trip on the Spark side cannot differ), the shared
-    // squared-L2 fold, row_number ties to the lower neighbor id.
-    "q_embed_sq8" ->
-      s"""WITH b AS (
-         |  SELECT pos, min(CAST(v AS DOUBLE)) AS lo, max(CAST(v AS DOUBLE)) AS hi
-         |  FROM (SELECT unnest(embedding) AS v,
-         |          generate_subscripts(embedding, 1) AS pos
-         |        FROM embeddings) e
-         |  GROUP BY pos),
-         |bl AS (SELECT list(lo ORDER BY pos) AS los, list(hi ORDER BY pos) AS his
-         |       FROM b),
-         |recon AS (
-         |  SELECT vec_id,
-         |    list_transform(list_zip(embedding, los, his), t ->
-         |      CASE WHEN CAST(t[3] AS DOUBLE) = CAST(t[2] AS DOUBLE)
-         |           THEN CAST(t[2] AS DOUBLE)
-         |           ELSE CAST(t[2] AS DOUBLE)
-         |             + round((CAST(t[1] AS DOUBLE) - CAST(t[2] AS DOUBLE))
-         |                 / (CAST(t[3] AS DOUBLE) - CAST(t[2] AS DOUBLE))
-         |                 * 255.0::DOUBLE)
-         |               * (CAST(t[3] AS DOUBLE) - CAST(t[2] AS DOUBLE))
-         |               / 255.0::DOUBLE END) AS recon
-         |  FROM embeddings, bl),
-         |q AS (SELECT vec_id AS query_id, embedding AS q_emb
-         |      FROM embeddings WHERE vec_id < 10),
-         |sc AS (
-         |  SELECT q.query_id, r.vec_id AS neighbor_id,
-         |    ${sqdSql("q.q_emb", "r.recon")} AS sq_dist
-         |  FROM q CROSS JOIN recon r WHERE q.query_id <> r.vec_id),
-         |ranked AS (
-         |  SELECT *, row_number() OVER (PARTITION BY query_id
-         |    ORDER BY sq_dist, neighbor_id) AS rank
-         |  FROM sc)
-         |SELECT query_id, neighbor_id, sq_dist, rank FROM ranked
-         |WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin,
-    "q_kmv_distinct" ->
-      """WITH h AS (
-        |  SELECT l_returnflag,
-        |    CAST('0x' || substr(md5(l_partkey::VARCHAR), 1, 15) AS BIGINT) AS hv
-        |  FROM lineitem GROUP BY 1, 2
-        |), r AS (
-        |  SELECT l_returnflag, hv,
-        |    row_number() OVER (PARTITION BY l_returnflag ORDER BY hv) AS rn
-        |  FROM h
-        |), m AS (
-        |  SELECT l_returnflag, max(hv) AS kth, count(*) AS c
-        |  FROM r WHERE rn <= 256 GROUP BY 1
-        |), x AS (
-        |  SELECT l_returnflag, count(DISTINCT l_partkey) AS exact_parts
-        |  FROM lineitem GROUP BY 1
-        |)
-        |SELECT m.l_returnflag,
-        |  CASE WHEN m.c < 256 THEN m.c::DOUBLE
-        |       ELSE 255.0::DOUBLE / (m.kth::DOUBLE / 1152921504606846976.0::DOUBLE) END AS est_parts,
-        |  x.exact_parts
-        |FROM m JOIN x USING (l_returnflag)
-        |ORDER BY l_returnflag""".stripMargin,
-    // Replays HllSketch at p=8 (m=256, w=52 remainder bits, rMax=53):
-    // register j = hv // 2^52, ρ = 53 − bit_length(remainder) (53 when the
-    // remainder is 0), register max per (group, j); sum_scaled adds 2^53
-    // for each of the (256 − present) untouched registers — exact integer
-    // arithmetic end to end. The estimate then runs the IDENTICAL
-    // Hll.estimateSql fragment the Spark gate evaluates.
-    // Replays the register-blob rollup: per-source registers (the
-    // hll_registers blobs), element-wise max across sources (hll_merge),
-    // and the direct path — which by max-associativity is the SAME
-    // register vector, so one merged CTE serves both estimate columns.
-    "q_hll_union" -> {
-      val est = functions.Hll.estimateSql("a.sum_scaled", "a.zeros", 8)
-      s"""WITH toks AS (
-         |  SELECT source,
-         |    unnest(list_filter(string_split_regex(lower(text), '[^a-z0-9]+'),
-         |                       x -> x <> '')) AS token
-         |  FROM documents
-         |), h AS (
-         |  SELECT source,
-         |    CAST('0x' || substr(md5(token), 1, 15) AS BIGINT) AS hv
-         |  FROM toks GROUP BY 1, 2
-         |), b AS (
-         |  SELECT source, hv // 4503599627370496 AS j,
-         |         hv % 4503599627370496 AS rem
-         |  FROM h
-         |), r AS (
-         |  SELECT source, j,
-         |    max(CASE WHEN rem = 0 THEN 53 ELSE 53 - length(bin(rem)) END) AS mj
-         |  FROM b GROUP BY 1, 2
-         |), mrg AS (
-         |  SELECT j, max(mj) AS mj FROM r GROUP BY j
-         |), agg AS (
-         |  SELECT
-         |    CAST(sum(1::BIGINT << (53 - mj)) AS BIGINT)
-         |      + (256 - count(*)) * 9007199254740992 AS sum_scaled,
-         |    CAST(256 - count(*) AS INT) AS zeros
-         |  FROM mrg
-         |), nsrc AS (
-         |  SELECT count(DISTINCT source) AS n_sources FROM toks
-         |), ex AS (
-         |  SELECT count(DISTINCT token) AS exact_tokens FROM toks
-         |)
-         |SELECT $est AS est_merged, $est AS est_direct,
-         |  n.n_sources, x.exact_tokens
-         |FROM agg a CROSS JOIN nsrc n CROSS JOIN ex x""".stripMargin
-    },
-    "q_hll_distinct" -> {
-      // one register-replay CTE block per sketched column (p=8)
-      def regs(expr: String, tag: String) =
-        s"""h$tag AS (
-           |  SELECT l_returnflag,
-           |    CAST('0x' || substr(md5($expr), 1, 15) AS BIGINT) AS hv
-           |  FROM lineitem GROUP BY 1, 2
-           |), b$tag AS (
-           |  SELECT l_returnflag, hv // 4503599627370496 AS j,
-           |         hv % 4503599627370496 AS rem
-           |  FROM h$tag
-           |), r$tag AS (
-           |  SELECT l_returnflag, j,
-           |    max(CASE WHEN rem = 0 THEN 53 ELSE 53 - length(bin(rem)) END) AS mj
-           |  FROM b$tag GROUP BY 1, 2
-           |), agg$tag AS (
-           |  SELECT l_returnflag,
-           |    CAST(sum(1::BIGINT << (53 - mj)) AS BIGINT)
-           |      + (256 - count(*)) * 9007199254740992 AS sum_scaled,
-           |    CAST(256 - count(*) AS INT) AS zeros
-           |  FROM r$tag GROUP BY 1
-           |)""".stripMargin
-      s"""WITH ${regs("l_partkey::VARCHAR", "p")},
-         |${regs("l_linenumber::VARCHAR", "l")},
-         |ex AS (
-         |  SELECT l_returnflag, count(DISTINCT l_partkey) AS exact_parts
-         |  FROM lineitem GROUP BY 1
-         |)
-         |SELECT a.l_returnflag,
-         |  ${functions.Hll.estimateSql("a.sum_scaled", "a.zeros", 8)} AS est_parts,
-         |  ${functions.Hll.estimateSql("al.sum_scaled", "al.zeros", 8)} AS est_lines,
-         |  x.exact_parts
-         |FROM aggp a JOIN aggl al USING (l_returnflag) JOIN ex x USING (l_returnflag)
-         |ORDER BY l_returnflag""".stripMargin
-    },
-    "q_skew_agg" ->
-      """SELECT l_returnflag,
-        |  sum(l_quantity) AS sum_l_quantity,
-        |  count(l_quantity) AS count_l_quantity,
-        |  min(l_extendedprice) AS min_l_extendedprice,
-        |  max(l_extendedprice) AS max_l_extendedprice
-        |FROM lineitem GROUP BY l_returnflag
-        |ORDER BY l_returnflag""".stripMargin,
-    "q_skew_join" ->
-      """SELECT o_orderpriority, count(*) AS cnt, sum(l_quantity) AS sum_qty
-        |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-        |GROUP BY o_orderpriority
-        |ORDER BY o_orderpriority""".stripMargin,
-    "q_bucketed_join" ->
-      """SELECT c_mktsegment, count(*) AS cnt,
-        |  min(o_totalprice) AS min_price, max(o_totalprice) AS max_price
-        |FROM orders JOIN customer ON o_custkey = c_custkey
-        |GROUP BY c_mktsegment ORDER BY c_mktsegment""".stripMargin,
-    "q_sessionize" ->
-      s"""WITH e AS (
-         |  SELECT user_id, event_id, epoch_ns(ts) // 1000000000 AS ts_sec
-         |  FROM events
-         |), flagged AS (
-         |  SELECT user_id, event_id, ts_sec,
-         |    CASE WHEN lag(ts_sec) OVER w IS NULL
-         |              OR ts_sec - lag(ts_sec) OVER w > 43200
-         |         THEN 1 ELSE 0 END AS ns
-         |  FROM e WINDOW w AS (PARTITION BY user_id ORDER BY ts_sec, event_id)
-         |)
-         |SELECT user_id, event_id, ts_sec,
-         |  count(CASE WHEN ns = 1 THEN 1 END)
-         |    OVER (PARTITION BY user_id ORDER BY ts_sec, event_id
-         |          ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS session_id
-         |FROM flagged ORDER BY user_id, ts_sec, event_id""".stripMargin,
-    "q_session_stats" ->
-      s"""WITH e AS (
-         |  SELECT user_id, event_id, epoch_ns(ts) // 1000000000 AS ts_sec
-         |  FROM events
-         |), flagged AS (
-         |  SELECT user_id, event_id, ts_sec,
-         |    CASE WHEN lag(ts_sec) OVER w IS NULL
-         |              OR ts_sec - lag(ts_sec) OVER w > 43200
-         |         THEN 1 ELSE 0 END AS ns
-         |  FROM e WINDOW w AS (PARTITION BY user_id ORDER BY ts_sec, event_id)
-         |), sess AS (
-         |  SELECT user_id, ts_sec,
-         |    count(CASE WHEN ns = 1 THEN 1 END)
-         |      OVER (PARTITION BY user_id ORDER BY ts_sec, event_id
-         |            ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS session_id
-         |  FROM flagged
-         |)
-         |SELECT user_id, session_id, count(*) AS n_events,
-         |  max(ts_sec) - min(ts_sec) AS span_seconds,
-         |  min(ts_sec) AS session_start, max(ts_sec) AS session_end
-         |FROM sess GROUP BY user_id, session_id
-         |ORDER BY user_id, session_id""".stripMargin,
-    "q_sample_strata" ->
-      s"""SELECT doc_id, lang FROM documents
-         |WHERE CAST('0x' || substr(md5(doc_id::VARCHAR), 1, 15) AS BIGINT) <
-         |  CASE lang
-         |    WHEN 'en' THEN ${operators.Sampling.threshold(0.5)}
-         |    WHEN 'de' THEN ${operators.Sampling.threshold(1.0)}
-         |    WHEN 'zh' THEN ${operators.Sampling.threshold(0.2)}
-         |    ELSE ${operators.Sampling.threshold(0.25)} END
-         |ORDER BY doc_id""".stripMargin,
-    // Replays Anomaly.zscoreOutliers: μ = Σx/n and σ = sqrt(Σx²/n − μ²)
-    // re-derived with the identical IEEE tree; the integer-valued quantity
-    // column makes both sums exact in any aggregation order.
-    "q_anomaly" ->
-      """WITH stats AS (
-        |  SELECT l_returnflag, count(l_quantity) AS n, sum(l_quantity) AS s,
-        |         sum(l_quantity * l_quantity) AS ss
-        |  FROM lineitem GROUP BY l_returnflag)
-        |SELECT l.l_orderkey, l.l_linenumber, l.l_returnflag, l.l_quantity,
-        |  CASE WHEN sqrt(st.ss / st.n - (st.s / st.n) * (st.s / st.n)) > 0.0
-        |       THEN (l.l_quantity - st.s / st.n)
-        |            / sqrt(st.ss / st.n - (st.s / st.n) * (st.s / st.n))
-        |       ELSE 0.0::DOUBLE END AS z_score,
-        |  abs(CASE WHEN sqrt(st.ss / st.n - (st.s / st.n) * (st.s / st.n)) > 0.0
-        |       THEN (l.l_quantity - st.s / st.n)
-        |            / sqrt(st.ss / st.n - (st.s / st.n) * (st.s / st.n))
-        |       ELSE 0.0::DOUBLE END) > 1.6 AS is_outlier
-        |FROM lineitem l JOIN stats st USING (l_returnflag)
-        |ORDER BY l.l_orderkey, l.l_linenumber""".stripMargin,
-    "q_posexplode" ->
-      """SELECT doc_id, CAST(pos - 1 AS INT) AS pos, token FROM (
-        |  SELECT doc_id, unnest(toks) AS token,
-        |    generate_subscripts(toks, 1) AS pos
-        |  FROM (SELECT doc_id,
-        |          list_filter(string_split_regex(lower(text), '[^a-z0-9]+'), w -> w <> '') AS toks
-        |        FROM documents WHERE doc_id < 20))
-        |ORDER BY doc_id, pos""".stripMargin,
-    "q_string_funcs" ->
-      """SELECT c_custkey,
-        |  concat_ws('|', c_mktsegment, c_name) AS tagged,
-        |  lpad(CAST(c_custkey AS VARCHAR), 8, '0') AS padded,
-        |  translate(c_mktsegment, 'AEIOU', 'aeiou') AS xlat,
-        |  CAST(levenshtein(c_mktsegment, 'BUILDING') AS INT) AS lev,
-        |  substring(c_name, 1, 8) AS prefix8,
-        |  CAST(length(c_name) AS INT) AS name_len
-        |FROM customer WHERE c_custkey <= 200
-        |ORDER BY c_custkey""".stripMargin,
-    // Replays Batching.tokenBudgetSelect: same score-desc/doc-id window
-    // order, keep while tokens_before (= cum − n) < budget
-    "q_token_budget" ->
-      """WITH toks AS (
-        |  SELECT doc_id, lang, n_chars,
-        |    CAST(len(list_filter(string_split_regex(lower(text), '[^a-z0-9]+'), w -> w <> '')) AS BIGINT) AS n_tokens
-        |  FROM documents),
-        |r AS (
-        |  SELECT doc_id, lang, n_tokens,
-        |    CAST(sum(n_tokens) OVER (PARTITION BY lang
-        |      ORDER BY n_chars DESC, doc_id
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS cum_tokens
-        |  FROM toks)
-        |SELECT doc_id, lang, n_tokens, cum_tokens
-        |FROM r WHERE cum_tokens - n_tokens < 2000
-        |ORDER BY doc_id""".stripMargin,
-    // Replays Profile.equalFrequencyBins: quantile_cont edges (exact on
-    // integer n_chars), ties fall to the lower bin in both engines
-    "q_eqfreq_bins" ->
-      """WITH e AS (
-        |  SELECT lang,
-        |    quantile_cont(n_chars, 0.25) AS q1,
-        |    quantile_cont(n_chars, 0.5) AS q2,
-        |    quantile_cont(n_chars, 0.75) AS q3
-        |  FROM documents GROUP BY lang),
-        |b AS (
-        |  SELECT d.lang, d.n_chars,
-        |    CASE WHEN d.n_chars > e.q3 THEN 3
-        |         WHEN d.n_chars > e.q2 THEN 2
-        |         WHEN d.n_chars > e.q1 THEN 1 ELSE 0 END AS bin
-        |  FROM documents d JOIN e USING (lang))
-        |SELECT lang, bin, count(*) AS n_docs,
-        |  min(n_chars) AS lo_chars, max(n_chars) AS hi_chars
-        |FROM b GROUP BY lang, bin ORDER BY lang, bin""".stripMargin,
-    "q_cube" ->
-      """SELECT l_returnflag, l_linestatus,
-        |  CAST(grouping(l_returnflag) AS INT) AS g_flag,
-        |  CAST(grouping(l_linestatus) AS INT) AS g_status,
-        |  count(*) AS n, sum(l_quantity) AS sum_qty
-        |FROM lineitem
-        |GROUP BY CUBE(l_returnflag, l_linestatus)
-        |ORDER BY g_flag, g_status,
-        |  coalesce(l_returnflag, ''), coalesce(l_linestatus, '')""".stripMargin,
-    // Replays EventAnalytics.cohortRetention: integer epoch-day numbers
-    // (DuckDB date subtraction ≡ Spark nano DIV — both floor positive ts)
-    "q_cohort" ->
-      """WITH e AS (
-        |  SELECT user_id,
-        |    CAST(CAST(ts AS DATE) - DATE '1970-01-01' AS BIGINT) AS day
-        |  FROM events),
-        |f AS (SELECT user_id, min(day) AS cohort_day FROM e GROUP BY user_id)
-        |SELECT f.cohort_day, e.day - f.cohort_day AS day_offset,
-        |  count(DISTINCT e.user_id) AS n_users
-        |FROM e JOIN f USING (user_id)
-        |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-    // Replays the KMV-sketch cohort variant: per-cell distinct 60-bit md5
-    // hashes, estimate = (k-1)/(k-th smallest / 2^60) past k distinct,
-    // exact count below — the same arithmetic tree as KmvBuffer.estimate.
-    "q_cohort_kmv" ->
-      """WITH e AS (
-        |  SELECT user_id,
-        |    CAST(CAST(ts AS DATE) - DATE '1970-01-01' AS BIGINT) AS day
-        |  FROM events),
-        |f AS (SELECT user_id, min(day) AS cohort_day FROM e GROUP BY user_id),
-        |j AS (SELECT e.user_id, f.cohort_day, e.day - f.cohort_day AS day_offset
-        |      FROM e JOIN f USING (user_id)),
-        |h AS (SELECT DISTINCT cohort_day, day_offset,
-        |        CAST('0x' || substr(md5(user_id::VARCHAR), 1, 15) AS BIGINT) AS h
-        |      FROM j),
-        |r AS (SELECT cohort_day, day_offset, h,
-        |        row_number() OVER (PARTITION BY cohort_day, day_offset ORDER BY h) AS rn,
-        |        count(*) OVER (PARTITION BY cohort_day, day_offset) AS n
-        |      FROM h)
-        |SELECT cohort_day, day_offset,
-        |  CASE WHEN max(n) < 32 THEN CAST(max(n) AS DOUBLE)
-        |       ELSE 31.0::DOUBLE / (CAST(max(CASE WHEN rn = 32 THEN h END) AS DOUBLE)
-        |         / 1152921504606846976.0::DOUBLE)
-        |  END AS n_users_est
-        |FROM r GROUP BY cohort_day, day_offset
-        |ORDER BY cohort_day, day_offset""".stripMargin,
-    // Replays Graph.kCore with four UNROLLED peel rounds (fixpoint at
-    // round 2 on this data; later rounds are identity) — the unique
-    // k-core makes peel order irrelevant.
-    // Assortativity replay: directed edge instances, HUGEINT-exact
-    // five-sums over endpoint degrees, the clamp tree.
-    "q_assortativity" ->
-      """WITH half AS (SELECT DISTINCT a.l_suppkey AS u, b.l_suppkey AS v
-        |              FROM lineitem a JOIN lineitem b
-        |                ON a.l_orderkey = b.l_orderkey
-        |               AND a.l_suppkey < b.l_suppkey
-        |              WHERE a.l_quantity >= 48 AND b.l_quantity >= 48),
-        |adj AS (SELECT u AS a, v AS b FROM half
-        |        UNION ALL SELECT v, u FROM half),
-        |deg AS (SELECT a AS node, CAST(count(*) AS BIGINT) AS d
-        |        FROM adj GROUP BY a),
-        |s AS (SELECT CAST(count(*) AS BIGINT) AS m,
-        |        CAST(sum(da.d) AS DOUBLE) AS sx, CAST(sum(db.d) AS DOUBLE) AS sy,
-        |        CAST(sum(da.d * da.d) AS DOUBLE) AS sxx,
-        |        CAST(sum(db.d * db.d) AS DOUBLE) AS syy,
-        |        CAST(sum(da.d * db.d) AS DOUBLE) AS sxy
-        |      FROM adj e JOIN deg da ON da.node = e.a
-        |                 JOIN deg db ON db.node = e.b),
-        |f AS (SELECT m, CAST(m AS DOUBLE) AS md,
-        |        CAST(m AS DOUBLE) * sxy - sx * sy AS num,
-        |        CAST(m AS DOUBLE) * sxx - sx * sx AS dx,
-        |        CAST(m AS DOUBLE) * syy - sy * sy AS dy
-        |      FROM s)
-        |SELECT m // 2 AS n_edges,
-        |  CASE WHEN dx > 0.0 AND dy > 0.0 THEN
-        |    greatest(-1.0::DOUBLE, least(1.0::DOUBLE,
-        |      num / (sqrt(dx) * sqrt(dy)))) END AS assortativity
-        |FROM f""".stripMargin,
-    // Link-prediction replay: same wedge build through the middle node,
-    // integer counts/degrees, one Jaccard division, and the Adamic–Adar
-    // fold over the middle-ordered degree list with per-term rounded ln.
-    "q_link_predict" ->
-      """WITH half AS (SELECT DISTINCT a.l_suppkey AS u, b.l_suppkey AS v
-        |              FROM lineitem a JOIN lineitem b
-        |                ON a.l_orderkey = b.l_orderkey
-        |               AND a.l_suppkey < b.l_suppkey
-        |              WHERE a.l_quantity >= 48 AND b.l_quantity >= 48),
-        |adj AS (SELECT u AS m, v AS x FROM half
-        |        UNION ALL SELECT v, u FROM half),
-        |deg AS (SELECT m AS node, CAST(count(*) AS BIGINT) AS d
-        |        FROM adj GROUP BY m),
-        |wed AS (SELECT p.m, p.x AS na, q.x AS nb
-        |        FROM adj p JOIN adj q ON q.m = p.m AND p.x < q.x),
-        |sc AS (SELECT w.na, w.nb, CAST(count(*) AS BIGINT) AS common_n,
-        |         list(dm.d ORDER BY w.m) AS ds
-        |       FROM wed w JOIN deg dm ON dm.node = w.m
-        |       GROUP BY w.na, w.nb
-        |       HAVING count(*) >= 2),
-        |cand AS (SELECT s.* FROM sc s
-        |         WHERE NOT EXISTS (SELECT 1 FROM half h
-        |                           WHERE h.u = s.na AND h.v = s.nb))
-        |SELECT c.na AS node_a, c.nb AS node_b, c.common_n,
-        |  CAST(c.common_n AS DOUBLE)
-        |    / CAST(da.d + db.d - c.common_n AS DOUBLE) AS jaccard,
-        |  list_reduce(list_transform(c.ds,
-        |    v -> 1.0::DOUBLE / (round(ln(CAST(v AS DOUBLE)), 10) + 0.0)),
-        |    (x, y) -> x + y) AS adamic_adar
-        |FROM cand c
-        |JOIN deg da ON da.node = c.na
-        |JOIN deg db ON db.node = c.nb
-        |ORDER BY node_a, node_b""".stripMargin,
-    // Label-propagation replay: the same co-supplier edge build, then
-    // three UNROLLED synchronous rounds — per round, neighbor-label
-    // votes and the (count DESC, label ASC) winner via row_number, the
-    // exact total order of the struct-max argmax.
-    "q_label_prop" -> {
-      def round(i: Int): String =
-        s"""c$i AS (SELECT u.a, l.label, CAST(count(*) AS BIGINT) AS cnt
-           |  FROM und u JOIN l${i - 1} l ON l.node = u.b
-           |  GROUP BY u.a, l.label),
-           |l$i AS (SELECT a AS node, label FROM (
-           |  SELECT a, label, row_number() OVER (PARTITION BY a
-           |    ORDER BY cnt DESC, label ASC) AS r FROM c$i) t
-           |  WHERE r = 1)""".stripMargin
-      s"""WITH half AS (SELECT DISTINCT a.l_suppkey AS u, b.l_suppkey AS v
-         |              FROM lineitem a JOIN lineitem b
-         |                ON a.l_orderkey = b.l_orderkey
-         |               AND a.l_suppkey < b.l_suppkey
-         |              WHERE a.l_quantity >= 48 AND b.l_quantity >= 48),
-         |und AS (SELECT u AS a, v AS b FROM half
-         |        UNION SELECT v, u FROM half),
-         |l0 AS (SELECT DISTINCT a AS node, a AS label FROM und),
-         |${(1 to 3).map(round).mkString(",\n")}
-         |SELECT node, label AS community FROM l3 ORDER BY node""".stripMargin
-    },
-    "q_kcore" -> {
-      def round(i: Int): String =
-        s"""d$i AS (SELECT node, count(*) AS d FROM (
-           |  SELECT u AS node FROM e${i - 1}
-           |  UNION ALL SELECT v AS node FROM e${i - 1}) t GROUP BY 1),
-           |w$i AS (SELECT node FROM d$i WHERE d < 5),
-           |e$i AS MATERIALIZED (SELECT u, v FROM e${i - 1}
-           |        WHERE u NOT IN (SELECT node FROM w$i)
-           |          AND v NOT IN (SELECT node FROM w$i))""".stripMargin
-      s"""WITH e0 AS MATERIALIZED (SELECT DISTINCT a.l_suppkey AS u, b.l_suppkey AS v
-         |            FROM lineitem a JOIN lineitem b
-         |              ON a.l_orderkey = b.l_orderkey
-         |             AND a.l_suppkey < b.l_suppkey
-         |            WHERE a.l_quantity >= 48 AND b.l_quantity >= 48),
-         |${(1 to 4).map(round).mkString(",\n")}
-         |SELECT node, CAST(count(*) AS BIGINT) AS degree FROM (
-         |  SELECT u AS node FROM e4 UNION ALL SELECT v AS node FROM e4) t
-         |GROUP BY node
-         |ORDER BY node""".stripMargin
-    },
-    // Replays Freq.associationRules: same distinct itemization, frequent
-    // pruning, u<v pair counting, two-direction expansion, and
-    // single-division confidence/lift.
-    "q_assoc_rules" ->
-      """WITH items AS (SELECT DISTINCT l_orderkey AS b, l_partkey AS i
-        |               FROM lineitem),
-        |sup AS (SELECT i, CAST(count(*) AS BIGINT) AS n FROM items GROUP BY i),
-        |freq AS (SELECT i FROM sup WHERE n >= 3),
-        |fi AS (SELECT b, i FROM items JOIN freq USING (i)),
-        |nb AS (SELECT CAST(count(DISTINCT b) AS BIGINT) AS nbask FROM items),
-        |pc AS (SELECT a.i AS i1, c.i AS i2, CAST(count(*) AS BIGINT) AS sp
-        |       FROM fi a JOIN fi c ON a.b = c.b AND a.i < c.i
-        |       GROUP BY 1, 2 HAVING count(*) >= 3),
-        |d AS (SELECT i1 AS a, i2 AS c, sp FROM pc
-        |      UNION ALL SELECT i2, i1, sp FROM pc)
-        |SELECT d.a AS antecedent, d.c AS consequent, d.sp AS sup_pair,
-        |  sa.n AS sup_ante, sc.n AS sup_cons,
-        |  CAST(d.sp AS DOUBLE) / CAST(sa.n AS DOUBLE) AS confidence,
-        |  CAST(d.sp * nb.nbask AS DOUBLE) / CAST(sa.n * sc.n AS DOUBLE) AS lift
-        |FROM d JOIN sup sa ON sa.i = d.a JOIN sup sc ON sc.i = d.c
-        |CROSS JOIN nb
-        |ORDER BY antecedent, consequent""".stripMargin,
-    // Oracle for Graph.triangleCount: the naive u<v<w closed-triple count
-    // over the same normalized edge set — orientation changes the plan,
-    // never the total.
-    "q_triangles" ->
-      """WITH e AS (SELECT DISTINCT a.l_suppkey AS u, b.l_suppkey AS v
-        |           FROM lineitem a JOIN lineitem b
-        |             ON a.l_orderkey = b.l_orderkey
-        |            AND a.l_suppkey < b.l_suppkey
-        |           WHERE a.l_quantity >= 40 AND b.l_quantity >= 40)
-        |SELECT (SELECT count(*) FROM e) AS n_edges,
-        |  (SELECT count(*) FROM e e1
-        |     JOIN e e2 ON e2.u = e1.v
-        |     JOIN e e3 ON e3.u = e1.u AND e3.v = e2.v) AS n_triangles""".stripMargin,
-    // Local-clustering replay: naive per-corner wedge-closing count over
-    // the normalized adjacency (the q_triangles brute-force discipline),
-    // exact integers, one final division.
-    "q_local_clustering" ->
-      """WITH e AS (SELECT DISTINCT a.l_suppkey AS u, b.l_suppkey AS v
-        |           FROM lineitem a JOIN lineitem b
-        |             ON a.l_orderkey = b.l_orderkey
-        |            AND a.l_suppkey < b.l_suppkey
-        |           WHERE a.l_quantity >= 40 AND b.l_quantity >= 40),
-        |adj AS (SELECT u AS m, v AS x FROM e UNION ALL SELECT v, u FROM e),
-        |deg AS (SELECT m AS node, CAST(count(*) AS BIGINT) AS degree
-        |        FROM adj GROUP BY m),
-        |tri AS (SELECT a.m AS node, CAST(count(*) AS BIGINT) AS t
-        |        FROM adj a JOIN adj b ON a.m = b.m AND a.x < b.x
-        |        JOIN e ON e.u = a.x AND e.v = b.x
-        |        GROUP BY a.m)
-        |SELECT d.node, d.degree,
-        |  COALESCE(t.t, 0) AS triangles,
-        |  CASE WHEN d.degree >= 2
-        |    THEN (2.0::DOUBLE * CAST(COALESCE(t.t, 0) AS DOUBLE))
-        |         / CAST(d.degree * (d.degree - 1) AS DOUBLE)
-        |    ELSE 0.0::DOUBLE END AS lcc
-        |FROM deg d LEFT JOIN tri t ON t.node = d.node
-        |ORDER BY d.node""".stripMargin,
-    // HITS replay: three unrolled mutual-reinforcement rounds — each
-    // half-step is the rounded contribution sum then the rounded
-    // max-normalization, exactly the operator's update order.
-    "q_hits" -> {
-      val rounds = (1 to 3).map { i =>
-        val hPrev = if (i == 1) "h0" else s"h${i - 1}"
-        s"""a${i}r AS (
-           |  SELECT e.dst AS node, round(sum(h.hub), 10) AS s
-           |  FROM e JOIN $hPrev h ON h.node = e.src GROUP BY e.dst),
-           |a$i AS MATERIALIZED (
-           |  SELECT node, round(s / (SELECT max(s) FROM a${i}r), 10) AS auth
-           |  FROM a${i}r),
-           |h${i}r AS (
-           |  SELECT e.src AS node, round(sum(a.auth), 10) AS s
-           |  FROM e JOIN a$i a ON a.node = e.dst GROUP BY e.src),
-           |h$i AS MATERIALIZED (
-           |  SELECT node, round(s / (SELECT max(s) FROM h${i}r), 10) AS hub
-           |  FROM h${i}r)""".stripMargin
-      }.mkString(",\n")
-      s"""WITH cs AS (SELECT DISTINCT o_custkey AS src, l_suppkey + 1000000 AS dst
-         |            FROM orders JOIN lineitem ON o_orderkey = l_orderkey),
-         |e AS MATERIALIZED (SELECT src, dst FROM cs WHERE src <> dst),
-         |nodes AS (SELECT src AS node FROM e UNION SELECT dst FROM e),
-         |h0 AS (SELECT node, 1.0::DOUBLE AS hub FROM nodes),
-         |$rounds
-         |SELECT n.node,
-         |  COALESCE(h3.hub, 0.0::DOUBLE) AS hub,
-         |  COALESCE(a3.auth, 0.0::DOUBLE) AS auth
-         |FROM nodes n
-         |LEFT JOIN h3 ON h3.node = n.node
-         |LEFT JOIN a3 ON a3.node = n.node
-         |ORDER BY n.node""".stripMargin
-    },
-    // Replays the chained scd2Apply as three explicit branches over the
-    // two snapshots: surviving-open rows (payload equal), closes (key
-    // vanished or payload changed), inserts (key new or payload changed).
-    "q_scd2" ->
-      """WITH s1 AS (SELECT c_custkey, c_name, c_acctbal FROM customer
-        |            WHERE c_custkey % 13 <> 0),
-        |s2 AS (SELECT c_custkey, c_name,
-        |         CASE WHEN c_custkey % 7 = 0
-        |           THEN c_acctbal + 100.0::DOUBLE ELSE c_acctbal END AS c_acctbal
-        |       FROM customer WHERE c_custkey % 11 <> 0)
-        |SELECT a.c_custkey, a.c_name, a.c_acctbal,
-        |  CAST(100 AS BIGINT) AS valid_from, CAST(NULL AS BIGINT) AS valid_to
-        |FROM s1 a JOIN s2 b ON a.c_custkey = b.c_custkey
-        |WHERE a.c_name = b.c_name AND a.c_acctbal = b.c_acctbal
-        |UNION ALL
-        |SELECT a.c_custkey, a.c_name, a.c_acctbal,
-        |  CAST(100 AS BIGINT), CAST(200 AS BIGINT)
-        |FROM s1 a LEFT JOIN s2 b ON a.c_custkey = b.c_custkey
-        |WHERE b.c_custkey IS NULL
-        |   OR a.c_name <> b.c_name OR a.c_acctbal <> b.c_acctbal
-        |UNION ALL
-        |SELECT b.c_custkey, b.c_name, b.c_acctbal,
-        |  CAST(200 AS BIGINT), CAST(NULL AS BIGINT)
-        |FROM s2 b LEFT JOIN s1 a ON a.c_custkey = b.c_custkey
-        |WHERE a.c_custkey IS NULL
-        |   OR a.c_name <> b.c_name OR a.c_acctbal <> b.c_acctbal
-        |ORDER BY c_custkey, valid_from""".stripMargin,
-    // Replays Sampling.negativePairs: same md5 ring, hex-prefix bucket,
-    // modular neighbor walk, self-pair filter.
-    "q_negative_pairs" ->
-      """WITH ring0 AS (
-        |  SELECT doc_id, md5(CAST(doc_id AS VARCHAR)) AS h FROM documents),
-        |ring AS (
-        |  SELECT doc_id, h,
-        |    CAST('0x' || substr(h, 1, 4) AS BIGINT) % 16 AS bk
-        |  FROM ring0),
-        |rk AS (
-        |  SELECT doc_id, bk,
-        |    CAST(row_number() OVER (PARTITION BY bk ORDER BY h, doc_id)
-        |      AS BIGINT) AS r,
-        |    CAST(count(*) OVER (PARTITION BY bk) AS BIGINT) AS m
-        |  FROM ring),
-        |a AS (
-        |  SELECT rk.doc_id AS anchor, rk.bk, rk.r, rk.m,
-        |    CAST(j AS INT) AS j,
-        |    ((rk.r - 1 + j) % rk.m) + 1 AS r2
-        |  FROM rk, unnest(range(1, 3)) AS t(j)),
-        |p AS (SELECT * FROM a WHERE r2 <> r)
-        |SELECT p.anchor, n.doc_id AS negative, p.j
-        |FROM p JOIN rk n ON n.bk = p.bk AND n.r = p.r2
-        |ORDER BY p.anchor, p.j""".stripMargin,
-    // Replays Divergence.ksTest with a single global cumulative window —
-    // the Spark side's bucketed two-level prefix sum decomposes the same
-    // integer cumsums, so D matches bit-for-bit with no rounding.
-    "q_ks" ->
-      """WITH ca AS (SELECT value AS v, count(*) AS na FROM events
-        |            WHERE event_type = 'purchase' GROUP BY 1),
-        |cb AS (SELECT value AS v, count(*) AS nb FROM events
-        |       WHERE event_type = 'view' GROUP BY 1),
-        |comb AS (SELECT coalesce(ca.v, cb.v) AS v,
-        |           CAST(coalesce(na, 0) AS BIGINT) AS na,
-        |           CAST(coalesce(nb, 0) AS BIGINT) AS nb
-        |         FROM ca FULL OUTER JOIN cb ON ca.v = cb.v),
-        |cum AS (SELECT v, sum(na) OVER (ORDER BY v) AS cna,
-        |          sum(nb) OVER (ORDER BY v) AS cnb FROM comb),
-        |tot AS (SELECT CAST(sum(na) AS BIGINT) AS n_a,
-        |          CAST(sum(nb) AS BIGINT) AS n_b FROM comb)
-        |SELECT n_a, n_b,
-        |  max(abs(CAST(cna AS DOUBLE) / CAST(n_a AS DOUBLE)
-        |        - CAST(cnb AS DOUBLE) / CAST(n_b AS DOUBLE))) AS ks_d
-        |FROM cum, tot GROUP BY n_a, n_b""".stripMargin,
-    // Replays Divergence.jsDivergence: combined top-100 vocab (total desc,
-    // token asc), token-ordered fold of 0.5·p·ln(p/m) + 0.5·q·ln(q/m)
-    // with the 0·ln0=0 convention, round(_,10)+0.0.
-    "q_jsd" ->
-      """WITH ta AS (SELECT unnest(string_split_regex(lower(text), '[^a-z0-9]+')) AS w
-        |            FROM documents WHERE lang = 'en'),
-        |ca AS (SELECT w AS token, count(*) AS na FROM ta WHERE w <> '' GROUP BY 1),
-        |tb AS (SELECT unnest(string_split_regex(lower(text), '[^a-z0-9]+')) AS w
-        |       FROM documents WHERE lang <> 'en'),
-        |cb AS (SELECT w AS token, count(*) AS nb FROM tb WHERE w <> '' GROUP BY 1),
-        |comb AS (SELECT coalesce(ca.token, cb.token) AS token,
-        |           CAST(coalesce(na, 0) AS BIGINT) AS na,
-        |           CAST(coalesce(nb, 0) AS BIGINT) AS nb
-        |         FROM ca FULL OUTER JOIN cb ON ca.token = cb.token),
-        |vocab AS (SELECT token, na, nb FROM comb
-        |          ORDER BY (na + nb) DESC, token ASC LIMIT 100),
-        |f AS (SELECT CAST(sum(na) AS BIGINT) AS n_tokens_a,
-        |        CAST(sum(nb) AS BIGINT) AS n_tokens_b,
-        |        list(struct_pack(t := token, a := na, b := nb)
-        |          ORDER BY token) AS ts
-        |      FROM vocab)
-        |SELECT n_tokens_a, n_tokens_b,
-        |  round(list_reduce(list_transform(ts, e ->
-        |    (CASE WHEN e.a > 0 THEN
-        |       0.5 * (CAST(e.a AS DOUBLE) / CAST(n_tokens_a AS DOUBLE))
-        |       * ln((CAST(e.a AS DOUBLE) / CAST(n_tokens_a AS DOUBLE))
-        |         / ((CAST(e.a AS DOUBLE) / CAST(n_tokens_a AS DOUBLE)
-        |             + CAST(e.b AS DOUBLE) / CAST(n_tokens_b AS DOUBLE)) / 2.0))
-        |     ELSE 0.0 END)
-        |    + (CASE WHEN e.b > 0 THEN
-        |         0.5 * (CAST(e.b AS DOUBLE) / CAST(n_tokens_b AS DOUBLE))
-        |         * ln((CAST(e.b AS DOUBLE) / CAST(n_tokens_b AS DOUBLE))
-        |           / ((CAST(e.a AS DOUBLE) / CAST(n_tokens_a AS DOUBLE)
-        |               + CAST(e.b AS DOUBLE) / CAST(n_tokens_b AS DOUBLE)) / 2.0))
-        |       ELSE 0.0 END)),
-        |    (x, y) -> x + y), 10) + 0.0 AS jsd
-        |FROM f""".stripMargin,
-    // Replays Sampling.temperatureRates: same source-ordered pow fold for
-    // the denominator, same round(_,10)+0.0 on mix_p/rate; the sample
-    // oracle also rebuilds the hash thresholds with floor(rate·2^60)
-    // (floor == Scala toLong truncation for nonnegative rates).
-    "q_temperature_rates" ->
-      """WITH c AS (SELECT source, CAST(count(*) AS BIGINT) AS n_rows
-        |           FROM documents GROUP BY source),
-        |p AS (SELECT source, n_rows, pow(CAST(n_rows AS DOUBLE), 0.5) AS pw FROM c),
-        |dl AS (SELECT list(struct_pack(s := source, w := pw) ORDER BY source) AS l FROM p),
-        |dd AS (SELECT list_reduce(list_transform(l, e -> CAST(e.w AS DOUBLE)),
-        |         (a, b) -> a + b) AS denom FROM dl)
-        |SELECT source, n_rows,
-        |  round(pw / dd.denom, 10) + 0.0 AS mix_p,
-        |  round(LEAST(1.0, 300.0 * (pw / dd.denom) / CAST(n_rows AS DOUBLE)), 10)
-        |    + 0.0 AS rate
-        |FROM p, dd ORDER BY source""".stripMargin,
-    "q_temperature_sample" ->
-      """WITH c AS (SELECT source, CAST(count(*) AS BIGINT) AS n_rows
-        |           FROM documents GROUP BY source),
-        |p AS (SELECT source, n_rows, pow(CAST(n_rows AS DOUBLE), 0.5) AS pw FROM c),
-        |dl AS (SELECT list(struct_pack(s := source, w := pw) ORDER BY source) AS l FROM p),
-        |dd AS (SELECT list_reduce(list_transform(l, e -> CAST(e.w AS DOUBLE)),
-        |         (a, b) -> a + b) AS denom FROM dl),
-        |r AS (SELECT source,
-        |        round(LEAST(1.0, 300.0 * (pw / dd.denom) / CAST(n_rows AS DOUBLE)), 10)
-        |          + 0.0 AS rate
-        |      FROM p, dd)
-        |SELECT d.source, count(*) AS n, CAST(sum(d.doc_id) AS BIGINT) AS sum_id
-        |FROM documents d JOIN r ON d.source = r.source
-        |WHERE CAST('0x' || substr(md5(d.doc_id::VARCHAR), 1, 15) AS BIGINT)
-        |  < CAST(floor(r.rate * 1152921504606846976.0) AS BIGINT)
-        |GROUP BY d.source ORDER BY d.source""".stripMargin,
-    // Replays Divergence.psi: same clamped fixed-width bins, same
-    // add-one smoothed (n+1)/(N+nBins) probabilities, same
-    // (p-q)*round(ln(p/q),10) term per bin.
-    "q_psi" ->
-      """WITH b AS (
-        |  SELECT LEAST(9, GREATEST(0, CAST(floor((l_quantity - 0.0) / 5.0) AS INT))) AS bin,
-        |    CASE WHEN l_shipdate < TIMESTAMP '1995-01-01' THEN 1 ELSE 0 END AS isref
-        |  FROM lineitem),
-        |spine AS (SELECT CAST(unnest(range(10)) AS INT) AS bin),
-        |c AS (SELECT spine.bin,
-        |        CAST(coalesce(sum(CASE WHEN isref = 1 THEN 1 END), 0) AS BIGINT) AS n_ref,
-        |        CAST(coalesce(sum(CASE WHEN isref = 0 THEN 1 END), 0) AS BIGINT) AS n_cur
-        |      FROM spine LEFT JOIN b USING (bin) GROUP BY spine.bin),
-        |t AS (SELECT CAST(sum(n_ref) AS BIGINT) AS tr,
-        |        CAST(sum(n_cur) AS BIGINT) AS tc FROM c)
-        |SELECT bin, 0.0 + bin * 5.0 AS bin_lo, n_ref, n_cur,
-        |  (CAST(n_ref AS DOUBLE) + 1.0) / (CAST(tr AS DOUBLE) + 10.0) AS p_ref,
-        |  (CAST(n_cur AS DOUBLE) + 1.0) / (CAST(tc AS DOUBLE) + 10.0) AS p_cur,
-        |  ((CAST(n_ref AS DOUBLE) + 1.0) / (CAST(tr AS DOUBLE) + 10.0)
-        |    - (CAST(n_cur AS DOUBLE) + 1.0) / (CAST(tc AS DOUBLE) + 10.0))
-        |  * (round(ln(((CAST(n_ref AS DOUBLE) + 1.0) / (CAST(tr AS DOUBLE) + 10.0))
-        |      / ((CAST(n_cur AS DOUBLE) + 1.0) / (CAST(tc AS DOUBLE) + 10.0))), 10)
-        |     + 0.0) AS psi_term
-        |FROM c, t ORDER BY bin""".stripMargin,
-    // Replays TextOps.bigramPmi: same adjacent zip, same top-50 cut
-    // (count desc, w1, w2), same ln((nab/tb)/((na/tu)*(nb/tu))) tree
-    // rounded to 10.
-    "q_bigram_pmi" ->
-      """WITH tk AS (
-        |  SELECT list_filter(string_split_regex(lower(text), '[^a-z0-9]+'),
-        |    w -> w <> '') AS ts
-        |  FROM documents),
-        |uni AS (SELECT unnest(ts) AS w FROM tk),
-        |uc AS (SELECT w, count(*) AS nu FROM uni GROUP BY w),
-        |ut AS (SELECT CAST(sum(nu) AS BIGINT) AS tu FROM uc),
-        |bi AS (SELECT unnest(list_zip(ts[1:len(ts)-1], ts[2:len(ts)])) AS z
-        |       FROM tk WHERE len(ts) >= 2),
-        |bc AS (SELECT z[1] AS w1, z[2] AS w2, count(*) AS n_bigram
-        |       FROM bi GROUP BY 1, 2),
-        |bt AS (SELECT CAST(sum(n_bigram) AS BIGINT) AS tb FROM bc),
-        |top AS (SELECT w1, w2, n_bigram FROM bc
-        |        ORDER BY n_bigram DESC, w1 ASC, w2 ASC LIMIT 50)
-        |SELECT top.w1, top.w2, top.n_bigram,
-        |  round(ln((CAST(top.n_bigram AS DOUBLE) / CAST(bt.tb AS DOUBLE))
-        |    / ((CAST(a.nu AS DOUBLE) / CAST(ut.tu AS DOUBLE))
-        |       * (CAST(b.nu AS DOUBLE) / CAST(ut.tu AS DOUBLE)))), 10)
-        |    + 0.0 AS pmi
-        |FROM top
-        |JOIN uc a ON a.w = top.w1
-        |JOIN uc b ON b.w = top.w2
-        |CROSS JOIN bt CROSS JOIN ut
-        |ORDER BY w1, w2""".stripMargin,
-    // Replays TextOps.tfidfCosinePairs: same rational-idf weights (the
-    // q_tfidf expression), term-ordered norm/dot folds, sqrt norms, one
-    // division — no ln, no rounding.
-    "q_tfidf_pairs" ->
-      """WITH base AS (SELECT doc_id, text FROM documents WHERE doc_id < 300),
-        |toks AS (
-        |  SELECT doc_id, w FROM (
-        |    SELECT doc_id, unnest(string_split_regex(lower(text), '[^a-z0-9]+')) AS w
-        |    FROM base) t WHERE w <> ''),
-        |tf AS (SELECT doc_id, w AS term, count(*) AS tf FROM toks GROUP BY 1, 2),
-        |dfq AS (SELECT term, count(*) AS df FROM tf GROUP BY term),
-        |n AS (SELECT count(*) AS n FROM base),
-        |wt AS (
-        |  SELECT t.doc_id, t.term,
-        |    CAST(t.tf AS DOUBLE) *
-        |      ((CAST(n.n AS DOUBLE) + 1.0::DOUBLE) / (CAST(d.df AS DOUBLE) + 1.0::DOUBLE)) AS w
-        |  FROM tf t JOIN dfq d USING (term) CROSS JOIN n),
-        |norms AS (
-        |  SELECT doc_id,
-        |    sqrt(list_reduce(list(w * w ORDER BY term), (a, b) -> a + b)) AS nrm
-        |  FROM wt GROUP BY doc_id),
-        |dots AS (
-        |  SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-        |    CAST(count(*) AS BIGINT) AS n_shared,
-        |    list_reduce(list(a.w * b.w ORDER BY a.term), (x, y) -> x + y) AS dot
-        |  FROM wt a JOIN wt b ON a.term = b.term AND a.doc_id < b.doc_id
-        |  GROUP BY 1, 2)
-        |SELECT d.id_a, d.id_b, d.n_shared,
-        |  d.dot / (na.nrm * nb.nrm) AS cosine
-        |FROM dots d
-        |JOIN norms na ON na.doc_id = d.id_a
-        |JOIN norms nb ON nb.doc_id = d.id_b
-        |WHERE d.dot / (na.nrm * nb.nrm) >= 0.85
-        |ORDER BY d.id_a, d.id_b""".stripMargin,
-    // Replays TextOps.zipfFit: same vocab/rank order, pre-rounded ln per
-    // element, the same five rank-ordered folds, and identically
-    // parenthesized closed forms.
-    "q_zipf" ->
-      """WITH tk AS (
-        |  SELECT unnest(list_filter(string_split_regex(lower(text), '[^a-z0-9]+'),
-        |    w -> w <> '')) AS token
-        |  FROM documents),
-        |vc AS (SELECT token, CAST(count(*) AS BIGINT) AS gn FROM tk
-        |       GROUP BY token ORDER BY gn DESC, token ASC LIMIT 1000),
-        |rk AS (SELECT gn,
-        |         row_number() OVER (ORDER BY gn DESC, token ASC) AS r
-        |       FROM vc),
-        |f AS (SELECT CAST(count(*) AS BIGINT) AS n_types,
-        |        list(struct_pack(
-        |          x := round(ln(CAST(r AS DOUBLE)), 10) + 0.0,
-        |          y := round(ln(CAST(gn AS DOUBLE)), 10) + 0.0)
-        |          ORDER BY r) AS ts
-        |      FROM rk),
-        |s AS (SELECT n_types, CAST(n_types AS DOUBLE) AS n,
-        |        list_reduce(list_transform(ts, e -> e.x), (a, b) -> a + b) AS sx,
-        |        list_reduce(list_transform(ts, e -> e.y), (a, b) -> a + b) AS sy,
-        |        list_reduce(list_transform(ts, e -> e.x * e.y), (a, b) -> a + b) AS sxy,
-        |        list_reduce(list_transform(ts, e -> e.x * e.x), (a, b) -> a + b) AS sxx,
-        |        list_reduce(list_transform(ts, e -> e.y * e.y), (a, b) -> a + b) AS syy
-        |      FROM f)
-        |SELECT n_types,
-        |  (n * sxy - sx * sy) / (n * sxx - sx * sx) AS slope,
-        |  (sy - ((n * sxy - sx * sy) / (n * sxx - sx * sx)) * sx) / n AS intercept,
-        |  CASE WHEN (n * syy - sy * sy) > 0.0 THEN
-        |    (n * sxy - sx * sy) * (n * sxy - sx * sy)
-        |      / ((n * sxx - sx * sx) * (n * syy - sy * sy))
-        |  END AS r2
-        |FROM s""".stripMargin,
-    // Replays TextOps.cooccurrencePmi: position join within distance 3,
-    // (least, greatest) canonicalization, identical top-K boundary and
-    // rounded ln.
-    "q_cooc_pmi" ->
-      """WITH tk AS (
-        |  SELECT doc_id, list_filter(string_split_regex(lower(text), '[^a-z0-9]+'),
-        |    w -> w <> '') AS ts
-        |  FROM documents),
-        |pos AS (SELECT doc_id, unnest(ts) AS w,
-        |          generate_subscripts(ts, 1) AS p FROM tk),
-        |pairs AS (SELECT least(a.w, b.w) AS w1, greatest(a.w, b.w) AS w2
-        |          FROM pos a JOIN pos b
-        |            ON a.doc_id = b.doc_id AND b.p > a.p AND b.p <= a.p + 3),
-        |pc AS (SELECT w1, w2, CAST(count(*) AS BIGINT) AS n_pair
-        |       FROM pairs GROUP BY 1, 2),
-        |tp AS (SELECT CAST(sum(n_pair) AS BIGINT) AS t FROM pc),
-        |uc AS (SELECT w, CAST(count(*) AS BIGINT) AS nu FROM pos GROUP BY w),
-        |tu AS (SELECT CAST(sum(nu) AS BIGINT) AS t FROM uc),
-        |top AS (SELECT w1, w2, n_pair FROM pc
-        |        ORDER BY n_pair DESC, w1 ASC, w2 ASC LIMIT 50)
-        |SELECT top.w1, top.w2, top.n_pair,
-        |  round(ln((CAST(top.n_pair AS DOUBLE) / CAST(tp.t AS DOUBLE))
-        |    / ((CAST(a.nu AS DOUBLE) / CAST(tu.t AS DOUBLE))
-        |       * (CAST(b.nu AS DOUBLE) / CAST(tu.t AS DOUBLE)))), 10)
-        |    + 0.0 AS pmi
-        |FROM top
-        |JOIN uc a ON a.w = top.w1
-        |JOIN uc b ON b.w = top.w2
-        |CROSS JOIN tp CROSS JOIN tu
-        |ORDER BY w1, w2""".stripMargin,
-    // Replays TextOps.bigramSurprisal: same top-500 vocab, same in-vocab
-    // pair restriction, identical smoothed conditional expression, and
-    // the identical (w1, w2)-ordered left fold + round(_, 10)+0.0.
-    "q_bigram_surprisal" ->
-      """WITH tk AS (
-        |  SELECT doc_id, list_filter(string_split_regex(lower(text), '[^a-z0-9]+'),
-        |    w -> w <> '') AS ts
-        |  FROM documents),
-        |uni AS (SELECT unnest(ts) AS token FROM tk),
-        |vocab AS (SELECT token FROM (
-        |  SELECT token, count(*) AS gn FROM uni GROUP BY token
-        |  ORDER BY gn DESC, token ASC LIMIT 500) v0),
-        |pairs AS (SELECT doc_id, z[1] AS w1, z[2] AS w2 FROM (
-        |  SELECT doc_id, unnest(list_zip(ts[1:len(ts)-1], ts[2:len(ts)])) AS z
-        |  FROM tk WHERE len(ts) >= 2) p0),
-        |iv AS (SELECT p.doc_id, p.w1, p.w2 FROM pairs p
-        |       JOIN vocab v1 ON v1.token = p.w1
-        |       JOIN vocab v2 ON v2.token = p.w2),
-        |cc AS (SELECT w1, w2, CAST(count(*) AS BIGINT) AS c12
-        |       FROM iv GROUP BY 1, 2),
-        |lt AS (SELECT w1, CAST(sum(c12) AS BIGINT) AS c1 FROM cc GROUP BY 1),
-        |dp AS (SELECT doc_id, w1, w2, CAST(count(*) AS BIGINT) AS m
-        |       FROM iv GROUP BY 1, 2, 3),
-        |j AS (SELECT dp.doc_id, dp.w1, dp.w2, dp.m, cc.c12, lt.c1
-        |      FROM dp JOIN cc USING (w1, w2) JOIN lt USING (w1)),
-        |g AS (SELECT doc_id, CAST(sum(m) AS BIGINT) AS n_iv,
-        |        list(CAST(m AS DOUBLE) *
-        |             ln((CAST(c12 AS DOUBLE) + 0.1::DOUBLE)
-        |                / (CAST(c1 AS DOUBLE) + 0.1::DOUBLE * 500.0::DOUBLE))
-        |          ORDER BY w1, w2) AS es
-        |      FROM j GROUP BY doc_id),
-        |base AS (SELECT doc_id,
-        |           CAST(greatest(len(ts) - 1, 0) AS BIGINT) AS n_bigrams
-        |         FROM tk)
-        |SELECT b.doc_id, b.n_bigrams,
-        |  b.n_bigrams - coalesce(g.n_iv, 0) AS n_oov_bigrams,
-        |  CASE WHEN g.n_iv > 0 THEN
-        |    round(-(list_reduce(es, (a, e) -> a + e))
-        |          / CAST(g.n_iv AS DOUBLE), 10) + 0.0
-        |  END AS bigram_surprisal
-        |FROM base b LEFT JOIN g USING (doc_id)
-        |ORDER BY b.doc_id""".stripMargin,
-    // Replays TextOps.unigramSurprisal: same top-1000 vocabulary (count
-    // desc, token asc), same renormalized gn/G model, same token-ordered
-    // left fold (list_reduce seedless == Spark's 0.0-seeded aggregate:
-    // 0+x1 is exact), same round(_, 10)+0.0.
-    "q_surprisal" ->
-      """WITH tok0 AS (
-        |  SELECT doc_id, unnest(string_split_regex(lower(text), '[^a-z0-9]+')) AS w
-        |  FROM documents),
-        |tk AS (SELECT doc_id, w AS token FROM tok0 WHERE w <> ''),
-        |counts AS (SELECT doc_id, token, count(*) AS n FROM tk GROUP BY 1, 2),
-        |vocab AS (SELECT token, CAST(sum(n) AS BIGINT) AS gn FROM counts
-        |          GROUP BY token ORDER BY gn DESC, token ASC LIMIT 1000),
-        |g AS (SELECT CAST(sum(gn) AS BIGINT) AS gt FROM vocab),
-        |base AS (SELECT doc_id,
-        |  CAST(len(list_filter(string_split_regex(lower(text), '[^a-z0-9]+'),
-        |    w -> w <> '')) AS BIGINT) AS n_tokens
-        |  FROM documents),
-        |sup AS (SELECT c.doc_id, c.token, c.n, v.gn
-        |        FROM counts c JOIN vocab v USING (token)),
-        |agg AS (SELECT doc_id, CAST(sum(n) AS BIGINT) AS n_iv,
-        |          list(struct_pack(t := token, n := n, gn := gn)
-        |            ORDER BY token) AS ts
-        |        FROM sup GROUP BY doc_id),
-        |sc AS (SELECT agg.doc_id, n_iv,
-        |         round(-(list_reduce(list_transform(ts,
-        |             e -> CAST(e.n AS DOUBLE)
-        |               * ln(CAST(e.gn AS DOUBLE) / CAST(g.gt AS DOUBLE))),
-        |             (a, b) -> a + b)) / CAST(n_iv AS DOUBLE), 10)
-        |           + 0.0 AS surprisal
-        |       FROM agg, g)
-        |SELECT b.doc_id, b.n_tokens,
-        |  b.n_tokens - coalesce(sc.n_iv, 0) AS n_oov, sc.surprisal
-        |FROM base b LEFT JOIN sc ON b.doc_id = sc.doc_id
-        |ORDER BY b.doc_id""".stripMargin,
-    // Replays session_window semantics via gap islands: NEW session only
-    // when the gap EXCEEDS 43200 (Spark still merges a gap exactly equal
-    // to the window — boundary-inclusive); window end = last event + gap.
-    "q_session_window" ->
-      """WITH e AS (
-        |  SELECT user_id, epoch_ns(ts) // 1000000000 AS ts_sec FROM events),
-        |f AS (
-        |  SELECT user_id, ts_sec,
-        |    CASE WHEN lag(ts_sec) OVER w IS NULL
-        |              OR ts_sec - lag(ts_sec) OVER w > 43200
-        |         THEN 1 ELSE 0 END AS ns
-        |  FROM e WINDOW w AS (PARTITION BY user_id ORDER BY ts_sec)),
-        |g AS (
-        |  SELECT user_id, ts_sec,
-        |    sum(ns) OVER (PARTITION BY user_id ORDER BY ts_sec
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS sid
-        |  FROM f)
-        |SELECT user_id, min(ts_sec) AS start_sec,
-        |  max(ts_sec) + 43200 AS end_sec, count(*) AS n_events
-        |FROM g GROUP BY user_id, sid
-        |ORDER BY user_id, start_sec""".stripMargin,
-    // Replays Graph.pageRank with the 3 iterations unrolled: same init,
-    // same contribution join, same (1-0.85) literal, same per-iteration
-    // round(_, 10) — the rounding is what absorbs cross-engine summation
-    // order, as with the k-means centroids.
-    "q_pagerank" ->
-      """WITH cs AS (SELECT DISTINCT o_custkey AS cust, l_suppkey + 1000000 AS supp
-        |            FROM orders JOIN lineitem ON o_orderkey = l_orderkey),
-        |e AS (SELECT cust AS src, supp AS dst FROM cs
-        |      UNION ALL SELECT supp AS src, cust AS dst FROM cs),
-        |nodes AS (SELECT src AS node FROM e UNION SELECT dst FROM e),
-        |nn AS (SELECT CAST(count(*) AS DOUBLE) AS n FROM nodes),
-        |deg AS (SELECT src, CAST(count(*) AS DOUBLE) AS d FROM e GROUP BY src),
-        |r0 AS (SELECT node, round(1.0/n, 10) AS pr FROM nodes, nn),
-        |r1 AS (SELECT x.node,
-        |         round((1-0.85)/nn.n + 0.85*coalesce(sum(p.pr/deg.d), 0.0), 10) AS pr
-        |       FROM nodes x CROSS JOIN nn
-        |       LEFT JOIN e ON e.dst = x.node
-        |       LEFT JOIN r0 p ON p.node = e.src
-        |       LEFT JOIN deg ON deg.src = e.src
-        |       GROUP BY x.node, nn.n),
-        |r2 AS (SELECT x.node,
-        |         round((1-0.85)/nn.n + 0.85*coalesce(sum(p.pr/deg.d), 0.0), 10) AS pr
-        |       FROM nodes x CROSS JOIN nn
-        |       LEFT JOIN e ON e.dst = x.node
-        |       LEFT JOIN r1 p ON p.node = e.src
-        |       LEFT JOIN deg ON deg.src = e.src
-        |       GROUP BY x.node, nn.n),
-        |r3 AS (SELECT x.node,
-        |         round((1-0.85)/nn.n + 0.85*coalesce(sum(p.pr/deg.d), 0.0), 10) AS pr
-        |       FROM nodes x CROSS JOIN nn
-        |       LEFT JOIN e ON e.dst = x.node
-        |       LEFT JOIN r2 p ON p.node = e.src
-        |       LEFT JOIN deg ON deg.src = e.src
-        |       GROUP BY x.node, nn.n)
-        |SELECT node, pr FROM r3 ORDER BY node""".stripMargin,
-    // The fuzzy-join oracles are BRUTE FORCE on purpose: the Spark side
-    // must find exactly the pairs the unblocked cross join finds, which
-    // gates the length-band blocking's completeness, not just the
-    // distance arithmetic.
-    "q_fuzzy_pairs" ->
-      """WITH n AS (SELECT p_name AS name, CAST(min(p_partkey) AS BIGINT) AS id
-        |           FROM part GROUP BY p_name)
-        |SELECT a.id AS id_a, b.id AS id_b,
-        |  CAST(levenshtein(a.name, b.name) AS INT) AS dist
-        |FROM n a, n b
-        |WHERE a.id < b.id AND levenshtein(a.name, b.name) <= 2
-        |ORDER BY id_a, id_b""".stripMargin,
-    "q_fuzzy_match" ->
-      """WITH n AS (SELECT p_name AS name, CAST(min(p_partkey) AS BIGINT) AS id
-        |           FROM part GROUP BY p_name),
-        |c AS (SELECT a.id AS lid, b.id AS rid,
-        |        levenshtein(a.name, b.name) AS d
-        |      FROM n a, n b
-        |      WHERE a.id <> b.id AND levenshtein(a.name, b.name) <= 3),
-        |p AS (SELECT lid, min(d * 1099511627776 + rid) AS pk
-        |      FROM c GROUP BY lid)
-        |SELECT lid AS id, CAST(pk % 1099511627776 AS BIGINT) AS match_id,
-        |  CAST(pk // 1099511627776 AS INT) AS match_dist
-        |FROM p ORDER BY id""".stripMargin,
-    // Replays Eval.binaryAuc: aggregate to distinct (day, score), midrank
-    // via a running count window, Mann–Whitney identity. Counts and
-    // half-integer midranks are exact doubles, so the single final
-    // division is bit-identical across engines.
-    // Replays rrfFusion: both rankers, the 1/(60+r) terms folded in
-    // system order, score-desc/doc-asc fused ranking.
-    "q_rrf_fusion" ->
-      """WITH a AS (
-        |  SELECT user_id, event_id, row_number() OVER (PARTITION BY user_id
-        |    ORDER BY value DESC, event_id) AS r
-        |  FROM events),
-        |b AS (
-        |  SELECT user_id, event_id, row_number() OVER (PARTITION BY user_id
-        |    ORDER BY ts DESC, event_id) AS r
-        |  FROM events),
-        |u AS (
-        |  SELECT user_id, event_id, 'value' AS sys, r FROM a WHERE r <= 10
-        |  UNION ALL
-        |  SELECT user_id, event_id, 'recency' AS sys, r FROM b WHERE r <= 10),
-        |pd AS (
-        |  SELECT user_id, event_id,
-        |    list(1.0::DOUBLE / CAST(60 + r AS DOUBLE) ORDER BY sys) AS ts2,
-        |    CAST(count(*) AS BIGINT) AS n_systems
-        |  FROM u GROUP BY user_id, event_id),
-        |sc AS (
-        |  SELECT user_id, event_id, n_systems,
-        |    list_reduce(ts2, (x, y) -> x + y) AS rrf_score
-        |  FROM pd)
-        |SELECT user_id, event_id, rrf_score, n_systems,
-        |  CAST(row_number() OVER (PARTITION BY user_id
-        |    ORDER BY rrf_score DESC, event_id) AS BIGINT) AS fused_rank
-        |FROM sc ORDER BY user_id, fused_rank""".stripMargin,
-    // Replays Eval.rankingMetrics: the identical discount/ideal-DCG
-    // literal ladders (Double.toString is shortest-round-trip, so the
-    // parsed doubles are bit-identical), the DCG folded in ascending-rank
-    // order, exact count divisions elsewhere.
-    "q_retrieval_eval" -> {
-      val discCase = operators.Eval.ndcgDiscountSql("r", 10)
-      val idcgCase = operators.Eval.ndcgIdcg(10).zipWithIndex.map {
-        case (v, i) => s"WHEN ${i + 1} THEN CAST('$v' AS DOUBLE)"
-      }.mkString("(CASE least(n.n_rel, 10) ", " ", " END)")
-      s"""WITH rel AS (
-         |  SELECT DISTINCT user_id, event_id FROM events
-         |  WHERE event_type = 'purchase'),
-         |nrel AS (SELECT user_id, count(*) AS n_rel FROM rel GROUP BY user_id),
-         |rk AS (
-         |  SELECT user_id, event_id,
-         |    row_number() OVER (PARTITION BY user_id
-         |      ORDER BY value DESC, event_id) AS r
-         |  FROM events),
-         |m AS (
-         |  SELECT t.user_id, t.r,
-         |    CASE WHEN rl.event_id IS NOT NULL THEN 1 ELSE 0 END AS is_rel
-         |  FROM rk t LEFT JOIN rel rl
-         |    ON rl.user_id = t.user_id AND rl.event_id = t.event_id
-         |  WHERE t.r <= 10),
-         |agg AS (
-         |  SELECT user_id,
-         |    CAST(sum(is_rel) AS BIGINT) AS hits,
-         |    min(CASE WHEN is_rel = 1 THEN r END) AS first_rel,
-         |    list($discCase ORDER BY r) FILTER (WHERE is_rel = 1) AS dl
-         |  FROM m GROUP BY user_id)
-         |SELECT a.user_id,
-         |  COALESCE(n.n_rel, 0) AS n_rel,
-         |  a.hits,
-         |  CASE WHEN n.n_rel > 0
-         |    THEN CAST(a.hits AS DOUBLE) / CAST(n.n_rel AS DOUBLE)
-         |  END AS recall_at_k,
-         |  COALESCE(1.0::DOUBLE / a.first_rel, 0.0::DOUBLE) AS mrr_at_k,
-         |  CASE WHEN n.n_rel > 0
-         |    THEN COALESCE(list_reduce(a.dl, (x, y) -> x + y), 0.0::DOUBLE)
-         |         / $idcgCase
-         |  END AS ndcg_at_k
-         |FROM agg a LEFT JOIN nrel n ON n.user_id = a.user_id
-         |ORDER BY a.user_id""".stripMargin
-    },
-    "q_auc" ->
-      """WITH e AS (
-        |  SELECT CAST(CAST(ts AS DATE) - DATE '1970-01-01' AS BIGINT) AS day,
-        |    value AS s,
-        |    CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END AS y
-        |  FROM events),
-        |per AS (
-        |  SELECT day, s, CAST(count(*) AS BIGINT) AS n_s,
-        |    CAST(sum(y) AS BIGINT) AS pos_s
-        |  FROM e GROUP BY day, s),
-        |rk AS (
-        |  SELECT day, n_s, pos_s,
-        |    sum(n_s) OVER (PARTITION BY day ORDER BY s
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
-        |  FROM per),
-        |a AS (
-        |  SELECT day, CAST(sum(n_s) AS BIGINT) AS n,
-        |    CAST(sum(pos_s) AS BIGINT) AS n_pos,
-        |    sum(CAST(pos_s AS DOUBLE) *
-        |        (CAST(cum AS DOUBLE) - CAST(n_s - 1 AS DOUBLE) / 2.0)) AS rsum
-        |  FROM rk GROUP BY day)
-        |SELECT day, n, n_pos,
-        |  CASE WHEN n_pos > 0 AND n_pos < n THEN
-        |    (rsum - CAST(n_pos AS DOUBLE) * (CAST(n_pos AS DOUBLE) + 1.0) / 2.0)
-        |      / (CAST(n_pos AS DOUBLE) * CAST(n - n_pos AS DOUBLE))
-        |  END AS auc
-        |FROM a ORDER BY day""".stripMargin,
-    // Replays Stats.mutualInfoBins: same clamped 10×10 grid, margins from
-    // the cells frame, one rounded ln of the n_xy·N/(n_x·n_y) rational.
-    "q_mutual_info" ->
-      """WITH b AS (
-        |  SELECT LEAST(9, GREATEST(0, CAST(floor((l_quantity - 0.0) / 5.0) AS INT))) AS bin_x,
-        |    LEAST(9, GREATEST(0, CAST(floor((l_extendedprice - 0.0) / 11000.0) AS INT))) AS bin_y
-        |  FROM lineitem),
-        |cells AS (SELECT bin_x, bin_y, CAST(count(*) AS BIGINT) AS n_xy
-        |          FROM b GROUP BY 1, 2),
-        |mx AS (SELECT bin_x, CAST(sum(n_xy) AS BIGINT) AS n_x FROM cells GROUP BY 1),
-        |my AS (SELECT bin_y, CAST(sum(n_xy) AS BIGINT) AS n_y FROM cells GROUP BY 1),
-        |tot AS (SELECT CAST(sum(n_xy) AS BIGINT) AS t FROM cells)
-        |SELECT bin_x, bin_y, n_xy, n_x, n_y,
-        |  (CAST(n_xy AS DOUBLE) / CAST(t AS DOUBLE)) *
-        |    (round(ln(CAST(n_xy * t AS DOUBLE) / CAST(n_x * n_y AS DOUBLE)), 10) + 0.0)
-        |    AS mi_term
-        |FROM cells JOIN mx USING (bin_x) JOIN my USING (bin_y), tot
-        |ORDER BY bin_x, bin_y""".stripMargin,
-    // Replays Stats.welchT at scale=2: identical scaled-BIGINT sufficient
-    // statistics, identically-parenthesized closed forms (every IEEE op
-    // in the same order), NULL when an arm has < 2 rows or the standard
-    // error is zero.
-    // Correlation-matrix replay: the same date-equi self-join (keyA <
-    // keyB), BIGINT five-sums, and the corrBeta clamp tree per pair.
-    "q_corr_matrix" ->
-      s"""WITH bars AS (
-         |$duckBarsSql
-         |), uni AS (
-         |  SELECT l_suppkey FROM (
-         |    SELECT l_suppkey,
-         |      sum(CAST(round(volume * 100.0::DOUBLE) AS BIGINT)) AS vol
-         |    FROM bars GROUP BY l_suppkey)
-         |  ORDER BY vol DESC, l_suppkey LIMIT 100
-         |), b AS (
-         |  SELECT l_suppkey AS k, l_shipdate AS d,
-         |    CAST(round(close) AS BIGINT) AS x
-         |  FROM bars WHERE l_suppkey IN (SELECT l_suppkey FROM uni)
-         |), s AS (
-         |  SELECT a.k AS key_a, c.k AS key_b,
-         |    CAST(count(*) AS BIGINT) AS n_overlap,
-         |    CAST(sum(a.x) AS BIGINT) AS sx, CAST(sum(c.x) AS BIGINT) AS sy,
-         |    CAST(sum(a.x * a.x) AS BIGINT) AS sxx,
-         |    CAST(sum(c.x * c.x) AS BIGINT) AS syy,
-         |    CAST(sum(a.x * c.x) AS BIGINT) AS sxy
-         |  FROM b a JOIN b c ON c.d = a.d AND a.k < c.k
-         |  GROUP BY 1, 2
-         |), f AS (
-         |  SELECT key_a, key_b, n_overlap,
-         |    CAST(n_overlap * sxy - sx * sy AS DOUBLE) AS num,
-         |    CAST(n_overlap * sxx - sx * sx AS DOUBLE) AS dx,
-         |    CAST(n_overlap * syy - sy * sy AS DOUBLE) AS dy
-         |  FROM s WHERE n_overlap >= 30
-         |)
-         |SELECT key_a, key_b, n_overlap,
-         |  CASE WHEN dx > 0.0 AND dy > 0.0 THEN
-         |    greatest(-1.0::DOUBLE, least(1.0::DOUBLE,
-         |      num / (sqrt(dx) * sqrt(dy)))) END AS corr
-         |FROM f ORDER BY key_a, key_b""".stripMargin,
-    // Mann–Whitney replay: doubled average ranks (2·rank + tie − 1) over
-    // the pooled per-day sample, per-row t²−1 tie accumulation, then the
-    // exact z tree — every op in Stats.mannWhitney order.
-    "q_mann_whitney" ->
-      """WITH e AS (
-        |  SELECT CAST(CAST(ts AS DATE) - DATE '1970-01-01' AS BIGINT) AS day,
-        |    event_type AS v,
-        |    CAST(round(value * 100.0::DOUBLE) AS BIGINT) AS x
-        |  FROM events WHERE event_type IN ('purchase', 'view')),
-        |r AS (
-        |  SELECT day, v,
-        |    CAST(count(*) OVER (PARTITION BY day, x) AS BIGINT) AS t,
-        |    2 * CAST(rank() OVER (PARTITION BY day ORDER BY x) AS BIGINT)
-        |      + CAST(count(*) OVER (PARTITION BY day, x) AS BIGINT) - 1 AS r2
-        |  FROM e),
-        |s AS (
-        |  SELECT day,
-        |    CAST(count(*) FILTER (WHERE v = 'purchase') AS BIGINT) AS n_a,
-        |    CAST(count(*) FILTER (WHERE v = 'view') AS BIGINT) AS n_b,
-        |    CAST(sum(r2) FILTER (WHERE v = 'purchase') AS BIGINT) AS s2a,
-        |    CAST(sum(t * t - 1) AS BIGINT) AS tc
-        |  FROM r GROUP BY day),
-        |f AS (
-        |  SELECT day, n_a, n_b, CAST(n_a AS DOUBLE) AS na,
-        |    CAST(n_b AS DOUBLE) AS nb, CAST(s2a AS DOUBLE) AS s2ad,
-        |    CAST(tc AS DOUBLE) AS tcd
-        |  FROM s),
-        |g AS (
-        |  SELECT day, n_a, n_b, na, nb,
-        |    (s2ad - na * (na + 1.0::DOUBLE)) / 2.0::DOUBLE AS u,
-        |    (na * nb / 12.0::DOUBLE) * ((na + nb + 1.0::DOUBLE)
-        |      - tcd / ((na + nb) * (na + nb - 1.0::DOUBLE))) AS sig2
-        |  FROM f)
-        |SELECT day, n_a, n_b,
-        |  CASE WHEN n_a >= 1 AND n_b >= 1 THEN u END AS u,
-        |  CASE WHEN n_a >= 1 AND n_b >= 1 AND sig2 > 0.0 THEN
-        |    (u - na * nb / 2.0::DOUBLE) / sqrt(sig2) END AS z
-        |FROM g ORDER BY day""".stripMargin,
-    // Moments replay: four HUGEINT-exact power sums (≡ Spark's
-    // DECIMAL(38,0) — both cast the identical integer to double), then
-    // the raw-moment closed forms as the same fixed trees.
-    "q_moments" ->
-      """WITH b AS (
-        |  SELECT l_suppkey,
-        |    CAST(round(CAST(l_quantity AS DOUBLE) * 1.0::DOUBLE) AS BIGINT) AS xi
-        |  FROM lineitem WHERE l_quantity IS NOT NULL),
-        |s AS (
-        |  SELECT l_suppkey, CAST(count(*) AS BIGINT) AS n,
-        |    CAST(sum(xi) AS DOUBLE) AS s1,
-        |    CAST(sum(xi * xi) AS DOUBLE) AS s2,
-        |    CAST(sum(xi * xi * xi) AS DOUBLE) AS s3,
-        |    CAST(sum(xi * xi * xi * xi) AS DOUBLE) AS s4
-        |  FROM b GROUP BY l_suppkey),
-        |g AS (SELECT *, CAST(n AS DOUBLE) AS nd, s1 / CAST(n AS DOUBLE) AS m
-        |      FROM s),
-        |h AS (SELECT *,
-        |    s2 / nd - m * m AS m2,
-        |    s3 / nd - 3.0::DOUBLE * m * (s2 / nd)
-        |      + 2.0::DOUBLE * m * m * m AS m3,
-        |    s4 / nd - 4.0::DOUBLE * m * (s3 / nd)
-        |      + 6.0::DOUBLE * m * m * (s2 / nd)
-        |      - 3.0::DOUBLE * m * m * m * m AS m4
-        |  FROM g),
-        |k AS (SELECT *, m3 / sqrt(m2 * m2 * m2) AS skew,
-        |        m4 / (m2 * m2) - 3.0::DOUBLE AS kurt
-        |      FROM h)
-        |SELECT l_suppkey, n, m / 1.0::DOUBLE AS mean,
-        |  CASE WHEN n >= 2 AND m2 > 0.0 THEN skew END AS skewness,
-        |  CASE WHEN n >= 2 AND m2 > 0.0 THEN kurt END AS kurtosis_excess,
-        |  CASE WHEN n >= 2 AND m2 > 0.0 THEN
-        |    (nd / 6.0::DOUBLE) * (skew * skew + kurt * kurt / 4.0::DOUBLE)
-        |  END AS jarque_bera
-        |FROM k ORDER BY l_suppkey""".stripMargin,
-    "q_welch_t" ->
-      """WITH e AS (
-        |  SELECT CAST(CAST(ts AS DATE) - DATE '1970-01-01' AS BIGINT) AS day,
-        |    event_type AS v,
-        |    CAST(round(value * 100.0::DOUBLE) AS BIGINT) AS x
-        |  FROM events WHERE event_type IN ('purchase', 'view')),
-        |s AS (
-        |  SELECT day,
-        |    CAST(count(*) FILTER (WHERE v = 'purchase') AS BIGINT) AS n_a,
-        |    CAST(count(*) FILTER (WHERE v = 'view') AS BIGINT) AS n_b,
-        |    CAST(sum(x) FILTER (WHERE v = 'purchase') AS BIGINT) AS sa,
-        |    CAST(sum(x) FILTER (WHERE v = 'view') AS BIGINT) AS sb,
-        |    CAST(sum(x * x) FILTER (WHERE v = 'purchase') AS BIGINT) AS qa,
-        |    CAST(sum(x * x) FILTER (WHERE v = 'view') AS BIGINT) AS qb
-        |  FROM e GROUP BY day),
-        |f AS (
-        |  SELECT day, n_a, n_b,
-        |    CAST(n_a AS DOUBLE) AS na, CAST(n_b AS DOUBLE) AS nb,
-        |    CAST(sa AS DOUBLE) AS sad, CAST(sb AS DOUBLE) AS sbd,
-        |    CAST(qa AS DOUBLE) AS qad, CAST(qb AS DOUBLE) AS qbd
-        |  FROM s),
-        |g AS (
-        |  SELECT day, n_a, n_b, na, nb, sad, sbd,
-        |    ((qad - sad * sad / na) / (na - 1.0)) / na AS sea,
-        |    ((qbd - sbd * sbd / nb) / (nb - 1.0)) / nb AS seb
-        |  FROM f)
-        |SELECT day, n_a, n_b,
-        |  sad / na / 100.0::DOUBLE AS mean_a,
-        |  sbd / nb / 100.0::DOUBLE AS mean_b,
-        |  CASE WHEN n_a >= 2 AND n_b >= 2 AND (sea + seb) > 0.0 THEN
-        |    (sad / na - sbd / nb) / sqrt(sea + seb) END AS t,
-        |  CASE WHEN n_a >= 2 AND n_b >= 2 AND (sea + seb) > 0.0 THEN
-        |    (sea + seb) * (sea + seb) /
-        |      (sea * sea / (na - 1.0) + seb * seb / (nb - 1.0)) END AS df_welch
-        |FROM g ORDER BY day""".stripMargin,
-    // Replays EventAnalytics.transitionEntropy: same pairing, per-user
-    // (from, to)-ordered fold of −p·ln p, round(_, 10)+0.0.
-    "q_transition_entropy" ->
-      """WITH e AS (SELECT user_id, event_id, epoch_us(ts) AS tsu, event_type
-        |           FROM events),
-        |p AS (SELECT user_id, event_type AS t,
-        |        lag(event_type) OVER
-        |          (PARTITION BY user_id ORDER BY tsu, event_id) AS pt
-        |      FROM e),
-        |c AS (SELECT user_id, pt, t, CAST(count(*) AS BIGINT) AS n
-        |      FROM p WHERE pt IS NOT NULL GROUP BY 1, 2, 3),
-        |g AS (SELECT user_id, CAST(sum(n) AS BIGINT) AS n_transitions,
-        |        list(n ORDER BY pt, t) AS ns
-        |      FROM c GROUP BY user_id)
-        |SELECT user_id, n_transitions,
-        |  round(list_reduce(list_transform(ns, x ->
-        |    -((CAST(x AS DOUBLE) / CAST(n_transitions AS DOUBLE))
-        |      * ln(CAST(x AS DOUBLE) / CAST(n_transitions AS DOUBLE)))),
-        |    (a, b) -> a + b), 10) + 0.0 AS transition_entropy
-        |FROM g ORDER BY user_id""".stripMargin,
-    // Replays EventAnalytics.transitions: same (ts_us, event_id) ordering
-    // (µs — Spark's nanos DIV 1000 == DuckDB's truncated TIMESTAMP),
-    // integer micro-gap sums, single IEEE divisions for p and mean_gap.
-    "q_transitions" ->
-      """WITH e AS (SELECT user_id, event_id, epoch_us(ts) AS tsn, event_type
-        |           FROM events),
-        |p AS (SELECT event_type AS t,
-        |        lag(event_type) OVER
-        |          (PARTITION BY user_id ORDER BY tsn, event_id) AS pt,
-        |        tsn - lag(tsn) OVER
-        |          (PARTITION BY user_id ORDER BY tsn, event_id) AS gap
-        |      FROM e),
-        |m AS (SELECT pt AS from_type, t AS to_type,
-        |        CAST(count(*) AS BIGINT) AS n, CAST(sum(gap) AS BIGINT) AS g
-        |      FROM p WHERE pt IS NOT NULL GROUP BY 1, 2),
-        |rt AS (SELECT from_type, CAST(sum(n) AS BIGINT) AS tot FROM m GROUP BY 1)
-        |SELECT m.from_type, m.to_type, m.n,
-        |  CAST(m.n AS DOUBLE) / CAST(rt.tot AS DOUBLE) AS p,
-        |  CAST(m.g AS DOUBLE) / CAST(m.n AS DOUBLE) AS mean_gap
-        |FROM m JOIN rt USING (from_type)
-        |ORDER BY from_type, to_type""".stripMargin,
-    // Replays Eval.averagePrecision: distinct-(day, score) frame, DESC
-    // cumulative TP/total, per-threshold summand pos_s·TP/cum, and the
-    // identical descending-score left fold (0.0 seed ≡ no-init reduce).
-    "q_avg_precision" ->
-      """WITH e AS (
-        |  SELECT CAST(CAST(ts AS DATE) - DATE '1970-01-01' AS BIGINT) AS day,
-        |    value AS s,
-        |    CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END AS y
-        |  FROM events),
-        |per AS (
-        |  SELECT day, s, CAST(count(*) AS BIGINT) AS n_s,
-        |    CAST(sum(y) AS BIGINT) AS pos_s
-        |  FROM e GROUP BY day, s),
-        |rk AS (
-        |  SELECT day, s, n_s, pos_s,
-        |    sum(pos_s) OVER (PARTITION BY day ORDER BY s DESC
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS tp,
-        |    sum(n_s) OVER (PARTITION BY day ORDER BY s DESC
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
-        |  FROM per),
-        |g AS (
-        |  SELECT day, CAST(sum(n_s) AS BIGINT) AS n,
-        |    CAST(sum(pos_s) AS BIGINT) AS n_pos,
-        |    list(CAST(pos_s AS DOUBLE) * CAST(tp AS DOUBLE)
-        |         / CAST(cum AS DOUBLE) ORDER BY s DESC) AS es
-        |  FROM rk GROUP BY day)
-        |SELECT day, n, n_pos,
-        |  CASE WHEN n_pos > 0 THEN
-        |    list_reduce(es, (a, b) -> a + b) / CAST(n_pos AS DOUBLE)
-        |  END AS ap
-        |FROM g ORDER BY day""".stripMargin,
-    "q_calibration" ->
-      """WITH b AS (
-        |  SELECT LEAST(9, GREATEST(0, CAST(floor((value - 0.0) / 50.0) AS INT))) AS bin,
-        |    CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END AS y
-        |  FROM events)
-        |SELECT bin, CAST(count(*) AS BIGINT) AS n,
-        |  CAST(sum(y) AS BIGINT) AS n_pos,
-        |  0.0 + bin * 50.0 AS bin_lo,
-        |  CAST(sum(y) AS DOUBLE) / CAST(count(*) AS DOUBLE) AS pos_rate
-        |FROM b GROUP BY bin ORDER BY bin""".stripMargin,
-    // Replays EventAnalytics.funnel: per-user first-occurrence times, a
-    // user reaches step k iff t0 < t1 < … strictly (missing step breaks)
-    "q_funnel" ->
-      """WITH pu AS (
-        |  SELECT user_id,
-        |    min(CASE WHEN event_type = 'view' THEN ts END) AS t0,
-        |    min(CASE WHEN event_type = 'click' THEN ts END) AS t1,
-        |    min(CASE WHEN event_type = 'purchase' THEN ts END) AS t2
-        |  FROM events GROUP BY user_id)
-        |SELECT 1 AS step_index, 'view' AS step,
-        |  count(CASE WHEN t0 IS NOT NULL THEN 1 END) AS n_users FROM pu
-        |UNION ALL
-        |SELECT 2, 'click',
-        |  count(CASE WHEN t0 IS NOT NULL AND t0 < t1 THEN 1 END) FROM pu
-        |UNION ALL
-        |SELECT 3, 'purchase',
-        |  count(CASE WHEN t0 IS NOT NULL AND t0 < t1 AND t1 < t2 THEN 1 END) FROM pu
-        |ORDER BY step_index""".stripMargin,
-    // Expected diff outcome stated directly: the modular key classes the
-    // gate's synthetic refresh touches, with their change types
-    "q_snapshot_diff" ->
-      """SELECT o_orderkey, 'changed' AS change_type
-        |FROM orders WHERE o_orderkey % 1000 = 3
-        |UNION ALL
-        |SELECT o_orderkey, 'removed' AS change_type
-        |FROM orders WHERE o_orderkey % 1000 = 7
-        |UNION ALL
-        |SELECT o_orderkey + 2000000000 AS o_orderkey, 'added' AS change_type
-        |FROM orders WHERE o_orderkey % 1000 = 5
-        |ORDER BY o_orderkey, change_type""".stripMargin,
-    // Expected merge outcome: matched keys take the update's values,
-    // unmatched pass through, shifted keys insert
-    "q_upsert" ->
-      """SELECT o_orderkey, o_custkey, o_orderstatus, o_totalprice, o_orderdate,
-        |  CASE WHEN o_orderkey % 100 = 11 THEN 'UPSERTED'
-        |       ELSE o_orderpriority END AS o_orderpriority
-        |FROM orders
-        |UNION ALL
-        |SELECT o_orderkey + 3000000000, o_custkey, 'N', o_totalprice,
-        |  o_orderdate, o_orderpriority
-        |FROM orders WHERE o_orderkey % 100 = 22
-        |ORDER BY o_orderkey""".stripMargin,
-    // Replays Stats.corrRegression: identical computational forms over
-    // exact sufficient statistics (integer-valued x=discount-pct and
-    // y=quantity make every Σ exact in any order; the closed forms are
-    // single exactly-rounded IEEE op chains)
-    "q_corr_regress" ->
-      """WITH li AS (
-        |  SELECT l_returnflag,
-        |    CAST(CAST(round(l_discount * 100) AS BIGINT) AS DOUBLE) AS x,
-        |    l_quantity AS y
-        |  FROM lineitem),
-        |s AS (
-        |  SELECT l_returnflag,
-        |    CAST(count(*) AS DOUBLE) AS n,
-        |    sum(x) AS sx, sum(y) AS sy, sum(x * y) AS sxy,
-        |    sum(x * x) AS sxx, sum(y * y) AS syy
-        |  FROM li GROUP BY l_returnflag)
-        |SELECT l_returnflag, CAST(n AS BIGINT) AS n,
-        |  CASE WHEN n * sxx - sx * sx > 0.0 AND n * syy - sy * sy > 0.0
-        |    THEN (n * sxy - sx * sy)
-        |         / sqrt((n * sxx - sx * sx) * (n * syy - sy * sy)) END AS corr_xy,
-        |  CASE WHEN n * sxx - sx * sx > 0.0
-        |    THEN (n * sxy - sx * sy) / (n * sxx - sx * sx) END AS slope,
-        |  CASE WHEN n * sxx - sx * sx > 0.0
-        |    THEN (sy - (n * sxy - sx * sy) / (n * sxx - sx * sx) * sx) / n
-        |  END AS intercept
-        |FROM s ORDER BY l_returnflag""".stripMargin,
-    // Replays Stats.chiSquareCells: margins re-aggregate the cells frame,
-    // expected = rowTot·colTot/total as one BIGINT product + one division
-    "q_chisq" ->
-      """WITH cells AS (
-        |  SELECT lang, source, count(*) AS n_obs
-        |  FROM documents WHERE lang IS NOT NULL AND source IS NOT NULL
-        |  GROUP BY lang, source),
-        |rt AS (SELECT lang, CAST(sum(n_obs) AS BIGINT) AS rtv FROM cells GROUP BY lang),
-        |ct AS (SELECT source, CAST(sum(n_obs) AS BIGINT) AS ctv FROM cells GROUP BY source),
-        |tt AS (SELECT CAST(sum(n_obs) AS BIGINT) AS tot FROM cells)
-        |SELECT c.lang, c.source, c.n_obs,
-        |  CAST(r.rtv * q.ctv AS DOUBLE) / CAST(tt.tot AS DOUBLE) AS expected,
-        |  (CAST(c.n_obs AS DOUBLE) - CAST(r.rtv * q.ctv AS DOUBLE) / CAST(tt.tot AS DOUBLE))
-        |  * (CAST(c.n_obs AS DOUBLE) - CAST(r.rtv * q.ctv AS DOUBLE) / CAST(tt.tot AS DOUBLE))
-        |  / (CAST(r.rtv * q.ctv AS DOUBLE) / CAST(tt.tot AS DOUBLE)) AS chi2_term
-        |FROM cells c
-        |JOIN rt r USING (lang) JOIN ct q USING (source) CROSS JOIN tt
-        |ORDER BY c.lang, c.source""".stripMargin,
-    // Replays Anomaly.iqrOutliers: quantile_cont matches Spark's exact
-    // percentile interpolation on integer inputs (proven by q_quantiles);
-    // the fence arithmetic is the identical IEEE tree. ::DOUBLE keeps the
-    // 1.5 literal out of DuckDB's DECIMAL arithmetic.
-    "q_iqr_outliers" ->
-      """WITH bounds AS (
-        |  SELECT lang, quantile_cont(n_chars, 0.25) AS q1,
-        |         quantile_cont(n_chars, 0.75) AS q3
-        |  FROM documents GROUP BY lang)
-        |SELECT d.doc_id, d.lang, d.n_chars,
-        |  b.q1 - 1.5::DOUBLE * (b.q3 - b.q1) AS lo_bound,
-        |  b.q3 + 1.5::DOUBLE * (b.q3 - b.q1) AS hi_bound,
-        |  (d.n_chars < b.q1 - 1.5::DOUBLE * (b.q3 - b.q1))
-        |    OR (d.n_chars > b.q3 + 1.5::DOUBLE * (b.q3 - b.q1)) AS is_outlier
-        |FROM documents d JOIN bounds b USING (lang)
-        |ORDER BY d.doc_id""".stripMargin,
-    // Replays Feature.quantileNormalize: distinct-frame ranks, pooled
-    // position segments from a global cumsum (≡ the engine's bucketed
-    // decomposition), identical p/h/interpolation expression trees.
-    "q_quantile_norm" ->
-      """WITH base AS (SELECT doc_id, lang, CAST(n_chars AS DOUBLE) AS v,
-        |                n_chars
-        |              FROM documents),
-        |dvv AS (SELECT DISTINCT lang, v FROM base),
-        |dv AS (SELECT lang, v,
-        |         row_number() OVER (PARTITION BY lang ORDER BY v) AS r,
-        |         count(*) OVER (PARTITION BY lang) AS n
-        |       FROM dvv),
-        |pool AS (SELECT v AS pv, CAST(count(*) AS BIGINT) AS cnt
-        |         FROM base GROUP BY 1),
-        |poolc AS (SELECT pv, cnt, sum(cnt) OVER (ORDER BY pv) AS cum FROM pool),
-        |seg AS (SELECT pv, CAST(cum - cnt AS BIGINT) AS lo,
-        |          CAST(cum - 1 AS BIGINT) AS hi FROM poolc),
-        |tot AS (SELECT CAST(sum(cnt) AS BIGINT) AS ntot FROM pool),
-        |pos AS (SELECT lang, v,
-        |          (CASE WHEN dv.n = 1 THEN 0.5::DOUBLE
-        |           ELSE CAST(dv.r - 1 AS DOUBLE) / CAST(dv.n - 1 AS DOUBLE) END)
-        |          * (CAST(ntot AS DOUBLE) - 1.0::DOUBLE) AS hh, ntot
-        |        FROM dv CROSS JOIN tot),
-        |ks AS (SELECT lang, v, hh, CAST(floor(hh) AS BIGINT) AS k,
-        |         least(CAST(floor(hh) AS BIGINT) + 1, ntot - 1) AS kk FROM pos),
-        |v1 AS (SELECT ks.lang, ks.v, ks.hh, ks.kk, s1.pv AS pv1
-        |       FROM ks JOIN seg s1 ON ks.k BETWEEN s1.lo AND s1.hi),
-        |v2 AS (SELECT v1.lang, v1.v, v1.hh, v1.pv1, s2.pv AS pv2
-        |       FROM v1 JOIN seg s2 ON v1.kk BETWEEN s2.lo AND s2.hi)
-        |SELECT b.doc_id, b.lang, b.n_chars,
-        |  pv1 + (hh - floor(hh)) * (pv2 - pv1) AS quantile_normalized
-        |FROM base b JOIN v2 ON v2.lang = b.lang AND v2.v = b.v
-        |ORDER BY b.doc_id""".stripMargin,
-    // Replays Anomaly.benford at scale=2: first digit from the scaled
-    // BIGINT's VARCHAR form, in-engine rounded log10 probabilities,
-    // identically-parenthesized chi² terms.
-    "q_benford" ->
-      """WITH x AS (
-        |  SELECT CAST(round(o_totalprice * 100.0::DOUBLE) AS BIGINT) AS xi
-        |  FROM orders),
-        |c AS (SELECT CAST(substr(CAST(xi AS VARCHAR), 1, 1) AS INT) AS digit,
-        |        CAST(count(*) AS BIGINT) AS n
-        |      FROM x GROUP BY 1),
-        |spine AS (SELECT CAST(unnest(range(1, 10)) AS INT) AS digit),
-        |t AS (SELECT CAST(sum(n) AS BIGINT) AS N FROM c),
-        |b AS (SELECT s.digit, CAST(coalesce(c.n, 0) AS BIGINT) AS n,
-        |        round(log10(1.0::DOUBLE + 1.0::DOUBLE / CAST(s.digit AS DOUBLE)), 10)
-        |          + 0.0 AS p_benford
-        |      FROM spine s LEFT JOIN c USING (digit))
-        |SELECT b.digit, b.n,
-        |  CAST(b.n AS DOUBLE) / CAST(t.N AS DOUBLE) AS p_obs, b.p_benford,
-        |  (CAST(b.n AS DOUBLE) - CAST(t.N AS DOUBLE) * b.p_benford)
-        |    * (CAST(b.n AS DOUBLE) - CAST(t.N AS DOUBLE) * b.p_benford)
-        |    / (CAST(t.N AS DOUBLE) * b.p_benford) AS chi2_term
-        |FROM b CROSS JOIN t
-        |ORDER BY digit""".stripMargin,
-    // Replays Anomaly.cusum at scale=1: integer deviation cumsums,
-    // running min floored at 0, descale division — the same two-level
-    // window over the identical total order.
-    "q_cusum" ->
-      """WITH s AS (
-        |  SELECT l_suppkey, l_shipdate, l_orderkey, l_linenumber, l_quantity,
-        |    CAST(round(l_quantity * 10.0::DOUBLE) AS BIGINT) AS xi
-        |  FROM lineitem),
-        |c AS (
-        |  SELECT *, sum(xi - 275) OVER wsp AS chi, sum(235 - xi) OVER wsp AS clo
-        |  FROM s
-        |  WINDOW wsp AS (PARTITION BY l_suppkey
-        |    ORDER BY l_shipdate, l_orderkey, l_linenumber
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)),
-        |f AS (
-        |  SELECT *, chi - least(0, min(chi) OVER wsp) AS shi,
-        |    clo - least(0, min(clo) OVER wsp) AS slo
-        |  FROM c
-        |  WINDOW wsp AS (PARTITION BY l_suppkey
-        |    ORDER BY l_shipdate, l_orderkey, l_linenumber
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW))
-        |SELECT l_suppkey, l_shipdate, l_orderkey, l_linenumber, l_quantity,
-        |  CAST(shi AS DOUBLE) / 10.0::DOUBLE AS cusum_hi,
-        |  CAST(slo AS DOUBLE) / 10.0::DOUBLE AS cusum_lo,
-        |  (shi >= 400 OR slo >= 400) AS is_shift
-        |FROM f
-        |ORDER BY l_suppkey, l_shipdate, l_orderkey, l_linenumber""".stripMargin,
-    // Replays Anomaly.madOutliers: two quantile_cont passes (median, then
-    // median of absolute deviations), identical division/multiply order,
-    // MAD=0 → z=0/never flags.
-    "q_mad_outliers" ->
-      """WITH m AS (
-        |  SELECT lang, quantile_cont(n_chars, 0.5) AS med
-        |  FROM documents GROUP BY lang),
-        |dev AS (
-        |  SELECT d.doc_id, d.lang, d.n_chars, m.med,
-        |    abs(d.n_chars - m.med) AS dv
-        |  FROM documents d JOIN m USING (lang)),
-        |md AS (SELECT lang, quantile_cont(dv, 0.5) AS mad FROM dev GROUP BY lang)
-        |SELECT dev.doc_id, dev.lang, dev.n_chars, dev.med, md.mad,
-        |  CASE WHEN md.mad > 0.0 THEN
-        |    (dev.n_chars - dev.med) / (1.4826::DOUBLE * md.mad)
-        |  ELSE 0.0 END AS robust_z,
-        |  CASE WHEN md.mad > 0.0 THEN
-        |    abs((dev.n_chars - dev.med) / (1.4826::DOUBLE * md.mad)) > 3.5::DOUBLE
-        |  ELSE FALSE END AS is_outlier
-        |FROM dev JOIN md USING (lang)
-        |ORDER BY dev.doc_id""".stripMargin,
-    // Replays Batching.bucketStats: same whitespace tokenization as
-    // q_token_count, same CASE ladder, pure integer arithmetic throughout
-    // (sums cast out of DuckDB's HUGEINT)
-    "q_length_buckets" ->
-      """WITH toks AS (
-        |  SELECT doc_id,
-        |    CAST(len(list_filter(string_split_regex(lower(text), '[^a-z0-9]+'), w -> w <> '')) AS BIGINT) AS n_tokens
-        |  FROM documents),
-        |b AS (
-        |  SELECT n_tokens,
-        |    CASE WHEN n_tokens <= 16 THEN 16 WHEN n_tokens <= 32 THEN 32
-        |         WHEN n_tokens <= 64 THEN 64 ELSE 128 END AS seq_bucket
-        |  FROM toks)
-        |SELECT CAST(seq_bucket AS BIGINT) AS seq_bucket, count(*) AS n_docs,
-        |  CAST(sum(n_tokens) AS BIGINT) AS raw_tokens,
-        |  CAST(sum(least(n_tokens, seq_bucket)) AS BIGINT) AS stored_tokens,
-        |  CAST(sum(greatest(seq_bucket - n_tokens, 0)) AS BIGINT) AS padding_tokens
-        |FROM b GROUP BY seq_bucket ORDER BY seq_bucket""".stripMargin,
-    "q_histogram" ->
-      """SELECT least(greatest(CAST(floor((o_totalprice - 0.0) / 25000.0) AS BIGINT), 0), 23) AS bin,
-        |  count(*) AS cnt
-        |FROM orders WHERE o_totalprice IS NOT NULL
-        |GROUP BY 1 ORDER BY bin""".stripMargin,
-    "q_profile" ->
-      """SELECT 'o_orderkey' AS col_name, count(*) AS n_rows,
-        |  count(CASE WHEN o_orderkey IS NULL THEN 1 END) AS n_nulls,
-        |  min(o_orderkey)::VARCHAR AS min_value, max(o_orderkey)::VARCHAR AS max_value,
-        |  count(DISTINCT o_orderkey) AS n_distinct
-        |FROM orders
-        |UNION ALL
-        |SELECT 'o_orderstatus', count(*),
-        |  count(CASE WHEN o_orderstatus IS NULL THEN 1 END),
-        |  min(o_orderstatus), max(o_orderstatus), count(DISTINCT o_orderstatus)
-        |FROM orders
-        |UNION ALL
-        |SELECT 'o_orderpriority', count(*),
-        |  count(CASE WHEN o_orderpriority IS NULL THEN 1 END),
-        |  min(o_orderpriority), max(o_orderpriority), count(DISTINCT o_orderpriority)
-        |FROM orders
-        |ORDER BY col_name""".stripMargin,
-    "q_profile_kmv" -> duckProfileKmvSql,
-    "q_profile_hll" -> duckProfileHllSql,
-    // Replays Layout.zOrderKey bit-for-bit: the same shift/mask/or tree
-    // rendered by zOrderKeySql (exact integer arithmetic in both engines).
-    "q_zorder" ->
-      s"""SELECT l_orderkey, l_linenumber,
-         |  ${operators.Layout.zOrderKeySql(
-               Seq("l_partkey % 4096", "l_suppkey % 4096"), bits = 12)} AS zkey
-         |FROM lineitem
-         |ORDER BY zkey, l_orderkey, l_linenumber""".stripMargin,
-    "q_unpivot" ->
-      """SELECT l_orderkey, l_linenumber, 'quantity' AS metric, l_quantity AS value
-        |FROM lineitem WHERE l_orderkey < 1000
-        |UNION ALL
-        |SELECT l_orderkey, l_linenumber, 'extendedprice', l_extendedprice
-        |FROM lineitem WHERE l_orderkey < 1000
-        |UNION ALL
-        |SELECT l_orderkey, l_linenumber, 'discount', l_discount
-        |FROM lineitem WHERE l_orderkey < 1000
-        |ORDER BY l_orderkey, l_linenumber, metric""".stripMargin,
-    "q_exists" ->
-      """SELECT c_mktsegment, count(*) AS n
-        |FROM customer c
-        |WHERE EXISTS (SELECT 1 FROM orders o
-        |              WHERE o.o_custkey = c.c_custkey
-        |                AND o.o_totalprice > 300000)
-        |GROUP BY c_mktsegment ORDER BY c_mktsegment""".stripMargin,
-    // Replays Sampling.weightedSample: rank = ln((hash+1)/2^60)/weight,
-    // top-64 by rank (ties on doc_id). ln's last-ulp rounding can differ
-    // between engines, but a selection flip needs two ranks within one ulp
-    // of each other AND straddling the k-th place — vanishingly unlikely.
-    "q_sample_weighted" ->
-      s"""SELECT doc_id, n_chars FROM (
-         |  SELECT doc_id, n_chars FROM documents
-         |  ORDER BY ln((CAST(CAST('0x' || substr(md5(doc_id::VARCHAR), 1, 15) AS BIGINT) AS DOUBLE)
-         |      + 1.0::DOUBLE) / 1152921504606846976.0::DOUBLE)
-         |    / CAST(n_chars AS DOUBLE) DESC, doc_id
-         |  LIMIT 64) t
-         |ORDER BY doc_id""".stripMargin,
-    // Replays Sampling.samplePerGroup: 48-bit md5 key hash (exact in the
-    // heap's double ordering), per-source rank ascending, ties to the
-    // lower doc_id, keep rank <= 20.
-    "q_sample_per_group" ->
-      s"""WITH h AS (
-         |  SELECT source, doc_id,
-         |    CAST('0x' || substr(md5(doc_id::VARCHAR), 1, 12) AS BIGINT) AS h48
-         |  FROM documents
-         |), r AS (
-         |  SELECT source, doc_id,
-         |    CAST(row_number() OVER (PARTITION BY source ORDER BY h48, doc_id)
-         |      AS BIGINT) AS rank
-         |  FROM h
-         |)
-         |SELECT source, doc_id, rank FROM r
-         |WHERE rank <= 20 ORDER BY source, rank""".stripMargin,
-    "q_corpus_mix" ->
-      s"""SELECT doc_id, source FROM documents WHERE source = 'src0'
-         |  AND CAST('0x' || substr(md5(doc_id::VARCHAR), 1, 15) AS BIGINT) < ${operators.Sampling.threshold(1.0)}
-         |UNION ALL
-         |SELECT doc_id, source FROM documents WHERE source = 'src1'
-         |  AND CAST('0x' || substr(md5(doc_id::VARCHAR), 1, 15) AS BIGINT) < ${operators.Sampling.threshold(0.5)}
-         |UNION ALL
-         |SELECT doc_id, source FROM documents WHERE source = 'src2'
-         |  AND CAST('0x' || substr(md5(doc_id::VARCHAR), 1, 15) AS BIGINT) < ${operators.Sampling.threshold(0.2)}
-         |ORDER BY doc_id""".stripMargin,
-    "q_vocab_topk" ->
-      s"""WITH $duckToks
-         |SELECT w AS token, count(*) AS cnt FROM toks
-         |GROUP BY 1 ORDER BY cnt DESC, token ASC LIMIT 100""".stripMargin,
-    "q_cms_estimate" ->
-      s"""WITH $duckToks,
-         |tk AS (SELECT w AS token FROM toks),
-         |grid AS (
-         |  SELECT i, CAST('0x' || substr(md5(token), 1 + 8*i, 8) AS BIGINT) % 512 AS bucket,
-         |         count(*) AS cnt
-         |  FROM tk CROSS JOIN generate_series(0, 3) g(i)
-         |  GROUP BY 1, 2
-         |),
-         |items AS (
-         |  SELECT token FROM (
-         |    SELECT token, count(*) AS c FROM tk GROUP BY 1
-         |    ORDER BY c DESC, token ASC LIMIT 20)
-         |),
-         |h AS (
-         |  SELECT token, i, CAST('0x' || substr(md5(token), 1 + 8*i, 8) AS BIGINT) % 512 AS bucket
-         |  FROM items CROSS JOIN generate_series(0, 3) g(i)
-         |)
-         |SELECT token, min(coalesce(cnt, 0)) AS est_cnt
-         |FROM h LEFT JOIN grid USING (i, bucket)
-         |GROUP BY token ORDER BY token""".stripMargin,
-    "q_embed_neardup" ->
-      s"""WITH bkt AS (
-         |  SELECT vec_id, embedding,
-         |    list_reduce(list_transform(generate_series(1, 8),
-         |      j -> CASE WHEN embedding[j] > 0 THEN 1 << (j - 1) ELSE 0 END),
-         |      (a, b) -> a + b) AS bucket
-         |  FROM embeddings
-         |)
-         |SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-         |  ${cosSql("a.embedding", "b.embedding")} AS cosine
-         |FROM bkt a JOIN bkt b ON a.bucket = b.bucket AND a.vec_id < b.vec_id
-         |WHERE ${cosSql("a.embedding", "b.embedding")} >= 0.4
-         |ORDER BY id_a, id_b""".stripMargin,
-    // Replays the multi-probe variant: candidate pairs are exactly those
-    // whose 8-bit sign patterns differ in <= 1 bit (the unique XOR flip
-    // Spark's probe explode generates), same cosine filter.
-    "q_embed_neardup_mp" ->
-      s"""WITH bkt AS (
-         |  SELECT vec_id, embedding,
-         |    list_reduce(list_transform(generate_series(1, 8),
-         |      j -> CASE WHEN embedding[j] > 0 THEN 1 << (j - 1) ELSE 0 END),
-         |      (a, b) -> a + b) AS bucket
-         |  FROM embeddings
-         |)
-         |SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-         |  ${cosSql("a.embedding", "b.embedding")} AS cosine
-         |FROM bkt a JOIN bkt b
-         |  ON a.vec_id < b.vec_id AND bit_count(xor(a.bucket, b.bucket)) <= 1
-         |WHERE ${cosSql("a.embedding", "b.embedding")} >= 0.4
-         |ORDER BY id_a, id_b""".stripMargin,
-    "q_stream_indicators" -> duckStreamIndicatorsSql,
-    // identical fold, REAL micro-batch execution on the Spark side — the
-    // streaming runtime must reproduce the batch fold bit-for-bit
-    "q_stream_live" -> duckStreamIndicatorsSql,
-    // same runtime, TTL eviction FIRING: fold restarts per (symbol, epoch)
-    "q_stream_live_ttl" -> duckStreamTtlSql,
-    "q_range_join" ->
-      """WITH li AS (
-        |  SELECT l_suppkey, l_orderkey, l_linenumber,
-        |    CAST(epoch(l_shipdate) AS BIGINT) // 86400 AS ship_day,
-        |    CAST(l_quantity AS BIGINT) AS qty
-        |  FROM lineitem
-        |)
-        |SELECT a.l_orderkey, a.l_linenumber, count(*) AS n_overlapping
-        |FROM li a JOIN li b ON a.l_suppkey = b.l_suppkey
-        |  AND a.ship_day BETWEEN b.ship_day AND b.ship_day + b.qty
-        |GROUP BY a.l_orderkey, a.l_linenumber
-        |ORDER BY a.l_orderkey, a.l_linenumber""".stripMargin,
-    "q_range_join_pairs" ->
-      """WITH li AS (
-        |  SELECT l_suppkey, l_orderkey, l_linenumber,
-        |    CAST(epoch(l_shipdate) AS BIGINT) // 86400 AS ship_day,
-        |    CAST(l_quantity AS BIGINT) AS qty
-        |  FROM lineitem WHERE l_suppkey < 50
-        |)
-        |SELECT a.l_orderkey, a.l_linenumber, a.ship_day AS p_day,
-        |  b.ship_day AS i_start, b.ship_day + b.qty AS i_end
-        |FROM li a JOIN li b ON a.l_suppkey = b.l_suppkey
-        |  AND a.ship_day BETWEEN b.ship_day AND b.ship_day + b.qty
-        |ORDER BY a.l_orderkey, a.l_linenumber, i_start, i_end""".stripMargin,
-    "q_asof_join" ->
-      """WITH ord AS (
-        |  SELECT o_custkey, o_orderdate,
-        |    max(o_orderkey) AS o_orderkey,
-        |    max_by(o_totalprice, o_orderkey) AS o_totalprice
-        |  FROM orders GROUP BY o_custkey, o_orderdate
-        |)
-        |SELECT e.event_id, epoch_us(e.ts) AS ts_us, e.user_id,
-        |  o.o_orderkey, o.o_totalprice
-        |FROM events e ASOF LEFT JOIN ord o
-        |  ON e.user_id = o.o_custkey AND e.ts >= o.o_orderdate
-        |ORDER BY e.event_id""".stripMargin,
-    "q_asof_tolerance" ->
-      """WITH ord AS (
-        |  SELECT o_custkey, o_orderdate,
-        |    max(o_orderkey) AS o_orderkey,
-        |    max_by(o_totalprice, o_orderkey) AS o_totalprice
-        |  FROM orders GROUP BY o_custkey, o_orderdate
-        |)
-        |SELECT e.event_id, epoch_us(e.ts) AS ts_us, e.user_id,
-        |  CASE WHEN epoch_us(e.ts) - epoch_us(CAST(o.o_orderdate AS TIMESTAMP)) <= 2592000000000
-        |       THEN o.o_orderkey END AS o_orderkey,
-        |  CASE WHEN epoch_us(e.ts) - epoch_us(CAST(o.o_orderdate AS TIMESTAMP)) <= 2592000000000
-        |       THEN o.o_totalprice END AS o_totalprice
-        |FROM events e ASOF LEFT JOIN ord o
-        |  ON e.user_id = o.o_custkey AND e.ts >= o.o_orderdate
-        |ORDER BY e.event_id""".stripMargin,
-    // Replays StreamingPipeline.windowedDistinct's batch execution: the
-    // same HLL p=8 register arithmetic as the q_hll_distinct oracle,
-    // grouped by (event_type, epoch-aligned day bucket) — Spark's tumbling
-    // window start is the same epoch-floor time_bucket computes.
-    "q_stream_distinct" ->
-      s"""WITH h AS (
-         |  SELECT event_type,
-         |    epoch_us(time_bucket(INTERVAL 1 day, ts)) AS ws_us,
-         |    CAST('0x' || substr(md5(user_id::VARCHAR), 1, 15) AS BIGINT) AS hv
-         |  FROM events GROUP BY 1, 2, 3
-         |), b AS (
-         |  SELECT event_type, ws_us, hv // 4503599627370496 AS j,
-         |         hv % 4503599627370496 AS rem
-         |  FROM h
-         |), r AS (
-         |  SELECT event_type, ws_us, j,
-         |    max(CASE WHEN rem = 0 THEN 53 ELSE 53 - length(bin(rem)) END) AS mj
-         |  FROM b GROUP BY 1, 2, 3
-         |), agg AS (
-         |  SELECT event_type, ws_us,
-         |    CAST(sum(1::BIGINT << (53 - mj)) AS BIGINT)
-         |      + (256 - count(*)) * 9007199254740992 AS sum_scaled,
-         |    CAST(256 - count(*) AS INT) AS zeros
-         |  FROM r GROUP BY 1, 2
-         |), ex AS (
-         |  SELECT event_type,
-         |    epoch_us(time_bucket(INTERVAL 1 day, ts)) AS ws_us,
-         |    count(DISTINCT user_id) AS exact_users
-         |  FROM events GROUP BY 1, 2
-         |)
-         |SELECT a.event_type, a.ws_us,
-         |  ${functions.Hll.estimateSql("a.sum_scaled", "a.zeros", 8)} AS est_users,
-         |  x.exact_users
-         |FROM agg a JOIN ex x USING (event_type, ws_us)
-         |ORDER BY event_type, ws_us""".stripMargin,
-    "q_stream_bars" ->
-      """SELECT event_type AS ticker,
-        |  epoch_us(time_bucket(INTERVAL 1 minute, ts)) AS ws_us,
-        |  min_by(value, ts) AS open,
-        |  max(value) AS high,
-        |  min(value) AS low,
-        |  max_by(value, ts) AS close,
-        |  CAST(sum(user_id) AS BIGINT) AS volume,
-        |  CASE WHEN sum(user_id) <> 0
-        |    THEN round(sum(value * user_id) / sum(user_id), 6) END AS vwap_r,
-        |  count(*) AS transactions
-        |FROM events
-        |GROUP BY event_type, time_bucket(INTERVAL 1 minute, ts)
-        |ORDER BY ticker, ws_us""".stripMargin,
-    "q_media_frames" ->
-      // byte-exact frame slicing: DuckDB 1.0 has no BLOB substr, so slice
-      // the hex encoding (2 chars per byte) — equivalent to Spark's
-      // substring on the binary payload even for multi-byte UTF-8 text
-      """SELECT doc_id,
-        |  CAST(octet_length(encode(text)) AS INT) AS n_bytes,
-        |  md5(text) AS content_md5,
-        |  array_to_string(list_transform(generate_series(0, 3), f ->
-        |    substr(lower(hex(encode(text))),
-        |      CAST(floor(f * greatest(octet_length(encode(text)) - 16, 1) / 4.0 + 1) AS INT) * 2 - 1,
-        |      32)), ',') AS frames_joined
-        |FROM documents ORDER BY doc_id""".stripMargin
-  )
-
-  /** DuckDB CASE chain mirroring TextOps.langId (same profiles, same
-    * tie-break order). */
-  private def TextOps_LangProfilesSql: String = {
-    val scores = operators.TextOps.LangProfiles.map { case (lang, words) =>
-      val lst = words.map(w => s"'$w'").mkString("[", ",", "]")
-      lang -> duckStopCount(lst)
-    }
-    val best = scores.map(_._2).mkString("greatest(", ", ", ")")
-    val whens = scores.map { case (lang, s) =>
-      s"WHEN $s = $best AND $best > 0 THEN '$lang'"
-    }.mkString(" ")
-    s"CASE $whens ELSE 'und' END"
-  }
-
-  /** SimHash fingerprints CTE (doc_id, simhash) — mirrors Dedup.simhash. */
-  private def duckSimhashSql: String =
-    s"""WITH $duckToks,
-       |dtoks AS (SELECT DISTINCT doc_id, w FROM toks),
-       |h AS (SELECT doc_id, CAST('0x' || substr(md5(w), 1, 8) AS BIGINT) AS h FROM dtoks),
-       |bits AS (
-       |  SELECT doc_id, j,
-       |    CASE WHEN (h & (1::BIGINT << j)) > 0 THEN 1 ELSE -1 END AS contrib
-       |  FROM h CROSS JOIN generate_series(0, 31) t(j)
-       |),
-       |votes AS (SELECT doc_id, j, sum(contrib) AS vote FROM bits GROUP BY doc_id, j),
-       |fps AS (
-       |  SELECT doc_id,
-       |    CAST(sum(CASE WHEN vote > 0 THEN (1::BIGINT << j) ELSE 0 END) AS BIGINT) AS simhash
-       |  FROM votes GROUP BY doc_id
-       |)""".stripMargin
-
-  /** [[duckStreamIndicatorsSql]] with TTL-eviction semantics for
-    * q_stream_live_ttl: the same fold, but partitioned by (symbol, epoch)
-    * where an epoch breaks whenever the event-time gap to the previous
-    * tick exceeds idleMs = 3 days — a revived key re-warms from empty
-    * state. Exact for this gate's corpus + chunking: the only >3-day gaps
-    * are the injected [Jan 11, Jan 21) silences (max natural gap 24 h),
-    * and the gate's chunk boundaries guarantee the runtime evicts at
-    * exactly those points. */
-  private lazy val duckStreamTtlSql: String =
-    s"""WITH ev AS (
-       |  SELECT event_type, ts, value, user_id FROM events
-       |  WHERE NOT (event_type IN ('click', 'purchase', 'view')
-       |    AND ts >= TIMESTAMP '2024-01-11 00:00:00'
-       |    AND ts <  TIMESTAMP '2024-01-21 00:00:00')
-       |), ep AS (
-       |  SELECT event_type, ts, value, user_id,
-       |    sum(CASE WHEN prev IS NOT NULL
-       |              AND epoch_us(ts) - epoch_us(prev) > 259200000000
-       |             THEN 1 ELSE 0 END)
-       |      OVER (PARTITION BY event_type ORDER BY ts) AS epoch
-       |  FROM (SELECT *, lag(ts) OVER (PARTITION BY event_type ORDER BY ts)
-       |          AS prev FROM ev) t
-       |), base AS (
-       |  SELECT event_type AS symbol, ts, value AS price, user_id AS volume,
-       |    list(struct_pack(p := value, g := 0.0::DOUBLE, l := 0.0::DOUBLE, c := 0.0::DOUBLE)) OVER w AS rsix,
-       |    list(value) OVER w AS emalist,
-       |    list(value) OVER w5 AS plist5,
-       |    list(user_id) OVER w5 AS vlist5,
-       |    count(*) OVER w5 AS c5
-       |  FROM ep
-       |  WINDOW
-       |    w AS (PARTITION BY event_type, epoch ORDER BY ts ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW),
-       |    w5 AS (PARTITION BY event_type, epoch ORDER BY ts ROWS BETWEEN 4 PRECEDING AND CURRENT ROW)
-       |), red AS (
-       |  SELECT symbol, ts, price, volume, c5,
-       |    ${rsiFold("rsix", 5)} AS s,
-       |    ${duckEma("emalist", 5)} AS ema,
-       |    CASE WHEN c5 = 5 THEN list_reduce(plist5, (a,b) -> a + b) / 5.0::DOUBLE END AS sma,
-       |    CASE WHEN c5 = 5 THEN CAST(list_reduce(vlist5, (a,b) -> a + b) AS DOUBLE) / 5.0::DOUBLE END AS volume_sma
-       |  FROM base
-       |)
-       |SELECT symbol, epoch_us(ts) AS ts_us, price, volume, sma, ema,
-       |  ${rsiEval("s", 5)} AS rsi, volume_sma,
-       |  CASE WHEN volume_sma IS NOT NULL THEN CAST(volume AS DOUBLE) / volume_sma END AS volume_ratio
-       |FROM red ORDER BY symbol, ts_us""".stripMargin
-
-  /** The per-symbol indicator fold over events — shared by the
-    * q_stream_indicators (batch-mode stateful op) and q_stream_live (real
-    * micro-batch runtime) oracles: one SQL, two execution paths. */
-  private lazy val duckStreamIndicatorsSql: String =
-    s"""WITH base AS (
-       |  SELECT event_type AS symbol, ts, value AS price, user_id AS volume,
-       |    list(struct_pack(p := value, g := 0.0::DOUBLE, l := 0.0::DOUBLE, c := 0.0::DOUBLE)) OVER w AS rsix,
-       |    list(value) OVER w AS emalist,
-       |    list(value) OVER w5 AS plist5,
-       |    list(user_id) OVER w5 AS vlist5,
-       |    count(*) OVER w5 AS c5
-       |  FROM events
-       |  WINDOW
-       |    w AS (PARTITION BY event_type ORDER BY ts ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW),
-       |    w5 AS (PARTITION BY event_type ORDER BY ts ROWS BETWEEN 4 PRECEDING AND CURRENT ROW)
-       |), red AS (
-       |  SELECT symbol, ts, price, volume, c5,
-       |    ${rsiFold("rsix", 5)} AS s,
-       |    ${duckEma("emalist", 5)} AS ema,
-       |    CASE WHEN c5 = 5 THEN list_reduce(plist5, (a,b) -> a + b) / 5.0::DOUBLE END AS sma,
-       |    CASE WHEN c5 = 5 THEN CAST(list_reduce(vlist5, (a,b) -> a + b) AS DOUBLE) / 5.0::DOUBLE END AS volume_sma
-       |  FROM base
-       |)
-       |SELECT symbol, epoch_us(ts) AS ts_us, price, volume, sma, ema,
-       |  ${rsiEval("s", 5)} AS rsi, volume_sma,
-       |  CASE WHEN volume_sma IS NOT NULL THEN CAST(volume AS DOUBLE) / volume_sma END AS volume_ratio
-       |FROM red ORDER BY symbol, ts_us""".stripMargin
-
-  /** For each key in `queries`, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omit for non-SQL-expressible ops. */
-  def oracleSql: Map[String, String] = Map(
-    "q_sma" ->
-      s"""SELECT l_orderkey, l_linenumber,
-         |  CASE WHEN count(l_quantity) OVER wn = 5 THEN avg(l_quantity) OVER wn END AS sma_5
-         |FROM lineitem
-         |WINDOW wn AS ($W ROWS BETWEEN 4 PRECEDING AND CURRENT ROW)
-         |ORDER BY l_orderkey, l_linenumber""".stripMargin,
-    "q_ema" ->
-      s"""SELECT l_orderkey, l_linenumber,
-         |  ${duckEma("list(l_quantity) OVER w", 12)} AS ema_12
-         |FROM lineitem WINDOW w AS $duckW
-         |ORDER BY l_orderkey, l_linenumber""".stripMargin,
-    // Replays Rolling.obv: signed scaled-BIGINT running sum (exact in any
-    // engine), one final descale division.
-    "q_obv" ->
-      s"""SELECT l_orderkey, l_linenumber,
-         |  CAST(sum(signed) OVER (ws ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-         |    AS DOUBLE) / 100.0::DOUBLE AS obv
-         |FROM (
-         |  SELECT l_orderkey, l_linenumber, l_suppkey, l_shipdate,
-         |    CASE WHEN lag(x, 1) OVER ws IS NULL THEN 0
-         |         WHEN x > lag(x, 1) OVER ws THEN vi
-         |         WHEN x < lag(x, 1) OVER ws THEN -vi
-         |         ELSE 0 END AS signed
-         |  FROM (SELECT l_orderkey, l_linenumber, l_suppkey, l_shipdate,
-         |          CAST(l_quantity AS DOUBLE) AS x,
-         |          CAST(round(CAST(l_extendedprice AS DOUBLE) * 100.0::DOUBLE) AS BIGINT) AS vi
-         |        FROM lineitem) li
-         |  WINDOW ws AS ($W)
-         |) s
-         |WINDOW ws AS ($W)
-         |ORDER BY l_orderkey, l_linenumber""".stripMargin,
-    // Replays Rolling.stochastic: %K from exact window min/max, %D as the
-    // same explicit (K + lag + lag)/3 tree.
-    "q_stochastic" ->
-      s"""SELECT l_orderkey, l_linenumber, pct_k,
-         |  (pct_k + lag(pct_k, 1) OVER ws + lag(pct_k, 2) OVER ws)
-         |    / 3.0::DOUBLE AS pct_d
-         |FROM (
-         |  SELECT l_orderkey, l_linenumber, l_suppkey, l_shipdate,
-         |    CASE WHEN count(x) OVER wn = 14 AND max(x) OVER wn <> min(x) OVER wn
-         |         THEN 100.0::DOUBLE * (x - min(x) OVER wn)
-         |              / (max(x) OVER wn - min(x) OVER wn) END AS pct_k
-         |  FROM (SELECT l_orderkey, l_linenumber, l_suppkey, l_shipdate,
-         |          CAST(l_quantity AS DOUBLE) AS x FROM lineitem) li
-         |  WINDOW wn AS ($W ROWS BETWEEN 13 PRECEDING AND CURRENT ROW)
-         |) k
-         |WINDOW ws AS ($W)
-         |ORDER BY l_orderkey, l_linenumber""".stripMargin,
-    // Replays the JSON extraction: DuckDB's json_extract_string is the
-    // single parse; n_consistent is n by construction (the Spark side
-    // cross-checks its two parsers row-by-row).
-    "q_json_extract" ->
-      """SELECT event_type, count(*) AS n,
-        |  CAST(sum(CAST(json_extract_string(props, '$.k') AS BIGINT)) AS BIGINT) AS sum_k,
-        |  min(CAST(json_extract_string(props, '$.k') AS BIGINT)) AS min_k,
-        |  max(CAST(json_extract_string(props, '$.k') AS BIGINT)) AS max_k,
-        |  CAST(count(*) AS BIGINT) AS n_consistent
-        |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin,
-    // Replays Rolling.vwap: scaled-integer sums (exact under any
-    // accumulation order in both engines), one double division at the end.
-    "q_vwap" ->
-      s"""SELECT l_orderkey, l_linenumber,
-         |  CASE WHEN count(*) OVER wn = 20 THEN
-         |    CAST(sum(pi * vi) OVER wn AS DOUBLE)
-         |    / (100.0::DOUBLE * CAST(sum(vi) OVER wn AS DOUBLE)) END AS vwap
-         |FROM (SELECT l_orderkey, l_linenumber, l_suppkey, l_shipdate,
-         |        CAST(round(CAST(l_extendedprice AS DOUBLE) * 100.0::DOUBLE) AS BIGINT) AS pi,
-         |        CAST(round(CAST(l_quantity AS DOUBLE) * 1.0::DOUBLE) AS BIGINT) AS vi
-         |      FROM lineitem) li
-         |WINDOW wn AS ($W ROWS BETWEEN 19 PRECEDING AND CURRENT ROW)
-         |ORDER BY l_orderkey, l_linenumber""".stripMargin,
-    "q_ohlc_bars" ->
-      (duckBarsSql + "\nORDER BY l_suppkey, l_shipdate"),
-    // Replays Rolling.atr over the bars: TR = greatest(h−l, |h−prevC|,
-    // |l−prevC|) (h−l on each partition's first bar), trailing-14 mean.
-    // Integer-valued bars → the window sum is exact in any order.
-    // Replays StreamingVol's recurrence from scratch: x² transform, then
-    // the first-element-seeded λ-fold over the (ts_us, event_id) order —
-    // the exact batch twin the processor is asserted against in spec.
-    "q_stream_vol" ->
-      """WITH src AS (
-        |  SELECT CAST(user_id AS VARCHAR) AS key,
-        |    epoch_ns(ts) // 1000 AS ts_us, value, event_id
-        |  FROM events
-        |), f AS (
-        |  SELECT key, ts_us, value,
-        |    list_reduce(
-        |      list_transform(list(value) OVER w, v -> v * v),
-        |      (acc, cur) -> (940.0::DOUBLE/1000.0::DOUBLE)*acc
-        |        + (1.0::DOUBLE - 940.0::DOUBLE/1000.0::DOUBLE)*cur) AS ewm_var
-        |  FROM src
-        |  WINDOW w AS (PARTITION BY key ORDER BY ts_us, event_id
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-        |)
-        |SELECT key, ts_us, value, ewm_var
-        |FROM f ORDER BY key, ts_us, value""".stripMargin,
-    // Replays Rolling.elderRay: the q_ema prefix-list fold over bar
-    // closes, extremes differenced against it.
-    "q_elder_ray" ->
-      s"""WITH bars AS (
-         |$duckBarsSql
-         |), m AS (
-         |  SELECT l_suppkey, l_shipdate, high, low, ${duckEma("cs", 13)} AS em
-         |  FROM (SELECT l_suppkey, l_shipdate, high, low,
-         |          list(close) OVER (PARTITION BY l_suppkey ORDER BY l_shipdate
-         |            ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cs
-         |        FROM bars) e
-         |)
-         |SELECT l_suppkey, l_shipdate,
-         |  high - em AS bull_power, low - em AS bear_power
-         |FROM m ORDER BY l_suppkey, l_shipdate""".stripMargin,
-    // Replays Rolling.forceIndex: frozen-NULL EMA ≡ fold over the
-    // null-filtered prefix (the q_indicators_nulls identity); only each
-    // key's first row is NULL here.
-    "q_force_index" ->
-      s"""WITH bars AS (
-         |$duckBarsSql
-         |), r AS (
-         |  SELECT l_suppkey, l_shipdate,
-         |    (close - lag(close, 1) OVER ws) * volume AS raw
-         |  FROM bars WINDOW ws AS (PARTITION BY l_suppkey ORDER BY l_shipdate)
-         |), f AS (
-         |  SELECT l_suppkey, l_shipdate, raw,
-         |    list_filter(list(raw) OVER wn, v -> v IS NOT NULL) AS nn
-         |  FROM r WINDOW wn AS (PARTITION BY l_suppkey ORDER BY l_shipdate
-         |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-         |)
-         |SELECT l_suppkey, l_shipdate,
-         |  CASE WHEN raw IS NOT NULL AND len(nn) > 0
-         |       THEN list_reduce(nn, (acc, x) ->
-         |         (2.0::DOUBLE/14.0::DOUBLE)*x
-         |           + (1.0::DOUBLE - 2.0::DOUBLE/14.0::DOUBLE)*acc)
-         |  END AS force_index
-         |FROM f ORDER BY l_suppkey, l_shipdate""".stripMargin,
-    // Replays Rolling.cmf: per-bar mfm tree, then BOTH frame sums as
-    // first-element-seeded list folds (≡ Spark's 0.0-seeded aggregate —
-    // 0.0 + x == x), zero-volume and unfilled frames → NULL.
-    "q_cmf" ->
-      s"""WITH bars AS (
-         |$duckBarsSql
-         |), m AS (
-         |  SELECT l_suppkey, l_shipdate, volume,
-         |    (CASE WHEN high <> low
-         |          THEN ((close - low) - (high - close)) / (high - low)
-         |          ELSE 0.0::DOUBLE END) * volume AS mfv
-         |  FROM bars
-         |), f AS (
-         |  SELECT l_suppkey, l_shipdate,
-         |    CASE WHEN count(mfv) OVER wn = 20 THEN list(mfv) OVER wn END AS ml,
-         |    CASE WHEN count(mfv) OVER wn = 20 THEN list(volume) OVER wn END AS vl
-         |  FROM m
-         |  WINDOW wn AS (PARTITION BY l_suppkey ORDER BY l_shipdate
-         |    ROWS BETWEEN 19 PRECEDING AND CURRENT ROW)
-         |)
-         |SELECT l_suppkey, l_shipdate,
-         |  CASE WHEN list_reduce(vl, (a, b) -> a + b) <> 0.0::DOUBLE
-         |       THEN list_reduce(ml, (a, b) -> a + b)
-         |            / list_reduce(vl, (a, b) -> a + b) END AS cmf
-         |FROM f ORDER BY l_suppkey, l_shipdate""".stripMargin,
-    // ADL replay: the q_cmf money-flow tree quantized to a 2-dp BIGINT
-    // per bar (the obv discipline), BIGINT running sum, one descale.
-    "q_adl" ->
-      s"""WITH bars AS (
-         |$duckBarsSql
-         |), m AS (
-         |  SELECT l_suppkey, l_shipdate,
-         |    CAST(round(((CASE WHEN high <> low
-         |          THEN ((close - low) - (high - close)) / (high - low)
-         |          ELSE 0.0::DOUBLE END) * volume) * 100.0::DOUBLE) AS BIGINT) AS mfvi
-         |  FROM bars
-         |)
-         |SELECT l_suppkey, l_shipdate,
-         |  CAST(sum(mfvi) OVER (PARTITION BY l_suppkey ORDER BY l_shipdate
-         |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS DOUBLE)
-         |    / 100.0::DOUBLE AS adl
-         |FROM m ORDER BY l_suppkey, l_shipdate""".stripMargin,
-    // Chaikin-oscillator replay: the q_adl cumsum, then two sequential-
-    // fold EMAs over the adl prefix list (duckEma = the native update
-    // order), fast − slow.
-    "q_chaikin_osc" ->
-      s"""WITH bars AS (
-         |$duckBarsSql
-         |), m AS (
-         |  SELECT l_suppkey, l_shipdate,
-         |    CAST(round(((CASE WHEN high <> low
-         |          THEN ((close - low) - (high - close)) / (high - low)
-         |          ELSE 0.0::DOUBLE END) * volume) * 100.0::DOUBLE) AS BIGINT) AS mfvi
-         |  FROM bars
-         |), a AS (
-         |  SELECT l_suppkey, l_shipdate,
-         |    CAST(sum(mfvi) OVER wu AS DOUBLE) / 100.0::DOUBLE AS adl
-         |  FROM m WINDOW wu AS (PARTITION BY l_suppkey ORDER BY l_shipdate
-         |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-         |)
-         |SELECT l_suppkey, l_shipdate, adl,
-         |  ${duckEma("list(adl) OVER wu", 3)}
-         |    - ${duckEma("list(adl) OVER wu", 10)} AS chaikin_osc
-         |FROM a WINDOW wu AS (PARTITION BY l_suppkey ORDER BY l_shipdate
-         |  ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-         |ORDER BY l_suppkey, l_shipdate""".stripMargin,
-    // Ulcer replay: per-bar drawdown vs the trailing-14 max (exact
-    // extreme + fixed IEEE tree), then the ordered square-sum fold.
-    "q_ulcer" ->
-      s"""WITH bars AS (
-         |$duckBarsSql
-         |), d AS (
-         |  SELECT l_suppkey, l_shipdate,
-         |    CASE WHEN count(close) OVER wn = 14 AND max(close) OVER wn > 0.0::DOUBLE
-         |      THEN 100.0::DOUBLE * (close - max(close) OVER wn)
-         |           / (max(close) OVER wn) END AS dd
-         |  FROM bars WINDOW wn AS (PARTITION BY l_suppkey ORDER BY l_shipdate
-         |    ROWS BETWEEN 13 PRECEDING AND CURRENT ROW)
-         |), f AS (
-         |  SELECT l_suppkey, l_shipdate,
-         |    CASE WHEN count(dd) OVER wn = 14 THEN list(dd * dd) OVER wn END AS dl
-         |  FROM d WINDOW wn AS (PARTITION BY l_suppkey ORDER BY l_shipdate
-         |    ROWS BETWEEN 13 PRECEDING AND CURRENT ROW)
-         |)
-         |SELECT l_suppkey, l_shipdate,
-         |  sqrt(list_reduce(dl, (a, b) -> a + b) / 14.0::DOUBLE) AS ulcer
-         |FROM f ORDER BY l_suppkey, l_shipdate""".stripMargin,
-    // EOM replay: the midpoint-move × range / volume tree with the
-    // first-bar and zero-volume guards, then the ordered 14-fold SMA.
-    "q_eom" ->
-      s"""WITH bars AS (
-         |$duckBarsSql
-         |), e AS (
-         |  SELECT l_suppkey, l_shipdate,
-         |    CASE WHEN lag(high, 1) OVER ws IS NOT NULL AND volume <> 0.0::DOUBLE
-         |      THEN (((high + low) - (lag(high, 1) OVER ws + lag(low, 1) OVER ws))
-         |            / 2.0::DOUBLE) * (high - low) / volume END AS emv
-         |  FROM bars WINDOW ws AS (PARTITION BY l_suppkey ORDER BY l_shipdate)
-         |), f AS (
-         |  SELECT l_suppkey, l_shipdate,
-         |    CASE WHEN count(emv) OVER wn = 14 THEN list(emv) OVER wn END AS el
-         |  FROM e WINDOW wn AS (PARTITION BY l_suppkey ORDER BY l_shipdate
-         |    ROWS BETWEEN 13 PRECEDING AND CURRENT ROW)
-         |)
-         |SELECT l_suppkey, l_shipdate,
-         |  list_reduce(el, (a, b) -> a + b) / 14.0::DOUBLE AS eom
-         |FROM f ORDER BY l_suppkey, l_shipdate""".stripMargin,
-    // BOP replay: the flat-bar-guarded per-bar ratio, ordered 14-fold SMA.
-    "q_bop" ->
-      s"""WITH bars AS (
-         |$duckBarsSql
-         |), r AS (
-         |  SELECT l_suppkey, l_shipdate,
-         |    CASE WHEN high <> low THEN (close - open) / (high - low)
-         |         ELSE 0.0::DOUBLE END AS bp
-         |  FROM bars
-         |), f AS (
-         |  SELECT l_suppkey, l_shipdate,
-         |    CASE WHEN count(bp) OVER wn = 14 THEN list(bp) OVER wn END AS bl
-         |  FROM r WINDOW wn AS (PARTITION BY l_suppkey ORDER BY l_shipdate
-         |    ROWS BETWEEN 13 PRECEDING AND CURRENT ROW)
-         |)
-         |SELECT l_suppkey, l_shipdate,
-         |  list_reduce(bl, (a, b) -> a + b) / 14.0::DOUBLE AS bop
-         |FROM f ORDER BY l_suppkey, l_shipdate""".stripMargin,
-    // KAMA replay: the efficiency-ratio/sc layer declaratively (ordered
-    // path-length fold, α constants as the same IEEE divisions), then a
-    // WITH RECURSIVE replay of the var_ema state machine — each compound
-    // stays a REAL projected column through CTE layers (never a lateral
-    // alias — the q_holt lesson), and the update tree copies VarEma
-    // op-for-op: sc·x + (1 − sc)·state.
-    "q_kama" ->
-      s"""WITH RECURSIVE bars AS (
-         |$duckBarsSql
-         |), s0 AS (
-         |  SELECT l_suppkey, l_shipdate, close,
-         |    row_number() OVER ws AS rn,
-         |    abs(close - lag(close, 1) OVER ws) AS d,
-         |    abs(close - lag(close, 10) OVER ws) AS dir
-         |  FROM bars WINDOW ws AS (PARTITION BY l_suppkey ORDER BY l_shipdate)
-         |), erl AS (
-         |  SELECT l_suppkey, l_shipdate, close, rn,
-         |    CASE WHEN count(d) OVER wn = 10 THEN
-         |      CASE WHEN list_reduce(list(d) OVER wn, (a, b) -> a + b) <> 0.0::DOUBLE
-         |           THEN dir / list_reduce(list(d) OVER wn, (a, b) -> a + b)
-         |           ELSE 0.0::DOUBLE END
-         |    END AS er
-         |  FROM s0 WINDOW wn AS (PARTITION BY l_suppkey ORDER BY l_shipdate
-         |    ROWS BETWEEN 9 PRECEDING AND CURRENT ROW)
-         |), scl AS (
-         |  SELECT l_suppkey, l_shipdate, close, rn,
-         |    (er * ((2.0::DOUBLE / 3.0::DOUBLE) - (2.0::DOUBLE / 31.0::DOUBLE))
-         |     + (2.0::DOUBLE / 31.0::DOUBLE)) AS base
-         |  FROM erl
-         |), seq AS MATERIALIZED (
-         |  SELECT l_suppkey, l_shipdate, close, rn, base * base AS sc FROM scl
-         |), kam AS (
-         |  SELECT l_suppkey, l_shipdate, rn, sc,
-         |    CASE WHEN sc IS NOT NULL THEN close END AS st
-         |  FROM seq WHERE rn = 1
-         |  UNION ALL
-         |  SELECT s.l_suppkey, s.l_shipdate, s.rn, s.sc,
-         |    CASE WHEN s.sc IS NULL THEN h.st
-         |         WHEN h.st IS NULL THEN s.close
-         |         ELSE (s.sc * s.close + (1.0::DOUBLE - s.sc) * h.st) END AS st
-         |  FROM kam h JOIN seq s ON s.l_suppkey = h.l_suppkey AND s.rn = h.rn + 1
-         |)
-         |SELECT l_suppkey, l_shipdate,
-         |  CASE WHEN sc IS NOT NULL THEN st END AS kama
-         |FROM kam ORDER BY l_suppkey, l_shipdate""".stripMargin,
-    // NVI/PVI replay: the conditional growth factors declaratively, then
-    // a WITH RECURSIVE dual-state product walk — op order copies RunProd
-    // (prev · factor) and the final base scaling (base · state).
-    "q_volume_index" -> {
-      def f(cmp: String) =
-        s"""CASE WHEN lag(volume, 1) OVER ws IS NOT NULL
-           |      AND volume $cmp lag(volume, 1) OVER ws
-           |      AND lag(close, 1) OVER ws IS NOT NULL
-           |      AND lag(close, 1) OVER ws <> 0.0::DOUBLE
-           |  THEN 1.0::DOUBLE + ((close - lag(close, 1) OVER ws)
-           |                      / lag(close, 1) OVER ws)
-           |  ELSE 1.0::DOUBLE END""".stripMargin
-      s"""WITH RECURSIVE bars AS (
-         |$duckBarsSql
-         |), seq AS MATERIALIZED (
-         |  SELECT l_suppkey, l_shipdate,
-         |    row_number() OVER (PARTITION BY l_suppkey ORDER BY l_shipdate) AS rn,
-         |    ${f("<")} AS fn,
-         |    ${f(">")} AS fp
-         |  FROM bars WINDOW ws AS (PARTITION BY l_suppkey ORDER BY l_shipdate)
-         |), vi AS (
-         |  SELECT l_suppkey, l_shipdate, rn, fn AS sn, fp AS sp
-         |  FROM seq WHERE rn = 1
-         |  UNION ALL
-         |  SELECT s.l_suppkey, s.l_shipdate, s.rn,
-         |    (h.sn * s.fn) AS sn, (h.sp * s.fp) AS sp
-         |  FROM vi h JOIN seq s ON s.l_suppkey = h.l_suppkey AND s.rn = h.rn + 1
-         |)
-         |SELECT l_suppkey, l_shipdate,
-         |  1000.0::DOUBLE * sn AS nvi, 1000.0::DOUBLE * sp AS pvi
-         |FROM vi ORDER BY l_suppkey, l_shipdate""".stripMargin
-    },
-    // Equity-curve replay: guarded windowed-avg SMA, the ±1/0 prior-bar
-    // position CASE, 1 + pos·ret factors, WITH RECURSIVE product walk.
-    "q_equity_curve" ->
-      s"""WITH RECURSIVE bars AS (
-         |$duckBarsSql
-         |), m AS (
-         |  SELECT l_suppkey, l_shipdate, close,
-         |    CASE WHEN count(close) OVER w10 = 10 THEN avg(close) OVER w10 END AS s10,
-         |    lag(close, 1) OVER ws AS pc
-         |  FROM bars
-         |  WINDOW ws AS (PARTITION BY l_suppkey ORDER BY l_shipdate),
-         |    w10 AS (PARTITION BY l_suppkey ORDER BY l_shipdate
-         |      ROWS BETWEEN 9 PRECEDING AND CURRENT ROW)
-         |), p AS (
-         |  SELECT l_suppkey, l_shipdate, close, pc,
-         |    row_number() OVER (PARTITION BY l_suppkey ORDER BY l_shipdate) AS rn,
-         |    CASE WHEN pc IS NOT NULL AND lag(s10, 1) OVER ws2 IS NOT NULL
-         |          AND pc < lag(s10, 1) OVER ws2 THEN 1.0::DOUBLE
-         |         WHEN pc IS NOT NULL AND lag(s10, 1) OVER ws2 IS NOT NULL
-         |          AND pc > lag(s10, 1) OVER ws2 THEN -1.0::DOUBLE
-         |         ELSE 0.0::DOUBLE END AS position
-         |  FROM m WINDOW ws2 AS (PARTITION BY l_suppkey ORDER BY l_shipdate)
-         |), seq AS MATERIALIZED (
-         |  SELECT l_suppkey, l_shipdate, rn, position,
-         |    CASE WHEN position IS NOT NULL AND position <> 0.0::DOUBLE
-         |          AND pc IS NOT NULL AND pc <> 0.0::DOUBLE
-         |      THEN 1.0::DOUBLE + (position * ((close - pc) / pc))
-         |      ELSE 1.0::DOUBLE END AS fac
-         |  FROM p
-         |), bt AS (
-         |  SELECT l_suppkey, l_shipdate, rn, position, fac AS st
-         |  FROM seq WHERE rn = 1
-         |  UNION ALL
-         |  SELECT s.l_suppkey, s.l_shipdate, s.rn, s.position,
-         |    (h.st * s.fac) AS st
-         |  FROM bt h JOIN seq s ON s.l_suppkey = h.l_suppkey AND s.rn = h.rn + 1
-         |)
-         |SELECT l_suppkey, l_shipdate, position,
-         |  1.0::DOUBLE * st AS equity
-         |FROM bt ORDER BY l_suppkey, l_shipdate""".stripMargin,
-    // Backtest replay: SMAs as guarded windowed avgs (closes are
-    // integer-valued — exact), the prior-bar position compare, growth
-    // factors as one fixed tree, then the WITH RECURSIVE product walk.
-    "q_backtest" ->
-      s"""WITH RECURSIVE bars AS (
-         |$duckBarsSql
-         |), m AS (
-         |  SELECT l_suppkey, l_shipdate, close,
-         |    CASE WHEN count(close) OVER w5 = 5 THEN avg(close) OVER w5 END AS f,
-         |    CASE WHEN count(close) OVER w10 = 10 THEN avg(close) OVER w10 END AS sl,
-         |    lag(close, 1) OVER ws AS pc
-         |  FROM bars
-         |  WINDOW ws AS (PARTITION BY l_suppkey ORDER BY l_shipdate),
-         |    w5 AS (PARTITION BY l_suppkey ORDER BY l_shipdate
-         |      ROWS BETWEEN 4 PRECEDING AND CURRENT ROW),
-         |    w10 AS (PARTITION BY l_suppkey ORDER BY l_shipdate
-         |      ROWS BETWEEN 9 PRECEDING AND CURRENT ROW)
-         |), p AS (
-         |  SELECT l_suppkey, l_shipdate, close, pc,
-         |    row_number() OVER (PARTITION BY l_suppkey ORDER BY l_shipdate) AS rn,
-         |    CASE WHEN lag(f, 1) OVER ws2 IS NOT NULL
-         |          AND lag(sl, 1) OVER ws2 IS NOT NULL
-         |          AND lag(f, 1) OVER ws2 > lag(sl, 1) OVER ws2
-         |      THEN 1.0::DOUBLE ELSE 0.0::DOUBLE END AS position
-         |  FROM m WINDOW ws2 AS (PARTITION BY l_suppkey ORDER BY l_shipdate)
-         |), seq AS MATERIALIZED (
-         |  SELECT l_suppkey, l_shipdate, rn, position,
-         |    CASE WHEN position = 1.0::DOUBLE AND pc IS NOT NULL
-         |          AND pc <> 0.0::DOUBLE
-         |      THEN 1.0::DOUBLE + ((close - pc) / pc)
-         |      ELSE 1.0::DOUBLE END AS fac
-         |  FROM p
-         |), bt AS (
-         |  SELECT l_suppkey, l_shipdate, rn, position, fac AS st
-         |  FROM seq WHERE rn = 1
-         |  UNION ALL
-         |  SELECT s.l_suppkey, s.l_shipdate, s.rn, s.position,
-         |    (h.st * s.fac) AS st
-         |  FROM bt h JOIN seq s ON s.l_suppkey = h.l_suppkey AND s.rn = h.rn + 1
-         |)
-         |SELECT l_suppkey, l_shipdate, position,
-         |  1.0::DOUBLE * st AS equity
-         |FROM bt ORDER BY l_suppkey, l_shipdate""".stripMargin,
-    // Drawdown-episode replay: the same integer quantize / running max /
-    // islands construction; trough via arg-min struct (min over (ci,
-    // date) — struct compare is lexicographic in both engines).
-    "q_drawdown_episodes" ->
-      s"""WITH bars AS (
-         |$duckBarsSql
-         |), f AS (
-         |  SELECT l_suppkey, l_shipdate,
-         |    CAST(round(close * 100.0::DOUBLE) AS BIGINT) AS ci,
-         |    max(CAST(round(close * 100.0::DOUBLE) AS BIGINT)) OVER wr AS pk
-         |  FROM bars WINDOW wr AS (PARTITION BY l_suppkey ORDER BY l_shipdate
-         |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-         |), i AS (
-         |  SELECT l_suppkey, l_shipdate, ci, pk,
-         |    CASE WHEN ci < pk THEN 1 ELSE 0 END AS uw,
-         |    sum(CASE WHEN ci < pk THEN 0 ELSE 1 END) OVER wr AS isl
-         |  FROM f WINDOW wr AS (PARTITION BY l_suppkey ORDER BY l_shipdate
-         |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-         |), ep AS (
-         |  SELECT l_suppkey, isl,
-         |    min(l_shipdate) AS start, max(l_shipdate) AS "end",
-         |    min(struct_pack(ci := ci, d := l_shipdate)) AS tr,
-         |    min(pk) AS peak, CAST(count(*) AS BIGINT) AS duration
-         |  FROM i WHERE uw = 1 GROUP BY l_suppkey, isl
-         |)
-         |SELECT l_suppkey, start, "end",
-         |  tr.d AS trough_at,
-         |  CAST(peak AS DOUBLE) / 100.0::DOUBLE AS peak,
-         |  CAST(tr.ci AS DOUBLE) / 100.0::DOUBLE AS trough,
-         |  CASE WHEN peak <> 0
-         |    THEN 100.0::DOUBLE * CAST(peak - tr.ci AS DOUBLE)
-         |         / CAST(peak AS DOUBLE) END AS depth_pct,
-         |  duration
-         |FROM ep ORDER BY l_suppkey, start""".stripMargin,
-    // Renko replay: the grid-walk recurrence op-for-op — sign·⌊|Δ|/B⌋·B
-    // with B derived by the same IEEE /100 division as the expression.
-    "q_renko" -> {
-      val B = "(500.0::DOUBLE / 100.0::DOUBLE)"
-      val step = s"(h.lvl + ((CAST(sign(s.close - h.lvl) AS DOUBLE)" +
-        s" * CAST(floor(abs(s.close - h.lvl) / $B) AS DOUBLE)) * $B))"
-      s"""WITH RECURSIVE bars AS (
-         |$duckBarsSql
-         |), seq AS MATERIALIZED (
-         |  SELECT l_suppkey, l_shipdate, close,
-         |    row_number() OVER (PARTITION BY l_suppkey ORDER BY l_shipdate) AS rn
-         |  FROM bars
-         |), rk AS (
-         |  SELECT l_suppkey, l_shipdate, rn, close AS lvl
-         |  FROM seq WHERE rn = 1
-         |  UNION ALL
-         |  SELECT s.l_suppkey, s.l_shipdate, s.rn, $step AS lvl
-         |  FROM rk h JOIN seq s ON s.l_suppkey = h.l_suppkey AND s.rn = h.rn + 1
-         |)
-         |SELECT l_suppkey, l_shipdate, lvl AS renko
-         |FROM rk ORDER BY l_suppkey, l_shipdate""".stripMargin
-    },
-    // Fractal replay: the strict ±2 comparison ladder verbatim.
-    "q_fractals" ->
-      s"""WITH bars AS (
-         |$duckBarsSql
-         |)
-         |SELECT l_suppkey, l_shipdate,
-         |  CASE WHEN high > lag(high, 1) OVER ws AND high > lead(high, 1) OVER ws
-         |        AND high > lag(high, 2) OVER ws AND high > lead(high, 2) OVER ws
-         |    THEN high END AS fractal_high,
-         |  CASE WHEN low < lag(low, 1) OVER ws AND low < lead(low, 1) OVER ws
-         |        AND low < lag(low, 2) OVER ws AND low < lead(low, 2) OVER ws
-         |    THEN low END AS fractal_low
-         |FROM bars WINDOW ws AS (PARTITION BY l_suppkey ORDER BY l_shipdate)
-         |ORDER BY l_suppkey, l_shipdate""".stripMargin,
-    // Awesome-Oscillator replay: BIGINT sums of h+l over both frames,
-    // the exact 2f/2s divisors, gate on the slow frame.
-    "q_awesome" ->
-      s"""WITH bars AS (
-         |$duckBarsSql
-         |), t AS (
-         |  SELECT l_suppkey, l_shipdate,
-         |    CAST(round(high + low) AS BIGINT) AS m2
-         |  FROM bars
-         |)
-         |SELECT l_suppkey, l_shipdate,
-         |  CASE WHEN count(m2) OVER w34 = 34
-         |    THEN CAST(sum(m2) OVER w5 AS DOUBLE) / 10.0::DOUBLE
-         |       - CAST(sum(m2) OVER w34 AS DOUBLE) / 68.0::DOUBLE END AS ao
-         |FROM t
-         |WINDOW w5 AS (PARTITION BY l_suppkey ORDER BY l_shipdate
-         |    ROWS BETWEEN 4 PRECEDING AND CURRENT ROW),
-         |  w34 AS (PARTITION BY l_suppkey ORDER BY l_shipdate
-         |    ROWS BETWEEN 33 PRECEDING AND CURRENT ROW)
-         |ORDER BY l_suppkey, l_shipdate""".stripMargin,
-    // Chandelier replay: the q_atr tree at n=22 under 22-bar extremes.
-    "q_chandelier" ->
-      s"""WITH bars AS (
-         |$duckBarsSql
-         |), tr AS (
-         |  SELECT l_suppkey, l_shipdate, high, low,
-         |    CASE WHEN lag(close, 1) OVER ws IS NULL THEN high - low
-         |         ELSE greatest(high - low,
-         |                       abs(high - lag(close, 1) OVER ws),
-         |                       abs(low - lag(close, 1) OVER ws)) END AS tr
-         |  FROM bars
-         |  WINDOW ws AS (PARTITION BY l_suppkey ORDER BY l_shipdate)
-         |)
-         |SELECT l_suppkey, l_shipdate,
-         |  max(high) OVER wn - 3.0::DOUBLE * (CASE WHEN count(tr) OVER wn = 22
-         |    THEN avg(tr) OVER wn END) AS chandelier_long,
-         |  min(low) OVER wn + 3.0::DOUBLE * (CASE WHEN count(tr) OVER wn = 22
-         |    THEN avg(tr) OVER wn END) AS chandelier_short
-         |FROM tr
-         |WINDOW wn AS (PARTITION BY l_suppkey ORDER BY l_shipdate
-         |  ROWS BETWEEN 21 PRECEDING AND CURRENT ROW)
-         |ORDER BY l_suppkey, l_shipdate""".stripMargin,
-    // Mass-Index replay: two layered duckEma folds over the bar range,
-    // the guarded ratio, then the first-element-seeded 25-term list fold
-    // (0.0 + x ≡ x, the q_cmf precedent).
-    "q_mass_index" ->
-      s"""WITH bars AS (
-         |$duckBarsSql
-         |), e1 AS (
-         |  SELECT l_suppkey, l_shipdate,
-         |    ${duckEma("list(high - low) OVER wn", 9)} AS e1
-         |  FROM bars WINDOW wn AS (PARTITION BY l_suppkey ORDER BY l_shipdate
-         |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-         |), e2 AS (
-         |  SELECT l_suppkey, l_shipdate, e1,
-         |    ${duckEma("list(e1) OVER wn", 9)} AS e2
-         |  FROM e1 WINDOW wn AS (PARTITION BY l_suppkey ORDER BY l_shipdate
-         |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-         |), q AS (
-         |  SELECT l_suppkey, l_shipdate,
-         |    CASE WHEN e2 <> 0.0 THEN e1 / e2 END AS ratio
-         |  FROM e2
-         |), f AS (
-         |  SELECT l_suppkey, l_shipdate,
-         |    CASE WHEN count(ratio) OVER w25 = 25 THEN list(ratio) OVER w25 END AS rl
-         |  FROM q WINDOW w25 AS (PARTITION BY l_suppkey ORDER BY l_shipdate
-         |    ROWS BETWEEN 24 PRECEDING AND CURRENT ROW)
-         |)
-         |SELECT l_suppkey, l_shipdate,
-         |  CASE WHEN rl IS NOT NULL
-         |    THEN list_reduce(rl, (a, b) -> a + b) END AS mass_index
-         |FROM f ORDER BY l_suppkey, l_shipdate""".stripMargin,
-    // KST replay: four guarded ROC trees, four in-order frame-list fold
-    // SMAs, the 1:2:3:4 left-associated blend.
-    "q_kst" -> {
-      def roc(p: Int) =
-        s"""CASE WHEN lag(close, $p) OVER ws IS NOT NULL
-           |      AND lag(close, $p) OVER ws <> 0.0
-           |  THEN 100.0::DOUBLE * (close - lag(close, $p) OVER ws)
-           |       / lag(close, $p) OVER ws END""".stripMargin
-      def sma(rc: String, m: Int) =
-        s"""CASE WHEN count($rc) OVER w$m = $m
-           |  THEN list_reduce(list($rc) OVER w$m, (a, b) -> a + b)
-           |       / $m.0::DOUBLE END""".stripMargin
-      s"""WITH bars AS (
-         |$duckBarsSql
-         |), r AS (
-         |  SELECT l_suppkey, l_shipdate,
-         |    ${roc(10)} AS roc1, ${roc(15)} AS roc2,
-         |    ${roc(20)} AS roc3, ${roc(30)} AS roc4
-         |  FROM bars
-         |  WINDOW ws AS (PARTITION BY l_suppkey ORDER BY l_shipdate)
-         |), s AS (
-         |  SELECT l_suppkey, l_shipdate,
-         |    ${sma("roc1", 10)} AS s1, ${sma("roc2", 10)} AS s2,
-         |    ${sma("roc3", 10)} AS s3, ${sma("roc4", 15)} AS s4
-         |  FROM r
-         |  WINDOW w10 AS (PARTITION BY l_suppkey ORDER BY l_shipdate
-         |      ROWS BETWEEN 9 PRECEDING AND CURRENT ROW),
-         |    w15 AS (PARTITION BY l_suppkey ORDER BY l_shipdate
-         |      ROWS BETWEEN 14 PRECEDING AND CURRENT ROW)
-         |)
-         |SELECT l_suppkey, l_shipdate,
-         |  s1 + 2.0::DOUBLE * s2 + 3.0::DOUBLE * s3 + 4.0::DOUBLE * s4 AS kst
-         |FROM s ORDER BY l_suppkey, l_shipdate""".stripMargin
-    },
-    // Coppock replay: the guarded ROC-sum tree, then the hull-style
-    // position-weighted 10-element fold over the frame list.
-    "q_coppock" -> {
-      def roc(p: Int) =
-        s"""(CASE WHEN lag(close, $p) OVER ws IS NOT NULL
-           |      AND lag(close, $p) OVER ws <> 0.0
-           |  THEN 100.0::DOUBLE * (close - lag(close, $p) OVER ws)
-           |       / lag(close, $p) OVER ws END)""".stripMargin
-      s"""WITH bars AS (
-         |$duckBarsSql
-         |), r AS (
-         |  SELECT l_suppkey, l_shipdate, ${roc(14)} + ${roc(11)} AS rsum
-         |  FROM bars
-         |  WINDOW ws AS (PARTITION BY l_suppkey ORDER BY l_shipdate)
-         |), f AS (
-         |  SELECT l_suppkey, l_shipdate,
-         |    CASE WHEN count(rsum) OVER w10 = 10 THEN list(rsum) OVER w10 END AS rl
-         |  FROM r WINDOW w10 AS (PARTITION BY l_suppkey ORDER BY l_shipdate
-         |    ROWS BETWEEN 9 PRECEDING AND CURRENT ROW)
-         |)
-         |SELECT l_suppkey, l_shipdate,
-         |  CASE WHEN rl IS NOT NULL THEN
-         |    list_reduce(list_transform(list_zip(rl, generate_series(1, 10)),
-         |      x -> x[1] * CAST(x[2] AS DOUBLE)), (a, b) -> a + b)
-         |    / 55.0::DOUBLE END AS coppock
-         |FROM f ORDER BY l_suppkey, l_shipdate""".stripMargin
-    },
-    // Streaming-PSAR replay: the q_psar recursive machine verbatim, over
-    // the events table with degenerate high = low = value bars and the
-    // (ts_us, event_id) streaming order contract.
-    // Streaming-Renko replay: the q_renko grid walk over the events table
-    // under the (ts_us, event_id) streaming order contract.
-    "q_stream_renko" -> {
-      val B = "(2000.0::DOUBLE / 100.0::DOUBLE)"
-      s"""WITH RECURSIVE seq AS MATERIALIZED (
-         |  SELECT CAST(user_id AS VARCHAR) AS key,
-         |    epoch_ns(ts) // 1000 AS ts_us, value,
-         |    row_number() OVER (PARTITION BY user_id
-         |      ORDER BY epoch_ns(ts) // 1000, event_id) AS rn
-         |  FROM events
-         |), rk AS (
-         |  SELECT key, ts_us, value, rn, value AS lvl FROM seq WHERE rn = 1
-         |  UNION ALL
-         |  SELECT s.key, s.ts_us, s.value, s.rn,
-         |    (h.lvl + ((CAST(sign(s.value - h.lvl) AS DOUBLE)
-         |      * floor(abs(s.value - h.lvl) / $B)) * $B)) AS lvl
-         |  FROM rk h JOIN seq s ON s.key = h.key AND s.rn = h.rn + 1
-         |)
-         |SELECT key, ts_us, value, lvl AS renko
-         |FROM rk ORDER BY key, ts_us, value""".stripMargin
-    },
-    "q_stream_psar" -> {
-      val af0 = "(20.0::DOUBLE / 1000.0::DOUBLE)"
-      val step = "(20.0::DOUBLE / 1000.0::DOUBLE)"
-      val mx = "(200.0::DOUBLE / 1000.0::DOUBLE)"
-      val cand = "(h.sar + h.af * (h.ep - h.sar))"
-      val candUp = s"least($cand, h.pl, h.p2l)"
-      val candDn = s"greatest($cand, h.ph, h.p2h)"
-      val revUp = s"(s.value < $candUp)"
-      val revDn = s"(s.value > $candDn)"
-      val accel = s"least($mx, h.af + $step)"
-      val upSeed = "(s.value >= h.ph)"
-      s"""WITH RECURSIVE seq AS MATERIALIZED (
-         |  SELECT CAST(user_id AS VARCHAR) AS key,
-         |    epoch_ns(ts) // 1000 AS ts_us, value,
-         |    row_number() OVER (PARTITION BY user_id ORDER BY epoch_ns(ts) // 1000, event_id) AS rn
-         |  FROM events
-         |), ps AS (
-         |  SELECT key, ts_us, value, rn,
-         |    CAST(NULL AS DOUBLE) AS sar, CAST(NULL AS DOUBLE) AS ep,
-         |    $af0 AS af, TRUE AS up,
-         |    value AS ph, value AS pl, value AS p2h, value AS p2l
-         |  FROM seq WHERE rn = 1
-         |  UNION ALL
-         |  SELECT s.key, s.ts_us, s.value, s.rn,
-         |    CASE WHEN h.sar IS NULL
-         |      THEN (CASE WHEN $upSeed THEN h.pl ELSE h.ph END)
-         |      ELSE (CASE WHEN h.up
-         |        THEN (CASE WHEN $revUp THEN h.ep ELSE $candUp END)
-         |        ELSE (CASE WHEN $revDn THEN h.ep ELSE $candDn END) END)
-         |    END AS sar,
-         |    CASE WHEN h.sar IS NULL THEN s.value
-         |      ELSE (CASE WHEN h.up
-         |        THEN (CASE WHEN $revUp THEN s.value
-         |              WHEN s.value > h.ep THEN s.value ELSE h.ep END)
-         |        ELSE (CASE WHEN $revDn THEN s.value
-         |              WHEN s.value < h.ep THEN s.value ELSE h.ep END) END)
-         |    END AS ep,
-         |    CASE WHEN h.sar IS NULL THEN $af0
-         |      ELSE (CASE WHEN h.up
-         |        THEN (CASE WHEN $revUp THEN $af0
-         |              WHEN s.value > h.ep THEN $accel ELSE h.af END)
-         |        ELSE (CASE WHEN $revDn THEN $af0
-         |              WHEN s.value < h.ep THEN $accel ELSE h.af END) END)
-         |    END AS af,
-         |    CASE WHEN h.sar IS NULL THEN $upSeed
-         |      ELSE (CASE WHEN h.up THEN NOT $revUp ELSE $revDn END)
-         |    END AS up,
-         |    s.value AS ph, s.value AS pl, h.ph AS p2h, h.pl AS p2l
-         |  FROM ps h JOIN seq s ON s.key = h.key AND s.rn = h.rn + 1
-         |)
-         |SELECT key, ts_us, value, sar AS psar
-         |FROM ps ORDER BY key, ts_us, value""".stripMargin
-    },
-    // Market-beta replay: the per-date BIGINT index sum, an inner join
-    // back, then the exact q_rolling_corr regression kernel (x = index,
-    // y = close, both scale 0 so the slope rescale is the 1.0 identity
-    // and drops out).
-    "q_market_beta" ->
-      s"""WITH bars AS (
-         |$duckBarsSql
-         |), mkt AS (
-         |  SELECT l_shipdate, sum(CAST(round(close) AS BIGINT)) AS mi
-         |  FROM bars GROUP BY l_shipdate
-         |), j AS (
-         |  SELECT b.l_suppkey, b.l_shipdate, m.mi AS xi,
-         |    CAST(round(b.close) AS BIGINT) AS yi
-         |  FROM bars b JOIN mkt m ON m.l_shipdate = b.l_shipdate
-         |), s AS (
-         |  SELECT l_suppkey, l_shipdate,
-         |    count(*) OVER wn AS cnt,
-         |    CAST(20 * (sum(xi * yi) OVER wn)
-         |      - (sum(xi) OVER wn) * (sum(yi) OVER wn) AS DOUBLE) AS num,
-         |    CAST(20 * (sum(xi * xi) OVER wn)
-         |      - (sum(xi) OVER wn) * (sum(xi) OVER wn) AS DOUBLE) AS dx,
-         |    CAST(20 * (sum(yi * yi) OVER wn)
-         |      - (sum(yi) OVER wn) * (sum(yi) OVER wn) AS DOUBLE) AS dy
-         |  FROM j
-         |  WINDOW wn AS (PARTITION BY l_suppkey ORDER BY l_shipdate
-         |    ROWS BETWEEN 19 PRECEDING AND CURRENT ROW)
-         |)
-         |SELECT l_suppkey, l_shipdate,
-         |  CASE WHEN cnt = 20 AND dx > 0 AND dy > 0
-         |       THEN greatest(-1.0::DOUBLE, least(1.0::DOUBLE,
-         |         num / (sqrt(dx) * sqrt(dy)))) END AS mkt_corr,
-         |  CASE WHEN cnt = 20 AND dx > 0
-         |       THEN (num / dx) * 1.0::DOUBLE END AS mkt_beta
-         |FROM s ORDER BY l_suppkey, l_shipdate""".stripMargin,
-    // PSAR replay: the full eight-scalar state machine as a WITH
-    // RECURSIVE step-per-rn walk. Every compound tree (candidate SAR,
-    // clamps, reversal tests, acceleration) is inlined at each use site —
-    // the q_holt lateral-alias lesson — and the op order matches the
-    // Catalyst update expressions node-for-node, so branches and doubles
-    // are bit-identical. Base row = each key's first bar (NULL SAR, the
-    // recorded extremes); the seed runs inside the first step.
-    "q_psar" -> {
-      val af0 = "(20.0::DOUBLE / 1000.0::DOUBLE)"
-      val step = "(20.0::DOUBLE / 1000.0::DOUBLE)"
-      val mx = "(200.0::DOUBLE / 1000.0::DOUBLE)"
-      val cand = "(h.sar + h.af * (h.ep - h.sar))"
-      val candUp = s"least($cand, h.pl, h.p2l)"
-      val candDn = s"greatest($cand, h.ph, h.p2h)"
-      val revUp = s"(s.low < $candUp)"
-      val revDn = s"(s.high > $candDn)"
-      val accel = s"least($mx, h.af + $step)"
-      val upSeed = "(s.high >= h.ph)"
-      s"""WITH RECURSIVE bars AS (
-         |$duckBarsSql
-         |), seq AS MATERIALIZED (
-         |  SELECT l_suppkey, l_shipdate, high, low,
-         |    row_number() OVER (PARTITION BY l_suppkey ORDER BY l_shipdate) AS rn
-         |  FROM bars
-         |), ps AS (
-         |  SELECT l_suppkey, l_shipdate, rn,
-         |    CAST(NULL AS DOUBLE) AS sar, CAST(NULL AS DOUBLE) AS ep,
-         |    $af0 AS af, TRUE AS up,
-         |    high AS ph, low AS pl, high AS p2h, low AS p2l
-         |  FROM seq WHERE rn = 1
-         |  UNION ALL
-         |  SELECT s.l_suppkey, s.l_shipdate, s.rn,
-         |    CASE WHEN h.sar IS NULL
-         |      THEN (CASE WHEN $upSeed THEN h.pl ELSE h.ph END)
-         |      ELSE (CASE WHEN h.up
-         |        THEN (CASE WHEN $revUp THEN h.ep ELSE $candUp END)
-         |        ELSE (CASE WHEN $revDn THEN h.ep ELSE $candDn END) END)
-         |    END AS sar,
-         |    CASE WHEN h.sar IS NULL
-         |      THEN (CASE WHEN $upSeed THEN s.high ELSE s.low END)
-         |      ELSE (CASE WHEN h.up
-         |        THEN (CASE WHEN $revUp THEN s.low
-         |              WHEN s.high > h.ep THEN s.high ELSE h.ep END)
-         |        ELSE (CASE WHEN $revDn THEN s.high
-         |              WHEN s.low < h.ep THEN s.low ELSE h.ep END) END)
-         |    END AS ep,
-         |    CASE WHEN h.sar IS NULL THEN $af0
-         |      ELSE (CASE WHEN h.up
-         |        THEN (CASE WHEN $revUp THEN $af0
-         |              WHEN s.high > h.ep THEN $accel ELSE h.af END)
-         |        ELSE (CASE WHEN $revDn THEN $af0
-         |              WHEN s.low < h.ep THEN $accel ELSE h.af END) END)
-         |    END AS af,
-         |    CASE WHEN h.sar IS NULL THEN $upSeed
-         |      ELSE (CASE WHEN h.up THEN NOT $revUp ELSE $revDn END)
-         |    END AS up,
-         |    s.high AS ph, s.low AS pl, h.ph AS p2h, h.pl AS p2l
-         |  FROM ps h JOIN seq s
-         |    ON s.l_suppkey = h.l_suppkey AND s.rn = h.rn + 1
-         |)
-         |SELECT l_suppkey, l_shipdate, sar AS psar
-         |FROM ps ORDER BY l_suppkey, l_shipdate""".stripMargin
-    },
-    // SuperTrend replay: ATR₁₀ and the basic bands as plain window SQL
-    // (integer-valued TR → exact), then the ratchet/flip state machine as
-    // a WITH RECURSIVE step-per-rn replay over the banded rows (the
-    // q_holt/q_kalman precedent). Band CASEs are inlined everywhere —
-    // never aliased — per the q_holt lateral-alias lesson; the warm-up
-    // rows come back via a left join with NULL lines.
-    "q_supertrend" -> {
-      val nfub = "CASE WHEN s.ub < h.fub OR h.pc > h.fub THEN s.ub ELSE h.fub END"
-      val nflb = "CASE WHEN s.lb > h.flb OR h.pc < h.flb THEN s.lb ELSE h.flb END"
-      s"""WITH RECURSIVE bars AS (
-         |$duckBarsSql
-         |), tr AS (
-         |  SELECT l_suppkey, l_shipdate, high, low, close,
-         |    CASE WHEN lag(close, 1) OVER ws IS NULL THEN high - low
-         |         ELSE greatest(high - low,
-         |                       abs(high - lag(close, 1) OVER ws),
-         |                       abs(low - lag(close, 1) OVER ws)) END AS tr
-         |  FROM bars
-         |  WINDOW ws AS (PARTITION BY l_suppkey ORDER BY l_shipdate)
-         |), banded0 AS (
-         |  SELECT l_suppkey, l_shipdate, close,
-         |    (high + low) / 2.0::DOUBLE + 3.0::DOUBLE * (CASE WHEN count(tr) OVER wn = 10
-         |      THEN avg(tr) OVER wn END) AS ub,
-         |    (high + low) / 2.0::DOUBLE - 3.0::DOUBLE * (CASE WHEN count(tr) OVER wn = 10
-         |      THEN avg(tr) OVER wn END) AS lb
-         |  FROM tr
-         |  WINDOW wn AS (PARTITION BY l_suppkey ORDER BY l_shipdate
-         |    ROWS BETWEEN 9 PRECEDING AND CURRENT ROW)
-         |), banded AS MATERIALIZED (
-         |  SELECT l_suppkey, l_shipdate, close, ub, lb,
-         |    row_number() OVER (PARTITION BY l_suppkey ORDER BY l_shipdate) AS rn
-         |  FROM banded0 WHERE ub IS NOT NULL
-         |), st AS (
-         |  SELECT l_suppkey, l_shipdate, rn, ub AS fub, lb AS flb,
-         |    TRUE AS up, close AS pc
-         |  FROM banded WHERE rn = 1
-         |  UNION ALL
-         |  SELECT s.l_suppkey, s.l_shipdate, s.rn,
-         |    $nfub AS fub,
-         |    $nflb AS flb,
-         |    CASE WHEN h.up THEN NOT (s.close < ($nflb))
-         |         ELSE s.close > ($nfub) END AS up,
-         |    s.close AS pc
-         |  FROM st h JOIN banded s
-         |    ON s.l_suppkey = h.l_suppkey AND s.rn = h.rn + 1
-         |)
-         |SELECT b.l_suppkey, b.l_shipdate,
-         |  CASE WHEN st.up THEN st.flb ELSE st.fub END AS supertrend
-         |FROM bars b LEFT JOIN st
-         |  ON st.l_suppkey = b.l_suppkey AND st.l_shipdate = b.l_shipdate
-         |ORDER BY b.l_suppkey, b.l_shipdate""".stripMargin
-    },
-    // WMA replay: the same two BIGINT running sums and weight-ladder
-    // identity (sum(rn·x) − (rn−n)·sum(x)), one division by the exact
-    // triangular-number constant.
-    "q_wma" ->
-      s"""WITH bars AS (
-         |$duckBarsSql
-         |), t AS (
-         |  SELECT l_suppkey, l_shipdate, CAST(round(close) AS BIGINT) AS xi,
-         |    CAST(row_number() OVER (PARTITION BY l_suppkey ORDER BY l_shipdate) AS BIGINT) AS rn
-         |  FROM bars
-         |), s AS (
-         |  SELECT l_suppkey, l_shipdate, rn, xi, rn * xi AS rnx FROM t
-         |)
-         |SELECT l_suppkey, l_shipdate,
-         |  CASE WHEN count(xi) OVER wn = 10
-         |    THEN CAST(sum(rnx) OVER wn - (rn - 10) * sum(xi) OVER wn AS DOUBLE)
-         |         / 55.0::DOUBLE END AS wma
-         |FROM s
-         |WINDOW wn AS (PARTITION BY l_suppkey ORDER BY l_shipdate
-         |  ROWS BETWEEN 9 PRECEDING AND CURRENT ROW)
-         |ORDER BY l_suppkey, l_shipdate""".stripMargin,
-    // Hull replay: exact inner WMAs (8/16) via the same running-sum
-    // identity, then the 4-element outer weighted fold — list_zip with
-    // generate_series for the position weights, seedless list_reduce sum
-    // (0.0 + x ≡ x, the q_cmf precedent).
-    "q_hull_ma" ->
-      s"""WITH bars AS (
-         |$duckBarsSql
-         |), t AS (
-         |  SELECT l_suppkey, l_shipdate, CAST(round(close) AS BIGINT) AS xi,
-         |    CAST(row_number() OVER (PARTITION BY l_suppkey ORDER BY l_shipdate) AS BIGINT) AS rn
-         |  FROM bars
-         |), s AS (
-         |  SELECT l_suppkey, l_shipdate, rn, xi, rn * xi AS rnx FROM t
-         |), h AS (
-         |  SELECT l_suppkey, l_shipdate,
-         |    2.0::DOUBLE * (CASE WHEN count(xi) OVER w8 = 8
-         |      THEN CAST(sum(rnx) OVER w8 - (rn - 8) * sum(xi) OVER w8 AS DOUBLE)
-         |           / 36.0::DOUBLE END)
-         |    - (CASE WHEN count(xi) OVER w16 = 16
-         |      THEN CAST(sum(rnx) OVER w16 - (rn - 16) * sum(xi) OVER w16 AS DOUBLE)
-         |           / 136.0::DOUBLE END) AS h1
-         |  FROM s
-         |  WINDOW w8 AS (PARTITION BY l_suppkey ORDER BY l_shipdate
-         |      ROWS BETWEEN 7 PRECEDING AND CURRENT ROW),
-         |    w16 AS (PARTITION BY l_suppkey ORDER BY l_shipdate
-         |      ROWS BETWEEN 15 PRECEDING AND CURRENT ROW)
-         |), f AS (
-         |  SELECT l_suppkey, l_shipdate,
-         |    CASE WHEN count(h1) OVER w4 = 4 THEN list(h1) OVER w4 END AS hl
-         |  FROM h
-         |  WINDOW w4 AS (PARTITION BY l_suppkey ORDER BY l_shipdate
-         |    ROWS BETWEEN 3 PRECEDING AND CURRENT ROW)
-         |)
-         |SELECT l_suppkey, l_shipdate,
-         |  CASE WHEN hl IS NOT NULL THEN
-         |    list_reduce(list_transform(list_zip(hl, generate_series(1, 4)),
-         |      x -> x[1] * CAST(x[2] AS DOUBLE)), (a, b) -> a + b)
-         |    / 10.0::DOUBLE END AS hma
-         |FROM f ORDER BY l_suppkey, l_shipdate""".stripMargin,
-    // Heikin-Ashi replay: ha_close per row, the seeded z series, then the
-    // SAME duckEma(·, 3) fold the native EMA runs (α = ½ exactly);
-    // extremes via variadic greatest/least. Every op tree matches
-    // Rolling.heikinAshi node-for-node.
-    "q_heikin_ashi" ->
-      s"""WITH bars AS (
-         |$duckBarsSql
-         |), ha AS (
-         |  SELECT l_suppkey, l_shipdate, open, high, low, close,
-         |    (open + high + low + close) / 4.0::DOUBLE AS ha_close
-         |  FROM bars
-         |), z AS (
-         |  SELECT l_suppkey, l_shipdate, high, low, ha_close,
-         |    CASE WHEN row_number() OVER ws = 1 THEN (open + close) / 2.0::DOUBLE
-         |         ELSE lag(ha_close, 1) OVER ws END AS z
-         |  FROM ha WINDOW ws AS (PARTITION BY l_suppkey ORDER BY l_shipdate)
-         |), zz AS (
-         |  SELECT l_suppkey, l_shipdate, high, low, ha_close,
-         |    ${duckEma("list(z) OVER wn", 3)} AS ha_open
-         |  FROM z WINDOW wn AS (PARTITION BY l_suppkey ORDER BY l_shipdate
-         |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-         |)
-         |SELECT l_suppkey, l_shipdate, ha_open,
-         |  greatest(high, ha_open, ha_close) AS ha_high,
-         |  least(low, ha_open, ha_close) AS ha_low,
-         |  ha_close
-         |FROM zz ORDER BY l_suppkey, l_shipdate""".stripMargin,
-    // PPO replay: two duckEma folds over the close prefix, one fixed
-    // normalize tree (the elder_ray list pattern).
-    "q_ppo" ->
-      s"""WITH bars AS (
-         |$duckBarsSql
-         |), e AS (
-         |  SELECT l_suppkey, l_shipdate,
-         |    ${duckEma("list(close) OVER wn", 12)} AS ef,
-         |    ${duckEma("list(close) OVER wn", 26)} AS es
-         |  FROM bars WINDOW wn AS (PARTITION BY l_suppkey ORDER BY l_shipdate
-         |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-         |)
-         |SELECT l_suppkey, l_shipdate,
-         |  CASE WHEN es <> 0.0 THEN 100.0::DOUBLE * (ef - es) / es END AS ppo
-         |FROM e ORDER BY l_suppkey, l_shipdate""".stripMargin,
-    // TRIX replay: three LAYERED duckEma folds — each layer's prefix
-    // list is built from the previous layer's bound column, exactly the
-    // Spark binding order, then the 1-bar ROC off the lag.
-    "q_trix" ->
-      s"""WITH bars AS (
-         |$duckBarsSql
-         |), e1 AS (
-         |  SELECT l_suppkey, l_shipdate,
-         |    ${duckEma("list(close) OVER wn", 15)} AS e1
-         |  FROM bars WINDOW wn AS (PARTITION BY l_suppkey ORDER BY l_shipdate
-         |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-         |), e2 AS (
-         |  SELECT l_suppkey, l_shipdate,
-         |    ${duckEma("list(e1) OVER wn", 15)} AS e2
-         |  FROM e1 WINDOW wn AS (PARTITION BY l_suppkey ORDER BY l_shipdate
-         |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-         |), e3 AS (
-         |  SELECT l_suppkey, l_shipdate,
-         |    ${duckEma("list(e2) OVER wn", 15)} AS e3
-         |  FROM e2 WINDOW wn AS (PARTITION BY l_suppkey ORDER BY l_shipdate
-         |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-         |)
-         |SELECT l_suppkey, l_shipdate,
-         |  CASE WHEN lag(e3, 1) OVER ws IS NOT NULL AND lag(e3, 1) OVER ws <> 0.0
-         |    THEN 100.0::DOUBLE * (e3 - lag(e3, 1) OVER ws) / (lag(e3, 1) OVER ws)
-         |  END AS trix
-         |FROM e3 WINDOW ws AS (PARTITION BY l_suppkey ORDER BY l_shipdate)
-         |ORDER BY l_suppkey, l_shipdate""".stripMargin,
-    // Vortex replay: same NULL-gated VM/TR terms (first bar of each key
-    // contributes nothing), BIGINT sums over the 14-bar frame, one
-    // division per line. Bars are integer-valued so round() is exact.
-    "q_vortex" ->
-      s"""WITH bars AS (
-         |$duckBarsSql
-         |), t AS (
-         |  SELECT l_suppkey, l_shipdate,
-         |    CASE WHEN lag(low, 1) OVER ws IS NOT NULL
-         |      THEN CAST(round(abs(high - lag(low, 1) OVER ws)) AS BIGINT) END AS vmp,
-         |    CASE WHEN lag(high, 1) OVER ws IS NOT NULL
-         |      THEN CAST(round(abs(low - lag(high, 1) OVER ws)) AS BIGINT) END AS vmm,
-         |    CASE WHEN lag(close, 1) OVER ws IS NOT NULL
-         |      THEN CAST(round(greatest(high, lag(close, 1) OVER ws)
-         |                      - least(low, lag(close, 1) OVER ws)) AS BIGINT) END AS tr
-         |  FROM bars
-         |  WINDOW ws AS (PARTITION BY l_suppkey ORDER BY l_shipdate)
-         |)
-         |SELECT l_suppkey, l_shipdate,
-         |  CASE WHEN count(tr) OVER wn = 14 AND sum(tr) OVER wn <> 0
-         |    THEN CAST(sum(vmp) OVER wn AS DOUBLE) / CAST(sum(tr) OVER wn AS DOUBLE) END AS vi_plus,
-         |  CASE WHEN count(tr) OVER wn = 14 AND sum(tr) OVER wn <> 0
-         |    THEN CAST(sum(vmm) OVER wn AS DOUBLE) / CAST(sum(tr) OVER wn AS DOUBLE) END AS vi_minus
-         |FROM t
-         |WINDOW wn AS (PARTITION BY l_suppkey ORDER BY l_shipdate
-         |  ROWS BETWEEN 13 PRECEDING AND CURRENT ROW)
-         |ORDER BY l_suppkey, l_shipdate""".stripMargin,
-    // CMO replay: NULL-gated one-bar moves (greatest(NULL, 0) must NOT
-    // become 0 — the Spark-side lesson baked into Rolling.cmo), BIGINT
-    // up/down sums, one fixed tree.
-    "q_cmo" ->
-      s"""WITH bars AS (
-         |$duckBarsSql
-         |), t AS (
-         |  SELECT l_suppkey, l_shipdate,
-         |    CASE WHEN lag(close, 1) OVER ws IS NOT NULL
-         |      THEN CAST(round(greatest(close - lag(close, 1) OVER ws, 0.0::DOUBLE)) AS BIGINT) END AS up,
-         |    CASE WHEN lag(close, 1) OVER ws IS NOT NULL
-         |      THEN CAST(round(greatest(lag(close, 1) OVER ws - close, 0.0::DOUBLE)) AS BIGINT) END AS dn
-         |  FROM bars
-         |  WINDOW ws AS (PARTITION BY l_suppkey ORDER BY l_shipdate)
-         |)
-         |SELECT l_suppkey, l_shipdate,
-         |  CASE WHEN count(up) OVER wn = 14
-         |        AND (sum(up) OVER wn + sum(dn) OVER wn) <> 0
-         |    THEN 100.0::DOUBLE * CAST(sum(up) OVER wn - sum(dn) OVER wn AS DOUBLE)
-         |         / CAST(sum(up) OVER wn + sum(dn) OVER wn AS DOUBLE) END AS cmo
-         |FROM t
-         |WINDOW wn AS (PARTITION BY l_suppkey ORDER BY l_shipdate
-         |  ROWS BETWEEN 13 PRECEDING AND CURRENT ROW)
-         |ORDER BY l_suppkey, l_shipdate""".stripMargin,
-    // Ultimate-oscillator replay: BP/TR BIGINT sums over the 7/14/28
-    // frames, three divisions into the left-associated 4:2:1 blend —
-    // the same fixed IEEE tree as Rolling.ultimateOscillator.
-    "q_ultimate" ->
-      s"""WITH bars AS (
-         |$duckBarsSql
-         |), t AS (
-         |  SELECT l_suppkey, l_shipdate,
-         |    CASE WHEN lag(close, 1) OVER ws IS NOT NULL
-         |      THEN CAST(round(close - least(low, lag(close, 1) OVER ws)) AS BIGINT) END AS bp,
-         |    CASE WHEN lag(close, 1) OVER ws IS NOT NULL
-         |      THEN CAST(round(greatest(high, lag(close, 1) OVER ws)
-         |                      - least(low, lag(close, 1) OVER ws)) AS BIGINT) END AS tr
-         |  FROM bars
-         |  WINDOW ws AS (PARTITION BY l_suppkey ORDER BY l_shipdate)
-         |)
-         |SELECT l_suppkey, l_shipdate,
-         |  CASE WHEN count(tr) OVER w28 = 28 AND sum(tr) OVER w7 <> 0
-         |        AND sum(tr) OVER w14 <> 0 AND sum(tr) OVER w28 <> 0
-         |    THEN 100.0::DOUBLE * (
-         |        4.0::DOUBLE * (CAST(sum(bp) OVER w7 AS DOUBLE) / CAST(sum(tr) OVER w7 AS DOUBLE))
-         |      + 2.0::DOUBLE * (CAST(sum(bp) OVER w14 AS DOUBLE) / CAST(sum(tr) OVER w14 AS DOUBLE))
-         |      + (CAST(sum(bp) OVER w28 AS DOUBLE) / CAST(sum(tr) OVER w28 AS DOUBLE))
-         |      ) / 7.0::DOUBLE END AS ultimate
-         |FROM t
-         |WINDOW w7 AS (PARTITION BY l_suppkey ORDER BY l_shipdate
-         |    ROWS BETWEEN 6 PRECEDING AND CURRENT ROW),
-         |  w14 AS (PARTITION BY l_suppkey ORDER BY l_shipdate
-         |    ROWS BETWEEN 13 PRECEDING AND CURRENT ROW),
-         |  w28 AS (PARTITION BY l_suppkey ORDER BY l_shipdate
-         |    ROWS BETWEEN 27 PRECEDING AND CURRENT ROW)
-         |ORDER BY l_suppkey, l_shipdate""".stripMargin,
-    // DPO replay: exact BIGINT-summed SMA20 (one division), displaced by
-    // n/2+1 = 11, subtracted from the raw close.
-    "q_dpo" ->
-      s"""WITH bars AS (
-         |$duckBarsSql
-         |), t AS (
-         |  SELECT l_suppkey, l_shipdate, close,
-         |    CASE WHEN count(close) OVER wn = 20
-         |      THEN CAST(sum(CAST(round(close) AS BIGINT)) OVER wn AS DOUBLE)
-         |           / 20.0::DOUBLE END AS sma
-         |  FROM bars
-         |  WINDOW wn AS (PARTITION BY l_suppkey ORDER BY l_shipdate
-         |    ROWS BETWEEN 19 PRECEDING AND CURRENT ROW)
-         |)
-         |SELECT l_suppkey, l_shipdate,
-         |  close - lag(sma, 11) OVER (PARTITION BY l_suppkey ORDER BY l_shipdate) AS dpo
-         |FROM t
-         |ORDER BY l_suppkey, l_shipdate""".stripMargin,
-    // Pivot-point replay: the pivot is computed once in a subquery and
-    // reused — the VALUE is identical to Spark's inlined tree, and each
-    // ladder line is the same single-op IEEE expression.
-    "q_pivot_points" ->
-      s"""WITH bars AS (
-         |$duckBarsSql
-         |), t AS (
-         |  SELECT l_suppkey, l_shipdate,
-         |    lag(high, 1) OVER ws AS ph,
-         |    lag(low, 1) OVER ws AS pl,
-         |    lag(close, 1) OVER ws AS pc
-         |  FROM bars
-         |  WINDOW ws AS (PARTITION BY l_suppkey ORDER BY l_shipdate)
-         |), p AS (
-         |  SELECT l_suppkey, l_shipdate, ph, pl,
-         |    (ph + pl + pc) / 3.0::DOUBLE AS pp
-         |  FROM t
-         |)
-         |SELECT l_suppkey, l_shipdate, pp,
-         |  2.0::DOUBLE * pp - pl AS r1,
-         |  2.0::DOUBLE * pp - ph AS s1,
-         |  pp + (ph - pl) AS r2,
-         |  pp - (ph - pl) AS s2
-         |FROM p
-         |ORDER BY l_suppkey, l_shipdate""".stripMargin,
-    "q_atr" ->
-      s"""WITH bars AS (
-         |$duckBarsSql
-         |), tr AS (
-         |  SELECT l_suppkey, l_shipdate,
-         |    CASE WHEN lag(close, 1) OVER ws IS NULL THEN high - low
-         |         ELSE greatest(high - low,
-         |                       abs(high - lag(close, 1) OVER ws),
-         |                       abs(low - lag(close, 1) OVER ws)) END AS tr
-         |  FROM bars
-         |  WINDOW ws AS (PARTITION BY l_suppkey ORDER BY l_shipdate)
-         |)
-         |SELECT l_suppkey, l_shipdate,
-         |  CASE WHEN count(tr) OVER wn = 14 THEN avg(tr) OVER wn END AS atr
-         |FROM tr
-         |WINDOW wn AS (PARTITION BY l_suppkey ORDER BY l_shipdate
-         |  ROWS BETWEEN 13 PRECEDING AND CURRENT ROW)
-         |ORDER BY l_suppkey, l_shipdate""".stripMargin,
-    // Replays Holt (WindowIndicators.Holt) as a WITH RECURSIVE step-by-step
-    // level/trend replay — NOT a list_reduce fold, which DuckDB 1.0
-    // mis-evaluates for this nested struct lambda (NOTES.md). Each
-    // recursion step advances every supplier's series one row (rn → rn+1);
-    // newLvl is inlined twice because DuckDB resolves an unqualified
-    // lateral alias against same-named table columns first (h.lvl), which
-    // silently freezes the trend update. α=300‰, β=200‰ derived by the
-    // same /1000.0 division as the native expression; daily closes are
-    // never NULL so the frozen-state branch has no oracle surface.
-    "q_holt" -> {
-      val newLvl = "((300.0::DOUBLE/1000.0::DOUBLE)*s.close" +
-        " + (1.0::DOUBLE - 300.0::DOUBLE/1000.0::DOUBLE)*(h.lvl + h.trd))"
-      s"""WITH RECURSIVE bars AS (
-         |$duckBarsSql
-         |), seq AS MATERIALIZED (
-         |  SELECT l_suppkey, l_shipdate, close,
-         |    row_number() OVER (PARTITION BY l_suppkey ORDER BY l_shipdate) AS rn
-         |  FROM bars
-         |), holt AS (
-         |  SELECT l_suppkey, l_shipdate, rn,
-         |    close AS lvl, CAST(NULL AS DOUBLE) AS trd
-         |  FROM seq WHERE rn = 1
-         |  UNION ALL
-         |  SELECT s.l_suppkey, s.l_shipdate, s.rn,
-         |    CASE WHEN h.trd IS NULL THEN s.close ELSE $newLvl END AS lvl,
-         |    CASE WHEN h.trd IS NULL THEN s.close - h.lvl
-         |         ELSE (200.0::DOUBLE/1000.0::DOUBLE)*($newLvl - h.lvl)
-         |              + (1.0::DOUBLE - 200.0::DOUBLE/1000.0::DOUBLE)*h.trd END AS trd
-         |  FROM holt h JOIN seq s ON s.l_suppkey = h.l_suppkey AND s.rn = h.rn + 1
-         |)
-         |SELECT l_suppkey, l_shipdate, lvl + trd AS forecast
-         |FROM holt ORDER BY l_suppkey, l_shipdate""".stripMargin
-    },
-    // Replays Kalman (WindowIndicators.Kalman) as a WITH RECURSIVE (m, p)
-    // state replay — predict/update with q=10‰, r=1000‰ derived by the
-    // same /1000.0 division as the native expression. The gain k and the
-    // predicted variance p⁻ are inlined everywhere (the q_holt lateral-
-    // alias lesson); op order matches the Catalyst tree node-for-node so
-    // the doubles are bit-identical. Daily closes are never NULL, so the
-    // frozen-state branch has no oracle surface (spec-covered instead).
-    "q_kalman" -> {
-      val Q = "(10.0::DOUBLE/1000.0::DOUBLE)"
-      val R = "(1000.0::DOUBLE/1000.0::DOUBLE)"
-      val pp = s"(h.p + $Q)"
-      val k = s"($pp / ($pp + $R))"
-      s"""WITH RECURSIVE bars AS (
-         |$duckBarsSql
-         |), seq AS MATERIALIZED (
-         |  SELECT l_suppkey, l_shipdate, close,
-         |    row_number() OVER (PARTITION BY l_suppkey ORDER BY l_shipdate) AS rn
-         |  FROM bars
-         |), kal AS (
-         |  SELECT l_suppkey, l_shipdate, rn, close AS m, $R AS p
-         |  FROM seq WHERE rn = 1
-         |  UNION ALL
-         |  SELECT s.l_suppkey, s.l_shipdate, s.rn,
-         |    (h.m + ($k * (s.close - h.m))) AS m,
-         |    ((1.0::DOUBLE - $k) * $pp) AS p
-         |  FROM kal h JOIN seq s ON s.l_suppkey = h.l_suppkey AND s.rn = h.rn + 1
-         |)
-         |SELECT l_suppkey, l_shipdate, m AS level
-         |FROM kal ORDER BY l_suppkey, l_shipdate""".stripMargin
-    },
-    // Replays Garch (WindowIndicators.Garch) as a WITH RECURSIVE (ret, σ²)
-    // replay over per-supplier daily simple returns. ω/α/β derive by the
-    // identical ppm/permille divisions; the σ² step is parenthesized to
-    // match the Catalyst tree ω + ((α·r²) + (β·σ²)) exactly. The rn=1 row
-    // carries a NULL return → NULL σ² (the frozen-state contract's only
-    // oracle-visible face); rn=2 seeds the stationary variance.
-    "q_garch" -> {
-      val W0 = "(2.0::DOUBLE/1000000.0::DOUBLE)"
-      val A = "(100.0::DOUBLE/1000.0::DOUBLE)"
-      val B = "(850.0::DOUBLE/1000.0::DOUBLE)"
-      val uncond = s"($W0 / (1.0::DOUBLE - $A - $B))"
-      s"""WITH RECURSIVE bars AS (
-         |$duckBarsSql
-         |), seq AS MATERIALIZED (
-         |  SELECT l_suppkey, l_shipdate,
-         |    ((close / lag(close, 1) OVER (PARTITION BY l_suppkey ORDER BY l_shipdate)) - 1.0::DOUBLE) AS ret,
-         |    row_number() OVER (PARTITION BY l_suppkey ORDER BY l_shipdate) AS rn
-         |  FROM bars
-         |), g AS (
-         |  SELECT l_suppkey, l_shipdate, rn, ret, CAST(NULL AS DOUBLE) AS sig2
-         |  FROM seq WHERE rn = 1
-         |  UNION ALL
-         |  SELECT s.l_suppkey, s.l_shipdate, s.rn, s.ret,
-         |    CASE WHEN h.sig2 IS NULL THEN $uncond
-         |         ELSE ($W0 + (($A * (h.ret * h.ret)) + ($B * h.sig2))) END AS sig2
-         |  FROM g h JOIN seq s ON s.l_suppkey = h.l_suppkey AND s.rn = h.rn + 1
-         |)
-         |SELECT l_suppkey, l_shipdate, sqrt(sig2) AS cond_vol
-         |FROM g ORDER BY l_suppkey, l_shipdate""".stripMargin
-    },
-    // Replays Validation.fkOrphans: distinct-key counts then an anti
-    // membership check against the dimension keys.
-    "q_fk_orphans" ->
-      """WITH fact AS (
-        |  SELECT CASE WHEN l_orderkey % 97 = 0 THEN l_suppkey + 1000
-        |              ELSE l_suppkey END AS fk_supp
-        |  FROM lineitem),
-        |keyed AS (SELECT fk_supp, CAST(count(*) AS BIGINT) AS n_rows
-        |          FROM fact GROUP BY fk_supp)
-        |SELECT fk_supp, n_rows FROM keyed
-        |WHERE fk_supp NOT IN (SELECT DISTINCT s_suppkey FROM supplier)
-        |ORDER BY fk_supp""".stripMargin,
-    // Replays Validation.paretoContribution: exact integer-valued sums,
-    // (total desc, key asc) cumulative, strict-< head boundary.
-    "q_pareto" ->
-      """WITH s AS (SELECT l_suppkey,
-        |             sum(CAST(l_quantity AS DOUBLE)) AS total
-        |           FROM lineitem GROUP BY 1),
-        |g AS (SELECT sum(total) AS gt FROM s),
-        |w AS (SELECT l_suppkey, total,
-        |        sum(total) OVER (ORDER BY total DESC, l_suppkey ASC
-        |          ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
-        |      FROM s)
-        |SELECT w.l_suppkey, w.total, w.total / g.gt AS share,
-        |  w.cum / g.gt AS cum_share,
-        |  ((w.cum - w.total) / g.gt < 0.8::DOUBLE) AS in_head
-        |FROM w CROSS JOIN g
-        |ORDER BY l_suppkey""".stripMargin,
-    // Replays Resample.dowProfile: DuckDB dayofweek (0=Sunday) + 1 maps
-    // onto Spark's 1=Sunday convention; exact integer (n, Σx) sums.
-    "q_dow_profile" ->
-      """WITH w AS (
-        |  SELECT l_orderkey, l_linenumber, l_suppkey, l_quantity,
-        |    CAST(dayofweek(l_shipdate) + 1 AS INT) AS dow
-        |  FROM lineitem),
-        |s AS (SELECT l_suppkey, dow,
-        |        CAST(count(l_quantity) AS BIGINT) AS n,
-        |        sum(CAST(l_quantity AS DOUBLE)) AS sm
-        |      FROM w GROUP BY 1, 2),
-        |m AS (SELECT l_suppkey, dow, sm / CAST(n AS DOUBLE) AS dow_mean
-        |      FROM s)
-        |SELECT w.l_orderkey, w.l_linenumber, w.l_suppkey, w.dow, m.dow_mean,
-        |  CAST(w.l_quantity AS DOUBLE) - m.dow_mean AS l_quantity_deseason
-        |FROM w JOIN m ON m.l_suppkey = w.l_suppkey AND m.dow = w.dow
-        |ORDER BY w.l_orderkey, w.l_linenumber""".stripMargin,
-    // Replays Signals.eventStudy: same leads, 10^10 scaled-BIGINT sums
-    // (exact on the 10-dp returns), identical mean/lift trees.
-    "q_event_study" ->
-      s"""WITH bars AS (
-         |$duckBarsSql
-         |), r AS (
-         |  SELECT l_suppkey, l_shipdate,
-         |    CASE WHEN lag(close) OVER ws IS NOT NULL
-         |          AND lag(close) OVER ws > 0.0::DOUBLE
-         |          AND close > 0.0::DOUBLE
-         |         THEN round(ln(close / lag(close) OVER ws), 10) + 0.0
-         |    END AS ret_log
-         |  FROM bars
-         |  WINDOW ws AS (PARTITION BY l_suppkey ORDER BY l_shipdate)
-         |), b AS (
-         |  SELECT (ret_log < 0.0::DOUBLE) AS sig,
-         |    CAST(round(lead(ret_log, 1) OVER ws * 1e10) AS BIGINT) AS f1,
-         |    CAST(round(lead(ret_log, 2) OVER ws * 1e10) AS BIGINT) AS f2,
-         |    CAST(round(lead(ret_log, 3) OVER ws * 1e10) AS BIGINT) AS f3
-         |  FROM r
-         |  WINDOW ws AS (PARTITION BY l_suppkey ORDER BY l_shipdate)
-         |), e AS (
-         |  SELECT sig, h.horizon,
-         |    CASE h.horizon WHEN 1 THEN f1 WHEN 2 THEN f2 ELSE f3 END AS fwd
-         |  FROM b CROSS JOIN (SELECT CAST(unnest(range(1, 4)) AS INT)
-         |                     AS horizon) h
-         |), f AS (SELECT * FROM e WHERE fwd IS NOT NULL),
-         |g AS (
-         |  SELECT horizon,
-         |    CAST(count(*) FILTER (WHERE sig) AS BIGINT) AS n_signal,
-         |    CAST(sum(fwd) FILTER (WHERE sig) AS BIGINT) AS ss,
-         |    CAST(count(*) AS BIGINT) AS n_base,
-         |    CAST(sum(fwd) AS BIGINT) AS sb
-         |  FROM f GROUP BY horizon
-         |)
-         |SELECT horizon, n_signal,
-         |  CASE WHEN n_signal > 0 THEN
-         |    CAST(ss AS DOUBLE) / CAST(n_signal AS DOUBLE) / 1e10
-         |  END AS mean_signal,
-         |  n_base,
-         |  CAST(sb AS DOUBLE) / CAST(n_base AS DOUBLE) / 1e10 AS mean_base,
-         |  (CASE WHEN n_signal > 0 THEN
-         |     CAST(ss AS DOUBLE) / CAST(n_signal AS DOUBLE) / 1e10 END)
-         |    - CAST(sb AS DOUBLE) / CAST(n_base AS DOUBLE) / 1e10 AS lift
-         |FROM g
-         |ORDER BY horizon""".stripMargin,
-    // Replays Signals.candlePatterns: identical comparison trees, first
-    // bars cannot engulf, zero-range bars flag nothing.
-    "q_candles" ->
-      s"""WITH bars AS (
-         |$duckBarsSql
-         |)
-         |SELECT l_suppkey, l_shipdate,
-         |  (high - low > 0.0::DOUBLE AND
-         |   abs(close - open) <= 0.1::DOUBLE * (high - low)) AS doji,
-         |  (high - low > 0.0::DOUBLE AND abs(close - open) > 0.0::DOUBLE AND
-         |   least(open, close) - low >= 2.0::DOUBLE * abs(close - open) AND
-         |   high - greatest(open, close) <= abs(close - open)) AS hammer,
-         |  (lag(open) OVER ws IS NOT NULL AND
-         |   lag(close) OVER ws < lag(open) OVER ws AND close > open AND
-         |   open < lag(close) OVER ws AND close > lag(open) OVER ws)
-         |    AS bullish_engulfing,
-         |  (lag(open) OVER ws IS NOT NULL AND
-         |   lag(close) OVER ws > lag(open) OVER ws AND close < open AND
-         |   open > lag(close) OVER ws AND close < lag(open) OVER ws)
-         |    AS bearish_engulfing
-         |FROM bars
-         |WINDOW ws AS (PARTITION BY l_suppkey ORDER BY l_shipdate)
-         |ORDER BY l_suppkey, l_shipdate""".stripMargin,
-    // Replays Rolling.perfSummary: date-ordered series fold, identical
-    // mean/stddev/sharpe trees, NULL rails on degenerate series.
-    // Connors-RSI replay: the same integer gaps-and-islands streak, two
-    // rsiFold layers (close + streak), and the null-filtered prior-100
-    // rank-count — compare doubles are the shared 10-dp returns.
-    "q_connors_rsi" ->
-      s"""WITH bars AS (
-         |$duckBarsSql
-         |), d0 AS (
-         |  SELECT l_suppkey, l_shipdate, close,
-         |    lag(close, 1) OVER ws AS prev,
-         |    row_number() OVER ws AS rn
-         |  FROM bars WINDOW ws AS (PARTITION BY l_suppkey ORDER BY l_shipdate)
-         |), d1 AS (
-         |  SELECT *, CASE WHEN prev IS NULL THEN 0
-         |      ELSE CAST(sign(close - prev) AS INTEGER) END AS d,
-         |    CASE WHEN prev IS NOT NULL AND prev > 0.0::DOUBLE
-         |          AND close > 0.0::DOUBLE
-         |      THEN round(ln(close / prev), 10) + 0.0 END AS ret
-         |  FROM d0
-         |), d2 AS (
-         |  SELECT *, row_number() OVER (PARTITION BY l_suppkey, d
-         |    ORDER BY l_shipdate) AS rnd FROM d1
-         |), d4 AS (
-         |  SELECT *, row_number() OVER (PARTITION BY l_suppkey, d, rn - rnd
-         |    ORDER BY l_shipdate) AS pos FROM d2
-         |), d5 AS (
-         |  SELECT l_suppkey, l_shipdate, close, ret,
-         |    CASE WHEN d = 0 THEN CAST(0 AS BIGINT)
-         |         ELSE CAST(d AS BIGINT) * pos END AS streak
-         |  FROM d4
-         |), base AS (
-         |  SELECT l_suppkey, l_shipdate, ret, streak,
-         |    ${rsiStructList("close")} AS xs,
-         |    list(struct_pack(p := CAST(streak AS DOUBLE), g := 0.0::DOUBLE,
-         |      l := 0.0::DOUBLE, c := 0.0::DOUBLE)) OVER w AS ss,
-         |    list_filter(list(ret) OVER wr, v -> v IS NOT NULL) AS rl
-         |  FROM d5
-         |  WINDOW w AS (PARTITION BY l_suppkey ORDER BY l_shipdate
-         |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW),
-         |    wr AS (PARTITION BY l_suppkey ORDER BY l_shipdate
-         |      ROWS BETWEEN 100 PRECEDING AND 1 PRECEDING)
-         |), red AS (
-         |  SELECT l_suppkey, l_shipdate, ret, streak, rl,
-         |    ${rsiFold("xs", 3)} AS s3,
-         |    ${rsiFold("ss", 2)} AS s2
-         |  FROM base
-         |), fin AS (
-         |  SELECT l_suppkey, l_shipdate, streak,
-         |    ${rsiEval("s3", 3)} AS r3,
-         |    ${rsiEval("s2", 2)} AS rs,
-         |    CASE WHEN len(rl) = 100 AND ret IS NOT NULL
-         |      THEN CAST(len(list_filter(rl, v -> v < ret)) AS DOUBLE)
-         |           * 100.0::DOUBLE / 100.0::DOUBLE END AS pct_rank
-         |  FROM red
-         |)
-         |SELECT l_suppkey, l_shipdate, streak, pct_rank,
-         |  (r3 + rs + pct_rank) / 3.0::DOUBLE AS crsi
-         |FROM fin ORDER BY l_suppkey, l_shipdate""".stripMargin,
-    // Stoch-RSI replay: the proven rsiFold prefix machinery over bar
-    // closes, then exact min/max selections with the flat-window guard.
-    "q_stoch_rsi" ->
-      s"""WITH bars AS (
-         |$duckBarsSql
-         |), base AS (
-         |  SELECT l_suppkey, l_shipdate, ${rsiStructList("close")} AS xs
-         |  FROM bars
-         |  WINDOW w AS (PARTITION BY l_suppkey ORDER BY l_shipdate
-         |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-         |), red AS (
-         |  SELECT l_suppkey, l_shipdate, ${rsiFold("xs", 14)} AS s
-         |  FROM base
-         |), rr AS (
-         |  SELECT l_suppkey, l_shipdate, ${rsiEval("s", 14)} AS r
-         |  FROM red
-         |)
-         |SELECT l_suppkey, l_shipdate,
-         |  CASE WHEN count(r) OVER wn = 14
-         |        AND max(r) OVER wn <> min(r) OVER wn
-         |    THEN (r - min(r) OVER wn) / (max(r) OVER wn - min(r) OVER wn)
-         |  END AS stoch_rsi
-         |FROM rr
-         |WINDOW wn AS (PARTITION BY l_suppkey ORDER BY l_shipdate
-         |  ROWS BETWEEN 13 PRECEDING AND CURRENT ROW)
-         |ORDER BY l_suppkey, l_shipdate""".stripMargin,
-    // TSI replay: four layered null-filtered duckEma folds (the
-    // force-index frozen≡filtered identity at each layer), one guarded
-    // normalize tree.
-    "q_tsi" ->
-      s"""WITH bars AS (
-         |$duckBarsSql
-         |), m AS (
-         |  SELECT l_suppkey, l_shipdate,
-         |    close - lag(close, 1) OVER ws AS mm
-         |  FROM bars WINDOW ws AS (PARTITION BY l_suppkey ORDER BY l_shipdate)
-         |), f AS (
-         |  SELECT l_suppkey, l_shipdate, mm,
-         |    list_filter(list(mm) OVER wn, v -> v IS NOT NULL) AS ml,
-         |    list_filter(list(abs(mm)) OVER wn, v -> v IS NOT NULL) AS mal
-         |  FROM m WINDOW wn AS (PARTITION BY l_suppkey ORDER BY l_shipdate
-         |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-         |), e1 AS (
-         |  SELECT l_suppkey, l_shipdate,
-         |    CASE WHEN mm IS NOT NULL AND len(ml) > 0
-         |      THEN ${duckEma("ml", 25)} END AS e1,
-         |    CASE WHEN mm IS NOT NULL AND len(mal) > 0
-         |      THEN ${duckEma("mal", 25)} END AS e1a
-         |  FROM f
-         |), g AS (
-         |  SELECT l_suppkey, l_shipdate, e1, e1a,
-         |    list_filter(list(e1) OVER wn, v -> v IS NOT NULL) AS l2,
-         |    list_filter(list(e1a) OVER wn, v -> v IS NOT NULL) AS l2a
-         |  FROM e1 WINDOW wn AS (PARTITION BY l_suppkey ORDER BY l_shipdate
-         |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-         |), e2 AS (
-         |  SELECT l_suppkey, l_shipdate,
-         |    CASE WHEN e1 IS NOT NULL AND len(l2) > 0
-         |      THEN ${duckEma("l2", 13)} END AS e2,
-         |    CASE WHEN e1a IS NOT NULL AND len(l2a) > 0
-         |      THEN ${duckEma("l2a", 13)} END AS e2a
-         |  FROM g
-         |)
-         |SELECT l_suppkey, l_shipdate,
-         |  CASE WHEN e2a <> 0.0 THEN 100.0::DOUBLE * e2 / e2a END AS tsi
-         |FROM e2 ORDER BY l_suppkey, l_shipdate""".stripMargin,
-    // Risk-ratio replay: the same ln-return tree, then EVERYTHING in
-    // exact scaled BIGINTs (1e10 matches the 10-dp return rounding) —
-    // integer cumsum + running peak for the drawdown path, conditional
-    // integer sums for gains/losses, HUGEINT downside squares — and one
-    // fixed-tree finish per ratio. No list folds anywhere.
-    "q_risk_ratios" ->
-      s"""WITH bars AS (
-         |$duckBarsSql
-         |), r AS (
-         |  SELECT l_suppkey, l_shipdate,
-         |    CASE WHEN lag(close) OVER ws IS NOT NULL
-         |          AND lag(close) OVER ws > 0.0::DOUBLE
-         |          AND close > 0.0::DOUBLE
-         |         THEN round(ln(close / lag(close) OVER ws), 10) + 0.0
-         |    END AS ret_log
-         |  FROM bars
-         |  WINDOW ws AS (PARTITION BY l_suppkey ORDER BY l_shipdate)
-         |), b AS (
-         |  SELECT l_suppkey, l_shipdate,
-         |    CAST(round(ret_log * 10000000000.0::DOUBLE) AS BIGINT) AS ri
-         |  FROM r WHERE ret_log IS NOT NULL
-         |), c AS (
-         |  SELECT l_suppkey, l_shipdate, ri,
-         |    sum(ri) OVER wr AS cum
-         |  FROM b
-         |  WINDOW wr AS (PARTITION BY l_suppkey ORDER BY l_shipdate
-         |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-         |), p AS (
-         |  SELECT l_suppkey, ri, cum,
-         |    max(cum) OVER (PARTITION BY l_suppkey ORDER BY l_shipdate
-         |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS peak
-         |  FROM c
-         |), a AS (
-         |  SELECT l_suppkey, CAST(count(*) AS BIGINT) AS n_returns,
-         |    CAST(sum(ri) AS BIGINT) AS s,
-         |    CAST(sum(greatest(ri, 0)) AS BIGINT) AS g,
-         |    CAST(sum(greatest(-ri, 0)) AS BIGINT) AS l,
-         |    sum(CASE WHEN ri < 0 THEN CAST(ri AS HUGEINT) * ri ELSE 0 END) AS d,
-         |    CAST(max(peak - cum) AS BIGINT) AS mdd
-         |  FROM p GROUP BY l_suppkey
-         |), f AS (
-         |  SELECT l_suppkey, n_returns,
-         |    CAST(s AS DOUBLE) / CAST(n_returns AS DOUBLE) AS mu_s,
-         |    sqrt(CAST(d AS DOUBLE) / CAST(n_returns AS DOUBLE)) AS dd_s,
-         |    s, g, l, mdd
-         |  FROM a
-         |)
-         |SELECT l_suppkey, n_returns,
-         |  CAST(s AS DOUBLE) / 10000000000.0::DOUBLE AS total_ret,
-         |  CASE WHEN n_returns >= 2 AND dd_s > 0.0 THEN
-         |    mu_s / dd_s * sqrt(252.0::DOUBLE) END AS sortino,
-         |  CASE WHEN l > 0 THEN CAST(g AS DOUBLE) / CAST(l AS DOUBLE) END AS omega,
-         |  CASE WHEN mdd > 0 THEN CAST(s AS DOUBLE) / CAST(mdd AS DOUBLE) END AS calmar
-         |FROM f ORDER BY l_suppkey""".stripMargin,
-    "q_perf_summary" ->
-      s"""WITH bars AS (
-         |$duckBarsSql
-         |), r AS (
-         |  SELECT l_suppkey, l_shipdate,
-         |    CASE WHEN lag(close) OVER ws IS NOT NULL
-         |          AND lag(close) OVER ws > 0.0::DOUBLE
-         |          AND close > 0.0::DOUBLE
-         |         THEN round(ln(close / lag(close) OVER ws), 10) + 0.0
-         |    END AS ret_log
-         |  FROM bars
-         |  WINDOW ws AS (PARTITION BY l_suppkey ORDER BY l_shipdate)
-         |), g AS (
-         |  SELECT l_suppkey, CAST(count(*) AS BIGINT) AS n_returns,
-         |    list(ret_log ORDER BY l_shipdate) AS ts
-         |  FROM r WHERE ret_log IS NOT NULL GROUP BY l_suppkey
-         |), t AS (
-         |  SELECT l_suppkey, n_returns,
-         |    list_reduce(ts, (a, b) -> a + b) AS total_ret, ts
-         |  FROM g
-         |), m AS (
-         |  SELECT l_suppkey, n_returns, total_ret, ts,
-         |    total_ret / CAST(n_returns AS DOUBLE) AS mu
-         |  FROM t
-         |), sdv AS (
-         |  SELECT l_suppkey, n_returns, total_ret, mu,
-         |    CASE WHEN n_returns >= 2 THEN
-         |      sqrt(list_reduce(list_transform(ts, x -> (x - mu) * (x - mu)),
-         |             (a, b) -> a + b)
-         |           / (CAST(n_returns AS DOUBLE) - 1.0::DOUBLE))
-         |    END AS sd
-         |  FROM m
-         |)
-         |SELECT l_suppkey, n_returns, total_ret, mu AS mean_ret,
-         |  sd * sqrt(252.0::DOUBLE) AS vol,
-         |  CASE WHEN n_returns >= 2 AND sd > 0.0::DOUBLE THEN
-         |    mu / sd * sqrt(252.0::DOUBLE) END AS sharpe
-         |FROM sdv
-         |ORDER BY l_suppkey""".stripMargin,
-    // Replays Rolling.historicalVar over the log-return series: exact
-    // quantile_cont VaR, sorted-tail slice + fold ES (k=2), NULL until
-    // the 20-return frame fills.
-    "q_hist_var" ->
-      s"""WITH bars AS (
-         |$duckBarsSql
-         |), r AS (
-         |  SELECT l_suppkey, l_shipdate,
-         |    CASE WHEN lag(close) OVER ws IS NOT NULL
-         |          AND lag(close) OVER ws > 0.0::DOUBLE
-         |          AND close > 0.0::DOUBLE
-         |         THEN round(ln(close / lag(close) OVER ws), 10) + 0.0
-         |    END AS ret_log
-         |  FROM bars
-         |  WINDOW ws AS (PARTITION BY l_suppkey ORDER BY l_shipdate)
-         |), v AS (
-         |  SELECT l_suppkey, l_shipdate,
-         |    CASE WHEN count(ret_log) OVER wn = 20 THEN
-         |      -quantile_cont(ret_log, 0.1) OVER wn END AS var_alpha,
-         |    CASE WHEN count(ret_log) OVER wn = 20 THEN
-         |      list_filter(list(ret_log) OVER wn, x -> x IS NOT NULL)
-         |    END AS fr
-         |  FROM r
-         |  WINDOW wn AS (PARTITION BY l_suppkey ORDER BY l_shipdate
-         |    ROWS BETWEEN 19 PRECEDING AND CURRENT ROW)
-         |)
-         |SELECT l_suppkey, l_shipdate, var_alpha,
-         |  CASE WHEN fr IS NOT NULL THEN
-         |    -(list_reduce(list_sort(fr)[1:2], (a, b) -> a + b) / 2.0::DOUBLE)
-         |  END AS es_alpha
-         |FROM v
-         |ORDER BY l_suppkey, l_shipdate""".stripMargin,
-    // Replays logReturns + realizedVol: source-rounded ln returns, the
-    // bounded 20-row frame list with a non-null count guard, mean +
-    // squared-dev folds, sqrt×sqrt(252) — all the same IEEE trees.
-    "q_realized_vol" ->
-      s"""WITH bars AS (
-         |$duckBarsSql
-         |), r AS (
-         |  SELECT l_suppkey, l_shipdate,
-         |    CASE WHEN lag(close) OVER ws IS NOT NULL
-         |          AND lag(close) OVER ws > 0.0::DOUBLE
-         |          AND close > 0.0::DOUBLE
-         |         THEN round(ln(close / lag(close) OVER ws), 10) + 0.0
-         |    END AS ret_log
-         |  FROM bars
-         |  WINDOW ws AS (PARTITION BY l_suppkey ORDER BY l_shipdate)
-         |), h AS (
-         |  SELECT l_suppkey, l_shipdate, ret_log,
-         |    CASE WHEN count(ret_log) OVER wn = 20 THEN
-         |      list_filter(list(ret_log) OVER wn, x -> x IS NOT NULL)
-         |    END AS rets
-         |  FROM r
-         |  WINDOW wn AS (PARTITION BY l_suppkey ORDER BY l_shipdate
-         |    ROWS BETWEEN 19 PRECEDING AND CURRENT ROW)
-         |), m AS (
-         |  SELECT l_suppkey, l_shipdate, ret_log, rets,
-         |    CASE WHEN rets IS NOT NULL THEN
-         |      list_reduce(rets, (a, b) -> a + b) / 20.0::DOUBLE END AS mu
-         |  FROM h
-         |)
-         |SELECT l_suppkey, l_shipdate, ret_log,
-         |  CASE WHEN rets IS NOT NULL THEN
-         |    sqrt(list_reduce(list_transform(rets, x -> (x - mu) * (x - mu)),
-         |           (a, b) -> a + b) / 19.0::DOUBLE) * sqrt(252.0::DOUBLE)
-         |  END AS rvol
-         |FROM m
-         |ORDER BY l_suppkey, l_shipdate""".stripMargin,
-    // Replays Rolling.aroon: struct-max extreme positions (ties to the
-    // larger row number in both engines), integer since-arithmetic.
-    "q_aroon" ->
-      s"""WITH bars AS (
-         |$duckBarsSql
-         |), r AS (
-         |  SELECT l_suppkey, l_shipdate, high, low,
-         |    CAST(row_number() OVER (PARTITION BY l_suppkey
-         |      ORDER BY l_shipdate) AS BIGINT) AS rn
-         |  FROM bars
-         |), m AS (
-         |  SELECT l_suppkey, l_shipdate, rn,
-         |    count(high) OVER wf AS ch, count(low) OVER wf AS cl,
-         |    max(struct_pack(x := high, i := rn)) OVER wf AS mh,
-         |    max(struct_pack(x := -low, i := rn)) OVER wf AS ml
-         |  FROM r
-         |  WINDOW wf AS (PARTITION BY l_suppkey ORDER BY l_shipdate
-         |    ROWS BETWEEN 25 PRECEDING AND CURRENT ROW)
-         |)
-         |SELECT l_suppkey, l_shipdate,
-         |  CASE WHEN ch = 26 AND cl = 26 THEN
-         |    100.0::DOUBLE * CAST(25 - (rn - mh.i) AS DOUBLE) / 25.0::DOUBLE
-         |  END AS aroon_up,
-         |  CASE WHEN ch = 26 AND cl = 26 THEN
-         |    100.0::DOUBLE * CAST(25 - (rn - ml.i) AS DOUBLE) / 25.0::DOUBLE
-         |  END AS aroon_down
-         |FROM m
-         |ORDER BY l_suppkey, l_shipdate""".stripMargin,
-    // Replays Rolling.mfi: textbook flows (flat bar = 0, first bar NULL),
-    // bounded 14-row frame with a non-null count guard, two left folds,
-    // saturation rule.
-    "q_mfi" ->
-      s"""WITH bars AS (
-         |$duckBarsSql
-         |), t AS (
-         |  SELECT l_suppkey, l_shipdate, volume,
-         |    (high + low + close) / 3.0::DOUBLE AS tp
-         |  FROM bars
-         |), f AS (
-         |  SELECT l_suppkey, l_shipdate,
-         |    CASE WHEN lag(tp) OVER ws IS NOT NULL THEN
-         |      CASE WHEN tp > lag(tp) OVER ws THEN tp * volume
-         |           WHEN tp < lag(tp) OVER ws THEN -(tp * volume)
-         |           ELSE 0.0::DOUBLE END
-         |    END AS flow
-         |  FROM t
-         |  WINDOW ws AS (PARTITION BY l_suppkey ORDER BY l_shipdate)
-         |), h AS (
-         |  SELECT l_suppkey, l_shipdate,
-         |    CASE WHEN count(flow) OVER wn = 14 THEN
-         |      list_filter(list(flow) OVER wn, x -> x IS NOT NULL)
-         |    END AS flows
-         |  FROM f
-         |  WINDOW wn AS (PARTITION BY l_suppkey ORDER BY l_shipdate
-         |    ROWS BETWEEN 13 PRECEDING AND CURRENT ROW)
-         |), s AS (
-         |  SELECT l_suppkey, l_shipdate,
-         |    CASE WHEN flows IS NOT NULL THEN
-         |      list_reduce(list_transform(flows,
-         |        x -> CASE WHEN x > 0.0::DOUBLE THEN x ELSE 0.0::DOUBLE END),
-         |        (a, b) -> a + b) END AS pos,
-         |    CASE WHEN flows IS NOT NULL THEN
-         |      list_reduce(list_transform(flows,
-         |        x -> CASE WHEN x < 0.0::DOUBLE THEN -x ELSE 0.0::DOUBLE END),
-         |        (a, b) -> a + b) END AS neg
-         |  FROM h
-         |)
-         |SELECT l_suppkey, l_shipdate,
-         |  CASE WHEN neg = 0.0::DOUBLE THEN
-         |    CASE WHEN pos IS NOT NULL THEN 100.0::DOUBLE END
-         |  ELSE 100.0::DOUBLE - 100.0::DOUBLE / (1.0::DOUBLE + pos / neg)
-         |  END AS mfi
-         |FROM s
-         |ORDER BY l_suppkey, l_shipdate""".stripMargin,
-    // Replays Rolling.cci: same in-order frame list, same two left folds
-    // (0-seed ≡ seedless first element), same guards.
-    "q_cci" ->
-      s"""WITH bars AS (
-         |$duckBarsSql
-         |), t AS (
-         |  SELECT l_suppkey, l_shipdate,
-         |    (high + low + close) / 3.0::DOUBLE AS tp
-         |  FROM bars
-         |), f AS (
-         |  SELECT l_suppkey, l_shipdate, tp,
-         |    CASE WHEN count(tp) OVER wn = 20 THEN list(tp) OVER wn END AS tps
-         |  FROM t
-         |  WINDOW wn AS (PARTITION BY l_suppkey ORDER BY l_shipdate
-         |    ROWS BETWEEN 19 PRECEDING AND CURRENT ROW)
-         |), g AS (
-         |  SELECT l_suppkey, l_shipdate, tp, tps,
-         |    CASE WHEN tps IS NOT NULL THEN
-         |      list_reduce(tps, (a, b) -> a + b) / 20.0::DOUBLE END AS smatp
-         |  FROM f
-         |), h AS (
-         |  SELECT l_suppkey, l_shipdate, tp, smatp,
-         |    CASE WHEN tps IS NOT NULL THEN
-         |      list_reduce(list_transform(tps, x -> abs(x - smatp)),
-         |        (a, b) -> a + b) / 20.0::DOUBLE END AS md
-         |  FROM g
-         |)
-         |SELECT l_suppkey, l_shipdate,
-         |  CASE WHEN md <> 0.0::DOUBLE THEN
-         |    (tp - smatp) / (0.015::DOUBLE * md) END AS cci
-         |FROM h
-         |ORDER BY l_suppkey, l_shipdate""".stripMargin,
-    // Replays Rolling.ichimoku: identical frames, count guards, halvings,
-    // and shift directions.
-    "q_ichimoku" ->
-      s"""WITH bars AS (
-         |$duckBarsSql
-         |), m AS (
-         |  SELECT l_suppkey, l_shipdate, close,
-         |    CASE WHEN count(high) OVER w9 = 9 AND count(low) OVER w9 = 9
-         |         THEN (max(high) OVER w9 + min(low) OVER w9) / 2.0::DOUBLE
-         |    END AS tenkan,
-         |    CASE WHEN count(high) OVER w26 = 26 AND count(low) OVER w26 = 26
-         |         THEN (max(high) OVER w26 + min(low) OVER w26) / 2.0::DOUBLE
-         |    END AS kijun,
-         |    CASE WHEN count(high) OVER w52 = 52 AND count(low) OVER w52 = 52
-         |         THEN (max(high) OVER w52 + min(low) OVER w52) / 2.0::DOUBLE
-         |    END AS sb0
-         |  FROM bars
-         |  WINDOW
-         |    w9 AS (PARTITION BY l_suppkey ORDER BY l_shipdate
-         |      ROWS BETWEEN 8 PRECEDING AND CURRENT ROW),
-         |    w26 AS (PARTITION BY l_suppkey ORDER BY l_shipdate
-         |      ROWS BETWEEN 25 PRECEDING AND CURRENT ROW),
-         |    w52 AS (PARTITION BY l_suppkey ORDER BY l_shipdate
-         |      ROWS BETWEEN 51 PRECEDING AND CURRENT ROW)
-         |)
-         |SELECT l_suppkey, l_shipdate, tenkan, kijun,
-         |  lag((tenkan + kijun) / 2.0::DOUBLE, 26) OVER ws AS senkou_a,
-         |  lag(sb0, 26) OVER ws AS senkou_b,
-         |  lead(close, 26) OVER ws AS chikou
-         |FROM m
-         |WINDOW ws AS (PARTITION BY l_suppkey ORDER BY l_shipdate)
-         |ORDER BY l_suppkey, l_shipdate""".stripMargin,
-    // Replays Rolling.adx: NULL-first-bar TR/±DM, three Wilder folds over
-    // prefix lists, DX from the same expression order, a fourth fold —
-    // the wilderFold helper mirrors the native update ops exactly.
-    "q_adx" ->
-      s"""WITH bars AS (
-         |$duckBarsSql
-         |), t1 AS (
-         |  SELECT l_suppkey, l_shipdate,
-         |    CASE WHEN lag(close) OVER ws IS NULL THEN NULL
-         |         ELSE greatest(high - low, abs(high - lag(close) OVER ws),
-         |                       abs(low - lag(close) OVER ws)) END AS tr,
-         |    CASE WHEN lag(high) OVER ws IS NULL THEN NULL
-         |         ELSE (CASE WHEN (high - lag(high) OVER ws) > (lag(low) OVER ws - low)
-         |                     AND (high - lag(high) OVER ws) > 0.0::DOUBLE
-         |               THEN high - lag(high) OVER ws ELSE 0.0::DOUBLE END) END AS pdm,
-         |    CASE WHEN lag(low) OVER ws IS NULL THEN NULL
-         |         ELSE (CASE WHEN (lag(low) OVER ws - low) > (high - lag(high) OVER ws)
-         |                     AND (lag(low) OVER ws - low) > 0.0::DOUBLE
-         |               THEN lag(low) OVER ws - low ELSE 0.0::DOUBLE END) END AS mdm
-         |  FROM bars
-         |  WINDOW ws AS (PARTITION BY l_suppkey ORDER BY l_shipdate)
-         |), t2 AS (
-         |  SELECT l_suppkey, l_shipdate,
-         |    list(tr) OVER wp AS trl, list(pdm) OVER wp AS pdl,
-         |    list(mdm) OVER wp AS mdl
-         |  FROM t1
-         |  WINDOW wp AS (PARTITION BY l_suppkey ORDER BY l_shipdate
-         |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-         |), t3 AS (
-         |  SELECT l_suppkey, l_shipdate,
-         |    ${wilderEval(wilderFold("trl", 14), 14)} AS str,
-         |    ${wilderEval(wilderFold("pdl", 14), 14)} AS spd,
-         |    ${wilderEval(wilderFold("mdl", 14), 14)} AS smd
-         |  FROM t2
-         |), t4 AS (
-         |  SELECT l_suppkey, l_shipdate,
-         |    100.0::DOUBLE * spd / str AS di_plus,
-         |    100.0::DOUBLE * smd / str AS di_minus,
-         |    CASE WHEN str IS NOT NULL THEN
-         |      CASE WHEN (100.0::DOUBLE * spd / str) + (100.0::DOUBLE * smd / str) = 0.0::DOUBLE
-         |           THEN 0.0::DOUBLE
-         |           ELSE 100.0::DOUBLE * abs((100.0::DOUBLE * spd / str) - (100.0::DOUBLE * smd / str))
-         |                / ((100.0::DOUBLE * spd / str) + (100.0::DOUBLE * smd / str)) END
-         |    END AS dx
-         |  FROM t3
-         |), t5 AS (
-         |  SELECT l_suppkey, l_shipdate, di_plus, di_minus,
-         |    list(dx) OVER wp AS dxl
-         |  FROM t4
-         |  WINDOW wp AS (PARTITION BY l_suppkey ORDER BY l_shipdate
-         |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-         |)
-         |SELECT l_suppkey, l_shipdate, di_plus, di_minus,
-         |  ${wilderEval(wilderFold("dxl", 14), 14)} AS adx
-         |FROM t5
-         |ORDER BY l_suppkey, l_shipdate""".stripMargin,
-    // Replays Rolling.roc: one fixed IEEE division against the 12-back value.
-    "q_roc" ->
-      s"""SELECT l_orderkey, l_linenumber,
-         |  CASE WHEN lag(x, 12) OVER ws IS NOT NULL AND lag(x, 12) OVER ws <> 0
-         |       THEN 100.0::DOUBLE * (x - lag(x, 12) OVER ws) / (lag(x, 12) OVER ws)
-         |  END AS roc
-         |FROM (SELECT l_orderkey, l_linenumber, l_suppkey, l_shipdate,
-         |        CAST(l_quantity AS DOUBLE) AS x FROM lineitem) li
-         |WINDOW ws AS ($W)
-         |ORDER BY l_orderkey, l_linenumber""".stripMargin,
-    // Replays Rolling.donchian: exact window min/max + one IEEE halving.
-    "q_donchian" ->
-      s"""SELECT l_orderkey, l_linenumber,
-         |  CASE WHEN count(x) OVER wn = 20 THEN max(x) OVER wn END AS dc_upper,
-         |  CASE WHEN count(x) OVER wn = 20 THEN min(x) OVER wn END AS dc_lower,
-         |  CASE WHEN count(x) OVER wn = 20
-         |       THEN (max(x) OVER wn + min(x) OVER wn) / 2.0::DOUBLE END AS dc_mid
-         |FROM (SELECT l_orderkey, l_linenumber, l_suppkey, l_shipdate,
-         |        CAST(l_quantity AS DOUBLE) AS x FROM lineitem) li
-         |WINDOW wn AS ($W ROWS BETWEEN 19 PRECEDING AND CURRENT ROW)
-         |ORDER BY l_orderkey, l_linenumber""".stripMargin,
-    // Replays Rolling.williamsR: the stochastic mirror, −100·(hi−x)/(hi−lo).
-    "q_williams_r" ->
-      s"""SELECT l_orderkey, l_linenumber,
-         |  CASE WHEN count(x) OVER wn = 14 AND max(x) OVER wn <> min(x) OVER wn
-         |       THEN -100.0::DOUBLE * (max(x) OVER wn - x)
-         |            / (max(x) OVER wn - min(x) OVER wn) END AS will_r
-         |FROM (SELECT l_orderkey, l_linenumber, l_suppkey, l_shipdate,
-         |        CAST(l_quantity AS DOUBLE) AS x FROM lineitem) li
-         |WINDOW wn AS ($W ROWS BETWEEN 13 PRECEDING AND CURRENT ROW)
-         |ORDER BY l_orderkey, l_linenumber""".stripMargin,
-    // Replays Rolling.drawdown: running max + one IEEE division.
-    "q_drawdown" ->
-      s"""SELECT l_orderkey, l_linenumber, peak,
-         |  CASE WHEN peak <> 0 THEN (x - peak) / peak END AS drawdown
-         |FROM (
-         |  SELECT l_orderkey, l_linenumber, x,
-         |    max(x) OVER (ws ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS peak
-         |  FROM (SELECT l_orderkey, l_linenumber, l_suppkey, l_shipdate,
-         |          CAST(l_quantity AS DOUBLE) AS x FROM lineitem) li
-         |  WINDOW ws AS ($W)
-         |) s
-         |ORDER BY l_orderkey, l_linenumber""".stripMargin,
-    // Replays Rolling.corrBeta: five exact scaled-BIGINT window sums, the
-    // closed forms as the identical IEEE tree (separate square roots).
-    "q_rolling_corr" ->
-      s"""SELECT l_orderkey, l_linenumber,
-         |  CASE WHEN cnt = 20 AND dx > 0 AND dy > 0
-         |       THEN greatest(-1.0::DOUBLE, least(1.0::DOUBLE,
-         |         num / (sqrt(dx) * sqrt(dy)))) END AS roll_corr,
-         |  CASE WHEN cnt = 20 AND dx > 0
-         |       THEN (num / dx) * 0.01::DOUBLE END AS roll_beta
-         |FROM (
-         |  SELECT l_orderkey, l_linenumber,
-         |    count(*) OVER wn AS cnt,
-         |    CAST(20 * (sum(xi * yi) OVER wn)
-         |      - (sum(xi) OVER wn) * (sum(yi) OVER wn) AS DOUBLE) AS num,
-         |    CAST(20 * (sum(xi * xi) OVER wn)
-         |      - (sum(xi) OVER wn) * (sum(xi) OVER wn) AS DOUBLE) AS dx,
-         |    CAST(20 * (sum(yi * yi) OVER wn)
-         |      - (sum(yi) OVER wn) * (sum(yi) OVER wn) AS DOUBLE) AS dy
-         |  FROM (SELECT l_orderkey, l_linenumber, l_suppkey, l_shipdate,
-         |          CAST(round(CAST(l_quantity AS DOUBLE) * 1.0::DOUBLE) AS BIGINT) AS xi,
-         |          CAST(round(CAST(l_extendedprice AS DOUBLE) * 100.0::DOUBLE) AS BIGINT) AS yi
-         |        FROM lineitem) li
-         |  WINDOW wn AS ($W ROWS BETWEEN 19 PRECEDING AND CURRENT ROW)
-         |) s
-         |ORDER BY l_orderkey, l_linenumber""".stripMargin,
-    // Replays Stats.weightedMedian: integer cumulative weights, crossing
-    // row 2·cum ≥ W > 2·(cum − w). The crossing VALUE is tie-order
-    // independent, so engine sort-order differences among equal values
-    // cannot change the output.
-    "q_weighted_median" ->
-      """WITH base AS (
-        |  SELECT l_suppkey, l_extendedprice AS v, CAST(l_quantity AS BIGINT) AS w
-        |  FROM lineitem
-        |  WHERE l_extendedprice IS NOT NULL AND l_quantity IS NOT NULL
-        |), c AS (
-        |  SELECT l_suppkey, v, w,
-        |    sum(w) OVER (PARTITION BY l_suppkey ORDER BY v
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum,
-        |    sum(w) OVER (PARTITION BY l_suppkey) AS tot
-        |  FROM base
-        |)
-        |SELECT l_suppkey, v AS weighted_median, CAST(tot AS BIGINT) AS total_weight
-        |FROM c WHERE cum * 2 >= tot AND (cum - w) * 2 < tot
-        |ORDER BY l_suppkey""".stripMargin,
-    // Replays Rolling.drawdownDuration: the same staged integer windows
-    // (row number, running max, last peak-row) — no floats anywhere.
-    "q_dd_duration" ->
-      s"""SELECT l_orderkey, l_linenumber,
-         |  CAST(rn - max(CASE WHEN is_peak THEN rn END)
-         |    OVER ($W ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT)
-         |    AS dd_duration
-         |FROM (
-         |  SELECT l_orderkey, l_linenumber, l_suppkey, l_shipdate,
-         |    CAST(row_number() OVER ($W) AS BIGINT) AS rn,
-         |    CAST(l_extendedprice AS DOUBLE)
-         |      >= max(CAST(l_extendedprice AS DOUBLE))
-         |         OVER ($W ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS is_peak
-         |  FROM lineitem
-         |)
-         |ORDER BY l_orderkey, l_linenumber""".stripMargin,
-    // Replays Bars.twap: identical lead/boundary Δt in exact nanos,
-    // HUGEINT p·Δt sums ≡ the DECIMAL(38,0) sums, one double division.
-    "q_twap" ->
-      """WITH src AS (
-        |  SELECT user_id, event_id, epoch_ns(ts) AS tsn,
-        |    CAST(round(value * 100.0::DOUBLE) AS BIGINT) AS pi
-        |  FROM events
-        |), d AS (
-        |  SELECT user_id, tsn // 86400000000000 AS bucket, pi,
-        |    coalesce(lead(tsn, 1) OVER (PARTITION BY user_id, tsn // 86400000000000
-        |        ORDER BY tsn, event_id),
-        |      (tsn // 86400000000000 + 1) * 86400000000000) - tsn AS dt
-        |  FROM src
-        |)
-        |SELECT user_id, bucket, count(*) AS n_ticks,
-        |  CASE WHEN sum(dt) > 0 THEN
-        |    CAST(sum(pi * dt) AS DOUBLE) / (100.0::DOUBLE * CAST(sum(dt) AS DOUBLE))
-        |  END AS twap
-        |FROM d GROUP BY user_id, bucket
-        |ORDER BY user_id, bucket""".stripMargin,
-    // Replays TextOps.lexicalDiversity off the shared tokenizer CTE:
-    // (doc, token) counts → per-doc rollup → left join keeps empty docs.
-    "q_lexical_diversity" ->
-      s"""WITH $duckToks,
-         |tc AS (SELECT doc_id, w, count(*) AS c FROM toks GROUP BY doc_id, w),
-         |a AS (
-         |  SELECT doc_id, CAST(sum(c) AS BIGINT) AS n_tokens,
-         |    count(*) AS n_types,
-         |    CAST(sum(CASE WHEN c = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_hapax
-         |  FROM tc GROUP BY doc_id
-         |)
-         |SELECT d.doc_id,
-         |  coalesce(a.n_tokens, 0) AS n_tokens,
-         |  coalesce(a.n_types, 0) AS n_types,
-         |  coalesce(a.n_hapax, 0) AS n_hapax,
-         |  CASE WHEN coalesce(a.n_tokens, 0) > 0 THEN
-         |    CAST(a.n_types AS DOUBLE) / CAST(a.n_tokens AS DOUBLE) END AS ttr,
-         |  CASE WHEN coalesce(a.n_types, 0) > 0 THEN
-         |    CAST(a.n_hapax AS DOUBLE) / CAST(a.n_types AS DOUBLE) END AS hapax_share
-         |FROM documents d LEFT JOIN a USING (doc_id)
-         |ORDER BY d.doc_id""".stripMargin,
-    // Replays Stats.spearman: doubled average ranks (2·rank + peers − 1,
-    // RANGE CURRENT ROW peers frame), HUGEINT sums ≡ the DECIMAL(38,0)
-    // sums, the identical Pearson closed form with the [−1,1] clamp.
-    "q_spearman" ->
-      """WITH base AS (
-        |  SELECT l_suppkey,
-        |    CAST(round(CAST(l_quantity AS DOUBLE) * 100.0::DOUBLE) AS BIGINT) AS xi,
-        |    CAST(round(CAST(l_extendedprice AS DOUBLE) * 100.0::DOUBLE) AS BIGINT) AS yi
-        |  FROM lineitem
-        |  WHERE l_quantity IS NOT NULL AND l_extendedprice IS NOT NULL
-        |), r AS (
-        |  SELECT l_suppkey,
-        |    2 * rank() OVER (PARTITION BY l_suppkey ORDER BY xi)
-        |      + count(*) OVER (PARTITION BY l_suppkey ORDER BY xi
-        |          RANGE BETWEEN CURRENT ROW AND CURRENT ROW) - 1 AS ra,
-        |    2 * rank() OVER (PARTITION BY l_suppkey ORDER BY yi)
-        |      + count(*) OVER (PARTITION BY l_suppkey ORDER BY yi
-        |          RANGE BETWEEN CURRENT ROW AND CURRENT ROW) - 1 AS rb
-        |  FROM base
-        |), g AS (
-        |  SELECT l_suppkey, count(*) AS n,
-        |    sum(ra) AS sa, sum(rb) AS sb, sum(ra*ra) AS saa,
-        |    sum(rb*rb) AS sbb, sum(ra*rb) AS sab
-        |  FROM r GROUP BY l_suppkey
-        |)
-        |SELECT l_suppkey, n,
-        |  CASE WHEN (CAST(n AS DOUBLE) * CAST(saa AS DOUBLE) - CAST(sa AS DOUBLE) * CAST(sa AS DOUBLE)) > 0
-        |        AND (CAST(n AS DOUBLE) * CAST(sbb AS DOUBLE) - CAST(sb AS DOUBLE) * CAST(sb AS DOUBLE)) > 0
-        |  THEN greatest(-1.0::DOUBLE, least(1.0::DOUBLE,
-        |    (CAST(n AS DOUBLE) * CAST(sab AS DOUBLE) - CAST(sa AS DOUBLE) * CAST(sb AS DOUBLE))
-        |    / (sqrt(CAST(n AS DOUBLE) * CAST(saa AS DOUBLE) - CAST(sa AS DOUBLE) * CAST(sa AS DOUBLE))
-        |       * sqrt(CAST(n AS DOUBLE) * CAST(sbb AS DOUBLE) - CAST(sb AS DOUBLE) * CAST(sb AS DOUBLE)))))
-        |  END AS spearman
-        |FROM g ORDER BY l_suppkey""".stripMargin,
-    // Replays Eval.brierScore: identical 1/(1+v) squash, round-to-1e6
-    // quantization, exact integer squared errors (HUGEINT sum ≡ the
-    // Spark DECIMAL(38,0) sum), one double division.
-    "q_brier" ->
-      """WITH src AS (
-        |  SELECT epoch_ns(ts) // 86400000000000 AS day,
-        |    CAST(round((1.0::DOUBLE / (1.0::DOUBLE + value)) * 1000000.0::DOUBLE) AS BIGINT) AS s_int,
-        |    CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END AS y
-        |  FROM events
-        |)
-        |SELECT day, count(*) AS n,
-        |  CAST(sum((s_int - y * 1000000) * (s_int - y * 1000000)) AS DOUBLE)
-        |    / (1000000000000.0::DOUBLE * CAST(count(*) AS DOUBLE)) AS brier
-        |FROM src GROUP BY day ORDER BY day""".stripMargin,
-    // Replays Eval.liftTable: quantile_cont boundaries (interpolation
-    // parity proven by q_quantiles), bucket = 10 − #bounds-below, the
-    // identical lift/cum-lift double trees.
-    "q_lift_table" -> {
-      val qlist = (1 until 10).map(k => s"quantile_cont(score, 0.$k)")
-        .mkString("[", ", ", "]")
-      s"""WITH src AS (
-         |  SELECT value AS score,
-         |    CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END AS y
-         |  FROM events
-         |), b AS (
-         |  SELECT $qlist AS bounds,
-         |         count(*) AS tot_n, CAST(sum(y) AS BIGINT) AS tot_pos
-         |  FROM src
-         |), bk AS (
-         |  SELECT 10 - len(list_filter(b.bounds, bd -> s.score > bd)) AS bucket,
-         |         s.y, b.tot_n, b.tot_pos
-         |  FROM src s CROSS JOIN b
-         |), g AS (
-         |  SELECT bucket, tot_n, tot_pos, count(*) AS n,
-         |         CAST(sum(y) AS BIGINT) AS n_pos
-         |  FROM bk GROUP BY bucket, tot_n, tot_pos
-         |), c AS (
-         |  SELECT bucket, n, n_pos, tot_n, tot_pos,
-         |    CAST(n_pos AS DOUBLE) / CAST(n AS DOUBLE) AS pos_rate,
-         |    CASE WHEN tot_pos > 0 THEN
-         |      (CAST(n_pos AS DOUBLE) / CAST(n AS DOUBLE))
-         |        / (CAST(tot_pos AS DOUBLE) / CAST(tot_n AS DOUBLE)) END AS lift,
-         |    CAST(sum(n) OVER w AS BIGINT) AS cum_n,
-         |    CAST(sum(n_pos) OVER w AS BIGINT) AS cum_pos
-         |  FROM g
-         |  WINDOW w AS (ORDER BY bucket ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-         |)
-         |SELECT bucket, n, n_pos, pos_rate, lift, cum_n, cum_pos,
-         |  CASE WHEN tot_pos > 0 THEN
-         |    (CAST(cum_pos AS DOUBLE) / CAST(cum_n AS DOUBLE))
-         |      / (CAST(tot_pos AS DOUBLE) / CAST(tot_n AS DOUBLE)) END AS cum_lift
-         |FROM c ORDER BY bucket""".stripMargin
-    },
-    // Replays Divergence.gini: ascending-rank BIGINT sums, the identical
-    // (2·siv − (n+1)·sv)/(n·sv) double tree (n+1 as a DOUBLE add,
-    // mirroring the Column expression).
-    "q_gini" ->
-      """WITH v AS (
-        |  SELECT lang, CAST(round(CAST(n_chars AS DOUBLE) * 1.0::DOUBLE) AS BIGINT) AS x
-        |  FROM documents WHERE n_chars IS NOT NULL
-        |), r AS (
-        |  SELECT lang, x, CAST(row_number() OVER (PARTITION BY lang ORDER BY x) AS BIGINT) AS i
-        |  FROM v
-        |), g AS (
-        |  SELECT lang, count(*) AS n, CAST(sum(x) AS BIGINT) AS sv,
-        |         CAST(sum(i * x) AS BIGINT) AS siv
-        |  FROM r GROUP BY lang
-        |)
-        |SELECT lang, n,
-        |  CASE WHEN sv > 0 THEN
-        |    (2.0::DOUBLE * CAST(siv AS DOUBLE)
-        |      - (CAST(n AS DOUBLE) + 1.0::DOUBLE) * CAST(sv AS DOUBLE))
-        |    / (CAST(n AS DOUBLE) * CAST(sv AS DOUBLE))
-        |  END AS gini
-        |FROM g ORDER BY lang""".stripMargin,
-    // Replays Skew.keyReport: counts → one-row totals → rank window on
-    // the counts frame; integer arithmetic until the two divisions.
-    "q_skew_report" ->
-      """WITH counts AS (
-        |  SELECT l_suppkey, count(*) AS cnt FROM lineitem GROUP BY l_suppkey
-        |), tot AS (
-        |  SELECT CAST(sum(cnt) AS BIGINT) AS total, count(*) AS n_keys FROM counts
-        |), ranked AS (
-        |  SELECT c.l_suppkey, c.cnt, t.total, t.n_keys,
-        |    row_number() OVER (ORDER BY c.cnt DESC, c.l_suppkey) AS rank
-        |  FROM counts c CROSS JOIN tot t
-        |)
-        |SELECT l_suppkey, cnt, rank,
-        |  CAST(cnt AS DOUBLE) / CAST(total AS DOUBLE) AS share,
-        |  CAST(cnt * n_keys AS DOUBLE) / CAST(total AS DOUBLE) AS skew,
-        |  (CAST(cnt * n_keys AS DOUBLE) / CAST(total AS DOUBLE)) >= 4.0 AS heavy
-        |FROM ranked WHERE rank <= 20 ORDER BY rank""".stripMargin,
-    // Replays the three EwmCov recurrences as ONE struct fold whose
-    // fields are mutually independent (each reads only its own acc
-    // field + the current pair — safe under DuckDB's in-place field
-    // update, see NOTES), then the same correlation closed form.
-    "q_ewma_corr" ->
-      s"""SELECT l_orderkey, l_linenumber,
-         |  st.cxy AS cov_xy, st.vx AS var_x, st.vy AS var_y,
-         |  CASE WHEN st.vx > 0 AND st.vy > 0
-         |       THEN st.cxy / (sqrt(st.vx) * sqrt(st.vy)) END AS ewm_corr
-         |FROM (
-         |  SELECT l_orderkey, l_linenumber,
-         |    list_reduce(list_transform(list(struct_pack(x := xq, y := yp)) OVER w,
-         |      p -> struct_pack(cxy := p.x * p.y, vx := p.x * p.x, vy := p.y * p.y,
-         |                       x := p.x, y := p.y)),
-         |      (acc, cur) -> struct_pack(
-         |        cxy := (940.0::DOUBLE/1000.0::DOUBLE)*acc.cxy + (1.0::DOUBLE - 940.0::DOUBLE/1000.0::DOUBLE)*(cur.x * cur.y),
-         |        vx  := (940.0::DOUBLE/1000.0::DOUBLE)*acc.vx  + (1.0::DOUBLE - 940.0::DOUBLE/1000.0::DOUBLE)*(cur.x * cur.x),
-         |        vy  := (940.0::DOUBLE/1000.0::DOUBLE)*acc.vy  + (1.0::DOUBLE - 940.0::DOUBLE/1000.0::DOUBLE)*(cur.y * cur.y),
-         |        x := cur.x, y := cur.y)) AS st
-         |  FROM (SELECT l_orderkey, l_linenumber, l_suppkey, l_shipdate,
-         |          CAST(l_quantity AS DOUBLE) AS xq,
-         |          CAST(l_extendedprice AS DOUBLE) AS yp
-         |        FROM lineitem)
-         |  WINDOW w AS $duckW
-         |)
-         |ORDER BY l_orderkey, l_linenumber""".stripMargin,
-    // Replays Rolling.autocorr: lag the SCALED ints (lag-then-quantize ==
-    // quantize-then-lag), then the identical five-sum corrBeta tree; the
-    // pair count (yi defined) gates the frame, so the leading k rows of
-    // each key never emit.
-    "q_autocorr" ->
-      s"""SELECT l_orderkey, l_linenumber,
-         |  CASE WHEN cnt = 20 AND dx > 0 AND dy > 0
-         |       THEN greatest(-1.0::DOUBLE, least(1.0::DOUBLE,
-         |         num / (sqrt(dx) * sqrt(dy)))) END AS roll_autocorr
-         |FROM (
-         |  SELECT l_orderkey, l_linenumber,
-         |    count(CASE WHEN yi IS NOT NULL THEN 1 END) OVER wn AS cnt,
-         |    CAST(20 * (sum(xi * yi) OVER wn)
-         |      - (sum(xi) OVER wn) * (sum(yi) OVER wn) AS DOUBLE) AS num,
-         |    CAST(20 * (sum(xi * xi) OVER wn)
-         |      - (sum(xi) OVER wn) * (sum(xi) OVER wn) AS DOUBLE) AS dx,
-         |    CAST(20 * (sum(yi * yi) OVER wn)
-         |      - (sum(yi) OVER wn) * (sum(yi) OVER wn) AS DOUBLE) AS dy
-         |  FROM (
-         |    SELECT l_orderkey, l_linenumber, l_suppkey, l_shipdate,
-         |      xi, lag(xi, 4) OVER ($W) AS yi
-         |    FROM (SELECT l_orderkey, l_linenumber, l_suppkey, l_shipdate,
-         |            CAST(round(CAST(l_quantity AS DOUBLE) * 1.0::DOUBLE) AS BIGINT) AS xi
-         |          FROM lineitem) b
-         |  ) li
-         |  WINDOW wn AS ($W ROWS BETWEEN 19 PRECEDING AND CURRENT ROW)
-         |) s
-         |ORDER BY l_orderkey, l_linenumber""".stripMargin,
-    // Replays Rolling.ffill: last non-NULL over the running frame.
-    "q_ffill" ->
-      s"""SELECT l_orderkey, l_linenumber, nullif(x, 17.0::DOUBLE) AS xn,
-         |  last_value(nullif(x, 17.0::DOUBLE) IGNORE NULLS)
-         |    OVER (ws ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS xn_filled
-         |FROM (SELECT l_orderkey, l_linenumber, l_suppkey, l_shipdate,
-         |        CAST(l_quantity AS DOUBLE) AS x FROM lineitem) li
-         |WINDOW ws AS ($W)
-         |ORDER BY l_orderkey, l_linenumber""".stripMargin,
-    // Replays Split.assign: the interpolated boundaries are the very longs
-    // Split.boundaries computes — no independent FP re-derivation.
-    "q_split" -> {
-      val b = operators.Split.boundaries(
-        Seq("train" -> 0.8, "val" -> 0.1, "test" -> 0.1))
-      s"""SELECT split, count(*) AS n, CAST(sum(doc_id) AS BIGINT) AS sum_id
-         |FROM (
-         |  SELECT doc_id,
-         |    CASE WHEN h < ${b(0)} THEN 'train'
-         |         WHEN h < ${b(1)} THEN 'val'
-         |         WHEN h < ${b(2)} THEN 'test' END AS split
-         |  FROM (SELECT doc_id,
-         |          CAST('0x' || substr(md5(doc_id::VARCHAR), 1, 15) AS BIGINT) AS h
-         |        FROM documents) d
-         |) s
-         |GROUP BY split ORDER BY split""".stripMargin
-    },
-    "q_split_group" -> {
-      val b = operators.Split.boundaries(
-        Seq("train" -> 0.6, "val" -> 0.2, "test" -> 0.2))
-      s"""SELECT split, count(*) AS n, count(DISTINCT lang) AS n_langs,
-         |  CAST(sum(doc_id) AS BIGINT) AS sum_id
-         |FROM (
-         |  SELECT doc_id, lang,
-         |    CASE WHEN h < ${b(0)} THEN 'train'
-         |         WHEN h < ${b(1)} THEN 'val'
-         |         WHEN h < ${b(2)} THEN 'test' END AS split
-         |  FROM (SELECT doc_id, lang,
-         |          CAST('0x' || substr(md5(lang), 1, 15) AS BIGINT) AS h
-         |        FROM documents) d
-         |) s
-         |GROUP BY split ORDER BY split""".stripMargin
-    },
-    // Replays Split.kfold: hash mod k on the nonnegative 60-bit hash.
-    "q_kfold" ->
-      """SELECT fold, count(*) AS n, CAST(sum(doc_id) AS BIGINT) AS sum_id
-        |FROM (
-        |  SELECT doc_id,
-        |    CAST(CAST('0x' || substr(md5(doc_id::VARCHAR), 1, 15) AS BIGINT) % 5 AS INT) AS fold
-        |  FROM documents) s
-        |GROUP BY fold ORDER BY fold""".stripMargin,
-    // Replays Split.clusterSafeAssign: star-verified near-dup components
-    // (the q_dedup_keep recursion), group key = component rep (own id
-    // when unclustered), then the q_split hash-boundary membership on
-    // that key.
-    "q_split_cluster" -> {
-      val b = operators.Split.boundaries(Seq("train" -> 0.8, "test" -> 0.2))
-      s"""WITH RECURSIVE $duckStarComponentsCtes,
-         |comp AS (SELECT id, min(r) AS component FROM reach GROUP BY id),
-         |rep AS (
-         |  SELECT d.doc_id, coalesce(c.component, d.doc_id) AS rep
-         |  FROM documents d LEFT JOIN comp c ON c.id = d.doc_id
-         |),
-         |asg AS (
-         |  SELECT doc_id,
-         |    CASE WHEN h < ${b(0)} THEN 'train'
-         |         WHEN h < ${b(1)} THEN 'test' END AS split
-         |  FROM (SELECT doc_id,
-         |          CAST('0x' || substr(md5(rep::VARCHAR), 1, 15) AS BIGINT) AS h
-         |        FROM rep) x
-         |)
-         |SELECT split, count(*) AS n, CAST(sum(doc_id) AS BIGINT) AS sum_id
-         |FROM asg GROUP BY split ORDER BY split""".stripMargin
-    },
-    // Replays Split.purgedTimeFolds: equal-width time windows over
-    // [min, max] nanos, row fold = k·(t−min) DIV span, window-end
-    // boundary min + ceil((f+1)·span/k), 1-day embargo after each
-    // window — all exact integer arithmetic.
-    "q_purged_folds" ->
-      """WITH e AS (SELECT event_id, epoch_ns(ts) AS t FROM events),
-        |st AS (SELECT min(t) AS mn, max(t) - min(t) + 1 AS span FROM e),
-        |fo AS (SELECT CAST(unnest(range(5)) AS INT) AS fold),
-        |b AS (SELECT fo.fold, st.mn, st.span,
-        |        st.mn + ((fo.fold + 1) * st.span + 4) // 5 AS e_end
-        |      FROM fo, st),
-        |r AS (SELECT e.event_id, b.fold,
-        |        CASE WHEN (5 * (e.t - b.mn)) // b.span = b.fold THEN 'test'
-        |             WHEN e.t >= b.e_end AND e.t < b.e_end + 86400000000000
-        |               THEN 'embargo'
-        |             ELSE 'train' END AS role
-        |      FROM e, b)
-        |SELECT fold, role, count(*) AS n,
-        |  CAST(sum(event_id) AS BIGINT) AS sum_id
-        |FROM r GROUP BY fold, role ORDER BY fold, role""".stripMargin,
-    // Replays Feature.winsorize: quantile_cont ≡ Spark's exact percentile
-    // (parity proven by q_quantiles), then the same least/greatest clamp.
-    "q_winsorize" ->
-      """WITH b AS (
-        |  SELECT l_returnflag,
-        |    quantile_cont(CAST(l_extendedprice AS DOUBLE), 0.05) AS lo,
-        |    quantile_cont(CAST(l_extendedprice AS DOUBLE), 0.95) AS hi
-        |  FROM lineitem GROUP BY l_returnflag)
-        |SELECT l_orderkey, l_linenumber,
-        |  least(greatest(CAST(l_extendedprice AS DOUBLE), lo), hi)
-        |    AS l_extendedprice_winsor
-        |FROM lineitem JOIN b USING (l_returnflag)
-        |ORDER BY l_orderkey, l_linenumber""".stripMargin,
-    // Replays Feature.minMaxScale: exact per-group extremes, one division.
-    "q_normalize" ->
-      """WITH b AS (
-        |  SELECT l_returnflag,
-        |    min(CAST(l_quantity AS DOUBLE)) AS mn,
-        |    max(CAST(l_quantity AS DOUBLE)) AS mx
-        |  FROM lineitem GROUP BY l_returnflag)
-        |SELECT l_orderkey, l_linenumber,
-        |  CASE WHEN mx <> mn
-        |       THEN (CAST(l_quantity AS DOUBLE) - mn) / (mx - mn) END
-        |    AS l_quantity_scaled
-        |FROM lineitem JOIN b USING (l_returnflag)
-        |ORDER BY l_orderkey, l_linenumber""".stripMargin,
-    // Replays Resample.densify over the bars: per-key daily spine
-    // (generate_series) left-joined to the bars, gap days counted.
-    "q_densify" ->
-      s"""WITH bars AS (
-         |$duckBarsSql
-         |), spans AS (
-         |  SELECT l_suppkey, min(l_shipdate) AS lo, max(l_shipdate) AS hi
-         |  FROM bars GROUP BY l_suppkey
-         |), spine AS (
-         |  SELECT l_suppkey,
-         |    CAST(unnest(generate_series(CAST(lo AS TIMESTAMP),
-         |      CAST(hi AS TIMESTAMP), INTERVAL 1 DAY)) AS DATE) AS l_shipdate
-         |  FROM spans
-         |)
-         |SELECT s.l_suppkey, count(*) AS n_days,
-         |  CAST(sum(CASE WHEN b.n_ticks IS NULL THEN 1 ELSE 0 END) AS BIGINT)
-         |    AS n_gap_days
-         |FROM spine s LEFT JOIN bars b
-         |  ON s.l_suppkey = b.l_suppkey AND s.l_shipdate = b.l_shipdate
-         |GROUP BY s.l_suppkey
-         |ORDER BY s.l_suppkey""".stripMargin,
-    "q_ntile" ->
-      s"""SELECT l_orderkey, l_linenumber,
-         |  CAST(ntile(4) OVER ($W) AS INT) AS quartile
-         |FROM lineitem
-         |ORDER BY l_orderkey, l_linenumber""".stripMargin,
-    "q_percent_rank" ->
-      s"""SELECT l_orderkey, l_linenumber,
-         |  percent_rank() OVER ($W) AS pr,
-         |  cume_dist() OVER ($W) AS cd
-         |FROM lineitem
-         |ORDER BY l_orderkey, l_linenumber""".stripMargin,
-    "q_filter_agg" ->
-      """SELECT l_returnflag,
-        |  count(*) FILTER (WHERE l_quantity > 25) AS n_big,
-        |  sum(l_quantity) FILTER (WHERE l_discount > 0.05) AS qty_disc,
-        |  max(l_extendedprice) FILTER (WHERE l_linestatus = 'F') AS max_f
-        |FROM lineitem GROUP BY l_returnflag
-        |ORDER BY l_returnflag""".stripMargin,
-    // Replays Rolling.keltner: the q_ema fold over bar closes (same
-    // recurrence the native Ema runs), the q_atr TR chain, one band tree.
-    "q_keltner" ->
-      s"""WITH bars AS (
-         |$duckBarsSql
-         |), tr AS (
-         |  SELECT l_suppkey, l_shipdate,
-         |    CASE WHEN lag(close, 1) OVER ws IS NULL THEN high - low
-         |         ELSE greatest(high - low,
-         |                       abs(high - lag(close, 1) OVER ws),
-         |                       abs(low - lag(close, 1) OVER ws)) END AS tr
-         |  FROM bars
-         |  WINDOW ws AS (PARTITION BY l_suppkey ORDER BY l_shipdate)
-         |), a AS (
-         |  SELECT l_suppkey, l_shipdate,
-         |    CASE WHEN count(tr) OVER wn = 14 THEN avg(tr) OVER wn END AS atr
-         |  FROM tr
-         |  WINDOW wn AS (PARTITION BY l_suppkey ORDER BY l_shipdate
-         |    ROWS BETWEEN 13 PRECEDING AND CURRENT ROW)
-         |), m AS (
-         |  SELECT l_suppkey, l_shipdate, ${duckEma("cs", 20)} AS kc_mid
-         |  FROM (SELECT l_suppkey, l_shipdate,
-         |          list(close) OVER (PARTITION BY l_suppkey ORDER BY l_shipdate
-         |            ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cs
-         |        FROM bars) e
-         |)
-         |SELECT m.l_suppkey, m.l_shipdate, kc_mid,
-         |  kc_mid + 2.0::DOUBLE * atr AS kc_upper,
-         |  kc_mid - 2.0::DOUBLE * atr AS kc_lower
-         |FROM m JOIN a ON m.l_suppkey = a.l_suppkey
-         |  AND m.l_shipdate = a.l_shipdate
-         |ORDER BY m.l_suppkey, m.l_shipdate""".stripMargin,
-    // The incremental-maintenance oracle aggregates the corpus DIRECTLY:
-    // history+batch merge must equal recompute (monoid merge), bit-for-bit
-    // on the integer-valued metric.
-    "q_incremental_agg" ->
-      """SELECT l_returnflag, count(x) AS n, sum(x) AS sum_v,
-        |  min(x) AS min_v, max(x) AS max_v,
-        |  CASE WHEN count(x) > 0 THEN sum(x) / count(x) END AS avg_v
-        |FROM (SELECT l_returnflag, CAST(l_quantity AS DOUBLE) AS x
-        |      FROM lineitem) t
-        |GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin,
-    // Replays Feature.classWeights: N / (K·n) on exact counts.
-    "q_class_weights" ->
-      """WITH c AS (
-        |  SELECT o_orderpriority, count(*) AS n FROM orders GROUP BY 1),
-        |t AS (SELECT CAST(sum(n) AS BIGINT) AS nn, count(*) AS kk FROM c)
-        |SELECT o_orderpriority, n,
-        |  CAST(nn AS DOUBLE) / CAST(kk * n AS DOUBLE) AS weight
-        |FROM c, t ORDER BY o_orderpriority""".stripMargin,
-    // Replays Feature.robustScale: quantile_cont ≡ exact percentile, the
-    // same (x − med) / (q3 − q1) tree.
-    "q_robust_scale" ->
-      """WITH b AS (
-        |  SELECT l_returnflag,
-        |    quantile_cont(CAST(l_quantity AS DOUBLE), 0.5) AS med,
-        |    quantile_cont(CAST(l_quantity AS DOUBLE), 0.25) AS q1,
-        |    quantile_cont(CAST(l_quantity AS DOUBLE), 0.75) AS q3
-        |  FROM lineitem GROUP BY l_returnflag)
-        |SELECT l_orderkey, l_linenumber,
-        |  CASE WHEN q3 <> q1
-        |       THEN (CAST(l_quantity AS DOUBLE) - med) / (q3 - q1) END
-        |    AS l_quantity_robust
-        |FROM lineitem JOIN b USING (l_returnflag)
-        |ORDER BY l_orderkey, l_linenumber""".stripMargin,
-    // Replays Feature.labelIndex: rank by (count DESC, label ASC) − 1.
-    "q_label_index" ->
-      """SELECT o_orderpriority, n,
-        |  CAST(row_number() OVER (ORDER BY n DESC, o_orderpriority ASC) - 1
-        |    AS INT) AS label_index
-        |FROM (SELECT o_orderpriority, count(*) AS n
-        |      FROM orders GROUP BY 1) c
-        |ORDER BY label_index""".stripMargin,
-    // Replays Feature.targetEncode: (Σy_c + m·(S/N)) / (n_c + m), exact
-    // integer sums, one fixed division tree.
-    "q_target_encode" ->
-      """WITH c AS (
-        |  SELECT l_returnflag, count(l_quantity) AS n,
-        |    sum(CAST(l_quantity AS DOUBLE)) AS sy
-        |  FROM lineitem GROUP BY 1),
-        |g AS (SELECT count(l_quantity) AS nn,
-        |        sum(CAST(l_quantity AS DOUBLE)) AS ss FROM lineitem)
-        |SELECT l_returnflag, n,
-        |  (sy + 10.0::DOUBLE * (ss / nn)) / (n + 10.0::DOUBLE) AS target_enc
-        |FROM c, g ORDER BY l_returnflag""".stripMargin,
-    // Replays Split.shuffleShards: shard = hash mod 8, rank by (hash, key).
-    "q_shuffle_shards" ->
-      """SELECT doc_id, shard,
-        |  CAST(row_number() OVER (PARTITION BY shard ORDER BY h, doc_id)
-        |    AS BIGINT) AS shuffle_rank
-        |FROM (
-        |  SELECT doc_id,
-        |    CAST(h % 8 AS INT) AS shard, h
-        |  FROM (SELECT doc_id,
-        |          CAST('0x' || substr(md5(doc_id::VARCHAR), 1, 15) AS BIGINT) AS h
-        |        FROM documents) i) s
-        |ORDER BY shard, shuffle_rank""".stripMargin,
-    // Replays Divergence.tokenEntropy: same tokenizer, global top-30
-    // vocab (count DESC, token ASC), token-ordered left folds of the
-    // identical entropy/KL term trees.
-    "q_source_entropy" ->
-      """WITH tok0 AS (
-        |  SELECT source, unnest(string_split_regex(lower(text), '[^a-z0-9]+')) AS w
-        |  FROM documents),
-        |tk AS (SELECT source, w AS token FROM tok0 WHERE w <> ''),
-        |counts AS (SELECT source, token, count(*) AS n FROM tk GROUP BY 1, 2),
-        |vocab AS (
-        |  SELECT token, CAST(sum(n) AS BIGINT) AS gn FROM counts
-        |  GROUP BY token ORDER BY gn DESC, token ASC LIMIT 30),
-        |g AS (SELECT CAST(sum(gn) AS BIGINT) AS gt FROM vocab),
-        |sup AS (
-        |  SELECT c.source, c.token, c.n, v.gn
-        |  FROM counts c JOIN vocab v USING (token)),
-        |agg AS (
-        |  SELECT source, CAST(sum(n) AS BIGINT) AS n_tokens,
-        |    list(struct_pack(t := token, n := n, gn := gn) ORDER BY token) AS ts
-        |  FROM sup GROUP BY source)
-        |SELECT source, n_tokens,
-        |  round(ln(CAST(n_tokens AS DOUBLE))
-        |    - list_reduce(list_transform(ts,
-        |        e -> CAST(e.n AS DOUBLE) * ln(CAST(e.n AS DOUBLE))),
-        |        (a, b) -> a + b) / CAST(n_tokens AS DOUBLE), 10)
-        |    + 0.0::DOUBLE AS entropy,
-        |  round(list_reduce(list_transform(ts,
-        |      e -> (CAST(e.n AS DOUBLE) / CAST(n_tokens AS DOUBLE))
-        |        * ln((CAST(e.n AS DOUBLE) / CAST(n_tokens AS DOUBLE))
-        |             / (CAST(e.gn AS DOUBLE) / CAST(gt AS DOUBLE)))),
-        |      (a, b) -> a + b), 10) + 0.0::DOUBLE AS kl
-        |FROM agg, g ORDER BY source""".stripMargin,
-    // Replays Rolling.median: exact median over the trailing 9-row frame
-    // (odd count → the middle element, interpolation never fires).
-    "q_rolling_median" ->
-      s"""SELECT l_orderkey, l_linenumber,
-         |  CASE WHEN count(x) OVER wn = 9 THEN median(x) OVER wn END AS roll_median
-         |FROM (SELECT l_orderkey, l_linenumber, l_suppkey, l_shipdate,
-         |        CAST(l_quantity AS DOUBLE) AS x FROM lineitem) li
-         |WINDOW wn AS ($W ROWS BETWEEN 8 PRECEDING AND CURRENT ROW)
-         |ORDER BY l_orderkey, l_linenumber""".stripMargin,
-    // Replays Rolling.bollinger: the same mean ± k·sqrt(avg(x²) − mean²)
-    // tree over two window means (sums exact on the integer quantity, so
-    // segment-tree vs fresh-sum association cannot differ).
-    "q_bollinger" ->
-      s"""SELECT l_orderkey, l_linenumber,
-         |  CASE WHEN count(x) OVER wn = 20 THEN avg(x) OVER wn END AS bb_mid,
-         |  CASE WHEN count(x) OVER wn = 20 THEN (avg(x) OVER wn)
-         |    + 2.0::DOUBLE * sqrt((avg(x*x) OVER wn) - (avg(x) OVER wn) * (avg(x) OVER wn)) END AS bb_upper,
-         |  CASE WHEN count(x) OVER wn = 20 THEN (avg(x) OVER wn)
-         |    - 2.0::DOUBLE * sqrt((avg(x*x) OVER wn) - (avg(x) OVER wn) * (avg(x) OVER wn)) END AS bb_lower
-         |FROM (SELECT l_orderkey, l_linenumber, l_suppkey, l_shipdate,
-         |        CAST(l_quantity AS DOUBLE) AS x FROM lineitem) li
-         |WINDOW wn AS ($W ROWS BETWEEN 19 PRECEDING AND CURRENT ROW)
-         |ORDER BY l_orderkey, l_linenumber""".stripMargin,
-    "q_rsi" ->
-      (duckRsiSql("lineitem", "l_quantity", 14, "l_orderkey, l_linenumber") +
-        "\nORDER BY l_orderkey, l_linenumber"),
-    "q_macd" ->
-      s"""SELECT l_orderkey, l_linenumber,
-         |  ${duckEma("xs", 12)} - ${duckEma("xs", 26)} AS macd
-         |FROM (
-         |  SELECT l_orderkey, l_linenumber, list(l_quantity) OVER w AS xs
-         |  FROM lineitem WINDOW w AS $duckW
-         |)
-         |ORDER BY l_orderkey, l_linenumber""".stripMargin,
-    // Replays Macd + MacdSignal/MacdHist as ONE struct fold carrying
-    // (sig, ema12, ema26): the signal term recomputes the post-update
-    // EMAs from the accumulator exactly as the Spark updateExpressions
-    // do, so every intermediate double matches bit-for-bit. FIELD ORDER
-    // IS LOAD-BEARING: DuckDB's list_reduce overwrites accumulator
-    // fields in struct order, so each field expression may only read acc
-    // fields at its own position or later — sig (which needs the OLD
-    // e12/e26) must come first. (Measured: with sig last, acc.e12 inside
-    // the sig expression already held the new value.)
-    "q_macd_full" ->
-      s"""SELECT l_orderkey, l_linenumber,
-         |  st.e12 - st.e26 AS macd,
-         |  st.sig AS macd_sig,
-         |  (st.e12 - st.e26) - st.sig AS macd_hist
-         |FROM (
-         |  SELECT l_orderkey, l_linenumber,
-         |    list_reduce(list_transform(list(l_quantity) OVER w,
-         |      v -> struct_pack(sig := 0.0::DOUBLE, e12 := CAST(v AS DOUBLE), e26 := CAST(v AS DOUBLE))),
-         |      (acc, cur) -> struct_pack(
-         |        sig := (2.0::DOUBLE/10.0::DOUBLE)*(((2.0::DOUBLE/13.0::DOUBLE)*cur.e12 + (1.0::DOUBLE - 2.0::DOUBLE/13.0::DOUBLE)*acc.e12)
-         |               - ((2.0::DOUBLE/27.0::DOUBLE)*cur.e26 + (1.0::DOUBLE - 2.0::DOUBLE/27.0::DOUBLE)*acc.e26))
-         |             + (1.0::DOUBLE - 2.0::DOUBLE/10.0::DOUBLE)*acc.sig,
-         |        e12 := (2.0::DOUBLE/13.0::DOUBLE)*cur.e12 + (1.0::DOUBLE - 2.0::DOUBLE/13.0::DOUBLE)*acc.e12,
-         |        e26 := (2.0::DOUBLE/27.0::DOUBLE)*cur.e26 + (1.0::DOUBLE - 2.0::DOUBLE/27.0::DOUBLE)*acc.e26)) AS st
-         |  FROM lineitem WINDOW w AS $duckW
-         |)
-         |ORDER BY l_orderkey, l_linenumber""".stripMargin,
-    "q_indicators_combined" ->
-      // single scan chain — (l_orderkey, l_linenumber) is not unique in the
-      // testdata, so a self-join would fan out
-      s"""WITH base AS (
-         |  SELECT l_orderkey, l_linenumber, l_quantity,
-         |    CASE WHEN count(l_quantity) OVER wn = 5 THEN avg(l_quantity) OVER wn END AS sma_5,
-         |    list(l_quantity) OVER w AS xs,
-         |    list(struct_pack(p := l_quantity, g := 0.0::DOUBLE, l := 0.0::DOUBLE, c := 0.0::DOUBLE)) OVER w AS rs
-         |  FROM lineitem
-         |  WINDOW w AS $duckW,
-         |    wn AS ($W ROWS BETWEEN 4 PRECEDING AND CURRENT ROW)
-         |), red AS (
-         |  SELECT l_orderkey, l_linenumber, l_quantity, sma_5,
-         |    ${duckEma("xs", 12)} AS ema_12,
-         |    ${duckEma("xs", 12)} - ${duckEma("xs", 26)} AS macd,
-         |    ${rsiFold("rs", 14)} AS s
-         |  FROM base
-         |)
-         |SELECT l_orderkey, l_linenumber, l_quantity, sma_5, ema_12,
-         |  ${rsiEval("s", 14)} AS rsi_14, macd
-         |FROM red
-         |ORDER BY l_orderkey, l_linenumber""".stripMargin,
-    "q_indicators_nulls" -> {
-      // Frozen-on-NULL state == the same fold over the null-FILTERED
-      // subsequence, so the oracle filters first and reuses the exact fold
-      // shapes already proven at full scale by q_ema/q_rsi. (A null-aware
-      // lambda with extra CASE branches hit a DuckDB 1.0 list_reduce
-      // mis-evaluation that appeared only on full-size vectors.)
-      def emaF(alpha: String) =
-        s"CASE WHEN len(nn) > 0 THEN list_reduce(nn, (acc, x) -> ($alpha)*x + (1.0::DOUBLE - ($alpha))*acc) END"
-      s"""WITH src AS (
-         |  SELECT l_orderkey, l_linenumber, nullif(l_quantity, 17.0) AS xn,
-         |    list_filter(list(nullif(l_quantity, 17.0)) OVER w, v -> v IS NOT NULL) AS nn
-         |  FROM lineitem
-         |  WINDOW w AS $duckW
-         |), red AS (
-         |  SELECT l_orderkey, l_linenumber, xn, len(nn) AS n_nn,
-         |    ${emaF("2.0::DOUBLE/6.0::DOUBLE")} AS ema_s,
-         |    ${emaF("2.0::DOUBLE/13.0::DOUBLE")} AS m12,
-         |    ${emaF("2.0::DOUBLE/27.0::DOUBLE")} AS m26,
-         |    CASE WHEN len(nn) >= 4
-         |      THEN list_reduce(nn[len(nn)-3:], (a, b) -> a + b) / 4.0::DOUBLE END AS sma_s,
-         |    CASE WHEN len(nn) > 0 THEN ${rsiFold("list_transform(nn, v -> struct_pack(p := v, g := 0.0::DOUBLE, l := 0.0::DOUBLE, c := 0.0::DOUBLE))", 5)} END AS s
-         |  FROM src
-         |)
-         |SELECT l_orderkey, l_linenumber,
-         |  CASE WHEN xn IS NULL THEN NULL ELSE sma_s END AS sma_n,
-         |  CASE WHEN xn IS NULL THEN NULL ELSE ema_s END AS ema_n,
-         |  CASE WHEN xn IS NULL OR s IS NULL THEN NULL ELSE ${rsiEval("s", 5)} END AS rsi_n,
-         |  CASE WHEN xn IS NULL OR m12 IS NULL THEN NULL ELSE m12 - m26 END AS macd_n
-         |FROM red ORDER BY l_orderkey, l_linenumber""".stripMargin
-    },
-    "q_rsi_signals" ->
-      s"""WITH r AS (
-         |${duckRsiSql("lineitem", "l_extendedprice", 5,
-            "l_suppkey, l_orderkey, l_linenumber",
-            extraFirst = ", l_extendedprice AS price", extraRest = ", price")}
-         |)
-         |SELECT l_suppkey, l_orderkey, l_linenumber, price,
-         |  CASE WHEN rsi_5 < 30.0 THEN 'BUY' ELSE 'SELL' END AS signal_type,
-         |  CASE WHEN rsi_5 < 30.0 THEN (30.0 - rsi_5) / 30.0
-         |       ELSE (rsi_5 - 70.0) / 30.0 END AS confidence
-         |FROM r
-         |WHERE rsi_5 IS NOT NULL AND (rsi_5 < 30.0 OR rsi_5 > 70.0)
-         |ORDER BY l_suppkey, l_orderkey, l_linenumber""".stripMargin,
-    "q_ma_crossover" ->
-      s"""WITH ma AS (
-         |  SELECT l_suppkey, l_orderkey, l_linenumber, l_shipdate,
-         |    l_extendedprice AS price,
-         |    ${duckSma("l_extendedprice", 20, "s20")} AS sma_20,
-         |    ${duckSma("l_extendedprice", 50, "s50")} AS sma_50
-         |  FROM lineitem
-         |  WINDOW s20_w AS ($W ROWS BETWEEN 19 PRECEDING AND CURRENT ROW),
-         |    s50_w AS ($W ROWS BETWEEN 49 PRECEDING AND CURRENT ROW)
-         |), lagged AS (
-         |  SELECT *,
-         |    LAG(sma_20, 1) OVER w2 AS prev_sma_20,
-         |    LAG(sma_50, 1) OVER w2 AS prev_sma_50
-         |  FROM ma WINDOW w2 AS ($W)
-         |)
-         |SELECT l_suppkey, l_orderkey, l_linenumber, price, sma_20, sma_50,
-         |  CASE WHEN sma_20 > sma_50 THEN 'BUY' ELSE 'SELL' END AS signal_type,
-         |  least(abs(sma_20 - sma_50) / price, 1.0) AS confidence
-         |FROM lagged
-         |WHERE sma_20 IS NOT NULL AND sma_50 IS NOT NULL
-         |  AND prev_sma_20 IS NOT NULL AND prev_sma_50 IS NOT NULL
-         |  AND ((prev_sma_20 <= prev_sma_50 AND sma_20 > sma_50)
-         |    OR (prev_sma_20 >= prev_sma_50 AND sma_20 < sma_50))
-         |ORDER BY l_suppkey, l_orderkey, l_linenumber""".stripMargin,
-    "q_validate_values" ->
-      """SELECT count(*) AS total_rows,
-        |  count(CASE WHEN l_quantity <= 0 THEN 1 END) AS nonpositive_quantity,
-        |  count(CASE WHEN l_extendedprice <= 0 THEN 1 END) AS nonpositive_price,
-        |  count(CASE WHEN l_discount < 0 OR l_discount > 1 THEN 1 END) AS bad_discount,
-        |  count(CASE WHEN l_tax < 0 THEN 1 END) AS negative_tax
-        |FROM lineitem""".stripMargin,
-    "q_validate_gaps" ->
-      """WITH g AS (
-        |  SELECT o_orderdate,
-        |    LAG(o_orderdate) OVER (ORDER BY o_orderdate, o_orderkey) AS prev_date
-        |  FROM orders
-        |)
-        |SELECT count(*) AS gap_count
-        |FROM g
-        |WHERE prev_date IS NOT NULL
-        |  AND date_diff('second', prev_date, o_orderdate) > 86400""".stripMargin,
-    "q_validate_weekend" ->
-      // DuckDB: dayofweek 0=Sunday..6=Saturday
-      """SELECT count(*) AS weekend_rows
-        |FROM orders WHERE dayofweek(o_orderdate) IN (0, 6)""".stripMargin,
-    "q1_agg" ->
-      """SELECT l_returnflag, sum(l_quantity) AS sum_qty
-        |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin,
-    "q_pricing_summary" ->
-      """SELECT l_returnflag, l_linestatus,
-        |  sum(l_quantity) AS sum_qty,
-        |  round(sum(l_extendedprice), 2) AS sum_base_price,
-        |  round(sum(l_extendedprice * (1.0 - l_discount)), 2) AS sum_disc_price,
-        |  round(avg(l_quantity), 6) AS avg_qty,
-        |  round(avg(l_extendedprice), 6) AS avg_price,
-        |  count(*) AS count_order
-        |FROM lineitem
-        |GROUP BY l_returnflag, l_linestatus
-        |ORDER BY l_returnflag, l_linestatus""".stripMargin,
-    "q_topk_orders" ->
-      """SELECT l_orderkey, sum(l_quantity) AS total_qty
-        |FROM lineitem GROUP BY l_orderkey
-        |ORDER BY total_qty DESC, l_orderkey LIMIT 10""".stripMargin,
-    "q_topk_per_group" ->
-      """SELECT o_orderstatus, o_orderkey, o_totalprice, CAST(rn AS INT) AS rn FROM (
-        |  SELECT o_orderstatus, o_orderkey, o_totalprice,
-        |    row_number() OVER (PARTITION BY o_orderstatus
-        |                       ORDER BY o_totalprice DESC, o_orderkey) AS rn
-        |  FROM orders) t
-        |WHERE rn <= 3 ORDER BY o_orderstatus, rn""".stripMargin,
-    // day number = DATE − epoch (integer days, naive/UTC on both engines);
-    // the windowed sum runs over exact BIGINT cents (HUGEINT cast out)
-    "q_window_range" ->
-      """SELECT o_custkey, o_orderkey,
-        |  count(*) OVER w AS cnt_30d,
-        |  CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) OVER w AS BIGINT) AS spend_30d_cents
-        |FROM orders
-        |WINDOW w AS (PARTITION BY o_custkey
-        |             ORDER BY (CAST(o_orderdate AS DATE) - DATE '1970-01-01')
-        |             RANGE BETWEEN 30 PRECEDING AND CURRENT ROW)
-        |ORDER BY o_custkey, o_orderkey""".stripMargin,
-    "q_full_outer" ->
-      """SELECT coalesce(b.custkey, u.custkey) AS custkey,
-        |       b.n_building, u.n_urgent
-        |FROM (SELECT c_custkey AS custkey, count(*) AS n_building
-        |      FROM customer WHERE c_mktsegment = 'BUILDING' GROUP BY c_custkey) b
-        |FULL OUTER JOIN
-        |     (SELECT o_custkey AS custkey, count(*) AS n_urgent
-        |      FROM orders WHERE o_orderpriority = '1-URGENT' GROUP BY o_custkey) u
-        |ON b.custkey = u.custkey
-        |ORDER BY custkey""".stripMargin,
-    "q_window_rank" ->
-      """SELECT o_custkey, o_orderkey,
-        |  CAST(row_number() OVER w AS INT) AS rn,
-        |  CAST(rank() OVER w AS INT) AS rnk,
-        |  CAST(dense_rank() OVER w AS INT) AS drnk,
-        |  percent_rank() OVER w AS prnk,
-        |  cume_dist() OVER w AS cdist,
-        |  CAST(ntile(4) OVER w AS INT) AS quartile
-        |FROM orders
-        |WHERE o_custkey < 100
-        |WINDOW w AS (PARTITION BY o_custkey ORDER BY o_totalprice, o_orderkey)
-        |ORDER BY o_custkey, rn""".stripMargin,
-    "q_rollup" ->
-      """SELECT l_returnflag, l_linestatus,
-        |  CAST(grouping(l_returnflag) AS INT) AS g_flag,
-        |  CAST(grouping(l_linestatus) AS INT) AS g_status,
-        |  count(*) AS n, sum(l_quantity) AS sum_qty
-        |FROM lineitem
-        |GROUP BY ROLLUP(l_returnflag, l_linestatus)
-        |ORDER BY g_flag, g_status, coalesce(l_returnflag, ''), coalesce(l_linestatus, '')""".stripMargin,
-    "q_grouping_sets" ->
-      """SELECT o_orderstatus, o_orderpriority,
-        |  CAST(grouping(o_orderstatus) AS INT) AS g_status,
-        |  CAST(grouping(o_orderpriority) AS INT) AS g_prio,
-        |  count(*) AS n, round(sum(o_totalprice), 2) AS total
-        |FROM orders
-        |GROUP BY GROUPING SETS ((o_orderstatus, o_orderpriority),
-        |  (o_orderstatus), (o_orderpriority), ())
-        |ORDER BY g_status, g_prio,
-        |  coalesce(o_orderstatus, ''), coalesce(o_orderpriority, '')""".stripMargin,
-    "q_pivot" ->
-      """SELECT o_orderstatus,
-        |  count(CASE WHEN o_orderpriority = '1-URGENT' THEN 1 END) AS "1-URGENT",
-        |  count(CASE WHEN o_orderpriority = '2-HIGH' THEN 1 END) AS "2-HIGH",
-        |  count(CASE WHEN o_orderpriority = '3-MEDIUM' THEN 1 END) AS "3-MEDIUM",
-        |  count(CASE WHEN o_orderpriority = '4-NOT SPECIFIED' THEN 1 END) AS "4-NOT SPECIFIED",
-        |  count(CASE WHEN o_orderpriority = '5-LOW' THEN 1 END) AS "5-LOW"
-        |FROM orders GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin,
-    "q_setops" ->
-      """SELECT 'both' AS tag, custkey FROM (
-        |  SELECT c_custkey AS custkey FROM customer WHERE c_mktsegment = 'BUILDING'
-        |  INTERSECT
-        |  SELECT o_custkey FROM orders WHERE o_orderpriority = '1-URGENT') t1
-        |UNION ALL
-        |SELECT 'cust_only' AS tag, custkey FROM (
-        |  SELECT c_custkey AS custkey FROM customer WHERE c_mktsegment = 'BUILDING'
-        |  EXCEPT
-        |  SELECT o_custkey FROM orders WHERE o_orderpriority = '1-URGENT') t2
-        |ORDER BY tag, custkey""".stripMargin,
-    "q_quantiles" ->
-      """SELECT l_returnflag,
-        |  quantile_cont(l_quantity, 0.25) AS q25,
-        |  quantile_cont(l_quantity, 0.5) AS q50,
-        |  quantile_cont(l_quantity, 0.75) AS q75,
-        |  quantile_cont(l_extendedprice, 0.5) AS price_median
-        |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin,
-    "q_revenue_by_nation" ->
-      """SELECT n_name, round(sum(o_totalprice), 2) AS revenue, count(*) AS order_count
-        |FROM orders
-        |JOIN customer ON o_custkey = c_custkey
-        |JOIN nation ON c_nationkey = n_nationkey
-        |GROUP BY n_name ORDER BY n_name""".stripMargin,
-    "q_customers_without_orders" ->
-      """SELECT c_mktsegment, count(*) AS n_customers
-        |FROM customer
-        |WHERE c_custkey NOT IN (SELECT o_custkey FROM orders WHERE o_orderpriority = '1-URGENT')
-        |GROUP BY c_mktsegment ORDER BY c_mktsegment""".stripMargin,
-    "q_window_builtin" ->
-      s"""SELECT l_orderkey, l_linenumber,
-         |  row_number() OVER w AS rn,
-         |  LAG(l_quantity) OVER w AS prev_qty,
-         |  sum(l_quantity) OVER ($W ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS running_qty
-         |FROM lineitem WINDOW w AS ($W)
-         |ORDER BY l_orderkey, l_linenumber""".stripMargin,
-    "q_distinct_agg" ->
-      """SELECT l_returnflag,
-        |  count(DISTINCT l_partkey) AS distinct_parts,
-        |  count(DISTINCT l_suppkey) AS distinct_suppliers
-        |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin,
-    // Bloom prefilter is exact-composed (one-sided error + exact join), so
-    // the oracle is the PLAIN semi/anti join — any filter bug that drops or
-    // duplicates a row breaks the hash.
-    "q_bloom_semijoin" ->
-      """SELECT o_orderkey, o_custkey, o_totalprice
-        |FROM orders
-        |WHERE o_custkey IN (SELECT c_custkey FROM customer WHERE c_nationkey = 5)
-        |ORDER BY o_orderkey""".stripMargin,
-    "q_bloom_anti" ->
-      """SELECT o.o_orderkey, o.o_custkey
-        |FROM orders o
-        |WHERE NOT EXISTS (
-        |  SELECT 1 FROM customer c
-        |  WHERE c.c_nationkey = 5 AND c.c_custkey = o.o_custkey)
-        |ORDER BY o.o_orderkey""".stripMargin
-  ) ++ llmOracles
+  /** Gate name → equivalent ANSI SQL runnable by DuckDB on the same
+    * parquet files. */
+  lazy val oracleSql: Map[String, String] =
+    Gates.all.map(g => g.name -> g.oracleSql).toMap
 }

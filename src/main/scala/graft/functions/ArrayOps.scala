@@ -40,9 +40,10 @@ object SlidePushOps {
     s
   }
 
-  /** Functional element write at a 0-based index. */
+  /** Functional element write at a 0-based index. `toDoubleArray` already
+    * returns a fresh copy for every `ArrayData`, so `buf` is never written. */
   def setAt(buf: ArrayData, idx: Int, v: Double): ArrayData = {
-    val out = buf.toDoubleArray().clone()
+    val out = buf.toDoubleArray()
     out(idx) = v
     UnsafeArrayData.fromPrimitiveArray(out)
   }
@@ -73,8 +74,9 @@ case class SlidePush(left: Expression, right: Expression, n: Int)
 }
 
 /** `SetAt(buf, idx, v)` — functional single-element update of a
-  * non-nullable double array (0-based index): one allocation, one
-  * arraycopy. The seasonal-state write behind [[HoltWinters]]. */
+  * non-nullable double array (0-based index): two copies per row, the
+  * buffer into a fresh `double[]` and that array into a new
+  * `UnsafeArrayData`. The seasonal-state write behind [[HoltWinters]]. */
 case class SetAt(first: Expression, second: Expression, third: Expression)
     extends TernaryExpression {
   override def prettyName: String = "set_at"

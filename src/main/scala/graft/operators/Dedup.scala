@@ -140,7 +140,7 @@ object Dedup {
     * path when duplicate clusters are huge. [[minhashNearDups]]'s contract
     * is "return the near-dup PAIRS", and on a corpus where every document
     * has m near-identical copies the true pair mass is C(m,2) per cluster
-    * — quadratic in m, measured in `graft.PairMassProbe` (the operator's
+    * — quadratic in m, measured in `pairmass.json`, SCALE.md (the operator's
     * time tracks its output at ~30 s per million pairs; the output itself
     * is the cost). When the goal is CLUSTERS (dedup keep/drop decisions),
     * all-pairs edges are overkill: within each LSH bucket a STAR to the
@@ -743,7 +743,7 @@ object Dedup {
     * offsets, the dominant mass in web corpora — are caught with the
     * `minLen + stride − 1` length floor; an arbitrary-phase shared
     * substring is caught with probability ~1/stride at any length
-    * (measured: `substringfloor.json` via [[graft.SubstringFloorProbe]]).
+    * (measured: `substringfloor.json`, SCALE.md §Round-13).
     * For guaranteed phase-independent detection use stride 1 here, or
     * [[decontaminationCut]], whose PROBE side is exhaustive so only one
     * side's phase matters. With `hashShuffle` the join/group key is

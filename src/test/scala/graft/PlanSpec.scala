@@ -387,8 +387,8 @@ class PlanSpec extends AnyFunSuite {
 
   /** A duplicated window expression is an acceptable residual only when
     * each duplicate evaluation is O(1) per row — the frame-class
-    * allowlist lives in [[tools.WindowDups.cheapDup]] (shared with the
-    * standalone sweep tool); everything else is the q_logrank
+    * allowlist lives in [[tools.WindowDups.cheapDup]] (this test runs its
+    * audit over every gate); everything else is the q_logrank
     * 36-aggregate pathology round 10 staged away. */
   test("NO gate query re-folds a window frame more than once per Window node " +
       "(suite-wide; O(1)-per-row duplicates allowlisted by frame class)") {

@@ -18,7 +18,7 @@ class OperatorsSpec extends AnyFunSuite {
 
   test("starNearDupClusters: replica flood clusters identically to the all-pairs path with O(members) edges") {
     // two "originals", each flooded with near-identical replicas (the
-    // PairMassProbe scenario) plus two singletons that must stay out
+    // pairmass.json scenario) plus two singletons that must stay out
     val docsA = (0 to 5).map(i => (10L + i,
       s"alpha quick brown fox jumps over the lazy dog alpha replica tag $i"))
     val docsB = (0 to 5).map(i => (20L + i,

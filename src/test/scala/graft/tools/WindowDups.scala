@@ -5,9 +5,9 @@ import org.apache.spark.sql.catalyst.expressions.{Alias, Expression,
   WindowExpression}
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Window => LWindow}
 
-/** Shared window-duplicate audit used by the suite-wide PlanSpec lock and
-  * the [[WindowDupSweep]] tool: finds window expressions duplicated
-  * (canonicalized) within one logical Window node, and classifies which
+/** Window-duplicate audit behind PlanSpec's suite-wide lock: finds window
+  * expressions duplicated (canonicalized) within one logical Window node,
+  * and classifies which
   * duplicates are O(1)-per-row residuals (allowlisted) vs per-row frame
   * re-folds (the q_logrank pathology — see SCALE.md Global choices). */
 object WindowDups {
