@@ -1,20 +1,15 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.DataFrame
 
 /** Benchmark main (driver contract): times every SparkEntry query on
   * SPARK_GRAFT_SF_DIR and prints ONE JSON line.
   *
-  * Each query is forced through the `noop` sink so every output column is
-  * actually evaluated — `.count()` would let Catalyst prune the projected
-  * window/aggregate expressions and time an empty scan instead.
+  * Each query is forced through the `noop` sink ([[Harness.force]]).
   *
   * Isolation protocol (round-1 verdict: retained cache blocks from one query
   * inflated later queries' times up to ~10× through GC pressure):
-  *  - [[sweep]] runs after EVERY measurement — it unpersists operator-internal
-  *    caches (CacheScope), any remaining persistent RDDs (localCheckpoint
-  *    blocks from iterative operators), clears the SQL cache, and forces a GC
-  *    so reclaimed blocks are actually gone before the next timer starts;
+  *  - [[Harness.sweep]] runs after EVERY measurement;
   *  - each query runs twice and the MINIMUM is reported (the reference's
   *    baseline numbers are criterion steady-state medians, so per-query
   *    codegen/first-touch cost is excluded the same way) — with a sweep
@@ -27,37 +22,23 @@ import org.apache.spark.sql.SparkSession
   *    single-burst hit while remaining an honest steady-state sample.
   */
 object Bench {
+  /** Trimmed output of `git args`; None when git is absent or fails. */
+  private def git(args: String*): Option[String] =
+    try {
+      val p = new ProcessBuilder(("git" +: args): _*)
+        .redirectErrorStream(true).start()
+      val out = new String(p.getInputStream.readAllBytes()).trim
+      if (p.waitFor() == 0) Some(out) else None
+    } catch { case _: Throwable => None }
+
+  private def headSha: Option[String] =
+    git("rev-parse", "--short", "HEAD").filter(_.matches("[0-9a-f]+"))
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // Task-memory page size is derived from execution-pool/cores and caps
-      // at 64 MB: on a large-heap driver every hash map / sorter then
-      // allocates-and-zeroes 64 MB pages for KB-sized sf0.1 partitions,
-      // which dominated multi-consumer queries (q_dedup_components measured
-      // 17.4s at -Xmx90g vs 3.9s with right-sized pages; identical plans).
-      // 4 MB matches what the formula yields for a modest heap. A real
-      // cluster run at 100 TB keeps the default — pages amortize over
-      // multi-MB partitions there.
-      .config("spark.buffer.pageSize", "4m")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-
-    def force(df: org.apache.spark.sql.DataFrame): Unit =
-      df.write.format("noop").mode("overwrite").save()
-
-    def sweep(): Unit = {
-      CacheScope.release(blocking = true)
-      spark.catalog.clearCache()
-      // localCheckpoint blocks (iterative operators) are RDD-level caches the
-      // CacheManager doesn't know about
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
-      System.gc()
-    }
+    val spark = Harness.session(defaultCpus = 32)
+    import Harness.{force, seconds}
+    def sweep(): Unit = Harness.sweep(spark)
 
     // Per-query shuffle-write bytes (async task-metric listener; drained
     // before each read). Wall time alone can't catch a shuffle regression
@@ -78,38 +59,28 @@ object Bench {
     force(SparkEntry.queries("q_indicators_combined")(spark, sfDir))
     sweep()
 
-    // Session calibration: a fixed cheap query, min-of-5, run at session
+    // Session calibration: min-of-5 of a fixed cheap frame, run at session
     // START and END. Round-10 showed a uniform +14% ambient drift the
     // suite total could not separate from plan movement; the calibration
     // pair lets a reader normalize per-query ratios by host state.
-    def calibrate(): Double = {
-      val runs = (1 to 5).map { _ =>
-        val t0 = System.nanoTime()
-        force(SparkEntry.queries("q_sma")(spark, sfDir))
-        (System.nanoTime() - t0) / 1e9
-      }
+    def calibrate(frame: => DataFrame): Double = {
+      val runs = (1 to 5).map(_ => seconds(force(frame)))
       sweep()
       runs.min
     }
-    val calibStart = calibrate()
-
+    def calibrateSma(): Double =
+      calibrate(SparkEntry.queries("q_sma")(spark, sfDir))
     // Frozen ambient probe (r15 verdict "What's wrong #5"): q_sma is both
     // the calibration query and a potential optimization target, so a
     // round that speeds q_sma up silently rescales every normalized
     // ratio. This probe times a bare parquet scan through the noop sink —
     // a shape no query optimization can touch — and is recorded as
     // ADDITIONAL keys (cal_scan_start_sec/cal_scan_end_sec) next to the
-    // existing q_sma calibration, which stays the primary basis so
-    // cross-round diffs against older artifacts remain comparable.
-    def calibrateScan(): Double = {
-      val runs = (1 to 5).map { _ =>
-        val t0 = System.nanoTime()
-        force(spark.read.parquet(s"$sfDir/lineitem.parquet"))
-        (System.nanoTime() - t0) / 1e9
-      }
-      sweep()
-      runs.min
-    }
+    // existing q_sma calibration; bench_diff normalizes by it when both
+    // artifacts carry it.
+    def calibrateScan(): Double =
+      calibrate(spark.read.parquet(s"$sfDir/lineitem.parquet"))
+    val calibStart = calibrateSma()
     val calScanStart = calibrateScan()
 
     // optional comma-separated filter for local bisection (driver sets
@@ -131,13 +102,6 @@ object Bench {
       // accept one only if its git_sha stamp matches the current HEAD
       // (modulo a -dirty suffix), so a stale artifact from an old build
       // can never silently become the suspect-detection baseline.
-      def headSha: Option[String] =
-        try {
-          val p = new ProcessBuilder("git", "rev-parse", "--short", "HEAD")
-            .redirectErrorStream(true).start()
-          val out = new String(p.getInputStream.readAllBytes()).trim
-          if (p.waitFor() == 0 && out.matches("[0-9a-f]+")) Some(out) else None
-        } catch { case _: Throwable => None }
       def shaMatchesHead(p: String): Boolean = {
         val stamped =
           try """"git_sha":"([0-9a-f]+)(?:-dirty)?"""".r
@@ -212,11 +176,7 @@ object Bench {
     val results = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) => only.isEmpty || only(n) }
       .map { case (name, fn) =>
-      def once(): Double = {
-        val t0 = System.nanoTime()
-        force(fn(spark, sfDir))
-        (System.nanoTime() - t0) / 1e9
-      }
+      def once(): Double = seconds(force(fn(spark, sfDir)))
       // (sec, shuffleBytes): time is min-of-two; shuffle bytes come from
       // the SECOND run (steady state — byte counts are deterministic per
       // plan, so one clean sample suffices). The listener-bus drain is
@@ -237,8 +197,8 @@ object Bench {
       (name, sec.map(_._1).getOrElse(-1.0), sec.map(_._2).getOrElse(-1L))
     }
 
-    val sizeSweep = SizeSweep.run(spark, sfDir, sweep _)
-    val calibEnd = calibrate()
+    val sizeSweep = SizeSweep.run(spark, sfDir)
+    val calibEnd = calibrateSma()
     val calScanEnd = calibrateScan()
     val calibJson =
       f""""calibration":{"query":"q_sma","runs":5,"start_sec":$calibStart%.3f,"end_sec":$calibEnd%.3f},"cal_scan_start_sec":$calScanStart%.3f,"cal_scan_end_sec":$calScanEnd%.3f"""
@@ -286,9 +246,7 @@ object Bench {
         s"${slowGates.size} slow/>3s): ${rerunNames.mkString(",")}")
     val rerunSecs: Map[String, Double] = rerunNames.map { n =>
       val t = (1 to 3).map { _ =>
-        val t0 = System.nanoTime()
-        force(SparkEntry.queries(n)(spark, sfDir))
-        val dt = (System.nanoTime() - t0) / 1e9
+        val dt = seconds(force(SparkEntry.queries(n)(spark, sfDir)))
         sweep(); dt
       }.min
       n -> t
@@ -360,22 +318,10 @@ object Bench {
     // BEFORE the commit they ship in exists, so the stamp records the
     // parent commit — a '-dirty' suffix marks it as only the BASE of the
     // build, never mistakable for a clean-build sha.
-    val gitSha: String =
-      try {
-        val p = new ProcessBuilder("git", "rev-parse", "--short", "HEAD")
-          .redirectErrorStream(true).start()
-        val out = new String(p.getInputStream.readAllBytes()).trim
-        val sha = if (p.waitFor() == 0 && out.matches("[0-9a-f]+")) out
-                  else "unknown"
-        val dirty =
-          try {
-            val q = new ProcessBuilder("git", "status", "--porcelain")
-              .redirectErrorStream(true).start()
-            val st = new String(q.getInputStream.readAllBytes()).trim
-            q.waitFor() == 0 && st.nonEmpty
-          } catch { case _: Throwable => false }
-        if (sha != "unknown" && dirty) sha + "-dirty" else sha
-      } catch { case _: Throwable => "unknown" }
+    val gitSha: String = headSha.fold("unknown") { sha =>
+      if (git("status", "--porcelain").exists(_.nonEmpty)) sha + "-dirty"
+      else sha
+    }
     val fullJson =
       f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":$qsFull,"rerun_sec":$rerunJson,"shuffle_mb":$shuffleTop,$calibJson,"rows_per_sec":$sizeSweep,"sf":"$sfDir","git_sha":"$gitSha"$medianStamp}"""
     // defaults write UNDER target/ (r13 verdict #6): the committed

@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.scheduler._
-import org.apache.spark.sql.SparkSession
 
 /** r16 measurement probe (guide §1 / §7.1 in spirit, headless): runs one
   * query end-to-end and prints a per-JOB breakdown — submission order,
@@ -15,16 +14,9 @@ import org.apache.spark.sql.SparkSession
 object JobProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val names = sys.env.getOrElse("GRAFT_JOB_PROBE", "q_hits").split(",").toSeq
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.buffer.pageSize", "4m")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Harness.session(defaultCpus = 32)
+    import Harness.{force, seconds}
 
     @volatile var stageTasks = Map.empty[Int, (Int, Long)] // stageId -> (tasks, shuffleWriteBytes)
     val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
@@ -47,32 +39,22 @@ object JobProbe {
       }
     })
 
-    def force(df: org.apache.spark.sql.DataFrame): Unit =
-      df.write.format("noop").mode("overwrite").save()
-    def sweep(): Unit = {
-      CacheScope.release(blocking = true)
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
-      System.gc()
-    }
-
     force(SparkEntry.queries("q_indicators_combined")(spark, sfDir)) // warm-up
-    sweep()
+    Harness.sweep(spark)
     names.foreach { name =>
       (1 to 2).foreach { round =>
         jobs.clear()
-        val t0 = System.nanoTime()
-        val df = SparkEntry.queries(name)(spark, sfDir)
-        val tPlan = (System.nanoTime() - t0) / 1e9
-        val t1 = System.nanoTime()
-        force(df)
-        val tRun = (System.nanoTime() - t1) / 1e9
+        // lazy: the first timer covers construction, eager operator jobs
+        // included; the second covers the action alone
+        lazy val df = SparkEntry.queries(name)(spark, sfDir)
+        val tPlan = seconds(df)
+        val tRun = seconds(force(df))
         // drain the listener bus so every job row is in
         org.apache.spark.graft.ListenerDrain.drain(spark.sparkContext)
         println(f"""JOBPROBE {"query":"$name","round":$round,"construct_sec":$tPlan%.3f,"action_sec":$tRun%.3f,"n_jobs":${jobs.size}}""")
         import scala.jdk.CollectionConverters._
         jobs.asScala.foreach(j => println(s"JOBPROBE_JOB $name $j"))
-        sweep()
+        Harness.sweep(spark)
       }
     }
     spark.stop()

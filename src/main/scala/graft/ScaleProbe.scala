@@ -3,19 +3,16 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Empirical scale probe: measures how the most expensive gate queries
-  * actually scale when the fact tables grow 10× — turning SCALE.md's
-  * "survives 100×" design claims into measured exponents.
+/** Replica corpora for [[ScaleFit]]: a S× corpus is SYNTHESIZED from a
+  * base scale factor under `target/scaledata/x<S>` (never touching the
+  * read-only testdata): each fact table is unioned S times with
+  * replica-shifted keys, and every foreign-key domain is shifted by the
+  * SAME per-domain offset on both sides, so joins stay referentially
+  * intact:
   *
-  * A 10× corpus ("sf1-equivalent") is SYNTHESIZED from sf0.1 under
-  * `target/scaledata/x10` (never touching the read-only testdata): each
-  * fact table is unioned S times with replica-shifted keys, and every
-  * foreign-key domain is shifted by the SAME per-domain offset on both
-  * sides, so joins stay referentially intact:
-  *
-  *  - `orderkey` (orders ⋈ lineitem) shifts together — 10× orders;
+  *  - `orderkey` (orders ⋈ lineitem) shifts together — S× orders;
   *  - `custkey` (customer ⋈ orders) and `suppkey` (supplier ⋈ lineitem)
-  *    shift together — 10× KEY CARDINALITY, the honest growth model for
+  *    shift together — S× KEY CARDINALITY, the honest growth model for
   *    per-key windows (a 10× corpus has more symbols, not 10×-longer
   *    history per symbol) and for the trade graph (10× nodes AND edges,
   *    not a 10×-denser clique);
@@ -26,122 +23,8 @@ import org.apache.spark.sql.functions._
   *    which would charge the data's shape to the plan);
   *  - `part`, `region`, `nation` copy unchanged (partkey/nationkey stay
   *    in-domain — dimension tables don't grow 10× in a 10× corpus).
-  *
-  * Timing mirrors [[Bench]] exactly (noop-forced, min-of-two with a full
-  * cache sweep between runs) at BOTH scales; the per-query exponent is
-  * log10(t_10x / t_1x), so 1.0 = linear, ≤0.3 ≈ flat (fixed overhead
-  * dominates), >1.2 = superlinear (named and investigated in SCALE.md).
   */
 object ScaleProbe {
-
-  /** Replica factor for the scaled corpus. Default 10; override with
-    * GRAFT_PROBE_SCALE (e.g. 30 for the second-decade spot-probes) —
-    * exponents are computed as log_Scale(t_big / t_1x), so 0.5 means the
-    * same thing at any scale. Non-default scales write to
-    * scaleprobe<S>.json so they never clobber the canonical 10× rows. */
-  val Scale: Int = sys.env.get("GRAFT_PROBE_SCALE").map(_.toInt).getOrElse(10)
-
-  /** The slowest gate queries per BENCH_r06 (bench_full.json), the ones
-    * whose scaling behavior is worth a measured curve. */
-  val Probes: Seq[String] = Seq(
-    "q_pagerank", "q_media_decode", "q_hist_var", "q_densify",
-    "q_winsorize", "q_realized_vol", "q_assoc_rules", "q_cci",
-    "q_rolling_corr", "q_embed_ivf_pq", "q_tfidf_pairs",
-    "q_dedup_components", "q_dedup_minhash", "q_text_stats",
-    // round-8 additions: the SNM candidate generator (blocked rank
-    // windows + pair verify), the privacy screen (agg + key-reusing
-    // join), the 3-recurrence MACD window pass, and an events-family
-    // probe (keyed session windows over the unit-normalized stream)
-    "q_sorted_neighborhood", "q_k_anonymity", "q_macd_full",
-    "q_sessionize",
-    // late-round-8: the double-rank-sort Spearman and the lead+agg TWAP
-    "q_spearman", "q_twap",
-    // round-8 session 2: the two new native recurrences over 10× MORE
-    // keys (per-key state ⇒ should track the keyed-window family), the
-    // broadcast-index market beta, the pooled-rank Mann–Whitney, and the
-    // K²-by-construction pair matrix (the one honest superlinear case —
-    // 10× keys ⇒ 100× pairs; SCALE.md documents bounding K)
-    "q_supertrend", "q_psar", "q_market_beta", "q_mann_whitney",
-    "q_corr_matrix",
-    // round-8 session 3: the two new native recurrences (var_ema under
-    // KAMA, runprod under NVI/PVI) over 10× keys, the triangle-kernel
-    // explode (LCC), the per-round double-agg HITS, and the broadcast-
-    // panel kNN label probe (panel fixed ⇒ scales with the corpus scan)
-    "q_kama", "q_volume_index", "q_local_clustering", "q_hits",
-    "q_knn_label_consistency",
-    // session-3 continued: the grid recurrence, the episode
-    // gaps-and-islands, the two-SMA + runprod backtest chain, the
-    // bounded-candidate RRF merge, and the (group, n, gram) diversity agg
-    "q_renko", "q_drawdown_episodes", "q_backtest", "q_rrf_fusion",
-    "q_ngram_diversity", "q_equity_curve", "q_oov_rate",
-    // round-8 session 4: the variant-ordered fold battery (k-arm ANOVA /
-    // Kruskal–Wallis share the welch/mann-whitney shuffle shape), the
-    // bucketed-prefix Wasserstein (distinct-support-sized, like KS), and
-    // the two-frame-pass interpolation over 10× keys
-    "q_anova", "q_kruskal", "q_wasserstein", "q_interpolate",
-    // round-8 session 5: the one-sort-one-agg whole-series tests
-    // (Ljung-Box shares the crossCorr shuffle shape; harmonic adds the
-    // twiddle explode), the bounded-panel O(n²) kendall self-join, the
-    // three-join seasonal decomposition, and the BH two-window pass
-    "q_ljung_box", "q_harmonic", "q_kendall", "q_seasonal", "q_bh_adjust",
-    "q_amihud", "q_cross_corr", "q_forecast_errors", "q_ic",
-    // round-8 session 5b: the block-ladder explode (hurst), the
-    // score-cardinality sweep (roc), and two count-only aggs
-    "q_hurst", "q_roc_curve", "q_agreement", "q_log_loss",
-    // round-8 session 5c: the runprod survival chain, the rho-sums agg,
-    // and the heaviest bounded-panel pair generator (Σn² slopes)
-    "q_kaplan_meier", "q_pacf", "q_theil_sen", "q_effect_sizes",
-    "q_cramers_v", "q_media_dhash", "q_media_dhash_pairs",
-    "q_dickey_fuller", "q_granger", "q_stream_kalman", "q_stream_holt",
-    "q_stream_garch", "q_holt_winters", "q_stream_hw",
-    "q_seasonal_anomaly", "q_rolling_sharpe", "q_runs_test",
-    "q_mann_kendall",
-    // round-9 session 1: the two-recurrence Croston share, the
-    // regression-sum tests (one keyed sort + one agg each), the
-    // doubled-rank signed-rank sort, the median+anova two-agg BF, and
-    // the zero-shuffle blocklist map (should be ~flat per row)
-    "q_croston", "q_arch_lm", "q_chow", "q_wilcoxon",
-    "q_brown_forsythe", "q_blocklist", "q_ewma_chart", "q_friedman",
-    "q_grubbs", "q_trimmed_mean", "q_hill", "q_pinball", "q_theil_u2",
-    "q_cvm", "q_kupiec", "q_christoffersen", "q_roll_spread",
-    "q_page_trend", "q_black_scholes", "q_bs_greeks", "q_stream_ewma", "q_record_linkage", "q_nelson_aalen", "q_logrank", "q_hosmer_lemeshow", "q_mcnemar", "q_attribution", "q_hhi", "q_best_f1", "q_rmst", "q_ece", "q_rbo", "q_prop_z", "q_odds_ratio", "q_bland_altman", "q_cpk", "q_ks_uniform", "q_cochran_armitage", "q_durbin_watson", "q_kendall_w",
-    "q_seasonal_strength",
-    // round-9: the remaining iterative graph operators (every driver-loop
-    // op now has a measured exponent) and SemDeDup — whose x10 corpus is
-    // the honest skew case: identical vectors replicated 10× into the
-    // same fixed-nlist clusters ⇒ 100× same-cluster pairs by
-    // construction, the quadratic VERDICT.md warns about
-    "q_label_prop", "q_kcore", "q_triangles", "q_semantic_dedup",
-    // round-10: the guarded SemDeDup — same x10 skew corpus, but the
-    // maxClusterSize cap (sign-split + id-hash salt) bounds the pair
-    // space; the pair of exponents is the guard's measured effect
-    "q_semantic_dedup_guarded",
-    // round-12: the exact duplicated-substring tier — the x10 corpus's
-    // replica-tagged documents grow its duplicated-gram clusters linearly
-    // (S copies of each cluster), so the winner-agg + mark-back join
-    // should track the corpus scan, not the pair space
-    "q_substring_dedup",
-    // the cut pass adds one keyed window sweep + per-doc-bounded interval
-    // splice on top of the spans plan — should stay corpus-linear
-    "q_substring_cut",
-    // round-12: the three most expensive staged-lag/window composites from
-    // the bench top-5 had floor proofs but no measured exponent — all
-    // share the one-keyed-exchange + bounded-frame shape that should
-    // scale with bars, not with anything quadratic
-    "q_kst", "q_connors_rsi", "q_coppock",
-    // round-12: span-level benchmark decontamination — probe grams
-    // broadcast, corpus side is one explode + semi-join + cut; should
-    // track the corpus scan (the probe side is FIXED as the corpus grows)
-    "q_decontaminate",
-    // round-12: the flooded-corpus cluster path — star edges per bucket
-    // are O(members) where the all-pairs graph is O(members²), so this
-    // should stay near-linear on the replica corpus that pushes
-    // q_dedup_components to 0.64 (see SCALE.md §Round-12 / pairmass.json)
-    "q_dedup_star",
-    // round-13: the keep composite now DEFAULTS to star edges — its 30×
-    // exponent is the acceptance bar for the new default (verdict #1:
-    // ≤ 0.4 on the replica flood)
-    "q_dedup_keep")
 
   private case class Shift(col: String, offset: Long)
 
@@ -192,7 +75,7 @@ object ScaleProbe {
     * instead of silently reused (which would corrupt the measured
     * exponents). */
   def buildScaled(spark: SparkSession, baseDir: String, outDir: String,
-                  scale: Int = Scale): Unit = {
+                  scale: Int): Unit = {
     val offs = domainOffsets(spark, baseDir)
     val stamp = s"scale=$scale base=$baseDir"
     plans(offs).foreach { case (table, shifts) =>
@@ -222,88 +105,6 @@ object ScaleProbe {
       }
     }
   }
-
-  def main(args: Array[String]): Unit = {
-    val baseDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val outDir = sys.env.getOrElse("SPARK_GRAFT_SCALE_DIR",
-      s"target/scaledata/x$Scale")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.buffer.pageSize", "4m") // see Bench — small-data page fix
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-
-    buildScaled(spark, baseDir, outDir)
-
-    def force(df: DataFrame): Unit =
-      df.write.format("noop").mode("overwrite").save()
-    def sweep(): Unit = {
-      CacheScope.release(blocking = true)
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
-      System.gc()
-    }
-    // BOTH ends take a MIN-OF-5 (round-11 lesson, SCALE.md four-session
-    // table): the exponent is log_S(t_big/t_1x) and ambient host noise
-    // swung t_1x 2× across sessions of an unchanged build — one noisy
-    // sample at EITHER end moves a 30× exponent by ±0.2. The protocol is
-    // enforced here, not left to operator discipline, and stamped into
-    // every artifact row ("runs":5) so a probe run outside it is visible.
-    def time(name: String, dir: String, runs: Int): Option[Double] = {
-      def once(): Double = {
-        val t0 = System.nanoTime()
-        force(SparkEntry.queries(name)(spark, dir))
-        (System.nanoTime() - t0) / 1e9
-      }
-      val r = try {
-        Some((1 to runs).map { i =>
-          val t = once(); if (i < runs) sweep(); t
-        }.min)
-      }
-      catch { case e: Throwable =>
-        System.err.println(s"$name failed: ${e.getMessage}"); None }
-      sweep(); r
-    }
-
-    force(SparkEntry.queries("q_indicators_combined")(spark, baseDir)) // warm-up
-    sweep()
-
-    val only = sys.env.get("GRAFT_PROBE_ONLY")
-      .map(_.split(",").toSet).getOrElse(Set.empty[String])
-    val rows = Probes.filter(n => only.isEmpty || only(n)).flatMap { name =>
-      for (t1 <- time(name, baseDir, runs = 5);
-           t10 <- time(name, outDir, runs = 5)) yield {
-        val exp = math.log(t10 / t1) / math.log(Scale.toDouble)
-        // label the big-corpus timing by the ACTUAL scale (t10x/t30x/…)
-        // so mixed-scale logs and artifacts stay self-describing
-        println(f"""PROBE {"query":"$name","t1x":$t1%.2f,"t${Scale}%dx":$t10%.2f,"exponent":$exp%.2f,"runs":5}""")
-        (name, t1, t10, exp)
-      }
-    }
-    // MERGE into any existing results: a GRAFT_PROBE_ONLY run must not
-    // clobber the full sweep's entries (one flat k:v JSON level — a
-    // regex merge keeps this dependency-free)
-    val outPath = java.nio.file.Paths.get(
-      if (Scale == 10) "scaleprobe.json" else s"scaleprobe$Scale.json")
-    val prior: Map[String, String] =
-      if (java.nio.file.Files.exists(outPath)) {
-        val txt = java.nio.file.Files.readString(outPath)
-        """"(q_[a-z0-9_]+)":(\{[^}]*\})""".r.findAllMatchIn(txt)
-          .map(m => m.group(1) -> m.group(2)).toMap
-      } else Map.empty
-    val fresh = rows.map { case (n, t1, t10, e) =>
-      n -> f"""{"t1x":$t1%.2f,"t${Scale}%dx":$t10%.2f,"exponent":$e%.2f,"runs":5}"""
-    }.toMap
-    val json = (prior ++ fresh).toSeq.sortBy(_._1)
-      .map { case (n, v) => s""""$n":$v""" }.mkString("{", ",", "}")
-    java.nio.file.Files.write(outPath, json.getBytes("UTF-8"))
-    println(json)
-    spark.stop()
-  }
 }
 
 /** Three-point SINGLE-SESSION scale fit: times each watch query at scales
@@ -326,7 +127,6 @@ object ScaleFit {
 
   def main(args: Array[String]): Unit = {
     val baseDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val probes = sys.env.get("GRAFT_FIT_ONLY")
       .map(_.split(",").toSeq).getOrElse(DefaultProbes)
     // r14 verdict #1: the ladder is configurable so the highest-exponent
@@ -340,14 +140,9 @@ object ScaleFit {
       .map(_.split(",").toSeq.map(_.trim.toInt).sorted)
       .getOrElse(Seq(10, 30))
     val runsPer = sys.env.get("GRAFT_FIT_RUNS").map(_.toInt).getOrElse(5)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.buffer.pageSize", "4m") // see Bench — small-data page fix
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Harness.session(defaultCpus = 32)
+    import Harness.{force, seconds}
+    def sweep(): Unit = Harness.sweep(spark)
 
     val dirs: Map[Int, String] = Map(1 -> baseDir) ++ scales.map { s =>
       val d = s"target/scaledata/x$s"
@@ -355,20 +150,8 @@ object ScaleFit {
       s -> d
     }
 
-    def force(df: DataFrame): Unit =
-      df.write.format("noop").mode("overwrite").save()
-    def sweep(): Unit = {
-      CacheScope.release(blocking = true)
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
-      System.gc()
-    }
     def time(name: String, dir: String): Option[Double] = {
-      def once(): Double = {
-        val t0 = System.nanoTime()
-        force(SparkEntry.queries(name)(spark, dir))
-        (System.nanoTime() - t0) / 1e9
-      }
+      def once(): Double = seconds(force(SparkEntry.queries(name)(spark, dir)))
       val r = try Some((1 to runsPer).map { i =>
           val t = once(); if (i < runsPer) sweep(); t
         }.min)
@@ -453,19 +236,28 @@ object ScaleFit {
         Some(name -> row)
       } else None
     }
-    val outPath = java.nio.file.Paths.get(
+    println(merge(
       if (scales == Seq(10, 30)) "scaleprobe3pt.json"
-      else s"scaleprobe${scales.max}.json")
+      else s"scaleprobe${scales.max}.json",
+      rows.toMap))
+    spark.stop()
+  }
+
+  /** Merges `rows` (query -> flat JSON object) into the artifact at `path`
+    * and returns what it wrote: a GRAFT_FIT_ONLY run must not clobber the
+    * full sweep's entries (one flat k:v JSON level — a regex merge keeps
+    * this dependency-free). */
+  private def merge(path: String, rows: Map[String, String]): String = {
+    val outPath = java.nio.file.Paths.get(path)
     val prior: Map[String, String] =
       if (java.nio.file.Files.exists(outPath)) {
         val txt = java.nio.file.Files.readString(outPath)
         """"(q_[a-z0-9_]+)":(\{[^}]*\})""".r.findAllMatchIn(txt)
           .map(m => m.group(1) -> m.group(2)).toMap
       } else Map.empty
-    val json = (prior ++ rows.toMap).toSeq.sortBy(_._1)
+    val json = (prior ++ rows).toSeq.sortBy(_._1)
       .map { case (n, v) => s""""$n":$v""" }.mkString("{", ",", "}")
     java.nio.file.Files.write(outPath, json.getBytes("UTF-8"))
-    println(json)
-    spark.stop()
+    json
   }
 }

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Size-sweep bench mirroring the reference's criterion harness
@@ -39,10 +39,9 @@ object SizeSweep {
 
   /** Runs the sweep; returns a JSON object string
     * `{"sma":{"1000":rows_per_sec,...},...}`. */
-  def run(spark: SparkSession, sfDir: String, sweep: () => Unit): String = {
+  def run(spark: SparkSession, sfDir: String): String = {
     graft.functions.FinancialFunctions.registerAll(spark)
-    def force(df: DataFrame): Unit =
-      df.write.format("noop").mode("overwrite").save()
+    import Harness.{force, seconds}
 
     // rownum is pinned to the (l_orderkey, l_linenumber) total order with
     // row_number() BEFORE any limit — monotonically_increasing_id after
@@ -61,15 +60,12 @@ object SizeSweep {
         val series = base.filter(col("rownum") <= n).cache()
         force(series) // materialize outside the timed region
         series.createOrReplaceTempView("series")
-        def once(): Double = {
-          val t0 = System.nanoTime()
-          force(spark.sql(s"SELECT rownum, $exprSql FROM series"))
-          (System.nanoTime() - t0) / 1e9
-        }
+        def once(): Double =
+          seconds(force(spark.sql(s"SELECT rownum, $exprSql FROM series")))
         once() // warm-up (codegen + first-touch)
         val t = Seq.fill(5)(once()).min
         series.unpersist(blocking = true)
-        sweep()
+        Harness.sweep(spark)
         s""""$n":${math.round(n / t)}"""
       }.mkString("{", ",", "}")
       s""""$name":$sizeJson"""

@@ -97,7 +97,8 @@ trait IndicatorWindowFunction extends AggregateWindowFunction {
   * (one allocation + codegen'd loop) — identical contents and fold order to
   * the `Concat`+`Slice`+`ArrayAggregate` composition they replaced (which
   * cost two allocations and an interpreted HOF dispatch per element; ~2× at
-  * n=200, measured in `graft.tools.SmaProbe`). A rolling add/subtract sum
+  * n=200, measured by `graft.tools.SmaProbe`, last at commit `42925e0`;
+  * re-measure with `graft.JobProbe` on `q_sma`). A rolling add/subtract sum
   * was REJECTED: it changes the floating-point result. */
 case class Sma(value: Expression, windowSize: Expression)
     extends IndicatorWindowFunction {

@@ -24,6 +24,13 @@ class EntryContractSpec extends AnyFunSuite {
       s"oracleSql entries without a query: ${orphans.toSeq.sorted.mkString(", ")}")
   }
 
+  test("SparkEntry.entry returns q_indicators_combined rows on the shared session") {
+    val df = SparkEntry.entry(SparkTestSession.spark)
+    assert(df.columns.toSeq == Seq("l_orderkey", "l_linenumber", "l_quantity",
+      "sma_5", "ema_12", "rsi_14", "macd"))
+    assert(df.count() > 0, "the driver smoke-checks rows > 0")
+  }
+
   test("oracle SQL is non-empty and free of stray placeholder markers") {
     SparkEntry.oracleSql.foreach { case (name, sql) =>
       assert(sql.trim.nonEmpty, s"$name: empty oracle SQL")

@@ -1,19 +1,12 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Regenerates [[graft.functions.Bpe.DefaultMerges]]: trains on the synthetic
   * documents corpus and prints the table as a paste-ready Scala literal.
   * Run: `sbt "Test/runMain graft.tools.BpeTrain"` */
 object BpeTrain {
   def main(args: Array[String]): Unit = {
     val dir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.01"
-    val spark = SparkSession.builder()
-      .master("local[8]").appName("bpe-train")
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", false)
-      .getOrCreate()
+    val spark = graft.Harness.session(defaultCpus = 8)
     val docs = spark.read.parquet(s"$dir/documents.parquet")
     val merges = graft.functions.Bpe.learnMerges(docs, "text", numMerges = 100)
     def esc(s: String) = s.flatMap {

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Print the formatted physical plan of one or more gate queries:
   * `Test/runMain graft.tools.ExplainQ q_seasonal_anomaly [sfDir]`. */
 object ExplainQ {
@@ -9,13 +7,7 @@ object ExplainQ {
     require(args.nonEmpty, "usage: ExplainQ q_name[,q_name...] [sfDir]")
     val names = args(0).split(",").toSeq
     val sf = if (args.length > 1) args(1) else "/root/testdata/sf0.001"
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Harness.session(defaultCpus = 4)
     graft.functions.FinancialFunctions.registerAll(spark)
     names.foreach { name =>
       println(s"===== $name =====")

@@ -1,16 +1,11 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import graft.functions.FinancialFunctions
 
 /** Manual end-to-end drive of the library surface (used by /verify). */
 object ManualDrive {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Harness.session(defaultCpus = 4)
     FinancialFunctions.registerAll(spark)
     spark.read.parquet("/root/testdata/sf0.001/lineitem.parquet")
       .createOrReplaceTempView("lineitem")

@@ -3,7 +3,6 @@ package graft.tools
 import java.nio.file.{Files, Paths}
 import java.sql.Timestamp
 import java.time.LocalDate
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import graft.operators.{Signals, Validation}
 import graft.sources.{Polygon, PolygonClient}
@@ -13,11 +12,7 @@ import graft.streaming.{MarketTick, StreamingPipeline}
   * streaming surfaces (used by /verify). */
 object ManualDriveData {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Harness.session(defaultCpus = 4)
     import spark.implicits._
 
     // --- Polygon local tree with one dated day-aggs CSV (local_demo.rs shape)

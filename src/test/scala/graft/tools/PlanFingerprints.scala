@@ -49,13 +49,6 @@ object PlanFingerprints {
     fingerprint(graft.SparkEntry.queries(name)(spark, sf)
       .queryExecution.executedPlan.toString)
 
-  private def clearState(spark: org.apache.spark.sql.SparkSession): Unit = {
-    graft.CacheScope.release(blocking = true)
-    spark.catalog.clearCache()
-    spark.sparkContext.getPersistentRDDs.values
-      .foreach(_.unpersist(blocking = true))
-  }
-
   /** The CANONICAL fingerprint: built with no pre-existing cache state.
     * The self-persisting operators (the shingle family, the staged
     * seasonal decompose, the iterative graph loops) produce plans whose
@@ -64,9 +57,9 @@ object PlanFingerprints {
     * definition. */
   def fingerprintClean(spark: org.apache.spark.sql.SparkSession,
                        name: String, sf: String): Map[String, Int] = {
-    clearState(spark)
+    graft.Harness.sweep(spark)
     val fp = fingerprintOf(spark, name, sf)
-    clearState(spark)
+    graft.Harness.sweep(spark)
     fp
   }
 
@@ -79,7 +72,7 @@ object PlanFingerprints {
     * in a warm session would shift three queries' counts. */
   def all(spark: org.apache.spark.sql.SparkSession,
           sf: String): Seq[(String, Map[String, Int])] = {
-    clearState(spark)
+    graft.Harness.sweep(spark)
     val names = graft.SparkEntry.queries.keys.toSeq.sorted
     val firstPass = names.par
       .map(n => n -> scala.util.Try(fingerprintOf(spark, n, sf)))

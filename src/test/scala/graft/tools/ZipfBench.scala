@@ -1,7 +1,7 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+import graft.Harness
 
 /** Measures the direct-vs-prefix-filter crossover for
   * [[graft.operators.Dedup.ngramJaccardPairs]] on a synthetic ZIPFIAN corpus:
@@ -16,12 +16,7 @@ import org.apache.spark.sql.functions._
 object ZipfBench {
   def main(args: Array[String]): Unit = {
     val nDocs = if (args.nonEmpty) args(0).toInt else 1500
-    val spark = SparkSession.builder()
-      .master("local[32]").appName("zipf-bench")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", false)
-      .getOrCreate()
+    val spark = Harness.session(defaultCpus = 32)
     import spark.implicits._
 
     val boiler = "terms of service apply to all of the content provided herein and " +
@@ -36,21 +31,17 @@ object ZipfBench {
       substring(md5(concat(seed.cast("string"), lit(s"_$j"))), 1, 8)): _*)
     val docs = spark.range(nDocs)
       .select(col("id").as("doc_id"), concat(lit(boiler + " "), tail).as("text"))
-      .cache()
-    docs.count()
 
-    def sweep(): Unit = {
-      graft.CacheScope.release(blocking = true)
-      System.gc()
-    }
     def time(prefix: Boolean): (Double, Long) = {
-      sweep()
-      val t0 = System.nanoTime()
-      val n = graft.operators.Dedup
+      // the sweep drops every cache, so the corpus is re-cached after it,
+      // outside the timer
+      Harness.sweep(spark)
+      docs.cache().count()
+      lazy val n = graft.operators.Dedup
         .ngramJaccardPairs(docs.toDF(), "doc_id", "text", threshold = 0.5,
           prefixFilter = prefix)
         .count()
-      ((System.nanoTime() - t0) / 1e9, n)
+      (Harness.seconds(n), n)
     }
     val (tDirect, nDirect) = time(prefix = false)
     val (tPrefix, nPrefix) = time(prefix = true)

@@ -8,9 +8,12 @@ SPARK_GRAFT_BENCH_OUT) and answers the question a raw total cannot: did the
 plans move, or did the host? Protocol (see SCALE.md "bench calibration" and
 memory note bench-ab-protocol):
 
-  1. Sessions are normalized by the calibration query (min-of-5 q_sma runs at
-     session start/end). ratio = (new_q / new_cal) / (old_q / old_cal), where
-     cal = mean(start_sec, end_sec). If either artifact lacks calibration,
+  1. Sessions are normalized by a calibration probe timed min-of-5 at
+     session start/end. ratio = (new_q / new_cal) / (old_q / old_cal), where
+     cal = min(start, end). The basis is the frozen bare-parquet-scan probe
+     (cal_scan_start_sec/cal_scan_end_sec) when both artifacts carry it —
+     no query optimization can move it — else the q_sma `calibration`
+     block. The basis used is printed. If either artifact lacks both,
      raw ratios are reported and flagged as unnormalized.
   2. Ambient movement is the MEDIAN normalized ratio: uniform drift moves
      every query identically, so a real regression is a query whose ratio
@@ -52,17 +55,30 @@ def load(path):
         return json.load(f)
 
 
-def cal_of(art):
-    """Session calibration anchor = MIN of the start/end min-of-5 q_sma
-    samples. Host interference bursts only ever INFLATE a sample (r14: a
-    burst caught the start calibration at 4.74 s vs 1.34 s at end — the
-    mean would have skewed every normalized ratio 2.2x), so the min is
-    the honest steady-state anchor, exactly like the per-query min-of-2."""
-    c = art.get("calibration")
-    if not c:
-        return None
-    vals = [c[k] for k in ("start_sec", "end_sec") if isinstance(c.get(k), (int, float))]
+def min_of(d, keys):
+    """Session calibration anchor = MIN of the start/end min-of-5 samples.
+    Host interference bursts only ever INFLATE a sample (r14: a burst
+    caught the start calibration at 4.74 s vs 1.34 s at end — the mean
+    would have skewed every normalized ratio 2.2x), so the min is the
+    honest steady-state anchor, exactly like the per-query min-of-2."""
+    vals = [d[k] for k in keys if isinstance(d.get(k), (int, float))]
     return min(vals) if vals else None
+
+
+def cal_of(art):
+    """q_sma calibration anchor."""
+    return min_of(art.get("calibration") or {}, ("start_sec", "end_sec"))
+
+
+def cal_basis(old, new):
+    """(basis, old_cal, new_cal): the frozen cal_scan probe when BOTH
+    artifacts carry both of its keys — q_sma is also an optimization
+    target, and a round that speeds it up would otherwise rescale every
+    ratio — else the q_sma calibration."""
+    keys = ("cal_scan_start_sec", "cal_scan_end_sec")
+    if all(isinstance(a.get(k), (int, float)) for a in (old, new) for k in keys):
+        return "cal_scan", min_of(old, keys), min_of(new, keys)
+    return "q_sma", cal_of(old), cal_of(new)
 
 
 def selftest():
@@ -78,7 +94,10 @@ def selftest():
       - a raw outlier whose in-session rerun_sec is back at baseline must
         NOT flag and must print as 'cleared' (rc 0);
       - a raw outlier whose rerun_sec is STILL slow MUST flag (rc 1) even
-        with flat shuffle — the same-plan CPU-regression blind spot."""
+        with flat shuffle — the same-plan CPU-regression blind spot;
+      - artifacts without cal_scan normalize by q_sma; when both carry
+        it, a 2x-faster q_sma with a flat cal_scan must NOT rescale the
+        per-query ratios."""
     import copy
     import subprocess
     import tempfile
@@ -113,18 +132,25 @@ def selftest():
     rerun_clears["rerun_sec"] = {"b": 2.0}
     rerun_confirms = copy.deepcopy(noisy)  # rerun STILL x1.9, shuffle flat
     rerun_confirms["rerun_sec"] = {"b": 3.8}
+    scan_old = copy.deepcopy(old)
+    scan_old["cal_scan_start_sec"] = scan_old["cal_scan_end_sec"] = 0.5
+    sma_fast = copy.deepcopy(scan_old)  # q_sma 2x faster, scan and queries flat
+    sma_fast["calibration"] = {"query": "q", "runs": 5,
+                               "start_sec": 0.5, "end_sec": 0.5}
     with tempfile.TemporaryDirectory() as td:
         paths = {}
         arts = [("old", old), ("amb", amb), ("noisy", noisy), ("reg", reg),
                 ("sh_only", sh_only), ("broken", broken), ("gone", gone),
                 ("sh_gain", sh_gain), ("burst_cal", burst_cal),
                 ("rerun_clears", rerun_clears),
-                ("rerun_confirms", rerun_confirms)]
+                ("rerun_confirms", rerun_confirms),
+                ("scan_old", scan_old), ("sma_fast", sma_fast)]
         for name, art in arts:
             paths[name] = f"{td}/{name}.json"
             with open(paths[name], "w") as f:
                 json.dump(art, f)
-        expectations = [("amb", 0, None), ("noisy", 0, "suspect"),
+        expectations = [("amb", 0, "calibration basis: q_sma"),
+                        ("noisy", 0, "suspect"),
                         ("reg", 1, None), ("sh_only", 1, None),
                         ("broken", 1, None), ("gone", 1, None),
                         ("sh_gain", 1, None),
@@ -155,9 +181,18 @@ def selftest():
             [sys.executable, __file__, paths["old"], paths["noisy"], "--strict"],
             capture_output=True, text=True, cwd=td)
         assert p.returncode == 1, f"strict noisy: rc={p.returncode}, expected 1"
+        p = subprocess.run(
+            [sys.executable, __file__, paths["scan_old"], paths["sma_fast"]],
+            capture_output=True, text=True, cwd=td)
+        assert p.returncode == 0, f"sma_fast: rc={p.returncode}\n{p.stdout}"
+        for text in ("calibration basis: cal_scan",
+                     "session calibration ratio (new/old): 1.000",
+                     "median normalized ratio: 1.000"):
+            assert text in p.stdout, f"sma_fast: expected '{text}'\n{p.stdout}"
     print("selftest OK: ambient and same-build-noise unflagged (noise -> "
           "suspect), corroborated/shuffle/broken/missing all flagged, "
-          "rerun_sec clears or confirms without a manual rerun")
+          "rerun_sec clears or confirms without a manual rerun, "
+          "cal_scan basis immune to a faster q_sma")
 
 
 def main():
@@ -180,7 +215,7 @@ def main():
         sys.exit(2)
     old, new = load(args[0]), load(args[1])
     oq, nq = old.get("queries", {}), new.get("queries", {})
-    ocal, ncal = cal_of(old), cal_of(new)
+    basis, ocal, ncal = cal_basis(old, new)
     normalized = ocal is not None and ncal is not None and ocal > 0 and ncal > 0
     calratio = (ncal / ocal) if normalized else 1.0
 
@@ -206,6 +241,7 @@ def main():
     print(f"old: {args[0]}  total={old.get('value')}s  n={len(oq)}  cal={ocal}")
     print(f"new: {args[1]}  total={new.get('value')}s  n={len(nq)}  cal={ncal}")
     if normalized:
+        print(f"calibration basis: {basis}")
         print(f"session calibration ratio (new/old): {calratio:.3f} "
               f"(ambient host factor divided out of every per-query ratio)")
     else:
