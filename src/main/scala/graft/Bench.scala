@@ -22,6 +22,34 @@ import org.apache.spark.sql.DataFrame
   *    single-burst hit while remaining an honest steady-state sample.
   */
 object Bench {
+  /** An artifact's calibration anchors: the q_sma calibration, and the
+    * frozen `cal_scan` probe when it has one. Each is the MIN of its
+    * start/end samples: interference bursts only inflate (r14: a burst
+    * caught a session's START calibration at 4.74 s vs 1.34 at end; the
+    * mean would skew every ratio 2.2×). */
+  private[graft] final case class Anchor(sma: Double, scan: Option[Double])
+
+  /** The anchors of an artifact's text (flat regex parse, no json dep);
+    * None without a positive q_sma calibration. */
+  private[graft] def anchorOf(txt: String): Option[Anchor] = {
+    def minOf(prefix: String): Option[Double] = {
+      def sec(key: String) = ("\"" + prefix + key +
+        """":(-?\d+(?:\.\d+)?)""").r.findFirstMatchIn(txt)
+      for (s <- sec("start_sec"); e <- sec("end_sec"))
+        yield math.min(s.group(1).toDouble, e.group(1).toDouble)
+    }
+    minOf("").filter(_ > 0).map(Anchor(_, minOf("cal_scan_").filter(_ > 0)))
+  }
+
+  /** (basis, now ÷ baseline calibration): the frozen `cal_scan` probe when
+    * both sides carry it, else q_sma — tools/bench_diff.py's rule, so a
+    * round that speeds q_sma up does not rescale every ratio. */
+  private[graft] def calRatio(old: Anchor, now: Anchor): (String, Double) =
+    (old.scan, now.scan) match {
+      case (Some(o), Some(n)) => ("cal_scan", n / o)
+      case _ => ("q_sma", now.sma / old.sma)
+    }
+
   /** Trimmed output of `git args`; None when git is absent or fails. */
   private def git(args: String*): Option[String] =
     try {
@@ -95,7 +123,7 @@ object Bench {
     // its own calibration-normalized outliers after the full pass, reruns
     // them min-of-3 IN-SESSION, and stamps `rerun_sec` — bench_diff
     // prefers the rerun and treats a still-slow one as a real regression.
-    def readBaseline(): Option[(Map[String, Double], Double, String)] = {
+    def readBaseline(): Option[(Map[String, Double], Anchor, String)] = {
       val explicit = sys.env.get("GRAFT_BENCH_BASELINE")
       // Non-round-stamped fallbacks (bench_full.json / target/) persist
       // across rounds and are rewritten by ANY local run — ADVICE r14:
@@ -136,14 +164,8 @@ object Bench {
             """"([^"]+)":(-?\d+(?:\.\d+)?)""".r.findAllMatchIn(body)
               .map(m => m.group(1) -> m.group(2).toDouble).toMap
           }.getOrElse(Map.empty[String, Double])
-          // MIN of the two calibration samples: interference bursts only
-          // inflate (r14: a burst caught a session's START calibration at
-          // 4.74 s vs 1.34 at end; the mean would skew every ratio 2.2×)
-          val cal = for {
-            s <- """"start_sec":(-?\d+(?:\.\d+)?)""".r.findFirstMatchIn(txt)
-            e <- """"end_sec":(-?\d+(?:\.\d+)?)""".r.findFirstMatchIn(txt)
-          } yield math.min(s.group(1).toDouble, e.group(1).toDouble)
-          if (qs.nonEmpty && cal.exists(_ > 0)) {
+          val cal = anchorOf(txt)
+          if (qs.nonEmpty && cal.nonEmpty) {
             System.err.println(s"[bench] suspect baseline: $p (${qs.size} queries)")
             Some((qs, cal.get, p))
           } else None
@@ -200,6 +222,8 @@ object Bench {
     val sizeSweep = SizeSweep.run(spark, sfDir)
     val calibEnd = calibrateSma()
     val calScanEnd = calibrateScan()
+    val anchorNow = Anchor(math.min(calibStart, calibEnd),
+      Some(math.min(calScanStart, calScanEnd)))
     val calibJson =
       f""""calibration":{"query":"q_sma","runs":5,"start_sec":$calibStart%.3f,"end_sec":$calibEnd%.3f},"cal_scan_start_sec":$calScanStart%.3f,"cal_scan_end_sec":$calScanEnd%.3f"""
 
@@ -210,8 +234,8 @@ object Bench {
     // steady-state number for that query in THIS session.
     val outlierSuspects: Seq[String] = baseline match {
       case Some((oldQs, oldCal, _)) if only.isEmpty =>
-        val newCal = math.min(calibStart, calibEnd)
-        val calratio = if (oldCal > 0) newCal / oldCal else 1.0
+        val (basis, calratio) = calRatio(oldCal, anchorNow)
+        System.err.println(f"[bench] calibration basis: $basis (ratio $calratio%.3f)")
         val ratios = results.flatMap { case (n, t, _) =>
           oldQs.get(n).filter(_ > 0).filter(_ => t >= 0)
             .map(o => n -> (t / o) / calratio)
@@ -270,8 +294,7 @@ object Bench {
     // without anyone having to run bench_diff first.
     val medianStamp: String = baseline match {
       case Some((oldQs, oldCal, basePath)) if only.isEmpty =>
-        val newCal = math.min(calibStart, calibEnd)
-        val calratio = if (oldCal > 0) newCal / oldCal else 1.0
+        val (basis, calratio) = calRatio(oldCal, anchorNow)
         val rs = results.flatMap { case (n, t, _) =>
           val best = math.min(if (t >= 0) t else Double.MaxValue,
             rerunSecs.getOrElse(n, Double.MaxValue))
@@ -283,7 +306,7 @@ object Bench {
         else {
           val med = rs(rs.size / 2)
           val baseName = basePath.replace("\"", "")
-          f""","median_norm_ratio":$med%.3f,"baseline":"$baseName""""
+          f""","median_norm_ratio":$med%.3f,"baseline":"$baseName","calibration_basis":"$basis""""
         }
       case _ => ""
     }

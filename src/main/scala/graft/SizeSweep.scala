@@ -14,7 +14,9 @@ import org.apache.spark.sql.functions._
   * The series is the first n lineitem prices in (l_orderkey, l_linenumber)
   * order, pre-materialized (cached + forced) before timing — the analog of
   * criterion timing a query over an already-built in-memory `VALUES` table.
-  * Reported number = rows/sec of the FASTEST of five post-warm-up runs:
+  * Reported number = the series' own row count (counted outside the
+  * timer — a cell's key is its nominal size, and a size past the table's
+  * row count holds fewer rows) ÷ the FASTEST of five post-warm-up runs:
   * single-shot numbers on this host swing ±2× with the documented ambient
   * interference bursts (NOTES.md), which made round-over-round throughput
   * deltas meaningless (r8→r9 read −42% on sma@100k while the full suite
@@ -59,6 +61,7 @@ object SizeSweep {
       val sizeJson = Sizes.map { n =>
         val series = base.filter(col("rownum") <= n).cache()
         force(series) // materialize outside the timed region
+        val rows = series.count() // fewer than n past the table's size
         series.createOrReplaceTempView("series")
         def once(): Double =
           seconds(force(spark.sql(s"SELECT rownum, $exprSql FROM series")))
@@ -66,7 +69,7 @@ object SizeSweep {
         val t = Seq.fill(5)(once()).min
         series.unpersist(blocking = true)
         Harness.sweep(spark)
-        s""""$n":${math.round(n / t)}"""
+        s""""$n":${math.round(rows / t)}"""
       }.mkString("{", ",", "}")
       s""""$name":$sizeJson"""
     }.mkString("{", ",", "}")

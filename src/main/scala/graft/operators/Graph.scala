@@ -43,9 +43,9 @@ object Graph {
     * matters. Emits `(node, pr)`.
     *
     * Convergence mode: `tol > 0` turns `iters` into a CAP and stops as
-    * soon as `max |Δpr| < tol` — one scalar probe per round (the kCore
-    * convergence-count precedent), each round eagerly checkpointed so the
-    * probe's action is the round's only materialization. The default
+    * soon as `max |Δpr| < tol`, each round eagerly cut with the delta
+    * observed inside the cut's own job (the kCore convergence-count
+    * precedent), so the cut is the round's only materialization. The default
     * `tol = 0` keeps the exact fixed-iteration semantics (and its lazy
     * every-4th-round checkpoint cadence) that the oracle gate replays. */
   def pageRank(edges: DataFrame, srcCol: String, dstCol: String,
@@ -79,22 +79,21 @@ object Graph {
     // e's blocks back nothing after ew is cut — release them eagerly
     eCut.release()
     // nodes feeds the init and every round's spine — checkpointed off the
-    // cut edge frame (no second scan of the raw edges), and ALSO persisted:
-    // the materialized cache stats (|nodes| rows, a few hundred KB here)
-    // let the planner broadcast the round-1 rank frame (verified in the
-    // plan dump; later rounds' estimates degrade through the joins and
-    // ride AQE's runtime conversion instead), and the identical edge-side
-    // exchange subtrees of the SMJ rounds collapse into ONE ReusedExchange
-    // per action. Estimate-driven at scale: a billion-node rank frame
-    // reports GBs and falls back to SMJ on its own; no forced hint.
+    // cut edge frame (no second scan of the raw edges). Its measured row
+    // count is its stats, which is what lets the planner broadcast the
+    // round-1 rank frame. No persist over the cut: the plan keeps the same
+    // three broadcasts and exchanges without one (neither reuses an
+    // exchange), and its cache build cost jobs (q_pagerank at sf0.01,
+    // local[4]: 26 jobs per call with it, 21 without). Estimate-driven at
+    // scale: a billion-node rank frame reports GBs and falls back to SMJ
+    // on its own; no forced hint.
     val nodesCut = Lineage.cut(
       ew.select(col("src").as("node"))
         .union(ew.select(col("dst").as("node"))).distinct())
-    val nodes = CacheScope.register(nodesCut.frame
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    // one scalar driver action (the connectedComponents convergence-probe
-    // precedent) — N as a literal kills a per-round broadcast crossJoin
-    val n = nodes.count().toDouble
+    val nodes = nodesCut.frame
+    // N is the nodes cut's own row count — as a literal it kills a
+    // per-round broadcast crossJoin, and reading it costs no job
+    val n = nodesCut.rows.toDouble
     val teleport = (1.0 - damping) / n // same IEEE division the oracle runs
     var ranks = nodes.select(col("node"), round(lit(1.0 / n), 10).as("pr"))
     var rankCut: Option[Lineage.Cut] = None
@@ -110,17 +109,15 @@ object Graph {
           round(lit(teleport) +
             lit(damping) * coalesce(col("__s"), lit(0.0)), 10).as("pr"))
       if (tol > 0.0) {
-        // eager cut FIRST so the probe below is the round's only compute,
-        // then one scalar max|Δ| against the previous (already-cut) ranks
-        val cut = Lineage.cut(next)
-        val delta = cut.frame
-          .join(ranks.select(col("node"), col("pr").as("__prev")), "node")
-          .agg(max(abs(col("pr") - col("__prev"))).as("__d"))
-          .head.getDouble(0)
+        // eager cut of the round with the previous ranks alongside, so its
+        // own job observes max|Δ| — the round's only materialization
+        val cut = Lineage.cut(
+          next.join(ranks.select(col("node"), col("pr").as("__prev")), "node"),
+          max(abs(col("pr") - col("__prev"))))
         rankCut.foreach(_.release())
         rankCut = Some(cut)
-        ranks = cut.frame
-        converged = delta < tol
+        ranks = cut.frame.select(col("node"), col("pr"))
+        converged = cut.rows == 0L || cut.observed.getDouble(1) < tol
       } else {
         ranks = next
         // lineage stays bounded for small fixed iters — everything below
@@ -155,10 +152,12 @@ object Graph {
     * discipline): per round one degree aggregation (map-side
     * combinable) + one broadcast anti-join of the (small, shrinking)
     * sub-`k` node set against the edge frame; a [[graft.Lineage]] cut
-    * each round, the superseded cut released eagerly; the
-    * per-round convergence check is a count on the WEAK frame, not the
-    * graph. Fails loudly if `maxIters` rounds don't converge — a
-    * silently-partial core is a wrong answer. */
+    * each round, the superseded cut released eagerly. Convergence is read
+    * off the cut's own job: every weak node has an edge, so a round drops
+    * an edge iff its weak set is non-empty, and an unchanged observed row
+    * count is the fixpoint — no separate probe job. Fails loudly if
+    * `maxIters` rounds don't converge — a silently-partial core is a
+    * wrong answer. */
   def kCore(edges: DataFrame, srcCol: String, dstCol: String, k: Int,
             maxIters: Int = 30): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
@@ -173,15 +172,13 @@ object Graph {
       val deg = e.frame.select(explode(array(col("u"), col("v"))).as("node"))
         .groupBy(col("node")).agg(count(lit(1)).as("d"))
       val weak = deg.filter(col("d") < k).select(col("node"))
-      converged = weak.isEmpty
-      if (!converged) {
-        val next = Lineage.cut(e.frame
-          .join(broadcast(weak.select(col("node").as("u"))), Seq("u"), "left_anti")
-          .join(broadcast(weak.select(col("node").as("v"))), Seq("v"), "left_anti"))
-        e.release()
-        e = next
-        i += 1
-      }
+      val next = Lineage.cut(e.frame
+        .join(broadcast(weak.select(col("node").as("u"))), Seq("u"), "left_anti")
+        .join(broadcast(weak.select(col("node").as("v"))), Seq("v"), "left_anti"))
+      converged = next.rows == e.rows
+      e.release()
+      e = next
+      i += 1
     }
     if (!converged) {
       e.release()
@@ -436,16 +433,20 @@ object Graph {
     * `hub`, `auth`).
     *
     * Scale shape: per round two keyed aggregations over the edge frame
-    * (map-side combinable) and two scalar maxes that ride back as
-    * broadcast one-row frames (the winsorize stats-frame shape — no
-    * driver action inside the loop); the edge and node frames persist
-    * once. Each half-step's raw score frame (|nodes| rows) is EAGERLY
-    * localCheckpoint-ed before normalization: the max-agg and the join
-    * both reference it, and left lazy that double reference doubles the
-    * whole un-materialized subtree per half-step — 2^(2·iters) recompute
-    * (measured: 100 s for 3 rounds on the sf0.1 trade graph; ~7 s cut).
-    * Only the two most recent cuts stay alive — each cut's lineage stops
-    * at the previous one. */
+    * (map-side combinable). Each half-step's raw score frame (|nodes|
+    * rows) is EAGERLY cut with its max observed inside the cut's own job
+    * ([[graft.Lineage.cut]]), and the normalization divides by that max
+    * as a literal — one IEEE division per node, with no aggregate or
+    * broadcast job of its own. The cut is what keeps the recursion
+    * linear: the next half-step reads the normalized scores, and left
+    * lazy each half-step would re-embed the whole un-materialized subtree
+    * — 2^(2·iters) recompute (measured: 100 s for 3 rounds on the sf0.1
+    * trade graph; ~7 s cut). Cutting
+    * once per ROUND instead was prototyped and measured worse: 37 jobs /
+    * 70 stages per call on perfbench `dedup_graph` (seed 41) against 35 /
+    * 48 for the per-half-step cut it replaced, because the uncut
+    * half-step is read twice. Only the two most recent cuts stay alive —
+    * each cut's lineage stops at the previous one. */
   def hits(edges: DataFrame, srcCol: String, dstCol: String,
            iters: Int): DataFrame = {
     require(iters >= 1 && iters <= 64, s"iters must be in [1, 64], got $iters")
@@ -454,21 +455,17 @@ object Graph {
     // cut plans re-embedded and re-analyzed the graph-construction subtree
     // — measured 5.8 s of 6.6 s steady-state at sf0.1 spent OFF the
     // executors across 50 tiny jobs); nodes is cut off the materialized
-    // edge blocks instead of re-scanning the caller's edge subtree. The
-    // cut frame is ALSO persisted: a bare LogicalRDD reports no size, and
-    // without e's materialized cache stats the per-half-step score joins
-    // lost their estimate-driven broadcast and re-shuffled the edge frame
-    // every half-step (measured: suite shuffle 19.7 -> 37.9 MB with the
-    // checkpoint alone). Persist-over-checkpoint keeps both properties —
-    // truncated lineage AND accurate stats — and stays estimate-driven at
-    // scale (a billion-node score frame falls back to SMJ on its own,
-    // no forced broadcast hint).
+    // edge blocks instead of re-scanning the caller's edge subtree. No
+    // persist over the cut: its measured row count is the frame's stats,
+    // so the per-half-step score joins keep their estimate-driven
+    // broadcast of the |nodes|-row score side (a billion-node score frame
+    // falls back to SMJ on its own, no forced hint) without a second copy
+    // of the edges in the cache.
     val eCut = Lineage.cut(edges
       .select(col(srcCol).cast("long").as("src"),
         col(dstCol).cast("long").as("dst"))
       .filter(col("src") =!= col("dst")).distinct())
-    val e = CacheScope.register(eCut.frame
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    val e = eCut.frame
     val nodesCut = Lineage.cut(
       e.select(col("src").as("node"))
         .union(e.select(col("dst").as("node")))
@@ -476,40 +473,30 @@ object Graph {
     CacheScope.register(nodesCut)
     val nodes = nodesCut.frame
     var live: List[Lineage.Cut] = Nil
-    def cut(df: DataFrame): DataFrame = {
-      val c = Lineage.cut(df) // eager — see scaladoc
+    def maxNormalized(raw: DataFrame, scoreCol: String): DataFrame = {
+      val c = Lineage.cut(raw, max(col(scoreCol))) // eager — see scaladoc
       live = c :: live
       live.drop(2).foreach(_.release()) // older cuts are lineage-unreachable now
       live = live.take(2)
-      c.frame
-    }
-    def maxNormalized(rawCut: DataFrame, scoreCol: String): DataFrame = {
-      // both references read the checkpointed blocks — no recompute
-      val m = rawCut.agg(max(col(scoreCol)).as("__mx"))
-      rawCut.crossJoin(broadcast(m))
-        .select(col("node"),
-          round(col(scoreCol) / col("__mx"), 10).as(scoreCol))
+      c.frame.select(col("node"),
+        round(col(scoreCol) / lit(c.observed.get(1)), 10).as(scoreCol))
     }
     var hub = nodes.select(col("node"), lit(1.0).as("hub"))
     var auth: DataFrame = null
     var i = 1
     while (i <= iters) {
-      val authRaw = cut(e.join(hub, e("src") === hub("node"))
+      auth = maxNormalized(e.join(hub, e("src") === hub("node"))
         .groupBy(col("dst").as("node"))
-        .agg(round(sum(col("hub")), 10).as("auth")))
-      auth = maxNormalized(authRaw, "auth")
-      val hubRaw = cut(e.join(auth, e("dst") === auth("node"))
+        .agg(round(sum(col("hub")), 10).as("auth")), "auth")
+      hub = maxNormalized(e.join(auth, e("dst") === auth("node"))
         .groupBy(col("src").as("node"))
-        .agg(round(sum(col("auth")), 10).as("hub")))
-      hub = maxNormalized(hubRaw, "hub")
+        .agg(round(sum(col("auth")), 10).as("hub")), "hub")
       i += 1
     }
     // the loop is done with the edge frame — the returned plan reads only
     // nodes + the last two cuts, so its blocks are released eagerly here
-    // rather than held until the harness sweep (the cache is registered
-    // with CacheScope and released by the harness)
+    // rather than held until the harness sweep
     eCut.release()
-    e.unpersist(blocking = false)
     // the returned frame reads the LAST two cuts (auth's and hub's raws)
     CacheScope.register(live: _*)
     nodes

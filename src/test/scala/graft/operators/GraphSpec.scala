@@ -296,4 +296,13 @@ class GraphSpec extends AnyFunSuite {
     assert(out === Map(1L -> 1L, 2L -> 1L, 3L -> 1L,
       4L -> 3L, 5L -> 3L, 6L -> 3L))
   }
+
+  test("iterative operators on an empty edge list return no rows") {
+    val empty = Seq.empty[(Long, Long)].toDF("src", "dst")
+    // tol mode observes a NULL max|Δ| over the empty round
+    assert(Graph.pageRank(empty, "src", "dst", iters = 5, tol = 1e-6).count() === 0)
+    assert(Graph.hits(empty, "src", "dst", iters = 2).count() === 0)
+    assert(Graph.kCore(empty, "src", "dst", k = 2).count() === 0)
+    graft.CacheScope.release()
+  }
 }
