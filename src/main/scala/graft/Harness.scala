@@ -36,10 +36,11 @@ object Harness {
   def force(df: DataFrame): Unit =
     df.write.format("noop").mode("overwrite").save()
 
-  /** Frees everything a measurement left cached: operator-internal frames
-    * and cuts ([[CacheScope]]), the SQL cache, any remaining persistent RDDs
-    * (checkpoint blocks the CacheManager does not know about), then a GC so
-    * reclaimed blocks are gone before the next timer starts. */
+  /** Frees everything a measurement left cached: this thread's
+    * operator-internal frames and cuts ([[CacheScope]]), the SQL cache, any
+    * remaining persistent RDDs (checkpoint blocks the CacheManager does not
+    * know about), then a GC so reclaimed blocks are gone before the next
+    * timer starts. */
   def sweep(spark: SparkSession): Unit = {
     CacheScope.release(blocking = true)
     spark.catalog.clearCache()

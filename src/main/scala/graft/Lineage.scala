@@ -25,7 +25,9 @@ import org.apache.spark.sql.graft.Bridge
   * happened to materialize (and any block another thread persisted
   * meanwhile). An operator releases a superseded cut as soon as no frame
   * it will run again reads it, and hands the cuts its returned frame reads
-  * to [[CacheScope.register]], so the caller releases them after its action.
+  * to [[CacheScope.register]], which files them in the calling thread's
+  * scope: the thread that called the operator releases them after its
+  * action.
   *
   * ==Observed scalars and measured stats==
   * The cut's own checkpoint job also evaluates a `Dataset.observe` over the

@@ -47,7 +47,8 @@ object CurationPipeline {
     // NOTE: CacheScope.release() must wait until NOTHING derived from the
     // dedup call runs again — `deduped`'s lineage roots in the components'
     // localCheckpoint blocks, which (unlike plain persists) cannot be
-    // recomputed once released. Released before spark.stop() below.
+    // recomputed once released. Released before spark.stop() below, from
+    // this thread: release frees only what the calling thread registered.
 
     println("== 3. Decontamination vs a probe 'benchmark' set ==")
     val probes = docs.filter(col("doc_id") % 50 === 0)

@@ -821,21 +821,21 @@ private[gates] object MarketGates {
       // after the weekly cycle is explained away, not before; residuals
       // quantize to 6 dp so both engines interpolate medians on
       // integer-valued doubles (exact). The decomposed frame is STAGED
-      // (persist + CacheScope) before the screen: MAD is two grouped
+      // (CacheScope.persist) before the screen: MAD is two grouped
       // percentile passes by construction, and without staging each pass
       // re-derives the whole bars+window decompose (the subtree appeared
       // 6× in one plan). The cache is bars-sized — |suppliers|×|days|,
       // ~1000× smaller than the raw corpus — so the same staging holds
-      // at 100 TB (CacheScope scaladoc's caller-side protocol).
-      val dec = CacheScope.register(
+      // at 100 TB (released by the thread that runs the gate, per the
+      // CacheScope scaladoc).
+      val dec = CacheScope.persist(
         operators.Resample.seasonalDecompose(dailyBarsW(s)
             .select(col("l_suppkey"), col("l_shipdate"), col("close")),
             "close", Seq("l_suppkey"), Seq("l_shipdate"), period = 7,
             scale = 2)
           .filter(col("resid").isNotNull)
           .withColumn("resid_q", round(col("resid") * lit(1e6)))
-          .select(col("l_suppkey"), col("l_shipdate"), col("resid_q"))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+          .select(col("l_suppkey"), col("l_shipdate"), col("resid_q")))
       operators.Anomaly.madOutliers(
           dec,
           "resid_q", Seq("l_suppkey"), threshold = 3.5)

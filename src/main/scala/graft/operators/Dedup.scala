@@ -111,12 +111,8 @@ object Dedup {
                       threshold: Double = 0.5,
                       maxPairs: Long = Guards.DefaultMaxCandidatePairs): DataFrame = {
     // persisted: consumed by signature generation AND both verify branches —
-    // without it each consumer re-runs the tokenize+shingle chain. The result
-    // is lazy, so the cache must outlive this call; it is registered in
-    // CacheScope so the caller releases it after the consuming action.
-    val sets = graft.CacheScope.register(
-      TextOps.shingleSets(df, idCol, textCol, 3)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    // without it each consumer re-runs the tokenize+shingle chain
+    val sets = CacheScope.persist(TextOps.shingleSets(df, idCol, textCol, 3))
     // the band frame is a map over the cached sets. Budget ON: the guard's
     // bucket-size aggregate sits INSIDE the persist, so it runs once while
     // the cache builds and both candidate-join sides read the guarded
@@ -127,10 +123,8 @@ object Dedup {
     // a persist only adds churn.
     val bands0 = lshBands(minhashSignatures(sets, idCol, k), idCol, rowsPerBand)
     val guarded = if (maxPairs > 0L)
-      graft.CacheScope.register(
-        Guards.pairBudget(bands0, Seq("band", "sig"), maxPairs,
-          "Dedup.minhashNearDups")
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+      CacheScope.persist(Guards.pairBudget(bands0, Seq("band", "sig"),
+        maxPairs, "Dedup.minhashNearDups"))
     else bands0
     val cands = lshCandidates(guarded, idCol)
     jaccard(sets, idCol, cands).filter(col("jaccard") >= threshold)
@@ -159,9 +153,7 @@ object Dedup {
   def starNearDupClusters(df: DataFrame, idCol: String, textCol: String,
                           k: Int = 16, rowsPerBand: Int = 4,
                           threshold: Double = 0.5): DataFrame = {
-    val sets = graft.CacheScope.register(
-      TextOps.shingleSets(df, idCol, textCol, 3)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    val sets = CacheScope.persist(TextOps.shingleSets(df, idCol, textCol, 3))
     // NOT persisted: the band frame is a map over the cached sets, shared
     // by the rep aggregate and the star-candidate join
     val bands = lshBands(minhashSignatures(sets, idCol, k), idCol, rowsPerBand)
@@ -250,9 +242,7 @@ object Dedup {
                         n: Int = 3, threshold: Double = 0.5,
                         prefixFilter: Boolean = false,
                         maxPairs: Long = Guards.DefaultMaxCandidatePairs): DataFrame = {
-    val sets = graft.CacheScope.register(
-      TextOps.shingleSets(df, idCol, textCol, n)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    val sets = CacheScope.persist(TextOps.shingleSets(df, idCol, textCol, n))
     if (prefixFilter) return prefixFiltered(sets, idCol, threshold, maxPairs)
     // pair budget over the shingle posting lists: the self-join below emits
     // Σ_shingle C(m,2) rows — the Zipfian stop-shingle caveat, now a loud
@@ -294,9 +284,7 @@ object Dedup {
                        maxPairs: Long = Guards.DefaultMaxCandidatePairs): DataFrame = {
     require(threshold > 0.0 && threshold <= 1.0,
       s"threshold must be in (0,1], got $threshold")
-    val sets = graft.CacheScope.register(
-      TextOps.shingleSets(df, idCol, textCol, n)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    val sets = CacheScope.persist(TextOps.shingleSets(df, idCol, textCol, n))
     // same posting-list pair budget as [[ngramJaccardPairs]] — identical
     // self-join, identical stop-shingle blow-up mode
     val sh = Guards.pairBudget(
@@ -354,9 +342,7 @@ object Dedup {
     val b = ranked.select(col(idCol).as("id_b"), col("snm_block"),
       col("rn").as("rn_b"))
     val cands = a.join(b, Seq("snm_block", "rn_b")).select("id_a", "id_b")
-    val sets = graft.CacheScope.register(
-      TextOps.shingleSets(df, idCol, textCol, n)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    val sets = CacheScope.persist(TextOps.shingleSets(df, idCol, textCol, n))
     cands
       .join(sets.select(col(idCol).as("id_a"), col("shingles").as("sh_a"),
         col("n_shingles").as("n_a")), "id_a")
@@ -393,13 +379,12 @@ object Dedup {
     // persisted: the pair budget's posting-size aggregate and both sides of
     // the candidate self-join read the prefix frame — unpersisted, each
     // scan re-runs the frequency join + rank window
-    val prefix = graft.CacheScope.register(
+    val prefix = CacheScope.persist(
       sh.join(freq, "shingle")
         .withColumn("r", row_number().over(w))
         .filter(col("r") <=
           col("n_shingles") - ceil(lit(threshold) * col("n_shingles")) + 1)
-        .select(col(idCol), col("shingle"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+        .select(col(idCol), col("shingle")))
     // the prefix trick bounds posting lists on ZIPFIAN corpora; a corpus of
     // outright replica floods still self-joins quadratically (every replica
     // shares the full rare prefix) — same budget, same loud failure
@@ -436,7 +421,7 @@ object Dedup {
     // persist an expensive upstream pipeline (e.g. the whole minhash
     // near-dup chain) recomputes per scan. Scoped: dropped as soon as the
     // eager edge checkpoint below has materialized.
-    val pairsP = pairs.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val pairsP = pairs.persist()
     // EAGER localCheckpoint of the edge frame (the Graph.pageRank/hits
     // rationale): a persisted frame keeps its full logical lineage, so
     // every label round re-embedded and re-ANALYZED the whole upstream
@@ -598,9 +583,8 @@ object Dedup {
                        idCol: String, textCol: String,
                        k: Int = 16, rowsPerBand: Int = 4,
                        threshold: Double = 0.5): DataFrame = {
-    val refSets = graft.CacheScope.register(
-      TextOps.shingleSets(refDocs, idCol, textCol, 3)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    val refSets = CacheScope.persist(
+      TextOps.shingleSets(refDocs, idCol, textCol, 3))
     val index = RefIndex(
       refDocs.select(md5(col(textCol)).as("__md5")).distinct(),
       refBandsFrom(refSets, idCol, k, rowsPerBand),
@@ -646,9 +630,8 @@ object Dedup {
       .drop("__md5")
     // stage 2: near-dup vs the reference — candidates are new×ref band
     // collisions only (no new×new, no ref×ref pairs are ever generated)
-    val newSets = graft.CacheScope.register(
-      TextOps.shingleSets(fresh, idCol, textCol, 3)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    val newSets = CacheScope.persist(
+      TextOps.shingleSets(fresh, idCol, textCol, 3))
     val newBands = refBandsFrom(newSets, idCol, ref.k, ref.rowsPerBand)
     val cands = newBands.select(col(idCol).as("id_a"), col("band"), col("sig"))
       .join(ref.bands.select(col(idCol).as("id_b"), col("band"), col("sig")),
@@ -1013,12 +996,10 @@ object Dedup {
     // the fingerprint frame, and asymmetric inferred-filter pushdown makes
     // their subtrees canonically unequal (no ReusedExchange — see
     // markCanonicalDups). The frame is the SELECTED ~2n/(w+1) fingerprints,
-    // already shrunk by the selection window, so the cache is small; it is
-    // registered in CacheScope for the caller to release after its action.
+    // already shrunk by the selection window, so the cache is small
     markCanonicalDups(
-      graft.CacheScope.register(
-        winnowFingerprints(docs, idCol, textCol, minLen, noise)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)),
+      CacheScope.persist(
+        winnowFingerprints(docs, idCol, textCol, minLen, noise)),
       idCol, noise, hashShuffle)
 
   /** Per-document rollup of [[winnowedSpans]]: `(id, n_fp, n_dup)` for
@@ -1176,10 +1157,8 @@ object Dedup {
     // still reads is copied into every output row, O(set²) per document
     val postings = sets.select(col(idCol), col("__n"),
       explode(col("__grams")).as("gram"))
-    val fp = graft.CacheScope.register(
-      Guards.pairBudget(postings, Seq("gram"), maxPairs,
-        "Dedup.winnowOverlapPairs")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    val fp = CacheScope.persist(Guards.pairBudget(postings, Seq("gram"),
+      maxPairs, "Dedup.winnowOverlapPairs"))
     val a = fp.select(col(idCol).as("id_a"), col("gram"), col("__n").as("__na"))
     val b = fp.select(col(idCol).as("id_b"), col("gram"), col("__n").as("__nb"))
     a.join(b, Seq("gram")).filter(col("id_a") < col("id_b"))

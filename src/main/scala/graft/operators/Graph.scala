@@ -353,7 +353,7 @@ object Graph {
     * counted exactly once (its vertices' ranks form one orientation).
     * Everything is equi-joins + one global count: no window, no sort, no
     * driver state. The oriented frame feeds three plan branches, so it
-    * persists for the job ([[graft.CacheScope]] owns the release).
+    * persists for the job.
     *
     * Determinism: an exact integer count — layout- and engine-independent
     * by construction. */
@@ -378,12 +378,11 @@ object Graph {
     val ranked = e
       .join(deg.select(col("n").as("u"), col("d").as("du")), "u")
       .join(deg.select(col("n").as("v"), col("d").as("dv")), "v")
-    val oriented = CacheScope.register(ranked.select(
+    val oriented = CacheScope.persist(ranked.select(
         when(struct(col("du"), col("u")) < struct(col("dv"), col("v")),
           struct(col("u").as("a"), col("v").as("b")))
           .otherwise(struct(col("v").as("a"), col("u").as("b"))).as("e"))
-      .select(col("e.a").as("a"), col("e.b").as("b"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+      .select(col("e.a").as("a"), col("e.b").as("b")))
     val wedges = oriented
       .join(oriented.select(col("a").as("b"), col("b").as("c")), "b")
     val triangles = wedges

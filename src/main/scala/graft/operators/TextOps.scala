@@ -197,11 +197,8 @@ object TextOps {
     // inline the whole shingle-assembly expression and push below the
     // exchange onto the raw scan's single partition, re-evaluating the
     // assembly serially per inferred predicate (measured 47s vs 2s at
-    // sf0.1). The persist materializes the arrays once, in parallel;
-    // registered so the harness/caller releases it after the action.
-    val sets = graft.CacheScope.register(
-      shingleSets(docs, idCol, textCol, n)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    // sf0.1). The persist materializes the arrays once, in parallel.
+    val sets = graft.CacheScope.persist(shingleSets(docs, idCol, textCol, n))
     val docSh = sets.select(col(idCol), explode(col("shingles")).as("shingle"))
     val probeSh = probes
       .select(explode(graft.functions.ShingleFunctions
@@ -341,10 +338,8 @@ object TextOps {
     // cache builds. The budget backstops maxDf: with the default maxDf = ∞
     // a stopword posting is pair-quadratic, and even a tuned maxDf can
     // flood on replica corpora.
-    val weights = graft.CacheScope.register(
-      Guards.pairBudget(postings, Seq("term"), maxPairs,
-        "TextOps.tfidfCosinePairs")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    val weights = graft.CacheScope.persist(Guards.pairBudget(postings,
+      Seq("term"), maxPairs, "TextOps.tfidfCosinePairs"))
     val a = weights.select(col(idCol).as("id_a"), col("term"),
       col("__w").as("__wa"), col("__norm").as("__na"))
     val b = weights.select(col(idCol).as("id_b"), col("term"),
@@ -498,9 +493,9 @@ object TextOps {
     * Scale design: per-row array assembly (tokenize once, slice per chunk),
     * then one explode — no shuffle beyond the id repartition that also
     * parallelizes single-file inputs. The bound chunk frame is persisted
-    * (CacheScope-registered) before the explode: InferFiltersFromGenerate
-    * otherwise inlines the whole assembly into a pushed filter below the
-    * exchange (the NOTES.md trap — serial re-evaluation on the raw scan). */
+    * before the explode: InferFiltersFromGenerate otherwise inlines the
+    * whole assembly into a pushed filter below the exchange (the NOTES.md
+    * trap — serial re-evaluation on the raw scan). */
   def chunks(df: DataFrame, idCol: String, textCol: String,
              chunkSize: Int = 128, overlap: Int = 32): DataFrame = {
     require(chunkSize >= 1, s"chunkSize must be >= 1, got $chunkSize")
@@ -515,11 +510,10 @@ object TextOps {
       i.as("chunk_id"),
       least(lit(chunkSize), size(toks) - s).as("n_tokens"),
       array_join(slice(toks, s + 1, lit(chunkSize)), " ").as("chunk_text")))
-    val bound = graft.CacheScope.register(
+    val bound = graft.CacheScope.persist(
       df.repartition(col(idCol))
         .select(col(idCol), tokens(col(textCol)).as("__toks"))
-        .select(col(idCol), chunkArr.as("__chunks"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+        .select(col(idCol), chunkArr.as("__chunks")))
     bound.select(col(idCol), explode(col("__chunks")).as("c"))
       .select(col(idCol), col("c.chunk_id").as("chunk_id"),
         col("c.n_tokens").as("n_tokens"), col("c.chunk_text").as("chunk_text"))
@@ -629,10 +623,9 @@ object TextOps {
     * order; one final `round(_, 10)` absorbs the accumulated `ln` ulp.
     *
     * Scale shape: the corpus tokenizes ONCE into a persisted (id,
-    * tokens) frame ([[graft.CacheScope]] owns the release) that feeds
-    * the pair explode, the vocabulary count, and the per-doc totals;
-    * the vocab frame (`vocabK` rows) broadcasts into both membership
-    * joins; LHS context totals (≤ `vocabK` rows) broadcast; the one real
+    * tokens) frame that feeds the pair explode, the vocabulary count,
+    * and the per-doc totals; the vocab frame (`vocabK` rows) broadcasts
+    * into both membership joins; LHS context totals (≤ `vocabK` rows) broadcast; the one real
     * shuffle joins doc-pair counts to corpus-pair counts on the pair key
     * (both map-side-combinable aggs, co-partitioned equi-join — the
     * corpus bigram frame is too big to broadcast and never needs to).
@@ -648,9 +641,8 @@ object TextOps {
     // tokenize ONCE: the persisted (id, tokens) frame feeds the pair
     // explode, the vocabulary count, and the per-doc bigram total — the
     // split regex is the dominant per-row cost (textStats precedent)
-    val tokFrame = graft.CacheScope.register(
-      df.select(col(idCol), tokens(col(textCol)).as("__t"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    val tokFrame = graft.CacheScope.persist(
+      df.select(col(idCol), tokens(col(textCol)).as("__t")))
     val pairs = tokFrame
       .filter(size(col("__t")) >= 2)
       .select(col(idCol), explode(zip_with(

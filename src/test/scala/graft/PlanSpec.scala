@@ -400,21 +400,17 @@ class PlanSpec extends AnyFunSuite {
           s"$name ${n}x $expr"
         }
     // Plan construction is driver-side and thread-safe on one session;
-    // parallelizing cuts this sweep from ~200 s to under a minute. The
-    // iterative graph/dedup queries are the exception: building them RUNS
-    // their localCheckpoint loop, whose persistent-RDD bookkeeping is
-    // single-caller (CacheScope scaladoc) — a concurrent sibling's cut can
-    // be unpersisted mid-build. Those fail LOUDLY (checkpoint blocks are
-    // lineage-truncated, never silently recomputed), so the parallel pass
-    // just records them and they re-plan sequentially below.
-    val names = SparkEntry.queries.keys.toSeq.sorted
-    val firstPass = names.par
-      .map(n => n -> scala.util.Try(dupsOf(n))).toVector.seq
-    val offenders = firstPass.flatMap {
-      case (_, scala.util.Success(dups)) => dups
-      case (n, scala.util.Failure(_)) => dupsOf(n) // sequential retry
-    }
-    CacheScope.release() // iterative builds persist frames; drop them here
+    // parallelizing cuts this sweep from ~200 s to under a minute. Building
+    // an iterative graph/dedup query RUNS its localCheckpoint loop, and
+    // operators persist frames into the CacheScope of the thread that built
+    // them, so each task releases its own scope once its plan is audited.
+    // Two tasks that persist the same plan share one CacheManager entry,
+    // and the first release can leave the other's rebuilt buffer behind:
+    // the sweep drops it.
+    val offenders = SparkEntry.queries.keys.toSeq.sorted.par
+      .flatMap(n => try dupsOf(n) finally CacheScope.release())
+      .seq
+    Harness.sweep(spark)
     assert(offenders.isEmpty,
       s"gate queries re-fold window frames (stage the shared Column " +
         s"through a named projection — NOTES.md round-10 lesson):\n" +
@@ -450,7 +446,6 @@ class PlanSpec extends AnyFunSuite {
           }.toMap
       }.toMap
     val actual = tools.PlanFingerprints.all(spark, sf).toMap
-    CacheScope.release()
     assert(actual.keySet == expected.keySet,
       s"gate set changed — regenerate fingerprints (added: " +
         s"${actual.keySet -- expected.keySet}, removed: " +

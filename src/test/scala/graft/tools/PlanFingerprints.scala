@@ -63,24 +63,23 @@ object PlanFingerprints {
     fp
   }
 
-  /** All gate fingerprints: parallel pass with a sequential retry for the
-    * iterative queries whose construction is single-caller (the PlanSpec
-    * window-dup sweep discipline). Starts from a CLEAN cache context —
-    * the self-persisting dedup operators' plans show InMemoryRelation
-    * substitution (fewer scans/shuffles) only when their internal persist
-    * is fresh, so leftover CacheManager state from earlier constructions
-    * in a warm session would shift three queries' counts. */
+  /** All gate fingerprints, built in parallel; each task releases the
+    * CacheScope of the thread that built its query. Starts from a CLEAN
+    * cache context — the self-persisting dedup operators' plans show
+    * InMemoryRelation substitution (fewer scans/shuffles) only when their
+    * internal persist is fresh, so leftover CacheManager state from earlier
+    * constructions in a warm session would shift three queries' counts —
+    * and sweeps again after, since two tasks persisting the same plan share
+    * one CacheManager entry whose rebuilt buffer no scope owns. */
   def all(spark: org.apache.spark.sql.SparkSession,
           sf: String): Seq[(String, Map[String, Int])] = {
     graft.Harness.sweep(spark)
-    val names = graft.SparkEntry.queries.keys.toSeq.sorted
-    val firstPass = names.par
-      .map(n => n -> scala.util.Try(fingerprintOf(spark, n, sf)))
-      .toVector.seq
-    firstPass.map {
-      case (n, scala.util.Success(fp)) => n -> fp
-      case (n, scala.util.Failure(_)) => n -> fingerprintOf(spark, n, sf)
-    }
+    val fps = graft.SparkEntry.queries.keys.toSeq.sorted.par
+      .map(n => n -> (try fingerprintOf(spark, n, sf)
+        finally graft.CacheScope.release()))
+      .seq
+    graft.Harness.sweep(spark)
+    fps
   }
 
   def toJson(fps: Seq[(String, Map[String, Int])], sig: String): String =
